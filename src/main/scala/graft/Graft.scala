@@ -73,9 +73,16 @@ object Graft {
                layer: PolygonLayer): DataFrame =
     LineOps.joinToPolygons(spark, lines, id, line, layer)
 
-  /** kNN / radius joins. */
+  /** kNN: for each point, its k nearest other points as
+   * (id, rank, neighbor_id, dist2), ranked by (dist2, neighbor_id). Rows with
+   * a null id, x or y are dropped first. Answered from a broadcast KD-tree in
+   * one map pass when n * 24 bytes <= `spark.sql.autoBroadcastJoinThreshold`,
+   * else by cell-ring rounds and a brute-force tail; both give the same rows
+   * (see [[graft.operators.Knn]]). */
   def knn(spark: SparkSession, points: DataFrame, id: String, x: String, y: String, k: Int): DataFrame =
     Knn.knnJoin(spark, points, id, x, y, k)
+
+  /** Radius join: all pairs (a_id < b_id) within `radius`. */
   def radiusJoin(spark: SparkSession, points: DataFrame, id: String, x: String, y: String,
                  radius: Double): DataFrame =
     Knn.distanceJoin(spark, points, id, x, y, radius)

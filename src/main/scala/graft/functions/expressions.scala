@@ -4,13 +4,13 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 import graft.cell.CellIndex
-import graft.index.PolygonLayer
+import graft.index.{PointTree, PolygonLayer}
 
 /**
  * Codegen-native Catalyst expressions for the hot spatial path. These replace
@@ -106,6 +106,37 @@ case class PipAllKeys(left: Expression, right: Expression, bc: Broadcast[Polygon
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/** The k nearest other points of (id, x, y) in a broadcast [[PointTree]],
+ * ascending by (dist2, neighbor_id) — see [[graft.index.KnnSearcher]] for
+ * the law. As in [[PipExprBase]], the broadcast is read once per task: the
+ * task's searcher (and its reusable heap) lives in a mutable state var. */
+case class KnnProbe(first: Expression, second: Expression, third: Expression,
+                    bc: Broadcast[PointTree], k: Int) extends TernaryExpression {
+  override def dataType: DataType = KnnProbe.ResultType
+  override def prettyName: String = "knn_probe"
+
+  override protected def nullSafeEval(id: Any, x: Any, y: Any): Any =
+    bc.value.searcher(k).probe(id.asInstanceOf[Long], x.asInstanceOf[Double],
+      y.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bcRef = ctx.addReferenceObj("knnBroadcast", bc, classOf[Broadcast[PointTree]].getName)
+    val sv = ctx.addMutableState("graft.index.KnnSearcher", "knnSearcher",
+      v => s"$v = ((graft.index.PointTree)$bcRef.value()).searcher($k);", forceInline = true)
+    defineCodeGen(ctx, ev, (id, x, y) => s"$sv.probe($id, $x, $y)")
+  }
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
+}
+
+object KnnProbe {
+  val ResultType: DataType = ArrayType(StructType(Seq(
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("dist2", DoubleType, nullable = false))), containsNull = false)
 }
 
 /** All cell ids with Chebyshev distance <= k of the input cell (the "disk") —
@@ -363,6 +394,9 @@ object SpatialExprs {
 
   def pipAllKeys(x: Column, y: Column, bc: Broadcast[PolygonLayer]): Column =
     GraftBridge.column(PipAllKeys(dbl(x), dbl(y), bc))
+
+  def knnProbe(id: Column, x: Column, y: Column, bc: Broadcast[PointTree], k: Int): Column =
+    GraftBridge.column(KnnProbe(GraftBridge.expr(id.cast("long")), dbl(x), dbl(y), bc, k))
 
   def cellX(cell: Column): Column =
     GraftBridge.column(CellCoordExpr(GraftBridge.expr(cell.cast("long")), isX = true))

@@ -1,43 +1,86 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.cell.CellIndex
+import graft.index.PointTree
 
 /**
- * k-nearest-neighbor and radius (max-distance) joins via cell-ring expansion —
- * the shuffle-friendly replacement for the reference's kdbush KD-tree radius
- * search (`/root/reference/src/points/mapshaper-point-index.mjs:11-47`,
- * neighbor rings per `src/grids/mapshaper-square-grid.mjs:127-136`).
+ * k-nearest-neighbour and radius (max-distance) joins. The reference answers
+ * point queries from an in-memory KD-tree (kdbush, mapshaper's
+ * `src/points/mapshaper-point-index.mjs:11-47`); kNN takes that form
+ * whenever the points fit one broadcast, and a shuffle form otherwise.
  *
- * Exactness guarantee for kNN: after joining candidates from the Chebyshev
- * disk of radius R cells, a point's k-th neighbor distance d is final iff
- * d <= R * cellSize (any point outside the disk is at least R*cellSize away,
- * since the query point lies inside its own cell). Points that fail the bound
- * are retried with a doubled R — a driver-side loop of a few Spark jobs, each
- * a plain equi-join on cellId (no cross join, no broadcast of the big side).
+ * Path selection (kNN), from the point count n alone: when
+ * n * 24 bytes <= `spark.sql.autoBroadcastJoinThreshold` (Spark's own
+ * broadcast setting; -1 disables it, the 10 MB default admits ~437 k points)
+ *  - broadcast: the Spark driver collects (id, x, y), builds a
+ *    [[PointTree]] and broadcasts it; one map pass probes every point with
+ *    the codegen `knn_probe` expression and `posexplode`s its ranked array —
+ *    no cross join, window, exchange or checkpoint loop, and no density
+ *    assumption;
+ *  - shuffle, otherwise: cell-ring expansion rounds (neighbour rings per
+ *    `src/grids/mapshaper-square-grid.mjs:127-136`), then a brute-force
+ *    cross join + window for the tail once pending x n <= `bruteForceBudget`
+ *    (0 keeps the ring rounds to the end).
  *
- * Determinism: ranking is by (squared distance, neighbor id) — no FP
- * reordering hazards, ties broken stably.
+ * Exactness law, the same on every path: a point's neighbours are the k
+ * other rows (a_id != b_id) first in (dist2, neighbour id) ascending, with
+ * dist2 = (ax-bx)*(ax-bx) + (ay-by)*(ay-by) computed in that order, so the
+ * value is bit-identical across paths; a point with fewer than k other
+ * points gets all of them; an id held by several points ranks all their
+ * candidates together, as the window partitions by id.
+ *  - broadcast: the tree search prunes a subtree only when its box's minimum
+ *    dist2 is strictly greater than the current k-th (see
+ *    [[graft.index.KnnSearcher]]), so ties resolve by neighbour id exactly
+ *    as the window does;
+ *  - ring rounds: after joining candidates from the Chebyshev disk of radius
+ *    R cells, a point's k-th neighbour distance d is final iff
+ *    d <= R * cellSize (any point outside the disk is at least R*cellSize
+ *    away, since the query point lies inside its own cell). Points that fail
+ *    the bound are retried with a doubled R — a driver-side loop of a few
+ *    Spark jobs, each a plain equi-join on cellId. A point still pending
+ *    after `maxRounds` (the bbox/count resolution misjudges strongly
+ *    non-uniform inputs, e.g. collinear points) gets its best-known
+ *    neighbours from the widest ring searched, which may be fewer or farther
+ *    than the law's;
+ *  - brute-force tail: the cross form is the definition itself.
+ *
+ * Nulls: rows with a null id, x or y (after the casts to long / double) are
+ * dropped once, before the path is chosen, so no path sees them: they get
+ * no neighbours and are no one's neighbour.
  */
 object Knn {
 
   /**
    * For each row of `points` (id, x, y), the k nearest OTHER rows.
-   * Output: (id, rank, neighbor_id, dist2).
+   * Output: (id, rank, neighbor_id, dist2). Rows with a null id, x or y are
+   * dropped first. `res`, `maxRounds` and `bruteForceBudget` tune the
+   * shuffle path only (taken when n * 24 bytes exceeds
+   * `spark.sql.autoBroadcastJoinThreshold`).
    */
   def knnJoin(spark: SparkSession, points: DataFrame, idCol: String, xCol: String, yCol: String,
               k: Int, res: Int = -1, maxRounds: Int = 8,
               bruteForceBudget: Long = 50000000L): DataFrame = {
     val base = points.select(col(idCol).cast("long").as("id"),
       col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-    // auto resolution: aim for ~k+1 points per cell so the first 3x3 disk
-    // usually satisfies the k-th-distance bound in one round
+      .filter(col("id").isNotNull && col("x").isNotNull && col("y").isNotNull)
     val stats = base.agg(count(lit(1)), min(col("x")), max(col("x")),
       min(col("y")), max(col("y"))).head()
+    if (stats.getLong(0) * PointTree.BytesPerPoint <= GraftBridge.autoBroadcastThreshold(spark))
+      broadcastKnn(spark, base, k)
+    else shuffleKnn(base, stats, k, res, maxRounds, bruteForceBudget)
+  }
+
+  /** The shuffle path: ring rounds, then the brute-force tail. `stats` is
+   * (count, min x, max x, min y, max y) of `base`. */
+  private def shuffleKnn(base: DataFrame, stats: Row, k: Int, res: Int, maxRounds: Int,
+                         bruteForceBudget: Long): DataFrame = {
     val nPoints = math.max(1L, stats.getLong(0))
+    // auto resolution: aim for ~k+1 points per cell so the first 3x3 disk
+    // usually satisfies the k-th-distance bound in one round
     val useRes = if (res >= 0) res else {
       val w = math.max(1e-9, stats.getDouble(2) - stats.getDouble(1))
       val h = math.max(1e-9, stats.getDouble(4) - stats.getDouble(3))
@@ -170,6 +213,22 @@ object Knn {
     if (pending ne pts) pending.unpersist()
     pts.unpersist()
     out
+  }
+
+  /** The broadcast path: one map pass over `base` probing a broadcast
+   * [[PointTree]]. An id held by several points is probed once (from each of
+   * its points), as the window ranks those rows' candidates together. */
+  private def broadcastKnn(spark: SparkSession, base: DataFrame, k: Int): DataFrame = {
+    val rows = base.collect()
+    val tree = PointTree.build(rows.map(_.getLong(0)), rows.map(_.getDouble(1)),
+      rows.map(_.getDouble(2)))
+    val bc = spark.sparkContext.broadcast(tree)
+    val probes = if (tree.hasDuplicateIds) base.dropDuplicates("id") else base
+    probes
+      .select(col("id"), posexplode(
+        graft.functions.SpatialExprs.knnProbe(col("id"), col("x"), col("y"), bc, k)))
+      .select(col("id"), (col("pos") + 1).as("rank"), col("col.neighbor_id").as("neighbor_id"),
+        col("col.dist2").as("dist2"))
   }
 
   /**

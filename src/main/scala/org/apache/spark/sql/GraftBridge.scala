@@ -12,6 +12,11 @@ object GraftBridge {
   def expr(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes (-1 when
+   * broadcasting is disabled). */
+  def autoBroadcastThreshold(s: SparkSession): Long =
+    s.asInstanceOf[classic.SparkSession].sessionState.conf.autoBroadcastJoinThreshold
+
   /** Public alias for the sql-private AbstractDataType, so graft expressions
    * can declare `inputTypes` (ImplicitCastInputTypes) outside this package. */
   type AbsDataType = org.apache.spark.sql.types.AbstractDataType

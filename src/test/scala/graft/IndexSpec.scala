@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.cell.CellIndex
-import graft.index.{PolygonLayer, StrTree}
+import graft.index.{PointTree, PolygonLayer, StrTree}
 import graft.tables.{SplitMix64, Synthetic}
 
 class IndexSpec extends AnyFunSuite {
@@ -205,6 +205,47 @@ class IndexSpec extends AnyFunSuite {
       val viaLayer = layer.pointInRing(x, y, 0)
       assert(direct == viaLayer, s"($x,$y)")
     }
+  }
+
+  test("PointTree kNN equals the brute-force (dist2, id) ranking") {
+    val rng = new SplitMix64(21)
+    // uniform, a dense cluster, lattice duplicates, a repeated id, and
+    // infinite and NaN coordinates
+    val pts = (0 until 3000).map { i =>
+      val (x, y) = i % 4 match {
+        case 0 => (rng.nextDouble() * 100, rng.nextDouble() * 100)
+        case 1 => (50 + rng.nextDouble() * 1e-3, 50 + rng.nextDouble() * 1e-3)
+        case 2 => ((i / 4 % 7).toDouble, (i / 28 % 7).toDouble)
+        case _ => (rng.nextDouble() * 100, (i % 13).toDouble)
+      }
+      (if (i % 500 == 7) 7L else i.toLong, x, y)
+    } ++ Seq((5000L, Double.PositiveInfinity, 0.0), (5001L, Double.NaN, 1.0),
+      (5002L, 3.0, Double.NegativeInfinity), (5003L, Double.PositiveInfinity, 2.0))
+    val tree = PointTree.build(pts.map(_._1).toArray, pts.map(_._2).toArray, pts.map(_._3).toArray)
+    assert(tree.size == pts.size && tree.hasDuplicateIds)
+    val rank: Ordering[(Double, Long)] = (a, b) => {
+      val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(a._1, b._1)
+      if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+    }
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    for (k <- Seq(1, 5, 40)) {
+      val s = tree.searcher(k)
+      pts.indices.filter(i => i % 7 == 0 || pts(i)._1 == 7L || pts(i)._1 >= 5000L).foreach { i =>
+        val (id, x, y) = pts(i)
+        val want = pts.filter(_._1 == id).flatMap { case (_, ax, ay) =>
+          pts.filter(_._1 != id).map { case (b, bx, by) =>
+            ((ax - bx) * (ax - bx) + (ay - by) * (ay - by), b) }
+        }.sorted(rank).take(k)
+        val a = s.probe(id, x, y)
+        val got = (0 until a.numElements()).map { j =>
+          val r = a.getStruct(j, 2); (r.getDouble(1), r.getLong(0)) }
+        assert(got.map(g => (bits(g._1), g._2)) == want.map(w => (bits(w._1), w._2)), s"id $id, k $k")
+      }
+    }
+    // fewer than k others: all of them; k = 0: none
+    val small = PointTree.build(Array(1L, 2L, 3L), Array(0.0, 1.0, 0.0), Array(0.0, 0.0, 2.0))
+    assert(small.searcher(10).probe(1L, 0.0, 0.0).numElements() == 2)
+    assert(small.searcher(0).probe(1L, 0.0, 0.0).numElements() == 0)
   }
 
   test("shapeArea: holes subtract (opposite winding)") {

@@ -45,37 +45,90 @@ class OperatorSpec extends SparkSuite {
 
   // -------------------------------------------------------------------- kNN
 
+  /** Top-k by definition: per id, the k rows with another id first in
+   * (dist2, neighbour id), as (rank, neighbor_id, dist2). */
+  private def bruteKnn(pts: Seq[(Long, Double, Double)], k: Int): Map[Long, Seq[(Int, Long, Double)]] =
+    pts.groupBy(_._1).map { case (id, mine) =>
+      id -> mine.flatMap { case (_, x, y) =>
+        pts.filter(_._1 != id).map { case (j, bx, by) => (j, (x - bx) * (x - bx) + (y - by) * (y - by)) }
+      }.sortBy { case (j, d) => (d, j) }.take(k).zipWithIndex
+        .map { case ((j, d), r) => (r + 1, j, d) }
+    }.filter(_._2.nonEmpty)
+
+  private def knnRows(df: org.apache.spark.sql.DataFrame, k: Int,
+                      bruteForceBudget: Long = 50000000L): Map[Long, Seq[(Int, Long, Double)]] =
+    Knn.knnJoin(spark, df, "id", "x", "y", k, bruteForceBudget = bruteForceBudget)
+      .as[(Long, Int, Long, Double)].collect().toSeq
+      .groupBy(_._1).map { case (id, rs) => id -> rs.sortBy(_._2).map(r => (r._2, r._3, r._4)) }
+
+  private def withBroadcastThreshold[T](v: String)(f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The three kNN paths: the broadcast KD-tree (default settings), the
+   * brute-force cross join (broadcast off) and ring rounds (broadcast off,
+   * no brute-force cutover). */
+  private val knnPaths: Seq[(String, (org.apache.spark.sql.DataFrame, Int) => Map[Long, Seq[(Int, Long, Double)]])] =
+    Seq(
+      "broadcast" -> ((df, k) => knnRows(df, k)),
+      "cross join" -> ((df, k) => withBroadcastThreshold("-1")(knnRows(df, k))),
+      "ring rounds" -> ((df, k) => withBroadcastThreshold("-1")(knnRows(df, k, bruteForceBudget = 0L))))
+
   test("knnJoin matches brute-force top-k") {
     val rng = new SplitMix64(5)
-    val pts = (0 until 300).map(i => (i.toLong, rng.nextDouble() * 100, rng.nextDouble() * 100))
-    val df = pts.toDF("id", "x", "y")
+    val uniform = (0 until 300).map(i => (i.toLong, rng.nextDouble() * 100, rng.nextDouble() * 100))
+    // most points in one small box, a few far outliers
+    val crng = new SplitMix64(7)
+    val clustered = (0 until 300).map { i =>
+      if (i % 15 == 0) (i.toLong, crng.nextDouble() * 170, crng.nextDouble() * 85)
+      else (i.toLong, 10 + crng.nextDouble() * 0.5, 10 + crng.nextDouble() * 0.5)
+    }
+    // 25 lattice sites, 8 points each: dist2 ties (0 and lattice steps)
+    // resolve by neighbor_id
+    val repeated = (0 until 200).map(i => (i.toLong, (i % 5).toDouble, (i / 5 % 5).toDouble))
+    // rows with a null id, x or y are dropped on every path (a null dist2
+    // would otherwise sort first and make such a point everyone's nearest)
+    val nulls = Seq((Some(1L), Some(0.0), Some(0.0)), (Some(2L), Some(1.0), Some(0.0)),
+      (Some(3L), Some(0.0), Some(2.0)), (Some(4L), Some(5.0), Some(5.0)),
+      (Some(5L), None, Some(1.0)), (Some(6L), Some(0.5), None), (None, Some(0.0), Some(0.5)))
+    val nonNull = nulls.collect { case (Some(i), Some(x), Some(y)) => (i, x, y) }
+    // the window partitions by id: an id held by several points gets the top
+    // k of all their candidates
+    val repeatedIds = Seq((1L, 0.0, 0.0), (1L, 10.0, 10.0), (2L, 1.0, 0.0), (3L, 9.0, 10.0),
+      (4L, 5.0, 5.0), (2L, 2.0, 1.0), (5L, 10.0, 9.0))
     val k = 4
-    val got = Knn.knnJoin(spark, df, "id", "x", "y", k)
-      .select("id", "rank", "neighbor_id").as[(Long, Int, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
-    val want = pts.map { case (id, x, y) =>
-      val nn = pts.filter(_._1 != id)
-        .map { case (j, bx, by) => (j, (x - bx) * (x - bx) + (y - by) * (y - by)) }
-        .sortBy { case (j, d) => (d, j) }.take(k).map(_._1).toSeq
-      id -> nn
-    }.toMap
-    assert(got == want)
-    // same answer through the ring-expansion path (brute-force cutover off)
-    val gotRing = Knn.knnJoin(spark, df, "id", "x", "y", k, bruteForceBudget = 0L)
-      .select("id", "rank", "neighbor_id").as[(Long, Int, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(_._3).toSeq).toMap
-    assert(gotRing == want)
+    assert(bruteKnn(nonNull, k)(1L) == Seq((1, 2L, 1.0), (2, 3L, 4.0), (3, 4L, 50.0)))
+    assert(bruteKnn(repeatedIds, k)(1L) == Seq((1, 2L, 1.0), (2, 3L, 1.0), (3, 5L, 1.0), (4, 2L, 5.0)))
+    val cases = Seq(
+      ("uniform", uniform.toDF("id", "x", "y"), uniform),
+      ("clustered", clustered.toDF("id", "x", "y"), clustered),
+      ("repeated coordinates", repeated.toDF("id", "x", "y"), repeated),
+      ("null id, x or y", nulls.toDF("id", "x", "y"), nonNull),
+      ("repeated ids", repeatedIds.toDF("id", "x", "y"), repeatedIds))
+    for ((name, df, pts) <- cases) {
+      val want = bruteKnn(pts, k)
+      for ((path, run) <- knnPaths) {
+        val got = run(df, k)
+        val diff = (got.keySet ++ want.keySet).filter(id => got.get(id) != want.get(id)).toSeq.sorted
+        assert(diff.isEmpty, s"$name input via $path: ${diff.take(3).map(id =>
+          s"$id got ${got.get(id)} want ${want.get(id)}").mkString("; ")}")
+      }
+    }
   }
 
   test("knnJoin with k >= n-1 returns all other points (straggler path)") {
     val pts = Seq((1L, 0.0, 0.0), (2L, 1.0, 0.0), (3L, 0.0, 1.0), (4L, 50.0, 50.0)).toDF("id", "x", "y")
-    val out = Knn.knnJoin(spark, pts, "id", "x", "y", k = 5, bruteForceBudget = 0L) // k > n-1, ring path
-      .select("id", "neighbor_id").as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    // every point still reports its 3 real neighbors despite k being unsatisfiable
-    assert(out.keySet == Set(1L, 2L, 3L, 4L))
-    assert(out(1L) == Set(2L, 3L, 4L))
-    assert(out(4L) == Set(1L, 2L, 3L))
+    // k > n-1: the tree search runs out of points; ring rounds end as stragglers
+    for ((path, run) <- knnPaths.filter(_._1 != "cross join")) {
+      val out = run(pts, 5).view.mapValues(_.map(_._2).toSet).toMap
+      // every point still reports its 3 real neighbors despite k being unsatisfiable
+      assert(out.keySet == Set(1L, 2L, 3L, 4L), path)
+      assert(out(1L) == Set(2L, 3L, 4L), path)
+      assert(out(4L) == Set(1L, 2L, 3L), path)
+    }
   }
 
   test("distanceJoin matches brute force") {

@@ -60,6 +60,31 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("q_knn on the broadcast path: KD-tree probe in codegen, no window, cross join or UDF") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Aqe extends AdaptiveSparkPlanHelper
+    val df = SparkEntry.queries("q_knn")(spark, Sf)
+    assert(df.collect().nonEmpty)
+    val plan = df.queryExecution.executedPlan // final adaptive plan after the action
+    val nodes = Aqe.collect(plan) { case p => p }
+    val names = nodes.map(_.nodeName)
+    assert(!names.exists(n => n.contains("Window") || n.contains("BroadcastNestedLoopJoin") ||
+      n.contains("CartesianProduct")), names.mkString(", "))
+    assert(!nodes.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ScalaUDF]))), plan.toString)
+    def isProbe(p: SparkPlan): Boolean =
+      p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.KnnProbe]))
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(stage)
+    })
+    assert(nodes.exists(isProbe), plan.toString)
+    val inCodegen = Aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+      .exists(w => stage(w.child).exists(isProbe))
+    assert(inCodegen, s"knn_probe must run inside WholeStageCodegen:\n$plan")
+  }
+
   test("tile assignment plan never references the binary payload") {
     val imgs = spark.read.parquet(imagesParquet)
     val tiles = Tiling.tileAssign(spark, imgs, tileGrid = 2, res = 9, Some(Synthetic.oracleLayer))
