@@ -2315,7 +2315,8 @@ object SparkEntry {
 
     "q_join_unmatched" -> ((s, dir) => {
       val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
+      // every customer has some order, so anti-join the fulfilled ones only
+      val o = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
         .orderBy("c_custkey")
@@ -5145,7 +5146,7 @@ object SparkEntry {
 
     "q_join_unmatched" ->
       """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
         |ORDER BY c_custkey""".stripMargin,
 
     "q_join_calc" ->

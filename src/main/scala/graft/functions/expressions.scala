@@ -4,7 +4,8 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression,
+  TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -60,7 +61,7 @@ case class CellCoordExpr(child: Expression, isX: Boolean)
 /** Base for expressions probing a broadcast polygon layer. The broadcast
  * handle is a codegen reference object; the layer instance is cached in a
  * mutable state var so `bc.value()` runs once per task, not per row. */
-abstract class PipExprBase extends BinaryExpression {
+trait PipExprBase extends Expression {
   def bc: Broadcast[PolygonLayer]
 
   protected def layerVar(ctx: CodegenContext): String = {
@@ -73,7 +74,7 @@ abstract class PipExprBase extends BinaryExpression {
 
 /** Key of the first (lowest shape index) polygon enclosing the point, or -1. */
 case class PipFirstKey(left: Expression, right: Expression, bc: Broadcast[PolygonLayer])
-    extends PipExprBase {
+    extends BinaryExpression with PipExprBase {
   override def dataType: DataType = LongType
   override def prettyName: String = "pip_first_key"
 
@@ -89,9 +90,44 @@ case class PipFirstKey(left: Expression, right: Expression, bc: Broadcast[Polygo
     copy(left = l, right = r)
 }
 
+/** Key of the first polygon enclosing every point of the box
+ * [x0, x1] x [y0, y1] (or -1 for none) when one probe proves it is the same
+ * across the box ([[PolygonLayer.uniformFirstShape]]); null when not proven,
+ * so callers fall back to [[PipFirstKey]] per point. */
+case class PipBoxFirstKey(first: Expression, second: Expression, third: Expression,
+                          fourth: Expression, bc: Broadcast[PolygonLayer])
+    extends QuaternaryExpression with PipExprBase {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def prettyName: String = "pip_box_first_key"
+
+  override protected def nullSafeEval(x0: Any, y0: Any, x1: Any, y1: Any): Any = {
+    val l = bc.value
+    val s = l.uniformFirstShape(x0.asInstanceOf[Double], y0.asInstanceOf[Double],
+      x1.asInstanceOf[Double], y1.asInstanceOf[Double])
+    if (s == -2) null else if (s < 0) -1L else l.shapeKeys(s)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val lv = layerVar(ctx)
+    val s = ctx.freshName("shape")
+    nullSafeCodeGen(ctx, ev, (x0, y0, x1, y1) =>
+      s"""int $s = $lv.uniformFirstShape($x0, $y0, $x1, $y1);
+         |if ($s == -2) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = $s < 0 ? -1L : $lv.shapeKeys()[$s];
+         |}""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression, u: Expression): Expression =
+    copy(first = f, second = s, third = t, fourth = u)
+}
+
 /** Keys of ALL polygons enclosing the point (boundary counts as enclosed). */
 case class PipAllKeys(left: Expression, right: Expression, bc: Broadcast[PolygonLayer])
-    extends PipExprBase {
+    extends BinaryExpression with PipExprBase {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "pip_all_keys"
 
@@ -391,6 +427,10 @@ object SpatialExprs {
 
   def pipFirstKey(x: Column, y: Column, bc: Broadcast[PolygonLayer]): Column =
     GraftBridge.column(PipFirstKey(dbl(x), dbl(y), bc))
+
+  def pipBoxFirstKey(x0: Column, y0: Column, x1: Column, y1: Column,
+                     bc: Broadcast[PolygonLayer]): Column =
+    GraftBridge.column(PipBoxFirstKey(dbl(x0), dbl(y0), dbl(x1), dbl(y1), bc))
 
   def pipAllKeys(x: Column, y: Column, bc: Broadcast[PolygonLayer]): Column =
     GraftBridge.column(PipAllKeys(dbl(x), dbl(y), bc))

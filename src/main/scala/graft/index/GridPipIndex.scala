@@ -35,6 +35,26 @@ import graft.geom.Geom
  *  - points outside the layer extent are outside every ring bbox → no keys
  *    (same as a tree search returning no candidates).
  * `IndexSpec` asserts grid == brute-force over all rings on random probes.
+ *
+ * Box query ([[uniformFirstShape]], the batched tile probe): the first
+ * enclosing shape is the same at every point of a box B when
+ *  - B lies inside the extent, so no point of B takes the extent exit;
+ *  - both corners of B map to the same cell c — the cell mapping is monotone
+ *    in x and y, so every point of B maps to c and sees c's base shapes,
+ *    which are constant (the argument above);
+ *  - no segment of a ring crossing c meets B inflated by eps. Each such
+ *    segment's bbox misses the inflated box, or its line leaves all four
+ *    inflated corners strictly on one side (the cross-product signs carry
+ *    ~1e-16 relative rounding, far below eps, so a wrongly signed corner
+ *    still leaves the segment about eps from B). So every crossing ring's
+ *    boundary stays about eps away from B: its true IN/OUT state is
+ *    constant over B and ON cannot occur, and a point that far from a ring
+ *    gets the true state from the floating-point ray test (the vertical gap
+ *    to a segment is at least the distance, and the ray test's rounding is
+ *    again ~1e-16 relative).
+ * Then every exact ring test of `findFirstKey` gives the same answer at
+ * every point of B, so one probe at a corner answers all of B. Anything
+ * else is "not proven" (-2) and the caller probes point by point.
  */
 final class GridPipIndex(layer: PolygonLayer) {
 
@@ -275,13 +295,18 @@ final class GridPipIndex(layer: PolygonLayer) {
   def findFirstKey(x: Double, y: Double): Long = {
     if (x != x || y != y) return -1L
     if (x < ex0 || x > ex1 || y < ey0 || y > ey1) return -1L
-    val c = rowOf(y) * gw + colOf(x)
+    val s = firstShapeInCell(rowOf(y) * gw + colOf(x), x, y)
+    if (s < 0) -1L else shapeKeys(s)
+  }
+
+  /** First enclosing shape of an in-extent point attributed to cell c, or -1. */
+  private def firstShapeInCell(c: Int, x: Double, y: Double): Int = {
     var ci = cellCrossStart(c); val ce = cellCrossStart(c + 1)
     var bi = cellBaseStart(c); val be = cellBaseStart(c + 1)
     while (ci < ce || bi < be) {
       val crossShape = if (ci < ce) ringShape(cellCrossRings(ci)) else Int.MaxValue
       val baseShape = if (bi < be) cellBaseShapes(bi) else Int.MaxValue
-      if (baseShape < crossShape) return shapeKeys(baseShape)
+      if (baseShape < crossShape) return baseShape
       var isIn = baseShape == crossShape
       if (isIn) bi += 1
       var isOn = false
@@ -291,9 +316,53 @@ final class GridPipIndex(layer: PolygonLayer) {
         else if (st == Geom.IN) isIn = !isIn
         ci += 1
       }
-      if (isOn || isIn) return shapeKeys(crossShape)
+      if (isOn || isIn) return crossShape
     }
-    -1L
+    -1
+  }
+
+  /**
+   * First enclosing shape index (or -1 for none) when it is provably the
+   * same at every point of the box [bx0, bx1] x [by0, by1]; -2 when not
+   * proven (see the class header for the argument).
+   */
+  def uniformFirstShape(bx0: Double, by0: Double, bx1: Double, by1: Double): Int = {
+    // also false for NaN corners
+    if (!(ex0 <= bx0 && bx0 <= bx1 && bx1 <= ex1 && ey0 <= by0 && by0 <= by1 && by1 <= ey1))
+      return -2
+    val j = colOf(bx0); val i = rowOf(by0)
+    if (colOf(bx1) != j || rowOf(by1) != i) return -2
+    val c = i * gw + j
+    val qx0 = bx0 - eps; val qx1 = bx1 + eps
+    val qy0 = by0 - eps; val qy1 = by1 + eps
+    val xx = layer.xx; val yy = layer.yy
+    var ci = cellCrossStart(c); val ce = cellCrossStart(c + 1)
+    while (ci < ce) {
+      val r = cellCrossRings(ci)
+      val b = r * 4
+      if (ringBoxes(b) <= qx1 && ringBoxes(b + 2) >= qx0 &&
+          ringBoxes(b + 1) <= qy1 && ringBoxes(b + 3) >= qy0) {
+        var k = ringStart(r)
+        val end = ringStart(r + 1) - 1
+        while (k < end) {
+          val ax = xx(k); val ay = yy(k); val dx = xx(k + 1) - ax; val dy = yy(k + 1) - ay
+          if (math.min(ax, xx(k + 1)) <= qx1 && math.max(ax, xx(k + 1)) >= qx0 &&
+              math.min(ay, yy(k + 1)) <= qy1 && math.max(ay, yy(k + 1)) >= qy0) {
+            // bboxes meet: the segment misses the box only if its line leaves
+            // all four inflated corners strictly on one side
+            val s0 = dx * (qy0 - ay) - dy * (qx0 - ax)
+            val s1 = dx * (qy0 - ay) - dy * (qx1 - ax)
+            val s2 = dx * (qy1 - ay) - dy * (qx0 - ax)
+            val s3 = dx * (qy1 - ay) - dy * (qx1 - ax)
+            if (!((s0 > 0 && s1 > 0 && s2 > 0 && s3 > 0) || (s0 < 0 && s1 < 0 && s2 < 0 && s3 < 0)))
+              return -2
+          }
+          k += 1
+        }
+      }
+      ci += 1
+    }
+    firstShapeInCell(c, bx0, by0)
   }
 
   /** Indexes of all enclosing shapes, ascending (== tree-path findShapes). */

@@ -168,6 +168,13 @@ final class PolygonLayer(
   def findFirstKey(x: Double, y: Double): Long =
     if (PolygonLayer.useGrid) grid.findFirstKey(x, y) else findFirstKeyTree(x, y)
 
+  /** First enclosing shape index, or -1, when it is provably the same at
+   * every point of the box; -2 when not proven (see
+   * [[GridPipIndex.uniformFirstShape]]). Always -2 on the tree path, so
+   * that path keeps probing every point. */
+  def uniformFirstShape(bx0: Double, by0: Double, bx1: Double, by1: Double): Int =
+    if (PolygonLayer.useGrid) grid.uniformFirstShape(bx0, by0, bx1, by1) else -2
+
   /** Tree-path variant of [[findFirstKey]] (verification reference). */
   def findFirstKeyTree(x: Double, y: Double): Long = {
     val (cand, n) = candidates(x, y)

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.cell.CellIndex
+import graft.functions.SpatialExprs
 import graft.index.PolygonLayer
 import graft.tables.Images
 
@@ -34,7 +34,6 @@ object Tiling {
    */
   def tileAssign(spark: SparkSession, images: DataFrame, tileGrid: Int, res: Int,
                  layer: Option[PolygonLayer] = None): DataFrame = {
-    val side = FootprintSide
     val located = images
       .select(col("image_id"), col("w"), col("h"), col("phash"))
       .withColumn("_cx", graft.functions.GraftFunctions.phashLon(col("phash")))
@@ -48,27 +47,46 @@ object Tiling {
    * column arithmetic; only cellId (bit interleave) and PIP (broadcast index
    * probe) are scalar JVM calls. No per-row tuple/array allocation — keeps
    * the hot path allocation-light so it scales with cores, not GC.
+   *
+   * Batched PIP: before the fan-out, one `pip_box_first_key` probe per image
+   * asks the layer's grid whether a single polygon key holds over the box
+   * spanned by the first and last tile centres (built with the same column
+   * arithmetic as `cx`/`cy`, so every centre lies in the box). When the grid
+   * proves it (box in one grid cell, no ring boundary within eps), that key
+   * serves all tiles of the image; otherwise the probe is null and each tile
+   * falls back to its own `pip_first_key(cx, cy)`. Either way `poly_key` is
+   * exactly the per-tile answer; a null x/y still yields tileGrid² rows with
+   * a null `poly_key`.
    */
   def tileAssignAt(spark: SparkSession, images: DataFrame, xCol: String, yCol: String,
                    tileGrid: Int, res: Int, layer: Option[PolygonLayer]): DataFrame = {
     val side = FootprintSide
-    val base = images
+    def centre(lo: Column, t: Column): Column = lo + (t + 0.5) * (side / tileGrid)
+    val bc = layer.map(graft.index.LayerBroadcasts.of(spark, _))
+    val located = images
       .withColumn("_x0", col(xCol) - side / 2)
       .withColumn("_y0", col(yCol) - side / 2)
+    val boxed = bc match {
+      case Some(b) =>
+        val (lo, hi) = (lit(0), lit(tileGrid - 1))
+        located.withColumn("_box_key", SpatialExprs.pipBoxFirstKey(
+          centre(col("_x0"), lo), centre(col("_y0"), lo),
+          centre(col("_x0"), hi), centre(col("_y0"), hi), b))
+      case None => located
+    }
+    val base = boxed
       .withColumn("_t", explode(sequence(lit(0), lit(tileGrid * tileGrid - 1))))
       .withColumn("tile_x", (col("_t") % tileGrid).cast("int"))
       .withColumn("tile_y", (col("_t") / tileGrid).cast("int"))
-      .withColumn("cx", col("_x0") + (col("tile_x") + 0.5) * (side / tileGrid))
-      .withColumn("cy", col("_y0") + (col("tile_y") + 0.5) * (side / tileGrid))
+      .withColumn("cx", centre(col("_x0"), col("tile_x")))
+      .withColumn("cy", centre(col("_y0"), col("tile_y")))
       .withColumn("cell_id", GraftCell.cellIdCol(col("cx"), col("cy"), res))
-    val withPoly = layer match {
-      case Some(l) =>
-        val bc = graft.index.LayerBroadcasts.of(spark, l)
-        base.withColumn("poly_key",
-          graft.functions.SpatialExprs.pipFirstKey(col("cx"), col("cy"), bc))
-      case None => base.withColumn("poly_key", lit(-1L))
+    val polyKey = bc match {
+      case Some(b) => coalesce(col("_box_key"), SpatialExprs.pipFirstKey(col("cx"), col("cy"), b))
+      case None => lit(-1L)
     }
-    withPoly.select("image_id", "tile_x", "tile_y", "cx", "cy", "cell_id", "poly_key")
+    base.withColumn("poly_key", polyKey)
+      .select("image_id", "tile_x", "tile_y", "cx", "cy", "cell_id", "poly_key")
   }
 
   /** Vector split-on-grid: tag each point row with its grid row/col at cellSize. */

@@ -152,18 +152,22 @@ class IndexSpec extends AnyFunSuite {
     }
   }
 
-  test("GridPipIndex: degenerate layers (axis-aligned rects, shared edges, holes)") {
-    // axis-aligned rectangles: zero-height/width segment bboxes lie exactly
-    // on grid lines; adjacent rects share full edges; one rect has a hole
+  /** Axis-aligned rectangles: zero-height/width segment bboxes lie exactly
+   * on grid lines; adjacent rects share full edges; one rect has a hole. */
+  private lazy val degenerateLayer: PolygonLayer = {
     def rect(x0: Double, y0: Double, x1: Double, y1: Double) =
       Array(x0, y0, x1, y0, x1, y1, x0, y1, x0, y0)
-    val layer = PolygonLayer.fromShapes(Seq(
+    PolygonLayer.fromShapes(Seq(
       1L -> Seq(rect(0, 0, 10, 10)),
       2L -> Seq(rect(10, 0, 20, 10)), // shares the x=10 edge with shape 1
       3L -> Seq(rect(5, 5, 15, 15)),  // overlaps both
       4L -> Seq(rect(30, 0, 50, 20), Synthetic.reverseRing(rect(35, 5, 45, 15))), // hole
       5L -> Seq(rect(40, 10, 60, 30)) // overlaps 4's hole region partially
     ))
+  }
+
+  test("GridPipIndex: degenerate layers (axis-aligned rects, shared edges, holes)") {
+    val layer = degenerateLayer
     val rng = new SplitMix64(99)
     for (_ <- 0 until 3000) {
       val x = rng.nextDouble() * 70 - 5
@@ -188,6 +192,70 @@ class IndexSpec extends AnyFunSuite {
     assert(layer.findKeys(38.0, 8.0).toSeq == Seq.empty) // in the hole, outside 5
     assert(layer.findKeys(12.0, 7.0).toSeq == Seq(2L, 3L))
     assert(layer.findKeys(35.0, 5.0).toSeq == Seq(4L)) // hole boundary counts as in
+  }
+
+  test("uniformFirstShape: a proven box has that key at all 16 tile centres (tree path)") {
+    val side = graft.operators.Tiling.FootprintSide
+    val d = side / 4
+    /** Number of proven footprints; one footprint centred at each (x, y). */
+    def check(layer: PolygonLayer, centres: Seq[(Double, Double)], what: String,
+              scale: Double = 1.0): Int = {
+      var proven = 0
+      centres.foreach { case (x, y) =>
+        // the tile-centre arithmetic of Tiling.tileAssignAt, box = first/last centre
+        val (x0, y0) = (x - side * scale / 2, y - side * scale / 2)
+        def c(lo: Double, t: Int) = lo + (t + 0.5) * (d * scale)
+        val u = layer.uniformFirstShape(c(x0, 0), c(y0, 0), c(x0, 3), c(y0, 3))
+        assert(u >= -2 && u < layer.numShapes, s"$what ($x,$y): $u")
+        if (u >= -1) {
+          proven += 1
+          val want = if (u == -1) -1L else layer.shapeKeys(u)
+          for (t <- 0 until 16)
+            assert(layer.findFirstKeyTree(c(x0, t % 4), c(y0, t / 4)) == want,
+              s"$what ($x,$y) tile $t: proven $want")
+        }
+      }
+      proven
+    }
+    def vertices(layer: PolygonLayer): Seq[(Double, Double)] =
+      layer.xx.indices.map(i => (layer.xx(i), layer.yy(i)))
+    def midpoints(layer: PolygonLayer): Seq[(Double, Double)] =
+      (0 until layer.numRings).flatMap { r =>
+        (layer.ringStart(r) until layer.ringStart(r + 1) - 1).map(i =>
+          ((layer.xx(i) + layer.xx(i + 1)) / 2, (layer.yy(i) + layer.yy(i + 1)) / 2))
+      }
+    val layers = Seq(
+      "1024-polygon" -> Synthetic.polygonLayer(1024, seed = 42L, holeEvery = 5),
+      "degenerate" -> degenerateLayer,
+      "oracle" -> Synthetic.oracleLayer)
+    for ((name, layer) <- layers; scale <- Seq(1.0, 20.0)) {
+      val (ex0, ey0, ex1, ey1) = layer.extent
+      val rng = new SplitMix64(17)
+      val random = (0 until 4000).map(_ =>
+        (ex0 + rng.nextDouble() * (ex1 - ex0), ey0 + rng.nextDouble() * (ey1 - ey0)))
+      val proven = check(layer, random, s"$name random x$scale", scale)
+      if (name == "1024-polygon" && scale == 1.0)
+        assert(proven >= random.size / 2, s"only $proven of ${random.size} footprints proven")
+      // a box around a boundary point is never proven
+      for ((what, pts) <- Seq("vertex" -> vertices(layer), "midpoint" -> midpoints(layer)))
+        assert(check(layer, pts, s"$name $what x$scale", scale) == 0, s"$name $what")
+      // footprints straddling the extent edges, just inside and just outside them
+      val edge = (0 until 400).flatMap { k =>
+        val t = rng.nextDouble()
+        val (x, y) = (ex0 + t * (ex1 - ex0), ey0 + t * (ey1 - ey0))
+        val off = side * scale * (k % 4 - 1.5) / 3
+        Seq((ex0 + off, y), (ex1 + off, y), (x, ey0 + off), (x, ey1 + off))
+      }
+      check(layer, edge, s"$name edge x$scale", scale)
+      // corners outside the extent are never proven
+      assert(check(layer, Seq((ex0, ey0 + 1), (ex1, ey1 - 1)), s"$name outside", scale) == 0)
+    }
+    val layer = layers.head._2
+    val nan = Double.NaN
+    Seq((nan, 1.0, 2.0, 2.0), (1.0, nan, 2.0, 2.0), (1.0, 1.0, nan, 2.0), (1.0, 1.0, 2.0, nan))
+      .foreach { case (a, b, c, e) => assert(layer.uniformFirstShape(a, b, c, e) == -2) }
+    // inverted box
+    assert(layer.uniformFirstShape(2.0, 2.0, 1.0, 1.0) == -2)
   }
 
   test("RingSegmentIndex (bucketed) agrees with direct scan on large rings") {

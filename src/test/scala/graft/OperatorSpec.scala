@@ -342,6 +342,51 @@ class OperatorSpec extends SparkSuite {
     assert(!plan.contains("bytes"), "tile assignment must not read image payloads")
   }
 
+  test("tileAssignAt with a layer equals the per-tile pip_first_key formula") {
+    val side = Tiling.FootprintSide
+    val rng = new SplitMix64(5)
+    for (layer <- Seq(Synthetic.polygonLayer(64, seed = 42L), Synthetic.oracleLayer)) {
+      // footprints centred on ring vertices and segment midpoints straddle
+      // polygon edges, and so do those with a vertex between the last two
+      // tile centres or off-centre; random ones mostly do not
+      val onBoundary = (0 until layer.numRings).flatMap { r =>
+        val i = layer.ringStart(r)
+        Seq((layer.xx(i), layer.yy(i)),
+          ((layer.xx(i) + layer.xx(i + 1)) / 2, (layer.yy(i) + layer.yy(i + 1)) / 2),
+          (layer.xx(i) - side / 4, layer.yy(i) - side / 4),
+          (layer.xx(i) + side * 0.3, layer.yy(i) - side * 0.2))
+      }
+      val random = (0 until 300).map(_ => (rng.nextDouble() * 100, rng.nextDouble() * 100))
+      val pts = (onBoundary ++ random).map { case (x, y) => (Option(x), Option(y)) } ++
+        Seq((None, Some(5.0)), (Some(5.0), None), (None, None), (Some(Double.NaN), Some(5.0)))
+      val imgs = pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+        .toDF("image_id", "x", "y").repartition(3)
+      val got = Tiling.tileAssignAt(spark, imgs, "x", "y", 4, 9, Some(layer))
+      // the assignment before the batched probe: one pip_first_key per tile
+      val bc = graft.index.LayerBroadcasts.of(spark, layer)
+      val want = imgs
+        .withColumn("_x0", col("x") - side / 2)
+        .withColumn("_y0", col("y") - side / 2)
+        .withColumn("_t", explode(sequence(lit(0), lit(15))))
+        .withColumn("tile_x", (col("_t") % 4).cast("int"))
+        .withColumn("tile_y", (col("_t") / 4).cast("int"))
+        .withColumn("cx", col("_x0") + (col("tile_x") + 0.5) * (side / 4))
+        .withColumn("cy", col("_y0") + (col("tile_y") + 0.5) * (side / 4))
+        .withColumn("cell_id", GraftCell.cellIdCol(col("cx"), col("cy"), 9))
+        .withColumn("poly_key", graft.functions.SpatialExprs.pipFirstKey(col("cx"), col("cy"), bc))
+      val cols = Seq("image_id", "tile_x", "tile_y", "cx", "cy", "cell_id", "poly_key")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(cols.map(col): _*).collect().sortBy(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSeq
+      val (g, w) = (rows(got), rows(want))
+      assert(g.size == pts.size * 16 && w.size == g.size)
+      val diff = g.zip(w).find { case (a, b) => a != b }
+      assert(diff.isEmpty, s"first differing (got, want): $diff")
+      // rows with a null x or y keep their 16 tiles and get a null key
+      assert(g.count(_.isNullAt(6)) == 3 * 16)
+      assert(g.exists(r => !r.isNullAt(6) && r.getLong(6) >= 0))
+    }
+  }
+
   test("rasterStage: decode -> blur -> resample is deterministic and sane") {
     val imgs = Images.generate(spark, 20).toDF()
     val a = Multimodal.rasterStage(spark, imgs).orderBy("image_id").collect()

@@ -94,6 +94,29 @@ class PlanSpec extends SparkSuite {
     assert(readSchema.nonEmpty && !readSchema.contains("bytes"), readSchema)
   }
 
+  test("tile assignment: box probe and per-tile PIP share one codegen stage, no UDF") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.functions.{PipBoxFirstKey, PipFirstKey}
+    object Aqe extends AdaptiveSparkPlanHelper
+    val imgs = spark.read.parquet(imagesParquet)
+    val tiles = Tiling.tileAssign(spark, imgs, tileGrid = 4, res = 9, Some(Synthetic.oracleLayer))
+    assert(tiles.collect().length == 200 * 16)
+    val plan = tiles.queryExecution.executedPlan
+    val nodes = Aqe.collect(plan) { case p => p }
+    def has(p: SparkPlan)(f: Expression => Boolean) = p.expressions.exists(_.exists(f))
+    assert(!nodes.exists(has(_)(_.isInstanceOf[ScalaUDF])), plan.toString)
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(stage)
+    })
+    val both = Aqe.collect(plan) { case w: WholeStageCodegenExec => stage(w.child) }.exists { st =>
+      st.exists(has(_)(_.isInstanceOf[PipBoxFirstKey])) && st.exists(has(_)(_.isInstanceOf[PipFirstKey]))
+    }
+    assert(both, s"pip_box_first_key and pip_first_key must run in one WholeStageCodegen stage:\n$plan")
+  }
+
   test("CRS forward expressions run inside WholeStageCodegen, scan prunes") {
     val df = spark.read.parquet(s"$Sf/customer.parquet")
       .select(col("c_custkey"))
