@@ -16,6 +16,11 @@ import graft.tables.SplitMix64
  *    bucket the vectors; search probes the query's bucket plus all 1-bit
  *    neighbor buckets (multi-probe), turning the O(n²) cross join into an
  *    equi-join on bucket id. Recall is tunable via `planes`.
+ *  - [[ivfTopK]]: coarse-quantizer lists, probed `nprobe` at a time.
+ *
+ * Nulls: all three drop rows with a null id or a null vector (after the cast
+ * of the id to long) once, up front, as [[Knn.knnJoin]] does. Such a row is
+ * neither a query nor anyone's neighbour.
  */
 object Ann {
 
@@ -67,12 +72,17 @@ object Ann {
     if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
   }
 
+  /** (id, vec) rows of `df`, without those with a null id or vector. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+      .filter(col("id").isNotNull && col("vec").isNotNull)
+
   /**
    * Exact top-k neighbors per vector by cosine. Output:
    * (id, rank, neighbor_id). O(n²) — the correctness baseline.
    */
   def bruteForceTopK(spark: SparkSession, df: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
-    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+    val v = vectors(df, idCol, vecCol)
     // codegen cosine kernel (same left-to-right fold as Ann.cosine — r6 §9)
     val pairs = v.as("a").join(v.as("b"), col("a.id") =!= col("b.id"))
       .select(col("a.id").as("id"), col("b.id").as("neighbor_id"),
@@ -94,7 +104,7 @@ object Ann {
   def ivfTopK(spark: SparkSession, df: DataFrame, idCol: String, vecCol: String,
               k: Int, nlist: Int = 16, nprobe: Int = 4, iters: Int = 3): DataFrame = {
     import spark.implicits._
-    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")).cache()
+    val v = vectors(df, idCol, vecCol).cache()
 
     // deterministic init, skew-hardened: seed with the nlist vectors whose
     // id HASHES are smallest (TakeOrderedAndProject — distributed top-k, no
@@ -160,7 +170,7 @@ object Ann {
   def lshTopK(spark: SparkSession, df: DataFrame, idCol: String, vecCol: String,
               k: Int, planes: Int = 10,
               maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    val v = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+    val v = vectors(df, idCol, vecCol)
     // signature / probe / cosine kernels are codegen expressions (r6; see
     // graft.functions.HashKernels — ArrayData read in place, no Seq boxing)
     import graft.functions.HashExprs

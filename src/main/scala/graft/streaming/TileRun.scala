@@ -22,12 +22,28 @@ import graft.operators.SpatialJoin
  *   tiles/g=<g>/...parquet        output rows of each completed cell group
  *   manifest/<g>.json             lineage record, written AFTER the group's data
  *
- * Scale shape: ONE partitioned write + TWO small aggregations per invocation,
- * regardless of the number of groups — `write.partitionBy("g")` with dynamic
- * partition overwrite shards the output, and the lineage (input rows, output
- * rows, order-independent XOR checksum) is computed by a single `groupBy("g")`
- * each over the input and the written output. No per-group full-table rescans:
- * at 10^12 rows the whole run is O(1) Spark jobs.
+ * Scale shape: per invocation, regardless of the number of groups,
+ *   - ONE input aggregation: `groupBy("g").count` over the located input
+ *     gives both the sorted group list (its keys, see [[planGroups]]) and the
+ *     input rows of every group (its values);
+ *   - ONE partitioned write of the joined rows, `REBALANCE(g)` first and
+ *     `write.partitionBy("g")` with dynamic partition overwrite;
+ *   - ONE lineage read-back: output rows and an order-independent XOR
+ *     checksum per group, one `groupBy("g")` over the committed files, read
+ *     with the known output schema (no footer-inference job).
+ * No per-group full-table rescans: at 10^12 rows the whole run is O(1) Spark
+ * jobs.
+ *
+ * Why rebalance before the write: without it every input task writes one
+ * file for every group it meets (tasks × groups small files). `REBALANCE(g)`
+ * puts a group's rows together, so adaptive execution writes about one file
+ * per group at small sizes, coalesced to the advisory partition size, and
+ * splits a skewed group over several writers at scale. Without adaptive
+ * execution the hint is a plain hash repartition on `g`, still correct.
+ *
+ * Nulls: a row whose `phash` is null has no location, so its group `g` is
+ * null. Such rows belong to no group: they are skipped by the input
+ * aggregation, never joined or written, and counted in no manifest.
  *
  * The manifest write is the commit point: a crashed run leaves at most
  * non-manifested partition directories, which the retry overwrites (dynamic
@@ -43,14 +59,26 @@ object TileRun {
       checksum: Long,
       wallMs: Long)
 
-  /** Cell groups present in the image table at the coarse resolution. */
-  def planGroups(spark: SparkSession, images: DataFrame, coarseRes: Int): Array[Long] = {
-    import spark.implicits._
+  /** Image rows with their location `x`, `y` and coarse cell group `g`. */
+  private def locate(images: DataFrame, coarseRes: Int): DataFrame =
     images
-      .select(phashLon(col("phash")).as("x"), phashLat(col("phash")).as("y"))
-      .select(cellId(col("x"), col("y"), coarseRes).as("g"))
-      .distinct().as[Long].collect().sorted
+      .withColumn("x", phashLon(col("phash")))
+      .withColumn("y", phashLat(col("phash")))
+      .withColumn("g", cellId(col("x"), col("y"), coarseRes))
+
+  /** Input rows per cell group at the coarse resolution, sorted by group, in
+   * one aggregation; rows with a null group (null `phash`) are skipped. */
+  private def groupCounts(spark: SparkSession, images: DataFrame, coarseRes: Int): Array[(Long, Long)] = {
+    import spark.implicits._
+    locate(images, coarseRes)
+      .filter(col("g").isNotNull)
+      .groupBy("g").agg(count(lit(1)).as("n"))
+      .as[(Long, Long)].collect().sortBy(_._1)
   }
+
+  /** Cell groups present in the image table at the coarse resolution. */
+  def planGroups(spark: SparkSession, images: DataFrame, coarseRes: Int): Array[Long] =
+    groupCounts(spark, images, coarseRes).map(_._1)
 
   def completedGroups(outDir: String): Set[Long] = {
     val dir = new java.io.File(s"$outDir/manifest")
@@ -76,9 +104,11 @@ object TileRun {
       inputManifest: Option[graft.tables.TableManifest.Manifest] = None): Seq[GroupManifest] = {
     import spark.implicits._
     Files.createDirectories(Paths.get(s"$outDir/manifest"))
-    val groups = planGroups(spark, images, coarseRes)
+    // lineage: input rows per group, from the same aggregate as the groups
+    val counts = groupCounts(spark, images, coarseRes)
+    val inRows = counts.toMap
     val done = completedGroups(outDir)
-    val todo = groups.filterNot(done.contains).take(failAfter)
+    val todo = counts.map(_._1).filterNot(done.contains).take(failAfter)
     if (todo.isEmpty) return Seq.empty
     val t0 = System.nanoTime()
 
@@ -96,36 +126,31 @@ object TileRun {
         else spark.read.parquet(cand.map(_.path): _*)
       case None => images
     }
-    val located = input
-      .withColumn("x", phashLon(col("phash")))
-      .withColumn("y", phashLat(col("phash")))
-      .withColumn("g", cellId(col("x"), col("y"), coarseRes))
+    val located = locate(input, coarseRes)
       .filter(col("g").isin(todo.toIndexedSeq: _*))
-
-    // lineage: input rows per group (one shuffle of (g, count) partials)
-    val inRows = located.groupBy("g").agg(count(lit(1)).as("n"))
-      .as[(Long, Long)].collect().toMap
 
     val joined = SpatialJoin.broadcastJoin(spark, located, "x", "y", layer)
       .withColumn("cell_id", cellId(col("x"), col("y"), fineRes))
       .select(col("image_id"), col("cell_id"), col("poly_key"), col("g"))
 
-    // ONE job writes every todo group; dynamic overwrite touches only the
-    // partitions present in `joined`, so completed groups are never rewritten
-    joined.write
+    // ONE job writes every todo group, about one file per group (see the
+    // header); dynamic overwrite touches only the partitions present in
+    // `joined`, so completed groups are never rewritten
+    joined.hint("rebalance", col("g")).write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("g")
       .parquet(s"$outDir/tiles")
 
     // lineage from the committed output itself (reads back only the 3 narrow
-    // columns of the todo partitions): rows + order-independent checksum
+    // columns of the todo partitions): rows + order-independent checksum.
+    // The schema is the one just written, so no job infers it from footers.
     val tilesDir = new java.io.File(s"$outDir/tiles")
     val anyWritten = tilesDir.exists() &&
       tilesDir.listFiles().exists(_.getName.startsWith("g="))
     val outAgg: Map[Long, (Long, Long)] =
       if (!anyWritten) Map.empty
-      else spark.read.parquet(s"$outDir/tiles")
+      else spark.read.schema(joined.schema).parquet(s"$outDir/tiles")
         .filter(col("g").isin(todo.toIndexedSeq: _*))
         .groupBy("g")
         .agg(count(lit(1)).as("n"),
@@ -136,7 +161,7 @@ object TileRun {
     val wallMs = (System.nanoTime() - t0) / 1000000
     todo.toSeq.map { g =>
       val (outN, checksum) = outAgg.getOrElse(g, (0L, 0L))
-      val m = GroupManifest(g, inRows.getOrElse(g, 0L), outN, checksum, wallMs)
+      val m = GroupManifest(g, inRows(g), outN, checksum, wallMs)
       // manifest write = commit point (data for g is already durable)
       Files.writeString(Paths.get(s"$outDir/manifest/$g.json"),
         s"""{"group":$g,"input_rows":${m.inputRows},"output_rows":${m.outputRows},"checksum":${m.checksum},"wall_ms":${m.wallMs}}""")

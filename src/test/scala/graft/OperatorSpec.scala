@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators._
@@ -307,6 +308,39 @@ class OperatorSpec extends SparkSuite {
       .select("id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = exact.intersect(approx).size.toDouble / exact.size
     assert(recall >= 0.9, s"recall=$recall") // measured 0.973 on this fixture
+  }
+
+  // every Ann method drops rows with a null id or vector up front: with k
+  // above the row count, a kept null vector would be someone's neighbour
+  private def annNullCase(run: (DataFrame, Int) => DataFrame): Unit = {
+    val rng = new SplitMix64(53)
+    val clean = (0 until 40).map { i =>
+      val v = Array.tabulate(8)(d => (if (d % 4 == i % 4) 1.0f else 0.0f) + rng.nextDouble().toFloat * 0.1f)
+      (Option(i.toLong), Option(v.toSeq))
+    }
+    val nulls = Seq((Option.empty[Long], Option(Seq.fill(8)(0.5f))), (Option(1000L), Option.empty[Seq[Float]]))
+    val cleanDf = clean.toDF("id", "vec")
+    val withNulls = cleanDf.union(nulls.toDF("id", "vec"))
+    def rows(df: DataFrame) =
+      run(df, 50).select("id", "rank", "neighbor_id").as[(Option[Long], Int, Option[Long])].collect().toSet
+    val want = rows(cleanDf)
+    val got = rows(withNulls)
+    assert(want.nonEmpty)
+    val bad = got.filterNot { case (id, _, nb) => id.exists(_ < 40) && nb.exists(_ < 40) }
+    assert(bad.isEmpty, s"null-id or null-vector rows in the output: $bad")
+    assert(got == want)
+  }
+
+  test("bruteForceTopK drops rows with a null id or vector") {
+    annNullCase((df, k) => Ann.bruteForceTopK(spark, df, "id", "vec", k))
+  }
+
+  test("ivfTopK drops rows with a null id or vector") {
+    annNullCase((df, k) => Ann.ivfTopK(spark, df, "id", "vec", k, nlist = 4, nprobe = 2))
+  }
+
+  test("lshTopK drops rows with a null id or vector") {
+    annNullCase((df, k) => Ann.lshTopK(spark, df, "id", "vec", k, planes = 6))
   }
 
   // ------------------------------------------------------------- multimodal
