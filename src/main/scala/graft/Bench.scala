@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions._
+import graft.index.LayerBroadcasts
 import graft.operators.{SpatialJoin, Tiling}
 import graft.tables.{Images, Synthetic}
 
@@ -54,11 +55,7 @@ object Bench {
 
   /** One broadcast of the layer per SparkContext (re-broadcasting per
    * measured run would bill ~100s of ms of serial work to every sample). */
-  private val bcCache =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[graft.index.PolygonLayer]]()
-  private def layerBc(spark: SparkSession) =
-    bcCache.computeIfAbsent(spark.sparkContext, sc => sc.broadcast(benchLayer))
+  private def layerBc(spark: SparkSession) = LayerBroadcasts.of(spark, benchLayer)
 
   /** Headline pipeline: derive location, cell id, broadcast PIP join,
    * per-tile (4x4) PIP + cell assignment, aggregate — ONE action (the tile
@@ -251,8 +248,8 @@ object Bench {
 
     // the ONLY in-process session: generates the cache, then times queries
     val s = session(cpus)
-    Images.ensureParquet(s, "/root/repo/data", tag, nImages)
-    val imagesPath = s"/root/repo/data/images_$tag.parquet"
+    Images.ensureParquet(s, SparkEntry.DataRoot, tag, nImages)
+    val imagesPath = s"${SparkEntry.DataRoot}/images_$tag.parquet"
 
     // ---------- scaling evidence: N=2 vs 4N=8 cores, child JVM each ----------
     // the sandbox host has drifting co-tenant load (raw-thread probes vary

@@ -4,25 +4,39 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
 /**
- * Plan/timing capture for declared queries OUTSIDE the 13-query bench list
- * (BenchExtra covers those). Same session configs as BenchExtra; used for
- * the round-6 plans of oracle-path queries touched by an optimization
- * (e.g. q_ann_ivf). Usage:
- *   sbt "runMain graft.PlanDump <tag> <query> [query...]"
- * Writes plans/r06/<query>_<tag>.txt and prints min-of-3 noop-sink seconds.
+ * Plan and timing capture for declared queries:
+ *   sbt "runMain graft.PlanDump <outDir> <sfDir> <query>..."
+ * For each query, writes `<outDir>/<query>.txt` (the formatted physical plan)
+ * and prints the min-of-3 noop-sink seconds after one warm-up call, in one
+ * `local[*]` session. The arguments are checked before the session starts:
+ * a missing argument or an unknown query name prints the usage line (and the
+ * unknown names) and exits with code 2.
  */
 object PlanDump {
-  def main(args: Array[String]): Unit = {
-    val tag = args(0)
-    val names = args.drop(1)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  val Usage = "usage: PlanDump <outDir> <sfDir> <query>..."
+
+  def main(args: Array[String]): Unit = sys.exit(run(args))
+
+  def run(args: Array[String]): Int = {
+    if (args.length < 3) {
+      Console.err.println(Usage)
+      return 2
+    }
+    val (outDir, sfDir, names) = (args(0), args(1), args.drop(2))
+    val queries = SparkEntry.queries
+    val unknown = names.filterNot(queries.contains)
+    if (unknown.nonEmpty) {
+      Console.err.println(s"$Usage\nunknown queries: ${unknown.mkString(" ")}")
+      return 2
+    }
     val s = SparkSession.builder()
-      .master(s"local[$cpus]")
+      .master("local[*]")
       .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", (cpus * 2).toString)
+      .config("spark.sql.shuffle.partitions", (Runtime.getRuntime.availableProcessors * 2).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
@@ -30,24 +44,22 @@ object PlanDump {
       .config("spark.sql.files.openCostInBytes", "0")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    val planDir = Paths.get("plans", "r06")
+    val planDir = Paths.get(outDir)
     Files.createDirectories(planDir)
-    names.foreach { name =>
-      val fn = SparkEntry.queries(name)
+    try names.foreach { name =>
+      val fn = queries(name)
       s.sparkContext.setJobDescription(name)
-      val df = fn(s, sfDir)
-      Files.write(planDir.resolve(s"${name}_$tag.txt"),
-        df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
-          .getBytes(StandardCharsets.UTF_8))
+      Files.write(planDir.resolve(s"$name.txt"),
+        fn(s, sfDir).queryExecution.explainString(FormattedMode).getBytes(StandardCharsets.UTF_8))
       def once(): Double = {
         val t0 = System.nanoTime()
         fn(s, sfDir).write.mode("overwrite").format("noop").save()
         (System.nanoTime() - t0) / 1e9
       }
-      once() // warmup
+      once() // warm-up
       val t = Seq.fill(3)(once()).min
-      println(f"PLANDUMP $name tag=$tag min3=$t%.3f s")
-    }
-    s.stop()
+      println(f"PLANDUMP $name min3=$t%.3f s")
+    } finally s.stop()
+    0
   }
 }

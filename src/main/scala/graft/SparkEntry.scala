@@ -25,6 +25,12 @@ import graft.tables.{Images, Synthetic}
  */
 object SparkEntry {
 
+  /** Directory of the generated media tables (images, audio, video) and
+   * of `q_tilerun`'s output: `data/` under the working directory (the
+   * repository root under sbt). The oracle SQL reads the sf0.01 media
+   * tables from it by absolute path. */
+  final val DataRoot: String = new java.io.File("data").getAbsolutePath
+
   /** One DataFrame handle per (session, parquet path): repeated query
    * invocations reuse the resolved relation instead of re-listing the
    * directory and re-reading the footer schema per call (driver-side
@@ -155,7 +161,7 @@ object SparkEntry {
    * Used by the q_img_ahash and q_img_augment oracles. */
   private def imgPxPrefix(idLimit: Int): String =
     s"""img AS (SELECT image_id, w, h, CAST(substr(image_id, 4, 12) AS BIGINT) AS i
-       |  FROM read_parquet('/root/repo/data/images_sf0.01.parquet/*.parquet')
+       |  FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')
        |  WHERE fmt = 'png' AND CAST(substr(image_id, 4, 12) AS BIGINT) < $idLimit),
        |ns AS (SELECT n FROM generate_series(0, 1088) t(n)),
        |pxn AS (SELECT image_id, i, w, h, n FROM img JOIN ns ON ns.n < img.w * img.h),
@@ -910,7 +916,7 @@ object SparkEntry {
    * `smp(audio_id, n_samples, n, v)`. */
   private def audioSmpCtes(idLimit: Int): String =
     s"""aud AS (SELECT audio_id, n_samples, CAST(substr(audio_id, 4, 12) AS BIGINT) AS i
-       |  FROM read_parquet('/root/repo/data/audio_sf0.01.parquet/*.parquet')
+       |  FROM read_parquet('$DataRoot/audio_sf0.01.parquet/*.parquet')
        |  WHERE CAST(substr(audio_id, 4, 12) AS BIGINT) < $idLimit),
        |ns AS (SELECT n FROM generate_series(0, 1198) t(n)),
        |sn AS (SELECT audio_id, i, n_samples, n FROM aud JOIN ns ON ns.n < aud.n_samples),
@@ -950,7 +956,7 @@ object SparkEntry {
    * the id slice. Exposes CTEs `img`, `px`, `bits` (UBIGINT `ub`), `means`. */
   private def ahashCtes(idLimit: Int): String = ahashChain(
     s"""img AS (SELECT image_id, w, h, CAST(substr(image_id, 4, 12) AS BIGINT) AS i
-       |  FROM read_parquet('/root/repo/data/images_sf0.01.parquet/*.parquet')
+       |  FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')
        |  WHERE fmt = 'png' AND CAST(substr(image_id, 4, 12) AS BIGINT) < $idLimit)""".stripMargin)
 
   /** Same chain over any `img(image_id, w, h, i)` CTE (i = generator seed) —
@@ -1006,7 +1012,7 @@ object SparkEntry {
    * sf0.01 via Verify before the oracle executes). */
   private lazy val imgCellSql: String = {
     val LS = dl(Images.LocScale)
-    s"""WITH img AS (SELECT phash FROM read_parquet('/root/repo/data/images_sf0.01.parquet/*.parquet')),
+    s"""WITH img AS (SELECT phash FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')),
        |s0 AS (SELECT phash >> 1 AS x, phash AS y FROM img),
        |d1 AS (SELECT x & 6148914691236517205 AS x, y & 6148914691236517205 AS y FROM s0),
        |d2 AS (SELECT (x | (x >> 1)) & 3689348814741910323 AS x,
@@ -1041,7 +1047,7 @@ object SparkEntry {
    * [[imgCellSql]], carrying image_id for per-image grouping). */
   private lazy val imgXYSql: String = {
     val LS = dl(Images.LocScale)
-    s"""img AS (SELECT image_id, phash FROM read_parquet('/root/repo/data/images_sf0.01.parquet/*.parquet')),
+    s"""img AS (SELECT image_id, phash FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')),
        |s0 AS (SELECT image_id, phash >> 1 AS x, phash AS y FROM img),
        |d1 AS (SELECT image_id, x & 6148914691236517205 AS x, y & 6148914691236517205 AS y FROM s0),
        |d2 AS (SELECT image_id, (x | (x >> 1)) & 3689348814741910323 AS x,
@@ -2124,20 +2130,20 @@ object SparkEntry {
 
   private def imagesDf(s: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll(".*/", "")
-    val path = Images.ensureParquet(s, "/root/repo/data", tag, Images.rowsForSf(dir))
+    val path = Images.ensureParquet(s, DataRoot, tag, Images.rowsForSf(dir))
     readParquetCached(s, path)
   }
 
   private def audioDf(s: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll(".*/", "")
-    val path = graft.tables.Audio.ensureParquet(s, "/root/repo/data", tag,
+    val path = graft.tables.Audio.ensureParquet(s, DataRoot, tag,
       graft.tables.Audio.rowsForSf(dir))
     readParquetCached(s, path)
   }
 
   private def videoDf(s: SparkSession, dir: String): DataFrame = {
     val tag = dir.replaceAll(".*/", "")
-    val path = graft.tables.Video.ensureParquet(s, "/root/repo/data", tag,
+    val path = graft.tables.Video.ensureParquet(s, DataRoot, tag,
       graft.tables.Video.rowsForSf(dir))
     readParquetCached(s, path)
   }
@@ -4178,7 +4184,7 @@ object SparkEntry {
     "q_tilerun" -> ((s, dir) => {
       import s.implicits._
       val tag = dir.replaceAll(".*/", "")
-      val outDir = s"/root/repo/data/tilerun_$tag"
+      val outDir = s"$DataRoot/tilerun_$tag"
       // fresh run for determinism (resume itself is exercised in TileRunSpec)
       def rmrf(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles().foreach(rmrf)
@@ -4973,7 +4979,7 @@ object SparkEntry {
     // arithmetic (CellIndex.encode) as a chained bitwise CTE
     "q_cell_disk" -> ((s, dir) =>
       points(s, dir).where(col("id") <= 120)
-        .withColumn("cell", GraftCell.cellIdCol(col("x"), col("y"), 6))
+        .withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), 6))
         .select(col("id"),
           explode(graft.functions.SpatialExprs.cellDisk(col("cell"), 2)).as("ncell"))
         .orderBy("id", "ncell")),
@@ -5742,7 +5748,7 @@ object SparkEntry {
     // lossless PNG rows from the generator formula, NULL for JPEG
     "q_img_features" -> s"""WITH ${ahashCtes(500)},
         |base AS (SELECT image_id, w, h, fmt
-        |  FROM read_parquet('/root/repo/data/images_sf0.01.parquet/*.parquet')
+        |  FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')
         |  WHERE CAST(substr(image_id, 4, 12) AS BIGINT) < 500),
         |ah AS (SELECT image_id,
         |  CASE WHEN ub >= 9223372036854775808
@@ -5803,8 +5809,8 @@ object SparkEntry {
 
     "q_video_frames" -> {
       val imgCte =
-        """vid AS (SELECT video_id, w, h, n_frames, CAST(substr(video_id, 4, 12) AS BIGINT) AS vi
-          |  FROM read_parquet('/root/repo/data/video_sf0.01.parquet/*.parquet')
+        s"""vid AS (SELECT video_id, w, h, n_frames, CAST(substr(video_id, 4, 12) AS BIGINT) AS vi
+          |  FROM read_parquet('$DataRoot/video_sf0.01.parquet/*.parquet')
           |  WHERE CAST(substr(video_id, 4, 12) AS BIGINT) < 150),
           |fr AS (SELECT video_id, w, h, f.f AS frame, vi * 100000 + f.f AS i
           |  FROM vid JOIN generate_series(0, 8) f(f)
@@ -5852,14 +5858,14 @@ object SparkEntry {
     // PNG rows are lossless by construction; the JPEG round trip must hold
     // >= 40 dB (deterministic image family; observed floor ~48.5 dB)
     "q_img_psnr" ->
-      """SELECT image_id, w, h, fmt = 'png' AS lossless, TRUE AS high_fidelity
-        |FROM read_parquet('/root/repo/data/images_sf0.01.parquet/*.parquet')
+      s"""SELECT image_id, w, h, fmt = 'png' AS lossless, TRUE AS high_fidelity
+        |FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')
         |WHERE CAST(substr(image_id, 4, 12) AS BIGINT) < 500
         |ORDER BY image_id""".stripMargin,
 
 
     "q_img_pip_oracle" ->
-      s"""WITH img AS (SELECT phash FROM read_parquet('/root/repo/data/images_sf0.01.parquet/*.parquet')),
+      s"""WITH img AS (SELECT phash FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')),
          |s0 AS (SELECT phash >> 1 AS x, phash AS y FROM img),
          |d1 AS (SELECT x & 6148914691236517205 AS x, y & 6148914691236517205 AS y FROM s0),
          |d2 AS (SELECT (x | (x >> 1)) & 3689348814741910323 AS x,

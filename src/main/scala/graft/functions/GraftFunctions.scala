@@ -7,9 +7,10 @@ import graft.cell.CellIndex
 
 /**
  * Column-level function surface of the engine. Everything here composes
- * built-in `org.apache.spark.sql.functions` (whole-stage-codegen'd); UDF-backed
- * helpers live in [[GraftUdfs]] and are used only where built-ins can't express
- * the semantics (bit interleave, PIP against a broadcast index).
+ * built-in `org.apache.spark.sql.functions` (whole-stage-codegen'd). What
+ * built-ins can't express (bit interleave, PIP against a broadcast index,
+ * the hash and vector kernels) is a codegen expression in [[SpatialExprs]]
+ * or [[HashExprs]].
  */
 object GraftFunctions {
 

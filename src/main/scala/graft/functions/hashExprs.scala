@@ -129,11 +129,13 @@ case class NearestCentroidExpr(child: Expression, cents: Array[Array[Float]])
   override def dataType: DataType = IntegerType
   override def prettyName: String = "nearest_centroid"
 
+  private val centData = HashKernels.asArrayData(cents)
+
   override protected def nullSafeEval(v: Any): Any =
-    HashKernels.nearestCentroid(v.asInstanceOf[ArrayData], cents)
+    HashKernels.nearestCentroid(v.asInstanceOf[ArrayData], centData)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCentroids", cents, "float[][]")
+    val cRef = ctx.addReferenceObj("ivfCentroids", centData, s"${classOf[ArrayData].getName}[]")
     defineCodeGen(ctx, ev, v => s"graft.functions.HashKernels.nearestCentroid($v, $cRef)")
   }
 
@@ -148,11 +150,13 @@ case class CentroidProbesExpr(child: Expression, cents: Array[Array[Float]], npr
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "centroid_probes"
 
+  private val centData = HashKernels.asArrayData(cents)
+
   override protected def nullSafeEval(v: Any): Any =
-    HashKernels.centroidProbes(v.asInstanceOf[ArrayData], cents, nprobe)
+    HashKernels.centroidProbes(v.asInstanceOf[ArrayData], centData, nprobe)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cRef = ctx.addReferenceObj("ivfCentroids", cents, "float[][]")
+    val cRef = ctx.addReferenceObj("ivfCentroids", centData, s"${classOf[ArrayData].getName}[]")
     defineCodeGen(ctx, ev, v =>
       s"graft.functions.HashKernels.centroidProbes($v, $cRef, $nprobe)")
   }
@@ -262,30 +266,18 @@ object HashKernels {
     UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** [[Ann.cosine]] against a plain float array — same fold, b read from
-   * the array instead of a second ArrayData. */
-  def cosineVs(a: ArrayData, b: Array[Float]): Double = {
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    val n = math.min(a.numElements(), b.length)
-    while (i < n) {
-      val av = a.getFloat(i).toDouble
-      val bv = b(i).toDouble
-      dot += av * bv
-      na += av * av
-      nb += bv * bv
-      i += 1
-    }
-    if (na == 0 || nb == 0) 0.0 else dot / math.sqrt(na * nb)
-  }
+  /** Centroids as `ArrayData`, wrapped once per expression so the scoring
+   * loops below reuse [[cosine]]. */
+  def asArrayData(vs: Array[Array[Float]]): Array[ArrayData] =
+    vs.map(v => UnsafeArrayData.fromPrimitiveArray(v): ArrayData)
 
   /** argmax over centroids; strict `>` keeps the FIRST max — ties break to
    * the lower list index, like the Seq fold in the UDF it replaces. */
-  def nearestCentroid(v: ArrayData, cents: Array[Array[Float]]): Int = {
+  def nearestCentroid(v: ArrayData, cents: Array[ArrayData]): Int = {
     var best = 0; var bestScore = Double.NegativeInfinity
     var i = 0
     while (i < cents.length) {
-      val s = cosineVs(v, cents(i))
+      val s = cosine(v, cents(i))
       if (s > bestScore) { bestScore = s; best = i }
       i += 1
     }
@@ -295,11 +287,11 @@ object HashKernels {
   /** Top-`nprobe` centroid indices ordered by (-score, idx) under the same
    * total order as the Scala `sortBy` it replaces (Ordering[Double] is
    * java.lang.Double.compare-based: NaN greatest, -0.0 < 0.0). */
-  def centroidProbes(v: ArrayData, cents: Array[Array[Float]], nprobe: Int): ArrayData = {
+  def centroidProbes(v: ArrayData, cents: Array[ArrayData], nprobe: Int): ArrayData = {
     val n = cents.length
     val scores = new Array[Double](n)
     var i = 0
-    while (i < n) { scores(i) = cosineVs(v, cents(i)); i += 1 }
+    while (i < n) { scores(i) = cosine(v, cents(i)); i += 1 }
     // ascending by key (-s, i): index a precedes b iff compare(-s_a,-s_b)<0,
     // ties to the lower index (selection sort keeps it stable)
     @inline def precedes(a: Int, b: Int): Boolean = {

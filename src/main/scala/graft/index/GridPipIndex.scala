@@ -3,9 +3,8 @@ package graft.index
 import graft.geom.Geom
 
 /**
- * Uniform-grid point-in-polygon accelerator over a [[PolygonLayer]] —
- * replaces the per-probe packed-R-tree descent on the broadcast-join hot
- * path (guide §1.2 step 2: per-task work, after the job shape is right).
+ * Uniform-grid point-in-polygon index over a [[PolygonLayer]] — the
+ * candidate-ring lookup of every probe on the broadcast-join hot path.
  *
  * Precomputation (once per executor, lazily, off the broadcast blob):
  *  - the layer extent is cut into a gw x gh grid sized from the segment
@@ -23,7 +22,8 @@ import graft.geom.Geom
  * constant-parity shapes. For typical layers the vast majority of probes
  * never touch a segment at all, vs ~40-70 bbox tests per R-tree descent.
  *
- * Exactness: identical results to the tree path by construction —
+ * Exactness: by construction, the same results as an exact test of every
+ * ring —
  *  - any point the float cell-mapping can attribute to cell c lies within
  *    c's eps-inflated rectangle (eps is ~1e-9 of the extent, dwarfing the
  *    ~1e-16 relative rounding of the mapping), and crossing registration
@@ -32,9 +32,9 @@ import graft.geom.Geom
  *  - a boundary (ON) point always lies inside the registering segment's
  *    bbox, which forces that ring into the cell's crossing list → ON is
  *    always decided by an exact ring test, never by precomputation;
- *  - points outside the layer extent are outside every ring bbox → no keys
- *    (same as a tree search returning no candidates).
- * `IndexSpec` asserts grid == brute-force over all rings on random probes.
+ *  - points outside the layer extent are outside every ring bbox → no keys.
+ * `IndexSpec` asserts grid == brute force over all rings and == an R-tree
+ * candidate search (the test-scope `TreePip`) on random and boundary probes.
  *
  * Box query ([[uniformFirstShape]], the batched tile probe): the first
  * enclosing shape is the same at every point of a box B when
@@ -242,9 +242,9 @@ final class GridPipIndex(layer: PolygonLayer) {
   private val emptyKeys = Array.emptyLongArray
   private val emptyShapes = Array.emptyIntArray
 
-  /** Keys of all enclosing shapes, ascending shape order (== tree path). */
+  /** Keys of all enclosing shapes, ascending shape order. */
   def findKeys(x: Double, y: Double): Array[Long] = {
-    // NaN coords: the tree path ends up testing rings (all OUT) → empty;
+    // NaN coords: every ring test is OUT → empty;
     // without this guard the NaN->0 cast would read cell 0's resolved set
     if (x != x || y != y) return emptyKeys
     if (x < ex0 || x > ex1 || y < ey0 || y > ey1) return emptyKeys
@@ -365,7 +365,7 @@ final class GridPipIndex(layer: PolygonLayer) {
     firstShapeInCell(c, bx0, by0)
   }
 
-  /** Indexes of all enclosing shapes, ascending (== tree-path findShapes). */
+  /** Indexes of all enclosing shapes, ascending. */
   def findShapeIdxs(x: Double, y: Double): Array[Int] = {
     if (x != x || y != y) return emptyShapes
     if (x < ex0 || x > ex1 || y < ey0 || y > ey1) return emptyShapes

@@ -8,11 +8,11 @@ import org.apache.spark.sql.SparkSession
  * One broadcast per (SparkContext, layer) — repeated invocations of the
  * spatial operators over the same layer reuse the broadcast handle instead
  * of re-serializing and re-shipping the SoA blob every call (driver-side
- * serial work billed to every query; same rationale as the frozen bench's
- * own `layerBc` cache). Keys compare by identity: layers are stable
- * singletons (`Synthetic.oracleLayer`, the image layer) or per-query
- * builds that don't recur. Entries live for the JVM's lifetime — bounded
- * by #sessions x #distinct layers, both tiny.
+ * serial work billed to every query and every `graft.Bench` sample). Keys
+ * compare by identity: layers are stable singletons
+ * (`Synthetic.oracleLayer`, the image layer, `Bench.benchLayer`) or
+ * per-query builds that don't recur. Entries live for the JVM's lifetime —
+ * bounded by #sessions x #distinct layers, both tiny.
  */
 object LayerBroadcasts {
   /** Guard against unbounded growth when a caller builds a fresh layer per

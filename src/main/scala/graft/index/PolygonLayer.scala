@@ -6,8 +6,8 @@ import graft.geom.Geom
  * Immutable struct-of-arrays polygon layer, designed to be broadcast to
  * executors as one compact blob (the Spark analog of the reference's
  * `ArcCollection` + `PathIndex`: SoA coordinate arrays
- * `/root/reference/src/paths/mapshaper-arcs.mjs:57-63`, packed R-tree over
- * ring bboxes + per-ring point-in-polygon `src/paths/mapshaper-path-index.mjs:9-237`).
+ * `src/paths/mapshaper-arcs.mjs:57-63`, candidate-ring lookup
+ * + per-ring point-in-polygon `src/paths/mapshaper-path-index.mjs:9-237`).
  *
  * Layout:
  *  - `xx`, `yy`: concatenated vertex coords of all rings (closed: first==last);
@@ -18,6 +18,9 @@ import graft.geom.Geom
  *    hot-spot heuristic of `PathIndex` / `PolygonIndex`,
  *    `src/paths/mapshaper-path-index.mjs:155-173`,
  *    `src/polygons/mapshaper-polygon-index.mjs:9-131`).
+ *
+ * Only these arrays travel; every probe goes through the [[grid]] index,
+ * which each executor builds lazily from them on first use.
  *
  * Point-in-shape semantics: even-odd across the shape's rings with boundary
  * counted as enclosed (`path-index.mjs:176-188`) — holes need no special
@@ -60,11 +63,13 @@ final class PolygonLayer(
     (x0, y0, x1, y1)
   }
 
+  /** Packed R-tree over the ring boxes. No probe uses it; the tests'
+   * reference PIP searches it independently of [[grid]]. */
   @transient lazy val tree: StrTree = StrTree.build(ringBoxes)
 
-  /** Uniform-grid PIP accelerator — the hot-path candidate index (probes the
-   * R-tree replaced per guide §1.2 step 2; see [[GridPipIndex]] for the
-   * exactness argument). Built lazily once per executor. */
+  /** Uniform-grid PIP index — the candidate-ring lookup of every probe (see
+   * [[GridPipIndex]] for the exactness argument). Built lazily once per
+   * executor. */
   @transient lazy val grid: GridPipIndex = new GridPipIndex(this)
 
   /** Per-ring segment index, built lazily for rings above a size threshold. */
@@ -91,40 +96,13 @@ final class PolygonLayer(
   }
 
   /**
-   * Indexes of all shapes enclosing (x, y); boundary counts as enclosed.
-   * Candidate rings come from the packed R-tree; rings are grouped by shape
-   * and combined even-odd (mirrors `findEnclosingShapes` + `testPointInRings`).
+   * Indexes of all shapes enclosing (x, y), ascending; boundary counts as
+   * enclosed. Candidate rings come from the [[grid]] cell of (x, y) and
+   * combine even-odd per shape (mirrors `findEnclosingShapes` +
+   * `testPointInRings`).
    */
   def findShapes(x: Double, y: Double): Array[Int] =
     grid.findShapeIdxs(x, y)
-
-  /** Tree-path variant of [[findShapes]] — kept as the independent
-   * implementation the grid index is asserted against (IndexSpec). */
-  def findShapesTree(x: Double, y: Double): Array[Int] = {
-    var inShapes: List[Int] = Nil
-    // accumulate parity + boundary per candidate shape
-    val cand = tree.search(x, y, x, y)
-    if (cand.isEmpty) return Array.emptyIntArray
-    java.util.Arrays.sort(cand)
-    var i = 0
-    while (i < cand.length) {
-      val shape = ringShape(cand(i))
-      var isIn = false
-      var isOn = false
-      var j = i
-      while (j < cand.length && ringShape(cand(j)) == shape) {
-        pointInRing(x, y, cand(j)) match {
-          case Geom.ON => isOn = true
-          case Geom.IN => isIn = !isIn
-          case _       =>
-        }
-        j += 1
-      }
-      if (isOn || isIn) inShapes = shape :: inShapes
-      i = j
-    }
-    inShapes.reverse.toArray
-  }
 
   /** First (lowest shape index) enclosing shape, or -1. */
   def findFirstShape(x: Double, y: Double): Int = {
@@ -133,107 +111,23 @@ final class PolygonLayer(
   }
 
   // ------------------------------------------------------------ hot path ----
-  // Allocation-free probes for codegen expressions: per-thread scratch arrays,
-  // no boxing, no builders. These are the per-row entry points of the
-  // broadcast spatial join at 10^8+ rows.
+  // Per-row entry points of the broadcast spatial join (codegen expressions):
+  // a grid cell lookup, exact segment tests only in boundary-crossed cells.
 
-  @transient private lazy val candScratch: ThreadLocal[Array[Int]] =
-    ThreadLocal.withInitial(() => new Array[Int](256))
-  @transient private lazy val stackScratch: ThreadLocal[Array[Int]] =
-    ThreadLocal.withInitial(() => new Array[Int](128))
-  @transient private lazy val keysScratch: ThreadLocal[Array[Long]] =
-    ThreadLocal.withInitial(() => new Array[Long](64))
-  private val emptyKeys = Array.emptyLongArray
-
-  /** Candidate rings (sorted ascending) into thread-local scratch; returns count. */
-  private def candidates(x: Double, y: Double): (Array[Int], Int) = {
-    var cand = candScratch.get()
-    var stack = stackScratch.get()
-    var n = tree.searchInto(x, y, x, y, cand, stack)
-    while (n < 0) { // grow and retry (rare)
-      cand = new Array[Int](cand.length * 2)
-      stack = new Array[Int](stack.length * 2)
-      candScratch.set(cand)
-      stackScratch.set(stack)
-      n = tree.searchInto(x, y, x, y, cand, stack)
-    }
-    java.util.Arrays.sort(cand, 0, n)
-    (cand, n)
-  }
-
-  /** Key of the first enclosing shape, or -1. Zero allocation on the fast
-   * path (grid cell lookup; segment tests only in boundary-crossed cells).
-   * The [[PolygonLayer.useGrid]] switch keeps the tree path reachable for
-   * in-session A/B timing (one predictable branch per probe). */
-  def findFirstKey(x: Double, y: Double): Long =
-    if (PolygonLayer.useGrid) grid.findFirstKey(x, y) else findFirstKeyTree(x, y)
+  /** Key of the first enclosing shape, or -1. Zero allocation. */
+  def findFirstKey(x: Double, y: Double): Long = grid.findFirstKey(x, y)
 
   /** First enclosing shape index, or -1, when it is provably the same at
    * every point of the box; -2 when not proven (see
-   * [[GridPipIndex.uniformFirstShape]]). Always -2 on the tree path, so
-   * that path keeps probing every point. */
+   * [[GridPipIndex.uniformFirstShape]]). */
   def uniformFirstShape(bx0: Double, by0: Double, bx1: Double, by1: Double): Int =
-    if (PolygonLayer.useGrid) grid.uniformFirstShape(bx0, by0, bx1, by1) else -2
-
-  /** Tree-path variant of [[findFirstKey]] (verification reference). */
-  def findFirstKeyTree(x: Double, y: Double): Long = {
-    val (cand, n) = candidates(x, y)
-    var i = 0
-    while (i < n) {
-      val shape = ringShape(cand(i))
-      var isIn = false
-      var isOn = false
-      var j = i
-      while (j < n && ringShape(cand(j)) == shape) {
-        val r = pointInRing(x, y, cand(j))
-        if (r == Geom.ON) isOn = true
-        else if (r == Geom.IN) isIn = !isIn
-        j += 1
-      }
-      if (isOn || isIn) return shapeKeys(shape)
-      i = j
-    }
-    -1L
-  }
+    grid.uniformFirstShape(bx0, by0, bx1, by1)
 
   /** Keys of all enclosing shapes (ascending shape order). Allocates only the
    * result array (exact-sized; empty result is a shared constant). */
-  def findKeys(x: Double, y: Double): Array[Long] =
-    if (PolygonLayer.useGrid) grid.findKeys(x, y) else findKeysTree(x, y)
+  def findKeys(x: Double, y: Double): Array[Long] = grid.findKeys(x, y)
 
-  /** Tree-path variant of [[findKeys]] (verification reference). */
-  def findKeysTree(x: Double, y: Double): Array[Long] = {
-    val (cand, n) = candidates(x, y)
-    if (n == 0) return emptyKeys
-    var keys = keysScratch.get()
-    var nk = 0
-    var i = 0
-    while (i < n) {
-      val shape = ringShape(cand(i))
-      var isIn = false
-      var isOn = false
-      var j = i
-      while (j < n && ringShape(cand(j)) == shape) {
-        val r = pointInRing(x, y, cand(j))
-        if (r == Geom.ON) isOn = true
-        else if (r == Geom.IN) isIn = !isIn
-        j += 1
-      }
-      if (isOn || isIn) {
-        if (nk == keys.length) { // grow: >scratch-size overlapping shapes
-          keys = java.util.Arrays.copyOf(keys, keys.length * 2)
-          keysScratch.set(keys)
-        }
-        keys(nk) = shapeKeys(shape)
-        nk += 1
-      }
-      i = j
-    }
-    if (nk == 0) emptyKeys
-    else java.util.Arrays.copyOf(keys, nk)
-  }
-
-  /** Planar signed area of a shape = sum of its rings' signed areas. */
+  /** External key -> index of the first shape carrying it. */
   @transient private lazy val keyToShape: java.util.HashMap[Long, Int] = {
     val m = new java.util.HashMap[Long, Int](numShapes * 2)
     var s = 0
@@ -269,6 +163,7 @@ final class PolygonLayer(
     math.sqrt(best)
   }
 
+  /** Planar signed area of a shape = sum of its rings' signed areas. */
   def shapeArea(shape: Int): Double = {
     var sum = 0.0
     var r = 0
@@ -350,11 +245,6 @@ final class RingSegmentIndex(xx: Array[Double], yy: Array[Double], start: Int, n
 }
 
 object PolygonLayer {
-
-  /** Probe-path selector: grid index (default) vs packed-R-tree reference
-   * path. Both are exact and asserted equal (IndexSpec); the switch exists
-   * so measurements can A/B the two inside one session. */
-  @volatile var useGrid: Boolean = true
 
   /** Build from shapes: each shape = (key, rings), ring = flat Array of (x, y) pairs, closed. */
   def fromShapes(shapes: Seq[(Long, Seq[Array[Double]])]): PolygonLayer = {

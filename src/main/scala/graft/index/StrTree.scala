@@ -25,43 +25,6 @@ final class StrTree private (
     out.result()
   }
 
-  /**
-   * Allocation-free search: writes matching item ids into `out` (from 0),
-   * using `stackScratch` as the traversal stack. Returns the match count, or
-   * -1 if `out` was too small (caller should grow and retry). Both arrays are
-   * caller-owned — pair with ThreadLocal scratch for zero per-row allocation.
-   */
-  def searchInto(minX: Double, minY: Double, maxX: Double, maxY: Double,
-                 out: Array[Int], stackScratch: Array[Int]): Int = {
-    if (numItems == 0) return 0
-    var n = 0
-    var sp = 0
-    var nodeIndex = boxes.length / 4 - 1
-    var continue = true
-    while (continue) {
-      val level = levelOf(nodeIndex)
-      val end = math.min(nodeIndex + nodeSize, levelBounds(level))
-      var pos = nodeIndex
-      while (pos < end) {
-        val b = pos * 4
-        if (!(maxX < boxes(b) || maxY < boxes(b + 1) || minX > boxes(b + 2) || minY > boxes(b + 3))) {
-          if (nodeIndex < levelBounds(0)) {
-            if (n >= out.length) return -1
-            out(n) = indices(pos)
-            n += 1
-          } else {
-            if (sp >= stackScratch.length) return -1
-            stackScratch(sp) = indices(pos)
-            sp += 1
-          }
-        }
-        pos += 1
-      }
-      if (sp > 0) { sp -= 1; nodeIndex = stackScratch(sp) } else continue = false
-    }
-    n
-  }
-
   /** Visit item ids of rectangles intersecting the query box. */
   def forEach(minX: Double, minY: Double, maxX: Double, maxY: Double)(f: Int => Unit): Unit = {
     if (numItems == 0) return

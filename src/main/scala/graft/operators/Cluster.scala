@@ -168,7 +168,7 @@ object Cluster {
                    maxInput: Int = 4096): DataFrame = {
     import spark.implicits._
     def cellAgg(r: Int): DataFrame = points
-      .select(GraftCell.cellIdCol(col(xCol), col(yCol), r).as("cell"),
+      .select(graft.functions.SpatialExprs.cellIdCol(col(xCol), col(yCol), r).as("cell"),
         col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
       .groupBy("cell")
       .agg(sum("x").as("sx"), sum("y").as("sy"), count(lit(1)).cast("double").as("w"))
@@ -180,7 +180,7 @@ object Cluster {
     val est = points
       .select(col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
       .select(resCandidates.map(r =>
-        approx_count_distinct(GraftCell.cellIdCol(col("x"), col("y"), r), 0.02)
+        approx_count_distinct(graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), r), 0.02)
           .as(s"r$r")): _*)
       .head()
     var res = resCandidates
@@ -199,7 +199,7 @@ object Cluster {
     val bc = spark.sparkContext.broadcast(asg)
     val clusterOf = udf((cell: Long) => bc.value.getOrElse(cell, -1))
     points.withColumn("cluster_id",
-      clusterOf(GraftCell.cellIdCol(col(xCol), col(yCol), res)))
+      clusterOf(graft.functions.SpatialExprs.cellIdCol(col(xCol), col(yCol), res)))
   }
 
   private def assignment(members: mutable.ArrayBuffer[mutable.ArrayBuffer[Long]],

@@ -42,7 +42,7 @@ import graft.index.PointTree
  *    away, since the query point lies inside its own cell). Points that fail
  *    the bound are retried with a doubled R — a driver-side loop of a few
  *    Spark jobs, each a plain equi-join on cellId. A point still pending
- *    after `maxRounds` (the bbox/count resolution misjudges strongly
+ *    after `MaxRounds` (the bbox/count resolution misjudges strongly
  *    non-uniform inputs, e.g. collinear points) gets its best-known
  *    neighbours from the widest ring searched, which may be fewer or farther
  *    than the law's;
@@ -57,13 +57,11 @@ object Knn {
   /**
    * For each row of `points` (id, x, y), the k nearest OTHER rows.
    * Output: (id, rank, neighbor_id, dist2). Rows with a null id, x or y are
-   * dropped first. `res`, `maxRounds` and `bruteForceBudget` tune the
-   * shuffle path only (taken when n * 24 bytes exceeds
-   * `spark.sql.autoBroadcastJoinThreshold`).
+   * dropped first. `bruteForceBudget` tunes the shuffle path only (taken
+   * when n * 24 bytes exceeds `spark.sql.autoBroadcastJoinThreshold`).
    */
   def knnJoin(spark: SparkSession, points: DataFrame, idCol: String, xCol: String, yCol: String,
-              k: Int, res: Int = -1, maxRounds: Int = 8,
-              bruteForceBudget: Long = 50000000L): DataFrame = {
+              k: Int, bruteForceBudget: Long = 50000000L): DataFrame = {
     val base = points.select(col(idCol).cast("long").as("id"),
       col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
       .filter(col("id").isNotNull && col("x").isNotNull && col("y").isNotNull)
@@ -71,27 +69,30 @@ object Knn {
       min(col("y")), max(col("y"))).head()
     if (stats.getLong(0) * PointTree.BytesPerPoint <= GraftBridge.autoBroadcastThreshold(spark))
       broadcastKnn(spark, base, k)
-    else shuffleKnn(base, stats, k, res, maxRounds, bruteForceBudget)
+    else shuffleKnn(base, stats, k, bruteForceBudget)
   }
+
+  /** Ring-expansion rounds of the shuffle path before its stragglers take
+   * their best-known neighbours. */
+  private final val MaxRounds = 8
 
   /** The shuffle path: ring rounds, then the brute-force tail. `stats` is
    * (count, min x, max x, min y, max y) of `base`. */
-  private def shuffleKnn(base: DataFrame, stats: Row, k: Int, res: Int, maxRounds: Int,
+  private def shuffleKnn(base: DataFrame, stats: Row, k: Int,
                          bruteForceBudget: Long): DataFrame = {
     val nPoints = math.max(1L, stats.getLong(0))
-    // auto resolution: aim for ~k+1 points per cell so the first 3x3 disk
-    // usually satisfies the k-th-distance bound in one round
-    val useRes = if (res >= 0) res else {
+    // cell resolution from the bbox and count: aim for ~2(k+1) points per
+    // cell, so the 3x3 disk satisfies the k-th-distance bound for ~all points
+    // in ROUND 1 — every extra round costs a full job + fresh codegen, which
+    // dominates at moderate n, while 2x more candidates per point is noise
+    // in the ranked shuffle
+    val useRes = {
       val w = math.max(1e-9, stats.getDouble(2) - stats.getDouble(1))
       val h = math.max(1e-9, stats.getDouble(4) - stats.getDouble(3))
-      // aim for ~2(k+1) points per cell: the 3x3 disk then satisfies the
-      // k-th-distance bound for ~all points in ROUND 1 — every extra round
-      // costs a full job + fresh codegen, which dominates at moderate n,
-      // while 2x more candidates per point is noise in the ranked shuffle
       val csTarget = math.sqrt(w * h / nPoints.toDouble * 2.0 * (k + 1).toDouble)
       math.min(26, math.max(0, math.floor(math.log(360.0 / csTarget) / math.log(2.0)).toInt))
     }
-    val pts = base.withColumn("cell", GraftCell.cellIdCol(col("x"), col("y"), useRes))
+    val pts = base.withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), useRes))
       .cache()
 
     val cs = CellIndex.cellSize(useRes)
@@ -104,7 +105,7 @@ object Knn {
     val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var r = 1
     var round = 0
-    while (round < maxRounds && pendingCount > 0) {
+    while (round < MaxRounds && pendingCount > 0) {
       // brute-force cutover for the tail (r6): once the pending set is small
       // enough that pending x n candidate pairs are trivial, one exact
       // window job replaces the remaining ring-expansion rounds (each a
@@ -178,7 +179,7 @@ object Knn {
       live += ranked
       pendingCount -= doneCount
       round += 1
-      if (pendingCount > 0 && round < maxRounds) {
+      if (pendingCount > 0 && round < MaxRounds) {
         val nextLazy = pending.join(done.select("id"), Seq("id"), "left_anti")
         if (pendingCount * nPoints <= bruteForceBudget) {
           // next iteration cuts over to the single brute-force job, which
@@ -199,7 +200,7 @@ object Knn {
       }
     }
     // stragglers (k >= n-1, or degenerate distributions that exhaust
-    // maxRounds): emit their best-known neighbors from the widest ring
+    // MaxRounds): emit their best-known neighbors from the widest ring
     // searched instead of dropping them
     if (lastRanked != null && pendingCount > 0)
       results = if (results == null) lastRanked else results.unionByName(lastRanked)
@@ -242,7 +243,7 @@ object Knn {
     while (CellIndex.cellSize(res + 1) >= radius && res < 30) res += 1
     val pts = points.select(col(idCol).cast("long").as("id"),
       col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-      .withColumn("cell", GraftCell.cellIdCol(col("x"), col("y"), res))
+      .withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), res))
     // forward-neighbor expansion (cell + E/NE/N/NW) instead of the full 3x3
     // disk (r6, guide §2.3 — shuffle/join fewer rows): every unordered pair
     // of adjacent cells appears in exactly ONE side's forward set, so each

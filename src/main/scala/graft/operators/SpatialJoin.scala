@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cell.CellIndex
@@ -17,9 +17,10 @@ import graft.index.PolygonLayer
  * Two physical strategies, chosen by layer size (mirrors Catalyst's
  * broadcast-vs-shuffle join choice):
  *
- *  1. [[broadcastJoin]] — the polygon layer (SoA + packed STR tree + per-ring
- *     segment indexes) is broadcast once; each point row probes the index
- *     locally. Zero shuffle of the (huge) point table; `bytes` and other wide
+ *  1. [[broadcastJoin]] — the polygon layer's SoA arrays are broadcast
+ *     once (through [[graft.index.LayerBroadcasts]]); each executor builds
+ *     the grid PIP index (and per-ring segment indexes) from them lazily,
+ *     and each point row probes it locally. Zero shuffle of the (huge) point table; `bytes` and other wide
  *     columns are never touched (Parquet column pruning applies upstream).
  *
  *  2. [[cellJoin]] — for polygon layers too big to broadcast: polygons are
@@ -115,7 +116,7 @@ object SpatialJoin {
 
     val polySalted = polyCells.withColumn("_salt", explode(saltsUdf(col("_cell"))))
     val ptCells = points
-      .withColumn("_cell", GraftCell.cellIdCol(col(xCol), col(yCol), res))
+      .withColumn("_cell", graft.functions.SpatialExprs.cellIdCol(col(xCol), col(yCol), res))
       .withColumn("_salt", pointSaltUdf(col("_cell"), col(xCol), col(yCol)))
 
     // per-candidate ring state: 0 = out, 1 = in, 2 = on-boundary — a codegen
@@ -139,10 +140,4 @@ object SpatialJoin {
       .withColumnRenamed("poly_key", outCol)
       .drop("_on", "_ins")
   }
-}
-
-/** Cell helper shared by operators. */
-object GraftCell {
-  def cellIdCol(x: Column, y: Column, res: Int): Column =
-    graft.functions.SpatialExprs.cellIdCol(x, y, res)
 }

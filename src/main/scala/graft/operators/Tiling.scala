@@ -80,7 +80,7 @@ object Tiling {
       .withColumn("tile_y", (col("_t") / tileGrid).cast("int"))
       .withColumn("cx", centre(col("_x0"), col("tile_x")))
       .withColumn("cy", centre(col("_y0"), col("tile_y")))
-      .withColumn("cell_id", GraftCell.cellIdCol(col("cx"), col("cy"), res))
+      .withColumn("cell_id", SpatialExprs.cellIdCol(col("cx"), col("cy"), res))
     val polyKey = bc match {
       case Some(b) => coalesce(col("_box_key"), SpatialExprs.pipFirstKey(col("cx"), col("cy"), b))
       case None => lit(-1L)

@@ -10,7 +10,7 @@ import graft.operators.SpatialJoin
 /**
  * Streaming spatial ingestion — the continuous counterpart of the headline
  * batch path: a file stream of points flows through the SAME broadcast
- * STR-tree + codegen PIP expression (`SpatialJoin.broadcastJoin` is
+ * polygon layer + codegen PIP expression (`SpatialJoin.broadcastJoin` is
  * stateless, so it applies unchanged to a streaming frame), then either
  * lands in an exactly-once parquet sink or folds into watermarked
  * per-polygon window counts.

@@ -129,9 +129,9 @@ class IndexSpec extends AnyFunSuite {
       for (_ <- 0 until 2000) {
         val x = rng.nextDouble() * 110 - 5 // includes outside-extent probes
         val y = rng.nextDouble() * 110 - 5
-        assert(layer.findKeys(x, y).toSeq == layer.findKeysTree(x, y).toSeq, s"keys ($x,$y)")
-        assert(layer.findFirstKey(x, y) == layer.findFirstKeyTree(x, y), s"first ($x,$y)")
-        assert(layer.findShapes(x, y).toSeq == layer.findShapesTree(x, y).toSeq, s"shapes ($x,$y)")
+        assert(layer.findKeys(x, y).toSeq == TreePip.findKeys(layer, x, y).toSeq, s"keys ($x,$y)")
+        assert(layer.findFirstKey(x, y) == TreePip.findFirstKey(layer, x, y), s"first ($x,$y)")
+        assert(layer.findShapes(x, y).toSeq == TreePip.findShapes(layer, x, y).toSeq, s"shapes ($x,$y)")
       }
       // NaN coords: both paths must return "no shapes"
       assert(layer.findKeys(Double.NaN, 5.0).isEmpty)
@@ -144,8 +144,8 @@ class IndexSpec extends AnyFunSuite {
           (layer.xx(i), layer.yy(i)),
           ((layer.xx(i) + layer.xx(i + 1)) / 2, (layer.yy(i) + layer.yy(i + 1)) / 2))
         probes.foreach { case (px, py) =>
-          assert(layer.findKeys(px, py).toSeq == layer.findKeysTree(px, py).toSeq, s"boundary ($px,$py)")
-          assert(layer.findFirstKey(px, py) == layer.findFirstKeyTree(px, py), s"boundary first ($px,$py)")
+          assert(layer.findKeys(px, py).toSeq == TreePip.findKeys(layer, px, py).toSeq, s"boundary ($px,$py)")
+          assert(layer.findFirstKey(px, py) == TreePip.findFirstKey(layer, px, py), s"boundary first ($px,$py)")
         }
         r += 1
       }
@@ -172,8 +172,8 @@ class IndexSpec extends AnyFunSuite {
     for (_ <- 0 until 3000) {
       val x = rng.nextDouble() * 70 - 5
       val y = rng.nextDouble() * 40 - 5
-      assert(layer.findKeys(x, y).toSeq == layer.findKeysTree(x, y).toSeq, s"($x,$y)")
-      assert(layer.findFirstKey(x, y) == layer.findFirstKeyTree(x, y), s"first ($x,$y)")
+      assert(layer.findKeys(x, y).toSeq == TreePip.findKeys(layer, x, y).toSeq, s"($x,$y)")
+      assert(layer.findFirstKey(x, y) == TreePip.findFirstKey(layer, x, y), s"first ($x,$y)")
     }
     // exact boundary/corner/shared-edge probes
     val probes = Seq(
@@ -185,8 +185,8 @@ class IndexSpec extends AnyFunSuite {
       (38.0, 8.0),   // inside the hole (shape 4 must NOT match)
       (0.0, 0.0), (20.0, 10.0), (60.0, 30.0), (15.0, 15.0))
     probes.foreach { case (px, py) =>
-      assert(layer.findKeys(px, py).toSeq == layer.findKeysTree(px, py).toSeq, s"boundary ($px,$py)")
-      assert(layer.findFirstKey(px, py) == layer.findFirstKeyTree(px, py), s"first ($px,$py)")
+      assert(layer.findKeys(px, py).toSeq == TreePip.findKeys(layer, px, py).toSeq, s"boundary ($px,$py)")
+      assert(layer.findFirstKey(px, py) == TreePip.findFirstKey(layer, px, py), s"first ($px,$py)")
     }
     // semantic spot checks (independent of both implementations)
     assert(layer.findKeys(38.0, 8.0).toSeq == Seq.empty) // in the hole, outside 5
@@ -211,7 +211,7 @@ class IndexSpec extends AnyFunSuite {
           proven += 1
           val want = if (u == -1) -1L else layer.shapeKeys(u)
           for (t <- 0 until 16)
-            assert(layer.findFirstKeyTree(c(x0, t % 4), c(y0, t / 4)) == want,
+            assert(TreePip.findFirstKey(layer, c(x0, t % 4), c(y0, t / 4)) == want,
               s"$what ($x,$y) tile $t: proven $want")
         }
       }

@@ -283,13 +283,14 @@ class OperatorSpec extends SparkSuite {
       (0 until 500).map(_ => Array.fill(dims)((rng.nextDouble() * 2 - 1).toFloat)) ++
       Seq(Array.fill(dims)(0.0f),        // all-tie query (every score 0.0)
         cents(2).clone(), cents(9).clone())
+    val centData = HashKernels.asArrayData(cents)
     for (v <- probes) {
       val ad = ArrayData.toArrayData(v)
-      assert(HashKernels.nearestCentroid(ad, cents) == refNearest(v, cents))
-      assert(HashKernels.centroidProbes(ad, cents, 4).toIntArray().toSeq ==
+      assert(HashKernels.nearestCentroid(ad, centData) == refNearest(v, cents))
+      assert(HashKernels.centroidProbes(ad, centData, 4).toIntArray().toSeq ==
         refProbes(v, cents, 4))
-      for (c <- cents)
-        assert(java.lang.Double.doubleToLongBits(HashKernels.cosineVs(ad, c)) ==
+      for ((c, cd) <- cents.zip(centData))
+        assert(java.lang.Double.doubleToLongBits(HashKernels.cosine(ad, cd)) ==
           java.lang.Double.doubleToLongBits(Ann.cosine(v, c)))
     }
   }
@@ -406,7 +407,7 @@ class OperatorSpec extends SparkSuite {
         .withColumn("tile_y", (col("_t") / 4).cast("int"))
         .withColumn("cx", col("_x0") + (col("tile_x") + 0.5) * (side / 4))
         .withColumn("cy", col("_y0") + (col("tile_y") + 0.5) * (side / 4))
-        .withColumn("cell_id", GraftCell.cellIdCol(col("cx"), col("cy"), 9))
+        .withColumn("cell_id", graft.functions.SpatialExprs.cellIdCol(col("cx"), col("cy"), 9))
         .withColumn("poly_key", graft.functions.SpatialExprs.pipFirstKey(col("cx"), col("cy"), bc))
       val cols = Seq("image_id", "tile_x", "tile_y", "cx", "cy", "cell_id", "poly_key")
       def rows(df: org.apache.spark.sql.DataFrame) =
