@@ -1,27 +1,21 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.cell.CellIndex
+import graft.entry.Fixtures.{imageLayer, imagesDf}
+import graft.entry.Registry
 import graft.functions.GraftFunctions._
-import graft.geom.Overlay
-import graft.index.PolygonLayer
 import graft.operators._
-import graft.tables.{Images, Synthetic}
 
 /**
  * Driver contract: one `queries` entry per implemented operator from
- * SURVEY.md §2 (+ the training-pipeline operators), with a DuckDB-runnable
- * `oracleSql` mirror wherever the semantics are ANSI-SQL-expressible.
- *
- * Oracle-parity rules used throughout:
- *  - identical double arithmetic (same op order) on both sides — derived
- *    point coordinates are pure integer ops + one exact int→double cast;
- *  - no order-sensitive floating aggregation in compared outputs (sums only
- *    over integer-valued doubles; ranks instead of raw scores);
- *  - ints cast to BIGINT on both sides; stable ORDER BY on a unique key.
+ * SURVEY.md §2 (+ the training-pipeline operators), each with a
+ * DuckDB-runnable `oracleSql` mirror. The queries are declared in the
+ * family modules of `graft.entry`, each once with its builder and oracle
+ * SQL side by side; the oracle-parity rules are in the `entry.Registry`
+ * header. Both maps are built once per JVM, and building them fails if a
+ * query name is declared twice.
  */
 object SparkEntry {
 
@@ -31,2122 +25,9 @@ object SparkEntry {
    * tables from it by absolute path. */
   final val DataRoot: String = new java.io.File("data").getAbsolutePath
 
-  /** One DataFrame handle per (session, parquet path): repeated query
-   * invocations reuse the resolved relation instead of re-listing the
-   * directory and re-reading the footer schema per call (driver-side
-   * serial work; the same reuse a catalog table gets). This caches the
-   * LOGICAL handle only — every action still scans the parquet files. */
-  private val dfCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private[graft] def readParquetCached(s: SparkSession, path: String): DataFrame = {
-    val hit = dfCache.get((s, path))
-    if (hit != null) hit
-    else if (dfCache.size >= 256) s.read.parquet(path) // unbounded-caller guard
-    else dfCache.computeIfAbsent((s, path), k => k._1.read.parquet(k._2))
-  }
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    readParquetCached(s, s"$dir/$name.parquet")
-
-  /** Derived deterministic point table (id, x, y) from customer keys —
-   * mirrored verbatim in SQL by [[ptsSql]]. */
-  private def points(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "customer").select(
-      col("c_custkey").cast("long").as("id"),
-      derivedX(col("c_custkey")).as("x"),
-      derivedY(col("c_custkey")).as("y"))
-
-  /** Per-shape (key, n_rings, n_verts, bbox ints) of a PolygonLayer — the
-   * observable emitted by the format-reader oracles. */
-  private def layerShapeStats(layer: graft.index.PolygonLayer, scale: Double = 1e6)
-      : Seq[(Long, Long, Long, Long, Long, Long, Long)] =
-    (0 until layer.numShapes).map { sh =>
-      val rings = (0 until layer.numRings).filter(r => layer.ringShape(r) == sh)
-      var nv = 0L
-      var mnx = Double.MaxValue; var mny = Double.MaxValue
-      var mxx = Double.MinValue; var mxy = Double.MinValue
-      rings.foreach { r =>
-        var i = layer.ringStart(r)
-        while (i < layer.ringStart(r + 1)) {
-          mnx = math.min(mnx, layer.xx(i)); mxx = math.max(mxx, layer.xx(i))
-          mny = math.min(mny, layer.yy(i)); mxy = math.max(mxy, layer.yy(i))
-          nv += 1; i += 1
-        }
-      }
-      (layer.shapeKeys(sh), rings.length.toLong, nv,
-        math.floor(mnx * scale).toLong, math.floor(mny * scale).toLong,
-        math.floor(mxx * scale).toLong, math.floor(mxy * scale).toLong)
-    }
-
-  /** Literal TopoJSON doc for q_topojson_read: two unit squares sharing a
-   * vertical edge arc (the right ring references it reversed via ~0),
-   * quantized with a non-identity transform. The same string is embedded in
-   * the oracle SQL and delta-decoded there. */
-  private[graft] val topoFixture: String =
-    """{"type":"Topology","transform":{"scale":[0.01,0.01],"translate":[-5.0,3.0]},""" +
-      """"objects":{"left":{"type":"Polygon","arcs":[[0,1]]},""" +
-      """"right":{"type":"Polygon","arcs":[[2,-1]]}},""" +
-      """"arcs":[[[100,0],[0,100]],[[100,100],[-100,0],[0,-100],[100,0]],""" +
-      """[[100,0],[100,0],[0,100],[-100,0]]]}"""
-
-  /** Closed flat rectangle ring (CCW) — the mosaic-family oracle fixture. */
-  private def oRect(x0: Double, y0: Double, w: Double, h: Double): Array[Double] =
-    Array(x0, y0, x0 + w, y0, x0 + w, y0 + h, x0, y0 + h, x0, y0)
-
-  /** Shoelace area of a flat closed ring column (loop order = Geom kernel). */
-  private lazy val ringAreaUdf = udf { (ring: Seq[Double]) =>
-    val n = ring.length / 2
-    val xs = Array.tabulate(n)(i => ring(i * 2))
-    val ys = Array.tabulate(n)(i => ring(i * 2 + 1))
-    graft.geom.Geom.signedRingArea(xs, ys, 0, n)
-  }
-
-  private val ptsSql: String =
-    s"""pts AS (SELECT c_custkey AS id,
-       |  ${derivedXSql("c_custkey")} AS x,
-       |  ${derivedYSql("c_custkey")} AS y FROM customer)""".stripMargin
-
-  /** Shared 3-rect overlap CTE for the mosaic-family oracles (A 10x10 on
-   * the integer lattice, B 8x8 at +0.5, C 12x12 at +0.25 — dyadic offsets
-   * keep every pairwise and triple overlap width strictly nonzero):
-   * pairwise + triple intersection areas, dyadic-exact in double. */
-  private lazy val mosaicOvSql: String =
-    """gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-      |r AS (SELECT g,
-      |  CAST(g * 3 % 13 AS DOUBLE) AS ax, CAST(g * 5 % 17 AS DOUBLE) AS ay,
-      |  CAST(g * 5 % 13 AS DOUBLE) + 5.0e-1 AS bx, CAST(g * 8 % 17 AS DOUBLE) + 5.0e-1 AS by,
-      |  CAST(g * 7 % 13 AS DOUBLE) + 2.5e-1 AS cx, CAST(g * 11 % 17 AS DOUBLE) + 2.5e-1 AS cy
-      |  FROM gs),
-      |ov AS (SELECT g,
-      |  greatest(least(ax + 10.0, bx + 8.0) - greatest(ax, bx), 0) *
-      |  greatest(least(ay + 10.0, by + 8.0) - greatest(ay, by), 0) AS pab,
-      |  greatest(least(ax + 10.0, cx + 12.0) - greatest(ax, cx), 0) *
-      |  greatest(least(ay + 10.0, cy + 12.0) - greatest(ay, cy), 0) AS pac,
-      |  greatest(least(bx + 8.0, cx + 12.0) - greatest(bx, cx), 0) *
-      |  greatest(least(by + 8.0, cy + 12.0) - greatest(by, cy), 0) AS pbc,
-      |  greatest(least(least(ax + 10.0, bx + 8.0), cx + 12.0)
-      |    - greatest(greatest(ax, bx), cx), 0) *
-      |  greatest(least(least(ay + 10.0, by + 8.0), cy + 12.0)
-      |    - greatest(greatest(ay, by), cy), 0) AS t
-      |  FROM r)""".stripMargin
-
-  /** The fixed 8-shape oracle polygon layer, emitted as SQL VALUES edges.
-   * Coordinates are CAST to DOUBLE (DuckDB parses the literals as DECIMAL,
-   * which would change arithmetic and overflow in multiplications). */
-  private lazy val oracleEdgesSql: String =
-    s"""edges AS (SELECT pk, ring,
-       |  CAST(ex1 AS DOUBLE) AS ex1, CAST(ey1 AS DOUBLE) AS ey1,
-       |  CAST(ex2 AS DOUBLE) AS ex2, CAST(ey2 AS DOUBLE) AS ey2
-       |  FROM (VALUES ${Synthetic.edgesSqlValues(Synthetic.oracleLayer)})
-       |  t(pk, ring, ex1, ey1, ex2, ey2))""".stripMargin
-
-  /** Vertical-ray even-odd crossing count per (point, shape) — the SQL mirror
-   * of the PIP kernel (same arithmetic order as Geom.rayIntersection). */
-  private val pipHitsSql: String =
-    """hits AS (
-      |  SELECT p.id, e.pk,
-      |    SUM(CASE WHEN ((e.ex1 > p.x) <> (e.ex2 > p.x))
-      |          AND e.ey1 + (p.x - e.ex1) * (e.ey2 - e.ey1) / (e.ex2 - e.ex1) > p.y
-      |        THEN 1 ELSE 0 END) AS crossings
-      |  FROM pts p CROSS JOIN edges e
-      |  GROUP BY p.id, e.pk)""".stripMargin
-
-  /** Bigger synthetic layer for the image-side (non-oracle) spatial queries. */
-  private lazy val imageLayer: PolygonLayer = Synthetic.polygonLayer(64, seed = 42L)
-
-  /** Shared SQL prefix re-synthesizing PNG pixels from the generator formula
-   * (SplitMix64 state=seed+k·GAMMA jumps, 32-bit-limb wrap-multiplies):
-   * yields CTEs `img(image_id, w, h, i)` and `px(image_id, w, h, x, y, g)`.
-   * Used by the q_img_ahash and q_img_augment oracles. */
-  private def imgPxPrefix(idLimit: Int): String =
-    s"""img AS (SELECT image_id, w, h, CAST(substr(image_id, 4, 12) AS BIGINT) AS i
-       |  FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')
-       |  WHERE fmt = 'png' AND CAST(substr(image_id, 4, 12) AS BIGINT) < $idLimit),
-       |ns AS (SELECT n FROM generate_series(0, 1088) t(n)),
-       |pxn AS (SELECT image_id, i, w, h, n FROM img JOIN ns ON ns.n < img.w * img.h),
-       |st AS (SELECT image_id, w, h, n,
-       |  CAST((CAST(i AS HUGEINT) + CAST(n + 1 AS HUGEINT) * 11400714819323198485)
-       |    % 18446744073709551616 AS UBIGINT) AS z0 FROM pxn),
-       |x1s AS (SELECT image_id, w, h, n, xor(z0, z0 >> 30) AS a1 FROM st),
-       |l1 AS (SELECT image_id, w, h, n, a1 >> 32 AS ahi, a1 & 4294967295 AS alo FROM x1s),
-       |z1s AS (SELECT image_id, w, h, n,
-       |  CAST((CAST(alo * 484763065 AS HUGEINT) +
-       |    CAST((alo * 3210233709) % 4294967296 + (ahi * 484763065) % 4294967296 AS HUGEINT)
-       |      % 4294967296 * 4294967296) % 18446744073709551616 AS UBIGINT) AS z1
-       |  FROM l1),
-       |x2s AS (SELECT image_id, w, h, n, xor(z1, z1 >> 27) AS a2 FROM z1s),
-       |l2 AS (SELECT image_id, w, h, n, a2 >> 32 AS ahi, a2 & 4294967295 AS alo FROM x2s),
-       |z2s AS (SELECT image_id, w, h, n,
-       |  CAST((CAST(alo * 321982955 AS HUGEINT) +
-       |    CAST((alo * 2496678331) % 4294967296 + (ahi * 321982955) % 4294967296 AS HUGEINT)
-       |      % 4294967296 * 4294967296) % 18446744073709551616 AS UBIGINT) AS z2
-       |  FROM l2),
-       |px AS (SELECT image_id, w, h, n % w AS x, n // w AS y,
-       |  (((n % w) * 160) // w + ((n // w) * 80) // h
-       |    + CAST((xor(z2, z2 >> 31) >> 1) % 4 AS BIGINT)) & 255 AS g
-       |  FROM z2s)""".stripMargin
-
-  // ------------------------------------------------------------- CRS oracle
-  import graft.geom.Crs
-  private val crsAea = Crs.Albers(29.5, 45.5, 23.0, -96.0)
-  private val crsLcc = Crs.Lcc(33.0, 45.0, 39.0, -96.0)
-  private val crsAeqd = Crs.Aeqd(40.0, -100.0)
-
-  /** Exact-round-trip double literal for SQL (E-notation parses as DOUBLE in
-   * DuckDB — plain decimals parse as DECIMAL and cast off by 1 ulp). */
-  private def dl(v: Double): String = "%.17e".format(v)
-
-  /** The q_cahill mirror (verified cell-exact against the engine during
-   * authoring): the ENTIRE Cahill-Keyes construction re-derived in SQL —
-   * master-layout constants (M/G/N/A/B/D/E/F/T via tan-slope line
-   * intersections, the parallel-73/75 lengths, the torrid circular arc's
-   * center/radius from the m=29 probe), then per point: ll2mp octant
-   * routing, the 12-zone dispatch with its joint/segment interpolations and
-   * circle-line l15 split, and the rot60/rot120 octant placement. All
-   * distances are sqrt-of-squares on both sides (the kernel avoids hypot for
-   * exactly this mirror). Output floor-scaled at 1e2 to absorb the <=1ulp
-   * JVM-vs-libm transcendental drift. */
-  private lazy val cahillSql: String = {
-    val DR = "(pi() / 180.0)"
-    def dist(ax: String, ay: String, bx: String, by: String): String =
-      s"sqrt((($ax) - ($bx)) * (($ax) - ($bx)) + (($ay) - ($by)) * (($ay) - ($by)))"
-    def interpX(l: String, total: String, sx: String, sy: String, ex: String, ey: String): String =
-      s"(($sx) + (($ex) - ($sx)) * ($l) / ($total))"
-    def interpY(l: String, total: String, sx: String, sy: String, ex: String, ey: String): String =
-      s"(($sy) + (($ey) - ($sy)) * ($l) / ($total))"
-    def jeX(m: String): String =
-      s"CASE WHEN dmeq * ($m) <= lgf THEN mg " +
-        s"ELSE ${interpX(s"dmeq * ($m) - lgf", "lab", "mg", "fy", "ex", "ey")} END"
-    def jeY(m: String): String =
-      s"CASE WHEN dmeq * ($m) <= lgf THEN dmeq * ($m) " +
-        s"ELSE ${interpY(s"dmeq * ($m) - lgf", "lab", "mg", "fy", "ex", "ey")} END"
-    def jtX(jex: String, jey: String, m: String): String = {
-      val m1 = s"tan((2 * ($m) / 3) * $DR)"
-      val m2 = s"tan((($m) / 3) * $DR)"
-      s"(($m1) * 0.0 - ($m2) * ($jex) - 0.0 + ($jey)) / (($m1) - ($m2))"
-    }
-    def jtY(jtx: String, m: String): String =
-      s"tan((2 * ($m) / 3) * $DR) * (($jtx) - 0.0) + 0.0"
-    def jfX(m: String): String = {
-      val m1 = s"tan(($m) * $DR)"
-      val m2 = s"tan((2 * ($m) / 3) * $DR)"
-      s"CASE WHEN ($m) = 0 THEN ma + lab " +
-        s"ELSE (($m1) * ma - ($m2) * 0.0 - 0.0 + 0.0) / (($m1) - ($m2)) END"
-    }
-    def jfY(jfx: String, m: String): String =
-      s"CASE WHEN ($m) = 0 THEN 0.0 ELSE tan(($m) * $DR) * (($jfx) - ma) + 0.0 END"
-    val p75x45 = s"ma + ap75 * cos(45 * $DR)"
-    val p75y45 = s"0.0 + ap75 * sin(45 * $DR)"
-    val lF75H = dist("bx", "by", p75x45, p75y45)
-    val lFH = dist("tx", "ty", "bx", "by")
-    val lH = s"(75 - p) * ($lF75H + $lFH) / 2"
-    val lF75J = dist("jfx", "jfy", "p75x", "p75y")
-    val lJ = s"(75 - p) * ($lF75J - lfp) / 2"
-    val lI = "p * (lt + lm + lfp) / 73"
-    val lK = "p * l15 / 15"
-    val lL = "l15 + (p - 15) * (lt + lm + lfp - l15) / 58"
-    s"""WITH $ptsSql,
-       |ck0 AS (SELECT
-       |  CAST(10000.0 AS DOUBLE) AS mg,
-       |  ${dl(0.094)} * 10000.0 AS ma,
-       |  10000.0 / 100 AS p0to73,
-       |  sqrt(3.0) AS k3,
-       |  sqrt(3.0) / 2 AS sin60,
-       |  CAST(0.5 AS DOUBLE) AS cos60,
-       |  10000.0 * tan(30 * $DR) AS ny
-       |),
-       |ck1 AS (SELECT *,
-       |  (mg - ma - p0to73 * 73) / 17 AS p73to90,
-       |  (tan(30 * $DR) * 0.0 - tan(45 * $DR) * ma - 0.0 + 0.0) / (tan(30 * $DR) - tan(45 * $DR)) AS bx
-       |  FROM ck0),
-       |ck2 AS (SELECT *,
-       |  tan(30 * $DR) * (bx - 0.0) + 0.0 AS by,
-       |  15 * p73to90 AS ap75,
-       |  mg - ma - p0to73 * 73 AS ap73
-       |  FROM ck1),
-       |ck3 AS (SELECT *,
-       |  ${dist("ma", "0.0", "bx", "by")} AS lab,
-       |  ${dist("0.0", "0.0", "bx", "by")} AS lmb,
-       |  ${dist("0.0", "0.0", "mg", "ny")} AS lmn,
-       |  ${dist("mg", "ny", "mg", "0.0")} AS lng
-       |  FROM ck2),
-       |ck4 AS (SELECT *,
-       |  mg + (0.0 - mg) * lmb / lmn AS dx,
-       |  ny + (0.0 - ny) * lmb / lmn AS dy,
-       |  lng - lmb AS fy,
-       |  mg - ma * sin(30 * $DR) AS ex,
-       |  ny - ma * cos(30 * $DR) AS ey,
-       |  ma + ap73 * cos(30 * $DR) AS ux,
-       |  0.0 + ap73 * sin(30 * $DR) AS uy
-       |  FROM ck3),
-       |ck5 AS (SELECT *,
-       |  ${dist("mg", "0.0", "mg", "fy")} AS lgf,
-       |  (tan(-60 * $DR) * ux - tan(30 * $DR) * 0.0 - uy + 0.0) / (tan(-60 * $DR) - tan(30 * $DR)) AS tx
-       |  FROM ck4),
-       |ck6 AS (SELECT *,
-       |  tan(-60 * $DR) * (tx - ux) + uy AS ty,
-       |  (lgf + lab) / 45 AS dmeq
-       |  FROM ck5),
-       |c29a AS (SELECT *,
-       |  ${jeX("29")} AS je29x, ${jeY("29")} AS je29y
-       |  FROM ck6),
-       |c29b AS (SELECT *, ${jtX("je29x", "je29y", "29")} AS jt29x FROM c29a),
-       |c29c AS (SELECT *, ${jtY("jt29x", "29")} AS jt29y, ${jfX("29")} AS jf29x FROM c29b),
-       |c29d AS (SELECT *, ${jfY("jf29x", "29")} AS jf29y,
-       |  ma + ap73 * cos(29 * $DR) AS p73_29x,
-       |  0.0 + ap73 * sin(29 * $DR) AS p73_29y
-       |  FROM c29c),
-       |c29e AS (SELECT *,
-       |  ${dist("je29x", "je29y", "jt29x", "jt29y")} AS lt29,
-       |  ${dist("jt29x", "jt29y", "jf29x", "jf29y")} AS lm29,
-       |  ${dist("jf29x", "jf29y", "p73_29x", "p73_29y")} AS lf29
-       |  FROM c29d),
-       |c29f AS (SELECT *,
-       |  15 * (lt29 + lm29 + lf29) / 73 - lt29 AS l29
-       |  FROM c29e),
-       |c29g AS (SELECT *,
-       |  ${interpX("l29", "lm29", "jt29x", "jt29y", "jf29x", "jf29y")} AS vx,
-       |  ${interpY("l29", "lm29", "jt29x", "jt29y", "jf29x", "jf29y")} AS vy
-       |  FROM c29f),
-       |c29h AS (SELECT *,
-       |  (vx * vx + vy * vy - dx * dx - dy * dy)
-       |    / (2 * (k3 * vx + vy - k3 * dx - dy)) AS ccy
-       |  FROM c29g),
-       |ckc AS (SELECT *, k3 * ccy AS ccx,
-       |  ${dist("k3 * ccy", "ccy", "dx", "dy")} AS crad
-       |  FROM c29h),
-       |p0 AS (SELECT id, x * 3.6 - 180.0 AS lon, y * 1.7 - 85.0 AS lat FROM pts),
-       |p1 AS (SELECT id, lon, lat,
-       |  CAST(floor((lon + 180) / 90 + 1) AS INT) AS oct0,
-       |  (lon + 720) % 90 - 45 AS mer0
-       |  FROM p0),
-       |p2 AS (SELECT id, lat,
-       |  CASE WHEN mer0 < 0 THEN -1.0 WHEN mer0 > 0 THEN 1.0 ELSE 0.0 END AS side,
-       |  abs(mer0) AS m,
-       |  abs(lat) AS p,
-       |  CASE WHEN lat < 0 THEN
-       |    CASE (CASE WHEN oct0 = 5 THEN 1 ELSE oct0 END)
-       |      WHEN 1 THEN 6 WHEN 2 THEN 7 WHEN 3 THEN 8 WHEN 4 THEN 5 ELSE 0 END
-       |  ELSE (CASE WHEN oct0 = 5 THEN 1 ELSE oct0 END) END AS oct
-       |  FROM p1),
-       |p3 AS (SELECT ckc.*, p2.* FROM p2, ckc),
-       |p4 AS (SELECT *, ${jeX("m")} AS jex, ${jeY("m")} AS jey FROM p3),
-       |p5 AS (SELECT *, ${jtX("jex", "jey", "m")} AS jtx FROM p4),
-       |p6 AS (SELECT *, ${jtY("jtx", "m")} AS jty, ${jfX("m")} AS jfx FROM p5),
-       |p7 AS (SELECT *, ${jfY("jfx", "m")} AS jfy FROM p6),
-       |p8 AS (SELECT *,
-       |  ${dist("jex", "jey", "jtx", "jty")} AS lt,
-       |  ${dist("jtx", "jty", "jfx", "jfy")} AS lm
-       |  FROM p7),
-       |p9 AS (SELECT *,
-       |  CASE WHEN m <= 30 THEN ma + ap73 * cos(m * $DR)
-       |    ELSE (tan(-60 * $DR) * tx - tan(m * $DR) * jfx - ty + jfy)
-       |         / (tan(-60 * $DR) - tan(m * $DR)) END AS p73x0
-       |  FROM p8),
-       |p10 AS (SELECT *,
-       |  CASE WHEN m <= 30 THEN 0.0 + ap73 * sin(m * $DR)
-       |    ELSE tan(-60 * $DR) * (p73x0 - tx) + ty END AS p73y0,
-       |  (tan(-60 * $DR) * tx - tan((2 * m / 3) * $DR) * jfx - ty + jfy)
-       |    / (tan(-60 * $DR) - tan((2 * m / 3) * $DR)) AS altx
-       |  FROM p9),
-       |p11 AS (SELECT *,
-       |  tan(-60 * $DR) * (altx - tx) + ty AS alty
-       |  FROM p10),
-       |p12 AS (SELECT *,
-       |  CASE WHEN m > 44 AND m > 30 AND altx > p73x0 THEN altx ELSE p73x0 END AS p73x,
-       |  CASE WHEN m > 44 AND m > 30 AND altx > p73x0 THEN alty ELSE p73y0 END AS p73y,
-       |  CASE WHEN m > 44 AND m > 30 AND altx > p73x0
-       |    THEN -${dist("jfx", "jfy", "altx", "alty")}
-       |    WHEN m <= 30 THEN ${dist("jfx", "jfy", s"ma + ap73 * cos(m * $DR)", s"0.0 + ap73 * sin(m * $DR)")}
-       |    ELSE ${dist("jfx", "jfy", "p73x0", "p73y0")} END AS lfp,
-       |  ma + ap75 * cos(m * $DR) AS p75x,
-       |  0.0 + ap75 * sin(m * $DR) AS p75y
-       |  FROM p11),
-       |p13 AS (SELECT *,
-       |  (jfx - jtx) * (jfx - jtx) + (jfy - jty) * (jfy - jty) AS cl_a,
-       |  2 * ((jfx - jtx) * (jtx - ccx) + (jfy - jty) * (jty - ccy)) AS cl_b,
-       |  (jtx - ccx) * (jtx - ccx) + (jty - ccy) * (jty - ccy) - crad * crad AS cl_c,
-       |  (jtx - jex) * (jtx - jex) + (jty - jey) * (jty - jey) AS ce_a,
-       |  2 * ((jtx - jex) * (jex - ccx) + (jty - jey) * (jey - ccy)) AS ce_b,
-       |  (jex - ccx) * (jex - ccx) + (jey - ccy) * (jey - ccy) - crad * crad AS ce_c
-       |  FROM p12),
-       |p14 AS (SELECT *,
-       |  cl_b * cl_b - 4 * cl_a * cl_c AS cl_d,
-       |  ce_b * ce_b - 4 * ce_a * ce_c AS ce_d
-       |  FROM p13),
-       |p15 AS (SELECT *,
-       |  CASE WHEN cl_a <> 0 AND cl_d >= 0 THEN
-       |    CASE WHEN (-cl_b + sqrt(cl_d)) / (2 * cl_a) BETWEEN 0 AND 1 THEN (-cl_b + sqrt(cl_d)) / (2 * cl_a)
-       |         WHEN (-cl_b - sqrt(cl_d)) / (2 * cl_a) BETWEEN 0 AND 1 THEN (-cl_b - sqrt(cl_d)) / (2 * cl_a)
-       |         ELSE CAST('nan' AS DOUBLE) END
-       |  ELSE CAST('nan' AS DOUBLE) END AS cl_u,
-       |  CASE WHEN ce_a <> 0 AND ce_d >= 0 THEN
-       |    CASE WHEN (-ce_b + sqrt(ce_d)) / (2 * ce_a) BETWEEN 0 AND 1 THEN (-ce_b + sqrt(ce_d)) / (2 * ce_a)
-       |         WHEN (-ce_b - sqrt(ce_d)) / (2 * ce_a) BETWEEN 0 AND 1 THEN (-ce_b - sqrt(ce_d)) / (2 * ce_a)
-       |         ELSE CAST('nan' AS DOUBLE) END
-       |  ELSE CAST('nan' AS DOUBLE) END AS ce_u
-       |  FROM p14),
-       |p16 AS (SELECT *,
-       |  CASE WHEN NOT isnan(cl_u)
-       |    THEN lt + ${dist("jtx", "jty", "jtx + cl_u * (jfx - jtx)", "jty + cl_u * (jfy - jty)")}
-       |    ELSE lt - ${dist("jtx", "jty", "jex + ce_u * (jtx - jex)", "jey + ce_u * (jty - jey)")} END AS l15
-       |  FROM p15),
-       |pz AS (SELECT *,
-       |  CASE
-       |    WHEN m = 0 AND p >= 75 THEN ma + (90 - p) * 104
-       |    WHEN m = 0 THEN mg - p * 100
-       |    WHEN p >= 75 THEN ma + (104 * (90 - p)) * cos(m * $DR)
-       |    WHEN p = 0 THEN jex
-       |    WHEN p >= 73 AND m <= 30 THEN ma + (1560 + (75 - p) * 100) * cos(m * $DR)
-       |    WHEN m = 45 AND p <= 15 THEN ${interpX("p", "15", "ex", "ey", "dx", "dy")}
-       |    WHEN m = 45 AND p <= 73 THEN ${interpX("p - 15", "58", "dx", "dy", "tx", "ty")}
-       |    WHEN m = 45 THEN
-       |      CASE WHEN $lH <= $lF75H
-       |        THEN ${interpX(lH, lF75H, p75x45, p75y45, "bx", "by")}
-       |        ELSE ${interpX(s"$lH - $lF75H", lFH, "bx", "by", "p73x", "p73y")} END
-       |    WHEN m <= 29 THEN
-       |      CASE WHEN $lI <= lt
-       |        THEN ${interpX(lI, "lt", "jex", "jey", "jtx", "jty")}
-       |      WHEN $lI <= lt + lm
-       |        THEN ${interpX(s"$lI - lt", "lm", "jtx", "jty", "jfx", "jfy")}
-       |      ELSE ${interpX(s"$lI - lt - lm", "lfp", "jfx", "jfy", "p73x", "p73y")} END
-       |    WHEN p >= 73 THEN
-       |      CASE WHEN $lJ <= $lF75J
-       |        THEN ${interpX(lJ, lF75J, "p75x", "p75y", "jfx", "jfy")}
-       |        ELSE ${interpX(s"$lJ - $lF75J", "-lfp", "jfx", "jfy", "p73x", "p73y")} END
-       |    WHEN p <= 15 THEN
-       |      CASE WHEN $lK <= lt
-       |        THEN ${interpX(lK, "lt", "jex", "jey", "jtx", "jty")}
-       |        ELSE ${interpX(s"$lK - lt", "lm", "jtx", "jty", "jfx", "jfy")} END
-       |    ELSE
-       |      CASE WHEN $lL <= lt
-       |        THEN ${interpX(lL, "lt", "jex", "jey", "jfx", "jfy")}
-       |      WHEN $lL <= lt + lm
-       |        THEN ${interpX(s"$lL - lt", "lm", "jtx", "jty", "jfx", "jfy")}
-       |      ELSE ${interpX(s"$lL - lt - lm", "lfp", "jfx", "jfy", "p73x", "p73y")} END
-       |  END AS zx,
-       |  CASE
-       |    WHEN m = 0 AND p >= 75 THEN 0.0
-       |    WHEN m = 0 THEN 0.0
-       |    WHEN p >= 75 THEN 0.0 + (104 * (90 - p)) * sin(m * $DR)
-       |    WHEN p = 0 THEN jey
-       |    WHEN p >= 73 AND m <= 30 THEN 0.0 + (1560 + (75 - p) * 100) * sin(m * $DR)
-       |    WHEN m = 45 AND p <= 15 THEN ${interpY("p", "15", "ex", "ey", "dx", "dy")}
-       |    WHEN m = 45 AND p <= 73 THEN ${interpY("p - 15", "58", "dx", "dy", "tx", "ty")}
-       |    WHEN m = 45 THEN
-       |      CASE WHEN $lH <= $lF75H
-       |        THEN ${interpY(lH, lF75H, p75x45, p75y45, "bx", "by")}
-       |        ELSE ${interpY(s"$lH - $lF75H", lFH, "bx", "by", "p73x", "p73y")} END
-       |    WHEN m <= 29 THEN
-       |      CASE WHEN $lI <= lt
-       |        THEN ${interpY(lI, "lt", "jex", "jey", "jtx", "jty")}
-       |      WHEN $lI <= lt + lm
-       |        THEN ${interpY(s"$lI - lt", "lm", "jtx", "jty", "jfx", "jfy")}
-       |      ELSE ${interpY(s"$lI - lt - lm", "lfp", "jfx", "jfy", "p73x", "p73y")} END
-       |    WHEN p >= 73 THEN
-       |      CASE WHEN $lJ <= $lF75J
-       |        THEN ${interpY(lJ, lF75J, "p75x", "p75y", "jfx", "jfy")}
-       |        ELSE ${interpY(s"$lJ - $lF75J", "-lfp", "jfx", "jfy", "p73x", "p73y")} END
-       |    WHEN p <= 15 THEN
-       |      CASE WHEN $lK <= lt
-       |        THEN ${interpY(lK, "lt", "jex", "jey", "jtx", "jty")}
-       |        ELSE ${interpY(s"$lK - lt", "lm", "jtx", "jty", "jfx", "jfy")} END
-       |    ELSE
-       |      CASE WHEN $lL <= lt
-       |        THEN ${interpY(lL, "lt", "jex", "jey", "jfx", "jfy")}
-       |      WHEN $lL <= lt + lm
-       |        THEN ${interpY(s"$lL - lt", "lm", "jtx", "jty", "jfx", "jfy")}
-       |      ELSE ${interpY(s"$lL - lt - lm", "lfp", "jfx", "jfy", "p73x", "p73y")} END
-       |  END AS zy0
-       |  FROM p16),
-       |pg AS (SELECT id, oct, zx, side * zy0 AS zy, mg, cos60, sin60 FROM pz),
-       |pout AS (SELECT id,
-       |  CASE oct
-       |    WHEN 0 THEN zx * cos60 + zy * sin60
-       |    WHEN 1 THEN (-zx * cos60 + zy * sin60) - mg
-       |    WHEN 2 THEN (zx * cos60 + zy * sin60) - mg
-       |    WHEN 3 THEN (-zx * cos60 + zy * sin60) + mg
-       |    WHEN 4 THEN (zx * cos60 + zy * sin60) + mg
-       |    WHEN 5 THEN ((2 * mg - zx) * cos60 + zy * sin60) + mg
-       |    WHEN 6 THEN (-(2 * mg - zx) * cos60 + zy * sin60) - mg
-       |    WHEN 7 THEN ((2 * mg - zx) * cos60 + zy * sin60) - mg
-       |    WHEN 8 THEN (-(2 * mg - zx) * cos60 + zy * sin60) + mg
-       |  END AS ox,
-       |  CASE oct
-       |    WHEN 0 THEN -zx * sin60 + zy * cos60
-       |    WHEN 1 THEN -zx * sin60 - zy * cos60
-       |    WHEN 2 THEN -zx * sin60 + zy * cos60
-       |    WHEN 3 THEN -zx * sin60 - zy * cos60
-       |    WHEN 4 THEN -zx * sin60 + zy * cos60
-       |    WHEN 5 THEN -(2 * mg - zx) * sin60 + zy * cos60
-       |    WHEN 6 THEN -(2 * mg - zx) * sin60 - zy * cos60
-       |    WHEN 7 THEN -(2 * mg - zx) * sin60 + zy * cos60
-       |    WHEN 8 THEN -(2 * mg - zx) * sin60 - zy * cos60
-       |  END AS oy
-       |  FROM pg)
-       |SELECT id, CAST(floor(ox * 100.0) AS BIGINT) AS x_int,
-       |  CAST(floor(oy * 100.0) AS BIGINT) AS y_int
-       |FROM pout ORDER BY id""".stripMargin
-  }
-
-  /** The q_dymaxion / q_dymaxion2 mirror builder (verified cell-exact
-   * during authoring): Gray-Fuller vs gnomonic facet tails over one
-   * rotation + icosahedron-derivation + face-find pipeline. */
-  private def dymaxionOracleSql(grayFuller: Boolean): String = {
-      val sqrt3 = dl(math.sqrt(3))
-      val gz = dl(math.sqrt(5 + 2 * math.sqrt(5)) / math.sqrt(15))
-      val gel = dl(math.sqrt(8) / math.sqrt(5 + math.sqrt(5)))
-      val gdve = dl(math.sqrt(3 + math.sqrt(5)) / math.sqrt(5 + math.sqrt(5)))
-      val r0 = dl(-83.65929); val r1 = dl(25.44458); val r2 = dl(-87.45184)
-      val idx = Seq((0, 3, 11), (0, 5, 3), (0, 7, 5), (0, 9, 7), (0, 11, 9),
-        (2, 11, 3), (3, 4, 2), (4, 3, 5), (5, 6, 4), (6, 5, 7),
-        (7, 8, 6), (8, 7, 9), (9, 10, 8), (10, 9, 11), (11, 2, 10),
-        (1, 2, 4), (1, 4, 6), (1, 6, 8), (1, 8, 10), (1, 10, 2))
-      val facesValues = idx.zipWithIndex.map { case ((a, b, c), f) =>
-        s"($f,0,$a),($f,1,$b),($f,2,$c)"
-      }.mkString(",")
-      val dirExpr =
-        if (grayFuller)
-          s"CASE WHEN abs(c.slat - ${dl(52.62)}) < 1 OR abs(c.slat + ${dl(10.81)}) < 1 " +
-            "THEN 0.0 ELSE 60.0 END"
-        else "0.0"
-      val projTail =
-        if (grayFuller)
-          s"""gf AS (SELECT id, fid,
-             |    cos(phi2) * sin(lam2) * (($gz) / (cos(phi2) * cos(lam2))) AS gx0,
-             |    sin(phi2) * (($gz) / (cos(phi2) * cos(lam2))) AS gy0
-             |  FROM floc),
-             |ga AS (SELECT id, fid,
-             |    atan2(2 * gy0 / $sqrt3 + $gel / 3 - $gel / 2, $gdve) AS a1p,
-             |    atan2(gx0 - gy0 / $sqrt3 + $gel / 3 - $gel / 2, $gdve) AS a2p,
-             |    atan2($gel / 3 - gx0 - gy0 / $sqrt3 - $gel / 2, $gdve) AS a3p
-             |  FROM gf)
-             |SELECT id, CAST(fid AS BIGINT) AS face_id,
-             |  CAST(floor($sqrt3 * (a2p - a3p) * 1000000.0) AS BIGINT) AS gx_int,
-             |  CAST(floor(-(2 * a1p - a2p - a3p) * 1000000.0) AS BIGINT) AS gy_int
-             |FROM ga ORDER BY id""".stripMargin
-        else
-          s"""gn AS (SELECT id, fid, lam2, phi2 FROM floc)
-             |SELECT id, CAST(fid AS BIGINT) AS face_id,
-             |  CAST(floor(cos(phi2) * sin(lam2) / (cos(phi2) * cos(lam2)) * 1000000.0) AS BIGINT) AS gx_int,
-             |  CAST(floor(-(sin(phi2)) / (cos(phi2) * cos(lam2)) * 1000000.0) AS BIGINT) AS gy_int
-             |FROM gn ORDER BY id""".stripMargin
-      s"""WITH $ptsSql,
-         |verts AS (
-         |  SELECT 0 AS vid, CAST(0.0 AS DOUBLE) AS lon, CAST(90.0 AS DOUBLE) AS lat
-         |  UNION ALL SELECT 1, 0.0, -90.0
-         |  UNION ALL SELECT i + 2, CAST(((i * 36 + 180) % 360) - 180 AS DOUBLE),
-         |    CASE WHEN i % 2 = 1 THEN atan(${dl(0.5)}) * 180.0 / pi()
-         |         ELSE -(atan(${dl(0.5)}) * 180.0 / pi()) END
-         |  FROM generate_series(0, 9) t(i)),
-         |fidx(fid, slot, vid) AS (VALUES $facesValues),
-         |f20 AS (SELECT f.fid, f.slot, v.lon, v.lat FROM fidx f JOIN verts v USING (vid)),
-         |fvec AS (SELECT fid, slot, lon, lat,
-         |    cos(lat * pi() / 180.0) * cos(lon * pi() / 180.0) AS vx,
-         |    sin(lon * pi() / 180.0) * cos(lat * pi() / 180.0) AS vy,
-         |    sin(lat * pi() / 180.0) AS vz
-         |  FROM f20),
-         |csum AS (SELECT fid, sum(vx) AS sx, sum(vy) AS sy, sum(vz) AS sz FROM fvec GROUP BY fid),
-         |sites20 AS (SELECT fid,
-         |    atan2(sy / sqrt(sx*sx + sy*sy + sz*sz), sx / sqrt(sx*sx + sy*sy + sz*sz)) * 180.0 / pi() AS slon,
-         |    asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |      sz / sqrt(sx*sx + sy*sy + sz*sz)))) * 180.0 / pi() AS slat
-         |  FROM csum),
-         |midv AS (SELECT
-         |    a.vx + b.vx AS mx, a.vy + b.vy AS my, a.vz + b.vz AS mz
-         |  FROM (SELECT * FROM fvec WHERE fid = 14 AND slot = 1) a,
-         |       (SELECT * FROM fvec WHERE fid = 14 AND slot = 2) b),
-         |mid AS (SELECT
-         |    atan2(my / sqrt(mx*mx + my*my + mz*mz), mx / sqrt(mx*mx + my*my + mz*mz)) * 180.0 / pi() AS mlon,
-         |    asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |      mz / sqrt(mx*mx + my*my + mz*mz)))) * 180.0 / pi() AS mlat
-         |  FROM midv),
-         |f24 AS (
-         |  SELECT fid, slot, lon, lat FROM f20 WHERE fid NOT IN (14, 15, 19)
-         |  UNION ALL SELECT 15, 0, slon, slat FROM sites20 WHERE fid = 15
-         |  UNION ALL SELECT 15, slot, lon, lat FROM f20 WHERE fid = 15 AND slot IN (1, 2)
-         |  UNION ALL SELECT 14, 1, mlon, mlat FROM mid
-         |  UNION ALL SELECT 14, slot, lon, lat FROM f20 WHERE fid = 14 AND slot IN (0, 2)
-         |  UNION ALL SELECT 19, 1, mlon, mlat FROM mid
-         |  UNION ALL SELECT 19, slot, lon, lat FROM f20 WHERE fid = 19 AND slot IN (0, 2)
-         |  UNION ALL SELECT 20, 0, lon, lat FROM f20 WHERE fid = 15 AND slot = 0
-         |  UNION ALL SELECT 20, 1, slon, slat FROM sites20 WHERE fid = 15
-         |  UNION ALL SELECT 20, 2, lon, lat FROM f20 WHERE fid = 15 AND slot = 2
-         |  UNION ALL SELECT 21, slot, lon, lat FROM f20 WHERE fid = 15 AND slot IN (0, 1)
-         |  UNION ALL SELECT 21, 2, slon, slat FROM sites20 WHERE fid = 15
-         |  UNION ALL SELECT 22, slot, lon, lat FROM f20 WHERE fid = 14 AND slot IN (0, 1)
-         |  UNION ALL SELECT 22, 2, mlon, mlat FROM mid
-         |  UNION ALL SELECT 23, 0, mlon, mlat FROM mid
-         |  UNION ALL SELECT 23, 1, lon, lat FROM f20 WHERE fid = 19 AND slot = 0
-         |  UNION ALL SELECT 23, 2, lon, lat FROM f20 WHERE fid = 19 AND slot = 1),
-         |sites24 AS (
-         |  SELECT fid, slon, slat FROM sites20
-         |  UNION ALL SELECT 20, slon, slat FROM sites20 WHERE fid = 15
-         |  UNION ALL SELECT 21, slon, slat FROM sites20 WHERE fid = 15
-         |  UNION ALL SELECT 22, slon, slat FROM sites20 WHERE fid = 14
-         |  UNION ALL SELECT 23, slon, slat FROM sites20 WHERE fid = 19),
-         |fvec24 AS (SELECT fid, slot, lon, lat,
-         |    cos(lat * pi() / 180.0) * cos(lon * pi() / 180.0) AS vx,
-         |    sin(lon * pi() / 180.0) * cos(lat * pi() / 180.0) AS vy,
-         |    sin(lat * pi() / 180.0) AS vz
-         |  FROM f24),
-         |inside AS (SELECT fid,
-         |    sum(vx) / sqrt(sum(vx)*sum(vx) + sum(vy)*sum(vy) + sum(vz)*sum(vz)) AS ix,
-         |    sum(vy) / sqrt(sum(vx)*sum(vx) + sum(vy)*sum(vy) + sum(vz)*sum(vz)) AS iy,
-         |    sum(vz) / sqrt(sum(vx)*sum(vx) + sum(vy)*sum(vy) + sum(vz)*sum(vz)) AS iz
-         |  FROM fvec24 GROUP BY fid),
-         |fedges AS (SELECT a.fid,
-         |    a.vy * b.vz - a.vz * b.vy AS nx,
-         |    a.vz * b.vx - a.vx * b.vz AS ny,
-         |    a.vx * b.vy - a.vy * b.vx AS nz
-         |  FROM fvec24 a JOIN fvec24 b ON a.fid = b.fid AND b.slot = (a.slot + 1) % 3),
-         |fsigned AS (SELECT e.fid, e.nx, e.ny, e.nz,
-         |    CASE WHEN e.nx * i.ix + e.ny * i.iy + e.nz * i.iz < 0 THEN -1 ELSE 1 END AS sg
-         |  FROM fedges e JOIN inside i ON e.fid = i.fid),
-         |pin AS (SELECT id,
-         |    (x * 3.6 - 180.0) * pi() / 180.0 AS lam0,
-         |    (y * 1.7 - 85.0) * pi() / 180.0 AS phi0
-         |  FROM pts),
-         |prot0 AS (SELECT id,
-         |    CASE WHEN lam0 + $r0 * pi() / 180.0 > pi()
-         |         THEN lam0 + $r0 * pi() / 180.0 - 2 * pi()
-         |         WHEN lam0 + $r0 * pi() / 180.0 < -pi()
-         |         THEN lam0 + $r0 * pi() / 180.0 + 2 * pi()
-         |         ELSE lam0 + $r0 * pi() / 180.0 END AS laml, phi0
-         |  FROM pin),
-         |prot AS (SELECT id,
-         |    atan2(sin(laml) * cos(phi0) * cos($r2 * pi() / 180.0)
-         |        - (sin(phi0) * cos($r1 * pi() / 180.0)
-         |           + cos(laml) * cos(phi0) * sin($r1 * pi() / 180.0))
-         |          * sin($r2 * pi() / 180.0),
-         |      cos(laml) * cos(phi0) * cos($r1 * pi() / 180.0)
-         |        - sin(phi0) * sin($r1 * pi() / 180.0)) AS lam,
-         |    asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |      (sin(phi0) * cos($r1 * pi() / 180.0)
-         |       + cos(laml) * cos(phi0) * sin($r1 * pi() / 180.0))
-         |      * cos($r2 * pi() / 180.0)
-         |      + sin(laml) * cos(phi0) * sin($r2 * pi() / 180.0)))) AS phi
-         |  FROM prot0),
-         |pvec AS (SELECT id, lam, phi,
-         |    cos(lam) * cos(phi) AS px, sin(lam) * cos(phi) AS py, sin(phi) AS pz
-         |  FROM prot),
-         |contain AS (SELECT p.id, f.fid
-         |  FROM pvec p JOIN fsigned f ON TRUE
-         |  GROUP BY p.id, f.fid
-         |  HAVING bool_and((f.nx * p.px + f.ny * p.py + f.nz * p.pz) * f.sg >= -${dl(1e-12)})),
-         |fsel AS (SELECT id, min(fid) AS fid FROM contain GROUP BY id),
-         |floc0 AS (SELECT p.id, s.fid, p.lam, p.phi, c.slon, c.slat,
-         |    $dirExpr AS dir
-         |  FROM pvec p JOIN fsel s ON p.id = s.id JOIN sites24 c ON s.fid = c.fid),
-         |floc1 AS (SELECT id, fid, slon, slat, dir,
-         |    CASE WHEN lam + (-slon) * pi() / 180.0 > pi()
-         |         THEN lam + (-slon) * pi() / 180.0 - 2 * pi()
-         |         WHEN lam + (-slon) * pi() / 180.0 < -pi()
-         |         THEN lam + (-slon) * pi() / 180.0 + 2 * pi()
-         |         ELSE lam + (-slon) * pi() / 180.0 END AS laml, phi
-         |  FROM floc0),
-         |floc AS (SELECT id, fid,
-         |    atan2(sin(laml) * cos(phi) * cos(dir * pi() / 180.0)
-         |        - (sin(phi) * cos((-slat) * pi() / 180.0)
-         |           + cos(laml) * cos(phi) * sin((-slat) * pi() / 180.0))
-         |          * sin(dir * pi() / 180.0),
-         |      cos(laml) * cos(phi) * cos((-slat) * pi() / 180.0)
-         |        - sin(phi) * sin((-slat) * pi() / 180.0)) AS lam2,
-         |    asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |      (sin(phi) * cos((-slat) * pi() / 180.0)
-         |       + cos(laml) * cos(phi) * sin((-slat) * pi() / 180.0)) * cos(dir * pi() / 180.0)
-         |      + sin(laml) * cos(phi) * sin(dir * pi() / 180.0)))) AS phi2
-         |  FROM floc1),
-         |$projTail""".stripMargin
-  }
-
-  /** The q_lee / q_lee_calm mirror builder (verified cell-exact during
-   * authoring): only the global rotation literals differ between the
-   * markley and CALM aspects. */
-  private def leeOracleSql(rot0: String, rot1: String, rot2: String): String = {
-      val DR = "(pi() / 180.0)"
-      def rotSql(pre: String, lamc: String, phic: String,
-                 d0: String, d1: String, d2: String,
-                 outl: String, outp: String): String =
-        s"""${pre}0 AS (SELECT *,
-           |  CASE WHEN $lamc + ($d0) * $DR > pi() THEN $lamc + ($d0) * $DR - 2 * pi()
-           |       WHEN $lamc + ($d0) * $DR < -pi() THEN $lamc + ($d0) * $DR + 2 * pi()
-           |       ELSE $lamc + ($d0) * $DR END AS ${pre}_laml FROM ${pre}_in),
-           |${pre}1 AS (SELECT *,
-           |  atan2(sin(${pre}_laml) * cos($phic) * cos(($d2) * $DR)
-           |      - (sin($phic) * cos(($d1) * $DR)
-           |         + cos(${pre}_laml) * cos($phic) * sin(($d1) * $DR)) * sin(($d2) * $DR),
-           |    cos(${pre}_laml) * cos($phic) * cos(($d1) * $DR)
-           |      - sin($phic) * sin(($d1) * $DR)) AS $outl,
-           |  asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-           |    (sin($phic) * cos(($d1) * $DR)
-           |     + cos(${pre}_laml) * cos($phic) * sin(($d1) * $DR)) * cos(($d2) * $DR)
-           |    + sin(${pre}_laml) * cos($phic) * sin(($d2) * $DR)))) AS $outp
-           |  FROM ${pre}0)""".stripMargin
-      val coef = Seq(1.15470053837925, 0.192450089729875, 0.0481125224324687,
-        0.010309826235529, 3.34114739114366e-4, -1.50351632601465e-3,
-        -1.2304417796231e-3, -6.75190201960282e-4,
-        -2.84084537293856e-4, -8.21205120500051e-5,
-        -1.59257630018706e-6, 1.91691805888369e-5,
-        1.73095888028726e-5, 1.03865580818367e-5,
-        4.70614523937179e-6, 1.4413500104181e-6,
-        1.92757960170179e-8, -3.82869799649063e-7,
-        -3.57526015225576e-7, -2.2175964844211e-7)
-      val h0 = Seq("1.0", "CAST(1.0 AS DOUBLE) / 8", "CAST(3.0 AS DOUBLE) / 56",
-        "CAST(1.0 AS DOUBLE) / 32", "CAST(35.0 AS DOUBLE) / 1664",
-        "CAST(63.0 AS DOUBLE) / 4096", "CAST(231.0 AS DOUBLE) / 19456")
-      val gStages = coef.reverse.zipWithIndex.map { case (c, idx) =>
-        if (idx == 0)
-          s"g0 AS (SELECT *, CAST(${dl(c)} AS DOUBLE) AS g0x, CAST(0.0 AS DOUBLE) AS g0y FROM kb)"
-        else
-          s"g$idx AS (SELECT *, ${dl(c)} + g${idx - 1}x * yyx - g${idx - 1}y * yyy AS g${idx}x, " +
-            s"g${idx - 1}y * yyx + g${idx - 1}x * yyy AS g${idx}y FROM g${idx - 1})"
-      }.mkString(",\n")
-      val gl = s"g${coef.length - 1}"
-      val hStages = h0.reverse.zipWithIndex.map { case (c, idx) =>
-        if (idx == 0)
-          s"h0 AS (SELECT *, CAST($c AS DOUBLE) AS h0x, CAST(0.0 AS DOUBLE) AS h0y FROM hb)"
-        else
-          s"h$idx AS (SELECT *, ($c) + h${idx - 1}x * z3x - h${idx - 1}y * z3y AS h${idx}x, " +
-            s"h${idx - 1}y * z3x + h${idx - 1}x * z3y AS h${idx}y FROM h${idx - 1})"
-      }.mkString(",\n")
-      val hl = s"h${h0.length - 1}"
-      val w1 = dl(1.4021821053254548)
-      s"""WITH $ptsSql,
-         |verts AS (
-         |  SELECT 0 AS vid, CAST(0.0 AS DOUBLE) AS lon, CAST(90.0 AS DOUBLE) AS lat
-         |  UNION ALL SELECT 1, -180.0, -(asin(CAST(1.0 AS DOUBLE) / 3.0) * 180.0 / pi())
-         |  UNION ALL SELECT 2, -60.0, -(asin(CAST(1.0 AS DOUBLE) / 3.0) * 180.0 / pi())
-         |  UNION ALL SELECT 3, 60.0, -(asin(CAST(1.0 AS DOUBLE) / 3.0) * 180.0 / pi())),
-         |fidx(fid, slot, vid) AS (VALUES
-         |  (0,0,1),(0,1,2),(0,2,3),(1,0,0),(1,1,2),(1,2,1),
-         |  (2,0,0),(2,1,3),(2,2,2),(3,0,0),(3,1,1),(3,2,3)),
-         |fvec AS (SELECT f.fid, f.slot,
-         |    cos(v.lat * $DR) * cos(v.lon * $DR) AS vx,
-         |    sin(v.lon * $DR) * cos(v.lat * $DR) AS vy,
-         |    sin(v.lat * $DR) AS vz
-         |  FROM fidx f JOIN verts v USING (vid)),
-         |inside AS (SELECT fid,
-         |    sum(vx) / sqrt(sum(vx)*sum(vx) + sum(vy)*sum(vy) + sum(vz)*sum(vz)) AS ix,
-         |    sum(vy) / sqrt(sum(vx)*sum(vx) + sum(vy)*sum(vy) + sum(vz)*sum(vz)) AS iy,
-         |    sum(vz) / sqrt(sum(vx)*sum(vx) + sum(vy)*sum(vy) + sum(vz)*sum(vz)) AS iz
-         |  FROM fvec GROUP BY fid),
-         |cents AS (SELECT fid,
-         |    atan2(iy, ix) * 180.0 / pi() AS clon,
-         |    asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE), iz))) * 180.0 / pi() AS clat
-         |  FROM inside),
-         |fedges AS (SELECT a.fid,
-         |    a.vy * b.vz - a.vz * b.vy AS nx,
-         |    a.vz * b.vx - a.vx * b.vz AS ny,
-         |    a.vx * b.vy - a.vy * b.vx AS nz
-         |  FROM fvec a JOIN fvec b ON a.fid = b.fid AND b.slot = (a.slot + 1) % 3),
-         |fsigned AS (SELECT e.fid, e.nx, e.ny, e.nz,
-         |    CASE WHEN e.nx * i.ix + e.ny * i.iy + e.nz * i.iz < 0 THEN -1 ELSE 1 END AS sg
-         |  FROM fedges e JOIN inside i ON e.fid = i.fid),
-         |r1_in AS (SELECT id,
-         |  (x * 3.6 - 180.0) * $DR AS lam0,
-         |  (y * 1.7 - 85.0) * $DR AS phi0 FROM pts),
-         |${rotSql("r1", "lam0", "phi0", rot0, rot1, rot2, "lam", "phi")},
-         |pv AS (SELECT id, lam, phi,
-         |  cos(lam) * cos(phi) AS px, sin(lam) * cos(phi) AS py, sin(phi) AS pz FROM r11),
-         |contain AS (SELECT p.id, f.fid
-         |  FROM pv p JOIN fsigned f ON TRUE
-         |  GROUP BY p.id, f.fid
-         |  HAVING bool_and((f.nx * p.px + f.ny * p.py + f.nz * p.pz) * f.sg >= -${dl(1e-12)})),
-         |fsel AS (SELECT id, min(fid) AS fid FROM contain GROUP BY id),
-         |r2_in AS (SELECT p.id, s.fid, p.lam AS lamr, p.phi AS phir, c.clon, c.clat,
-         |  CASE WHEN abs(c.clat) > 89.0 THEN 0.0 ELSE -c.clon END AS rd0,
-         |  -c.clat AS rd1,
-         |  CASE WHEN abs(c.clat) > 89.0 THEN -30.0 ELSE 30.0 END AS rd2
-         |  FROM pv p JOIN fsel s ON p.id = s.id JOIN cents c ON s.fid = c.fid),
-         |${rotSql("r2", "lamr", "phir", "rd0", "rd1", "rd2", "flam", "fphi")},
-         |st AS (SELECT id, fid, flam, fphi,
-         |  (1.0 / (1.0 + cos(fphi) * cos(flam))) * cos(fphi) * sin(flam) * sqrt(2.0) AS zx,
-         |  (1.0 / (1.0 + cos(fphi) * cos(flam))) * sin(fphi) * sqrt(2.0) AS zy
-         |  FROM r21),
-         |wp AS (SELECT
-         |  exp(0.0) * cos(0.0) AS w0x, exp(0.0) * sin(0.0) AS w0y,
-         |  exp(ln(sqrt(0.25 + 0.75)))
-         |    * cos(atan2(sqrt(3.0) / 2, CAST(-0.5 AS DOUBLE))) AS w1x,
-         |  exp(ln(sqrt(0.25 + 0.75)))
-         |    * sin(atan2(sqrt(3.0) / 2, CAST(-0.5 AS DOUBLE))) AS w1y,
-         |  exp(2 * ln(sqrt(0.25 + 0.75)))
-         |    * cos(2 * atan2(sqrt(3.0) / 2, CAST(-0.5 AS DOUBLE))) AS w2x,
-         |  exp(2 * ln(sqrt(0.25 + 0.75)))
-         |    * sin(2 * atan2(sqrt(3.0) / 2, CAST(-0.5 AS DOUBLE))) AS w2y),
-         |sec0 AS (SELECT s.*, w.*,
-         |  s.zx * w.w0x - s.zy * w.w0y AS c0,
-         |  s.zx * w.w1x - s.zy * w.w1y AS c1,
-         |  s.zx * w.w2x - s.zy * w.w2y AS c2
-         |  FROM st s, wp w),
-         |sec AS (SELECT *,
-         |  CASE WHEN c2 > (CASE WHEN c1 > c0 THEN c1 ELSE c0 END) THEN 2
-         |       WHEN c1 > c0 THEN 1 ELSE 0 END AS sector
-         |  FROM sec0),
-         |rz AS (SELECT *,
-         |  CASE sector WHEN 0 THEN w0x WHEN 1 THEN w1x ELSE w2x END AS rotx,
-         |  CASE sector WHEN 0 THEN w0y WHEN 1 THEN w1y ELSE w2y END AS roty,
-         |  sqrt(zx * zx + zy * zy) AS nz2
-         |  FROM sec),
-         |kb AS (SELECT *,
-         |  1.0 - (rotx * zx - roty * zy) AS yyx,
-         |  -(roty * zx + rotx * zy) AS yyy
-         |  FROM rz),
-         |$gStages,
-         |ksq AS (SELECT *,
-         |  exp(0.5 * ln(sqrt(yyx * yyx + yyy * yyy))) * cos(0.5 * atan2(yyy, yyx)) AS syx,
-         |  exp(0.5 * ln(sqrt(yyx * yyx + yyy * yyy))) * sin(0.5 * atan2(yyy, yyx)) AS syy
-         |  FROM $gl),
-         |kk0 AS (SELECT *,
-         |  $w1 - (syx * ${gl}x - syy * ${gl}y) AS k0x,
-         |  -(syy * ${gl}x + syx * ${gl}y) AS k0y
-         |  FROM ksq),
-         |kk1 AS (SELECT *,
-         |  k0x * rotx - k0y * roty AS k1x,
-         |  k0y * rotx + k0x * roty AS k1y
-         |  FROM kk0),
-         |kk AS (SELECT *,
-         |  k1x * rotx - k1y * roty AS kkx,
-         |  k1y * rotx + k1x * roty AS kky
-         |  FROM kk1),
-         |hb AS (SELECT *,
-         |  exp(3 * ln(sqrt(zx * zx + zy * zy))) * cos(3 * atan2(zy, zx)) AS z3x,
-         |  exp(3 * ln(sqrt(zx * zx + zy * zy))) * sin(3 * atan2(zy, zx)) AS z3y
-         |  FROM kk),
-         |$hStages,
-         |hh AS (SELECT *,
-         |  ${hl}x * zx - ${hl}y * zy AS hhx,
-         |  ${hl}y * zx + ${hl}x * zy AS hhy
-         |  FROM $hl),
-         |mix AS (SELECT id, fid,
-         |  CASE WHEN nz2 < 0.3 THEN hhx
-         |       WHEN nz2 > 0.5 THEN kkx
-         |       ELSE kkx * ((nz2 - 0.3) / 0.2) + hhx * (1.0 - (nz2 - 0.3) / 0.2) END AS qx,
-         |  CASE WHEN nz2 < 0.3 THEN hhy
-         |       WHEN nz2 > 0.5 THEN kky
-         |       ELSE kky * ((nz2 - 0.3) / 0.2) + hhy * (1.0 - (nz2 - 0.3) / 0.2) END AS qy
-         |  FROM hh)
-         |SELECT id, CAST(fid AS BIGINT) AS face_id,
-         |  CAST(floor(qx * 1000000.0) AS BIGINT) AS lx_int,
-         |  CAST(floor(-qy * 1000000.0) AS BIGINT) AS ly_int
-         |FROM mix ORDER BY id""".stripMargin
-  }
-
-  /** The q_ann_ivf mirror (verified cell-exact against the engine during
-   * authoring): XXH64-of-long seed selection, 3 Lloyd rounds, probe + rank. */
-  private lazy val annIvfSql: String = {
-    val M64 = "18446744073709551616"
-    val M32 = 4294967296L
-    val P1 = java.lang.Long.parseUnsignedLong("9E3779B185EBCA87", 16)
-    val P2 = java.lang.Long.parseUnsignedLong("C2B2AE3D27D4EB4F", 16)
-    val P3 = java.lang.Long.parseUnsignedLong("165667B19E3779F9", 16)
-    val P4 = java.lang.Long.parseUnsignedLong("85EBCA77C2B2AE63", 16)
-    val P5 = java.lang.Long.parseUnsignedLong("27D4EB2F165667C5", 16)
-    val acc0 = 42L + P5 + 8L // wraps like the JVM
-    def u(v: Long) = java.lang.Long.toUnsignedString(v)
-    def wrapMul(z: String, c: Long): String = {
-      val clo = java.lang.Long.remainderUnsigned(c, M32)
-      s"CAST(((CAST($z AS HUGEINT) % $M32) * CAST('${u(c)}' AS HUGEINT) " +
-        s"+ (((CAST($z AS HUGEINT) // $M32) * $clo) % $M32) * $M32) % $M64 AS UBIGINT)"
-    }
-    def rotl(x: String, r: Int): String =
-      s"(CAST((CAST($x AS HUGEINT) * ${1L << r}) % $M64 AS UBIGINT) | ($x >> ${64 - r}))"
-    def wrapAdd(x: String, c: Long): String =
-      s"CAST((CAST($x AS HUGEINT) + CAST('${u(c)}' AS HUGEINT)) % $M64 AS UBIGINT)"
-    val dot = "list_sum(list_transform(range(1, 65), i -> e.v[i] * c.v[i]))"
-    val na = "list_sum(list_transform(range(1, 65), i -> e.v[i] * e.v[i]))"
-    val nb = "list_sum(list_transform(range(1, 65), i -> c.v[i] * c.v[i]))"
-    val score = s"CASE WHEN ($na) = 0 OR ($nb) = 0 THEN 0.0 ELSE ($dot) / sqrt(($na) * ($nb)) END"
-    def lloyd(k: Int): String =
-      s"""sc$k AS (SELECT e.id, c.l, $score AS s FROM emb e CROSS JOIN c$k c),
-         |asg$k AS (SELECT id, l FROM (
-         |    SELECT id, l, row_number() OVER (PARTITION BY id ORDER BY s DESC, l) AS rn FROM sc$k)
-         |  WHERE rn = 1),
-         |mn$k AS (SELECT a.l, i.i AS d,
-         |    CAST(CAST(sum(e.v[i.i]) / count(*) AS FLOAT) AS DOUBLE) AS val
-         |  FROM asg$k a JOIN emb e USING (id) CROSS JOIN range(1, 65) i(i)
-         |  GROUP BY a.l, i.i),
-         |nw$k AS (SELECT l, list(val ORDER BY d) AS v FROM mn$k GROUP BY l),
-         |c${k + 1} AS MATERIALIZED (SELECT l, v FROM nw$k
-         |  UNION ALL SELECT c.l, c.v FROM c$k c WHERE c.l NOT IN (SELECT l FROM nw$k))""".stripMargin
-    s"""WITH emb AS (SELECT CAST(vec_id AS BIGINT) AS id, CAST(embedding AS DOUBLE[]) AS v
-       |  FROM embeddings),
-       |x0 AS (SELECT id, v, CAST(id AS UBIGINT) AS vu FROM emb),
-       |x1 AS (SELECT id, v, ${wrapMul("vu", P2)} AS k1 FROM x0),
-       |x2 AS (SELECT id, v, ${rotl("k1", 31)} AS k1r FROM x1),
-       |x3 AS (SELECT id, v, ${wrapMul("k1r", P1)} AS k1p FROM x2),
-       |x4 AS (SELECT id, v, xor(CAST('${u(acc0)}' AS UBIGINT), k1p) AS acc1 FROM x3),
-       |x5 AS (SELECT id, v, ${rotl("acc1", 27)} AS accr FROM x4),
-       |x6 AS (SELECT id, v, ${wrapAdd(wrapMul("accr", P1), P4)} AS acc2 FROM x5),
-       |x7 AS (SELECT id, v, ${wrapMul("xor(acc2, acc2 >> 33)", P2)} AS a4 FROM x6),
-       |x8 AS (SELECT id, v, ${wrapMul("xor(a4, a4 >> 29)", P3)} AS a6 FROM x7),
-       |xh AS (SELECT id, v, xor(a6, a6 >> 32) AS hu FROM x8),
-       |xs AS (SELECT id, v, CASE WHEN hu >= 9223372036854775808
-       |    THEN CAST(CAST(hu AS HUGEINT) - $M64 AS BIGINT) ELSE CAST(hu AS BIGINT) END AS hs FROM xh),
-       |seeds AS (SELECT id FROM xs ORDER BY hs, id LIMIT 16),
-       |c0 AS MATERIALIZED (SELECT row_number() OVER (ORDER BY hs, id) - 1 AS l, v
-       |  FROM xs WHERE id IN (SELECT id FROM seeds)),
-       |${lloyd(0)},
-       |${lloyd(1)},
-       |${lloyd(2)},
-       |fsc AS (SELECT e.id, c.l, $score AS s FROM emb e CROSS JOIN c3 c),
-       |lists AS (SELECT id, l FROM (
-       |    SELECT id, l, row_number() OVER (PARTITION BY id ORDER BY s DESC, l) AS rn FROM fsc)
-       |  WHERE rn = 1),
-       |probes AS (SELECT id, l FROM (
-       |    SELECT id, l, row_number() OVER (PARTITION BY id ORDER BY s DESC, l) AS rn FROM fsc)
-       |  WHERE rn <= 4),
-       |cand AS (SELECT p.id, q.id AS neighbor_id
-       |  FROM probes p JOIN lists q USING (l) WHERE p.id <> q.id),
-       |scored AS (SELECT c.id, c.neighbor_id,
-       |    list_cosine_similarity(ea.v, eb.v) AS score
-       |  FROM cand c JOIN emb ea ON ea.id = c.id JOIN emb eb ON eb.id = c.neighbor_id),
-       |ranked AS (SELECT id, neighbor_id,
-       |    row_number() OVER (PARTITION BY id ORDER BY score DESC, neighbor_id) AS rnk
-       |  FROM scored)
-       |SELECT id, CAST(rnk AS BIGINT) AS rnk, neighbor_id FROM ranked
-       |WHERE rnk <= 3 ORDER BY id, rnk""".stripMargin
-  }
-
-  /** Shared audio sample CTE chain: PCM16 values re-synthesized from the
-   * generator formula (`Audio.sampleAt`: SplitMix64 finalizer over
-   * i·(2³²+1)+n, via the same HUGEINT 32-bit-limb wrap-multiplies as the
-   * image chain). Exposes `aud(audio_id, n_samples)` and
-   * `smp(audio_id, n_samples, n, v)`. */
-  private def audioSmpCtes(idLimit: Int): String =
-    s"""aud AS (SELECT audio_id, n_samples, CAST(substr(audio_id, 4, 12) AS BIGINT) AS i
-       |  FROM read_parquet('$DataRoot/audio_sf0.01.parquet/*.parquet')
-       |  WHERE CAST(substr(audio_id, 4, 12) AS BIGINT) < $idLimit),
-       |ns AS (SELECT n FROM generate_series(0, 1198) t(n)),
-       |sn AS (SELECT audio_id, i, n_samples, n FROM aud JOIN ns ON ns.n < aud.n_samples),
-       |st AS (SELECT audio_id, n_samples, n,
-       |  CAST((CAST(i AS HUGEINT) * 4294967297 + n + CAST('11400714819323198485' AS HUGEINT))
-       |    % 18446744073709551616 AS UBIGINT) AS z0 FROM sn),
-       |x1s AS (SELECT audio_id, n_samples, n, xor(z0, z0 >> 30) AS a1 FROM st),
-       |l1 AS (SELECT audio_id, n_samples, n, a1 >> 32 AS ahi, a1 & 4294967295 AS alo FROM x1s),
-       |z1s AS (SELECT audio_id, n_samples, n,
-       |  CAST((CAST(alo * 484763065 AS HUGEINT) +
-       |    CAST((alo * 3210233709) % 4294967296 + (ahi * 484763065) % 4294967296 AS HUGEINT)
-       |      % 4294967296 * 4294967296) % 18446744073709551616 AS UBIGINT) AS z1
-       |  FROM l1),
-       |x2s AS (SELECT audio_id, n_samples, n, xor(z1, z1 >> 27) AS a2 FROM z1s),
-       |l2 AS (SELECT audio_id, n_samples, n, a2 >> 32 AS ahi, a2 & 4294967295 AS alo FROM x2s),
-       |z2s AS (SELECT audio_id, n_samples, n,
-       |  CAST((CAST(alo * 321982955 AS HUGEINT) +
-       |    CAST((alo * 2496678331) % 4294967296 + (ahi * 321982955) % 4294967296 AS HUGEINT)
-       |      % 4294967296 * 4294967296) % 18446744073709551616 AS UBIGINT) AS z2
-       |  FROM l2),
-       |smp AS (SELECT audio_id, n_samples, n,
-       |  CAST((xor(z2, z2 >> 31) >> 4) % 4001 AS BIGINT) - 2000 AS v FROM z2s)""".stripMargin
-
-  /** SQL mirror of Geom.pointSegDistSq for a segment with literal endpoint
-   * expressions (cell edges: ab2 > 0 always) — identical op order, clamp via
-   * greatest(least(.)). Point columns are `x`, `y`. */
-  private def segDist2Sql(ax: String, ay: String, bx: String, by: String): String = {
-    val t = s"greatest(least((((x - $ax) * ($bx - $ax)) + ((y - $ay) * ($by - $ay))) / " +
-      s"((($ax - $bx) * ($ax - $bx)) + (($ay - $by) * ($ay - $by))), 1.0), 0.0)"
-    s"((x - ($ax + $t * ($bx - $ax))) * (x - ($ax + $t * ($bx - $ax))) + " +
-      s"(y - ($ay + $t * ($by - $ay))) * (y - ($ay + $t * ($by - $ay))))"
-  }
-
-  /** Shared PNG ahash/mean CTE chain: generator-formula pixels (SplitMix64
-   * unrolled with 32-bit-limb wrap-multiplies in HUGEINT), 8x8 cell means,
-   * sequential list_sum, sign-mapped UBIGINT bit pack — parameterized by
-   * the id slice. Exposes CTEs `img`, `px`, `bits` (UBIGINT `ub`), `means`. */
-  private def ahashCtes(idLimit: Int): String = ahashChain(
-    s"""img AS (SELECT image_id, w, h, CAST(substr(image_id, 4, 12) AS BIGINT) AS i
-       |  FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')
-       |  WHERE fmt = 'png' AND CAST(substr(image_id, 4, 12) AS BIGINT) < $idLimit)""".stripMargin)
-
-  /** Same chain over any `img(image_id, w, h, i)` CTE (i = generator seed) —
-   * lets the video mirror hash PNG frames by their frame seed. */
-  private def ahashChain(imgCte: String): String =
-    s"""$imgCte,
-       |ns AS (SELECT n FROM generate_series(0, 1088) t(n)),
-       |pxn AS (SELECT image_id, i, w, h, n FROM img JOIN ns ON ns.n < img.w * img.h),
-       |st AS (SELECT image_id, w, h, n,
-       |  CAST((CAST(i AS HUGEINT) + CAST(n + 1 AS HUGEINT) * 11400714819323198485)
-       |    % 18446744073709551616 AS UBIGINT) AS z0 FROM pxn),
-       |x1s AS (SELECT image_id, w, h, n, xor(z0, z0 >> 30) AS a1 FROM st),
-       |l1 AS (SELECT image_id, w, h, n, a1 >> 32 AS ahi, a1 & 4294967295 AS alo FROM x1s),
-       |z1s AS (SELECT image_id, w, h, n,
-       |  CAST((CAST(alo * 484763065 AS HUGEINT) +
-       |    CAST((alo * 3210233709) % 4294967296 + (ahi * 484763065) % 4294967296 AS HUGEINT)
-       |      % 4294967296 * 4294967296) % 18446744073709551616 AS UBIGINT) AS z1
-       |  FROM l1),
-       |x2s AS (SELECT image_id, w, h, n, xor(z1, z1 >> 27) AS a2 FROM z1s),
-       |l2 AS (SELECT image_id, w, h, n, a2 >> 32 AS ahi, a2 & 4294967295 AS alo FROM x2s),
-       |z2s AS (SELECT image_id, w, h, n,
-       |  CAST((CAST(alo * 321982955 AS HUGEINT) +
-       |    CAST((alo * 2496678331) % 4294967296 + (ahi * 321982955) % 4294967296 AS HUGEINT)
-       |      % 4294967296 * 4294967296) % 18446744073709551616 AS UBIGINT) AS z2
-       |  FROM l2),
-       |px AS (SELECT image_id, w, h, n % w AS x, n // w AS y,
-       |  (((n % w) * 160) // w + ((n // w) * 80) // h
-       |    + CAST((xor(z2, z2 >> 31) >> 1) % 4 AS BIGINT)) & 255 AS g
-       |  FROM z2s),
-       |g8 AS (SELECT gi FROM generate_series(0, 7) t(gi)),
-       |cl AS (SELECT img.image_id, gy.gi AS gy, gx.gi AS gx,
-       |    (gx.gi * w) // 8 AS x0, greatest((gx.gi * w) // 8 + 1, ((gx.gi + 1) * w) // 8) AS x1,
-       |    (gy.gi * h) // 8 AS y0, greatest((gy.gi * h) // 8 + 1, ((gy.gi + 1) * h) // 8) AS y1
-       |  FROM img, g8 gx, g8 gy),
-       |gray AS (SELECT p.image_id, c.gy * 8 + c.gx AS gidx,
-       |    CAST(sum(p.g) AS DOUBLE) / count(*) AS gval
-       |  FROM px p JOIN cl c ON p.image_id = c.image_id
-       |    AND p.x >= c.x0 AND p.x < c.x1 AND p.y >= c.y0 AND p.y < c.y1
-       |  GROUP BY p.image_id, c.gy * 8 + c.gx),
-       |meanv AS (SELECT image_id, list_sum(list(gval ORDER BY gidx)) / 64.0 AS m
-       |  FROM gray GROUP BY image_id),
-       |bits AS (SELECT g.image_id,
-       |    sum(CASE WHEN g.gval >= m.m THEN CAST(1 AS UBIGINT) << g.gidx
-       |      ELSE CAST(0 AS UBIGINT) END) AS ub
-       |  FROM gray g JOIN meanv m USING (image_id) GROUP BY g.image_id),
-       |means AS (SELECT image_id, CAST(sum(g) AS DOUBLE) / CAST(w * h AS DOUBLE) AS mean_g
-       |  FROM px GROUP BY image_id, w, h)""".stripMargin
-
-  /** The q_img_cell SQL: full Morton decode (phash → lon/lat) and re-encode
-   * (cell id at res 6) as DuckDB bit-op cascades — the image table's spatial
-   * keying is verified end to end, not just row-counted. The image parquet is
-   * read by absolute path (the driver's correctness run materializes it at
-   * sf0.01 via Verify before the oracle executes). */
-  private lazy val imgCellSql: String = {
-    val LS = dl(Images.LocScale)
-    s"""WITH img AS (SELECT phash FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')),
-       |s0 AS (SELECT phash >> 1 AS x, phash AS y FROM img),
-       |d1 AS (SELECT x & 6148914691236517205 AS x, y & 6148914691236517205 AS y FROM s0),
-       |d2 AS (SELECT (x | (x >> 1)) & 3689348814741910323 AS x,
-       |              (y | (y >> 1)) & 3689348814741910323 AS y FROM d1),
-       |d3 AS (SELECT (x | (x >> 2)) & 1085102592571150095 AS x,
-       |              (y | (y >> 2)) & 1085102592571150095 AS y FROM d2),
-       |d4 AS (SELECT (x | (x >> 4)) & 71777214294589695 AS x,
-       |              (y | (y >> 4)) & 71777214294589695 AS y FROM d3),
-       |d5 AS (SELECT (x | (x >> 8)) & 281470681808895 AS x,
-       |              (y | (y >> 8)) & 281470681808895 AS y FROM d4),
-       |d6 AS (SELECT (x | (x >> 16)) & 4294967295 AS x,
-       |              (y | (y >> 16)) & 4294967295 AS y FROM d5),
-       |ll AS (SELECT CAST(x AS DOUBLE) * $LS AS lon, CAST(y AS DOUBLE) * $LS AS lat FROM d6),
-       |ic AS (SELECT CAST(floor(lon / 5.625) AS BIGINT) + 268435456 AS x,
-       |              CAST(floor(lat / 5.625) AS BIGINT) + 268435456 AS y FROM ll),
-       |i0 AS (SELECT x & 536870911 AS x, y & 536870911 AS y FROM ic),
-       |i1 AS (SELECT (x | (x << 16)) & 281470681808895 AS x,
-       |              (y | (y << 16)) & 281470681808895 AS y FROM i0),
-       |i2 AS (SELECT (x | (x << 8)) & 71777214294589695 AS x,
-       |              (y | (y << 8)) & 71777214294589695 AS y FROM i1),
-       |i3 AS (SELECT (x | (x << 4)) & 1085102592571150095 AS x,
-       |              (y | (y << 4)) & 1085102592571150095 AS y FROM i2),
-       |i4 AS (SELECT (x | (x << 2)) & 3689348814741910323 AS x,
-       |              (y | (y << 2)) & 3689348814741910323 AS y FROM i3),
-       |i5 AS (SELECT (x | (x << 1)) & 6148914691236517205 AS x,
-       |              (y | (y << 1)) & 6148914691236517205 AS y FROM i4)
-       |SELECT (1729382256910270464 | (x << 1) | y) AS cell_id, count(*) AS n
-       |FROM i5 GROUP BY 1 ORDER BY 1""".stripMargin
-  }
-
-  /** Shared phash → (image_id, x, y) Morton-decode cascade (same bit ops as
-   * [[imgCellSql]], carrying image_id for per-image grouping). */
-  private lazy val imgXYSql: String = {
-    val LS = dl(Images.LocScale)
-    s"""img AS (SELECT image_id, phash FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')),
-       |s0 AS (SELECT image_id, phash >> 1 AS x, phash AS y FROM img),
-       |d1 AS (SELECT image_id, x & 6148914691236517205 AS x, y & 6148914691236517205 AS y FROM s0),
-       |d2 AS (SELECT image_id, (x | (x >> 1)) & 3689348814741910323 AS x,
-       |              (y | (y >> 1)) & 3689348814741910323 AS y FROM d1),
-       |d3 AS (SELECT image_id, (x | (x >> 2)) & 1085102592571150095 AS x,
-       |              (y | (y >> 2)) & 1085102592571150095 AS y FROM d2),
-       |d4 AS (SELECT image_id, (x | (x >> 4)) & 71777214294589695 AS x,
-       |              (y | (y >> 4)) & 71777214294589695 AS y FROM d3),
-       |d5 AS (SELECT image_id, (x | (x >> 8)) & 281470681808895 AS x,
-       |              (y | (y >> 8)) & 281470681808895 AS y FROM d4),
-       |d6 AS (SELECT image_id, (x | (x >> 16)) & 4294967295 AS x,
-       |              (y | (y >> 16)) & 4294967295 AS y FROM d5),
-       |xy AS (SELECT image_id, CAST(x AS DOUBLE) * $LS AS x, CAST(y AS DOUBLE) * $LS AS y FROM d6)""".stripMargin
-  }
-
-  /** The 64-shape image layer emitted as SQL VALUES edges (same precedent as
-   * [[oracleEdgesSql]]: both engines derive from this exact object). */
-  private lazy val imageEdgesSql: String =
-    s"""iedges AS (SELECT pk, ring,
-       |  CAST(ex1 AS DOUBLE) AS ex1, CAST(ey1 AS DOUBLE) AS ey1,
-       |  CAST(ex2 AS DOUBLE) AS ex2, CAST(ey2 AS DOUBLE) AS ey2
-       |  FROM (VALUES ${Synthetic.edgesSqlValues(imageLayer)})
-       |  t(pk, ring, ex1, ey1, ex2, ey2))""".stripMargin
-
-  /** Morton re-encode of (cx, cy) at a resolution — mirror of
-   * CellIndex.cellId (floor to cell coords, bias, interleave, res header). */
-  private def cellEncodeSql(inCte: String, res: Int): String = {
-    val cs = dl(CellIndex.cellSize(res))
-    val header = res.toLong << 58
-    s"""ic AS (SELECT *, CAST(floor(cx / $cs) AS BIGINT) + 268435456 AS ex,
-       |              CAST(floor(cy / $cs) AS BIGINT) + 268435456 AS ey FROM $inCte),
-       |i0 AS (SELECT * REPLACE (ex & 536870911 AS ex, ey & 536870911 AS ey) FROM ic),
-       |i1 AS (SELECT * REPLACE ((ex | (ex << 16)) & 281470681808895 AS ex,
-       |              (ey | (ey << 16)) & 281470681808895 AS ey) FROM i0),
-       |i2 AS (SELECT * REPLACE ((ex | (ex << 8)) & 71777214294589695 AS ex,
-       |              (ey | (ey << 8)) & 71777214294589695 AS ey) FROM i1),
-       |i3 AS (SELECT * REPLACE ((ex | (ex << 4)) & 1085102592571150095 AS ex,
-       |              (ey | (ey << 4)) & 1085102592571150095 AS ey) FROM i2),
-       |i4 AS (SELECT * REPLACE ((ex | (ex << 2)) & 3689348814741910323 AS ex,
-       |              (ey | (ey << 2)) & 3689348814741910323 AS ey) FROM i3),
-       |i5 AS (SELECT * REPLACE ((ex | (ex << 1)) & 6148914691236517205 AS ex,
-       |              (ey | (ey << 1)) & 6148914691236517205 AS ey) FROM i4),
-       |enc AS (SELECT *, ($header | (ex << 1) | ey) AS cell_id FROM i5)""".stripMargin
-  }
-
-  /** The q_clip_rect SQL: the FULL Sutherland–Hodgman kernel mirrored in
-   * SQL — four half-plane passes, each sequencing the ring with window
-   * functions (kept vertices + crossings interleaved in ring order, rings
-   * under 3 vertices dropped), then closed-shoelace area and vertex count
-   * with the same closing-duplicate rule as RectClip.clipRing. Intersection
-   * arithmetic matches the Scala kernel's op order exactly. */
-  private lazy val clipRectSql: String = {
-    // one half-plane pass: in -> v$k (ring, pk, i, x, y), renumbered
-    def pass(k: Int, in: String, keep: (String, String) => String,
-             ix: String, iy: String): String =
-      s"""e$k AS (SELECT ring, pk, i, x AS x1, y AS y1,
-         |    coalesce(lead(x) OVER (PARTITION BY ring ORDER BY i),
-         |             first_value(x) OVER (PARTITION BY ring ORDER BY i)) AS x2,
-         |    coalesce(lead(y) OVER (PARTITION BY ring ORDER BY i),
-         |             first_value(y) OVER (PARTITION BY ring ORDER BY i)) AS y2
-         |  FROM $in),
-         |r$k AS (
-         |  SELECT ring, pk, i*2 AS ord, x1 AS x, y1 AS y FROM e$k WHERE ${keep("x1", "y1")}
-         |  UNION ALL
-         |  SELECT ring, pk, i*2+1 AS ord, $ix AS x, $iy AS y FROM e$k
-         |  WHERE (${keep("x1", "y1")}) <> (${keep("x2", "y2")})),
-         |c$k AS (SELECT ring, count(*) AS c FROM r$k GROUP BY ring),
-         |v$k AS (SELECT rr.ring, rr.pk,
-         |    row_number() OVER (PARTITION BY rr.ring ORDER BY rr.ord) - 1 AS i, rr.x, rr.y
-         |  FROM r$k rr JOIN c$k cc USING (ring) WHERE cc.c >= 3)""".stripMargin
-    val passes = Seq(
-      pass(1, "v0", (x, _) => s"$x >= 25.0", "25.0", "y1 + ((25.0 - x1) / (x2 - x1)) * (y2 - y1)"),
-      pass(2, "v1", (x, _) => s"$x <= 75.0", "75.0", "y1 + ((75.0 - x1) / (x2 - x1)) * (y2 - y1)"),
-      pass(3, "v2", (_, y) => s"$y >= 25.0", "x1 + ((25.0 - y1) / (y2 - y1)) * (x2 - x1)", "25.0"),
-      pass(4, "v3", (_, y) => s"$y <= 75.0", "x1 + ((75.0 - y1) / (y2 - y1)) * (x2 - x1)", "75.0")
-    ).mkString(",\n")
-    s"""WITH v0 AS (SELECT pk, ring, i, CAST(x AS DOUBLE) AS x, CAST(y AS DOUBLE) AS y
-       |  FROM (VALUES ${Synthetic.ringVertsSqlValues(Synthetic.oracleLayer)}) t(pk, ring, i, x, y)),
-       |$passes,
-       |e5 AS (SELECT ring, pk, i, x AS x1, y AS y1,
-       |    coalesce(lead(x) OVER (PARTITION BY ring ORDER BY i),
-       |             first_value(x) OVER (PARTITION BY ring ORDER BY i)) AS x2,
-       |    coalesce(lead(y) OVER (PARTITION BY ring ORDER BY i),
-       |             first_value(y) OVER (PARTITION BY ring ORDER BY i)) AS y2
-       |  FROM v4),
-       |fin AS (SELECT ring, count(*) AS c,
-       |    SUM(x1 * y2 - x2 * y1) / 2.0 AS area,
-       |    CASE WHEN arg_min(x1, i) = arg_max(x1, i) AND arg_min(y1, i) = arg_max(y1, i)
-       |         THEN 0 ELSE 1 END AS extra
-       |  FROM e5 GROUP BY ring)
-       |SELECT b.pk AS poly_key, CAST(b.ring AS BIGINT) AS ring_id,
-       |  CAST(coalesce(f.c + f.extra, 0) AS BIGINT) AS n_clipped_vertices,
-       |  coalesce(CAST(floor(f.area * 1000000.0) AS BIGINT), 0) AS area_int
-       |FROM (SELECT DISTINCT CAST(pk AS BIGINT) AS pk, ring FROM v0) b
-       |LEFT JOIN fin f USING (ring)
-       |ORDER BY ring_id""".stripMargin
-  }
-
-  /** The q_proj_world SQL: the round-3 world projections (Robinson table
-   * spline, Mollweide fixed-10-Newton, sinusoidal, Equal Earth polynomial,
-   * polar stereographic) mirrored with the same op order and interpolated
-   * constants; Robinson's Hermite coefficients are emitted from the very
-   * arrays the Scala evaluator reads. */
-  private lazy val projWorldSql: String = {
-    val D2R = dl(Crs.D2R); val AL = dl(Crs.A)
-    val KRX = dl(0.8487 * Crs.A); val KRY = dl(1.3523 * Crs.A)
-    val KMX = dl(2.0 * math.sqrt(2.0) / math.Pi * Crs.A); val KMY = dl(math.sqrt(2.0) * Crs.A)
-    val eq = Crs.EqualEarth()
-    val M = dl(math.sqrt(3.0) / 2.0)
-    val A1 = dl(eq.A1); val A2 = dl(eq.A2); val A3 = dl(eq.A3); val A4 = dl(eq.A4)
-    val SIN0 = dl(math.sin(90.0 * Crs.D2R)); val COS0 = dl(math.cos(90.0 * Crs.D2R))
-    val K2A = dl(2.0 * Crs.A)
-    val coefRows = (0 until 18).map { i =>
-      val xc = Crs.Robinson.CoefX(i); val yc = Crs.Robinson.CoefY(i)
-      s"($i, ${dl(xc(0))}, ${dl(xc(1))}, ${dl(xc(2))}, ${dl(xc(3))}, " +
-        s"${dl(yc(0))}, ${dl(yc(1))}, ${dl(yc(2))}, ${dl(yc(3))})"
-    }.mkString(", ")
-    val newton = (1 to 10).map { k =>
-      s"""m$k AS (SELECT id, lon, tgt,
-         |  CASE WHEN abs(2.0 + 2.0 * cos(2.0 * th)) > 1e-14
-         |    THEN th - (2.0 * th + sin(2.0 * th) - tgt) / (2.0 + 2.0 * cos(2.0 * th))
-         |    ELSE th END AS th FROM m${k - 1})""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $ptsSql,
-       |ll AS (SELECT id, x * 3.6 - 180.0 AS lon, y * 1.7 - 85.0 AS lat FROM pts),
-       |base AS (SELECT id, lon, lat, lat * $D2R AS phi FROM ll),
-       |rcoef AS (SELECT * FROM (VALUES $coefRows)
-       |  t(cidx, xc0, xc1, xc2, xc3, yc0, yc1, yc2, yc3)),
-       |rob0 AS (SELECT id, lon, lat, least(90.0, abs(lat)) AS al FROM base),
-       |rob1 AS (SELECT id, lon, lat, al,
-       |  least(17, CAST(trunc(al / 5.0) AS INTEGER)) AS idx FROM rob0),
-       |rob2 AS (SELECT r.id, r.lon, r.lat,
-       |    (r.al - CAST(r.idx AS DOUBLE) * 5.0) / 5.0 AS t,
-       |    c.xc0, c.xc1, c.xc2, c.xc3, c.yc0, c.yc1, c.yc2, c.yc3
-       |  FROM rob1 r JOIN rcoef c ON c.cidx = r.idx),
-       |rob AS (SELECT id,
-       |    $KRX * (xc0 + t * (xc1 + t * (xc2 + t * xc3))) * (lon - 0.0) * $D2R AS robin_x,
-       |    $KRY * (yc0 + t * (yc1 + t * (yc2 + t * yc3))) *
-       |      (CASE WHEN lat < 0 THEN -1.0 ELSE 1.0 END) AS robin_y
-       |  FROM rob2),
-       |m0 AS (SELECT id, lon, pi() * sin(phi) AS tgt, phi AS th FROM base),
-       |$newton,
-       |mo AS (SELECT id, $KMX * (lon - 0.0) * $D2R * cos(th) AS moll_x,
-       |    $KMY * sin(th) AS moll_y FROM m10),
-       |e0 AS (SELECT id, lon, asin($M * sin(phi)) AS th FROM base),
-       |e1 AS (SELECT id, lon, th, th * th AS t2 FROM e0),
-       |e2 AS (SELECT id, lon, th, t2, t2 * t2 * t2 AS t6 FROM e1),
-       |ee AS (SELECT id,
-       |    (lon - 0.0) * $D2R * cos(th) /
-       |      ($M * ($A1 + 3.0 * $A2 * t2 + t6 * (7.0 * $A3 + 9.0 * $A4 * t2))) * $AL AS eqe_x,
-       |    th * ($A1 + $A2 * t2 + t6 * ($A3 + $A4 * t2)) * $AL AS eqe_y
-       |  FROM e2),
-       |si AS (SELECT id, (lon - 0.0) * $D2R * cos(phi) * $AL AS sinu_x,
-       |    phi * $AL AS sinu_y FROM base),
-       |st0 AS (SELECT id, sin(phi) AS sin_p, cos(phi) AS cos_p,
-       |    (lon - 0.0) * $D2R AS dlr FROM base),
-       |st AS (SELECT id,
-       |    $K2A / (1.0 + $SIN0 * sin_p + $COS0 * cos_p * cos(dlr)) * cos_p * sin(dlr) AS stere_x,
-       |    $K2A / (1.0 + $SIN0 * sin_p + $COS0 * cos_p * cos(dlr)) *
-       |      ($COS0 * sin_p - $SIN0 * cos_p * cos(dlr)) AS stere_y
-       |  FROM st0)
-       |SELECT rob.id,
-       |  CAST(floor(robin_x * 100.0) AS BIGINT) AS robin_x,
-       |  CAST(floor(robin_y * 100.0) AS BIGINT) AS robin_y,
-       |  CAST(floor(moll_x * 100.0) AS BIGINT) AS moll_x,
-       |  CAST(floor(moll_y * 100.0) AS BIGINT) AS moll_y,
-       |  CAST(floor(sinu_x * 100.0) AS BIGINT) AS sinu_x,
-       |  CAST(floor(sinu_y * 100.0) AS BIGINT) AS sinu_y,
-       |  CAST(floor(eqe_x * 100.0) AS BIGINT) AS eqe_x,
-       |  CAST(floor(eqe_y * 100.0) AS BIGINT) AS eqe_y,
-       |  CAST(floor(stere_x * 100.0) AS BIGINT) AS stere_x,
-       |  CAST(floor(stere_y * 100.0) AS BIGINT) AS stere_y
-       |FROM rob JOIN mo USING (id) JOIN ee USING (id) JOIN si USING (id) JOIN st USING (id)
-       |ORDER BY rob.id""".stripMargin
-  }
-
-  /** The q_simplify_dp SQL: the Douglas–Peucker RECURSION itself mirrored —
-   * a recursive CTE splits each (lo, hi) span at its max-perpendicular
-   * vertex (argmax via ORDER BY d DESC, i — first-max like the Scala scan),
-   * thresholds clamped by the enclosing span. The perpendicular-distance
-   * arithmetic matches Simplify.perpDistance op for op, so thresholds are
-   * bit-identical and the count needs no floor guard. */
-  private lazy val simplifyDpSql: String = {
-    val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-    val perp =
-      """CASE WHEN (b.x - a.x) * (b.x - a.x) + (b.y - a.y) * (b.y - a.y) = 0
-        |  THEN sqrt((v.x - a.x) * (v.x - a.x) + (v.y - a.y) * (v.y - a.y))
-        |  ELSE abs((v.x - a.x) * (b.y - a.y) - (v.y - a.y) * (b.x - a.x))
-        |       / sqrt((b.x - a.x) * (b.x - a.x) + (b.y - a.y) * (b.y - a.y)) END""".stripMargin
-    def split(a: String): String =
-      s"""SELECT $a.ring, $a.lo, $a.hi,
-         |  (SELECT v.i FROM verts v
-         |    JOIN verts a ON a.ring = $a.ring AND a.i = $a.lo
-         |    JOIN verts b ON b.ring = $a.ring AND b.i = $a.hi
-         |    WHERE v.ring = $a.ring AND v.i > $a.lo AND v.i < $a.hi
-         |    ORDER BY ($perp) DESC, v.i LIMIT 1) AS maxi,
-         |  least((SELECT max($perp) FROM verts v
-         |    JOIN verts a ON a.ring = $a.ring AND a.i = $a.lo
-         |    JOIN verts b ON b.ring = $a.ring AND b.i = $a.hi
-         |    WHERE v.ring = $a.ring AND v.i > $a.lo AND v.i < $a.hi), $a.enc) AS t
-         |FROM segs $a WHERE $a.hi - $a.lo >= 2""".stripMargin
-    s"""WITH RECURSIVE v0(pk, ring, i, x, y) AS (
-       |  VALUES ${Synthetic.ringVertsSqlValues(layer)}),
-       |verts AS (
-       |  SELECT ring, i, CAST(x AS DOUBLE) AS x, CAST(y AS DOUBLE) AS y FROM v0
-       |  UNION ALL
-       |  SELECT ring, (SELECT max(i) + 1 FROM v0 w WHERE w.ring = v0.ring) AS i,
-       |    CAST(x AS DOUBLE), CAST(y AS DOUBLE) FROM v0 WHERE i = 0),
-       |meta AS (SELECT ring, max(i) AS n1 FROM verts GROUP BY ring),
-       |segs(ring, lo, hi, enc) AS (
-       |  SELECT ring, 0, n1, 1e308 FROM meta
-       |  UNION ALL
-       |  SELECT sp.ring, u.clo, u.chi, sp.t
-       |  FROM (${split("s")}) sp, LATERAL (VALUES (sp.lo, sp.maxi), (sp.maxi, sp.hi)) u(clo, chi)
-       |),
-       |thr AS (SELECT sp2.maxi AS i, sp2.ring, sp2.t FROM (${split("s2")}) sp2)
-       |SELECT CAST(m.ring AS BIGINT) AS ring_id,
-       |  CAST(m.n1 + 1 AS BIGINT) AS n_before,
-       |  CAST(2 + coalesce(k.n, 0) AS BIGINT) AS n_after
-       |FROM meta m LEFT JOIN (
-       |  SELECT ring, count(*) AS n FROM thr WHERE t >= 0.35 GROUP BY ring) k
-       |  ON k.ring = m.ring
-       |ORDER BY ring_id""".stripMargin
-  }
-
-  /** The q_proj_path SQL: the densified-reprojection RECURSION mirrored —
-   * a recursive CTE bisects each projected segment at the unprojected
-   * midpoint while the projected midpoint deviates from the chord by more
-   * than interval/2 (sinusoidal forward is closed-form, so every comparison
-   * is bit-identical and inserted-vertex counts are exact). */
-  private lazy val projPathSql: String = {
-    val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-    val D2R = dl(Crs.D2R); val RA = dl(Crs.A)
-    val interval = 20000.0
-    val maxDevSq = dl(interval * interval * 0.25)
-    val minIntSq = dl(interval * interval * 25.0)
-    def fwdX(lon: String, lat: String) = s"(($lon - 0.0) * $D2R * cos($lat * $D2R) * $RA)"
-    def fwdY(lat: String) = s"(($lat * $D2R) * $RA)"
-    // squared distance of projected midpoint (px,py) to chord (x0,y0)-(x2,y2),
-    // same clamped-t arithmetic as Crs.pointSegDistSq
-    def devSq(px: String, py: String): String =
-      s"""(CASE WHEN (x2 - x0) * (x2 - x0) + (y2 - y0) * (y2 - y0) = 0
-         |  THEN ($px - x0) * ($px - x0) + ($py - y0) * ($py - y0)
-         |  ELSE ($px - (x0 + greatest(0.0, least(1.0,
-         |      (($px - x0) * (x2 - x0) + ($py - y0) * (y2 - y0)) /
-         |      ((x2 - x0) * (x2 - x0) + (y2 - y0) * (y2 - y0)))) * (x2 - x0)))
-         |     * ($px - (x0 + greatest(0.0, least(1.0,
-         |      (($px - x0) * (x2 - x0) + ($py - y0) * (y2 - y0)) /
-         |      ((x2 - x0) * (x2 - x0) + (y2 - y0) * (y2 - y0)))) * (x2 - x0)))
-         |   + ($py - (y0 + greatest(0.0, least(1.0,
-         |      (($px - x0) * (x2 - x0) + ($py - y0) * (y2 - y0)) /
-         |      ((x2 - x0) * (x2 - x0) + (y2 - y0) * (y2 - y0)))) * (y2 - y0)))
-         |     * ($py - (y0 + greatest(0.0, least(1.0,
-         |      (($px - x0) * (x2 - x0) + ($py - y0) * (y2 - y0)) /
-         |      ((x2 - x0) * (x2 - x0) + (y2 - y0) * (y2 - y0)))) * (y2 - y0))) END)""".stripMargin
-    // split predicate over a node (lng0, lat0, x0, y0, lng2, lat2, x2, y2)
-    val mid =
-      s"""SELECT *,
-         |  ${fwdX("((lng0 + lng2) / 2.0)", "((lat0 + lat2) / 2.0)")} AS px,
-         |  ${fwdY("((lat0 + lat2) / 2.0)")} AS py FROM NODE_SRC"""
-        .stripMargin
-    val splitCond =
-      s"""${devSq("px", "py")} > $maxDevSq
-         |  AND sqrt((lng0 - lng2) * (lng0 - lng2) + (lat0 - lat2) * (lat0 - lat2)) > 0.01""".stripMargin
-    s"""WITH RECURSIVE v0(pk, ring, i, x, y) AS (
-       |  VALUES ${Synthetic.ringVertsSqlValues(layer)}),
-       |verts AS (
-       |  SELECT ring, i, CAST(x AS DOUBLE) * 3.6 - 180.0 AS lng, CAST(y AS DOUBLE) * 1.7 - 85.0 AS lat FROM v0
-       |  UNION ALL
-       |  SELECT ring, (SELECT max(i) + 1 FROM v0 w WHERE w.ring = v0.ring) AS i,
-       |    CAST(x AS DOUBLE) * 3.6 - 180.0, CAST(y AS DOUBLE) * 1.7 - 85.0 FROM v0 WHERE i = 0),
-       |pverts AS (SELECT ring, i, lng, lat,
-       |    ${fwdX("lng", "lat")} AS x, ${fwdY("lat")} AS y FROM verts),
-       |seed AS (SELECT a.ring, a.i AS seg,
-       |    a.lng AS lng0, a.lat AS lat0, a.x AS x0, a.y AS y0,
-       |    b.lng AS lng2, b.lat AS lat2, b.x AS x2, b.y AS y2
-       |  FROM pverts a JOIN pverts b ON b.ring = a.ring AND b.i = a.i + 1
-       |  WHERE (b.x - a.x) * (b.x - a.x) + (b.y - a.y) * (b.y - a.y) > $minIntSq),
-       |nodes(ring, seg, lng0, lat0, x0, y0, lng2, lat2, x2, y2) AS (
-       |  SELECT ring, seg, lng0, lat0, x0, y0, lng2, lat2, x2, y2 FROM seed
-       |  UNION ALL
-       |  SELECT m.ring, m.seg,
-       |    CASE WHEN u.side = 0 THEN m.lng0 ELSE (m.lng0 + m.lng2) / 2.0 END,
-       |    CASE WHEN u.side = 0 THEN m.lat0 ELSE (m.lat0 + m.lat2) / 2.0 END,
-       |    CASE WHEN u.side = 0 THEN m.x0 ELSE m.px END,
-       |    CASE WHEN u.side = 0 THEN m.y0 ELSE m.py END,
-       |    CASE WHEN u.side = 0 THEN (m.lng0 + m.lng2) / 2.0 ELSE m.lng2 END,
-       |    CASE WHEN u.side = 0 THEN (m.lat0 + m.lat2) / 2.0 ELSE m.lat2 END,
-       |    CASE WHEN u.side = 0 THEN m.px ELSE m.x2 END,
-       |    CASE WHEN u.side = 0 THEN m.py ELSE m.y2 END
-       |  FROM (${mid.replace("NODE_SRC", "nodes")}) m, (VALUES (0), (1)) u(side)
-       |  WHERE $splitCond),
-       |splits AS (SELECT ring, count(*) AS n FROM (${mid.replace("NODE_SRC", "nodes")}) m
-       |  WHERE $splitCond GROUP BY ring),
-       |meta AS (SELECT ring, count(*) AS nv FROM verts GROUP BY ring)
-       |SELECT CAST(m.ring AS BIGINT) AS ring_id,
-       |  CAST(m.nv AS BIGINT) AS n_before,
-       |  CAST(m.nv + coalesce(s.n, 0) AS BIGINT) AS n_after
-       |FROM meta m LEFT JOIN splits s ON s.ring = m.ring
-       |ORDER BY ring_id""".stripMargin
-  }
-
-  /** The q_data_fill SQL: the modal-neighbor contagion unrolled to 20
-   * rounds (the operator's maxRounds) — each round every still-null cell
-   * adopts the modal value of its filled neighbors (ties → smallest value).
-   * Extra rounds past convergence are no-ops, so the unroll is exact. */
-  private lazy val dataFillSql: String = {
-    val rounds = (1 to 20).map { k =>
-      s"""g$k AS (SELECT u.id, fn.value AS nval, count(*) AS c
-         |  FROM f${k - 1} u
-         |  JOIN adj ON adj.a = u.id
-         |  JOIN f${k - 1} fn ON fn.id = adj.b AND fn.value IS NOT NULL
-         |  WHERE u.value IS NULL GROUP BY u.id, fn.value),
-         |h$k AS (SELECT id, nval FROM (
-         |    SELECT id, nval, row_number() OVER (PARTITION BY id ORDER BY c DESC, nval) AS rn
-         |    FROM g$k) t WHERE rn = 1),
-         |f$k AS MATERIALIZED (SELECT f.id, coalesce(f.value, h.nval) AS value
-         |  FROM f${k - 1} f LEFT JOIN h$k h USING (id))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $ptsSql,
-       |cells AS (SELECT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-       |    CAST(floor(y / 10.0) AS BIGINT) AS cy, min(id) AS min_id
-       |  FROM pts GROUP BY 1, 2),
-       |base AS (SELECT cx * 1000 + cy AS id,
-       |    CASE WHEN min_id % 3 = 0 THEN 'c' || CAST(min_id % 7 AS VARCHAR) ELSE NULL END AS value,
-       |    cx, cy FROM cells),
-       |adj0 AS (SELECT a.id AS a, b.id AS b FROM base a JOIN base b
-       |  ON (abs(a.cx - b.cx) + abs(a.cy - b.cy)) = 1 AND a.id < b.id),
-       |adj AS (SELECT a, b FROM adj0 UNION SELECT b AS a, a AS b FROM adj0),
-       |f0 AS MATERIALIZED (SELECT id, value FROM base),
-       |$rounds
-       |SELECT id, value FROM f20 ORDER BY id""".stripMargin
-  }
-
-  // ------------------------------------------- minhash/simhash SQL mirrors
-
-  /** 64-bit wrap arithmetic helpers for DuckDB: Scala's Long multiply/add
-   * wrap mod 2^64; DuckDB BIGINT overflow throws, so the mirrors run in
-   * HUGEINT with an explicit 32-bit-limb decomposition for 64×64 products. */
-  private object WrapSql {
-    final val M64 = "18446744073709551616"
-    final val M32 = 4294967296L
-    final val Golden = java.lang.Long.parseUnsignedLong("9e3779b97f4a7c15", 16)
-    final val C1 = java.lang.Long.parseUnsignedLong("bf58476d1ce4e5b9", 16)
-    final val C2 = java.lang.Long.parseUnsignedLong("94d049bb133111eb", 16)
-    def u(v: Long): String = java.lang.Long.toUnsignedString(v)
-
-    /** (z * c) mod 2^64 via limbs: z*c_lo + ((z_lo? no — z*c_hi mod 2^32)<<32. */
-    def wrapMul(z: String, c: Long, out: String): String = {
-      val clo = java.lang.Long.remainderUnsigned(c, M32)
-      s"CAST(((CAST($z AS HUGEINT) % $M32) * CAST('${u(c)}' AS HUGEINT) " +
-        s"+ (((CAST($z AS HUGEINT) // $M32) * $clo) % $M32) * $M32) " +
-        s"% $M64 AS UBIGINT) AS $out"
-    }
-
-    /** The SplitMix64 finalizer as a 6-CTE chain over `{p}in(_zin)` → `{p}out(.., out)`. */
-    def splitmix(p: String, zin: String, out: String): String =
-      s"""${p}a AS (SELECT *, CAST((CAST($zin AS HUGEINT) + CAST('${u(Golden)}' AS HUGEINT)) % $M64 AS UBIGINT) AS _z0 FROM ${p}in),
-         |${p}b AS (SELECT *, xor(_z0, _z0 >> 30) AS _z1 FROM ${p}a),
-         |${p}c AS (SELECT *, ${wrapMul("_z1", C1, "_z2")} FROM ${p}b),
-         |${p}d AS (SELECT *, xor(_z2, _z2 >> 27) AS _z3 FROM ${p}c),
-         |${p}e AS (SELECT *, ${wrapMul("_z3", C2, "_z4")} FROM ${p}d),
-         |${p}out AS (SELECT * EXCLUDE (_z0, _z1, _z2, _z3, _z4), xor(_z4, _z4 >> 31) AS $out FROM ${p}e)""".stripMargin
-
-    /** Shared CTE chain: documents → words → java word hashCodes → 3-word
-     * shingle hashes through the SplitMix64 finalizer (mirror of
-     * Dedup.shingleHashes, incl. the <3-word joined-string fallback). */
-    lazy val shinglesCte: String = {
-      val h64 = {
-        var expr = "CAST(1125899906842597 AS HUGEINT)"
-        for (off <- Seq("i", "i+1", "i+2")) {
-          val w = s"((CAST(whs[$off] AS HUGEINT) % $M64 + $M64) % $M64)"
-          expr = s"(($expr * 31 + $w) % $M64)"
-        }
-        s"CAST($expr AS UBIGINT)"
-      }
-      val jreduce = "list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-        "list_transform(string_split(array_to_string(words, ' '), ''), " +
-        s"ch -> CAST(unicode(ch) AS BIGINT))), (acc, c) -> (31 * acc + c) % $M32)"
-      s"""docs AS (SELECT doc_id AS id, coalesce(text, '') AS text FROM documents),
-         |w AS (SELECT id, list_filter(string_split_regex(lower(text), '\\W+'), x -> x <> '') AS words FROM docs),
-         |wh AS (SELECT id, len(words) AS nw,
-         |    list_transform(
-         |      list_transform(words, wd -> list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |        list_transform(string_split(wd, ''), ch -> CAST(unicode(ch) AS BIGINT))),
-         |        (acc, c) -> (31 * acc + c) % $M32)),
-         |      m -> CASE WHEN m >= ${M32 / 2} THEN m - $M32 ELSE m END) AS whs
-         |  FROM w),
-         |sh0 AS (
-         |  SELECT id, $h64 AS h64
-         |  FROM wh, unnest(range(1, nw - 1)) t(i) WHERE nw >= 3
-         |  UNION ALL
-         |  SELECT id,
-         |    CAST((CASE WHEN jm >= ${M32 / 2} THEN CAST(jm AS HUGEINT) - $M32 ELSE CAST(jm AS HUGEINT) END
-         |          % $M64 + $M64) % $M64 AS UBIGINT) AS h64
-         |  FROM (SELECT id, nw, $jreduce AS jm
-         |        FROM wh JOIN w USING (id) WHERE nw < 3 AND nw > 0) short),
-         |smin AS (SELECT id, h64 AS _zin FROM sh0),
-         |${splitmix("sm", "_zin", "sh")},
-         |shingles AS (SELECT id, sh FROM smout)""".stripMargin
-    }
-  }
-
-  /** q_minhash_pairs SQL: the FULL MinHash+LSH pipeline mirrored — java
-   * String.hashCode per word, 64-bit polynomial shingle hash, SplitMix64
-   * finalizer (limb multiply), 64 XOR-permutations with signed minima,
-   * 16×4 band folds, bucket self-join, exact distinct-shingle Jaccard. */
-  private lazy val minhashSql: String = {
-    import WrapSql._
-    val gk = (0 until 64).map { k =>
-      s"($k, CAST('${u(k * Golden)}' AS UBIGINT))"
-    }.mkString(", ")
-    var bexpr = "CAST(b AS HUGEINT)"
-    for (ri <- 0 until 4)
-      bexpr = s"(($bexpr * 1000003 + max(CASE WHEN ri = $ri THEN sigu END)) % $M64)"
-    s"""WITH $shinglesCte,
-       |dsh AS (SELECT id, list_distinct(list(sh)) AS s FROM shingles GROUP BY id),
-       |gk(k, g) AS (VALUES $gk),
-       |pkin AS (SELECT s.id, g.k, xor(s.sh, g.g) AS _zin FROM shingles s CROSS JOIN gk g),
-       |${splitmix("pk", "_zin", "ph")},
-       |sigs AS (SELECT id, k,
-       |    min(CASE WHEN ph >= 9223372036854775808 THEN CAST(CAST(ph AS HUGEINT) - $M64 AS BIGINT) ELSE CAST(ph AS BIGINT) END) AS sig
-       |  FROM pkout GROUP BY id, k),
-       |allsig AS (SELECT d.id, g.k, coalesce(s.sig, 9223372036854775807) AS sig
-       |  FROM docs d CROSS JOIN gk g LEFT JOIN sigs s ON s.id = d.id AND s.k = g.k),
-       |bandrows AS (SELECT id, k // 4 AS b, k % 4 AS ri,
-       |    (CAST(sig AS HUGEINT) % $M64 + $M64) % $M64 AS sigu
-       |  FROM allsig),
-       |bands AS (SELECT id, b, CAST($bexpr AS UBIGINT) AS bucket FROM bandrows GROUP BY id, b),
-       |cand AS (SELECT DISTINCT a.id AS a_id, b2.id AS b_id
-       |  FROM bands a JOIN bands b2 ON a.bucket = b2.bucket AND a.b = b2.b AND a.id < b2.id),
-       |jac AS (SELECT c.a_id, c.b_id,
-       |    CASE WHEN coalesce(len(da.s), 0) = 0 AND coalesce(len(db.s), 0) = 0 THEN 1.0
-       |    ELSE CAST(len(list_intersect(da.s, db.s)) AS DOUBLE) /
-       |      (coalesce(len(da.s), 0) + coalesce(len(db.s), 0) - len(list_intersect(da.s, db.s))) END AS jaccard
-       |  FROM cand c LEFT JOIN dsh da ON da.id = c.a_id LEFT JOIN dsh db ON db.id = c.b_id)
-       |SELECT a_id, b_id, jaccard FROM jac WHERE jaccard >= 0.3
-       |ORDER BY a_id, b_id""".stripMargin
-  }
-
-  /** q_simhash_pairs SQL: per-bit shingle majorities → 64-bit simhash,
-   * 16-bit band buckets, Hamming ≤ 8 via bit_count(xor). */
-  private lazy val simhashSql: String = {
-    import WrapSql._
-    s"""WITH $shinglesCte,
-       |bits AS (SELECT s.id, b.b, SUM(CAST((s.sh >> CAST(b.b AS INTEGER)) & 1 AS BIGINT)) AS cnt, count(*) AS n
-       |  FROM shingles s CROSS JOIN (SELECT unnest(range(0, 64)) AS b) b GROUP BY s.id, b.b),
-       |sh64 AS (SELECT id, SUM(CASE WHEN 2 * cnt - n > 0 THEN CAST(1 AS UBIGINT) << CAST(b AS INTEGER) ELSE CAST(0 AS UBIGINT) END) AS h
-       |  FROM bits GROUP BY id),
-       |allsh AS (SELECT d.id, CAST(coalesce(s.h, 0) AS UBIGINT) AS h FROM docs d LEFT JOIN sh64 s ON s.id = d.id),
-       |banded AS (SELECT id, h, (CAST(b AS UBIGINT) << 16) | ((h >> CAST(16 * b AS INTEGER)) & 65535) AS bucket
-       |  FROM allsh, unnest(range(0, 4)) t(b)),
-       |cand AS (SELECT DISTINCT a.id AS a_id, b2.id AS b_id, a.h AS a_h, b2.h AS b_h
-       |  FROM banded a JOIN banded b2 ON a.bucket = b2.bucket AND a.id < b2.id)
-       |SELECT a_id, b_id, CAST(bit_count(xor(a_h, b_h)) AS BIGINT) AS hamming
-       |FROM cand WHERE bit_count(xor(a_h, b_h)) <= 8
-       |ORDER BY a_id, b_id""".stripMargin
-  }
-
-  /** The q_grid_rhombus / q_grid_triangle SQL: the pointy-top hex lattice
-   * (floor/ceil ranges, centers) and the 6 ring-vertex offsets mirrored with
-   * interpolated constants; the vertex-mean center and shoelace areas are
-   * written as explicit left-associative chains so the FP op order matches
-   * the Scala kernels exactly. */
-  private def gridMirrorSql(rhombus: Boolean): String = {
-    val size = 4.0
-    val SQC = dl(math.sqrt(3.0) * size) // q pitch (= size * sqrt(3), same product)
-    val KC2 = dl(size * 1.5)
-    val offs = (0 until 6).map { i =>
-      val a = math.Pi / 6.0 + math.Pi / 3.0 * i
-      (dl(size * math.cos(a)), dl(size * math.sin(a)))
-    }
-    val vcols = offs.zipWithIndex.map { case ((ox, oy), i) =>
-      s"cx + $ox AS v${i}x, cy + $oy AS v${i}y"
-    }.mkString(",\n       |    ")
-    // k-expansion: which 3 (rhombus) / 2 (triangle) hex vertices + the mean
-    val cells =
-      if (rhombus)
-        Seq((0, Seq(0, 1, 2)), (1, Seq(2, 3, 4)), (2, Seq(4, 5, 0)))
-      else (0 until 6).map(k => (k, Seq(k, (k + 1) % 6)))
-    val aliases =
-      if (rhombus) Seq("ax", "ay", "bx", "by", "c2x", "c2y") else Seq("ax", "ay", "bx", "by")
-    val cellRows = cells.map { case (k, vs) =>
-      val coords = vs.flatMap(v => Seq(s"v${v}x", s"v${v}y")).zip(aliases)
-        .map { case (c, al) => s"$c AS $al" }.mkString(", ")
-      s"SELECT q, r, $k AS k, mx, my, $coords FROM hexm"
-    }.mkString("\n  UNION ALL\n  ")
-    val areaExpr =
-      if (rhombus) // closed ring [m, a, b, c, m]: 4 shoelace terms in loop order
-        "((mx * ay - ax * my) + (ax * by - bx * ay) + (bx * c2y - c2x * by) + (c2x * my - mx * c2y)) / 2.0"
-      else "((mx * ay - ax * my) + (ax * by - bx * ay) + (bx * my - mx * by)) / 2.0"
-    s"""WITH rr AS (SELECT unnest(range(-1, 6)) AS r),
-       |qq AS (SELECT r,
-       |    unnest(range(CAST(floor(0.0 / $SQC - CAST(r AS DOUBLE) / 2.0) AS BIGINT) - 1,
-       |                 CAST(ceil(30.0 / $SQC - CAST(r AS DOUBLE) / 2.0) AS BIGINT) + 2)) AS q
-       |  FROM rr),
-       |hex AS (SELECT q, r,
-       |    $SQC * (CAST(q AS DOUBLE) + CAST(r AS DOUBLE) / 2.0) AS cx,
-       |    $KC2 * CAST(r AS DOUBLE) AS cy
-       |  FROM qq),
-       |hexv AS (SELECT q, r,
-       |    $vcols
-       |  FROM hex),
-       |hexm AS (SELECT *,
-       |    (v0x + v1x + v2x + v3x + v4x + v5x) / 6.0 AS mx,
-       |    (v0y + v1y + v2y + v3y + v4y + v5y) / 6.0 AS my
-       |  FROM hexv),
-       |cells AS (
-       |  $cellRows)
-       |SELECT q, r, CAST(k AS BIGINT) AS k,
-       |  CAST(floor($areaExpr * 1000000.0) AS BIGINT) AS area_int,
-       |  CAST(floor(ax * 1000000.0) AS BIGINT) AS v1x_int,
-       |  CAST(floor(ay * 1000000.0) AS BIGINT) AS v1y_int
-       |FROM cells
-       |ORDER BY q, r, k""".stripMargin
-  }
-
-  /** Shared threshold machinery for the q_simplify* oracles: 14 unrolled
-   * weighted-Visvalingam elimination rounds over the 8 16-point paths,
-   * prefix-max clamp, sqrt*0.65 scaling, and the exact global rank-select
-   * cutoff — ends with CTEs `s0` (indexed vertices), `thrs` (g, vi, z per
-   * interior vertex) and `iv` (the pct=0.5 interval). Callers append their
-   * own final SELECT. */
-  private lazy val simplifyThrSql: String = {
-      val c65 = dl(0.65)
-      val c07 = dl(0.7)
-      val rounds = (1 to 14).map { k =>
-        s"""a$k AS (SELECT g, idx, x, y,
-           |  lag(x) OVER (PARTITION BY g ORDER BY idx) AS px,
-           |  lag(y) OVER (PARTITION BY g ORDER BY idx) AS py,
-           |  lead(x) OVER (PARTITION BY g ORDER BY idx) AS nx,
-           |  lead(y) OVER (PARTITION BY g ORDER BY idx) AS ny
-           |  FROM s${k - 1} WHERE alive),
-           |v$k AS (SELECT g, idx,
-           |  (1.0 - CASE WHEN sqrt((px - x) * (px - x) + (py - y) * (py - y))
-           |              * sqrt((x - nx) * (x - nx) + (y - ny) * (y - ny)) > 0
-           |    THEN least(CAST(1.0 AS DOUBLE), greatest(CAST(-1.0 AS DOUBLE),
-           |      ((px - x) * (nx - x) + (py - y) * (ny - y))
-           |      / (sqrt((px - x) * (px - x) + (py - y) * (py - y))
-           |         * sqrt((x - nx) * (x - nx) + (y - ny) * (y - ny)))))
-           |    ELSE 0.0 END * $c07)
-           |  * abs(((py - ny) * (x - nx) + (y - ny) * (nx - px)) / 2.0) AS v
-           |  FROM a$k WHERE px IS NOT NULL AND nx IS NOT NULL),
-           |m$k AS MATERIALIZED (SELECT g, idx AS rem, v FROM (
-           |  SELECT g, idx, v, row_number() OVER (PARTITION BY g ORDER BY v, idx) AS rn
-           |  FROM v$k) WHERE rn = 1),
-           |s$k AS MATERIALIZED (SELECT s.g, s.idx, s.x, s.y,
-           |  s.alive AND s.idx <> m.rem AS alive
-           |  FROM s${k - 1} s JOIN m$k m ON s.g = m.g)""".stripMargin
-      }.mkString(",\n")
-      val rec = (1 to 14).map(k => s"SELECT $k AS k, g, rem, v FROM m$k")
-        .mkString("\nUNION ALL ")
-      s"""$ptsSql,
-         |s0 AS MATERIALIZED (SELECT CAST((id - 1) // 16 AS BIGINT) AS g,
-         |  row_number() OVER (PARTITION BY (id - 1) // 16 ORDER BY id) - 1 AS idx,
-         |  x, y, TRUE AS alive
-         |  FROM pts WHERE id >= 1 AND id <= 128),
-         |$rounds,
-         |rec AS ($rec),
-         |thr AS (SELECT g, rem AS vi, max(v) OVER (PARTITION BY g ORDER BY k) AS t FROM rec),
-         |thrs AS (SELECT g, vi, sqrt(t) * $c65 AS z FROM thr),
-         |iv AS (SELECT z AS iv FROM thrs ORDER BY z LIMIT 1 OFFSET 56)""".stripMargin
-  }
-
-
-  /** The q_subdivide_count SQL: Subdivide.byCount's data-dependent split
-   * cascade unrolled as a 10-round wavefront — each round counts points per
-   * current leaf and descends the members of over-threshold leaves one
-   * level (split axis = longer box side, mid = (lo+hi)/2, children 2k /
-   * 2k+1), carrying each point's leaf box through the rounds. Rounds past
-   * convergence are no-ops on both sides. */
-  private def subdivideMirrorSql: String = {
-    val rounds = (0 until 10).map { k =>
-      s"""c$k AS (SELECT leaf, count(*) AS c FROM l$k GROUP BY leaf),
-         |l${k + 1} AS (SELECT id, x, y,
-         |  CASE WHEN c > 100 THEN leaf * 2 + (CASE WHEN (CASE WHEN (x1 - x0) >= (y1 - y0)
-         |      THEN x < (x0 + x1) / 2.0 ELSE y < (y0 + y1) / 2.0 END) THEN 0 ELSE 1 END)
-         |    ELSE leaf END AS leaf,
-         |  CASE WHEN c > 100 AND (x1 - x0) >= (y1 - y0) AND x >= (x0 + x1) / 2.0
-         |    THEN (x0 + x1) / 2.0 ELSE x0 END AS x0,
-         |  CASE WHEN c > 100 AND NOT ((x1 - x0) >= (y1 - y0)) AND y >= (y0 + y1) / 2.0
-         |    THEN (y0 + y1) / 2.0 ELSE y0 END AS y0,
-         |  CASE WHEN c > 100 AND (x1 - x0) >= (y1 - y0) AND x < (x0 + x1) / 2.0
-         |    THEN (x0 + x1) / 2.0 ELSE x1 END AS x1,
-         |  CASE WHEN c > 100 AND NOT ((x1 - x0) >= (y1 - y0)) AND y < (y0 + y1) / 2.0
-         |    THEN (y0 + y1) / 2.0 ELSE y1 END AS y1
-         |  FROM l$k JOIN c$k USING (leaf))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH $ptsSql,
-       |ext AS (SELECT min(x) AS mnx, min(y) AS mny,
-       |    max(x) + ${dl(1e-9)} AS mxx, max(y) + ${dl(1e-9)} AS mxy FROM pts),
-       |l0 AS (SELECT id, x, y, CAST(1 AS BIGINT) AS leaf,
-       |    mnx AS x0, mny AS y0, mxx AS x1, mxy AS y1 FROM pts, ext),
-       |$rounds
-       |SELECT leaf AS leaf_id, count(*) AS n,
-       |  CAST(floor(min(x) * 1000.0) AS BIGINT) AS xmn_int,
-       |  CAST(floor(max(x) * 1000.0) AS BIGINT) AS xmx_int,
-       |  CAST(floor(min(y) * 1000.0) AS BIGINT) AS ymn_int,
-       |  CAST(floor(max(y) * 1000.0) AS BIGINT) AS ymx_int
-       |FROM l10 GROUP BY leaf ORDER BY leaf""".stripMargin
-  }
-
-  /** The q_grid_hex / q_grid_hex_flat SQL: the hexagon lattice itself —
-   * same hex CTE as [[gridMirrorSql]], emitting the hexagon's center,
-   * second vertex and 6-term shoelace area (loop order =
-   * Geom.signedRingArea). `flatTop = true` transposes the lattice
-   * (reference 'hex'): outer loop over q at 1.5·size pitch, vertices at
-   * 0°/60°/...; `false` is pointy-top (reference 'hex2'). */
-  private def hexMirrorSql(flatTop: Boolean): String = {
-    val size = 4.0
-    val SQC = dl(math.sqrt(3.0) * size)
-    val KC2 = dl(size * 1.5)
-    val vcols = (0 until 6).map { i =>
-      val a = (if (flatTop) 0.0 else math.Pi / 6.0) + math.Pi / 3.0 * i
-      s"cx + ${dl(size * math.cos(a))} AS v${i}x, cy + ${dl(size * math.sin(a))} AS v${i}y"
-    }.mkString(",\n       |    ")
-    val shoelace = (0 until 6).map { i =>
-      val j = (i + 1) % 6
-      s"(v${i}x * v${j}y - v${j}x * v${i}y)"
-    }.mkString(" + ")
-    val lattice = if (!flatTop)
-      s"""WITH rr AS (SELECT unnest(range(-1, 6)) AS r),
-         |qq AS (SELECT r,
-         |    unnest(range(CAST(floor(0.0 / $SQC - CAST(r AS DOUBLE) / 2.0) AS BIGINT) - 1,
-         |                 CAST(ceil(30.0 / $SQC - CAST(r AS DOUBLE) / 2.0) AS BIGINT) + 2)) AS q
-         |  FROM rr),
-         |hex AS (SELECT q, r,
-         |    $SQC * (CAST(q AS DOUBLE) + CAST(r AS DOUBLE) / 2.0) AS cx,
-         |    $KC2 * CAST(r AS DOUBLE) AS cy
-         |  FROM qq),"""
-    else
-      s"""WITH qq0 AS (SELECT unnest(range(-1, 7)) AS q),
-         |qq AS (SELECT q,
-         |    unnest(range(CAST(floor(0.0 / $SQC - CAST(q AS DOUBLE) / 2.0) AS BIGINT) - 1,
-         |                 CAST(ceil(20.0 / $SQC - CAST(q AS DOUBLE) / 2.0) AS BIGINT) + 2)) AS r
-         |  FROM qq0),
-         |hex AS (SELECT q, r,
-         |    $KC2 * CAST(q AS DOUBLE) AS cx,
-         |    $SQC * (CAST(r AS DOUBLE) + CAST(q AS DOUBLE) / 2.0) AS cy
-         |  FROM qq),"""
-    s"""$lattice
-       |hexv AS (SELECT q, r, cx, cy,
-       |    $vcols
-       |  FROM hex)
-       |SELECT q, r,
-       |  CAST(floor(cx * 1000000.0) AS BIGINT) AS cx_int,
-       |  CAST(floor(cy * 1000000.0) AS BIGINT) AS cy_int,
-       |  CAST(floor((($shoelace) / 2.0) * 1000000.0) AS BIGINT) AS area_int,
-       |  CAST(floor(v1x * 1000000.0) AS BIGINT) AS v1x_int,
-       |  CAST(floor(v1y * 1000000.0) AS BIGINT) AS v1y_int
-       |FROM hexv ORDER BY q, r""".stripMargin
-  }
-
-  /** Vincenty DIRECT 6-round unroll (the ellipsoidal AEQD / geodesic-buffer
-   * engine), as a CTE chain `base -> d0..d6 -> fin` over a caller-supplied
-   * `pp(keys..., lat1, lon1, azi, s)`; `fin` exposes lon1, phi2, l, azi2.
-   * Key columns are carried through every round. */
-  private def vincentyChainSql(keys: Seq[String]): String = {
-    val fC = dl(graft.geom.Crs.F)
-    val aC = dl(graft.geom.Crs.A)
-    val bC = dl(graft.geom.Crs.B)
-    val kc = keys.mkString(", ")
-    val rounds = (1 to 6).map { k =>
-      s"""d$k AS MATERIALIZED (SELECT $kc, lon1, s, sinA1, cosA1, sigma1,
-         |  sinU1, cosU1, sinAlpha, cos2Alpha, bigA, bigB,
-         |  cos(2.0 * sigma1 + sigma) AS c2m,
-         |  sin(sigma) AS ss, cos(sigma) AS cs,
-         |  s / ($bC * bigA) + bigB * ss * (c2m + bigB / 4.0 *
-         |    (cs * (-1.0 + 2.0 * c2m * c2m) -
-         |      bigB / 6.0 * c2m * (-3.0 + 4.0 * ss * ss) *
-         |        (-3.0 + 4.0 * c2m * c2m))) AS sigma
-         |  FROM d${k - 1})""".stripMargin
-    }.mkString(",\n")
-    s"""base AS (SELECT $kc, lon1, s,
-       |  sin(azi * (pi() / 180.0)) AS sinA1, cos(azi * (pi() / 180.0)) AS cosA1,
-       |  (1.0 - $fC) * tan(lat1 * (pi() / 180.0)) AS tanU1,
-       |  1.0 / sqrt(1.0 + tanU1 * tanU1) AS cosU1,
-       |  tanU1 * cosU1 AS sinU1,
-       |  atan2(tanU1, cosA1) AS sigma1,
-       |  cosU1 * sinA1 AS sinAlpha,
-       |  1.0 - sinAlpha * sinAlpha AS cos2Alpha,
-       |  cos2Alpha * ($aC * $aC - $bC * $bC) / ($bC * $bC) AS u2,
-       |  1.0 + u2 / 16384.0 * (4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2))) AS bigA,
-       |  u2 / 1024.0 * (256.0 + u2 * (-128.0 + u2 * (74.0 - 47.0 * u2))) AS bigB
-       |  FROM pp),
-       |d0 AS MATERIALIZED (SELECT $kc, lon1, s, sinA1, cosA1, sigma1,
-       |  sinU1, cosU1, sinAlpha, cos2Alpha, bigA, bigB,
-       |  s / ($bC * bigA) AS sigma FROM base),
-       |$rounds,
-       |fin AS (SELECT $kc, lon1,
-       |  cos(2.0 * sigma1 + sigma) AS c2m, sin(sigma) AS ss, cos(sigma) AS cs,
-       |  sinU1 * ss - cosU1 * cs * cosA1 AS tmp,
-       |  atan2(sinU1 * cs + cosU1 * ss * cosA1,
-       |    (1.0 - $fC) * sqrt(sinAlpha * sinAlpha + tmp * tmp)) AS phi2,
-       |  atan2(ss * sinA1, cosU1 * cs - sinU1 * ss * cosA1) AS lambda,
-       |  $fC / 16.0 * cos2Alpha * (4.0 + $fC * (4.0 - 3.0 * cos2Alpha)) AS cc,
-       |  lambda - (1.0 - cc) * $fC * sinAlpha * (sigma + cc * ss *
-       |    (c2m + cc * cs * (-1.0 + 2.0 * c2m * c2m))) AS l,
-       |  atan2(sinAlpha, -tmp) AS azi2
-       |  FROM d6)""".stripMargin
-  }
-
-  /** The q_dots SQL: rejection-sampled dot fill from pure SplitMix64
-   * arithmetic — nextLong call c returns mix(seed + c*GAMMA); draw j
-   * consumes calls 2j+1 (x) and 2j+2 (y); the rect-with-hole fixture makes
-   * even-odd containment a bbox test (accept unless strictly inside the
-   * hole), and the first 10 accepted draws are the dots. */
-  private lazy val dotsSql: String = {
-    import WrapSql._
-    val DBL = dl(1.1102230246251565e-16)
-    s"""WITH $ptsSql,
-       |gs AS (SELECT DISTINCT id % 8 AS g FROM pts),
-       |calls AS (SELECT g, CAST(g * 1000 + 7 AS UBIGINT) AS seed,
-       |    unnest(range(1, 401)) AS c FROM gs),
-       |smin AS (SELECT g, c,
-       |    CAST((CAST(seed AS HUGEINT) + (CAST(c - 1 AS HUGEINT) * CAST('${u(Golden)}' AS HUGEINT)) % $M64) % $M64 AS UBIGINT) AS _zin
-       |  FROM calls),
-       |${splitmix("sm", "_zin", "z")},
-       |dbls AS (SELECT g, c, CAST(z >> 11 AS DOUBLE) * $DBL AS d FROM smout),
-       |draws AS (SELECT a.g, (a.c - 1) // 2 AS j, a.d * 20.0 AS px, b.d * 10.0 AS py
-       |  FROM dbls a JOIN dbls b ON b.g = a.g AND b.c = a.c + 1
-       |  WHERE a.c % 2 = 1),
-       |acc AS (SELECT g, j, px, py,
-       |    row_number() OVER (PARTITION BY g ORDER BY j) - 1 AS k
-       |  FROM draws
-       |  WHERE NOT (px > 8.0 AND px < 12.0 AND py > 3.0 AND py < 7.0))
-       |SELECT g, CAST(k AS BIGINT) AS k,
-       |  CAST(floor(px * 1000000000.0) AS BIGINT) AS x_int,
-       |  CAST(floor(py * 1000000000.0) AS BIGINT) AS y_int
-       |FROM acc WHERE k < 10 ORDER BY g, k""".stripMargin
-  }
-
-  /** The q_dots_even SQL: dotFillEven replayed draw-by-draw. Two recursive
-   * state machines over the same SplitMix64 call positions the engine
-   * consumes — (1) the Fisher-Yates cell shuffle (calls 1..cells-1, one
-   * `(z>>>1) % (i+1)` swap per step), (2) the probe loop (probe p uses
-   * calls cells+2p / cells+2p+1): first-fill seeds one candidate per
-   * shuffled cell, then dart-throwing; the 3x3-occupancy-window
-   * min-distance test and the x0.9 relaxation every
-   * ceil(cells^0.8)-failed-probes are replayed per step with the placed
-   * points carried as list state. Sizing constants (cols/rows/cellSize/
-   * spacing) are interpolated from the same arithmetic the engine runs. */
-  private lazy val dotsEvenSql: String = {
-    import WrapSql._
-    val DBL = dl(1.1102230246251565e-16)
-    val n = 10
-    val ev = 1.0
-    val rings = Seq(oRect(0, 0, 20, 10), oRect(8, 3, 4, 4))
-    var bx0 = Double.MaxValue; var by0 = Double.MaxValue
-    var bx1 = Double.MinValue; var by1 = Double.MinValue
-    rings.foreach { r =>
-      var i = 0
-      while (i < r.length) {
-        bx0 = math.min(bx0, r(i)); bx1 = math.max(bx1, r(i))
-        by0 = math.min(by0, r(i + 1)); by1 = math.max(by1, r(i + 1))
-        i += 2
-      }
-    }
-    val w = bx1 - bx0; val h = by1 - by0
-    val shpArea = math.abs(rings.map { r =>
-      val m = r.length / 2
-      val xs = Array.tabulate(m)(i => r(i * 2))
-      val ys = Array.tabulate(m)(i => r(i * 2 + 1))
-      graft.geom.Geom.signedRingArea(xs, ys, 0, m)
-    }.sum)
-    val approxQueries = math.max(1L, math.round(n * (w * h) / shpArea))
-    val kf = 0.5 * (ev - 1.0) + 1.0
-    val approxCells = approxQueries * 0.9 * kf
-    val cols = math.max(1, math.round(math.sqrt(approxCells * w / h)).toInt)
-    val rows = math.max(1, math.ceil(cols * h / w).toInt)
-    val cellSize = w / cols
-    val cells = cols * rows
-    val sp0 = cellSize * 0.7 * ev
-    val relax = math.ceil(math.pow(cells.toDouble, 0.8)).toLong
-    val maxProbes = cells.toLong * 10 * math.max(1, n)
-    val maxCall = cells - 1 + 2 * maxProbes + 2
-    val CELL = dl(cellSize); val SP0 = dl(sp0)
-    val WC = dl(w); val HC = dl(h)
-    val X0C = dl(bx0); val Y0C = dl(by0); val Y1C = dl(by1)
-    def cellc(px: String) =
-      s"least(${cols - 1}, greatest(0, CAST(trunc(($px - $X0C) / $CELL) AS INT)))"
-    def cellr(py: String) =
-      s"least(${rows - 1}, greatest(0, CAST(trunc(($py - $Y0C) / $CELL) AS INT)))"
-    val usable =
-      s"len(list_filter(range(1, len(xs) + 1), ii -> " +
-        s"abs(${cellc("xs[CAST(ii AS INT)]")} - cc2) <= 1 AND " +
-        s"abs(${cellr("ys[CAST(ii AS INT)]")} - rr2) <= 1 AND " +
-        s"(xs[CAST(ii AS INT)] - px) * (xs[CAST(ii AS INT)] - px) + " +
-        s"(ys[CAST(ii AS INT)] - py) * (ys[CAST(ii AS INT)] - py) < sp * sp)) = 0"
-    s"""WITH RECURSIVE $ptsSql,
-       |gs AS (SELECT DISTINCT id % 8 AS g FROM pts),
-       |calls AS (SELECT g, CAST(g * 1000 + 7 AS UBIGINT) AS seed,
-       |    unnest(range(1, $maxCall)) AS c FROM gs),
-       |smin AS (SELECT g, c,
-       |    CAST((CAST(seed AS HUGEINT) + (CAST(c - 1 AS HUGEINT) * CAST('${u(Golden)}' AS HUGEINT)) % $M64) % $M64 AS UBIGINT) AS _zin
-       |  FROM calls),
-       |${splitmix("sm", "_zin", "z")},
-       |zz AS (SELECT g, c, z, CAST(z >> 11 AS DOUBLE) * $DBL AS d FROM smout),
-       |sh AS (
-       |  SELECT g, ${cells - 1} AS i, range(0, $cells) AS ord FROM gs
-       |  UNION ALL
-       |  SELECT g, i - 1,
-       |    [CASE WHEN kx = i THEN ord[j + 1]
-       |          WHEN kx = j THEN ord[i + 1]
-       |          ELSE ord[kx + 1] END FOR kx IN range(0, $cells)]
-       |  FROM (SELECT sh.g, sh.i, sh.ord,
-       |          CAST((zz.z >> 1) % CAST(sh.i + 1 AS UBIGINT) AS BIGINT) AS j
-       |        FROM sh JOIN zz ON zz.g = sh.g AND zz.c = $cells - sh.i) s
-       |  WHERE i > 0
-       |),
-       |shf AS (SELECT g, ord FROM sh WHERE i = 0),
-       |st AS (
-       |  SELECT g, 0 AS p, 0 AS placed,
-       |    CAST([] AS DOUBLE[]) AS xs, CAST([] AS DOUBLE[]) AS ys,
-       |    $SP0 AS sp, false AS done FROM gs
-       |  UNION ALL
-       |  SELECT g, p + 1,
-       |    CASE WHEN got THEN placed + 1 ELSE placed END,
-       |    CASE WHEN got THEN list_append(xs, px) ELSE xs END,
-       |    CASE WHEN got THEN list_append(ys, py) ELSE ys END,
-       |    CASE WHEN NOT got AND p >= $cells AND p % $relax = ${relax - 1} THEN sp * 0.9 ELSE sp END,
-       |    (CASE WHEN got THEN placed + 1 ELSE placed END) >= $n OR p + 1 >= $maxProbes
-       |  FROM (
-       |    SELECT *, ((p >= $cells OR py <= $Y1C) AND $usable
-       |        AND NOT (px > 8.0 AND px < 12.0 AND py > 3.0 AND py < 7.0)) AS got
-       |    FROM (
-       |      SELECT *, ${cellc("px")} AS cc2, ${cellr("py")} AS rr2
-       |      FROM (
-       |        SELECT st.g, st.p, st.placed, st.xs, st.ys, st.sp,
-       |          CASE WHEN st.p < $cells
-       |            THEN $X0C + (CAST(shf.ord[st.p + 1] % $cols AS DOUBLE) + a.d) * $CELL
-       |            ELSE $X0C + a.d * $WC END AS px,
-       |          CASE WHEN st.p < $cells
-       |            THEN $Y0C + (CAST(shf.ord[st.p + 1] // $cols AS DOUBLE) + b.d) * $CELL
-       |            ELSE $Y0C + b.d * $HC END AS py
-       |        FROM st
-       |          JOIN shf ON shf.g = st.g
-       |          JOIN zz a ON a.g = st.g AND a.c = $cells + 2 * st.p
-       |          JOIN zz b ON b.g = st.g AND b.c = $cells + 2 * st.p + 1
-       |        WHERE NOT st.done
-       |      ) c1
-       |    ) c2
-       |  ) c3
-       |),
-       |fin AS (SELECT g, xs, ys FROM st WHERE done)
-       |SELECT g, CAST(t.kx AS BIGINT) - 1 AS k,
-       |  CAST(floor(xs[CAST(t.kx AS INT)] * 1000000000.0) AS BIGINT) AS x_int,
-       |  CAST(floor(ys[CAST(t.kx AS INT)] * 1000000000.0) AS BIGINT) AS y_int
-       |FROM fin, (SELECT unnest(range(1, ${n + 1})) AS kx) t
-       |WHERE t.kx <= len(xs)
-       |ORDER BY g, k""".stripMargin
-  }
-
-  /** The q_seam_cut SQL: CutAtFaceSeams replayed end to end. Region =
-   * CahillKeyes.regionKey (octant*3 + side+1: octant from trunc((lon+180)/
-   * 90+1) with the 5→1 wrap and south remap, side from sign((lon+720)%90-
-   * 45)), evaluated through the engine's exact rad→deg round trip. Each
-   * region-changing segment runs the 40-halving bisection as a recursive
-   * CTE with the same (lo+hi)/2 chord interpolation; parts are assembled
-   * from cut ordinals (part p opens at cut p's hi point, closes at cut
-   * p+1's lo point). */
-  private lazy val seamCutSql: String = {
-    def regSql(px: String, py: String): String = {
-      val lon2 = s"((($px) * (pi() / 180.0)) * (180.0 / pi()))"
-      val lat2 = s"((($py) * (pi() / 180.0)) * (180.0 / pi()))"
-      val oct0 = s"CAST(trunc((($lon2 + 180.0) / 90.0) + 1.0) AS INT)"
-      val mer = s"(($lon2 + 720.0) % 90.0 - 45.0)"
-      val side = s"(CASE WHEN $mer < 0.0 THEN -1 WHEN $mer > 0.0 THEN 1 ELSE 0 END)"
-      val oct1 = s"(CASE WHEN $oct0 = 5 THEN 1 ELSE $oct0 END)"
-      val oct = s"(CASE WHEN $lat2 < 0.0 THEN ([0,6,7,8,5])[$oct1 + 1] ELSE $oct1 END)"
-      s"($oct * 3 + ($side + 1))"
-    }
-    s"""WITH RECURSIVE $ptsSql,
-       |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-       |vx AS (SELECT g, CAST(j AS INT) AS j,
-       |    (-170.0 + CAST(g % 7 AS DOUBLE) * 3.7) + CAST(j AS DOUBLE) * 38.3 AS px,
-       |    (5.0 + CAST(g % 5 AS DOUBLE) * 6.1) + CAST(j AS DOUBLE) * 0.9 AS py
-       |  FROM gs, (SELECT unnest(range(0, 8)) AS j) t),
-       |vreg AS (SELECT g, j, px, py, ${regSql("px", "py")} AS r FROM vx),
-       |seg AS (SELECT a.g, a.j, a.px AS sx, a.py AS sy, b.px AS ex, b.py AS ey,
-       |    a.r AS fs, b.r AS fe
-       |  FROM vreg a JOIN vreg b ON a.g = b.g AND b.j = a.j + 1),
-       |bis AS (
-       |  SELECT g, j, sx, sy, ex, ey, fs, 0 AS it,
-       |    CAST(0.0 AS DOUBLE) AS lo, CAST(1.0 AS DOUBLE) AS hi
-       |  FROM seg WHERE fs <> fe
-       |  UNION ALL
-       |  SELECT g, j, sx, sy, ex, ey, fs, it + 1,
-       |    CASE WHEN rm = fs THEN m ELSE lo END,
-       |    CASE WHEN rm = fs THEN hi ELSE m END
-       |  FROM (SELECT *, ${regSql("sx + (ex - sx) * m", "sy + (ey - sy) * m")} AS rm
-       |        FROM (SELECT *, (lo + hi) / 2.0 AS m FROM bis WHERE it < 40) b1) b2
-       |),
-       |cuts AS (SELECT g, j, sx + (ex - sx) * lo AS clx, sy + (ey - sy) * lo AS cly,
-       |    sx + (ex - sx) * hi AS chx, sy + (ey - sy) * hi AS chy
-       |  FROM bis WHERE it = 40),
-       |vp AS (SELECT v.g, v.j, v.px, v.py,
-       |    (SELECT count(*) FROM cuts c WHERE c.g = v.g AND c.j < v.j) AS part
-       |  FROM vx v),
-       |pa AS (SELECT g, part, count(*) AS nv,
-       |    arg_min(px, j) AS fvx, arg_min(py, j) AS fvy,
-       |    arg_max(px, j) AS lvx, arg_max(py, j) AS lvy
-       |  FROM vp GROUP BY g, part),
-       |co AS (SELECT g, row_number() OVER (PARTITION BY g ORDER BY j) AS p, chx, chy FROM cuts),
-       |cc AS (SELECT g, row_number() OVER (PARTITION BY g ORDER BY j) - 1 AS p, clx, cly FROM cuts)
-       |SELECT pa.g AS g, CAST(pa.part AS BIGINT) AS part,
-       |  CAST(pa.nv + (CASE WHEN co.p IS NULL THEN 0 ELSE 1 END)
-       |     + (CASE WHEN cc.p IS NULL THEN 0 ELSE 1 END) AS BIGINT) AS n_pts,
-       |  CAST(floor(coalesce(co.chx, pa.fvx) * 1000000000.0) AS BIGINT) AS x0_int,
-       |  CAST(floor(coalesce(co.chy, pa.fvy) * 1000000000.0) AS BIGINT) AS y0_int,
-       |  CAST(floor(coalesce(cc.clx, pa.lvx) * 1000000000.0) AS BIGINT) AS x1_int,
-       |  CAST(floor(coalesce(cc.cly, pa.lvy) * 1000000000.0) AS BIGINT) AS y1_int
-       |FROM pa LEFT JOIN co ON co.g = pa.g AND co.p = pa.part
-       |  LEFT JOIN cc ON cc.g = pa.g AND cc.p = pa.part
-       |ORDER BY pa.g, pa.part""".stripMargin
-  }
-
-  /** Morton cell-id mirror (CellIndex.encode): chained bitwise CTEs
-   * interleaving the biased 29-bit cell coords. The caller's `mzin` CTE
-   * must provide BIGINT `ix`, `iy` plus the carried `keep` columns; the
-   * produced `mz` CTE has `keep` + the encoded `cell`. */
-  private def mortonCtes(res: Int, keep: Seq[String]): String = {
-    val ks = keep.mkString(", ")
-    val steps = Seq(16 -> 281470681808895L, 8 -> 71777214294589695L,
-      4 -> 1085102592571150095L, 2 -> 3689348814741910323L,
-      1 -> 6148914691236517205L)
-    val chain = steps.zipWithIndex.map { case ((sh, m), i) =>
-      s"""mz${i + 1} AS (SELECT $ks, (zx | (zx << $sh)) & $m AS zx,
-         |    (zy | (zy << $sh)) & $m AS zy FROM mz$i)""".stripMargin
-    }.mkString(",\n")
-    s"""mz0 AS (SELECT $ks, (ix + 268435456) & 536870911 AS zx,
-       |    (iy + 268435456) & 536870911 AS zy FROM mzin),
-       |$chain,
-       |mz AS (SELECT $ks, (CAST($res AS BIGINT) << 58) | (zx << 1) | zy AS cell
-       |  FROM mz5)""".stripMargin
-  }
-
-  /** The q_albersusa SQL: the composite's full forward path — first-match
-   * bbox routing, each frame's ellipsoidal Albers (Snyder ch.14, same op
-   * order as the q_proj_crs aea mirror), then the placement affine — with
-   * every constant interpolated from the very [[Crs.AlbersUsa]] frames the
-   * Spark side uses (the q_proj_crs precedent: derived constants as
-   * byte-identical double literals). */
-  private lazy val albersUsaSql: String = {
-    import graft.geom.Crs
-    val frames = Seq(Crs.AlbersUsa.Main, Crs.AlbersUsa.AK, Crs.AlbersUsa.HI)
-    val D2R = dl(Crs.D2R); val E2 = dl(Crs.E2); val E = dl(Crs.E)
-    val OME2 = dl(1.0 - Crs.E2); val H2E = dl(1.0 / (2.0 * Crs.E))
-    val AL = dl(Crs.A)
-    def alb(f: Crs.AlbersUsa.Frame): Crs.Albers = f.proj.asInstanceOf[Crs.Albers]
-    val routing = frames.zipWithIndex.map { case (f, i) =>
-      val (x0, y0, x1, y1) = f.bbox
-      s"WHEN lon >= ${dl(x0)} AND lon <= ${dl(x1)} AND lat >= ${dl(y0)} AND lat <= ${dl(y1)} THEN $i"
-    }.mkString("\n       |    ")
-    def perFrame(name: String, v: Crs.AlbersUsa.Frame => Double): String =
-      "CASE frame " + frames.zipWithIndex.map { case (f, i) =>
-        s"WHEN $i THEN ${dl(v(f))}"
-      }.mkString(" ") + s" END AS $name"
-    s"""WITH $ptsSql,
-       |ll AS (SELECT id, x * 1.2 - 180.0 AS lon, y * 0.6 + 15.0 AS lat FROM pts),
-       |fr AS (SELECT id, lon, lat, CASE
-       |    $routing
-       |    ELSE -1 END AS frame FROM ll),
-       |prm AS (SELECT id, lon, lat, frame,
-       |  ${perFrame("nn", f => alb(f).n)},
-       |  ${perFrame("cc2", f => alb(f).c)},
-       |  ${perFrame("rho0v", f => alb(f).rho0)},
-       |  ${perFrame("lon0", f => alb(f).lon0Deg)},
-       |  ${perFrame("aff_a", f => f.affine._1)},
-       |  ${perFrame("aff_d", f => f.affine._4)},
-       |  ${perFrame("aff_tx", f => f.affine._5)},
-       |  ${perFrame("aff_ty", f => f.affine._6)}
-       |  FROM fr WHERE frame >= 0),
-       |tri AS (SELECT *, sin(lat * $D2R) AS sp FROM prm),
-       |qa AS (SELECT *, $OME2 * (sp / (1.0e0 - $E2 * sp * sp) -
-       |    $H2E * ln((1.0e0 - $E * sp) / (1.0e0 + $E * sp))) AS q FROM tri),
-       |pr AS (SELECT *, $AL * sqrt(cc2 - nn * q) / nn AS rho,
-       |  nn * (lon - lon0) * $D2R AS th FROM qa),
-       |xy AS (SELECT id, frame,
-       |  rho * sin(th) * aff_a + aff_tx AS px,
-       |  (rho0v - rho * cos(th)) * aff_d + aff_ty AS py FROM pr)
-       |SELECT id, CAST(frame AS BIGINT) AS frame,
-       |  CAST(floor(px * 100.0) AS BIGINT) AS x_int,
-       |  CAST(floor(py * 100.0) AS BIGINT) AS y_int
-       |FROM xy ORDER BY id""".stripMargin
-  }
-
-  /** The q_proj_crs SQL: same formulas (Snyder), same operation order, with
-   * all projection constants interpolated from the very [[Crs]] objects the
-   * Spark side uses — byte-identical double literals on both engines. */
-  private lazy val projCrsSql: String = {
-    val D2R = dl(Crs.D2R); val E2 = dl(Crs.E2); val E = dl(Crs.E)
-    val OME2 = dl(1.0 - Crs.E2); val H2E = dl(1.0 / (2.0 * Crs.E))
-    val AL = dl(Crs.A)
-    val NN = dl(crsAea.n); val CC = dl(crsAea.c); val RHO0 = dl(crsAea.rho0)
-    val NL = dl(crsLcc.n); val AF = dl(Crs.A * crsLcc.f); val RHO0L = dl(crsLcc.rho0)
-    val PI4 = dl(math.Pi / 4.0); val EH = dl(Crs.E / 2.0)
-    val K0 = dl(0.9996); val EP2 = dl(Crs.Ep2)
-    val M0C = dl(Crs.Mc0); val M2C = dl(Crs.Mc2); val M4C = dl(Crs.Mc4); val M6C = dl(Crs.Mc6)
-    val SIN0 = dl(math.sin(40.0 * Crs.D2R)); val COS0 = dl(math.cos(40.0 * Crs.D2R))
-    s"""WITH $ptsSql,
-       |ll AS (SELECT id, x * 3.6 - 180.0 AS lon, y * 1.7 - 85.0 AS lat FROM pts),
-       |tri AS (SELECT id, lon, lat,
-       |  sin(lat * $D2R) AS sp, cos(lat * $D2R) AS cp FROM ll),
-       |-- Albers (Snyder ch.14): q aux, rho, theta
-       |a1 AS (SELECT id, lon, lat,
-       |  $OME2 * (sp / (1.0e0 - $E2 * sp * sp) -
-       |    $H2E * ln((1.0e0 - $E * sp) / (1.0e0 + $E * sp))) AS q FROM tri),
-       |a2 AS (SELECT id, $AL * sqrt($CC - $NN * q) / $NN AS rho,
-       |  $NN * (lon - (-9.6e1)) * $D2R AS th FROM a1),
-       |aea AS (SELECT id, rho * sin(th) AS ax, $RHO0 - rho * cos(th) AS ay FROM a2),
-       |-- LCC (Snyder ch.15): t aux, rho, theta
-       |l1 AS (SELECT id, lon, lat,
-       |  tan($PI4 - (lat * $D2R) / 2.0e0) /
-       |    pow((1.0e0 - $E * sp) / (1.0e0 + $E * sp), $EH) AS t FROM tri),
-       |l2 AS (SELECT id, $AF * pow(t, $NL) AS rho,
-       |  $NL * (lon - (-9.6e1)) * $D2R AS th FROM l1),
-       |lcc AS (SELECT id, rho * sin(th) AS lx, $RHO0L - rho * cos(th) AS ly FROM l2),
-       |-- UTM (Snyder ch.8 series), zone per row, hemisphere by latitude
-       |u0 AS (SELECT id, lon, lat, sp, cp,
-       |  CAST(least(60, greatest(1, CAST(floor((lon + 1.8e2) / 6.0e0) AS BIGINT) + 1)) AS DOUBLE)
-       |    * 6.0e0 - 1.83e2 AS lon0 FROM tri),
-       |u1 AS (SELECT id, lat, sp, cp, sp / cp AS tp,
-       |  $AL / sqrt(1.0e0 - $E2 * sp * sp) AS nr,
-       |  (lon - lon0) * $D2R * cp AS aa FROM u0),
-       |u2 AS (SELECT id, lat, nr, aa, tp * tp AS t, $EP2 * cp * cp AS cc,
-       |  $AL * ($M0C * (lat * $D2R) - $M2C * sin(2.0e0 * (lat * $D2R)) +
-       |    $M4C * sin(4.0e0 * (lat * $D2R)) - $M6C * sin(6.0e0 * (lat * $D2R))) AS m,
-       |  sp / cp AS tp2 FROM u1),
-       |utm AS (SELECT id,
-       |  $K0 * nr * (aa + (1.0e0 - t + cc) * aa * aa * aa / 6.0e0 +
-       |    (5.0e0 - 1.8e1 * t + t * t + 7.2e1 * cc - 5.8e1 * $EP2) * pow(aa, 5) / 1.2e2)
-       |    + 5.0e5 AS ux,
-       |  $K0 * (m + nr * tp2 * (aa * aa / 2.0e0 +
-       |    (5.0e0 - t + 9.0e0 * cc + 4.0e0 * cc * cc) * pow(aa, 4) / 2.4e1 +
-       |    (6.1e1 - 5.8e1 * t + t * t + 6.0e2 * cc - 3.3e2 * $EP2) * pow(aa, 6) / 7.2e2))
-       |    + CASE WHEN lat < 0.0e0 THEN 1.0e7 ELSE 0.0e0 END AS uy
-       |  FROM u2),
-       |-- AEQD spherical (Snyder ch.25), center (40, -100)
-       |q1 AS (SELECT id, sp, cp, (lon - (-1.0e2)) * $D2R AS dl FROM tri),
-       |q2 AS (SELECT id, sp, cp, dl,
-       |  acos(greatest(-1.0e0, least(1.0e0, $SIN0 * sp + $COS0 * cp * cos(dl)))) AS c FROM q1),
-       |q3 AS (SELECT id, sp, cp, dl,
-       |  CASE WHEN c = 0.0e0 THEN 1.0e0 ELSE c / sin(c) END AS k FROM q2),
-       |adq AS (SELECT id, $AL * k * cp * sin(dl) AS qx,
-       |  $AL * k * ($COS0 * sp - $SIN0 * cp * cos(dl)) AS qy FROM q3)
-       |SELECT aea.id,
-       |  CAST(floor(ax * 1.0e2) AS BIGINT) AS aea_x,
-       |  CAST(floor(ay * 1.0e2) AS BIGINT) AS aea_y,
-       |  CAST(floor(lx * 1.0e2) AS BIGINT) AS lcc_x,
-       |  CAST(floor(ly * 1.0e2) AS BIGINT) AS lcc_y,
-       |  CAST(floor(ux * 1.0e2) AS BIGINT) AS utm_x,
-       |  CAST(floor(uy * 1.0e2) AS BIGINT) AS utm_y,
-       |  CAST(floor(qx * 1.0e2) AS BIGINT) AS adq_x,
-       |  CAST(floor(qy * 1.0e2) AS BIGINT) AS adq_y
-       |FROM aea JOIN lcc ON aea.id = lcc.id JOIN utm ON aea.id = utm.id
-       |  JOIN adq ON aea.id = adq.id
-       |ORDER BY aea.id""".stripMargin
-  }
-
-  /** Polygon-join fixtures: targets = the distinct cell squares of the derived
-   * points (built DISTRIBUTED — no collect); sources = three overlapping
-   * axis-aligned rectangles. */
-  private def polyJoinTargetsDf(s: SparkSession, dir: String): DataFrame = {
-    val mkSquare = udf { (cx: Long, cy: Long) =>
-      val x = cx * 10.0; val y = cy * 10.0
-      Array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y)
-    }
-    points(s, dir)
-      .select(floor(col("x") / 10.0).cast("long").as("cx"),
-        floor(col("y") / 10.0).cast("long").as("cy"))
-      .distinct()
-      .select((col("cx") * 100 + col("cy")).as("key"), mkSquare(col("cx"), col("cy")).as("ring"))
-  }
-
-  private val polyJoinSources: Seq[PolyJoin.Keyed] = Seq(
-    (100L, Seq(Array(5.0, 5.0, 55.0, 5.0, 55.0, 55.0, 5.0, 55.0, 5.0, 5.0))),
-    (101L, Seq(Array(45.0, 25.0, 95.0, 25.0, 95.0, 75.0, 45.0, 75.0, 45.0, 25.0))),
-    (102L, Seq(Array(25.0, 45.0, 75.0, 45.0, 75.0, 95.0, 25.0, 95.0, 25.0, 45.0))))
-
-  private def imagesDf(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll(".*/", "")
-    val path = Images.ensureParquet(s, DataRoot, tag, Images.rowsForSf(dir))
-    readParquetCached(s, path)
-  }
-
-  private def audioDf(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll(".*/", "")
-    val path = graft.tables.Audio.ensureParquet(s, DataRoot, tag,
-      graft.tables.Audio.rowsForSf(dir))
-    readParquetCached(s, path)
-  }
-
-  private def videoDf(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll(".*/", "")
-    val path = graft.tables.Video.ensureParquet(s, DataRoot, tag,
-      graft.tables.Video.rowsForSf(dir))
-    readParquetCached(s, path)
-  }
+  /** Test data of the mapshaper reference checkout, read by the reader
+   * queries (`entry.ReaderQueries`) and by their oracle SQL. */
+  final val ReferenceData: String = "/root/reference/test/data"
 
   /** Flagship query on sf=0.001: image table → cell ids → broadcast PIP join →
    * per-polygon counts + caption sample. Driver smoke-checks rows>0. */
@@ -2164,6389 +45,9 @@ object SparkEntry {
       .orderBy("poly_key")
   }
 
-  // ====================================================================== //
-  //  queries + oracleSql                                                   //
-  // ====================================================================== //
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ---------------- relational core (SURVEY §2.2/2.3/2.4) ----------------
-    "q_filter" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_quantity") >= 30 && col("l_returnflag") === "R")
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice"))
-        .orderBy("l_orderkey", "l_linenumber")),
-
-    "q_project_rename" -> ((s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey").as("pk"),
-        col("p_type").as("ptype"),
-        (col("p_retailprice") * 2.0).as("double_price"))
-        .orderBy("pk")),
-
-    "q_uniq" -> ((s, dir) => {
-      // (l_orderkey, l_linenumber) is NOT unique in the synthetic data — add
-      // l_partkey to the ordering so the kept row is deterministic.
-      val w = Window.partitionBy(col("l_orderkey")).orderBy(col("l_linenumber"), col("l_partkey"))
-      t(s, dir, "lineitem")
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber").cast("long").as("l_linenumber"))
-        .orderBy("l_orderkey")
-    }),
-
-    // -calc first= / last= (document order = deterministic key order)
-    "q_calc_firstlast" -> ((s, dir) => {
-      val k = (col("l_orderkey") * 8 + col("l_linenumber")) * 100000 + col("l_partkey")
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(min_by(col("l_extendedprice"), k).as("first_price"),
-          max_by(col("l_extendedprice"), k).as("last_price"),
-          count(lit(1)).as("n"))
-        .orderBy("l_returnflag")
-    }),
-
-    // -calc sums= + collectIds=: element-wise array sums (the Graft.calcSums
-    // posexplode/reassemble pipeline) over an integer-valued array field —
-    // order-independent exact sums — plus canonical-order id collection
-    // summarized as (count, min, max, sum) for the cell compare
-    "q_calc_sums" -> ((s, dir) => {
-      val rows = points(s, dir)
-        .withColumn("g", (col("id") % 5).cast("long"))
-        .withColumn("v", array(floor(col("x") * 1000.0), floor(col("y") * 1000.0),
-          col("id").cast("double")))
-      val sums = Graft.calcSums(rows, "g", "v")
-        .select(col("g"),
-          element_at(col("sums"), 1).cast("long").as("s_x"),
-          element_at(col("sums"), 2).cast("long").as("s_y"),
-          element_at(col("sums"), 3).cast("long").as("s_id"))
-      val ids = Graft.calcCollectIds(rows, "g", "id")
-        .select(col("g"), size(col("ids")).cast("long").as("n_ids"),
-          element_at(col("ids"), 1).as("id_min"),
-          element_at(col("ids"), -1).as("id_max"))
-      sums.join(ids, "g").orderBy("g")
-    }),
-
-    // -o precision=: coordinate rounding at export (round-to-increment with
-    // the reference's floor(x*inv + 0.5)/inv arithmetic) — exact mirror
-    "q_precision" -> ((s, dir) =>
-      points(s, dir).select(col("id"),
-          floor(roundCoord(col("x"), 0.25) * 1000000.0).cast("long").as("rx_int"),
-          floor(roundCoord(col("y") - 50.0, 0.25) * 1000000.0).cast("long").as("ry_int"),
-          floor(roundCoord(col("x"), 0.001) * 1000000.0).cast("long").as("rx3_int"))
-        .orderBy("id")),
-
-    // -uniq max_count=2 invert: the rows REMOVED by a keep-2 dedupe
-    "q_uniq_invert" -> ((s, dir) =>
-      Uniq(t(s, dir, "lineitem"), Seq("l_orderkey"),
-          Seq(col("l_linenumber"), col("l_partkey")), maxCount = 2, invert = true)
-        .select(col("l_orderkey"), col("l_partkey"),
-          col("l_linenumber").cast("long").as("l_linenumber"))
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey")),
-
-    // -uniq index: keep everything, annotate the 1-based occurrence index
-    "q_uniq_index" -> ((s, dir) =>
-      Uniq(t(s, dir, "lineitem"), Seq("l_orderkey"),
-          Seq(col("l_linenumber"), col("l_partkey")), index = true)
-        .select(col("l_orderkey"), col("l_partkey"),
-          col("l_linenumber").cast("long").as("l_linenumber"),
-          col("index").cast("long").as("occ"))
-        .orderBy("l_orderkey", "l_linenumber", "l_partkey")),
-
-    "q_sort" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"), col("l_extendedprice"))
-        .limit(100)),
-
-    "q_calc_global" -> ((s, dir) =>
-      t(s, dir, "lineitem").agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("l_quantity")).as("sum_qty"),
-        min(col("l_extendedprice")).as("min_price"),
-        max(col("l_extendedprice")).as("max_price"),
-        avg(col("l_quantity")).as("avg_qty"),
-        median(col("l_quantity")).as("med_qty"))),
-
-    "q_calc_group" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          count(lit(1)).as("n_rows"),
-          sum(col("l_quantity")).as("sum_qty"),
-          min(col("l_quantity")).as("min_qty"),
-          max(col("l_quantity")).as("max_qty"),
-          bool_and(col("l_quantity") > 10.0).as("all_gt10"),
-          bool_or(col("l_discount") > 0.09).as("any_disc"))
-        .orderBy("l_returnflag", "l_linestatus")),
-
-    "q_mode" -> ((s, dir) => {
-      val counts = t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_quantity"))
-        .agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy(col("l_returnflag")).orderBy(col("c").desc, col("l_quantity"))
-      counts.withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .select(col("l_returnflag"), col("l_quantity").as("mode_qty"))
-        .orderBy("l_returnflag")
-    }),
-
-    "q_attr_join" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      o.join(c, o("o_custkey") === c("c_custkey"), "left")
-        .select(col("o_orderkey"), col("o_custkey"), col("c_name"), col("c_acctbal"))
-        .orderBy("o_orderkey")
-    }),
-
-    "q_join_sum_fields" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem").groupBy(col("l_partkey"))
-        .agg(sum(col("l_quantity")).as("_sq"), count(lit(1)).as("_n"))
-      t(s, dir, "part")
-        .join(li, col("p_partkey") === col("l_partkey"), "left")
-        .select(col("p_partkey"),
-          coalesce(col("_sq"), lit(0.0)).as("sum_qty"),
-          coalesce(col("_n"), lit(0L)).as("n_matches"))
-        .orderBy("p_partkey")
-    }),
-
-    "q_join_duplication" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-      val li = t(s, dir, "lineitem")
-      p.join(li, p("p_partkey") === li("l_partkey"))
-        .select(col("p_partkey"), col("l_orderkey"),
-          col("l_linenumber").cast("long").as("l_linenumber"), col("p_brand"))
-        .orderBy("p_partkey", "l_orderkey", "l_linenumber")
-    }),
-
-    "q_join_unmatched" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      // every customer has some order, so anti-join the fulfilled ones only
-      val o = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
-      c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .select(col("c_custkey"), col("c_name"))
-        .orderBy("c_custkey")
-    }),
-
-    "q_join_calc" -> ((s, dir) => {
-      val agg = t(s, dir, "orders").groupBy(col("o_custkey")).agg(
-        count(lit(1)).as("_n"),
-        max(col("o_totalprice")).as("_mx"),
-        countDistinct(col("o_orderstatus")).as("_ns"))
-      t(s, dir, "customer")
-        .join(agg, col("c_custkey") === col("o_custkey"), "left")
-        .select(col("c_custkey"),
-          coalesce(col("_n"), lit(0L)).as("n_orders"),
-          col("_mx").as("max_price"),
-          coalesce(col("_ns"), lit(0L)).as("n_status"))
-        .orderBy("c_custkey")
-    }),
-
-    // ---------------- spatial: cells / PIP / kNN / dissolve ----------------
-    "q_cell_assign" -> ((s, dir) => {
-      // encode then decode: the oracle (plain floor arithmetic) also verifies
-      // the Morton encode/decode round trip inside cellId. Decode is the
-      // codegen CellCoordExpr (r6: was a boxed UDF allocating a tuple+array
-      // per row — guide §4.1, prefer codegen expressions on query paths).
-      import graft.functions.SpatialExprs
-      points(s, dir)
-        .withColumn("cell", cellId(col("x"), col("y"), 7))
-        .groupBy(SpatialExprs.cellX(col("cell")).as("cx"),
-          SpatialExprs.cellY(col("cell")).as("cy"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("cx", "cy")
-    }),
-
-    "q_pip_join" -> ((s, dir) =>
-      SpatialJoin.broadcastJoin(s, points(s, dir), "x", "y", Synthetic.oracleLayer)
-        .select(col("id"), col("poly_key"))
-        .orderBy("id", "poly_key")),
-
-    "q_pip_count" -> ((s, dir) =>
-      SpatialJoin.broadcastJoin(s, points(s, dir), "x", "y", Synthetic.oracleLayer)
-        .groupBy(col("poly_key"))
-        .agg(count(lit(1)).as("n_points"))
-        .orderBy("poly_key")),
-
-    // the cell-partitioned scale path (explode-to-cells equi-join + exact
-    // PIP + hot-cell salting) against the SAME ray-cast oracle as the
-    // broadcast path — saltThreshold=4 forces most cells through the salted
-    // branch, so the driver gate covers the 100-TB join shape, not just the
-    // broadcast fast path
-    "q_pip_cell" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.oracleLayer
-      val rings = (0 until layer.numRings).map { r =>
-        val s0 = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        (layer.shapeKeys(layer.ringShape(r)),
-          layer.xx.slice(s0, e).toSeq, layer.yy.slice(s0, e).toSeq)
-      }
-      val polyDf = rings.toDF("poly_key", "ring_x", "ring_y")
-      SpatialJoin.cellJoin(s, points(s, dir), "x", "y", polyDf, res = 5,
-          saltThreshold = 4)
-        .select(col("id"), col("poly_key"))
-        .orderBy("id", "poly_key")
-    }),
-
-    // first_match semantics: a point joins only its first (lowest-key) polygon
-    // (ref: first_match flag, point-polygon-join.mjs:33-47)
-    "q_pip_first" -> ((s, dir) => {
-      val bc = graft.index.LayerBroadcasts.of(s, Synthetic.oracleLayer)
-      points(s, dir)
-        .withColumn("poly_key", graft.functions.SpatialExprs.pipFirstKey(col("x"), col("y"), bc))
-        .filter(col("poly_key") >= 0)
-        .select("id", "poly_key")
-        .orderBy("id")
-    }),
-
-    // reverse join: polygon -> its points (min id + count per polygon)
-    "q_pip_reverse" -> ((s, dir) =>
-      SpatialJoin.broadcastJoin(s, points(s, dir), "x", "y", Synthetic.oracleLayer)
-        .groupBy(col("poly_key"))
-        .agg(min(col("id")).as("first_point"), count(lit(1)).as("n_points"))
-        .orderBy("poly_key")),
-
-    // -fuzzy-join: per polygon, mode of the matched points' category with
-    // margin and deterministic tie-break (smallest value wins)
-    "q_fuzzy_join" -> ((s, dir) => {
-      val joined = SpatialJoin.broadcastJoin(s, points(s, dir), "x", "y", Synthetic.oracleLayer)
-        .withColumn("cat", col("id") % 8)
-      JoinOp.modeWithMargin(joined, "poly_key", "cat")
-        .select(col("poly_key"), col("mode_value").as("mode_cat"),
-          col("mode_count"), col("margin"))
-        .orderBy("poly_key")
-    }),
-
-    // -fuzzy-join full surface (dedup_points + no_dropouts + distance tie
-    // resolution) over a derived grid-cell polygon layer: closed-cell PIP,
-    // FIXTURE INVARIANT: the mirror has no data-fill phase, which is exact
-    // because no cell can lose ALL its points to boundary first-match —
-    // derived coords first land exactly on a 10-grid line at id 10000
-    // (48271·id ≡ 0 mod 10^4), outside the sf0.01 gate range, and at higher
-    // SFs every cell holds many interior points.
-    // coincident planted duplicates, rare categories that drop out and get
-    // restored at their argmax-count cell — all phases exactly mirrored
-    "q_fuzzy_join_full" -> ((s, dir) => {
-      import s.implicits._
-      val pts0 = points(s, dir)
-        .withColumn("cat", when(col("id") % 97 === 0,
-          concat(lit("r"), (col("id") % 2).cast("string")))
-          .otherwise(concat(lit("c"), (col("id") % 5).cast("string"))))
-      // planted coincident duplicates: same (x, y, cat), higher point id
-      val dups = pts0.filter(col("id") % 10 === 0)
-        .withColumn("id", col("id") + 10000000L)
-      val pts = pts0.unionByName(dups)
-      val cells = pts0.select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy")).distinct()
-        .withColumn("key", col("cx") * 1000 + col("cy"))
-      val cellRows = cells.select("key", "cx", "cy")
-        .as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
-      val layer = PolygonLayer.fromShapes(cellRows.map { case (k, cx, cy) =>
-        val x0 = cx * 10.0; val y0 = cy * 10.0
-        k -> Seq(Array(x0, y0, x0 + 10, y0, x0 + 10, y0 + 10, x0, y0 + 10, x0, y0))
-      })
-      val adj = cells.as("a").join(cells.as("b"),
-          (abs(col("a.cx") - col("b.cx")) + abs(col("a.cy") - col("b.cy"))) === 1 &&
-            col("a.key") < col("b.key"))
-        .select(col("a.key").as("a"), col("b.key").as("b"), lit(10.0).as("w"))
-      FuzzyJoin.join(s, cells.select("key"), "key", pts, "id", "x", "y", "cat",
-          layer, adj, dedupPoints = true, noDropouts = true)
-        .orderBy("key")
-    }),
-
-    "q_clip_points" -> ((s, dir) =>
-      SpatialJoin.clipPoints(s, points(s, dir), "x", "y", Synthetic.oracleLayer)
-        .select(col("id")).orderBy("id")),
-
-    "q_erase_points" -> ((s, dir) =>
-      SpatialJoin.clipPoints(s, points(s, dir), "x", "y", Synthetic.oracleLayer, erase = true)
-        .select(col("id")).orderBy("id")),
-
-    "q_knn" -> ((s, dir) =>
-      Knn.knnJoin(s, points(s, dir), "id", "x", "y", k = 3)
-        .select(col("id"), col("rank").cast("long").as("rnk"), col("neighbor_id"))
-        .orderBy("id", "rnk")),
-
-    "q_dist_join" -> ((s, dir) =>
-      Knn.distanceJoin(s, points(s, dir), "id", "x", "y", radius = 2.0)
-        .select(col("a_id"), col("b_id"), col("dist2"))
-        .orderBy("a_id", "b_id")),
-
-    "q_dissolve" -> ((s, dir) => {
-      import s.implicits._
-      val cells = points(s, dir)
-        .select((col("id") % 4).as("g"),
-          floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"))
-        .distinct()
-      // unit-square ring from pure column arithmetic (r6: was a boxed UDF;
-      // integer-valued casts are exact, values bit-identical)
-      val x = col("cx").cast("double"); val y = col("cy").cast("double")
-      val rings = cells.withColumn("ring",
-        array(x, y, x + 1, y, x + 1, y + 1, x, y + 1, x, y))
-      Dissolve.dissolve(s, rings, "g", "ring")
-        .select(col("group").as("g"), col("n_rings_in").as("n_cells"),
-          col("n_boundary_edges"))
-        .orderBy("g")
-    }),
-
-    // -innerlines: edges shared by exactly two polygons (cell squares layer)
-    "q_innerlines" -> ((s, dir) => {
-      val cells = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"))
-        .distinct()
-      // 4 undirected canonical edges per square; shared edges have count 2
-      def edge(x1: Column, y1: Column, x2: Column, y2: Column) =
-        struct(x1.as("x1"), y1.as("y1"), x2.as("x2"), y2.as("y2"))
-      val edges = cells.select(
-        array(
-          edge(col("cx"), col("cy"), col("cx") + 1, col("cy")),
-          edge(col("cx"), col("cy") + 1, col("cx") + 1, col("cy") + 1),
-          edge(col("cx"), col("cy"), col("cx"), col("cy") + 1),
-          edge(col("cx") + 1, col("cy"), col("cx") + 1, col("cy") + 1)
-        ).as("es"))
-        .select(explode(col("es")).as("e"))
-      edges.groupBy(col("e")).agg(count(lit(1)).as("c"))
-        .filter(col("c") === 2)
-        .agg(count(lit(1)).as("n_inner_edges"))
-    }),
-
-    // ring signed areas (the -filter-islands / -filter-slivers base measure)
-    "q_ring_area" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.oracleLayer
-      (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r)
-        val n = layer.ringStart(r + 1) - st
-        val area = graft.geom.Geom.signedRingArea(layer.xx, layer.yy, st, n)
-        (layer.shapeKeys(layer.ringShape(r)), r.toLong, math.floor(area * 1000000.0).toLong)
-      }.toDF("poly_key", "ring", "area_int").orderBy("ring")
-    }),
-
-    "q_split_grid" -> ((s, dir) =>
-      Tiling.splitOnGrid(points(s, dir), "x", "y", 20.0)
-        .groupBy("grid_col", "grid_row")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("grid_col", "grid_row")),
-
-    // -points centroid: area-weighted shape centroids of the oracle layer,
-    // floor-scaled to kill last-ulp summation-order noise vs the SQL mirror
-    "q_centroid" -> ((s, dir) =>
-      Points.centroids(s, Synthetic.oracleLayer)
-        .select(col("poly_key"),
-          floor(col("cx") * 1000000.0).cast("long").as("cx_int"),
-          floor(col("cy") * 1000000.0).cast("long").as("cy_int"))
-        .orderBy("poly_key")),
-
-    // -explode / -points vertices: vertex counts per shape
-    "q_explode" -> ((s, dir) =>
-      Points.vertices(s, Synthetic.oracleLayer)
-        .groupBy(col("poly_key"))
-        .agg(countDistinct(col("ring")).as("n_rings"), count(lit(1)).as("n_vertices"))
-        .orderBy("poly_key")),
-
-    // -affine: rotate+scale+translate point coords (pure column arithmetic)
-    "q_affine" -> ((s, dir) =>
-      Points.affine(points(s, dir), "x", "y",
-        a = 0.8, b = -0.6, c = 0.6, d = 0.8, tx = 10.0, ty = -5.0)
-        .select(col("id"), col("ax"), col("ay"))
-        .orderBy("id")),
-
-    // -filter-geom: bbox containment predicate
-    "q_filter_bbox" -> ((s, dir) =>
-      points(s, dir)
-        .filter(Points.inBBox(col("x"), col("y"), 25.0, 25.0, 75.0, 75.0))
-        .select("id").orderBy("id")),
-
-    // -classify: equal-interval classification of a numeric field
-    "q_classify" -> ((s, dir) =>
-      t(s, dir, "part")
-        .select(col("p_partkey"),
-          Points.classify(col("p_retailprice"), 900.0, 100.0, 10).as("bin"))
-        .orderBy("p_partkey")),
-
-    // -merge-layers: schema-aligned union of two layers
-    "q_merge_layers" -> ((s, dir) => {
-      val a = t(s, dir, "customer").select(col("c_custkey").as("key"),
-        col("c_name").as("name"), lit("customer").as("layer"))
-      val b = t(s, dir, "supplier").select(col("s_suppkey").as("key"),
-        col("s_name").as("name"), lit("supplier").as("layer"))
-      a.unionByName(b).orderBy("layer", "key")
-    }),
-
-    // ---------------- events (windowed agg) ----------------
-    "q_events_window" -> ((s, dir) =>
-      t(s, dir, "events")
-        .groupBy(date_trunc("HOUR", col("ts")).as("hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          min(col("value")).as("min_value"),
-          max(col("value")).as("max_value"))
-        .orderBy("hour", "event_type")),
-
-    // gap-based sessionization (30-min gap per user), exact microsecond
-    // arithmetic — the batch analog of the streaming state machine
-    "q_sessionize" -> ((s, dir) =>
-      Sessionize.summarize(t(s, dir, "events"), "user_id", "ts", "event_id",
-          gapSeconds = 1800)
-        .orderBy("user_id", "session")),
-
-    // ---------------- documents: dedup + text analysis ----------------
-    "q_dedup_exact" -> ((s, dir) => {
-      val docs = t(s, dir, "documents").withColumn("_key", substring(col("text"), 1, 30))
-      Dedup.exact(docs, "doc_id", "_key")
-        .select(col("doc_id"), col("n_chars"))
-        .orderBy("doc_id")
-    }),
-
-    "q_token_count" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), size(split(col("text"), " ", -1)).cast("long").as("n_tokens"))
-        .orderBy("doc_id")),
-
-    "q_quality" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          floor(TextAnalysis.qualityScore(col("text")) * 1000000.0).cast("long").as("q_int"))
-        .orderBy("doc_id")),
-
-    "q_ann_topk" -> ((s, dir) =>
-      Ann.bruteForceTopK(s, t(s, dir, "embeddings"), "vec_id", "embedding", k = 3)
-        .select(col("id"), col("rank").cast("long").as("rnk"), col("neighbor_id"))
-        .orderBy("id", "rnk")),
-
-    // minhash/simhash: the full pipelines are mirrored in DuckDB (64-bit
-    // wrap arithmetic via HUGEINT limb decomposition — see WrapSql)
-    "q_minhash_pairs" -> ((s, dir) =>
-      Dedup.minhashPairs(s, t(s, dir, "documents"), "doc_id", "text", threshold = 0.3)
-        .orderBy("a_id", "b_id")),
-
-    "q_simhash_pairs" -> ((s, dir) =>
-      Dedup.simhashPairs(s, t(s, dir, "documents"), "doc_id", "text", maxHamming = 8)
-        .withColumn("hamming", col("hamming").cast("long"))
-        .orderBy("a_id", "b_id")),
-
-    "q_lang_id" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.langIdUdf(col("text")).as("lang_pred"))
-        .orderBy("doc_id")),
-
-    "q_fingerprint" -> ((s, dir) =>
-      t(s, dir, "documents")
-        .select(col("doc_id"), TextAnalysis.fingerprintUdf(col("text")).as("fp"))
-        .orderBy("doc_id")),
-
-    // embedding near-dup: the raw table has no pairs above 0.52 cosine, so
-    // near-duplicates are PLANTED deterministically — scaled copies (x2 is
-    // exact in binary FP: identical LSH sign bits, cosine 1) of every 4th
-    // vector. LSH multi-probe must recover exactly the planted pairs; the
-    // DuckDB oracle checks the full all-pairs cosine >= 0.95 set.
-    "q_embed_dedup" -> ((s, dir) => {
-      val base = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val planted = base.filter(col("vec_id") % 4 === 0)
-        .select((col("vec_id") + 1000000).as("vec_id"),
-          transform(col("embedding"), v => (v * lit(2.0f)).cast("float")).as("embedding"))
-      Dedup.embeddingPairs(s, base.unionByName(planted), "vec_id", "embedding",
-          threshold = 0.95)
-        .select(col("a_id"), col("b_id"))
-        .orderBy("a_id", "b_id")
-    }),
-
-    // exact n-gram (3-word shingle) Jaccard over all candidate pairs — the
-    // minhash verifier run exhaustively on a bounded slice so DuckDB can
-    // mirror it with list functions; integer (inter, union) outputs and an
-    // integer cross-multiplied threshold keep the compare FP-free
-    "q_jaccard_pairs" -> ((s, dir) => {
-      val w = array_remove(split(lower(col("text")), "\\W+"), "")
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 300)
-        .select(col("doc_id"), w.as("w"))
-        .filter(size(col("w")) >= 3)
-        .select(col("doc_id"), array_distinct(
-          transform(sequence(lit(0), size(col("w")) - 3),
-            i => concat_ws(" ",
-              element_at(col("w"), i + 1),
-              element_at(col("w"), i + 2),
-              element_at(col("w"), i + 3)))).as("s"))
-      val inter = size(array_intersect(col("a.s"), col("b.s")))
-      val uni = size(col("a.s")) + size(col("b.s")) - inter
-      docs.as("a").join(docs.as("b"), col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-          inter.cast("long").as("inter"), uni.cast("long").as("uni"))
-        .filter(col("inter") * 10 >= col("uni") * 3)
-        .orderBy("a_id", "b_id")
-    }),
-
-    "q_ann_lsh" -> ((s, dir) =>
-      Ann.lshTopK(s, t(s, dir, "embeddings"), "vec_id", "embedding", k = 3)
-        .select(col("id"), col("rank").cast("long").as("rnk"), col("neighbor_id"))
-        .orderBy("id", "rnk")),
-
-    "q_ann_ivf" -> ((s, dir) =>
-      Ann.ivfTopK(s, t(s, dir, "embeddings"), "vec_id", "embedding", k = 3,
-          nlist = 16, nprobe = 4)
-        .select(col("id"), col("rank").cast("long").as("rnk"), col("neighbor_id"))
-        .orderBy("id", "rnk")),
-
-    // ---------------- image table (north-rule ops; binary payloads) --------
-    "q_img_cell" -> ((s, dir) =>
-      imagesDf(s, dir)
-        .select(col("image_id"), col("phash"))
-        .withColumn("x", phashLon(col("phash")))
-        .withColumn("y", phashLat(col("phash")))
-        .withColumn("cell_id", cellId(col("x"), col("y"), 6))
-        .groupBy("cell_id").agg(count(lit(1)).as("n"))
-        .orderBy("cell_id")),
-
-    "q_img_pip" -> ((s, dir) => {
-      val imgs = imagesDf(s, dir)
-        .select(col("image_id"), col("phash"))
-        .withColumn("x", phashLon(col("phash")))
-        .withColumn("y", phashLat(col("phash")))
-      SpatialJoin.broadcastJoin(s, imgs, "x", "y", imageLayer)
-        .groupBy("poly_key").agg(count(lit(1)).as("n_images"))
-        .orderBy("poly_key")
-    }),
-
-    // the headline's semantics DuckDB-verified end to end: Morton-decode the
-    // image phash to (x, y), broadcast-PIP against the 8-shape oracle layer,
-    // count per polygon — decode cascade + ray-cast parity both mirrored
-    "q_img_pip_oracle" -> ((s, dir) => {
-      val imgs = imagesDf(s, dir)
-        .select(col("image_id"), col("phash"))
-        .withColumn("x", phashLon(col("phash")))
-        .withColumn("y", phashLat(col("phash")))
-      SpatialJoin.broadcastJoin(s, imgs, "x", "y", Synthetic.oracleLayer)
-        .groupBy("poly_key").agg(count(lit(1)).as("n_images"))
-        .orderBy("poly_key")
-    }),
-
-    "q_img_tiles" -> ((s, dir) =>
-      Tiling.tileAssign(s, imagesDf(s, dir), tileGrid = 4, res = 9, Some(imageLayer))
-        .groupBy("cell_id", "poly_key").agg(count(lit(1)).as("n_tiles"))
-        .orderBy("cell_id", "poly_key")),
-
-    // decode -> luma grid -> blur + bilinear downsample per image (the raster
-    // toolbox on the binary payload; deterministic quantized outputs)
-    // raster stage over the lossless slice: decode -> luma (grayscale, so
-    // luma == g exactly) -> separable box blur -> 8x8 bilinear resample ->
-    // mean + center, every double op mirrored
-    "q_img_raster" -> ((s, dir) =>
-      Multimodal.rasterStage(s, imagesDf(s, dir)
-          .where(col("fmt") === "png" &&
-            substring(col("image_id"), 4, 12).cast("long") < 300))
-        .orderBy("image_id")),
-
-    // full 500-row feature slice: decoded dims verified for BOTH codecs
-    // (JPEG preserves dimensions), ahash verified on the lossless rows
-    // (JPEG ahash is codec-dependent — projected out, covered by spec)
-    "q_img_features" -> ((s, dir) =>
-      Multimodal.features(s, imagesDf(s, dir)
-          .where(substring(col("image_id"), 4, 12).cast("long") < 500)).toDF()
-        .select(col("image_id"), col("w"), col("h"), col("fmt"),
-          when(col("fmt") === "png", col("ahash")).as("ahash_png"))
-        .orderBy("image_id")),
-
-    // image features through the REAL PNG codec, oracle-verified: PNG is
-    // lossless, so decoded pixels equal the generator formula and the SQL
-    // mirror re-derives ahash + mean from pure SplitMix64 arithmetic —
-    // the decode path itself is inside the verified loop
-    "q_img_ahash" -> ((s, dir) =>
-      Multimodal.features(s, imagesDf(s, dir).where(col("fmt") === "png" &&
-          substring(col("image_id"), 4, 12).cast("long") < 400)).toDF()
-        .select(col("image_id"), col("ahash"), col("mean_g"))
-        .orderBy("image_id")),
-
-    // augmentation end-to-end: center-crop + deterministic flip, re-encoded
-    // PNG, decoded again — crop luma sums are flip-invariant and mirror the
-    // generator formula exactly
-    "q_img_augment" -> ((s, dir) => {
-      import s.implicits._
-      val imgs = imagesDf(s, dir).where(col("fmt") === "png" &&
-        substring(col("image_id"), 4, 12).cast("long") < 200)
-      Multimodal.withAugmented(imgs)
-        .select("image_id", "aug").as[(String, Array[Byte])]
-        .map { case (id, aug) =>
-          val (w, _, px) = graft.tables.Images.decode(aug)
-          var sum = 0L
-          var i = 0
-          while (i < px.length) { sum += px(i) & 0xff; i += 1 }
-          (id, w.toLong, sum)
-        }
-        .toDF("image_id", "side", "lum_sum")
-        .orderBy("image_id")
-    }),
-
-    // audio features through the REAL JDK WAV codec: PCM16 is lossless, so
-    // the DuckDB oracle re-synthesizes every sample from the SplitMix64
-    // generator and recomputes the integer features exactly — the decode
-    // path is inside the verified loop (the audio analog of q_img_ahash)
-    "q_audio_features" -> ((s, dir) =>
-      AudioOps.features(s, audioDf(s, dir)
-          .where(substring(col("audio_id"), 4, 12).cast("long") < 300)).toDF()
-        .select(col("audio_id"), col("n_samples"), col("duration_ms"),
-          col("zero_crossings"), col("peak").cast("long").as("peak"), col("energy"))
-        .orderBy("audio_id")),
-
-    // segment edit end-to-end: decode -> middle-half slice -> WAV re-encode
-    // -> decode again; segment energy mirrors the generator closed-form
-    "q_audio_segment" -> ((s, dir) =>
-      AudioOps.middleSegment(s, audioDf(s, dir)
-          .where(substring(col("audio_id"), 4, 12).cast("long") < 300))
-        .select("audio_id", "seg_from", "seg_len", "seg_energy")
-        .orderBy("audio_id")),
-
-    // video frame sampling: container seek + real PNG decode per sampled
-    // frame; ahash/mean re-derived by the oracle from the frame seed
-    // (vi·100000 + frame) through the same generator chain as q_img_ahash
-    "q_video_frames" -> ((s, dir) =>
-      VideoOps.sampleFrames(s, videoDf(s, dir)
-          .where(substring(col("video_id"), 4, 12).cast("long") < 150), stride = 2)
-        .orderBy("video_id", "frame")),
-
-    // PSNR vs re-render: the PNG path is lossless (decoded pixels == the
-    // generator formula, psnr sentinel 999.0) and the JPEG path must stay
-    // high-fidelity (>= 40 dB round-trip) — both facts, plus the decoded
-    // dimensions, mirror exactly from the stored table
-    "q_img_psnr" -> ((s, dir) =>
-      Multimodal.psnrVsRender(s, imagesDf(s, dir)
-          .where(substring(col("image_id"), 4, 12).cast("long") < 500))
-        .select(col("image_id"), col("w"), col("h"),
-          (col("psnr_db") >= 999.0).as("lossless"),
-          (col("psnr_db") >= 40.0).as("high_fidelity"))
-        .orderBy("image_id")),
-
-    // -simplify: WEIGHTED Visvalingam thresholds per path + global
-    // retained-pct cutoff as an EXACT distributed rank-select (not the
-    // approx sketch) — the full pipeline (weighted metric, monotonic clamp,
-    // sqrt*0.65 scaling, global quantile, >= filter) is mirrored in SQL by
-    // a 14-round removal unroll partitioned per path
-    "q_simplify" -> ((s, dir) => {
-      val paths = points(s, dir).where(col("id") >= 1 && col("id") <= 128)
-        .withColumn("g", floor((col("id") - 1) / 16).cast("long"))
-        .groupBy("g")
-        .agg(array_sort(collect_list(struct(col("id"), col("x"), col("y")))).as("pts"))
-        .select(col("g"),
-          flatten(transform(col("pts"),
-            p => array(p.getField("x"), p.getField("y")))).as("ring"))
-      SimplifyOp.simplify(s, paths, "ring", pct = 0.5,
-          method = graft.geom.Simplify.WeightedVisvalingam, exactPct = true)
-        .select(col("g"), col("n_before"), col("n_after"),
-          floor(col("interval") * 1000000000.0).cast("long").as("interval_int"))
-        .orderBy("g")
-    }),
-
-    // -simplify variable=: per-ring interval = global interval * clamp(w);
-    // weights (g%5)/4 span {0,.25,.5,.75,1} — w=0 keeps all 16 vertices,
-    // w=1 matches the plain pct=0.5 filter. Oracle shares the q_simplify
-    // threshold machinery and checks counts + the second kept vertex.
-    "q_simplify_variable" -> ((s, dir) => {
-      val paths = points(s, dir).where(col("id") >= 1 && col("id") <= 128)
-        .withColumn("g", floor((col("id") - 1) / 16).cast("long"))
-        .groupBy("g")
-        .agg(array_sort(collect_list(struct(col("id"), col("x"), col("y")))).as("pts"))
-        .select(col("g"),
-          flatten(transform(col("pts"),
-            p => array(p.getField("x"), p.getField("y")))).as("ring"))
-        .withColumn("w", (col("g") % 5).cast("double") / 4.0)
-      SimplifyOp.simplifyVariable(s, paths, "ring", "w", pct = 0.5,
-          method = graft.geom.Simplify.WeightedVisvalingam, exactPct = true)
-        .select(col("g"), col("n_before"), col("n_after"),
-          floor(element_at(col("simplified"), 3) * 1000000.0).cast("long").as("x2_int"),
-          floor(element_at(col("simplified"), 4) * 1000000.0).cast("long").as("y2_int"))
-        .orderBy("g")
-    }),
-
-    // -clip bbox2= fast path: rectangle clip of polygon rings
-    "q_clip_rect" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.oracleLayer
-      val rows = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (layer.shapeKeys(layer.ringShape(r)), r.toLong, flat)
-      }.toDF("poly_key", "ring_id", "ring")
-      val clipUdf = udf { (flat: Seq[Double]) =>
-        val c = graft.geom.RectClip.clipRing(flat.toArray, 25.0, 25.0, 75.0, 75.0)
-        c.length / 2
-      }
-      val areaUdf = udf { (flat: Seq[Double]) =>
-        math.floor(graft.geom.RectClip.clippedArea(flat.toArray, 25.0, 25.0, 75.0, 75.0) * 1000000.0).toLong
-      }
-      rows.select(col("poly_key"), col("ring_id"),
-          clipUdf(col("ring")).cast("long").as("n_clipped_vertices"),
-          areaUdf(col("ring")).as("area_int"))
-        .orderBy("ring_id")
-    }),
-
-    // -clip (polygon vs polygon, mosaic engine): cell squares clipped by a
-    // rectangle — intersection areas have a closed form, so the full overlay
-    // kernel is DuckDB-verified end to end
-    "q_clip_poly" -> ((s, dir) => {
-      val squares = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"))
-        .distinct()
-      val ringUdf = udf { (cx: Long, cy: Long) =>
-        val x = cx * 10.0; val y = cy * 10.0
-        Array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y)
-      }
-      val clipRect = Seq(Array(15.0, 15.0, 65.0, 15.0, 65.0, 65.0, 15.0, 65.0, 15.0, 15.0))
-      OverlayOp.clipRows(s,
-          squares.withColumn("ring", ringUdf(col("cx"), col("cy")))
-            .withColumn("sq_id", col("cx") * 100 + col("cy")),
-          "sq_id", "ring", clipRect)
-        .select(col("sq_id"),
-          col("n_rings").cast("long").as("n_rings"),
-          floor(col("clip_area") * 1000000.0).cast("long").as("area_int"))
-        .orderBy("sq_id")
-    }),
-
-    // -erase (polygon): same squares, area outside the rectangle
-    "q_erase_poly" -> ((s, dir) => {
-      val squares = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"))
-        .distinct()
-      val ringUdf = udf { (cx: Long, cy: Long) =>
-        val x = cx * 10.0; val y = cy * 10.0
-        Array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y)
-      }
-      val clipRect = Seq(Array(15.0, 15.0, 65.0, 15.0, 65.0, 65.0, 15.0, 65.0, 15.0, 15.0))
-      OverlayOp.clipRows(s,
-          squares.withColumn("ring", ringUdf(col("cx"), col("cy")))
-            .withColumn("sq_id", col("cx") * 100 + col("cy")),
-          "sq_id", "ring", clipRect, erase = true)
-        .select(col("sq_id"),
-          floor(col("clip_area") * 1000000.0).cast("long").as("area_int"))
-        .orderBy("sq_id")
-    }),
-
-    // -dissolve2 (robust mosaic dissolve of OVERLAPPING shapes): side-15
-    // squares at cell origins overlap their neighbors; per-group union area
-    "q_dissolve2" -> ((s, dir) => {
-      val squares = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"))
-        .distinct()
-        .withColumn("g", (col("cx") + col("cy")) % 2)
-      val ringUdf = udf { (cx: Long, cy: Long) =>
-        val x = cx * 10.0; val y = cy * 10.0
-        Array(x, y, x + 15, y, x + 15, y + 15, x, y + 15, x, y)
-      }
-      // 15x15 squares on a 10-grid keep every edge on the 5-lattice, so the
-      // per-group union area mirrors exactly as 25 x (covered 5x5 cells);
-      // ring structure is oracle-covered by q_dissolve2_rect/q_dissolve2_rules
-      OverlayOp.dissolve2(s, squares.withColumn("ring", ringUdf(col("cx"), col("cy"))), "g", "ring")
-        .select(col("group"), col("n_shapes_in"),
-          floor(col("area") * 1000.0).cast("long").as("area_int"))
-        .orderBy("group")
-    }),
-
-    // -calc quantile/iqr/quartiles: exact interpolated percentiles
-    "q_quantiles" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(
-          expr("percentile(l_quantity, 0.25)").as("q1"),
-          expr("percentile(l_quantity, 0.5)").as("q2"),
-          expr("percentile(l_quantity, 0.75)").as("q3"),
-          (expr("percentile(l_quantity, 0.75)") - expr("percentile(l_quantity, 0.25)")).as("iqr"))
-        .orderBy("l_returnflag")),
-
-    // -filter-points (thin dense points): keep the lowest id per grid cell
-    "q_thin_points" -> ((s, dir) => {
-      val w = Window.partitionBy(floor(col("x") / 5.0), floor(col("y") / 5.0))
-        .orderBy(col("id"))
-      points(s, dir)
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .select("id")
-        .orderBy("id")
-    }),
-
-    // -calc collect: order-insensitive list aggregation
-    "q_collect" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"))
-        .agg(array_join(array_sort(collect_set(col("l_linestatus"))), ",").as("statuses"),
-          countDistinct(col("l_linestatus")).as("n_statuses"))
-        .orderBy("l_returnflag")),
-
-    // -buffer: point buffers (regular 32-gon rings); oracle = closed-form
-    // regular-polygon area n*r^2*sin(2pi/n)/2
-    "q_buffer" -> ((s, dir) => {
-      val ringAreaUdf = udf { (x: Double, y: Double, r: Double) =>
-        val ring = Buffer.pointBufferRing(x, y, r, 32)
-        val n = ring.length / 2
-        val xs = Array.tabulate(n)(i => ring(i * 2))
-        val ys = Array.tabulate(n)(i => ring(i * 2 + 1))
-        graft.geom.Geom.signedRingArea(xs, ys, 0, n)
-      }
-      points(s, dir)
-        .withColumn("r", (col("id") % 3 + 1).cast("double"))
-        .select(col("id"),
-          floor(ringAreaUdf(col("x"), col("y"), col("r")) * 1000.0).cast("long").as("area_int"))
-        .orderBy("id")
-    }),
-
-    // -cluster: greedy centroid agglomeration of the oracle layer (k=3)
-    // (rows-only; the greedy kernel is exactly oracle-verified by
-    // q_cluster_greedy)
-    // -snap: ulp-scaled lattice quantization (interval 2^ceil(log2 max)/2^51)
-    // — output is the exact integer lattice index per coordinate, through
-    // the real Geom.snap kernel (rint half-even mirrored by a CASE)
-    "q_snap" -> ((s, dir) => {
-      val pts = points(s, dir)
-      val mx = pts.agg(max(greatest(abs(col("x")), abs(col("y"))))).head().getDouble(0)
-      val ival = graft.geom.Geom.snapInterval(mx)
-      val kUdf = udf((v: Double) => (graft.geom.Geom.snap(v, ival) / ival).toLong)
-      pts.select(col("id"), kUdf(col("x")).as("kx"), kUdf(col("y")).as("ky"))
-        .orderBy("id")
-    }),
-
-    // cluster over the oracle layer's 8 shape centroids: the centroids are
-    // the q_centroid edge-sum mirror (un-floored) and 8 -> 3 clusters is a
-    // 5-round merge unroll — fully oracle-backed
-    "q_cluster" -> ((s, dir) => {
-      import s.implicits._
-      val cents = Points.centroids(s, Synthetic.oracleLayer)
-        .select("poly_key", "cx", "cy").collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-      val asg = Cluster.greedy(cents, k = 3)
-      asg.toSeq.sortBy(_._1).map { case (k, c) => (k, c.toLong) }
-        .toDF("poly_key", "cluster_id")
-        .orderBy("poly_key")
-    }),
-
-    // polygon->polygon join, FULLY DISTRIBUTED (cell-join candidates +
-    // pairwise clip kernel — no driver mosaic): cell squares vs 3 overlapping
-    // literal rectangles; shared areas have closed forms → DuckDB-verified
-    "q_poly_join" -> ((s, dir) => {
-      import s.implicits._
-      val sources = polyJoinSources.map { case (k, shape) => (k, shape.head) }
-        .toDF("key", "ring")
-      PolyJoin.overlapDistributed(s, polyJoinTargetsDf(s, dir), sources)
-        .select(col("t_key"), col("s_key"),
-          floor(col("shared_area") * 1000000.0).cast("long").as("area_int"))
-        .orderBy("t_key", "s_key")
-    }),
-
-    // largest-overlap variant: distributed max_by aggregation (deterministic ties)
-    "q_poly_join_largest" -> ((s, dir) => {
-      import s.implicits._
-      val sources = polyJoinSources.map { case (k, shape) => (k, shape.head) }
-        .toDF("key", "ring")
-      val overlaps = PolyJoin.overlapDistributed(s, polyJoinTargetsDf(s, dir), sources)
-      PolyJoin.largestOverlapDf(overlaps)
-        .select(col("t_key"), col("s_key"),
-          floor(col("shared_area") * 1000000.0).cast("long").as("area_int"))
-        .orderBy("t_key")
-    }),
-
-    // Shapefile source + real-world layer: Natural Earth countries from the
-    // reference's own fixture, PIP-joined against lon/lat-mapped points
-    // point mapping avoids the exact ±180/±85 world frame: Antarctica's
-    // antimeridian edge differs in the last ulp between the .shp and its
-    // GeoJSON twin (a known NE data quirk the reference also guards against),
-    // so a point EXACTLY on x=-180 is not decidable consistently
-    "q_ne_countries" -> ((s, dir) => {
-      val ne = graft.sources.ShpReader.readPolygons(
-        "/root/reference/test/data/ne/ne_110m_admin_0_scale_rank.shp")
-      val pts = points(s, dir)
-        .withColumn("lon", col("x") * 3.59 - 179.5)
-        .withColumn("lat", col("y") * 1.69 - 84.5)
-      SpatialJoin.broadcastJoin(s, pts, "lon", "lat", ne)
-        .groupBy("poly_key").agg(count(lit(1)).as("n_points"))
-        .orderBy("poly_key")
-    }),
-
-    // -alpha-shapes: DISTRIBUTED alpha complex (cell-partitioned Delaunay,
-    // circumcenter-owned triangles, global edge parity, driver ring assembly
-    // over the O(perimeter) boundary) — mirrored END TO END by brute-force
-    // empty-circumcircle Delaunay + radius filter + parity + a recursive-CTE
-    // connected-components labeling of the boundary graph (each component is
-    // one assembled ring: every boundary vertex has degree 2 on this fixture)
-    "q_alpha_shape" -> ((s, dir) => {
-      import s.implicits._
-      val rings = AlphaShape.distributedRings(s,
-        points(s, dir).where(col("id") >= 1 && col("id") <= 120), "x", "y", alpha = 8.0)
-      rings.zipWithIndex.map { case (r, i) =>
-        var mx = Double.MaxValue; var my = Double.MaxValue
-        var j = 0
-        while (j + 1 < r.length) {
-          mx = math.min(mx, r(j)); my = math.min(my, r(j + 1)); j += 2
-        }
-        (i.toLong, (r.length / 2 - 1).toLong, // closing vertex repeated
-          math.floor(mx * 1000.0).toLong, math.floor(my * 1000.0).toLong)
-      }.toDF("ring_id", "n_vertices", "minx_int", "miny_int").orderBy("ring_id")
-    }),
-
-    // -point-grid: generated square grid (distributed, codegen arithmetic)
-    "q_point_grid" -> ((s, dir) =>
-      Grids.pointGrid(s, 0.0, 0.0, 12.5, 8, 8)
-        .select(col("gid"), col("gx"), col("gy"), col("x"), col("y"))
-        .orderBy("gid")),
-
-    // -points midpoints: segment midpoints of the oracle layer
-    "q_midpoints" -> ((s, dir) =>
-      Points.midpoints(s, Synthetic.oracleLayer)
-        .select(col("poly_key"), col("ring").cast("long").as("ring"),
-          col("mx"), col("my"))
-        .orderBy("ring", "mx", "my")),
-
-    // -proj: lon/lat -> WebMercator + tile pyramid key (floor-scaled: libm
-    // vs JVM transcendentals differ in the last ulp)
-    "q_proj" -> ((s, dir) => {
-      val pts = points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)  // [0,100) -> [-180,180)
-        .withColumn("lat", col("y") * 1.7 - 85.0)   // [0,100) -> [-85,85)
-      pts.select(col("id"),
-          floor(Proj.lonToMercX(col("lon")) * 1000.0).cast("long").as("mx_int"),
-          floor(Proj.latToMercY(col("lat")) * 1000.0).cast("long").as("my_int"),
-          Proj.tileX(col("lon"), 6).as("tx"),
-          Proj.tileY(col("lat"), 6).as("ty"))
-        .orderBy("id")
-    }),
-
-    // azimuthal catalog + spherical pre-clip: each projection keeps only the
-    // points within its default clip angle of its center (the reference's
-    // getDefaultClipAngle), then projects — trig mirrored, floor-guarded
-    // -each feature-proxy getters: area / perimeter / compactness /
-    // width / height evaluated by higher-order Column folds over the flat
-    // ring built in-plan; the oracle recomputes the closed forms
-    "q_each_geom" -> ((s, dir) => {
-      import graft.functions.FeatureExprs._
-      val rects = points(s, dir).select((col("id") % 40).as("g")).distinct()
-        .withColumn("w", (col("g") % 7 + 2).cast("double"))
-        .withColumn("h", (col("g") % 5 + 3).cast("double"))
-        .withColumn("ring", array(
-          lit(0.0), lit(0.0), col("w"), lit(0.0), col("w"), col("h"),
-          lit(0.0), col("h"), lit(0.0), lit(0.0)))
-      rects.select(col("g"),
-          floor(ringSignedArea(col("ring")) * 100.0).cast("long").as("area_int"),
-          floor(ringPerimeter(col("ring")) * 100.0).cast("long").as("perim_int"),
-          floor(compactness(col("ring")) * 1000000000.0).cast("long").as("compact_int"),
-          bboxWidth(col("ring")).cast("long").as("bw"),
-          bboxHeight(col("ring")).cast("long").as("bh"),
-          bboxContainsPoint(col("ring"), lit(1.0), lit(3.5)).as("contains_p"))
-        .orderBy("g")
-    }),
-
-    // format_dms / parse_dms / round helpers: string-exact DMS formatting
-    // (integer millisecond-of-arc arithmetic) and its parse round trip
-    "q_each_dms" -> ((s, dir) => {
-      import graft.functions.FeatureExprs._
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .select(col("id"),
-          formatDmsUdf(col("lon")).as("dms"),
-          floor(parseDmsUdf(formatDmsUdf(col("lon"))) * 1000000.0).cast("long").as("back_int"),
-          roundTo(col("lon"), 2).as("lon_r2"))
-        .orderBy("id")
-    }),
-
-    // world catalog, second batch: equirectangular (lat_ts), cylindrical
-    // equal-area, Natural Earth polynomial, Winkel tripel — cm-exact mirrors
-    "q_proj_world2" -> ((s, dir) => {
-      import graft.geom.Crs
-      val pts = points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-      val fq = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("+proj=eqc +lat_ts=30"))
-      val fc = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("+proj=cea +lat_ts=30"))
-      val fn = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("+proj=natearth"))
-      val fw = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("+proj=wintri"))
-      pts.select(col("id"),
-          floor(fq(0) * 100.0).cast("long").as("eqc_x"),
-          floor(fq(1) * 100.0).cast("long").as("eqc_y"),
-          floor(fc(0) * 100.0).cast("long").as("cea_x"),
-          floor(fc(1) * 100.0).cast("long").as("cea_y"),
-          floor(fn(0) * 100.0).cast("long").as("ne_x"),
-          floor(fn(1) * 100.0).cast("long").as("ne_y"),
-          floor(fw(0) * 100.0).cast("long").as("wt_x"),
-          floor(fw(1) * 100.0).cast("long").as("wt_y"))
-        .orderBy("id")
-    }),
-
-    "q_proj_azimuthal" -> ((s, dir) => {
-      import graft.geom.Crs
-      val pts = points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-      def leg(name: String, proj: Crs.Proj): DataFrame = {
-        val fwd = Proj.forward(col("lon"), col("lat"), proj)
-        pts.where(SphericalClip.pointKeep(col("lon"), col("lat"), Crs.clipSpec(proj)))
-          .select(col("id"), lit(name).as("proj"),
-            floor(fwd(0) * 1000.0).cast("long").as("px_int"),
-            floor(fwd(1) * 1000.0).cast("long").as("py_int"))
-      }
-      leg("gnom", Crs.Gnomonic(40.0, -100.0))
-        .unionByName(leg("laea", Crs.Laea(-20.0, 60.0)))
-        .unionByName(leg("ortho", Crs.Orthographic(15.0, 30.0)))
-        .orderBy("proj", "id")
-    }),
-
-    // rotated-antimeridian path cut (Mercator lon0=150 cuts at lon=-30):
-    // per part, the vertex count and the exact interpolated first latitude
-    "q_proj_cut" -> ((s, dir) => {
-      val verts = points(s, dir).where(col("id") >= 1 && col("id") <= 300)
-        .select((col("id") % 30).as("pid"), col("id"),
-          (col("x") * 3.6 - 180.0).as("lon"), (col("y") * 1.7 - 85.0).as("lat"))
-      val paths = verts
-        .groupBy("pid")
-        .agg(sort_array(collect_list(struct(col("id"), col("lon"), col("lat")))).as("vs"))
-        .select(col("pid"),
-          flatten(transform(col("vs"), v => array(v.getField("lon"), v.getField("lat")))).as("path"))
-      SphericalClip.prepare(paths, "pid", "path",
-          graft.geom.Crs.clipSpec(graft.geom.Crs.Mercator(150.0)))
-        .select(col("id").as("pid"), col("part").cast("long").as("part"),
-          (size(col("path")) / 2).cast("long").as("n_vertices"),
-          floor(element_at(col("path"), 2) * 1000000.0).cast("long").as("lat0_int"))
-        .orderBy("pid", "part")
-    }),
-
-    // distributed clip/erase of a target LAYER vs a clip LAYER — per-target
-    // areas have the inclusion-exclusion closed form |T ∩ (A∪B∪C)|
-    "q_clip_layer" -> ((s, dir) => {
-      import s.implicits._
-      val clips = polyJoinSources.map { case (k, shape) => (k, shape.head) }
-        .toDF("key", "ring")
-      val clipped = OverlayOp.clipLayerDistributed(s, polyJoinTargetsDf(s, dir), clips)
-        .select(col("t_key"), round(col("area") * 100.0, 0).cast("long").as("clip_int"))
-      val erased = OverlayOp.clipLayerDistributed(s, polyJoinTargetsDf(s, dir), clips,
-          erase = true)
-        .select(col("t_key").as("e_key"), round(col("area") * 100.0, 0).cast("long").as("erase_int"))
-      clipped.join(erased, clipped("t_key") === erased("e_key"), "full")
-        .select(coalesce(col("t_key"), col("e_key")).as("t_key"),
-          coalesce(col("clip_int"), lit(0L)).as("clip_int"),
-          coalesce(col("erase_int"), lit(0L)).as("erase_int"))
-        .orderBy("t_key")
-    }),
-
-    // robust dissolve2 against a closed form: per group, three overlapping
-    // axis-aligned rectangles whose union area has the inclusion-exclusion
-    // closed form — the full mosaic kernel (snap/cut/trace/classify) is
-    // DuckDB-verified on 50 distinct overlap configurations
-    "q_dissolve2_rect" -> ((s, dir) => {
-      val mkRect = udf { (g: Long, i: Int) =>
-        val x0 = (g * (3 + 2 * i) % 13).toDouble
-        val y0 = (g * (5 + 3 * i) % 17).toDouble
-        Array(x0, y0, x0 + 10, y0, x0 + 10, y0 + 10, x0, y0 + 10, x0, y0)
-      }
-      val groups = points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("i", explode(array(lit(0), lit(1), lit(2))))
-        .select(col("g"), mkRect(col("g"), col("i")).as("ring"))
-      OverlayOp.dissolve2(s, groups, "g", "ring")
-        .select(col("group"), round(col("area") * 100.0, 0).cast("long").as("area_int"))
-        .orderBy("group")
-    }),
-
-    // -dissolve2 overlap_rule=: three overlapping rects of distinct areas
-    // (100/64/144) per family; the flat mosaic assigns each overlap region
-    // to min-id / max-id / max-area / min-area winners — per-shape kept
-    // areas have inclusion-exclusion closed forms, mirrored exactly
-    "q_dissolve2_rules" -> ((s, dir) => {
-      import s.implicits._
-      val rules = Seq("min-id", "max-id", "max-area", "min-area")
-      val kernel = udf { (g: Long) =>
-        def rect(x0: Double, y0: Double, w: Double): Array[Double] =
-          Array(x0, y0, x0 + w, y0, x0 + w, y0 + w, x0, y0 + w, x0, y0)
-        val shapes: Seq[Overlay.Shape] = Seq(
-          Seq(rect((g * 3 % 13).toDouble, (g * 5 % 17).toDouble, 10.0)),
-          Seq(rect((g * 5 % 13).toDouble, (g * 8 % 17).toDouble, 8.0)),
-          Seq(rect((g * 7 % 13).toDouble, (g * 11 % 17).toDouble, 12.0)))
-        rules.flatMap { r =>
-          val out = Overlay.dissolve2ByGroup(shapes, Seq(0L, 1L, 2L), r)
-          (0 to 2).map(i => (r, i.toLong,
-            math.round(Overlay.layerArea(out.getOrElse(i.toLong, Nil)) * 100.0)))
-        }
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("rsa", explode(kernel(col("g"))))
-        .select(col("g"), col("rsa._1").as("rule"), col("rsa._2").as("shape"),
-          col("rsa._3").as("area_int"))
-        .orderBy("g", "rule", "shape")
-    }),
-
-    // -dissolve2 gap_fill_area= (ref mapshaper-polygon-dissolve2.mjs:85-92 +
-    // MosaicIndex.removeGaps): 50 picture-frame families — four overlapping
-    // wall rects enclose a central h x h gap; dyadic h values keep h^2 exact,
-    // so "filled iff h^2 < 2.0" and the output area/ring count are closed
-    // forms (frame 10x10: filled -> area 100, 1 ring; kept gap -> 100 - h^2,
-    // 2 rings).
-    "q_dissolve2_gaps" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        val w = 10.0
-        val a = (g * 3 % 4).toDouble + 2.0
-        val h = 0.25 + (g % 5).toDouble * 0.375
-        val shapes: Seq[Overlay.Shape] = Seq(
-          Seq(oRect(0, 0, w, a)),            // bottom wall (up to gap)
-          Seq(oRect(0, a + h, w, w - a - h)), // top wall
-          Seq(oRect(0, 0, a, w)),            // left wall
-          Seq(oRect(a + h, 0, w - a - h, w))) // right wall
-        val out = Overlay.dissolve2GapFill(shapes, gapFillArea = 2.0)
-        (out.length.toLong, math.round(Overlay.layerArea(out) * 100.0))
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("r", kernel(col("g")))
-        .select(col("g"), col("r._1").as("n_rings"), col("r._2").as("area_int"))
-        .orderBy("g")
-    }),
-
-    // -union (ref mapshaper-union.mjs:9): two-layer coverage union through
-    // the full mosaic kernel (snap/cut/trace/classify/dissolve), validated
-    // on 50 two-rect families against inclusion-exclusion area + the
-    // connectivity count. B carries a dyadic +0.5 offset so every pair is
-    // STRICTLY overlapping or strictly separated — no knife-edge touches.
-    "q_union" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        val out = Overlay.union(
-          Seq(Seq(oRect((g * 3 % 13).toDouble, (g * 5 % 17).toDouble, 10.0, 10.0))),
-          Seq(Seq(oRect((g * 5 % 13).toDouble + 0.5, (g * 8 % 17).toDouble + 0.5, 8.0, 8.0))))
-        (out.length.toLong, math.round(Overlay.layerArea(out) * 100.0))
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("r", kernel(col("g")))
-        .select(col("g"), col("r._1").as("n_rings"), col("r._2").as("area_int"))
-        .orderBy("g")
-    }),
-
-    // -mosaic (ref mapshaper-mosaic.mjs:10-59): tiles of the 3-layer
-    // arrangement, observed as total area per layer-membership mask — each
-    // Venn cell has an inclusion-exclusion closed form. Dyadic offsets
-    // (0 / 0.5 / 0.25) keep every pairwise AND triple overlap width nonzero.
-    "q_mosaic" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        val m = Overlay.mosaic(Seq(
-          Seq(oRect((g * 3 % 13).toDouble, (g * 5 % 17).toDouble, 10.0, 10.0)),
-          Seq(oRect((g * 5 % 13).toDouble + 0.5, (g * 8 % 17).toDouble + 0.5, 8.0, 8.0)),
-          Seq(oRect((g * 7 % 13).toDouble + 0.25, (g * 11 % 17).toDouble + 0.25, 12.0, 12.0))))
-        m.faces.groupBy { f =>
-          (if (f.inLayer(0)) 1 else 0) | (if (f.inLayer(1)) 2 else 0) |
-            (if (f.inLayer(2)) 4 else 0)
-        }.toSeq.map { case (mask, fs) =>
-          (mask.toLong, math.round(fs.map(Overlay.faceArea).sum * 10000.0))
-        }
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("ma", explode(kernel(col("g"))))
-        .select(col("g"), col("ma._1").as("mask"), col("ma._2").as("area_int"))
-        .orderBy("g", "mask")
-    }),
-
-    // -clean (ref mapshaper-clean.mjs:18-112): every mosaic tile assigned to
-    // exactly one claimant per overlap rule, shapes rebuilt index-aligned —
-    // per-shape kept areas have inclusion-exclusion closed forms (areas
-    // 100/64/144 make every rule pick a different overlap winner).
-    "q_clean" -> ((s, dir) => {
-      import s.implicits._
-      val rules = Seq("max-area", "max-id", "min-area", "min-id")
-      val kernel = udf { (g: Long) =>
-        val shapes: Seq[Overlay.Shape] = Seq(
-          Seq(oRect((g * 3 % 13).toDouble, (g * 5 % 17).toDouble, 10.0, 10.0)),
-          Seq(oRect((g * 5 % 13).toDouble + 0.5, (g * 8 % 17).toDouble + 0.5, 8.0, 8.0)),
-          Seq(oRect((g * 7 % 13).toDouble + 0.25, (g * 11 % 17).toDouble + 0.25, 12.0, 12.0)))
-        rules.flatMap { r =>
-          Overlay.clean(shapes, r).zipWithIndex.map { case (rings, i) =>
-            (r, i.toLong, math.round(Overlay.layerArea(rings) * 10000.0))
-          }
-        }
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("rsa", explode(kernel(col("g"))))
-        .select(col("g"), col("rsa._1").as("rule"), col("rsa._2").as("shape"),
-          col("rsa._3").as("area_int"))
-        .orderBy("g", "rule", "shape")
-    }),
-
-    // -polygons / polygonize (ref mapshaper-polygons.mjs:14-40): bounded
-    // faces of a line arrangement. A deterministic n x m grid of full-span
-    // lines with varying column widths / row heights gives closed forms for
-    // the face count, total area, and the sum of squared face areas
-    // (= sum(w^2) * sum(h^2)).
-    "q_polygonize" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        val n = (g % 3 + 2).toInt
-        val m = (g % 2 + 2).toInt
-        val ws = (1 to n).map(i => ((g + 7 * i) % 4 + 1).toDouble)
-        val hs = (1 to m).map(j => ((g + 5 * j) % 3 + 1).toDouble)
-        val xs = ws.scanLeft(0.0)(_ + _)
-        val ys = hs.scanLeft(0.0)(_ + _)
-        val lines = xs.map(x => Array(x, 0.0, x, ys.last)) ++
-          ys.map(y => Array(0.0, y, xs.last, y))
-        val areas = Buffer.polygonize(lines).map(Overlay.faceArea)
-        (areas.length.toLong, math.round(areas.sum * 100.0),
-          math.round(areas.map(a => a * a).sum))
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("r", kernel(col("g")))
-        .select(col("g"), col("r._1").as("n_faces"), col("r._2").as("area_int"),
-          col("r._3").as("sq_sum"))
-        .orderBy("g")
-    }),
-
-    // -divide (ref mapshaper-divide.mjs:20-40): polyline cut at polygon
-    // boundaries, pieces tagged inside/outside. A 4-segment horizontal line
-    // through a width-w rect has closed-form piece counts and lengths on
-    // both sides (cut points land at x=0 — a line vertex — and x=w).
-    "q_divide" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        val w = (g % 8 + 2).toDouble
-        val h = (g % 5 + 1).toDouble
-        val c = h / 2.0
-        val line = Array(-5.0, c, 0.0, c, 5.0, c, 10.0, c, 15.0, c)
-        val poly = Seq(oRect(0.0, 0.0, w, h))
-        Buffer.divideLine(line, poly).groupBy(_._2).toSeq.map { case (inside, ps) =>
-          (inside, ps.length.toLong,
-            math.round(ps.map(p => math.abs(p._1(2) - p._1(0))).sum * 100.0))
-        }
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("r", explode(kernel(col("g"))))
-        .select(col("g"), col("r._1").as("inside"), col("r._2").as("n_pieces"),
-          col("r._3").as("len_int"))
-        .orderBy("g", "inside")
-    }),
-
-    // -inlay (ref mapshaper-inlay.mjs:7 — erase + union): 6x6 inlay swept
-    // across a 12x12 base through disjoint / overlapping / contained /
-    // edge-touching positions; coverage area is inclusion-exclusion and the
-    // output ring count is 2 only when strictly disjoint (touching merges,
-    // a contained inlay's hole boundary cancels against the inlay ring).
-    "q_inlay" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        val dx = (g % 5 * 5 - 8).toDouble
-        val out = Overlay.inlay(
-          Seq(Seq(oRect(0.0, 0.0, 12.0, 12.0))),
-          Seq(Seq(oRect(dx, 3.0, 6.0, 6.0))))
-        (out.length.toLong, math.round(Overlay.layerArea(out) * 100.0))
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("r", kernel(col("g")))
-        .select(col("g"), col("r._1").as("n_rings"), col("r._2").as("area_int"))
-        .orderBy("g")
-    }),
-
-    // -stitch (ref mapshaper-stitch.mjs:12-60): a polygon cut at the
-    // antimeridian (east piece ending at lon 180, west piece starting at
-    // -180) is re-merged — the west piece shifts +360 and the duplicate cut
-    // edge cancels in the dissolve; an untouched control ring rides along.
-    // Output rings sorted by min lon for a deterministic rank.
-    "q_stitch" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        val h = (g % 5 + 1).toDouble
-        val y0 = (g % 7).toDouble
-        val w1 = (g % 4 + 3).toDouble
-        val w2 = (g % 3 + 2).toDouble
-        val east = oRect(180.0 - w1, y0, w1, h)
-        val west = oRect(-180.0, y0, w2, h)
-        val ctrl = oRect(-60.0 + (g % 20).toDouble, y0, 5.0, h)
-        val out = Stitch.antimeridian(Seq(east, west, ctrl))
-        out.map { r =>
-          var mn = Double.MaxValue; var mx = Double.MinValue
-          var i = 0
-          while (i < r.length) {
-            mn = math.min(mn, r(i)); mx = math.max(mx, r(i)); i += 2
-          }
-          (math.round(Overlay.layerArea(Seq(r)) * 100.0),
-            math.round(mn * 100.0), math.round(mx * 100.0))
-        }.sortBy(_._2).zipWithIndex.map { case ((a, mn, mx), i) =>
-          (i.toLong, a, mn, mx)
-        }
-      }
-      points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("r", explode(kernel(col("g"))))
-        .select(col("g"), col("r._1").as("rk"), col("r._2").as("area_int"),
-          col("r._3").as("lon_min_int"), col("r._4").as("lon_max_int"))
-        .orderBy("g", "rk")
-    }),
-
-    // GeoJSON import (ref geojson-import.mjs:9-36): the reference's
-    // six-counties fixture — 3 of 6 features have null geometry and must be
-    // skipped, keys fall back to the feature index. Mirrored by a full
-    // DuckDB JSON decode of the same file.
-    "q_geojson_read" -> ((s, dir) => {
-      import s.implicits._
-      val layer = graft.sources.GeoJsonIO.fromGeoJson(new String(
-        java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-          "/root/reference/test/data/geojson/six_counties_three_null.json")),
-        java.nio.charset.StandardCharsets.UTF_8))
-      layerShapeStats(layer).toDF("key", "n_rings", "n_verts",
-        "minx_int", "miny_int", "maxx_int", "maxy_int").orderBy("key")
-    }),
-
-    // TopoJSON import (ref topojson-import.mjs:20-49): quantized
-    // delta-encoded shared arcs, signed arc ids (~i = reversed), junction
-    // point dedup — decoded from the same literal document in DuckDB via
-    // window-sum delta decode + the same transform arithmetic.
-    "q_topojson_read" -> ((s, dir) => {
-      import s.implicits._
-      val layer = graft.sources.TopoJsonIO.fromTopoJson(topoFixture)
-      layerShapeStats(layer, scale = 1000.0).toDF("key", "n_rings", "n_verts",
-        "minx_int", "miny_int", "maxx_int", "maxy_int").orderBy("key")
-    }),
-
-    // FlatGeobuf import (ref uses the flatgeobuf npm lib; ours is a
-    // from-scratch flatbuffers walker): the format's own 179-country
-    // fixture, mirrored by an independent python-struct decode of the same
-    // bytes (VALUES table; vtable walk re-derived from the public .fbs)
-    "q_fgb_read" -> ((s, dir) => {
-      import s.implicits._
-      val layer = graft.sources.FlatGeobuf.read(
-        "/root/reference/test/data/flatgeobuf/countries.fgb")
-      layer.features.zipWithIndex.map { case (f, i) =>
-        val xs = f.parts.flatMap(p => p.indices.collect { case j if j % 2 == 0 => p(j) })
-        val ys = f.parts.flatMap(p => p.indices.collect { case j if j % 2 == 1 => p(j) })
-        (i.toLong, f.parts.length.toLong, (xs.length).toLong,
-          math.floor(xs.min * 1e6).toLong, math.floor(ys.min * 1e6).toLong,
-          math.floor(xs.max * 1e6).toLong, math.floor(ys.max * 1e6).toLong)
-      }.toDF("fid", "n_rings", "n_verts", "minx_int", "miny_int", "maxx_int", "maxy_int")
-        .orderBy("fid")
-    }),
-
-    // GeoPackage import (from-scratch SQLite b-tree + WKB): the reference's
-    // Oregon fixture `land` layer — per-ring vertex counts and bboxes,
-    // mirrored by an independent python sqlite3 + struct WKB decode (VALUES)
-    "q_gpkg_read" -> ((s, dir) => {
-      import s.implicits._
-      val db = graft.sources.GeoPackage.open(
-        "/root/reference/test/data/geopackage/Oregon.gpkg")
-      val layer = graft.sources.GeoPackage.readFeatures(db, "land")
-      val rings = layer.features.head.parts
-      rings.zipWithIndex.map { case (r, i) =>
-        val xs = r.indices.collect { case j if j % 2 == 0 => r(j) }
-        val ys = r.indices.collect { case j if j % 2 == 1 => r(j) }
-        (i.toLong, (r.length / 2).toLong,
-          math.floor(xs.min * 1e3).toLong, math.floor(ys.min * 1e3).toLong,
-          math.floor(xs.max * 1e3).toLong, math.floor(ys.max * 1e3).toLong)
-      }.toDF("ring", "n_pts", "minx_int", "miny_int", "maxx_int", "maxy_int")
-        .orderBy("ring")
-    }),
-
-    // GeoTIFF import: the reference's 2x2 wgs84 fixture — per-pixel values
-    // + georef, mirrored by an independent python struct decode (VALUES)
-    "q_gtiff_read" -> ((s, dir) => {
-      import s.implicits._
-      val grid = graft.sources.GeoTiff.read(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(
-          "/root/reference/test/data/geotiff/wgs84-geographic-epsg4326.tif")))
-      (for { cy <- 0 until grid.h; cx <- 0 until grid.w } yield
-        (cx.toLong, cy.toLong, math.round(grid(cx, cy)),
-          math.round(grid.georef.x0), math.round(grid.georef.y1),
-          math.round(grid.georef.cellSize)))
-        .toDF("cx", "cy", "v", "x0_int", "y1_int", "cell_int")
-        .orderBy("cy", "cx")
-    }),
-
-    // KML/KMZ import: all 63 point placemarks of the reference's Albania
-    // KMZ (zip container + XML), mirrored by an independent python
-    // zipfile + ElementTree decode (VALUES)
-    "q_kml_read" -> ((s, dir) => {
-      import s.implicits._
-      val kmz = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
-        "/root/reference/test/data/kml/Albania.kmz"))
-      val pts = graft.sources.KmlIO.readPoints(graft.sources.KmlIO.kmlFromKmz(kmz))
-      pts.zipWithIndex.map { case (p, i) =>
-        (i.toLong, p.name, math.floor(p.lon * 1e6).toLong, math.floor(p.lat * 1e6).toLong)
-      }.toDF("idx", "name", "lon_int", "lat_int").orderBy("idx")
-    }),
-
-    // -rotate: spherical Euler-angle rotation (d3 semantics, ref
-    // mapshaper-spherical-rotation.mjs) — trig mirrored in DuckDB, floor 1e6
-    "q_rotate" -> ((s, dir) => {
-      val rot = Proj.forward(col("lon"), col("lat"), graft.geom.Crs.Rotation(25.0, 15.0, 30.0))
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-        .select(col("id"),
-          floor(rot(0) * 1000000.0).cast("long").as("rlon_int"),
-          floor(rot(1) * 1000000.0).cast("long").as("rlat_int"))
-        .orderBy("id")
-    }),
-
-    // polygon->polygon join via points: target squares reduced to interior
-    // points, PIP-joined to the broadcast source rectangles
-    "q_poly_join_points" -> ((s, dir) => {
-      val srcLayer = PolygonLayer.fromShapes(polyJoinSources)
-      PolyJoin.viaPoints(s, polyJoinTargetsDf(s, dir), srcLayer)
-        .select(col("key").as("t_key"), col("s_key"))
-        .orderBy("t_key", "s_key")
-    }),
-
-    // raster blur: point-density grid -> clamped 3x3 box blur; output the
-    // integer neighbor-sum (9 * blurred value) so the compare is FP-free
-    "q_raster_blur" -> ((s, dir) => {
-      import s.implicits._
-      val counts = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("int").as("cx"),
-          floor(col("y") / 10.0).cast("int").as("cy"))
-        .groupBy("cx", "cy").count()
-        .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getLong(2))).toMap
-      val vals = Array.tabulate(100) { i =>
-        counts.getOrElse((i % 10, i / 10), 0L).toDouble
-      }
-      val g = Raster.Grid(10, 10, vals, Raster.Georef(0, 100, 10))
-      val blurred = Raster.boxBlur(g, 1)
-      (for (cy <- 0 until 10; cx <- 0 until 10) yield
-        (cx.toLong, cy.toLong, math.round(blurred(cx, cy) * 9.0)))
-        .toDF("cx", "cy", "m")
-        .orderBy("cx", "cy")
-    }),
-
-    // -slice: pairwise clip pieces per (target, source) — rect fixtures give
-    // closed-form piece areas
-    "q_slice" -> ((s, dir) => {
-      import s.implicits._
-      val sources = polyJoinSources.map { case (k, shape) => (k, shape.head) }
-        .toDF("key", "ring")
-      OverlayOp.slice(s, polyJoinTargetsDf(s, dir), sources)
-        .select(col("t_key"), col("s_key"), col("n_rings"),
-          floor(col("area") * 1000000.0).cast("long").as("area_int"))
-        .orderBy("t_key", "s_key")
-    }),
-
-    // -split expression= : tag rows with the split layer (scale path:
-    // write.partitionBy(layer)); verified via per-layer aggregates
-    "q_split_expr" -> ((s, dir) =>
-      Split.byExpression(t(s, dir, "part"), col("p_brand"))
-        .groupBy("layer")
-        .agg(count(lit(1)).as("n"), sum(col("p_partkey")).as("key_sum"))
-        .orderBy("layer")),
-
-    // -info: per-column stats in one aggregation
-    "q_info" -> ((s, dir) =>
-      Info.describe(s, t(s, dir, "part"), Seq("p_partkey", "p_brand", "p_type"))
-        .withColumnRenamed("column", "col_name")
-        .orderBy("col_name")),
-
-    // -classify method=quantile: exact reference break semantics
-    // (ascending[floor(i*n/numRanges)]) via distributed rank-select
-    "q_classify_quantile" -> ((s, dir) => {
-      val part = t(s, dir, "part")
-      val breaks = Classify.quantileBreaks(s, part, "p_retailprice", numBreaks = 4)
-      part.select(col("p_partkey"),
-          Classify.classId(col("p_retailprice"), breaks).cast("long").as("cls"))
-        .orderBy("p_partkey")
-    }),
-
-    // -classify method=hybrid: quantile outer buckets + equal-interval inner
-    "q_classify_hybrid" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-      val breaks = Classify.hybridBreaks(s, li, "l_extendedprice", numBreaks = 5)
-      li.select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          Classify.classId(col("l_extendedprice"), breaks).cast("long").as("cls"))
-        .orderBy("l_orderkey", "l_linenumber", "cls")
-    }),
-
-    // -colorizer: sequential (equal-interval breaks -> color ramp) and
-    // categorical (exact match + other) color assignment
-    "q_colorize" -> ((s, dir) => {
-      val part = t(s, dir, "part")
-      val breaks = Classify.equalIntervalBreaks(part, "p_retailprice", numBreaks = 4)
-      val ramp = Seq("#fee", "#fcc", "#f99", "#f66", "#f33")
-      part.select(col("p_partkey"),
-          Classify.colorize(col("p_retailprice"), breaks, ramp).as("seq_color"),
-          Classify.colorizeCategorical(col("p_brand"),
-            Seq("Brand#13", "Brand#23"), Seq("#b13", "#b23"), otherColor = "#oth")
-            .as("cat_color"))
-        .orderBy("p_partkey")
-    }),
-
-    // -classify non-adjacent (ref src/color/graph-color.mjs:8-163 via
-    // mapshaper-classify.mjs:59): 5x5 lattice of unit squares; adjacency is
-    // the distributed shared-edge self-join, then the reference's exact
-    // greedy runs on the collected id pairs. With 2 colors the result is
-    // parity-FORCED: the first pop is the max-degree max-id node (3,3)
-    // (even parity -> color 0) and every later pop has a colored neighbor
-    // (saturated nodes bubble past all unsaturated ones), so the oracle is
-    // the closed-form checkerboard. The order-sensitive 3/4-color paths are
-    // replica-golden spec-tested (NonAdjacentSpec).
-    "q_classify_color" -> ((s, dir) => {
-      import s.implicits._
-      val n = 5
-      val verts = (for {
-        i <- 0 until n * n
-        (dx, dy, q) <- Seq((0, 0, 0), (1, 0, 1), (1, 1, 2), (0, 1, 3), (0, 0, 4))
-      } yield (i.toLong, 0, q, (i % n + dx).toDouble, (i / n + dy).toDouble))
-        .toDF("id", "ring", "seq", "x", "y")
-      val adj = Classify.sharedEdgeAdjacency(verts)
-      Classify.nonAdjacentDF(s, verts.select("id").distinct(), adj, nColors = 2)
-        .orderBy("id")
-    }),
-
-    // CSV import parity (ref src/text/mapshaper-delim-import.mjs:100-219):
-    // string-fields= protects leading-zero FIPS from numeric detection,
-    // missing values in detected-numeric lat/lon become null without
-    // disqualifying the column; DuckDB re-reads the same file all-varchar
-    // and applies the expected conversions independently.
-    "q_csv_types" -> ((s, dir) => {
-      val df = graft.sources.DelimImport.read(s,
-        "/root/reference/test/data/text/empty_fields2.csv",
-        graft.sources.DelimImport.Options(stringFields = Seq("Voters_FIPS")))
-      df.select(col("County").as("county"), col("Voters_FIPS").as("fips"),
-          col("Precinct").as("precinct"),
-          floor(col("Residence_Addresses_Latitude") * 1000000.0).cast("long").as("lat_int"),
-          floor(col("Residence_Addresses_Longitude") * 1000000.0).cast("long").as("lon_int"),
-          col("Residence_Addresses_LatLongAccuracy").as("acc"))
-        .orderBy("precinct")
-    }),
-
-    // CSV auto-detection at file scale (states.csv, 52 records): every
-    // column of parseable-or-missing numerics converts (leading-zero FIPS
-    // included — no string hint here), text columns stay strings.
-    "q_csv_infer" -> ((s, dir) => {
-      val df = graft.sources.DelimImport.read(s,
-        "/root/reference/test/data/text/states.csv")
-      df.select(col("STATE_ABBR").as("abbr"), col("STATE_NAME").as("name"),
-          col("STATE_FIPS").cast("long").as("fips"),
-          col("POP2010").cast("long").as("pop"),
-          floor(col("POP10_SQMI") * 100.0).cast("long").as("dens_int"),
-          col("SUB_REGION").as("region"))
-        .orderBy("abbr")
-    }),
-
-    // -clip on polylines: horizontal segments vs a rectangle polygon — the
-    // clipped (inside) length has the closed form |[max(x,20), min(x+7,70)]|,
-    // so the full divide-at-intersections kernel is DuckDB-verified
-    "q_clip_lines" -> ((s, dir) => {
-      val rect: Overlay.Shape =
-        Seq(Array(20.0, 20.0, 70.0, 20.0, 70.0, 60.0, 20.0, 60.0, 20.0, 20.0))
-      val mkLine = udf((x: Double, y: Double) => Array(x, y, x + 7.0, y))
-      val lines = points(s, dir)
-        .filter(col("y") =!= 20.0 && col("y") =!= 60.0 &&
-          !col("x").isin(13.0, 20.0, 63.0, 70.0))
-        .select(col("id"), mkLine(col("x"), col("y")).as("line"))
-      // clipped lengths are mathematically k/1000-exact (3-decimal xs, integer
-      // bounds): ROUND to the integer both engines are within 1e-9 of —
-      // floor would flip on the aligned boundary
-      LineOps.clipLines(s, lines, "id", "line", rect)
-        .groupBy("id")
-        .agg(round(sum(col("piece_len")) * 1000.0, 0).cast("long").as("len_int"))
-        .orderBy("id")
-    }),
-
-    // polyline->polygon join (reference: per-part path midpoints, PIP-joined)
-    "q_line_join" -> ((s, dir) => {
-      val mkLine = udf((x: Double, y: Double) => Array(x, y, x + 5.0, y + 3.0))
-      val lines = points(s, dir)
-        .select(col("id"), mkLine(col("x"), col("y")).as("line"))
-      LineOps.joinToPolygons(s, lines, "id", "line", Synthetic.oracleLayer)
-        .select(col("id"), col("poly_key"))
-        .orderBy("id", "poly_key")
-    }),
-
-    // -buffer on polylines: capsule merge through the mosaic kernel; a single
-    // horizontal segment's buffer area has the closed form 2 r L + 15 r^2 sin(pi/15)
-    "q_buffer_line" -> ((s, dir) => {
-      val areaUdf = udf { (x: Double, y: Double, len: Double, r: Double) =>
-        Overlay.layerArea(Buffer.pathBuffer(Array(x, y, x + len, y), r, nSeg = 30))
-      }
-      points(s, dir)
-        .withColumn("len", (col("id") % 5 + 2).cast("double"))
-        .withColumn("r", (col("id") % 3 + 1).cast("double") / 2.0)
-        .select(col("id"),
-          floor(areaUdf(col("x"), col("y"), col("len"), col("r")) * 100.0)
-            .cast("long").as("area_int"))
-        .orderBy("id")
-    }),
-
-    // -buffer on polygons: dilation (square: s^2 + 4 s r + n-gon) and erosion
-    // ((s - 2r)^2) — both closed-form, mosaic-merge and erase kernels verified
-    "q_buffer_polygon" -> ((s, dir) => {
-      val dilUdf = udf { (x: Double, y: Double, r: Double) =>
-        val sq: Overlay.Shape = Seq(Array(x, y, x + 6, y, x + 6, y + 6, x, y + 6, x, y))
-        Overlay.layerArea(Buffer.polygonBuffer(sq, r, nSeg = 32))
-      }
-      val eroUdf = udf { (x: Double, y: Double, r: Double) =>
-        val sq: Overlay.Shape = Seq(Array(x, y, x + 6, y, x + 6, y + 6, x, y + 6, x, y))
-        Overlay.layerArea(Buffer.polygonBuffer(sq, -r, nSeg = 32))
-      }
-      points(s, dir)
-        .withColumn("r", (col("id") % 3 + 1).cast("double") / 2.0)
-        .select(col("id"),
-          floor(dilUdf(col("x"), col("y"), col("r")) * 100.0).cast("long").as("dil_int"),
-          // erosion areas are exact integers ((6-2r)^2 * 100) -> round, not floor
-          round(eroUdf(col("x"), col("y"), col("r")) * 100.0, 0).cast("long").as("ero_int"))
-        .orderBy("id")
-    }),
-
-    // full CRS set (Albers equal-area, Lambert conformal conic, per-row-zone
-    // UTM, azimuthal equidistant): codegen forward transforms, every value
-    // DuckDB-mirrored at cm precision (floor * 100)
-    // -proj dymaxion (polyhedral catalog tail): global spherical rotation,
-    // icosahedral face find over the 24 airocean faces (incl. the three
-    // splits, derived — not hardcoded — on both sides), and the face-local
-    // Gray-Fuller facet transform. The planar unfolding matrices have no SQL
-    // mirror and are pinned by PolyhedralSpec's shared-edge invariant.
-    // Bounded 1500-row catalog fixture: the engine is a JVM singleton, the
-    // UDF row is (face_id, local_x, local_y).
-    "q_dymaxion" -> ((s, dir) => {
-      val fl = udf { (lon: Double, lat: Double) =>
-        graft.geom.Dymaxion.fuller
-          .faceLocal(lon * math.Pi / 180.0, lat * math.Pi / 180.0)
-          .map { case (fid, gx, gy) => Array(fid.toDouble, gx, gy) }.orNull
-      }
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-        .withColumn("r", fl(col("lon"), col("lat")))
-        .select(col("id"),
-          element_at(col("r"), 1).cast("long").as("face_id"),
-          floor(element_at(col("r"), 2) * 1000000.0).cast("long").as("gx_int"),
-          floor(element_at(col("r"), 3) * 1000000.0).cast("long").as("gy_int"))
-        .orderBy("id")
-    }),
-
-    // dymaxion2: same pipeline through the GNOMONIC facet projector
-    "q_dymaxion2" -> ((s, dir) => {
-      val fl = udf { (lon: Double, lat: Double) =>
-        graft.geom.Dymaxion.gnomonic
-          .faceLocal(lon * math.Pi / 180.0, lat * math.Pi / 180.0)
-          .map { case (fid, gx, gy) => Array(fid.toDouble, gx, gy) }.orNull
-      }
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-        .withColumn("r", fl(col("lon"), col("lat")))
-        .select(col("id"),
-          element_at(col("r"), 1).cast("long").as("face_id"),
-          floor(element_at(col("r"), 2) * 1000000.0).cast("long").as("gx_int"),
-          floor(element_at(col("r"), 3) * 1000000.0).cast("long").as("gy_int"))
-        .orderBy("id")
-    }),
-
-    // -proj butterfly: the truncated-octahedron FACE FIND (octant dispatch
-    // + corner-normal tests over the derived 32-face solid, Pacific aspect)
-    // — the facet transform itself is oracle-backed by q_cahill, the
-    // unfolding by ButterflySpec
-    "q_butterfly" -> ((s, dir) => {
-      val fl = udf { (lon: Double, lat: Double) =>
-        val lam = graft.geom.Polyhedral.normalizeRadians(
-          (lon - 157.5) * math.Pi / 180.0)
-        graft.geom.Butterfly.butterfly.faceLocal(lam, lat * math.Pi / 180.0)
-          .map(_._1.toLong).getOrElse(-1L)
-      }
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-        .select(col("id"), fl(col("lon"), col("lat")).as("face_id"))
-        .orderBy("id")
-    }),
-
-    // -proj cahill_keyes: the full 12-zone octant transform — constants
-    // construction, octant routing, zone dispatch, circular-arc split, and
-    // octant placement are ALL re-derived in the SQL mirror (cahillSql).
-    // Bounded 1500-row catalog fixture.
-    "q_cahill" -> ((s, dir) => {
-      val ck = new graft.geom.CahillKeyes(10000)
-      val fwd = udf { (lon: Double, lat: Double) =>
-        val (cx, cy) = ck.forward(lon * math.Pi / 180.0, lat * math.Pi / 180.0)
-        Array(cx, cy)
-      }
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-        .withColumn("r", fwd(col("lon"), col("lat")))
-        .select(col("id"),
-          floor(element_at(col("r"), 1) * 100.0).cast("long").as("x_int"),
-          floor(element_at(col("r"), 2) * 100.0).cast("long").as("y_int"))
-        .orderBy("id")
-    }),
-
-    // -proj narukawa2022: the FULL forward — orientation basis, nearest
-    // tetrahedral facet, sector radial transform, and the reflect/fold/wrap
-    // rectangle layout — mirrored in SQL with the basis and facet frames
-    // DERIVED from the published vertices (only those are literal).
-    "q_narukawa" -> ((s, dir) => {
-      val fwd = udf { (lon: Double, lat: Double) =>
-        val (nx, ny) = graft.geom.Narukawa.forward(
-          lon * math.Pi / 180.0, lat * math.Pi / 180.0)
-        Array(nx, ny)
-      }
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-        .withColumn("r", fwd(col("lon"), col("lat")))
-        .select(col("id"),
-          floor(element_at(col("r"), 1) * 1000000.0).cast("long").as("x_int"),
-          floor(element_at(col("r"), 2) * 1000000.0).cast("long").as("y_int"))
-        .orderBy("id")
-    }),
-
-    // -proj markley (Lee tetrahedral): the face-local conformal transform —
-    // global rotation, tetrahedron face find, per-face rotation, and L. P.
-    // Lee's complex-series triangle map (sector pick, vertex/center series,
-    // annulus blend) — mirrored in SQL; the rectangular layout is pinned by
-    // LeeSpec (shared-edge + frame invariants).
-    "q_lee" -> ((s, dir) => {
-      val fl = udf { (lon: Double, lat: Double) =>
-        graft.geom.Lee.markley.base
-          .faceLocal(lon * math.Pi / 180.0, lat * math.Pi / 180.0)
-          .map { case (fid, lx, ly) => Array(fid.toDouble, lx, ly) }.orNull
-      }
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-        .withColumn("r", fl(col("lon"), col("lat")))
-        .filter(col("r").isNotNull) // mirror drops no-face ids via inner joins
-        .select(col("id"),
-          element_at(col("r"), 1).cast("long").as("face_id"),
-          floor(element_at(col("r"), 2) * 1000000.0).cast("long").as("lx_int"),
-          floor(element_at(col("r"), 3) * 1000000.0).cast("long").as("ly_int"))
-        .orderBy("id")
-    }),
-
-    // the CALM aspect of the same kernel (Kunimune's published rotation)
-    "q_lee_calm" -> ((s, dir) => {
-      val fl = udf { (lon: Double, lat: Double) =>
-        graft.geom.Lee.calm.base
-          .faceLocal(lon * math.Pi / 180.0, lat * math.Pi / 180.0)
-          .map { case (fid, lx, ly) => Array(fid.toDouble, lx, ly) }.orNull
-      }
-      points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-        .withColumn("r", fl(col("lon"), col("lat")))
-        .filter(col("r").isNotNull)
-        .select(col("id"),
-          element_at(col("r"), 1).cast("long").as("face_id"),
-          floor(element_at(col("r"), 2) * 1000000.0).cast("long").as("lx_int"),
-          floor(element_at(col("r"), 3) * 1000000.0).cast("long").as("ly_int"))
-        .orderBy("id")
-    }),
-
-    "q_proj_crs" -> ((s, dir) => {
-      val pts = points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-      val fa = Proj.forward(col("lon"), col("lat"), crsAea)
-      val fl = Proj.forward(col("lon"), col("lat"), crsLcc)
-      val fu = graft.functions.SpatialExprs.utmForward(col("lon"), col("lat"))
-      val fq = Proj.forward(col("lon"), col("lat"), crsAeqd)
-      pts.select(col("id"),
-          floor(fa(0) * 100.0).cast("long").as("aea_x"),
-          floor(fa(1) * 100.0).cast("long").as("aea_y"),
-          floor(fl(0) * 100.0).cast("long").as("lcc_x"),
-          floor(fl(1) * 100.0).cast("long").as("lcc_y"),
-          floor(fu(0) * 100.0).cast("long").as("utm_x"),
-          floor(fu(1) * 100.0).cast("long").as("utm_y"),
-          floor(fq(0) * 100.0).cast("long").as("adq_x"),
-          floor(fq(1) * 100.0).cast("long").as("adq_y"))
-        .orderBy("id")
-    }),
-
-    // Douglas-Peucker thresholds at a fixed interval — the DP recursion is
-    // mirrored by a recursive CTE, thresholds bit-identical (no floor guard)
-    "q_simplify_dp" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-      val rings = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (r.toLong, flat)
-      }.toDF("ring_id", "ring")
-      val keptUdf = udf { (flat: Seq[Double]) =>
-        val n = flat.length / 2
-        val xx = Array.tabulate(n)(i => flat(i * 2))
-        val yy = Array.tabulate(n)(i => flat(i * 2 + 1))
-        graft.geom.Simplify.douglasPeucker(xx, yy).count(_ >= 0.35).toLong
-      }
-      rings.select(col("ring_id"),
-          (size(col("ring")) / 2).cast("long").as("n_before"),
-          keptUdf(col("ring")).as("n_after"))
-        .orderBy("ring_id")
-    }),
-
-    // densified path reprojection (sinusoidal): inserted-vertex counts are
-    // exact — the bisection recursion is mirrored by a recursive CTE
-    "q_proj_path" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-      val rings = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (r.toLong, flat)
-      }.toDF("ring_id", "ring")
-      val proj = Crs.Sinusoidal()
-      val cntUdf = udf { (flat: Seq[Double]) =>
-        val ll = new Array[Double](flat.length)
-        var i = 0
-        while (i + 1 < flat.length) {
-          ll(i) = flat(i) * 3.6 - 180.0
-          ll(i + 1) = flat(i + 1) * 1.7 - 85.0
-          i += 2
-        }
-        (Crs.projectPathDensified(ll, proj, 20000.0).length / 2).toLong
-      }
-      rings.select(col("ring_id"),
-          (size(col("ring")) / 2).cast("long").as("n_before"),
-          cntUdf(col("ring")).as("n_after"))
-        .orderBy("ring_id")
-    }),
-
-    // world projections behind the `+proj=` string front-end (Robinson,
-    // Mollweide, sinusoidal, Equal Earth, polar stereographic) — parser and
-    // forwards both verified by the cm-exact DuckDB mirror
-    "q_proj_world" -> ((s, dir) => {
-      val pts = points(s, dir)
-        .withColumn("lon", col("x") * 3.6 - 180.0)
-        .withColumn("lat", col("y") * 1.7 - 85.0)
-      val fr = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("robinson"))
-      val fm = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("+proj=moll"))
-      val fs = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("+proj=sinu"))
-      val fe = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("+proj=eqearth"))
-      val ft = Proj.forward(col("lon"), col("lat"), Crs.fromProj4("+proj=stere +lat_0=90 +lon_0=0"))
-      pts.select(col("id"),
-          floor(fr(0) * 100.0).cast("long").as("robin_x"),
-          floor(fr(1) * 100.0).cast("long").as("robin_y"),
-          floor(fm(0) * 100.0).cast("long").as("moll_x"),
-          floor(fm(1) * 100.0).cast("long").as("moll_y"),
-          floor(fs(0) * 100.0).cast("long").as("sinu_x"),
-          floor(fs(1) * 100.0).cast("long").as("sinu_y"),
-          floor(fe(0) * 100.0).cast("long").as("eqe_x"),
-          floor(fe(1) * 100.0).cast("long").as("eqe_y"),
-          floor(ft(0) * 100.0).cast("long").as("stere_x"),
-          floor(ft(1) * 100.0).cast("long").as("stere_y"))
-        .orderBy("id")
-    }),
-
-    // -grid type=rhombus / type=triangle: hex lattice subdivision; vertex
-    // positions and shoelace areas verified by an exact-FP DuckDB mirror
-    "q_grid_rhombus" -> ((s, dir) =>
-      Grids.rhombusGrid(s, 0.0, 0.0, 30.0, 20.0, 4.0)
-        .select(col("q"), col("r"), col("k").cast("long").as("k"),
-          floor(ringAreaUdf(col("ring")) * 1000000.0).cast("long").as("area_int"),
-          floor(element_at(col("ring"), 3) * 1000000.0).cast("long").as("v1x_int"),
-          floor(element_at(col("ring"), 4) * 1000000.0).cast("long").as("v1y_int"))
-        .orderBy("q", "r", "k")),
-
-    "q_grid_triangle" -> ((s, dir) =>
-      Grids.triangleGrid(s, 0.0, 0.0, 30.0, 20.0, 4.0)
-        .select(col("q"), col("r"), col("k").cast("long").as("k"),
-          floor(ringAreaUdf(col("ring")) * 1000000.0).cast("long").as("area_int"),
-          floor(element_at(col("ring"), 3) * 1000000.0).cast("long").as("v1x_int"),
-          floor(element_at(col("ring"), 4) * 1000000.0).cast("long").as("v1y_int"))
-        .orderBy("q", "r", "k")),
-
-    // -dots (ref mapshaper-dot-density.mjs): deterministic rejection
-    // sampling inside a rect-with-hole — every SplitMix64 draw, the bbox
-    // mapping, and the even-odd acceptance (pure bbox arithmetic for this
-    // fixture) are re-derived call-by-call in SQL
-    "q_dots" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        Grids.dotFill(Seq(oRect(0, 0, 20, 10), oRect(8, 3, 4, 4)),
-          n = 10, seed = g * 1000L + 7L)
-      }
-      points(s, dir).select((col("id") % 8).as("g")).distinct()
-        .withColumn("dots", kernel(col("g")))
-        .withColumn("k",
-          explode(sequence(lit(0), (size(col("dots")) / 2 - 1).cast("int"))))
-        .select(col("g"), col("k").cast("long").as("k"),
-          floor(element_at(col("dots"), col("k") * 2 + 1) * 1000000000.0)
-            .cast("long").as("x_int"),
-          floor(element_at(col("dots"), col("k") * 2 + 2) * 1000000000.0)
-            .cast("long").as("y_int"))
-        .orderBy("g", "k")
-    }),
-
-    // -grid type=hex2 (pointy-top hexagons, ref mapshaper-hex-grid.mjs:33):
-    // the full hex lattice — enumeration bounds, centers, all six ring
-    // vertices and the shoelace area — re-derived in SQL (same dl()
-    // constants and op order as the rhombus/triangle mirrors)
-    "q_grid_hex" -> ((s, dir) =>
-      Grids.hexGrid(s, 0.0, 0.0, 30.0, 20.0, 4.0)
-        .select(col("q"), col("r"),
-          floor(col("cx") * 1000000.0).cast("long").as("cx_int"),
-          floor(col("cy") * 1000000.0).cast("long").as("cy_int"),
-          floor(ringAreaUdf(col("ring")) * 1000000.0).cast("long").as("area_int"),
-          floor(element_at(col("ring"), 3) * 1000000.0).cast("long").as("v1x_int"),
-          floor(element_at(col("ring"), 4) * 1000000.0).cast("long").as("v1y_int"))
-        .orderBy("q", "r")),
-
-    // -subdivide expression=: reference count-median bisection while the
-    // predicate holds; the leaf-size multiset is closed-form (balanced
-    // halving) and mirrored by a recursive CTE
-    "q_subdivide" -> ((s, dir) =>
-      Subdivide.byExpression(s, points(s, dir), "x", "y", st => st.count > 100)
-        .groupBy("leaf_id").agg(count(lit(1)).as("leaf_size"))
-        .groupBy("leaf_size").agg(count(lit(1)).as("n_leaves"))
-        .orderBy("leaf_size")),
-
-    // -rectangles: per-feature bbox + pct offsets + aspect fill-out, exact
-    "q_rectangles" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-      val rings = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (r.toLong, flat)
-      }.toDF("ring_id", "ring")
-      Rectangles.of(rings, "ring", offsets = (0.1, 0.05, 0.1, 0.05),
-          offsetsArePct = true, aspectRatio = 1.5)
-        .select(col("ring_id"),
-          floor(element_at(col("rect"), 1) * 1000000.0).cast("long").as("x0_int"),
-          floor(element_at(col("rect"), 2) * 1000000.0).cast("long").as("y0_int"),
-          floor(element_at(col("rect"), 3) * 1000000.0).cast("long").as("x1_int"),
-          floor(element_at(col("rect"), 4) * 1000000.0).cast("long").as("y1_int"))
-        .orderBy("ring_id")
-    }),
-
-    // -graticule: meridian/parallel construction + densification verified
-    // vertex by vertex (exact arithmetic both sides, no epsilon)
-    "q_graticule" -> ((s, dir) =>
-      Grids.graticule(s, 10)
-        .withColumn("vi", explode(sequence(lit(0), (size(col("path")) / 2 - 1).cast("int"))))
-        .select(col("gtype"), col("value").cast("long").as("value"),
-          col("part").cast("long").as("part"), col("vi").cast("long").as("vi"),
-          floor(element_at(col("path"), col("vi") * 2 + 1) * 1000000.0).cast("long").as("x_int"),
-          floor(element_at(col("path"), col("vi") * 2 + 2) * 1000000.0).cast("long").as("y_int"))
-        .orderBy("gtype", "value", "part", "vi")),
-
-    // -point-to-grid: circle-influence weights into cells (rows-only; the
-    // overlap kernel is unit-tested against closed-form values)
-    "q_point_to_grid" -> ((s, dir) =>
-      Grids.pointToGrid(s, points(s, dir), "x", "y", 0.0, 0.0, cs = 5.0, radius = 3.0)
-        .select(col("cell"), col("n_points"),
-          floor(col("weight") * 1000.0).cast("long").as("weight_int"))
-        .orderBy("cell")),
-
-    // -smooth / -densify: per-ring vertex kernels (no shuffle)
-    "q_smooth" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-      val rings = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (r.toLong, flat)
-      }.toDF("ring_id", "ring")
-      val smoothUdf = udf((f: Seq[Double]) => graft.geom.PathOps.smooth(f.toArray, 0.25, 2).length / 2)
-      val densifyUdf = udf((f: Seq[Double]) => graft.geom.PathOps.densify(f.toArray, 1.0).length / 2)
-      rings.select(col("ring_id"),
-          (size(col("ring")) / 2).cast("long").as("n_vertices"),
-          smoothUdf(col("ring")).cast("long").as("n_smoothed"),
-          densifyUdf(col("ring")).cast("long").as("n_densified"))
-        .orderBy("ring_id")
-    }),
-
-    // -data-fill: modal-neighbor contagion over a cell adjacency graph
-    "q_data_fill" -> ((s, dir) => {
-      val cells = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"),
-          col("id"))
-        .groupBy("cx", "cy").agg(min(col("id")).as("min_id"))
-        .withColumn("cell_id", col("cx") * 1000 + col("cy"))
-        // label only cells whose min_id % 3 == 0; fill the rest from neighbors
-        .withColumn("value", when(col("min_id") % 3 === 0,
-          concat(lit("c"), (col("min_id") % 7).cast("string"))).otherwise(lit(null: String)))
-      val adj = cells.as("a").join(cells.as("b"),
-          (abs(col("a.cx") - col("b.cx")) + abs(col("a.cy") - col("b.cy"))) === 1 &&
-            col("a.cell_id") < col("b.cell_id"))
-        .select(col("a.cell_id").as("a"), col("b.cell_id").as("b"))
-      DataFill.fill(s, cells.select(col("cell_id").as("id"), col("value")), adj)
-        .orderBy("id")
-    }),
-
-    // -data-fill weighted: border-length-weighted contagion with the
-    // reference's value-set group pooling plus the smoothing pass. Nulls sit
-    // on one checkerboard parity, so every donor vote resolves in one round
-    // and the smoothing wavefront is a single simultaneous step — both
-    // phases mirror exactly with integer edge weights.
-    "q_data_fill_weighted" -> ((s, dir) => {
-      val cells = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"),
-          col("id"))
-        .groupBy("cx", "cy").agg(min(col("id")).as("min_id"))
-        .withColumn("cell_id", col("cx") * 1000 + col("cy"))
-        .withColumn("value", when((col("cx") + col("cy")) % 2 === 0,
-          concat(lit("c"), (col("min_id") % 7).cast("string"))).otherwise(lit(null: String)))
-      val adj = cells.as("a").join(cells.as("b"),
-          (abs(col("a.cx") - col("b.cx")) + abs(col("a.cy") - col("b.cy"))) === 1 &&
-            col("a.cell_id") < col("b.cell_id"))
-        .select(col("a.cell_id").as("a"), col("b.cell_id").as("b"),
-          (lit(1.0) + (col("a.cell_id") * 31 + col("b.cell_id") * 17) % 23).as("w"))
-      DataFill.fillWeighted(s, cells.select(col("cell_id").as("id"), col("value")), adj)
-        .orderBy("id")
-    }),
-
-    // checkpoint-resumable tile run: manifest with per-partition lineage
-    "q_tilerun" -> ((s, dir) => {
-      import s.implicits._
-      val tag = dir.replaceAll(".*/", "")
-      val outDir = s"$DataRoot/tilerun_$tag"
-      // fresh run for determinism (resume itself is exercised in TileRunSpec)
-      def rmrf(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rmrf)
-        f.delete()
-      }
-      rmrf(new java.io.File(outDir))
-      val imgs = imagesDf(s, dir)
-      // the lineage CHECKSUM (bit_xor of Spark xxhash64) is exercised in
-      // TileRunSpec; the group/input/output lineage is DuckDB-mirrorable
-      // (Morton group cascade + ray-cast match counts) and oracled here
-      graft.streaming.TileRun.run(s, imgs, imageLayer, outDir, coarseRes = 3, fineRes = 8)
-        .map(m => (m.group, m.inputRows, m.outputRows))
-        .toDF("grp", "input_rows", "output_rows")
-        .orderBy("grp")
-    }),
-
-    // -lines: polygons -> classified boundary edges (outer / field / inner)
-    // over a data-derived square-cell layer; exact integer coordinates
-    "q_lines" -> ((s, dir) => {
-      val cells = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"))
-        .distinct()
-        .withColumn("key", col("cx") * 1000 + col("cy"))
-        .withColumn("g", (col("cx") + col("cy")) % 3)
-      val d = (c: Column) => c.cast("double")
-      val rings = cells.withColumn("ring", array(
-        d(col("cx")), d(col("cy")),
-        d(col("cx") + 1), d(col("cy")),
-        d(col("cx") + 1), d(col("cy") + 1),
-        d(col("cx")), d(col("cy") + 1),
-        d(col("cx")), d(col("cy"))))
-      Lines.polygonsToLines(rings, "key", "ring", Seq("g"))
-        .select(col("ex1").cast("long").as("x1"), col("ey1").cast("long").as("y1"),
-          col("ex2").cast("long").as("x2"), col("ey2").cast("long").as("y2"),
-          col("type"), col("rank"), col("key_a"), col("key_b"))
-        .orderBy("x1", "y1", "x2", "y2")
-    }),
-
-    // -lines chain assembly: chain-size histogram per classification group
-    // (labeling-invariant, so the pointer-jumping CC is oracle-checkable)
-    "q_lines_chains" -> ((s, dir) => {
-      val cells = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"))
-        .distinct()
-        .withColumn("key", col("cx") * 1000 + col("cy"))
-        .withColumn("g", (col("cx") + col("cy")) % 3)
-      val d = (c: Column) => c.cast("double")
-      val rings = cells.withColumn("ring", array(
-        d(col("cx")), d(col("cy")),
-        d(col("cx") + 1), d(col("cy")),
-        d(col("cx") + 1), d(col("cy") + 1),
-        d(col("cx")), d(col("cy") + 1),
-        d(col("cx")), d(col("cy"))))
-      Lines.assembleChains(s, Lines.polygonsToLines(rings, "key", "ring", Seq("g")))
-        .groupBy("type", "rank", "key_a", "key_b", "n_edges")
-        .agg(count(lit(1)).as("n_chains"))
-        .orderBy("type", "rank", "key_a", "key_b", "n_edges")
-    }),
-
-    // -lines over points: groupby= assembly into ordered LineStrings,
-    // verified vertex by vertex
-    "q_points_lines" -> ((s, dir) => {
-      val pts = points(s, dir).withColumn("g", col("id") % 5)
-      Lines.pointsToLines(pts, "g", "id", "x", "y")
-        .select(col("group"), posexplode(col("line")))
-        .groupBy(col("group"), (col("pos") / 2).cast("long").as("seq"))
-        .agg(min(when(col("pos") % 2 === 0, col("col"))).as("x"),
-          min(when(col("pos") % 2 === 1, col("col"))).as("y"))
-        .orderBy("group", "seq")
-    }),
-
-    // -check-geometry: distributed segment self-intersection report
-    "q_check_geom" -> ((s, dir) => {
-      val segs = points(s, dir).select(col("id").as("sid"),
-        col("x").as("x1"), col("y").as("y1"),
-        (col("x") + (derivedX(col("id") * 31 + 17) / 10.0 - 5.0)).as("x2"),
-        (col("y") + (derivedY(col("id") * 57 + 3) / 10.0 - 5.0)).as("y2"))
-      CheckGeometry.intersectingPairs(segs, "sid", cellSize = 5.0)
-        .orderBy("a_id", "b_id")
-    }),
-
-    // ellipsoidal geodesic inverse (Vincenty): distance to the meter and
-    // azimuth to 1e-4 degree on 30 derived pairs — the SQL mirror unrolls
-    // the lambda iteration to a fixed 8 rounds (the operator iterates to
-    // 1e-13; the guard absorbs the sub-micrometer tail difference)
-    "q_geodesic" -> ((s, dir) => {
-      val invUdf = udf { (lat1: Double, lon1: Double, lat2: Double, lon2: Double) =>
-        val (dist, azi) = graft.geom.Crs.geodesicInverse(lat1, lon1, lat2, lon2)
-        (math.floor(dist).toLong, math.floor(azi * 10000.0).toLong)
-      }
-      points(s, dir).where(col("id") <= 30)
-        .select(col("id"),
-          ((col("y") - 50.0) * 1.2).as("lat1"),
-          ((col("x") - 50.0) * 3.2).as("lon1"),
-          (derivedY(col("id") * 57 + 3) / 10.0 - 5.0).as("dlat"),
-          (derivedX(col("id") * 31 + 17) / 10.0 - 5.0).as("dlon"))
-        .select(col("id"),
-          invUdf(col("lat1"), col("lon1"),
-            col("lat1") + col("dlat"), col("lon1") + col("dlon")).as("r"))
-        .select(col("id"), col("r._1").as("dist_m"), col("r._2").as("azi_int"))
-        .orderBy("id")
-    }),
-
-    // Vincenty DIRECT problem (the ellipsoidal AEQD inverse / buffer-ring
-    // engine): destination at 1e-7 degree (~1 cm), azimuth at 1e-4 degree,
-    // vs a 6-round fixed unroll in SQL
-    "q_geodesic_direct" -> ((s, dir) => {
-      val dirUdf = udf { (lat1: Double, lon1: Double, azi: Double, dist: Double) =>
-        val (lon2, lat2, azi2) = graft.geom.Crs.geodesicDirect(lat1, lon1, azi, dist)
-        (math.floor(lon2 * 10000000.0).toLong,
-          math.floor(lat2 * 10000000.0).toLong,
-          math.floor(azi2 * 10000.0).toLong)
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 30)
-        .select(col("id"),
-          ((col("y") - 50.0) * 1.2).as("lat1"),
-          ((col("x") - 50.0) * 3.2).as("lon1"),
-          ((col("id") * 97) % 360).cast("double").as("azi"),
-          (((col("id") * 131) % 5000) * 1000 + 500).cast("double").as("dist"))
-        .select(col("id"),
-          dirUdf(col("lat1"), col("lon1"), col("azi"), col("dist")).as("r"))
-        .select(col("id"), col("r._1").as("lon2_int"), col("r._2").as("lat2_int"),
-          col("r._3").as("azi2_int"))
-        .orderBy("id")
-    }),
-
-    // -buffer on ellipsoidal CRS: the geodesic point-buffer ring — one
-    // Vincenty direct shot per bearing (ref mapshaper-geodesic.mjs:92-99);
-    // all 8 ring vertices mirrored through the same 6-round chain
-    "q_buffer_geodesic" -> ((s, dir) => {
-      val ringUdf = udf { (lat: Double, lon: Double, r: Double) =>
-        Buffer.geodesicPointBufferRingEllipsoidal(lon, lat, r, nSeg = 8)
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 30)
-        .select(col("id"),
-          ((col("y") - 50.0) * 1.2).as("lat"),
-          ((col("x") - 50.0) * 3.2).as("lon"),
-          ((col("id") % 7).cast("double") * 25000.0 + 5000.0).as("r"))
-        .withColumn("ring", ringUdf(col("lat"), col("lon"), col("r")))
-        .withColumn("k", explode(sequence(lit(0), lit(7))))
-        .select(col("id"), col("k").cast("long").as("k"),
-          floor(element_at(col("ring"), col("k") * 2 + 1) * 10000000.0)
-            .cast("long").as("lon_int"),
-          floor(element_at(col("ring"), col("k") * 2 + 2) * 10000000.0)
-            .cast("long").as("lat_int"))
-        .orderBy("id", "k")
-    }),
-
-    // -proj albersusa: the composite forward — first-match bbox routing
-    // across CONUS/AK/HI frames, per-frame ellipsoidal Albers, inset
-    // scale-about-origin + placement affine — mirrored end to end with
-    // constants interpolated from the same Frame objects
-    "q_albersusa" -> ((s, dir) => {
-      val p = graft.geom.Crs.AlbersUsa()
-      val frames = Seq(graft.geom.Crs.AlbersUsa.Main,
-        graft.geom.Crs.AlbersUsa.AK, graft.geom.Crs.AlbersUsa.HI)
-      val fwd = udf { (lon: Double, lat: Double) =>
-        val fi = frames.indexWhere(_.contains(lon, lat))
-        if (fi < 0) (-1L, 0L, 0L)
-        else {
-          val (x, y) = p.forward(lon, lat)
-          (fi.toLong, math.floor(x * 100.0).toLong, math.floor(y * 100.0).toLong)
-        }
-      }
-      points(s, dir)
-        .select(col("id"), (col("x") * 1.2 - 180.0).as("lon"),
-          (col("y") * 0.6 + 15.0).as("lat"))
-        .withColumn("r", fwd(col("lon"), col("lat")))
-        .filter(col("r._1") >= 0)
-        .select(col("id"), col("r._1").as("frame"),
-          col("r._2").as("x_int"), col("r._3").as("y_int"))
-        .orderBy("id")
-    }),
-
-
-    // .prj (WKT1) reader over ALL 28 reference fixtures: node kind, every
-    // PARAMETER, and the SPHEROID constants — mirrored by a VALUES table
-    // from an independent regex decode of the same files (reader oracle
-    // precedent: q_fgb_read / q_gpkg_read)
-    "q_wkt_read" -> ((s, dir) => {
-      import s.implicits._
-      import scala.jdk.CollectionConverters._
-      val baseDir = java.nio.file.Paths.get("/root/reference/test/data")
-      val walk = java.nio.file.Files.walk(baseDir)
-      val files =
-        try walk.iterator().asScala.filter(_.toString.endsWith(".prj")).toVector
-        finally walk.close()
-      val rows = files.sortBy(_.toString).flatMap { f =>
-        val text = new String(java.nio.file.Files.readAllBytes(f),
-          java.nio.charset.StandardCharsets.UTF_8)
-        val rel = baseDir.relativize(f).toString
-        val node = graft.geom.Wkt.parse(text)
-        val params = node.findAll("PARAMETER").map(pn =>
-          (rel, "param:" + pn.strings.head.toLowerCase, "",
-            math.floor(pn.numbers.head * 1000000.0).toLong))
-        val sph = node.find("SPHEROID").toSeq.flatMap(sn => Seq(
-          (rel, "spheroid", sn.strings.head,
-            math.floor(sn.numbers.head * 1000000.0).toLong),
-          (rel, "rf", "", math.floor(sn.numbers(1) * 1000000.0).toLong)))
-        (rel, "kind", node.kind, 0L) +: (params ++ sph)
-      }
-      rows.toDF("file", "item", "sval", "num_int")
-        .orderBy("file", "item", "num_int")
-    }),
-
-    // -filter-detail (ref mapshaper-detail-filter.mjs): one fixture per
-    // behavior — a needle excursion sliced by the survivor-merge +
-    // tortuosity commit, a gentle stretch restored at full resolution, and
-    // a round loop protected by the roundness gate. All three decisions sit
-    // far from their thresholds, so the surviving vertex list is a closed
-    // form (replica-validated for every g).
-    "q_filter_detail" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        val hA = 3.0 + (g % 3).toDouble
-        val wB = 2.0 + (g % 2).toDouble
-        val pts = Array(
-          (0.0, 0.0), (30.0, 0.0), (30.0, hA), (30.5, hA), (30.5, 0.0),
-          (80.0, 0.0), (80.0, 1.0), (80.0 + wB, 1.0), (80.0 + wB, 0.0),
-          (130.0, 0.0), (127.0, 2.0), (130.4, 6.0), (134.0, 2.0), (130.8, 0.0),
-          (200.0, 0.0))
-        val (ox, oy) = graft.geom.DetailFilter.filter(
-          pts.map(_._1), pts.map(_._2), distance = 2.0)
-        ox.indices.map(i =>
-          (i.toLong, math.round(ox(i) * 10.0), math.round(oy(i) * 10.0))).toArray
-      }
-      points(s, dir).select((col("id") % 8).as("g")).distinct()
-        .withColumn("v", explode(kernel(col("g"))))
-        .select(col("g"), col("v._1").as("k"), col("v._2").as("x10"),
-          col("v._3").as("y10"))
-        .orderBy("g", "k")
-    }),
-
-    // -shape: rectangle (densified at 0.5) and circle constructors,
-    // vertex-exact (circle sin/cos floor-guarded)
-    "q_shape" -> ((s, dir) => {
-      import s.implicits._
-      def verts(kind: String, flat: Array[Double]): Seq[(String, Long, Long, Long)] =
-        (0 until flat.length / 2).map { i =>
-          (kind, i.toLong,
-            math.floor(flat(i * 2) * 1000000.0).toLong,
-            math.floor(flat(i * 2 + 1) * 1000000.0).toLong)
-        }
-      (verts("rect", Shapes.rectangle(0, 0, 7, 3)) ++
-        verts("circle", Shapes.circle(50, 50, 10, vertices = 37)))
-        .toDF("kind", "seq", "x_int", "y_int")
-        .orderBy("kind", "seq")
-    }),
-
-    // -frame: layer bounds + pct offsets + px offsets + derived height
-    "q_frame" -> ((s, dir) => {
-      import s.implicits._
-      val f = Shapes.frame(points(s, dir), "x", "y", widthPx = 800,
-        pctOffsets = (0.05, 0.05, 0.1, 0.1), pxOffsets = (10, 10, 20, 20))
-      Seq((math.floor(f.xmin * 1000000.0).toLong, math.floor(f.ymin * 1000000.0).toLong,
-        math.floor(f.xmax * 1000000.0).toLong, math.floor(f.ymax * 1000000.0).toLong,
-        math.round(f.widthPx * 10.0), math.round(f.heightPx * 10.0)))
-        .toDF("x0_int", "y0_int", "x1_int", "y1_int", "w_px10", "h_px10")
-    }),
-
-    // -scalebar: auto-label ladder + length/placement arithmetic per scale
-    "q_scalebar" -> ((s, dir) => {
-      val labelUdf = udf { (mpp: Double) => Scalebar.autoLabel(800.0, mpp) }
-      val lenUdf = udf { (mpp: Double) =>
-        Scalebar.render(800.0, 600.0, mpp, position = "bottom-right").lengthPx }
-      points(s, dir).where(col("id") <= 30)
-        .select(col("id"), ((col("id") * 73) % 400 + 5).cast("double").as("mpp"))
-        .withColumn("label", labelUdf(col("mpp")))
-        .withColumn("len_px", lenUdf(col("mpp")))
-        .withColumn("dx", (lit(800) - col("len_px") - 12).cast("long"))
-        .select(col("id"), col("label"), col("len_px"), col("dx"))
-        .orderBy("id")
-    }),
-
-    // -symbols geographic: per-point square symbol, scaled+shifted, no shuffle
-    "q_symbols" -> ((s, dir) => {
-      val tmpl = Symbols.polygonCoords("square", 1.0)
-      val pts = points(s, dir).withColumn("scale", (col("id") % 7 + 1).cast("double"))
-      Symbols.geographic(pts, "x", "y", tmpl, metersPerPx = 1.0, radiusCol = Some("scale"))
-        .select(col("id"), posexplode(col("symbol")))
-        .groupBy(col("id"), (col("pos") / 2).cast("long").as("seq"))
-        .agg(
-          min(when(col("pos") % 2 === 0, floor(col("col") * 1000000.0))).cast("long").as("x_int"),
-          min(when(col("pos") % 2 === 1, floor(col("col") * 1000000.0))).cast("long").as("y_int"))
-        .orderBy("id", "seq")
-    }),
-
-    // -points endpoints=: first/last vertex of each assembled group line
-    "q_points_endpoints" -> ((s, dir) => {
-      val pts = points(s, dir).withColumn("g", col("id") % 7)
-      Points.endpoints(Lines.pointsToLines(pts, "g", "id", "x", "y"), "group", "line")
-        .orderBy("group", "which")
-    }),
-
-    // -points from a WKT field: codegen regexp_extract round trip
-    "q_points_wkt" -> ((s, dir) => {
-      val wkt = points(s, dir).select(col("id"),
-        concat(lit("POINT ("), ((col("id") * 31) % 1000).cast("string"),
-          lit(" "), ((col("id") * 77) % 1000).cast("string"), lit(")")).as("wkt"))
-      Points.fromWkt(wkt, "wkt")
-        .select(col("id"), col("x").cast("long").as("px"), col("y").cast("long").as("py"))
-        .orderBy("id")
-    }),
-
-    // -alpha-shapes: the alpha-complex boundary edge set (by point ids) of
-    // 24 derived points — Bowyer-Watson here vs brute-force empty-
-    // circumcircle Delaunay in the mirror (the triangulation is unique in
-    // general position, so the topology matches; the radius filter uses the
-    // identical circumcenter-distance arithmetic)
-    "q_alpha_edges" -> ((s, dir) => {
-      import s.implicits._
-      val pts24 = points(s, dir).where(col("id") >= 1 && col("id") <= 24)
-        .orderBy("id").select("id", "x", "y").as[(Long, Double, Double)].collect()
-      val xs = pts24.map(_._2); val ys = pts24.map(_._3)
-      val tris = AlphaShape.complexTriangles(xs, ys, alpha = 12.0)
-      val counts = scala.collection.mutable.Map.empty[(Long, Long), Int]
-      tris.grouped(3).foreach { t =>
-        Seq((t(0), t(1)), (t(1), t(2)), (t(0), t(2))).foreach { case (u, v) =>
-          val key = (pts24(math.min(u, v))._1, pts24(math.max(u, v))._1)
-          counts(key) = counts.getOrElse(key, 0) + 1
-        }
-      }
-      counts.filter(_._2 == 1).keys.toSeq.sorted
-        .toDF("a_id", "b_id").orderBy("a_id", "b_id")
-    }),
-
-    // -cluster greedy agglomeration: exact merge-sequence parity on 20
-    // derived centroids to k=6 (14 merges unrolled in the mirror; weighted
-    // centroid updates are identical IEEE on both sides)
-    "q_cluster_greedy" -> ((s, dir) => {
-      import s.implicits._
-      val items = points(s, dir).where(col("id") >= 1 && col("id") <= 20)
-        .orderBy("id")
-        .select("id", "x", "y").as[(Long, Double, Double)].collect().toSeq
-      val assign = Cluster.greedy(items, k = 6)
-      items.map { case (id, _, _) => (id, assign(id).toLong) }
-        .toDF("id", "cluster")
-        .orderBy("id")
-    }),
-
-    // -cluster group_by=: same greedy agglomeration but a candidate pair is
-    // discarded when the group labels differ (mapshaper-cluster.mjs:53-57);
-    // mirrored by the same merge-sequence unroll with a group guard
-    "q_cluster_grouped" -> ((s, dir) => {
-      import s.implicits._
-      val items = points(s, dir).where(col("id") >= 1 && col("id") <= 20)
-        .orderBy("id")
-        .select(col("id"), col("x"), col("y"),
-          concat(lit("g"), (col("id") % 2).cast("string")).as("grp"))
-        .as[(Long, Double, Double, String)].collect().toSeq
-      val assign = Cluster.greedyGrouped(items, k = 6)
-      items.map { case (id, _, _, _) => (id, assign(id).toLong) }
-        .toDF("id", "cluster")
-        .orderBy("id")
-    }),
-
-    // -simplify (Visvalingam): exact per-vertex removal thresholds of a
-    // 22-vertex derived polyline — the heap loop is equivalent to
-    // "remove argmin effective area, record prefix-max" which the SQL
-    // mirror unrolls; areas/sqrt are exact IEEE on both sides
-    "q_simplify_vis" -> ((s, dir) => {
-      val thrUdf = udf { (xs: Seq[Double], ys: Seq[Double]) =>
-        graft.geom.Simplify.thresholds(xs.toArray, ys.toArray,
-          graft.geom.Simplify.Visvalingam).toSeq
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 22)
-        .groupBy(lit(1).as("g"))
-        .agg(array_sort(collect_list(struct(col("id"), col("x"), col("y")))).as("pts"))
-        .select(
-          transform(col("pts"), p => p.getField("x")).as("xs"),
-          transform(col("pts"), p => p.getField("y")).as("ys"))
-        .select(posexplode(thrUdf(col("xs"), col("ys"))))
-        .where(col("pos") >= 1 && col("pos") <= 20) // interior vertices
-        .select((col("pos") + 1).cast("long").as("vi"),
-          floor(col("col") * 1000000000.0).cast("long").as("thr_int"))
-        .orderBy("vi")
-    }),
-
-    // -densify (planar): vertices inserted at j/k fractions per segment,
-    // k = ceil(d/2.5) — identical IEEE everywhere, vertex-exact
-    "q_densify" -> ((s, dir) => {
-      val densifyUdf = udf { (xs: Seq[Double], ys: Seq[Double]) =>
-        val flat = new Array[Double](xs.length * 2)
-        var i = 0
-        while (i < xs.length) { flat(i * 2) = xs(i); flat(i * 2 + 1) = ys(i); i += 1 }
-        graft.geom.PathOps.densify(flat, 2.5).toSeq
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 30)
-        .withColumn("g", col("id") % 3)
-        .groupBy("g")
-        .agg(array_sort(collect_list(struct(col("id"), col("x"), col("y")))).as("pts"))
-        .select(col("g"),
-          transform(col("pts"), p => p.getField("x")).as("xs"),
-          transform(col("pts"), p => p.getField("y")).as("ys"))
-        .select(col("g"), posexplode(densifyUdf(col("xs"), col("ys"))))
-        .groupBy(col("g"), (col("pos") / 2).cast("long").as("vi"))
-        .agg(min(when(col("pos") % 2 === 0, col("col"))).as("x"),
-          min(when(col("pos") % 2 === 1, col("col"))).as("y"))
-        .orderBy("g", "vi")
-    }),
-
-    // -dashlines: dash/gap segmentation (dash 2.5, gap 1.25 — binary-exact,
-    // so break positions are exact prefix sums; half-gap start) — per-piece
-    // vertex counts and rounded lengths vs the analytic schedule
-    "q_dashlines" -> ((s, dir) => {
-      val pts = points(s, dir).where(col("id") >= 1 && col("id") <= 40)
-        .withColumn("g", col("id") % 4)
-      val paths = Lines.pointsToLines(pts, "g", "id", "x", "y")
-      DashLines(paths, "group", "line", dashLen = 2.5, gapLen = 1.25)
-        .select(col("group").as("g"), col("part").cast("long").as("part"),
-          (size(col("piece")) / 2).cast("long").as("n_vertices"),
-          round(col("piece_len") * 10000.0).cast("long").as("len_q"))
-        .orderBy("g", "part")
-    }),
-
-    // -points interpolated: points every 2.5 units along each group path
-    // (2.5 is binary-exact, so the kernel's sequential `next += interval`
-    // equals j*interval and the mirror is exact)
-    "q_interpolate" -> ((s, dir) => {
-      val interpUdf = udf { (xs: Seq[Double], ys: Seq[Double]) =>
-        val flat = new Array[Double](xs.length * 2)
-        var i = 0
-        while (i < xs.length) { flat(i * 2) = xs(i); flat(i * 2 + 1) = ys(i); i += 1 }
-        Points.interpolate(flat, 2.5).toSeq
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 40)
-        .withColumn("g", col("id") % 4)
-        .groupBy("g")
-        .agg(array_sort(collect_list(struct(col("id"), col("x"), col("y")))).as("pts"))
-        .select(col("g"),
-          transform(col("pts"), p => p.getField("x")).as("xs"),
-          transform(col("pts"), p => p.getField("y")).as("ys"))
-        .select(col("g"), posexplode(interpUdf(col("xs"), col("ys"))))
-        .groupBy(col("g"), (col("pos") / 2).cast("long").as("vi"))
-        .agg(min(when(col("pos") % 2 === 0, col("col"))).as("x"),
-          min(when(col("pos") % 2 === 1, col("col"))).as("y"))
-        .orderBy("g", "vi")
-    }),
-
-    // -points inner (polylabel-style anchor): 4 grid-refinement rounds over
-    // each oracle shape, exact arithmetic (PIP parity + clamped segment
-    // distances), vertex-exact at 1e-9
-    "q_anchor" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.oracleLayer
-      (0 until layer.numShapes).map { sh =>
-        val (ax, ay) = Points.anchor(layer, sh)
-        (layer.shapeKeys(sh),
-          math.floor(ax * 1000000000.0).toLong,
-          math.floor(ay * 1000000000.0).toLong)
-      }.toDF("pk", "x_int", "y_int").orderBy("pk")
-    }),
-
-    // -smooth kernel (Chaikin corner cutting, w=0.25, 2 iterations) on an
-    // open 20-vertex derived path — exact affine arithmetic, vertex by vertex
-    "q_smooth_exact" -> ((s, dir) => {
-      val smoothUdf = udf { (xs: Seq[Double], ys: Seq[Double]) =>
-        val flat = new Array[Double](xs.length * 2)
-        var i = 0
-        while (i < xs.length) { flat(i * 2) = xs(i); flat(i * 2 + 1) = ys(i); i += 1 }
-        graft.geom.PathOps.smooth(flat, 0.25, 2).toSeq
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 20)
-        .groupBy(lit(1).as("g"))
-        .agg(array_sort(collect_list(struct(col("id"), col("x"), col("y")))).as("pts"))
-        .select(
-          transform(col("pts"), p => p.getField("x")).as("xs"),
-          transform(col("pts"), p => p.getField("y")).as("ys"))
-        .select(posexplode(smoothUdf(col("xs"), col("ys"))))
-        .groupBy((col("pos") / 2).cast("long").as("vi"))
-        .agg(min(when(col("pos") % 2 === 0, col("col"))).as("x"),
-          min(when(col("pos") % 2 === 1, col("col"))).as("y"))
-        .orderBy("vi")
-    }),
-
-    // spherical geodesic point-buffer ring: 32 direct-problem vertices per
-    // point, 1e-7-degree floors
-    "q_geodesic_ring" -> ((s, dir) => {
-      val ringUdf = udf { (lon: Double, lat: Double, radius: Double) =>
-        graft.operators.Buffer.geodesicPointBufferRing(lon, lat, radius).toSeq
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 10)
-        .select(col("id"),
-          ((col("x") - 50.0) * 3.2).as("lon"), ((col("y") - 50.0) * 1.2).as("lat"),
-          (((col("id") * 37) % 900) * 1000 + 10000).cast("double").as("radius"))
-        .select(col("id"), posexplode(ringUdf(col("lon"), col("lat"), col("radius"))))
-        .groupBy(col("id"), (col("pos") / 2).cast("long").as("vi"))
-        .agg(min(when(col("pos") % 2 === 0, floor(col("col") * 10000000.0))).cast("long").as("lon_int"),
-          min(when(col("pos") % 2 === 1, floor(col("col") * 10000000.0))).cast("long").as("lat_int"))
-        .orderBy("id", "vi")
-    }),
-
-    // SPHERICAL -simplify kernel: lon/lat -> XYZ on the R=6378137 sphere,
-    // 3D Visvalingam thresholds in meters (the reference's default for
-    // unprojected data), mm floor guard
-    "q_simplify_sph" -> ((s, dir) => {
-      val thrUdf = udf { (lons: Seq[Double], lats: Seq[Double]) =>
-        graft.geom.Simplify.sphericalThresholds(lons.toArray, lats.toArray,
-          graft.geom.Simplify.Visvalingam).toSeq
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 20)
-        .groupBy(lit(1).as("g"))
-        .agg(array_sort(collect_list(struct(col("id"),
-          ((col("x") - 50.0) * 3.2).as("lon"),
-          ((col("y") - 50.0) * 1.2).as("lat")))).as("pts"))
-        .select(
-          transform(col("pts"), p => p.getField("lon")).as("lons"),
-          transform(col("pts"), p => p.getField("lat")).as("lats"))
-        .select(posexplode(thrUdf(col("lons"), col("lats"))))
-        .where(col("pos") >= 1 && col("pos") <= 18)
-        .select((col("pos") + 1).cast("long").as("vi"),
-          floor(col("col") * 1000.0).cast("long").as("thr_mm"))
-        .orderBy("vi")
-    }),
-
-    // -svg-style: conditional style-column assignment with where=
-    "q_svg_style" -> ((s, dir) =>
-      SvgStyle(points(s, dir),
-        Map("fill" -> lit("red"), "stroke-width" -> floor(col("y") / 10.0)),
-        where = Some(col("x") > 50.0))
-        .select(col("id"), col("fill"), col("stroke-width").cast("long").as("sw"))
-        .orderBy("id")),
-
-    // -filter-islands2: islands (no shared edges) below min-area removed
-    // unless they contain a hole; shared-edge rings always kept
-    "q_filter_islands2" -> ((s, dir) => {
-      val cells = points(s, dir)
-        .select(floor(col("x") / 10.0).cast("long").as("cx"),
-          floor(col("y") / 10.0).cast("long").as("cy"))
-        .distinct()
-        .withColumn("s", when(col("cx") % 2 === 0, lit(10.0))
-          .otherwise(lit(4.0) + (col("cy") % 2).cast("double") * 3.0))
-        .withColumn("x0", col("cx").cast("double") * 10.0)
-        .withColumn("y0", col("cy").cast("double") * 10.0)
-      val outers = cells.select(
-        (col("cx") * 1000 + col("cy")).as("rid"),
-        (col("cx") * 1000 + col("cy")).as("key"),
-        array(col("x0"), col("y0"), col("x0") + col("s"), col("y0"),
-          col("x0") + col("s"), col("y0") + col("s"), col("x0"), col("y0") + col("s"),
-          col("x0"), col("y0")).as("ring"))
-      val holes = cells.where((col("cx") * 7 + col("cy")) % 5 === 0).select(
-        (col("cx") * 1000 + col("cy") + 500000).as("rid"),
-        (col("cx") * 1000 + col("cy")).as("key"),
-        array(col("x0") + 1.0, col("y0") + 1.0, col("x0") + 1.0, col("y0") + 2.5,
-          col("x0") + 2.5, col("y0") + 2.5, col("x0") + 2.5, col("y0") + 1.0,
-          col("x0") + 1.0, col("y0") + 1.0).as("ring"))
-      FilterIslands2(outers.union(holes), "rid", "key", "ring", minArea = 120.0)
-        .select(col("rid")).orderBy("rid")
-    }),
-
-    // join where= match filter + keep-first collision determinism (ref
-    // mapshaper-join-filter.mjs:9-29, join-tables.mjs:106-115): only source
-    // rows passing the predicate are eligible, and among colliding source
-    // rows the winner is the SMALLEST under the full-tuple ordering of the
-    // non-key columns (content-derived total order — identical at any
-    // parallelism; mirrored with a row_number window in DuckDB)
-    "q_join_where" -> ((s, dir) => {
-      val src = t(s, dir, "orders")
-        .select("o_custkey", "o_orderkey", "o_orderstatus", "o_totalprice")
-      val r = JoinOp.join(
-        t(s, dir, "customer"), src, "c_custkey", "o_custkey",
-        fields = Seq("o_orderkey", "o_orderstatus", "o_totalprice"),
-        where = Some(col("o_totalprice") > 150000.0))
-      r.joined
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-          col("o_orderstatus"), col("o_totalprice"))
-        .orderBy("c_custkey")
-    }),
-
-    // -projections listing: every +proj= id the catalog advertises must be
-    // exactly the reference's own registry (mapshaper-projections.mjs:14-60
-    // + the dymaxion/butterfly/narukawa/lee registrations) — the oracle is
-    // an independent hand-transcribed VALUES list of those 27 ids
-    "q_projections" -> ((s, dir) => {
-      import s.implicits._
-      Graft.projections.map(_._1).toDF("proj_id").orderBy("proj_id")
-    }),
-
-    // -filter-slivers: rings below min-area dropped; closed-form rect
-    // family (areas w*h known exactly), shoelace evaluated by the engine
-    "q_filter_slivers" -> ((s, dir) => {
-      val fams = points(s, dir).select((col("id") % 40).as("g")).distinct()
-        .withColumn("i", explode(array(lit(0), lit(1), lit(2))))
-        .withColumn("w", (col("g") * 3 + col("i") * 5) % 11 + 1)
-        .withColumn("h", (col("g") * 7 + col("i") * 2) % 9 + 1)
-      val rects = fams.select(col("g"), col("i"),
-        array(lit(0.0), lit(0.0), col("w").cast("double"), lit(0.0),
-          col("w").cast("double"), col("h").cast("double"),
-          lit(0.0), col("h").cast("double"), lit(0.0), lit(0.0)).as("ring"))
-      SimplifyOp.filterSlivers(rects, "ring", minArea = 30.0)
-        .select(col("g"), col("i")).orderBy("g", "i")
-    }),
-
-    // -grid type=hex (FLAT-TOP orientation, ref mapshaper-hex-grid.mjs:13):
-    // the transposed lattice — enumeration bounds, centers, six ring
-    // vertices at 0°/60°/... and the shoelace area, all re-derived in SQL
-    "q_grid_hex_flat" -> ((s, dir) =>
-      Grids.hexGrid(s, 0.0, 0.0, 30.0, 20.0, 4.0, flatTop = true)
-        .select(col("q"), col("r"),
-          floor(col("cx") * 1000000.0).cast("long").as("cx_int"),
-          floor(col("cy") * 1000000.0).cast("long").as("cy_int"),
-          floor(ringAreaUdf(col("ring")) * 1000000.0).cast("long").as("area_int"),
-          floor(element_at(col("ring"), 3) * 1000000.0).cast("long").as("v1x_int"),
-          floor(element_at(col("ring"), 4) * 1000000.0).cast("long").as("v1y_int"))
-        .orderBy("q", "r")),
-
-    // DISTRIBUTED dissolve2 (cell-join candidate pairs -> min-label CC ->
-    // mosaic kernel per component) through the driver gate: 50 families of
-    // 3 strictly-overlapping 10x10 rects on disjoint 40-unit tiles, so each
-    // family is one component (min-id label) whose union area has an
-    // inclusion-exclusion closed form
-    "q_dissolve2_dist" -> ((s, dir) => {
-      val mkRect = udf { (g: Long, i: Int) =>
-        val x0 = ((g % 10) * 40 + (g * (3 + 2 * i)) % 9).toDouble
-        val y0 = ((g / 10) * 40 + (g * (5 + 3 * i)) % 9).toDouble
-        Array(x0, y0, x0 + 10, y0, x0 + 10, y0 + 10, x0, y0 + 10, x0, y0)
-      }
-      val shapes = points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("i", explode(array(lit(0), lit(1), lit(2))))
-        .select((col("g") * 3 + col("i")).as("sid"),
-          mkRect(col("g"), col("i")).as("ring"))
-      OverlayOp.dissolve2Distributed(s, shapes, "sid", "ring", cellRes = 4)
-        .select(col("component"), col("n_shapes_in"), col("n_rings_out"),
-          round(col("area") * 100.0, 0).cast("long").as("area_int"))
-        .orderBy("component")
-    }),
-
-    // decoded tile stats (raster-tile mean luma per grid cell): real PNG
-    // decode on the engine side; the mirror re-synthesizes every pixel from
-    // the SplitMix64 generator formula and replays the integer tile bounds
-    "q_tile_stats" -> ((s, dir) =>
-      Tiling.tileStats(s, imagesDf(s, dir).where(col("fmt") === "png" &&
-          substring(col("image_id"), 4, 12).cast("long") < 300), tileGrid = 3)
-        .select(col("image_id"), col("tile_x"), col("tile_y"), col("mean_luma"))
-        .orderBy("image_id", "tile_x", "tile_y")),
-
-    // -dots evenness=1: the FULL spaced fill — Fisher-Yates cell shuffle,
-    // per-cell seeded first-fill, dart-throwing with the x0.9 relaxation
-    // schedule and 3x3-window min-distance test — replayed draw-by-draw in
-    // SQL as two recursive-CTE state machines over the same SplitMix64
-    // call positions (ref mapshaper-dot-density.mjs:40-230)
-    "q_dots_even" -> ((s, dir) => {
-      val kernel = udf { (g: Long) =>
-        Grids.dotFillEven(Seq(oRect(0, 0, 20, 10), oRect(8, 3, 4, 4)),
-          n = 10, evenness = 1.0, seed = g * 1000L + 7L)
-      }
-      points(s, dir).select((col("id") % 8).as("g")).distinct()
-        .withColumn("dots", kernel(col("g")))
-        .withColumn("k",
-          explode(sequence(lit(0), (size(col("dots")) / 2 - 1).cast("int"))))
-        .select(col("g"), col("k").cast("long").as("k"),
-          floor(element_at(col("dots"), col("k") * 2 + 1) * 1000000000.0)
-            .cast("long").as("x_int"),
-          floor(element_at(col("dots"), col("k") * 2 + 2) * 1000000000.0)
-            .cast("long").as("y_int"))
-        .orderBy("g", "k")
-    }),
-
-    // -subdivide max-count (quadtree-style binary splits on the longer
-    // axis while a leaf holds > maxPerLeaf points): the whole data-dependent
-    // split cascade is replayed in SQL as a 10-round unrolled wavefront
-    "q_subdivide_count" -> ((s, dir) => {
-      val (assigned, _) = Subdivide.byCount(s, points(s, dir), "x", "y",
-        maxPerLeaf = 100, maxDepth = 10)
-      assigned.groupBy(col("leaf_id"))
-        .agg(count(lit(1)).as("n"),
-          floor(min(col("x")) * 1000.0).cast("long").as("xmn_int"),
-          floor(max(col("x")) * 1000.0).cast("long").as("xmx_int"),
-          floor(min(col("y")) * 1000.0).cast("long").as("ymn_int"),
-          floor(max(col("y")) * 1000.0).cast("long").as("ymx_int"))
-        .orderBy("leaf_id")
-    }),
-
-    // .prj WRITER (-o emits a .prj per exported shapefile): every
-    // WKT1-expressible projection's emitted string vs a hand-transcribed
-    // VALUES mirror of the ESRI WKT1 grammar the reference's own .prj
-    // fixtures use (ref test/data/two_states.prj shape; writer is
-    // Wkt.fromProj, reader-round-tripped in WktSpec)
-    "q_wkt_write" -> ((s, dir) => {
-      import s.implicits._
-      import graft.geom.Crs
-      val cases: Seq[(String, Crs.Proj)] = Seq(
-        "longlat" -> Crs.Longlat,
-        "tmerc" -> Crs.Tmerc(0.0, 114.0, 1.0, 500000.0, 0.0),
-        "lcc" -> Crs.Lcc(33.0, 45.0, 39.0, -96.0),
-        "aea" -> Crs.Albers(29.5, 45.5, 23.0, -96.0),
-        "merc" -> Crs.Mercator(12.0),
-        "robin" -> Crs.Robinson(10.0),
-        "sinu" -> Crs.Sinusoidal(-30.0),
-        "moll" -> Crs.Mollweide(5.0),
-        "wintri" -> Crs.WinkelTripel(0.0),
-        "laea" -> Crs.Laea(45.0, 8.0),
-        "ortho" -> Crs.Orthographic(40.0, -100.0),
-        "stere" -> Crs.Stereographic(60.0, -45.0),
-        "eqc" -> Crs.Equirectangular(30.0, 15.0))
-      cases.map { case (k, p) => (k, Graft.projectionToWkt(p)) }
-        .toDF("proj_id", "wkt").orderBy("proj_id")
-    }),
-
-    // GENERIC mixed/compound projection (the reference's MixedProjection
-    // machinery exposed for user-defined insets, mapshaper-mixed-projection
-    // .mjs): first-match bbox routing into 3 frames — sinusoidal main,
-    // a rotated+scaled+shifted Mercator inset (exercising the full Matrix2D
-    // rotate-about -> scale-about -> translate chain), and a scale-only
-    // Mercator inset. The oracle re-DERIVES the whole affine from the raw
-    // frame literals in SQL (origin forward, rotation trig, accumulator op
-    // order), unlike q_albersusa which interpolates the engine's constants.
-    "q_mixed" -> ((s, dir) => {
-      import graft.geom.{Crs, Mixed}
-      val mixed = Crs.MixedProj(Vector(
-        Mixed.Frame(Crs.Sinusoidal(0.0), (-30.0, -40.0, 30.0, 40.0)),
-        Mixed.Frame(Crs.Mercator(0.0), (30.0, -40.0, 90.0, 40.0),
-          origin = Some((60.0, 10.0)), placement = Some((2000000.0, -1000000.0)),
-          dx = 1000.0, dy = -500.0, scale = 0.5, rotationDeg = 30.0),
-        Mixed.Frame(Crs.Mercator(0.0), (-180.0, -80.0, -30.0, 80.0),
-          origin = Some((-90.0, 0.0)), placement = Some((-4000000.0, 0.0)),
-          scale = 2.0)))
-      val fwd = udf { (lon: Double, lat: Double) =>
-        val fi = mixed.frames.indexWhere(_.contains(lon, lat))
-        if (fi < 0) (-1L, 0L, 0L)
-        else {
-          val (xx, yy) = mixed.forward(lon, lat)
-          (fi.toLong, math.floor(xx * 100.0).toLong, math.floor(yy * 100.0).toLong)
-        }
-      }
-      points(s, dir)
-        .select(col("id"), (col("x") * 2.7 - 180.0).as("lon"),
-          (col("y") * 0.8 - 40.0).as("lat"))
-        .withColumn("r", fwd(col("lon"), col("lat")))
-        .filter(col("r._1") >= 0)
-        .select(col("id"), col("r._1").as("frame"),
-          col("r._2").as("x_int"), col("r._3").as("y_int"))
-        .orderBy("id")
-    }),
-
-    // POLYHEDRAL SEAM CUTTING (the reference's __projection_topology role,
-    // mapshaper-spherical-cutting.mjs): lon/lat paths bisection-cut where
-    // the projection's region id changes, so no part straddles an unfolded
-    // sheet. Fixture: 50 paths marching 38.3°/step across the Cahill-Keyes
-    // octant boundaries (every 45° of longitude). The oracle replays the
-    // ENTIRE pipeline — the CK octant/side region arithmetic, the 40-
-    // halving bisection per crossing segment (recursive CTE, identical FP
-    // interpolation), and the part assembly with per-part lo/hi boundary
-    // vertices — and compares part counts + first/last coordinates at 1e-9°.
-    "q_seam_cut" -> ((s, dir) => {
-      import graft.geom.Crs
-      val p = Crs.ButterflyProj("cahill_keyes", 0.0)
-      val mkPath = udf { (g: Long) =>
-        val lon0 = -170.0 + (g % 7).toDouble * 3.7
-        val lat0 = 5.0 + (g % 5).toDouble * 6.1
-        (0 until 8).flatMap(j => Seq(lon0 + j * 38.3, lat0 + j * 0.9))
-      }
-      val paths = points(s, dir).select((col("id") % 50).as("g")).distinct()
-        .withColumn("path", mkPath(col("g")))
-      SphericalClip.prepare(paths, "g", "path", Crs.CutAtFaceSeams(p.regionAt))
-        .select(col("id").as("g"), col("part").cast("long").as("part"),
-          (size(col("path")) / 2).cast("long").as("n_pts"),
-          floor(element_at(col("path"), 1) * 1000000000.0).cast("long").as("x0_int"),
-          floor(element_at(col("path"), 2) * 1000000000.0).cast("long").as("y0_int"),
-          floor(element_at(col("path"), size(col("path")) - 1) * 1000000000.0)
-            .cast("long").as("x1_int"),
-          floor(element_at(col("path"), size(col("path"))) * 1000000000.0)
-            .cast("long").as("y1_int"))
-        .orderBy("g", "part")
-    }),
-
-    // hot-cell SALTING path of the cell-partitioned PIP join: with
-    // saltThreshold=0 every covering cell is "hot", so the polygon side is
-    // replicated saltFactor ways and every point is deterministically
-    // scattered — the skew escape hatch itself must reproduce the broadcast
-    // path's ray-cast mirror bit-for-bit (SkewSpec asserts plan shape; this
-    // asserts the result through the driver gate)
-    "q_pip_salted" -> ((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.oracleLayer
-      val rings = (0 until layer.numRings).map { r =>
-        val s0 = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        (layer.shapeKeys(layer.ringShape(r)),
-          layer.xx.slice(s0, e).toSeq, layer.yy.slice(s0, e).toSeq)
-      }
-      val polyDf = rings.toDF("poly_key", "ring_x", "ring_y")
-      SpatialJoin.cellJoin(s, points(s, dir), "x", "y", polyDf, res = 5,
-          saltThreshold = 0)
-        .select(col("id"), col("poly_key"))
-        .orderBy("id", "poly_key")
-    }),
-
-    // cell NEIGHBOR DISK (kNN's ring-expansion primitive, codegen
-    // CellDiskExpr): the 5x5 Chebyshev disk of each point's res-6 cell; the
-    // oracle re-derives every id from the biased 29-bit Morton interleave
-    // arithmetic (CellIndex.encode) as a chained bitwise CTE
-    "q_cell_disk" -> ((s, dir) =>
-      points(s, dir).where(col("id") <= 120)
-        .withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), 6))
-        .select(col("id"),
-          explode(graft.functions.SpatialExprs.cellDisk(col("cell"), 2)).as("ncell"))
-        .orderBy("id", "ncell")),
-
-    // -cluster AT SCALE (the bounded-input contract): grid pre-agg to
-    // weighted cell centroids (res auto-sized; 36 cells here), the weighted
-    // greedy agglomeration on the bounded summary, broadcast assignment
-    // back. Dyadic clump coordinates make every sum/centroid order-
-    // independent and exact, so the 31-round merge sequence is replayed
-    // bit-for-bit in SQL (same unroll pattern as q_cluster_greedy, with
-    // masses; summary order = Morton cell id, mirrored by the same
-    // interleave CTE as q_cell_disk)
-    "q_cluster_scale" -> ((s, dir) => {
-      val pts = points(s, dir).where(col("id") >= 1 && col("id") <= 60)
-        .select(col("id"),
-          (((col("id") % 12) % 4).cast("double") * 30.0 +
-            (col("id") % 7).cast("double") / 64.0).as("px"),
-          (floor((col("id") % 12) / 4).cast("double") * 20.0 +
-            (col("id") % 5).cast("double") / 32.0).as("py"))
-      Cluster.assignPoints(s, pts, "id", "px", "py", k = 5)
-        .select(col("id"), col("cluster_id").cast("long").as("cluster"))
-        .orderBy("id")
-    }),
-
-    // STREAMING spatial ingestion through the driver gate: two file drops
-    // drained by separate AvailableNow queries sharing one checkpoint (the
-    // second is a restart — its source list is only the new files), landing
-    // in an exactly-once parquet sink via the same broadcast codegen PIP as
-    // the batch headline. Exactly-once ⇒ the final table IS the batch
-    // q_pip_join row set: each (point, polygon) match exactly once.
-    "q_stream_pip" -> ((s, dir) => {
-      val base = java.nio.file.Files.createTempDirectory("graft_stream_q").toString
-      val inDir = s"$base/in"; val outDir = s"$base/out"; val ck = s"$base/ck"
-      // try/finally + closed walk stream (r6, advisor finding): a failed
-      // drain()/read no longer leaks the temp tree (a full point-table
-      // copy) nor a directory-stream fd per invocation
-      try {
-        val src = points(s, dir)
-        def drain(): Unit = graft.streaming.GeoStream.ingestAvailable(
-          graft.streaming.GeoStream.pipAssignStream(s,
-            s.readStream.schema("id LONG, x DOUBLE, y DOUBLE").json(inDir),
-            "x", "y", Synthetic.oracleLayer),
-          outDir, ck)
-        src.where(col("id") % 2 === 0).coalesce(1).write.mode("append").json(inDir)
-        drain()
-        src.where(col("id") % 2 === 1).coalesce(1).write.mode("append").json(inDir)
-        drain()
-        // materialize (636 rows) so the temp tree can be deleted eagerly —
-        // a lazily-read result would read files deleted by the finally block
-        import s.implicits._
-        val rows = s.read.parquet(outDir)
-          .select(col("id"), col("poly_key")).orderBy("id", "poly_key")
-          .as[(Long, Long)].collect().toSeq
-        rows.toDF("id", "poly_key").orderBy("id", "poly_key")
-      } finally {
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(base))
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    })
-  )
-
-  // ====================================================================== //
-
-  def oracleSql: Map[String, String] = Map(
-    "q_filter" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem WHERE l_quantity >= 30 AND l_returnflag = 'R'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q_project_rename" ->
-      """SELECT p_partkey AS pk, p_type AS ptype, p_retailprice * 2.0 AS double_price
-        |FROM part ORDER BY pk""".stripMargin,
-
-    "q_uniq" ->
-      """SELECT l_orderkey, l_partkey, CAST(l_linenumber AS BIGINT) AS l_linenumber FROM (
-        |  SELECT l_orderkey, l_partkey, l_linenumber,
-        |         row_number() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS rn
-        |  FROM lineitem) WHERE rn = 1 ORDER BY l_orderkey""".stripMargin,
-
-    "q_calc_firstlast" ->
-      """SELECT l_returnflag,
-        |  min_by(l_extendedprice, (l_orderkey * 8 + l_linenumber) * 100000 + l_partkey) AS first_price,
-        |  max_by(l_extendedprice, (l_orderkey * 8 + l_linenumber) * 100000 + l_partkey) AS last_price,
-        |  count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // element-wise array sums over integer-valued doubles are exact in any
-    // order; collectIds summarized by count/min/max
-    "q_calc_sums" ->
-      s"""WITH $ptsSql
-         |SELECT id % 5 AS g,
-         |  CAST(sum(floor(x * 1000.0)) AS BIGINT) AS s_x,
-         |  CAST(sum(floor(y * 1000.0)) AS BIGINT) AS s_y,
-         |  CAST(sum(id) AS BIGINT) AS s_id,
-         |  count(*) AS n_ids,
-         |  min(id) AS id_min,
-         |  max(id) AS id_max
-         |FROM pts GROUP BY id % 5 ORDER BY g""".stripMargin,
-
-    // ES Math.round: floor(x) + (frac >= 0.5), computed without the
-    // floor(x+0.5) double-round; exact on both sides (y - 50 exercises the
-    // negative-halves branch where DuckDB's round() would differ)
-    "q_precision" -> {
-      def r(e: String, inv: String): String =
-        s"(CASE WHEN ($e) * $inv - floor(($e) * $inv) >= 0.5 " +
-          s"THEN floor(($e) * $inv) + 1.0 ELSE floor(($e) * $inv) END / $inv)"
-      s"""WITH $ptsSql
-         |SELECT id,
-         |  CAST(floor(${r("x", "4.0")} * 1000000.0) AS BIGINT) AS rx_int,
-         |  CAST(floor(${r("y - 50.0", "4.0")} * 1000000.0) AS BIGINT) AS ry_int,
-         |  CAST(floor(${r("x", "1000.0")} * 1000000.0) AS BIGINT) AS rx3_int
-         |FROM pts ORDER BY id""".stripMargin
-    },
-
-    "q_uniq_invert" ->
-      """SELECT l_orderkey, l_partkey, CAST(l_linenumber AS BIGINT) AS l_linenumber FROM (
-        |  SELECT l_orderkey, l_partkey, l_linenumber,
-        |         row_number() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS rn
-        |  FROM lineitem) WHERE rn > 2
-        |ORDER BY l_orderkey, l_linenumber, l_partkey""".stripMargin,
-
-    "q_uniq_index" ->
-      """SELECT l_orderkey, l_partkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |  CAST(row_number() OVER (PARTITION BY l_orderkey ORDER BY l_linenumber, l_partkey) AS BIGINT) AS occ
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber, l_partkey""".stripMargin,
-
-    "q_sort" ->
-      """SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, l_extendedprice
-        |FROM lineitem ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber LIMIT 100""".stripMargin,
-
-    "q_calc_global" ->
-      """SELECT count(*) AS n_rows, sum(l_quantity) AS sum_qty,
-        |  min(l_extendedprice) AS min_price, max(l_extendedprice) AS max_price,
-        |  avg(l_quantity) AS avg_qty, median(l_quantity) AS med_qty
-        |FROM lineitem""".stripMargin,
-
-    "q_calc_group" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n_rows, sum(l_quantity) AS sum_qty,
-        |  min(l_quantity) AS min_qty, max(l_quantity) AS max_qty,
-        |  bool_and(l_quantity > 10.0) AS all_gt10, bool_or(l_discount > 0.09) AS any_disc
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q_mode" ->
-      """SELECT l_returnflag, mode_qty FROM (
-        |  SELECT l_returnflag, l_quantity AS mode_qty,
-        |         row_number() OVER (PARTITION BY l_returnflag ORDER BY c DESC, l_quantity) AS rn
-        |  FROM (SELECT l_returnflag, l_quantity, count(*) AS c
-        |        FROM lineitem GROUP BY l_returnflag, l_quantity))
-        |WHERE rn = 1 ORDER BY l_returnflag""".stripMargin,
-
-    "q_attr_join" ->
-      """SELECT o_orderkey, o_custkey, c_name, c_acctbal
-        |FROM orders LEFT JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q_join_sum_fields" ->
-      """SELECT p_partkey, COALESCE(_sq, 0.0) AS sum_qty, COALESCE(_n, 0) AS n_matches
-        |FROM part LEFT JOIN (
-        |  SELECT l_partkey, sum(l_quantity) AS _sq, count(*) AS _n
-        |  FROM lineitem GROUP BY l_partkey) ON p_partkey = l_partkey
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q_join_duplication" ->
-      """SELECT p_partkey, l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, p_brand
-        |FROM part JOIN lineitem ON p_partkey = l_partkey
-        |ORDER BY p_partkey, l_orderkey, l_linenumber""".stripMargin,
-
-    "q_join_unmatched" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_join_calc" ->
-      """SELECT c_custkey, COALESCE(_n, 0) AS n_orders, _mx AS max_price,
-        |  COALESCE(_ns, 0) AS n_status
-        |FROM customer LEFT JOIN (
-        |  SELECT o_custkey, count(*) AS _n, max(o_totalprice) AS _mx,
-        |         count(DISTINCT o_orderstatus) AS _ns
-        |  FROM orders GROUP BY o_custkey) ON c_custkey = o_custkey
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q_cell_assign" ->
-      s"""WITH $ptsSql
-         |SELECT CAST(floor(x / 2.8125) AS BIGINT) AS cx,
-         |       CAST(floor(y / 2.8125) AS BIGINT) AS cy, count(*) AS n
-         |FROM pts GROUP BY cx, cy ORDER BY cx, cy""".stripMargin,
-
-    "q_pip_join" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT id, CAST(pk AS BIGINT) AS poly_key FROM hits WHERE crossings % 2 = 1
-         |ORDER BY id, poly_key""".stripMargin,
-
-    // the cell-partitioned path must reproduce the broadcast path bit-for-bit
-    "q_pip_cell" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT id, CAST(pk AS BIGINT) AS poly_key FROM hits WHERE crossings % 2 = 1
-         |ORDER BY id, poly_key""".stripMargin,
-
-    "q_pip_count" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT CAST(pk AS BIGINT) AS poly_key, count(*) AS n_points
-         |FROM hits WHERE crossings % 2 = 1
-         |GROUP BY pk ORDER BY poly_key""".stripMargin,
-
-    "q_pip_first" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT id, CAST(min(pk) AS BIGINT) AS poly_key FROM hits WHERE crossings % 2 = 1
-         |GROUP BY id ORDER BY id""".stripMargin,
-
-    "q_pip_reverse" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT CAST(pk AS BIGINT) AS poly_key, min(id) AS first_point, count(*) AS n_points
-         |FROM hits WHERE crossings % 2 = 1
-         |GROUP BY pk ORDER BY poly_key""".stripMargin,
-
-    "q_fuzzy_join" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql,
-         |matched AS (
-         |  SELECT h.pk, p.id % 8 AS cat FROM hits h JOIN pts p ON h.id = p.id
-         |  WHERE h.crossings % 2 = 1),
-         |counts AS (SELECT pk, cat, count(*) AS c FROM matched GROUP BY pk, cat),
-         |ranked AS (
-         |  SELECT pk, cat, c,
-         |    row_number() OVER (PARTITION BY pk ORDER BY c DESC, cat) AS rn,
-         |    lead(c, 1, 0) OVER (PARTITION BY pk ORDER BY c DESC, cat) AS next_c
-         |  FROM counts)
-         |SELECT CAST(pk AS BIGINT) AS poly_key, cat AS mode_cat, c AS mode_count,
-         |  c - next_c AS margin
-         |FROM ranked WHERE rn = 1 ORDER BY poly_key""".stripMargin,
-
-    // full fuzzy-join: dedup -> closed-cell first-match PIP (min key on
-    // boundaries == layer insertion order) -> mode vote -> distance-weighted
-    // tie resolution (exact pointSegDistSq mirror over the 4 cell edges) ->
-    // dropout restoration (argmax count, strict >, lowest key; conflicts
-    // fail). Cells are derived from the points so none is ever empty and the
-    // data-fill phase is a no-op by construction.
-    "q_fuzzy_join_full" -> {
-      val e1 = segDist2Sql("(cx * 10.0)", "(cy * 10.0)", "(cx * 10.0 + 10)", "(cy * 10.0)")
-      val e2 = segDist2Sql("(cx * 10.0 + 10)", "(cy * 10.0)", "(cx * 10.0 + 10)", "(cy * 10.0 + 10)")
-      val e3 = segDist2Sql("(cx * 10.0 + 10)", "(cy * 10.0 + 10)", "(cx * 10.0)", "(cy * 10.0 + 10)")
-      val e4 = segDist2Sql("(cx * 10.0)", "(cy * 10.0 + 10)", "(cx * 10.0)", "(cy * 10.0)")
-      s"""WITH $ptsSql,
-         |cat0 AS (SELECT id, x, y,
-         |    CASE WHEN id % 97 = 0 THEN 'r' || CAST(id % 2 AS VARCHAR)
-         |         ELSE 'c' || CAST(id % 5 AS VARCHAR) END AS cat FROM pts),
-         |allp AS (SELECT id, x, y, cat FROM cat0
-         |  UNION ALL SELECT id + 10000000, x, y, cat FROM cat0 WHERE id % 10 = 0),
-         |ded AS (SELECT id, x, y, cat FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY x, y, cat ORDER BY id) AS rn
-         |    FROM allp) WHERE rn = 1),
-         |ckey AS (SELECT cx * 1000 + cy AS key, cx, cy FROM (
-         |    SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |      CAST(floor(y / 10.0) AS BIGINT) AS cy FROM cat0)),
-         |asg AS (SELECT d.id, d.x, d.y, d.cat, min(c.key) AS key
-         |  FROM ded d JOIN ckey c
-         |    ON d.x >= c.cx * 10.0 AND d.x <= c.cx * 10.0 + 10
-         |   AND d.y >= c.cy * 10.0 AND d.y <= c.cy * 10.0 + 10
-         |  GROUP BY d.id, d.x, d.y, d.cat),
-         |counts AS (SELECT key, cat, count(*) AS c FROM asg GROUP BY key, cat),
-         |mx AS (SELECT key, max(c) AS maxc FROM counts GROUP BY key),
-         |tied AS (SELECT counts.key, cat, c FROM counts JOIN mx USING (key)
-         |  WHERE c = mx.maxc),
-         |tn AS (SELECT key, count(*) AS ntied, CAST(max(c) AS BIGINT) AS join_count
-         |  FROM tied GROUP BY key),
-         |clearw AS (SELECT t.key, t.cat AS win, tn.join_count
-         |  FROM tied t JOIN tn USING (key) WHERE tn.ntied = 1),
-         |tp AS (SELECT a.key, a.cat, a.x AS x, a.y AS y, c.cx, c.cy
-         |  FROM asg a
-         |  JOIN tied t ON a.key = t.key AND a.cat = t.cat
-         |  JOIN tn ON tn.key = a.key AND tn.ntied > 1
-         |  JOIN ckey c ON c.key = a.key),
-         |td AS (SELECT key, cat,
-         |    sum(sqrt(least($e1, $e2, $e3, $e4))) AS dw
-         |  FROM tp GROUP BY key, cat),
-         |tiew AS (SELECT key, win, join_count FROM (
-         |    SELECT td.key, td.cat AS win, tn.join_count,
-         |      row_number() OVER (PARTITION BY td.key ORDER BY td.dw DESC, td.cat) AS rn
-         |    FROM td JOIN tn ON tn.key = td.key) WHERE rn = 1),
-         |assigned AS (SELECT * FROM clearw UNION ALL SELECT * FROM tiew),
-         |missing AS (SELECT DISTINCT cat FROM ded
-         |  WHERE cat NOT IN (SELECT DISTINCT win FROM assigned)),
-         |wwin AS (SELECT cat, key FROM (
-         |    SELECT m.cat, c.key,
-         |      row_number() OVER (PARTITION BY m.cat ORDER BY c.c DESC, c.key) AS rn
-         |    FROM missing m JOIN counts c ON c.cat = m.cat) WHERE rn = 1),
-         |rest AS (SELECT key, cat FROM (
-         |    SELECT key, cat, row_number() OVER (PARTITION BY key ORDER BY cat) AS rn
-         |    FROM wwin) WHERE rn = 1)
-         |SELECT a.key, coalesce(r.cat, a.win) AS value, a.join_count
-         |FROM assigned a LEFT JOIN rest r USING (key) ORDER BY a.key""".stripMargin
-    },
-
-    "q_centroid" ->
-      s"""WITH $oracleEdgesSql
-         |SELECT CAST(pk AS BIGINT) AS poly_key,
-         |  CAST(floor(sum((ex1 + ex2) * (ex1 * ey2 - ex2 * ey1))
-         |       / (3.0 * sum(ex1 * ey2 - ex2 * ey1)) * 1000000.0) AS BIGINT) AS cx_int,
-         |  CAST(floor(sum((ey1 + ey2) * (ex1 * ey2 - ex2 * ey1))
-         |       / (3.0 * sum(ex1 * ey2 - ex2 * ey1)) * 1000000.0) AS BIGINT) AS cy_int
-         |FROM edges GROUP BY pk ORDER BY poly_key""".stripMargin,
-
-    "q_explode" ->
-      s"""WITH $oracleEdgesSql
-         |SELECT CAST(pk AS BIGINT) AS poly_key,
-         |  count(DISTINCT ring) AS n_rings,
-         |  count(*) + count(DISTINCT ring) AS n_vertices
-         |FROM edges GROUP BY pk ORDER BY poly_key""".stripMargin,
-
-    "q_affine" ->
-      s"""WITH $ptsSql
-         |SELECT id,
-         |  x * CAST(0.8 AS DOUBLE) + y * CAST(-0.6 AS DOUBLE) + CAST(10.0 AS DOUBLE) AS ax,
-         |  x * CAST(0.6 AS DOUBLE) + y * CAST(0.8 AS DOUBLE) + CAST(-5.0 AS DOUBLE) AS ay
-         |FROM pts ORDER BY id""".stripMargin,
-
-    "q_filter_bbox" ->
-      s"""WITH $ptsSql
-         |SELECT id FROM pts
-         |WHERE x >= 25.0 AND x <= 75.0 AND y >= 25.0 AND y <= 75.0
-         |ORDER BY id""".stripMargin,
-
-    "q_classify" ->
-      """SELECT p_partkey,
-        |  CAST(least(greatest(floor((p_retailprice - 900.0) / 100.0), 0), 9) AS BIGINT) AS bin
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "q_merge_layers" ->
-      """SELECT * FROM (
-        |  SELECT c_custkey AS key, c_name AS name, 'customer' AS layer FROM customer
-        |  UNION ALL
-        |  SELECT s_suppkey AS key, s_name AS name, 'supplier' AS layer FROM supplier)
-        |ORDER BY layer, key""".stripMargin,
-
-    "q_clip_points" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT DISTINCT id FROM hits WHERE crossings % 2 = 1 ORDER BY id""".stripMargin,
-
-    "q_erase_points" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT id FROM pts WHERE id NOT IN (
-         |  SELECT id FROM hits WHERE crossings % 2 = 1) ORDER BY id""".stripMargin,
-
-    "q_knn" ->
-      s"""WITH $ptsSql,
-         |pairs AS (
-         |  SELECT a.id AS id, b.id AS neighbor_id,
-         |    (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
-         |  FROM pts a CROSS JOIN pts b WHERE a.id <> b.id),
-         |ranked AS (
-         |  SELECT id, neighbor_id,
-         |    row_number() OVER (PARTITION BY id ORDER BY dist2, neighbor_id) AS rnk
-         |  FROM pairs)
-         |SELECT id, CAST(rnk AS BIGINT) AS rnk, neighbor_id FROM ranked
-         |WHERE rnk <= 3 ORDER BY id, rnk""".stripMargin,
-
-    "q_dist_join" ->
-      s"""WITH $ptsSql
-         |SELECT a.id AS a_id, b.id AS b_id,
-         |  (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS dist2
-         |FROM pts a CROSS JOIN pts b
-         |WHERE a.id < b.id
-         |  AND (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) <= 4.0
-         |ORDER BY a_id, b_id""".stripMargin,
-
-    "q_dissolve" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT id % 4 AS g,
-         |    CAST(floor(x / 10.0) AS BIGINT) AS cx, CAST(floor(y / 10.0) AS BIGINT) AS cy
-         |  FROM pts),
-         |edges AS (
-         |  SELECT g, cx AS x1, cy AS y1, cx + 1 AS x2, cy AS y2 FROM cells
-         |  UNION ALL SELECT g, cx, cy + 1, cx + 1, cy + 1 FROM cells
-         |  UNION ALL SELECT g, cx, cy, cx, cy + 1 FROM cells
-         |  UNION ALL SELECT g, cx + 1, cy, cx + 1, cy + 1 FROM cells),
-         |ecnt AS (SELECT g, x1, y1, x2, y2, count(*) AS c FROM edges GROUP BY g, x1, y1, x2, y2),
-         |bnd AS (SELECT g, count(*) AS n_boundary_edges FROM ecnt WHERE c % 2 = 1 GROUP BY g),
-         |mem AS (SELECT g, count(*) AS n_cells FROM cells GROUP BY g)
-         |SELECT mem.g AS g, n_cells, n_boundary_edges
-         |FROM mem JOIN bnd ON mem.g = bnd.g ORDER BY g""".stripMargin,
-
-    "q_clip_poly" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |ov AS (
-         |  SELECT cx * 100 + cy AS sq_id,
-         |    greatest(least(CAST(cx * 10 + 10 AS DOUBLE), 65.0) - greatest(CAST(cx * 10 AS DOUBLE), 15.0), 0.0) *
-         |    greatest(least(CAST(cy * 10 + 10 AS DOUBLE), 65.0) - greatest(CAST(cy * 10 AS DOUBLE), 15.0), 0.0) AS a
-         |  FROM cells)
-         |SELECT sq_id, CAST(CASE WHEN a > 0 THEN 1 ELSE 0 END AS BIGINT) AS n_rings,
-         |  CAST(floor(a * 1000000.0) AS BIGINT) AS area_int
-         |FROM ov ORDER BY sq_id""".stripMargin,
-
-    "q_erase_poly" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |ov AS (
-         |  SELECT cx * 100 + cy AS sq_id,
-         |    greatest(least(CAST(cx * 10 + 10 AS DOUBLE), 65.0) - greatest(CAST(cx * 10 AS DOUBLE), 15.0), 0.0) *
-         |    greatest(least(CAST(cy * 10 + 10 AS DOUBLE), 65.0) - greatest(CAST(cy * 10 AS DOUBLE), 15.0), 0.0) AS a
-         |  FROM cells)
-         |SELECT sq_id, CAST(floor((100.0 - a) * 1000000.0) AS BIGINT) AS area_int
-         |FROM ov ORDER BY sq_id""".stripMargin,
-
-    "q_quantiles" ->
-      """SELECT l_returnflag,
-        |  quantile_cont(l_quantity, 0.25) AS q1,
-        |  quantile_cont(l_quantity, 0.5) AS q2,
-        |  quantile_cont(l_quantity, 0.75) AS q3,
-        |  quantile_cont(l_quantity, 0.75) - quantile_cont(l_quantity, 0.25) AS iqr
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_thin_points" ->
-      s"""WITH $ptsSql
-         |SELECT id FROM (
-         |  SELECT id, row_number() OVER (
-         |    PARTITION BY floor(x / 5.0), floor(y / 5.0) ORDER BY id) AS rn
-         |  FROM pts) WHERE rn = 1 ORDER BY id""".stripMargin,
-
-    "q_collect" ->
-      """SELECT l_returnflag,
-        |  string_agg(DISTINCT l_linestatus, ',' ORDER BY l_linestatus) AS statuses,
-        |  count(DISTINCT l_linestatus) AS n_statuses
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q_buffer" ->
-      s"""WITH $ptsSql
-         |SELECT id, CAST(floor(
-         |  32.0 * CAST((id % 3 + 1) * (id % 3 + 1) AS DOUBLE) * sin(2.0 * pi() / 32.0) / 2.0
-         |  * 1000.0) AS BIGINT) AS area_int
-         |FROM pts ORDER BY id""".stripMargin,
-
-    "q_poly_join" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |srcs(s_key, sx1, sy1, sx2, sy2) AS (VALUES
-         |  (100, 5, 5, 55, 55), (101, 45, 25, 95, 75), (102, 25, 45, 75, 95)),
-         |ov AS (
-         |  SELECT cx * 100 + cy AS t_key, s_key,
-         |    greatest(least(cx * 10 + 10, sx2) - greatest(cx * 10, sx1), 0) *
-         |    greatest(least(cy * 10 + 10, sy2) - greatest(cy * 10, sy1), 0) AS a
-         |  FROM cells CROSS JOIN srcs)
-         |SELECT t_key, CAST(s_key AS BIGINT) AS s_key,
-         |  CAST(floor(CAST(a AS DOUBLE) * 1000000.0) AS BIGINT) AS area_int
-         |FROM ov WHERE a > 0 ORDER BY t_key, s_key""".stripMargin,
-
-    "q_poly_join_largest" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |srcs(s_key, sx1, sy1, sx2, sy2) AS (VALUES
-         |  (100, 5, 5, 55, 55), (101, 45, 25, 95, 75), (102, 25, 45, 75, 95)),
-         |ov AS (
-         |  SELECT cx * 100 + cy AS t_key, s_key,
-         |    greatest(least(cx * 10 + 10, sx2) - greatest(cx * 10, sx1), 0) *
-         |    greatest(least(cy * 10 + 10, sy2) - greatest(cy * 10, sy1), 0) AS a
-         |  FROM cells CROSS JOIN srcs),
-         |ranked AS (
-         |  SELECT t_key, s_key, a,
-         |    row_number() OVER (PARTITION BY t_key ORDER BY a DESC, s_key) AS rn
-         |  FROM ov WHERE a > 0)
-         |SELECT t_key, CAST(s_key AS BIGINT) AS s_key,
-         |  CAST(floor(CAST(a AS DOUBLE) * 1000000.0) AS BIGINT) AS area_int
-         |FROM ranked WHERE rn = 1 ORDER BY t_key""".stripMargin,
-
-    "q_point_grid" ->
-      """SELECT CAST(range AS BIGINT) AS gid,
-        |  CAST(range % 8 AS BIGINT) AS gx,
-        |  CAST(floor(CAST(range AS DOUBLE) / 8.0) AS BIGINT) AS gy,
-        |  (CAST(range % 8 AS DOUBLE) * 12.5 + (CAST(range % 8 AS DOUBLE) + 1) * 12.5) / 2 AS x,
-        |  (floor(CAST(range AS DOUBLE) / 8.0) * 12.5 + (floor(CAST(range AS DOUBLE) / 8.0) + 1) * 12.5) / 2 AS y
-        |FROM range(64) ORDER BY gid""".stripMargin,
-
-    "q_midpoints" ->
-      s"""WITH $oracleEdgesSql
-         |SELECT CAST(pk AS BIGINT) AS poly_key, CAST(ring AS BIGINT) AS ring,
-         |  (ex1 + ex2) / 2.0 AS mx, (ey1 + ey2) / 2.0 AS my
-         |FROM edges ORDER BY ring, mx, my""".stripMargin,
-
-    "q_proj" ->
-      s"""WITH $ptsSql,
-         |ll AS (SELECT id, x * 3.6 - 180.0 AS lon, y * 1.7 - 85.0 AS lat FROM pts)
-         |SELECT id,
-         |  CAST(floor(lon * (pi() / 180.0) * 6378137.0 * 1000.0) AS BIGINT) AS mx_int,
-         |  CAST(floor(ln(tan(pi() / 4.0 + lat * (pi() / 180.0) / 2.0)) * 6378137.0 * 1000.0) AS BIGINT) AS my_int,
-         |  CAST(floor((lon + 180.0) / 360.0 * 64) AS BIGINT) AS tx,
-         |  CAST(floor((1.0 - ln(tan(lat * (pi() / 180.0)) + 1.0 / cos(lat * (pi() / 180.0))) / pi()) / 2.0 * 64) AS BIGINT) AS ty
-         |FROM ll ORDER BY id""".stripMargin,
-
-    "q_proj_crs" -> projCrsSql,
-
-    // -proj butterfly face find: octahedron → 17-degree truncated hexagons
-    // (slot pairing mirrors the kernel's edge walk), the kernel's
-    // degrees-roundtrip before corner normals, octant dispatch + three
-    // corner-plane tests. Duplicated shared vertices are bit-identical by
-    // construction (symmetric addScaled expressions), so the kernel's
-    // object-identity canonicalization needs no mirror.
-    "q_butterfly" -> {
-      val DR = "(pi() / 180.0)"
-      s"""WITH $ptsSql,
-         |overts AS (
-         |  SELECT 0 AS vid, CAST(0.0 AS DOUBLE) AS lon, CAST(90.0 AS DOUBLE) AS lat
-         |  UNION ALL SELECT 1, -90.0, 0.0
-         |  UNION ALL SELECT 2, 0.0, 0.0
-         |  UNION ALL SELECT 3, 90.0, 0.0
-         |  UNION ALL SELECT 4, 180.0, 0.0
-         |  UNION ALL SELECT 5, 0.0, -90.0),
-         |ofaces(fid, slot, vid) AS (VALUES
-         |  (0,0,0),(0,1,2),(0,2,1),(1,0,0),(1,1,3),(1,2,2),
-         |  (2,0,5),(2,1,1),(2,2,2),(3,0,5),(3,1,2),(3,2,3),
-         |  (4,0,0),(4,1,1),(4,2,4),(5,0,0),(5,1,4),(5,2,3),
-         |  (6,0,5),(6,1,4),(6,2,1),(7,0,5),(7,1,3),(7,2,4)),
-         |ovec AS (SELECT f.fid, f.slot,
-         |    cos(v.lon * $DR) * cos(v.lat * $DR) AS vx,
-         |    sin(v.lon * $DR) * cos(v.lat * $DR) AS vy,
-         |    sin(v.lat * $DR) AS vz
-         |  FROM ofaces f JOIN overts v USING (vid)),
-         |hexraw AS (
-         |  SELECT a.fid, 2 * k.k AS hslot,
-         |    a.vx * cos(17 * $DR) + b.vx * sin(17 * $DR) AS sx,
-         |    a.vy * cos(17 * $DR) + b.vy * sin(17 * $DR) AS sy,
-         |    a.vz * cos(17 * $DR) + b.vz * sin(17 * $DR) AS sz
-         |  FROM generate_series(0, 2) k(k)
-         |  JOIN ovec a ON a.slot = (k.k + 2) % 3
-         |  JOIN ovec b ON b.fid = a.fid AND b.slot = k.k
-         |  UNION ALL
-         |  SELECT a.fid, 2 * k.k + 1,
-         |    b.vx * cos(17 * $DR) + a.vx * sin(17 * $DR),
-         |    b.vy * cos(17 * $DR) + a.vy * sin(17 * $DR),
-         |    b.vz * cos(17 * $DR) + a.vz * sin(17 * $DR)
-         |  FROM generate_series(0, 2) k(k)
-         |  JOIN ovec a ON a.slot = (k.k + 2) % 3
-         |  JOIN ovec b ON b.fid = a.fid AND b.slot = k.k),
-         |hexdeg AS (SELECT fid, hslot,
-         |    atan2(sy / sqrt(sx*sx + sy*sy + sz*sz), sx / sqrt(sx*sx + sy*sy + sz*sz)) * 180.0 / pi() AS hlon,
-         |    asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |      sz / sqrt(sx*sx + sy*sy + sz*sz)))) * 180.0 / pi() AS hlat
-         |  FROM hexraw),
-         |hexvec AS (SELECT fid, hslot,
-         |    cos(hlon * $DR) * cos(hlat * $DR) AS hx,
-         |    sin(hlon * $DR) * cos(hlat * $DR) AS hy,
-         |    sin(hlat * $DR) AS hz
-         |  FROM hexdeg),
-         |cnorm AS (SELECT a.fid, i.i AS ci,
-         |    a.hy * b.hz - a.hz * b.hy AS nx,
-         |    a.hz * b.hx - a.hx * b.hz AS ny,
-         |    a.hx * b.hy - a.hy * b.hx AS nz
-         |  FROM generate_series(0, 2) i(i)
-         |  JOIN hexvec a ON a.hslot = (i.i * 2 + 2) % 6
-         |  JOIN hexvec b ON b.fid = a.fid AND b.hslot = (i.i * 2 + 1) % 6),
-         |p0 AS (SELECT id,
-         |  CASE WHEN (x * 3.6 - 180.0 - ${dl(157.5)}) * $DR > pi()
-         |       THEN (x * 3.6 - 180.0 - ${dl(157.5)}) * $DR - 2 * pi()
-         |       WHEN (x * 3.6 - 180.0 - ${dl(157.5)}) * $DR < -pi()
-         |       THEN (x * 3.6 - 180.0 - ${dl(157.5)}) * $DR + 2 * pi()
-         |       ELSE (x * 3.6 - 180.0 - ${dl(157.5)}) * $DR END AS lam,
-         |  (y * 1.7 - 85.0) * $DR AS phi
-         |  FROM pts),
-         |pv AS (SELECT id, lam, phi,
-         |  cos(phi) * cos(lam) AS px, cos(phi) * sin(lam) AS py, sin(phi) AS pz,
-         |  CASE WHEN lam < -pi() / 2 THEN CASE WHEN phi < 0 THEN 6 ELSE 4 END
-         |       WHEN lam < 0 THEN CASE WHEN phi < 0 THEN 2 ELSE 0 END
-         |       WHEN lam < pi() / 2 THEN CASE WHEN phi < 0 THEN 3 ELSE 1 END
-         |       ELSE CASE WHEN phi < 0 THEN 7 ELSE 5 END END AS base
-         |  FROM p0),
-         |tests AS (SELECT p.id, p.base,
-         |    max(CASE WHEN c.ci = 0 THEN c.nx * p.px + c.ny * p.py + c.nz * p.pz END) AS d0,
-         |    max(CASE WHEN c.ci = 1 THEN c.nx * p.px + c.ny * p.py + c.nz * p.pz END) AS d1,
-         |    max(CASE WHEN c.ci = 2 THEN c.nx * p.px + c.ny * p.py + c.nz * p.pz END) AS d2
-         |  FROM pv p JOIN cnorm c ON c.fid = p.base
-         |  GROUP BY p.id, p.base)
-         |SELECT id, CAST(
-         |  CASE WHEN d0 < 0 THEN 8 + 3 * base
-         |       WHEN d1 < 0 THEN 8 + 3 * base + 1
-         |       WHEN d2 < 0 THEN 8 + 3 * base + 2
-         |       ELSE base END AS BIGINT) AS face_id
-         |FROM tests ORDER BY id""".stripMargin
-    },
-
-    // -proj cahill_keyes: full-construction mirror (see cahillSql scaladoc)
-    "q_cahill" -> cahillSql,
-
-    // -proj markley face-local mirror: tetrahedron DERIVED in SQL (vertices,
-    // edge normals, centroids), both spherical rotations, and the Lee
-    // complex series — 20-step vertex Horner + complex sqrt via arg/log/exp,
-    // 7-step center Horner over z^3, 120-degree sector pick, annulus blend.
-    // The polar-face centroid test uses |lat| > 89 (ulp-safe stand-in for
-    // the kernel's exact ±90; the other centroids sit at ±19.47).
-    "q_lee" -> leeOracleSql("115.0",
-      dl(math.acos(1.0 / 3) * 0.5 * 180.0 / math.Pi - 90.0), "180.0"),
-
-    // CALM aspect: identical pipeline under Kunimune's published rotation
-    "q_lee_calm" -> leeOracleSql(dl(64.7261399569101), dl(-39.84470062116125),
-      dl(-119.02303523591051)),
-
-    // -proj narukawa2022: full forward mirror — orientation basis and facet
-    // frames derived in SQL from the published tetrahedron vertices; oblique
-    // facet pick (max oblique latitude, scan-order ties), sector radial
-    // transform, reflect/fold/wrap layout, edge scaling
-    "q_narukawa" -> {
-      val gv = Seq((76.8810628, 149.4509913), (-27.9527772, 97.3570035),
-        (-6.6370473, -18.8522325), (-22.9282364, -133.2827588))
-      val eps = dl(1e-12)
-      val shift = dl(1.16)
-      s"""WITH $ptsSql,
-         |gv AS (SELECT
-         |  cos(${dl(gv(0)._2)} * (pi() / 180.0)) * cos(${dl(gv(0)._1)} * (pi() / 180.0)) AS nx,
-         |  sin(${dl(gv(0)._2)} * (pi() / 180.0)) * cos(${dl(gv(0)._1)} * (pi() / 180.0)) AS ny,
-         |  sin(${dl(gv(0)._1)} * (pi() / 180.0)) AS nz,
-         |  cos(${dl(gv(2)._2)} * (pi() / 180.0)) * cos(${dl(gv(2)._1)} * (pi() / 180.0)) AS sx,
-         |  sin(${dl(gv(2)._2)} * (pi() / 180.0)) * cos(${dl(gv(2)._1)} * (pi() / 180.0)) AS sy,
-         |  sin(${dl(gv(2)._1)} * (pi() / 180.0)) AS sz),
-         |ob0 AS (SELECT *, sx * nx + sy * ny + sz * nz AS pr FROM gv),
-         |ob1 AS (SELECT *, sx - nx * pr AS tx, sy - ny * pr AS ty, sz - nz * pr AS tz FROM ob0),
-         |ob AS (SELECT *,
-         |  tx / sqrt(tx * tx + ty * ty + tz * tz) AS oxx,
-         |  ty / sqrt(tx * tx + ty * ty + tz * tz) AS oxy,
-         |  tz / sqrt(tx * tx + ty * ty + tz * tz) AS oxz
-         |  FROM ob1),
-         |ob2 AS (SELECT *,
-         |  ny * oxz - nz * oxy AS oyx,
-         |  nz * oxx - nx * oxz AS oyy,
-         |  nx * oxy - ny * oxx AS oyz
-         |  FROM ob),
-         |facets AS (
-         |  SELECT 0 AS fid, 0.0 AS fx, sqrt(3.0) AS fy, pi() / 2 AS flat, 0.0 AS flon,
-         |    0.0 AS fmer, -(pi() / 2) AS frot
-         |  UNION ALL SELECT 1, 0.0, -sqrt(3.0), -asin(CAST(1.0 AS DOUBLE) / 3.0), 0.0, pi(), pi() / 2
-         |  UNION ALL SELECT 2, 3.0, 0.0, -asin(CAST(1.0 AS DOUBLE) / 3.0), 2 * pi() / 3, pi(), 5 * pi() / 6
-         |  UNION ALL SELECT 3, -3.0, 0.0, -asin(CAST(1.0 AS DOUBLE) / 3.0), -(2 * pi() / 3), pi(), pi() / 6),
-         |p0 AS (SELECT id,
-         |  (x * 3.6 - 180.0) * (pi() / 180.0) AS lam,
-         |  (y * 1.7 - 85.0) * (pi() / 180.0) AS phi FROM pts),
-         |pv AS (SELECT id, cos(lam) * cos(phi) AS vx, sin(lam) * cos(phi) AS vy, sin(phi) AS vz
-         |  FROM p0),
-         |pc AS (SELECT id,
-         |  atan2(vx * o.oyx + vy * o.oyy + vz * o.oyz, vx * o.oxx + vy * o.oxy + vz * o.oxz) AS cl,
-         |  asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |    vx * o.nx + vy * o.ny + vz * o.nz))) AS cp
-         |  FROM pv, ob2 o),
-         |cand AS (SELECT p.id, f.*, p.cl, p.cp,
-         |  CASE WHEN f.fid = 0 THEN p.cp
-         |    ELSE asin(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |      sin(f.flat) * sin(p.cp) + cos(f.flat) * cos(p.cp) * cos(f.flon - p.cl)))) END AS lat1
-         |  FROM pc p CROSS JOIN facets f),
-         |sel AS (SELECT * FROM (SELECT *,
-         |    row_number() OVER (PARTITION BY id ORDER BY lat1 DESC, fid ASC) AS rn FROM cand)
-         |  WHERE rn = 1),
-         |obq0 AS (SELECT *,
-         |  CASE WHEN fid = 0 THEN cl - flon
-         |    ELSE CASE WHEN sin(cl - flon) > 0 THEN
-         |      -(acos(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |        CASE WHEN cos(lat1) < $eps THEN 1.0
-         |          ELSE (cos(flat) * sin(cp) - sin(flat) * cos(cp) * cos(flon - cl)) / cos(lat1) END))) - pi())
-         |    ELSE acos(greatest(CAST(-1.0 AS DOUBLE), least(CAST(1.0 AS DOUBLE),
-         |        CASE WHEN cos(lat1) < $eps THEN 1.0
-         |          ELSE (cos(flat) * sin(cp) - sin(flat) * cos(cp) * cos(flon - cl)) / cos(lat1) END))) - pi()
-         |    END END AS lon1a
-         |  FROM sel),
-         |obq AS (SELECT *,
-         |  CASE WHEN lon1a - fmer > pi() THEN lon1a - fmer - 2 * pi()
-         |       WHEN lon1a - fmer < -pi() THEN lon1a - fmer + 2 * pi()
-         |       ELSE lon1a - fmer END AS rlon
-         |  FROM obq0),
-         |sec AS (SELECT *, floor((rlon + pi() / 3) / (2 * pi() / 3)) AS sector FROM obq),
-         |ffw AS (SELECT *, rlon - sector * 2 * pi() / 3 AS slam FROM sec),
-         |ff AS (SELECT *, slam - asin(sin(slam) / sqrt(3.0)) AS aa FROM ffw),
-         |ff2 AS (SELECT *,
-         |  atan(2 * sqrt(3.0) / pi() * aa) AS theta,
-         |  CASE WHEN 2 + sqrt(2.0) * tan(lat1) > 0
-         |    THEN (2 + cos(slam)) / (2 + sqrt(2.0) * tan(lat1)) ELSE 0.0 END AS q
-         |  FROM ff),
-         |raw AS (SELECT *,
-         |  (q * sqrt(3.0) / cos(theta)) * cos(theta + frot + sector * 2 * pi() / 3 / 2) + fx AS rx,
-         |  (q * sqrt(3.0) / cos(theta)) * sin(theta + frot + sector * 2 * pi() / 3 / 2) + fy AS ry
-         |  FROM ff2),
-         |lay0 AS (SELECT id,
-         |  CASE WHEN abs(rx) > 3 + $eps THEN 2 * fx - rx
-         |       WHEN abs(ry) > sqrt(3.0) + $eps THEN -rx
-         |       ELSE rx END AS x1,
-         |  CASE WHEN abs(rx) > 3 + $eps THEN -ry
-         |       WHEN abs(ry) > sqrt(3.0) + $eps THEN
-         |         2 * sqrt(3.0) * (CASE WHEN ry > 0 THEN 1.0 ELSE -1.0 END) - ry
-         |       ELSE ry END AS y1
-         |  FROM raw),
-         |lay1 AS (SELECT id,
-         |  CASE WHEN -x1 > $eps THEN 2 * sqrt(3.0) - y1 ELSE y1 END AS qx0,
-         |  CASE WHEN -x1 > $eps THEN x1 ELSE -x1 END AS qy
-         |  FROM lay0),
-         |lay2 AS (SELECT id,
-         |  CASE WHEN qx0 + $shift < 0 THEN qx0 + $shift + 4 * sqrt(3.0)
-         |       ELSE qx0 + $shift END AS qx, qy
-         |  FROM lay1),
-         |fin AS (SELECT id,
-         |  greatest(-2 * sqrt(3.0), least(2 * sqrt(3.0), qx - 2 * sqrt(3.0))) AS lx,
-         |  greatest(CAST(-1.5 AS DOUBLE), least(CAST(1.5 AS DOUBLE), qy + 1.5)) AS ly
-         |  FROM lay2)
-         |SELECT id,
-         |  CAST(floor(lx * (acos(CAST(-1.0 AS DOUBLE) / 3.0) / 2) * 1000000.0) AS BIGINT) AS x_int,
-         |  CAST(floor(ly * (acos(CAST(-1.0 AS DOUBLE) / 3.0) / 2) * 1000000.0) AS BIGINT) AS y_int
-         |FROM fin ORDER BY id""".stripMargin
-    },
-
-    // -proj dymaxion: rotation -> face find -> Gray-Fuller, with the whole
-    // icosahedron DERIVED in SQL (vertices from atan(0.5), spherical
-    // centroids, the three airocean splits incl. the 14/19 shared great-
-    // circle midpoint) — only the 20 vertex-index triples are literal.
-    // Face pick = min id among faces whose every edge-plane test passes at
-    // the kernel's -1e-12 tolerance (the engine scans in id order).
-    "q_dymaxion" -> dymaxionOracleSql(grayFuller = true),
-
-    // gnomonic-facet variant (dymaxion2): same rotation/face-find pipeline,
-    // gnomonic local projector, no facet direction twist
-    "q_dymaxion2" -> dymaxionOracleSql(grayFuller = false),
-
-    "q_img_cell" -> imgCellSql,
-
-    // image ahash/mean via pure SQL pixel synthesis (PNG lossless => decoded
-    // pixels == generator formula): SplitMix64 unrolled with 32-bit-limb
-    // wrap-multiplies in HUGEINT, 8x8 cell means, sequential list_sum,
-    // sign-mapped UBIGINT bit pack
-    // augment (center-crop square + deterministic flip) end-to-end through
-    // PNG encode/decode: the crop's luma sum is flip-invariant and derives
-    // exactly from the generator formula
-    "q_img_augment" ->
-      (s"""WITH ${imgPxPrefix(200)},
-         |crop AS (SELECT image_id,
-         |    least(w, h) AS side, (w - least(w, h)) // 2 AS cx0, (h - least(w, h)) // 2 AS cy0
-         |  FROM img)
-         |SELECT p.image_id, CAST(c.side AS BIGINT) AS side, CAST(sum(p.g) AS BIGINT) AS lum_sum
-         |FROM px p JOIN crop c ON p.image_id = c.image_id
-         |  AND p.x >= c.cx0 AND p.x < c.cx0 + c.side
-         |  AND p.y >= c.cy0 AND p.y < c.cy0 + c.side
-         |GROUP BY p.image_id, c.side ORDER BY p.image_id""").stripMargin,
-
-    "q_img_ahash" -> s"""WITH ${ahashCtes(400)}
-        |SELECT b.image_id,
-        |  CASE WHEN ub >= 9223372036854775808
-        |    THEN CAST(CAST(ub AS HUGEINT) - 18446744073709551616 AS BIGINT)
-        |    ELSE CAST(ub AS BIGINT) END AS ahash,
-        |  mn.mean_g
-        |FROM bits b JOIN means mn USING (image_id) ORDER BY b.image_id""".stripMargin,
-
-    // decoded dims for all 500 (both codecs); ahash re-derived for the
-    // lossless PNG rows from the generator formula, NULL for JPEG
-    "q_img_features" -> s"""WITH ${ahashCtes(500)},
-        |base AS (SELECT image_id, w, h, fmt
-        |  FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')
-        |  WHERE CAST(substr(image_id, 4, 12) AS BIGINT) < 500),
-        |ah AS (SELECT image_id,
-        |  CASE WHEN ub >= 9223372036854775808
-        |    THEN CAST(CAST(ub AS HUGEINT) - 18446744073709551616 AS BIGINT)
-        |    ELSE CAST(ub AS BIGINT) END AS ahash FROM bits)
-        |SELECT base.image_id, base.w, base.h, base.fmt, ah.ahash AS ahash_png
-        |FROM base LEFT JOIN ah USING (image_id) ORDER BY image_id""".stripMargin,
-
-    // decode -> luma -> boxBlur(1) (separable, edge-clamped, (l+c+r)/3 in
-    // the kernel's summation order) -> 8x8 bilinear (edge-clamped taps) ->
-    // mean (sequential list_sum == Array.sum) + center, half-up rounding
-    "q_img_raster" -> {
-      def clampX(e: String) = s"least(greatest($e, 0), o.w - 1)"
-      def clampY(e: String) = s"least(greatest($e, 0), o.h - 1)"
-      s"""WITH ${ahashCtes(300)},
-         |lum AS (SELECT image_id, w, h, x, y, CAST(g AS DOUBLE) AS v FROM px),
-         |hb AS (SELECT a.image_id, a.w, a.h, a.x, a.y, (l.v + a.v + r.v) / 3.0 AS v
-         |  FROM lum a
-         |  JOIN lum l ON l.image_id = a.image_id AND l.y = a.y
-         |    AND l.x = greatest(a.x - 1, 0)
-         |  JOIN lum r ON r.image_id = a.image_id AND r.y = a.y
-         |    AND r.x = least(a.x + 1, a.w - 1)),
-         |vb AS (SELECT a.image_id, a.w, a.h, a.x, a.y, (u.v + a.v + d.v) / 3.0 AS v
-         |  FROM hb a
-         |  JOIN hb u ON u.image_id = a.image_id AND u.x = a.x
-         |    AND u.y = greatest(a.y - 1, 0)
-         |  JOIN hb d ON d.image_id = a.image_id AND d.x = a.x
-         |    AND d.y = least(a.y + 1, a.h - 1)),
-         |op AS (SELECT img.image_id, img.w, img.h, ox.i AS ox, oy.i AS oy,
-         |    (CAST(ox.i AS DOUBLE) + 0.5) * (CAST(img.w AS DOUBLE) / 8.0) - 0.5 AS fx,
-         |    (CAST(oy.i AS DOUBLE) + 0.5) * (CAST(img.h AS DOUBLE) / 8.0) - 0.5 AS fy
-         |  FROM img CROSS JOIN range(0, 8) ox(i) CROSS JOIN range(0, 8) oy(i)),
-         |ot AS (SELECT *, CAST(floor(fx) AS BIGINT) AS x0, CAST(floor(fy) AS BIGINT) AS y0,
-         |    fx - floor(fx) AS tx, fy - floor(fy) AS ty FROM op),
-         |tp AS (SELECT o.image_id, o.ox, o.oy, o.tx, o.ty,
-         |    v00.v AS v00, v10.v AS v10, v01.v AS v01, v11.v AS v11
-         |  FROM ot o
-         |  JOIN vb v00 ON v00.image_id = o.image_id
-         |    AND v00.x = ${clampX("o.x0")} AND v00.y = ${clampY("o.y0")}
-         |  JOIN vb v10 ON v10.image_id = o.image_id
-         |    AND v10.x = ${clampX("o.x0 + 1")} AND v10.y = ${clampY("o.y0")}
-         |  JOIN vb v01 ON v01.image_id = o.image_id
-         |    AND v01.x = ${clampX("o.x0")} AND v01.y = ${clampY("o.y0 + 1")}
-         |  JOIN vb v11 ON v11.image_id = o.image_id
-         |    AND v11.x = ${clampX("o.x0 + 1")} AND v11.y = ${clampY("o.y0 + 1")}),
-         |ov AS (SELECT image_id, ox, oy,
-         |    (v00 * (1 - tx) + v10 * tx) * (1 - ty)
-         |      + (v01 * (1 - tx) + v11 * tx) * ty AS val FROM tp),
-         |agg AS (SELECT image_id,
-         |    list_sum(list(val ORDER BY oy * 8 + ox)) AS tot,
-         |    min(CASE WHEN ox = 4 AND oy = 4 THEN val END) AS center
-         |  FROM ov GROUP BY image_id)
-         |SELECT a2.image_id, i2.w, i2.h,
-         |  CAST(floor(tot / 64 * 1000.0 + 0.5) AS BIGINT) AS mean_luma_q,
-         |  CAST(floor(center * 1000.0 + 0.5) AS BIGINT) AS blur_center_q
-         |FROM agg a2 JOIN img i2 USING (image_id) ORDER BY a2.image_id""".stripMargin
-    },
-
-    "q_video_frames" -> {
-      val imgCte =
-        s"""vid AS (SELECT video_id, w, h, n_frames, CAST(substr(video_id, 4, 12) AS BIGINT) AS vi
-          |  FROM read_parquet('$DataRoot/video_sf0.01.parquet/*.parquet')
-          |  WHERE CAST(substr(video_id, 4, 12) AS BIGINT) < 150),
-          |fr AS (SELECT video_id, w, h, f.f AS frame, vi * 100000 + f.f AS i
-          |  FROM vid JOIN generate_series(0, 8) f(f)
-          |  ON f.f < vid.n_frames AND f.f % 2 = 0),
-          |img AS (SELECT video_id || '#' || CAST(frame AS VARCHAR) AS image_id, w, h, i
-          |  FROM fr)""".stripMargin
-      s"""WITH ${ahashChain(imgCte)},
-         |keyed AS (SELECT fr.video_id, CAST(fr.frame AS BIGINT) AS frame,
-         |    fr.video_id || '#' || CAST(fr.frame AS VARCHAR) AS image_id FROM fr)
-         |SELECT k.video_id, k.frame,
-         |  CASE WHEN b.ub >= 9223372036854775808
-         |    THEN CAST(CAST(b.ub AS HUGEINT) - 18446744073709551616 AS BIGINT)
-         |    ELSE CAST(b.ub AS BIGINT) END AS ahash,
-         |  CAST(floor(mn.mean_g * 1000.0) AS BIGINT) AS mean_g_int
-         |FROM keyed k
-         |JOIN bits b USING (image_id) JOIN means mn USING (image_id)
-         |ORDER BY k.video_id, k.frame""".stripMargin
-    },
-
-    "q_audio_features" ->
-      s"""WITH ${audioSmpCtes(300)},
-         |zc0 AS (SELECT audio_id, n, v,
-         |    lag(v) OVER (PARTITION BY audio_id ORDER BY n) AS pv FROM smp),
-         |zc AS (SELECT audio_id,
-         |    CAST(SUM(CASE WHEN pv IS NOT NULL AND (pv < 0) <> (v < 0)
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings,
-         |    CAST(max(abs(v)) AS BIGINT) AS peak,
-         |    CAST(SUM(v * v) AS BIGINT) AS energy
-         |  FROM zc0 GROUP BY audio_id)
-         |SELECT a.audio_id, a.n_samples,
-         |  CAST(a.n_samples AS BIGINT) * 1000 // 8000 AS duration_ms,
-         |  z.zero_crossings, z.peak, z.energy
-         |FROM aud a JOIN zc z USING (audio_id) ORDER BY a.audio_id""".stripMargin,
-
-    "q_audio_segment" ->
-      s"""WITH ${audioSmpCtes(300)},
-         |seg AS (SELECT audio_id, n_samples, n, v FROM smp
-         |  WHERE n >= n_samples // 4 AND n < n_samples // 4 + n_samples // 2)
-         |SELECT audio_id,
-         |  CAST(min(n) AS BIGINT) AS seg_from,
-         |  CAST(count(*) AS BIGINT) AS seg_len,
-         |  CAST(SUM(v * v) AS BIGINT) AS seg_energy
-         |FROM seg GROUP BY audio_id ORDER BY audio_id""".stripMargin,
-
-    // PNG rows are lossless by construction; the JPEG round trip must hold
-    // >= 40 dB (deterministic image family; observed floor ~48.5 dB)
-    "q_img_psnr" ->
-      s"""SELECT image_id, w, h, fmt = 'png' AS lossless, TRUE AS high_fidelity
-        |FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')
-        |WHERE CAST(substr(image_id, 4, 12) AS BIGINT) < 500
-        |ORDER BY image_id""".stripMargin,
-
-
-    "q_img_pip_oracle" ->
-      s"""WITH img AS (SELECT phash FROM read_parquet('$DataRoot/images_sf0.01.parquet/*.parquet')),
-         |s0 AS (SELECT phash >> 1 AS x, phash AS y FROM img),
-         |d1 AS (SELECT x & 6148914691236517205 AS x, y & 6148914691236517205 AS y FROM s0),
-         |d2 AS (SELECT (x | (x >> 1)) & 3689348814741910323 AS x,
-         |              (y | (y >> 1)) & 3689348814741910323 AS y FROM d1),
-         |d3 AS (SELECT (x | (x >> 2)) & 1085102592571150095 AS x,
-         |              (y | (y >> 2)) & 1085102592571150095 AS y FROM d2),
-         |d4 AS (SELECT (x | (x >> 4)) & 71777214294589695 AS x,
-         |              (y | (y >> 4)) & 71777214294589695 AS y FROM d3),
-         |d5 AS (SELECT (x | (x >> 8)) & 281470681808895 AS x,
-         |              (y | (y >> 8)) & 281470681808895 AS y FROM d4),
-         |d6 AS (SELECT (x | (x >> 16)) & 4294967295 AS x,
-         |              (y | (y >> 16)) & 4294967295 AS y FROM d5),
-         |pts2 AS (SELECT row_number() OVER () AS id,
-         |  CAST(x AS DOUBLE) * ${dl(Images.LocScale)} AS x,
-         |  CAST(y AS DOUBLE) * ${dl(Images.LocScale)} AS y FROM d6),
-         |$oracleEdgesSql,
-         |hits AS (
-         |  SELECT p.id, e.pk,
-         |    SUM(CASE WHEN ((e.ex1 > p.x) <> (e.ex2 > p.x))
-         |          AND e.ey1 + (p.x - e.ex1) * (e.ey2 - e.ey1) / (e.ex2 - e.ex1) > p.y
-         |        THEN 1 ELSE 0 END) AS crossings
-         |  FROM pts2 p CROSS JOIN edges e
-         |  GROUP BY p.id, e.pk)
-         |SELECT CAST(pk AS BIGINT) AS poly_key, count(*) AS n_images
-         |FROM hits WHERE crossings % 2 = 1
-         |GROUP BY pk ORDER BY poly_key""".stripMargin,
-
-    "q_clip_layer" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |t AS (SELECT cx * 100 + cy AS t_key,
-         |  CAST(cx * 10 AS DOUBLE) AS tx1, CAST(cy * 10 AS DOUBLE) AS ty1,
-         |  CAST(cx * 10 + 10 AS DOUBLE) AS tx2, CAST(cy * 10 + 10 AS DOUBLE) AS ty2
-         |  FROM cells),
-         |ov AS (SELECT t_key,
-         |  greatest(least(tx2, 55) - greatest(tx1, 5), 0) * greatest(least(ty2, 55) - greatest(ty1, 5), 0) AS a,
-         |  greatest(least(tx2, 95) - greatest(tx1, 45), 0) * greatest(least(ty2, 75) - greatest(ty1, 25), 0) AS b,
-         |  greatest(least(tx2, 75) - greatest(tx1, 25), 0) * greatest(least(ty2, 95) - greatest(ty1, 45), 0) AS c,
-         |  greatest(least(least(tx2, 55), 95) - greatest(greatest(tx1, 5), 45), 0) *
-         |    greatest(least(least(ty2, 55), 75) - greatest(greatest(ty1, 5), 25), 0) AS ab,
-         |  greatest(least(least(tx2, 55), 75) - greatest(greatest(tx1, 5), 25), 0) *
-         |    greatest(least(least(ty2, 55), 95) - greatest(greatest(ty1, 5), 45), 0) AS ac,
-         |  greatest(least(least(tx2, 95), 75) - greatest(greatest(tx1, 45), 25), 0) *
-         |    greatest(least(least(ty2, 75), 95) - greatest(greatest(ty1, 25), 45), 0) AS bc,
-         |  greatest(least(least(least(tx2, 55), 95), 75) - greatest(greatest(greatest(tx1, 5), 45), 25), 0) *
-         |    greatest(least(least(least(ty2, 55), 75), 95) - greatest(greatest(greatest(ty1, 5), 25), 45), 0) AS abc
-         |  FROM t)
-         |SELECT t_key,
-         |  CAST(round((a + b + c - ab - ac - bc + abc) * 100.0) AS BIGINT) AS clip_int,
-         |  CAST(round((100.0 - (a + b + c - ab - ac - bc + abc)) * 100.0) AS BIGINT) AS erase_int
-         |FROM ov ORDER BY t_key""".stripMargin,
-
-    "q_dissolve2_rect" ->
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-         |r AS (SELECT g,
-         |  CAST(g * 3 % 13 AS DOUBLE) AS ax0, CAST(g * 5 % 17 AS DOUBLE) AS ay0,
-         |  CAST(g * 5 % 13 AS DOUBLE) AS bx0, CAST(g * 8 % 17 AS DOUBLE) AS by0,
-         |  CAST(g * 7 % 13 AS DOUBLE) AS cx0, CAST(g * 11 % 17 AS DOUBLE) AS cy0
-         |  FROM gs),
-         |ov AS (SELECT g,
-         |  -- pairwise and triple overlaps of the three 10x10 rects
-         |  greatest(least(ax0+10, bx0+10) - greatest(ax0, bx0), 0) *
-         |  greatest(least(ay0+10, by0+10) - greatest(ay0, by0), 0) AS ab,
-         |  greatest(least(ax0+10, cx0+10) - greatest(ax0, cx0), 0) *
-         |  greatest(least(ay0+10, cy0+10) - greatest(ay0, cy0), 0) AS ac,
-         |  greatest(least(bx0+10, cx0+10) - greatest(bx0, cx0), 0) *
-         |  greatest(least(by0+10, cy0+10) - greatest(by0, cy0), 0) AS bc,
-         |  greatest(least(least(ax0, bx0) + 10, cx0 + 10) - greatest(greatest(ax0, bx0), cx0), 0) *
-         |  greatest(least(least(ay0, by0) + 10, cy0 + 10) - greatest(greatest(ay0, by0), cy0), 0) AS abc
-         |  FROM r)
-         |SELECT g AS "group",
-         |  CAST(round((300.0 - ab - ac - bc + abc) * 100.0) AS BIGINT) AS area_int
-         |FROM ov ORDER BY g""".stripMargin,
-
-    // grouped robust dissolve at the real query's scale: 15x15 squares on a
-    // 10-grid keep all edges on the 5-lattice, so the per-group union area
-    // is exactly 25 x (covered 5x5 lattice cells)
-    "q_dissolve2" ->
-      s"""WITH $ptsSql,
-         |sq AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |g AS (SELECT cx, cy, (cx + cy) % 2 AS grp FROM sq),
-         |cov AS (SELECT DISTINCT grp, cx * 2 + du.i AS u, cy * 2 + dv.i AS v
-         |  FROM g CROSS JOIN range(0, 3) du(i) CROSS JOIN range(0, 3) dv(i)),
-         |a AS (SELECT grp, count(*) AS ncell FROM cov GROUP BY grp),
-         |n AS (SELECT grp, count(*) AS nsq FROM g GROUP BY grp)
-         |SELECT n.grp AS "group", CAST(n.nsq AS BIGINT) AS n_shapes_in,
-         |  CAST(a.ncell * 25 * 1000 AS BIGINT) AS area_int
-         |FROM n JOIN a USING (grp) ORDER BY "group"""".stripMargin,
-
-    // overlap_rule variants: per-shape kept areas have inclusion-exclusion
-    // closed forms; shapes 0/1/2 have areas 100/64/144 so every rule picks a
-    // different overlap winner (min-id: 0; max-id: 2; max-area: 2>0>1;
-    // min-area: 1<0<2)
-    "q_dissolve2_rules" -> {
-      def ov(x1: String, y1: String, w1: String, x2: String, y2: String, w2: String) =
-        s"greatest(least($x1 + $w1, $x2 + $w2) - greatest($x1, $x2), 0) * " +
-          s"greatest(least($y1 + $w1, $y2 + $w2) - greatest($y1, $y2), 0)"
-      val rows = Seq(
-        // rule -> (a0, a1, a2) in terms of p01/p02/p12/t (pairwise/triple ov)
-        ("max-area", Seq("100.0 - p02", "64.0 - p01 - p12 + t", "144.0")),
-        ("max-id",   Seq("100.0 - p01 - p02 + t", "64.0 - p12", "144.0")),
-        ("min-area", Seq("100.0 - p01", "64.0", "144.0 - p02 - p12 + t")),
-        ("min-id",   Seq("100.0", "64.0 - p01", "144.0 - p02 - p12 + t"))
-      ).flatMap { case (rule, as) =>
-        as.zipWithIndex.map { case (a, i) =>
-          s"SELECT g, '$rule' AS rule, CAST($i AS BIGINT) AS shape, " +
-            s"CAST(round(($a) * 100.0) AS BIGINT) AS area_int FROM ovs"
-        }
-      }.mkString("\nUNION ALL ")
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-         |r AS (SELECT g,
-         |  CAST(g * 3 % 13 AS DOUBLE) AS x0, CAST(g * 5 % 17 AS DOUBLE) AS y0,
-         |  CAST(g * 5 % 13 AS DOUBLE) AS x1, CAST(g * 8 % 17 AS DOUBLE) AS y1,
-         |  CAST(g * 7 % 13 AS DOUBLE) AS x2, CAST(g * 11 % 17 AS DOUBLE) AS y2
-         |  FROM gs),
-         |ovs AS (SELECT g,
-         |  ${ov("x0", "y0", "10.0", "x1", "y1", "8.0")} AS p01,
-         |  ${ov("x0", "y0", "10.0", "x2", "y2", "12.0")} AS p02,
-         |  ${ov("x1", "y1", "8.0", "x2", "y2", "12.0")} AS p12,
-         |  greatest(least(least(x0 + 10.0, x1 + 8.0), x2 + 12.0)
-         |    - greatest(greatest(x0, x1), x2), 0) *
-         |  greatest(least(least(y0 + 10.0, y1 + 8.0), y2 + 12.0)
-         |    - greatest(greatest(y0, y1), y2), 0) AS t
-         |  FROM r)
-         |SELECT * FROM ($rows) ORDER BY g, rule, shape""".stripMargin
-    },
-
-    // -union: inclusion-exclusion area of the two-rect coverage + the
-    // connectivity count (1 ring iff the overlap is strictly positive in
-    // both axes; the +0.5 dyadic offset on B rules out exact edge touches)
-    // picture-frame gap fill: filled iff h^2 < threshold; h dyadic -> exact
-    "q_dissolve2_gaps" ->
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-         |r AS (SELECT g, 2.5e-1 + CAST(g % 5 AS DOUBLE) * 3.75e-1 AS h FROM gs)
-         |SELECT g,
-         |  CAST(CASE WHEN h * h < 2.0 THEN 1 ELSE 2 END AS BIGINT) AS n_rings,
-         |  CAST(round((100.0 - CASE WHEN h * h < 2.0 THEN 0.0 ELSE h * h END) * 100.0) AS BIGINT) AS area_int
-         |FROM r ORDER BY g""".stripMargin,
-
-    "q_union" ->
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-         |r AS (SELECT g,
-         |  CAST(g * 3 % 13 AS DOUBLE) AS ax, CAST(g * 5 % 17 AS DOUBLE) AS ay,
-         |  CAST(g * 5 % 13 AS DOUBLE) + 5.0e-1 AS bx, CAST(g * 8 % 17 AS DOUBLE) + 5.0e-1 AS by
-         |  FROM gs),
-         |o AS (SELECT g,
-         |  least(ax + 10.0, bx + 8.0) - greatest(ax, bx) AS wx,
-         |  least(ay + 10.0, by + 8.0) - greatest(ay, by) AS wy FROM r)
-         |SELECT g,
-         |  CAST(CASE WHEN wx > 0 AND wy > 0 THEN 1 ELSE 2 END AS BIGINT) AS n_rings,
-         |  CAST(round((164.0 - greatest(wx, 0) * greatest(wy, 0)) * 100.0) AS BIGINT) AS area_int
-         |FROM o ORDER BY g""".stripMargin,
-
-    // -mosaic: per-membership-mask tile areas — every Venn cell of the
-    // 3-rect arrangement has an inclusion-exclusion closed form; only
-    // nonempty cells appear (areas are dyadic-exact so > 0 is exact)
-    "q_mosaic" ->
-      s"""WITH $ptsSql,
-         |$mosaicOvSql,
-         |m AS (
-         |  SELECT g, 1 AS mask, 100.0 - pab - pac + t AS area FROM ov UNION ALL
-         |  SELECT g, 2, 64.0 - pab - pbc + t FROM ov UNION ALL
-         |  SELECT g, 3, pab - t FROM ov UNION ALL
-         |  SELECT g, 4, 144.0 - pac - pbc + t FROM ov UNION ALL
-         |  SELECT g, 5, pac - t FROM ov UNION ALL
-         |  SELECT g, 6, pbc - t FROM ov UNION ALL
-         |  SELECT g, 7, t FROM ov)
-         |SELECT g, CAST(mask AS BIGINT) AS mask,
-         |  CAST(round(area * 10000.0) AS BIGINT) AS area_int
-         |FROM m WHERE area > 0 ORDER BY g, mask""".stripMargin,
-
-    // -clean: per-shape kept areas under each overlap rule (shape areas
-    // 100/64/144 make every rule pick a different overlap winner; ties
-    // cannot occur). Same claim logic as q_dissolve2_rules, but through
-    // Overlay.clean's index-aligned rebuild.
-    "q_clean" -> {
-      val rows = Seq(
-        ("max-area", Seq("100.0 - pac", "64.0 - pab - pbc + t", "144.0")),
-        ("max-id",   Seq("100.0 - pab - pac + t", "64.0 - pbc", "144.0")),
-        ("min-area", Seq("100.0 - pab", "64.0", "144.0 - pac - pbc + t")),
-        ("min-id",   Seq("100.0", "64.0 - pab", "144.0 - pac - pbc + t"))
-      ).flatMap { case (rule, as) =>
-        as.zipWithIndex.map { case (a, i) =>
-          s"SELECT g, '$rule' AS rule, CAST($i AS BIGINT) AS shape, " +
-            s"CAST(round(($a) * 10000.0) AS BIGINT) AS area_int FROM ov"
-        }
-      }.mkString("\nUNION ALL ")
-      s"""WITH $ptsSql,
-         |$mosaicOvSql
-         |SELECT * FROM ($rows) ORDER BY g, rule, shape""".stripMargin
-    },
-
-    // -polygons: an n x m grid of full-span lines has n*m bounded faces;
-    // total area = sum(w) * sum(h), sum of squared face areas factorizes
-    // as sum(w^2) * sum(h^2)
-    "q_polygonize" ->
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-         |dims AS (SELECT g, g % 3 + 2 AS n, g % 2 + 2 AS m FROM gs),
-         |ws AS (SELECT g, CAST((g + 7 * i.i) % 4 + 1 AS DOUBLE) AS w
-         |  FROM dims CROSS JOIN range(1, 5) i(i) WHERE i.i <= n),
-         |hs AS (SELECT g, CAST((g + 5 * j.j) % 3 + 1 AS DOUBLE) AS h
-         |  FROM dims CROSS JOIN range(1, 4) j(j) WHERE j.j <= m),
-         |wa AS (SELECT g, sum(w) AS sw, sum(w * w) AS sw2 FROM ws GROUP BY g),
-         |ha AS (SELECT g, sum(h) AS sh, sum(h * h) AS sh2 FROM hs GROUP BY g)
-         |SELECT d.g AS g, CAST(d.n * d.m AS BIGINT) AS n_faces,
-         |  CAST(round(wa.sw * ha.sh * 100.0) AS BIGINT) AS area_int,
-         |  CAST(round(wa.sw2 * ha.sh2) AS BIGINT) AS sq_sum
-         |FROM dims d JOIN wa ON wa.g = d.g JOIN ha ON ha.g = d.g
-         |ORDER BY g""".stripMargin,
-
-    // -divide: piece counts and lengths on each side of the rect boundary
-    // (cuts land at x = 0, a line vertex, and x = w; breakpoints at
-    // -5/0/5/10/15 give the piece-count case split)
-    "q_divide" ->
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-         |p AS (SELECT g, CAST(g % 8 + 2 AS DOUBLE) AS w FROM gs),
-         |u AS (
-         |  SELECT g, TRUE AS inside,
-         |    CAST(CASE WHEN w > 5 THEN 2 ELSE 1 END AS BIGINT) AS n_pieces,
-         |    CAST(round(w * 100.0) AS BIGINT) AS len_int FROM p
-         |  UNION ALL
-         |  SELECT g, FALSE,
-         |    CAST(CASE WHEN w < 5 THEN 4 ELSE 3 END AS BIGINT),
-         |    CAST(round((20.0 - w) * 100.0) AS BIGINT) FROM p)
-         |SELECT g, inside, n_pieces, len_int FROM u ORDER BY g, inside""".stripMargin,
-
-    // -inlay: coverage area is inclusion-exclusion; ring count is 2 only in
-    // the strictly-disjoint position (g % 5 = 0 -> dx = -8); the
-    // edge-touching dx = 12 position merges via exact shared-edge cancel
-    "q_inlay" ->
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-         |p AS (SELECT g, CAST(g % 5 * 5 - 8 AS DOUBLE) AS dx FROM gs),
-         |o AS (SELECT g, dx,
-         |  greatest(least(12.0, dx + 6.0) - greatest(0.0, dx), 0) * 6.0 AS ov FROM p)
-         |SELECT g,
-         |  CAST(CASE WHEN g % 5 = 0 THEN 2 ELSE 1 END AS BIGINT) AS n_rings,
-         |  CAST(round((180.0 - ov) * 100.0) AS BIGINT) AS area_int
-         |FROM o ORDER BY g""".stripMargin,
-
-    // -stitch: the merged ring spans [180 - w1, 180 + w2] in the 0..360
-    // frame (area (w1 + w2) * h); the control ring is untouched; rank is
-    // by min lon so the control (far west) is always rank 0
-    "q_stitch" ->
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 50 AS g FROM pts),
-         |p AS (SELECT g,
-         |  CAST(g % 5 + 1 AS DOUBLE) AS h,
-         |  CAST(g % 4 + 3 AS DOUBLE) AS w1,
-         |  CAST(g % 3 + 2 AS DOUBLE) AS w2,
-         |  CAST(g % 20 AS DOUBLE) - 60.0 AS cx FROM gs),
-         |u AS (
-         |  SELECT g, CAST(0 AS BIGINT) AS rk,
-         |    CAST(round(5.0 * h * 100.0) AS BIGINT) AS area_int,
-         |    CAST(round(cx * 100.0) AS BIGINT) AS lon_min_int,
-         |    CAST(round((cx + 5.0) * 100.0) AS BIGINT) AS lon_max_int FROM p
-         |  UNION ALL
-         |  SELECT g, CAST(1 AS BIGINT),
-         |    CAST(round((w1 + w2) * h * 100.0) AS BIGINT),
-         |    CAST(round((180.0 - w1) * 100.0) AS BIGINT),
-         |    CAST(round((180.0 + w2) * 100.0) AS BIGINT) FROM p)
-         |SELECT g, rk, area_int, lon_min_int, lon_max_int FROM u
-         |ORDER BY g, rk""".stripMargin,
-
-    // GeoJSON reader: full DuckDB JSON decode of the same fixture (null
-    // geometries filtered, per-feature ring/vertex counts + bbox)
-    "q_geojson_read" ->
-      s"""WITH root AS (SELECT j FROM read_json_objects('/root/reference/test/data/geojson/six_counties_three_null.json', format='unstructured') t(j)),
-         |f AS (SELECT unnest(range(0, CAST(json_array_length(json_extract(j, '$$.features')) AS BIGINT))) AS fid, j FROM root),
-         |g AS (SELECT fid, json_extract(j, '$$.features[' || fid || '].geometry') AS geom FROM f),
-         |gm AS (SELECT fid, json_extract_string(geom, '$$.type') AS gt, geom FROM g
-         |  WHERE json_extract_string(geom, '$$.type') IN ('Polygon', 'MultiPolygon')),
-         |pp AS (SELECT fid, gt, geom, CASE WHEN gt = 'Polygon' THEN 1
-         |    ELSE CAST(json_array_length(json_extract(geom, '$$.coordinates')) AS BIGINT) END AS npoly FROM gm),
-         |polys AS (SELECT fid, gt, geom, unnest(range(0, npoly)) AS pj FROM pp),
-         |rings0 AS (SELECT fid, CASE WHEN gt = 'Polygon' THEN json_extract(geom, '$$.coordinates')
-         |    ELSE json_extract(geom, '$$.coordinates[' || pj || ']') END AS poly FROM polys),
-         |rings AS (SELECT fid, unnest(range(0, CAST(json_array_length(poly) AS BIGINT))) AS rj, poly FROM rings0),
-         |ringarr AS (SELECT fid, json_extract(poly, '$$[' || rj || ']') AS ring FROM rings),
-         |pts2 AS (SELECT fid, ring, unnest(range(0, CAST(json_array_length(ring) AS BIGINT))) AS i FROM ringarr),
-         |coords AS (SELECT fid,
-         |    CAST(json_extract(ring, '$$[' || i || '][0]') AS DOUBLE) AS x,
-         |    CAST(json_extract(ring, '$$[' || i || '][1]') AS DOUBLE) AS y FROM pts2),
-         |rc AS (SELECT fid, count(*) AS n_rings FROM ringarr GROUP BY fid),
-         |vc AS (SELECT fid, count(*) AS n_verts,
-         |    floor(min(x) * 1000000.0) AS mnx, floor(min(y) * 1000000.0) AS mny,
-         |    floor(max(x) * 1000000.0) AS mxx, floor(max(y) * 1000000.0) AS mxy FROM coords GROUP BY fid)
-         |SELECT rc.fid AS key, CAST(rc.n_rings AS BIGINT) AS n_rings,
-         |  CAST(vc.n_verts AS BIGINT) AS n_verts,
-         |  CAST(vc.mnx AS BIGINT) AS minx_int, CAST(vc.mny AS BIGINT) AS miny_int,
-         |  CAST(vc.mxx AS BIGINT) AS maxx_int, CAST(vc.mxy AS BIGINT) AS maxy_int
-         |FROM rc JOIN vc ON vc.fid = rc.fid ORDER BY key""".stripMargin,
-
-    // TopoJSON reader: window-sum delta decode of the same literal doc,
-    // signed-arc reversal and junction dedup mirrored relationally
-    "q_topojson_read" ->
-      s"""WITH doc AS (SELECT '$topoFixture' AS j),
-         |tr AS (SELECT CAST(json_extract(j, '$$.transform.scale[0]') AS DOUBLE) AS sx,
-         |    CAST(json_extract(j, '$$.transform.scale[1]') AS DOUBLE) AS sy,
-         |    CAST(json_extract(j, '$$.transform.translate[0]') AS DOUBLE) AS tx,
-         |    CAST(json_extract(j, '$$.transform.translate[1]') AS DOUBLE) AS ty FROM doc),
-         |aidx AS (SELECT unnest(range(0, CAST(json_array_length(j, '$$.arcs') AS BIGINT))) AS a, j FROM doc),
-         |alen AS (SELECT a, CAST(json_array_length(j, '$$.arcs[' || a || ']') AS BIGINT) AS n, j FROM aidx),
-         |pidx AS (SELECT a, n, unnest(range(0, n)) AS p, j FROM alen),
-         |deltas AS (SELECT a, n, p,
-         |    CAST(json_extract(j, '$$.arcs[' || a || '][' || p || '][0]') AS BIGINT) AS dx,
-         |    CAST(json_extract(j, '$$.arcs[' || a || '][' || p || '][1]') AS BIGINT) AS dy FROM pidx),
-         |dec AS (SELECT a, n, p,
-         |    CAST(SUM(dx) OVER (PARTITION BY a ORDER BY p) AS DOUBLE) AS qx,
-         |    CAST(SUM(dy) OVER (PARTITION BY a ORDER BY p) AS DOUBLE) AS qy FROM deltas),
-         |dxy AS (SELECT a, n, p, qx * tr.sx + tr.tx AS x, qy * tr.sy + tr.ty AS y
-         |  FROM dec CROSS JOIN tr),
-         |spec(key, k, arcid) AS (VALUES (0, 0, 0), (0, 1, 1), (1, 0, 2), (1, 1, -1)),
-         |verts AS (SELECT s.key, d.x, d.y FROM spec s JOIN dxy d
-         |  ON d.a = CASE WHEN s.arcid >= 0 THEN s.arcid ELSE -s.arcid - 1 END
-         |  WHERE NOT (s.k > 0 AND
-         |    (CASE WHEN s.arcid >= 0 THEN d.p ELSE d.n - 1 - d.p END) = 0))
-         |SELECT CAST(key AS BIGINT) AS key, CAST(1 AS BIGINT) AS n_rings,
-         |  CAST(count(*) AS BIGINT) AS n_verts,
-         |  CAST(floor(min(x) * 1000.0) AS BIGINT) AS minx_int,
-         |  CAST(floor(min(y) * 1000.0) AS BIGINT) AS miny_int,
-         |  CAST(floor(max(x) * 1000.0) AS BIGINT) AS maxx_int,
-         |  CAST(floor(max(y) * 1000.0) AS BIGINT) AS maxy_int
-         |FROM verts GROUP BY key ORDER BY key""".stripMargin,
-
-    // FlatGeobuf reader: VALUES mirror from an independent python-struct
-    // flatbuffers walk of the same 179-country fixture bytes
-    "q_fgb_read" ->
-      s"""SELECT CAST(fid AS BIGINT) AS fid, CAST(n_rings AS BIGINT) AS n_rings,
-         |  CAST(n_verts AS BIGINT) AS n_verts,
-         |  CAST(minx_int AS BIGINT) AS minx_int, CAST(miny_int AS BIGINT) AS miny_int,
-         |  CAST(maxx_int AS BIGINT) AS maxx_int, CAST(maxy_int AS BIGINT) AS maxy_int
-         |FROM (VALUES
-         |(0, 8, 658, -179942499, -85609038, 180000000, -63270660),
-         |(1, 1, 9, 68720000, -49775000, 70560000, -48625000),
-         |(2, 1, 44, 11734199, -29045462, 25084443, -16941343),
-         |(3, 1, 40, 19895458, -26828543, 29432188, -17661816),
-         |(4, 1, 11, 30676609, -27285879, 32071665, -25660191),
-         |(5, 2, 94, 16344977, -34819166, 32830120, -22091313),
-         |(6, 1, 12, 26999262, -30645106, 29325166, -28647502),
-         |(7, 1, 77, 30179481, -26742192, 40775475, -10317096),
-         |(8, 1, 28, 32688164, -16801300, 35771905, -9230599),
-         |(9, 1, 61, 21887843, -17961229, 33485688, -8238258),
-         |(10, 1, 37, 25264226, -22271612, 32849860, -15507787),
-         |(11, 2, 75, 11640096, -17930636, 24079905, -4438023),
-         |(12, 1, 122, 12182337, -13257227, 31174149, 5256088),
-         |(13, 1, 13, 29024926, -2917858, 30816135, -1134659),
-         |(14, 1, 13, 29024926, -4499983, 30752263, -2348487),
-         |(15, 1, 49, 29339998, -11720938, 40316590, -950000),
-         |(16, 1, 49, 43254187, -25601434, 50476537, -12040557),
-         |(17, 13, 250, 95293026, -10359987, 141033852, 5479821),
-         |(18, 1, 11, 124968682, -9393173, 127335928, -8273346),
-         |(19, 2, 241, 113338953, -43634597, 153569469, -10668186),
-         |(20, 2, 66, 166509144, -46641235, 178517094, -34450662),
-         |(21, 2, 12, 166629137, -16597851, 167844877, -14626497),
-         |(22, 1, 13, 164029606, -22399976, 167120011, -20105646),
-         |(23, 4, 81, 141000210, -10652476, 156019965, -2500002),
-         |(24, 5, 37, 156491358, -10826367, 162398646, -6599338),
-         |(25, 1, 8, 114204017, 4007637, 115450710, 5447730),
-         |(26, 2, 62, 100085757, 773131, 119181904, 6928053),
-         |(27, 1, 17, 102348099, 10486544, 107614548, 14570584),
-         |(28, 1, 64, 97375896, 5691384, 105589039, 20417850),
-         |(29, 1, 70, 92303234, 9932960, 101180005, 28335945),
-         |(30, 1, 37, 100115988, 13881091, 107564525, 22464753),
-         |(31, 1, 44, 102170436, 8599760, 109335270, 23352063),
-         |(32, 7, 110, 117174275, 5581003, 126537424, 18505227),
-         |(33, 1, 9, 120106189, 21970571, 121951244, 25295459),
-         |(34, 1, 36, 88084422, 20670883, 92672721, 26446526),
-         |(35, 1, 13, 88814248, 26719403, 92103712, 28296439),
-         |(36, 2, 240, 73675379, 18197701, 135026311, 53458804),
-         |(37, 1, 19, 126117398, 34390046, 129468303, 38612243),
-         |(38, 1, 43, 124265625, 37669071, 130780007, 42985387),
-         |(39, 3, 65, 129408463, 31029579, 145543137, 45551483),
-         |(40, 1, 75, 87751264, 41597410, 119772824, 52047366),
-         |(41, 1, 54, 55928917, 37144994, 73055417, 45586804),
-         |(42, 1, 112, 46466446, 40662325, 87359970, 55385250),
-         |(43, 1, 38, 20645593, 59846373, 31516092, 70164193),
-         |(44, 4, 88, 4992078, 58078884, 31293418, 80657144),
-         |(45, 1, 14, 3314971, 50803721, 7092053, 53510403),
-         |(46, 2, 24, 8089976, 54800015, 12690006, 57730017),
-         |(47, 1, 45, 14074521, 49027395, 24029986, 54851536),
-         |(48, 1, 40, 11027369, 55361737, 23903379, 69106247),
-         |(49, 1, 17, 23339795, 57474528, 28131699, 59611090),
-         |(50, 1, 22, 21055800, 55615107, 28176709, 57970157),
-         |(51, 1, 19, 21055800, 53905702, 26588279, 56372528),
-         |(52, 1, 44, 23199494, 51319503, 32693643, 56169130),
-         |(53, 1, 27, 26619337, 45488283, 30024659, 48467119),
-         |(54, 1, 98, 22085608, 44361479, 40080789, 52335075),
-         |(55, 1, 24, 39955009, 41064445, 46637908, 43553104),
-         |(56, 1, 44, 20220192, 43688445, 29626543, 48220881),
-         |(57, 1, 28, 22380526, 41234486, 28558081, 44234923),
-         |(58, 1, 17, 20463150, 40842727, 22952377, 42320260),
-         |(59, 1, 21, 20070700, 41847110, 21775050, 43272050),
-         |(60, 1, 18, 18450000, 41877550, 20339800, 43523840),
-         |(61, 1, 22, 15750026, 42650000, 19599760, 45233777),
-         |(62, 3, 87, 6749955, 36619987, 18480247, 47115393),
-         |(63, 1, 42, 13656976, 42479991, 19390476, 46503751),
-         |(64, 1, 18, 13698110, 45452316, 16564808, 46852386),
-         |(65, 1, 46, 18829820, 42245224, 22986019, 46171730),
-         |(66, 1, 31, 16202297, 45759481, 22710531, 48623854),
-         |(67, 1, 33, 16879983, 47758429, 22558138, 49571574),
-         |(68, 1, 35, 12240111, 48555305, 18853144, 51117268),
-         |(69, 1, 37, 9479970, 46431817, 16979667, 49039074),
-         |(70, 1, 24, 6022609, 45776948, 10442701, 47830828),
-         |(71, 1, 58, 5988658, 47302488, 15016996, 54983104),
-         |(72, 1, 7, 5674052, 49442667, 6242751, 50128052),
-         |(73, 1, 15, 2513573, 49529484, 6156658, 51475024),
-         |(74, 2, 55, -4592350, 41380007, 9560016, 51148506),
-         |(75, 1, 22, 19304486, 39624998, 21020040, 42688247),
-         |(76, 1, 31, 7524482, 30307556, 11488787, 37349994),
-         |(77, 1, 62, -8684400, 19057364, 11999506, 37118381),
-         |(78, 1, 56, 9319411, 19580470, 25164820, 33136996),
-         |(79, 1, 42, 24700070, 22000000, 36866230, 31585680),
-         |(80, 1, 30, 38792341, 29099025, 48567971, 37385264),
-         |(81, 1, 27, 35700798, 32312938, 42349591, 37229873),
-         |(82, 1, 11, 35126053, 33089039, 36611750, 34644914),
-         |(83, 1, 19, 34922603, 29197495, 39195468, 33378686),
-         |(84, 1, 9, 34927408, 31353435, 35545665, 32532511),
-         |(85, 1, 23, 34265433, 29501326, 35836397, 33277426),
-         |(86, 1, 15, 32256667, 34571869, 34004881, 35173125),
-         |(87, 1, 16, 32731780, 35000345, 34576474, 35671596),
-         |(88, 2, 54, 20150016, 34919988, 26604196, 41826905),
-         |(89, 2, 67, 26043351, 35821535, 44793990, 42141485),
-         |(90, 2, 44, 44793990, 38270378, 50392821, 41860675),
-         |(91, 1, 20, 43582746, 38741201, 46505720, 41248129),
-         |(92, 1, 75, 44109225, 25078237, 63316632, 39713003),
-         |(93, 1, 54, 52502460, 35270664, 66546150, 42751551),
-         |(94, 1, 41, 67442220, 36738171, 74980002, 40960213),
-         |(95, 1, 35, 69464887, 39279463, 80259990, 43298339),
-         |(96, 1, 69, 60528430, 29318572, 75158028, 38486282),
-         |(97, 1, 66, 60874248, 23691965, 77837451, 37133031),
-         |(98, 1, 23, 80088425, 26397898, 88174804, 30422717),
-         |(99, 1, 136, 68176645, 7965535, 97402561, 35494010),
-         |(100, 1, 9, 46568713, 28526063, 48416094, 30059070),
-         |(101, 1, 76, 34632336, 16347891, 55666659, 32161009),
-         |(102, 1, 9, 50743911, 24556331, 51606700, 26114582),
-         |(103, 1, 22, 51579519, 22496948, 56396847, 26055464),
-         |(104, 2, 47, 52000010, 16651050, 59808060, 26395934),
-         |(105, 1, 44, 42604873, 12585950, 53108573, 19000003),
-         |(106, 1, 24, 42558760, 7996877, 48948206, 11462040),
-         |(107, 1, 10, 79695167, 5968370, 81787959, 9824078),
-         |(108, 1, 36, 40981050, -1683250, 51133870, 12024640),
-         |(109, 1, 37, 33893569, -4676770, 41855083, 5506000),
-         |(110, 1, 27, 29579466, -1443322, 35035990, 4249885),
-         |(111, 1, 63, 23886980, 3509170, 35298007, 12248008),
-         |(112, 1, 59, 32954180, 3422060, 47789420, 14959430),
-         |(113, 1, 15, 41661760, 10926879, 43317852, 12699639),
-         |(114, 1, 28, 36323189, 12455416, 43081226, 17998307),
-         |(115, 1, 79, 21936810, 8619730, 38410090, 22000000),
-         |(116, 1, 58, 13540394, 7421925, 23886890, 23409720),
-         |(117, 1, 58, 295646, 11660167, 15903247, 23471668),
-         |(118, 1, 19, -49785, 5928837, 1865241, 11018682),
-         |(119, 1, 25, 772336, 6142158, 3797112, 12235636),
-         |(120, 1, 58, 2691702, 4240594, 14577178, 13865924),
-         |(121, 1, 61, 8488816, 1727673, 16012851, 12859396),
-         |(122, 1, 62, 14459407, 2267640, 27374226, 11142395),
-         |(123, 1, 49, 11093773, -5037987, 18453065, 3728197),
-         |(124, 1, 31, 8797996, -3978827, 14425456, 2326758),
-         |(125, 1, 7, 9305613, 1010119, 11285079, 2283866),
-         |(126, 1, 22, -13246550, 6785917, -10230094, 10046984),
-         |(127, 1, 27, -11438779, 4355755, -7539715, 8541055),
-         |(128, 1, 25, -3244370, 4710462, 1060122, 11098341),
-         |(129, 1, 46, -8602880, 4338288, -2562190, 10524061),
-         |(130, 1, 39, -5470565, 9610835, 2177108, 15116158),
-         |(131, 1, 76, -12170750, 10096361, 4270210, 24974574),
-         |(132, 1, 44, -17625043, 12332090, -11467899, 16598264),
-         |(133, 1, 16, -16841525, 13130284, -13844963, 13876492),
-         |(134, 1, 19, -16677452, 11040412, -13700476, 12628170),
-         |(135, 1, 70, -15130311, 7309037, -7832100, 12586183),
-         |(136, 1, 26, -58044694, 1817667, -53958045, 6025291),
-         |(137, 1, 19, -54524754, 2053389, -51657797, 5756548),
-         |(138, 1, 40, -61410303, 1268088, -56539386, 8367035),
-         |(139, 1, 92, -73304952, 724452, -59758285, 12162307),
-         |(140, 1, 100, -78990935, -4298187, -66876327, 12437303),
-         |(141, 1, 52, -82965783, 7220541, -77242566, 9611610),
-         |(142, 1, 36, -85941725, 8225028, -82546196, 11217119),
-         |(143, 1, 52, -87668493, 10726839, -83147219, 15016267),
-         |(144, 1, 20, -90095555, 13149017, -87723503, 14424133),
-         |(145, 1, 57, -89353326, 12984686, -83147219, 16005406),
-         |(146, 1, 20, -89229122, 15886938, -88106813, 18499982),
-         |(147, 1, 11, -78337719, 17701116, -76199659, 18524218),
-         |(148, 1, 26, -71945112, 17598564, -68317943, 19884911),
-         |(149, 1, 21, -74458034, 18030993, -71624873, 19915684),
-         |(150, 1, 9, -67242428, 17946553, -65591004, 18520601),
-         |(151, 1, 8, -61950000, 10000000, -60895000, 10890000),
-         |(152, 3, 21, -78980000, 23710000, -77000000, 27040000),
-         |(153, 1, 42, -84974911, 19855481, -74178025, 23188611),
-         |(154, 1, 86, -64884978, 32246271, -64646202, 32388444),
-         |(155, 1, 28, -17063423, 20999752, -8665124, 27656426),
-         |(156, 1, 39, -17063423, 14616834, -4923337, 27395744),
-         |(157, 1, 64, -17020428, 21420734, -1124551, 35759988),
-         |(158, 1, 33, -9526571, 36838269, -6389088, 42280469),
-         |(159, 1, 51, -9392884, 35946850, 3039484, 43748338),
-         |(160, 1, 13, -9977086, 51669301, -6032985, 55131622),
-         |(161, 2, 56, -7572168, 49960000, 1681531, 58635000),
-         |(162, 13, 598, -180000000, 41151416, 180000000, 81250400),
-         |(163, 1, 20, -24326184, 63496383, -13609732, 66526792),
-         |(164, 1, 132, -73297000, 60036760, -12208550, 83645130),
-         |(165, 10, 444, -171791111, 18916190, -66964660, 71357764),
-         |(166, 30, 795, -140997780, 41675105, -52648099, 83233240),
-         |(167, 1, 170, -117127760, 14538829, -86811982, 32720830),
-         |(168, 1, 35, -92229249, 13735338, -88225023, 17819326),
-         |(169, 1, 33, -80967765, -4959129, -75233723, 1380924),
-         |(170, 1, 76, -81410943, -18347975, -68665080, -57205),
-         |(171, 1, 60, -69590424, -22872919, -57498371, -9761988),
-         |(172, 1, 203, -73987235, -33768378, -34729993, 5244486),
-         |(173, 3, 22, -180000000, -18287990, 180000000, -16020882),
-         |(174, 2, 121, -73415436, -55250000, -53628349, -21832310),
-         |(175, 1, 21, -58427074, -34952647, -53209589, -30109686),
-         |(176, 1, 33, -62685057, -27548499, -54292960, -19342747),
-         |(177, 2, 114, -75644395, -55611830, -66959920, -17580012),
-         |(178, 1, 10, -61200000, -52300000, -57750000, -51100000)
-         |) t(fid, n_rings, n_verts, minx_int, miny_int, maxx_int, maxy_int)
-         |ORDER BY fid""".stripMargin,
-
-    // GeoPackage reader: VALUES mirror from an independent python sqlite3 +
-    // struct WKB decode of the Oregon land layer
-    "q_gpkg_read" ->
-      s"""SELECT CAST(ring AS BIGINT) AS ring, CAST(n_pts AS BIGINT) AS n_pts,
-         |  CAST(minx_int AS BIGINT) AS minx_int, CAST(miny_int AS BIGINT) AS miny_int,
-         |  CAST(maxx_int AS BIGINT) AS maxx_int, CAST(maxy_int AS BIGINT) AS maxy_int
-         |FROM (VALUES
-         |(0, 11, 7309755871, 964727631, 7316567819, 974135700),
-         |(1, 27, 7410985120, 934776169, 7429985724, 952762850),
-         |(2, 20, 7448876367, 941273588, 7459517968, 951672402),
-         |(3, 2437, 7112105727, -609888658, 9235062224, 954330271),
-         |(4, 13, 7398171888, 932470863, 7410244086, 943612513),
-         |(5, 17, 7629232359, 715828410, 7647013554, 727886410),
-         |(6, 23, 7677244034, 699262717, 7698843805, 707102039),
-         |(7, 27, 7097575799, -298571671, 7106676450, -286302701),
-         |(8, 25, 7122229387, -425163462, 7134295529, -417641231)
-         |) t(ring, n_pts, minx_int, miny_int, maxx_int, maxy_int)
-         |ORDER BY ring""".stripMargin,
-
-    // GeoTIFF reader: VALUES mirror from an independent python struct
-    // decode of the 2x2 wgs84 fixture (pixels + origin + pixel scale)
-    "q_gtiff_read" ->
-      s"""SELECT CAST(cx AS BIGINT) AS cx, CAST(cy AS BIGINT) AS cy,
-         |  CAST(v AS BIGINT) AS v, CAST(x0_int AS BIGINT) AS x0_int,
-         |  CAST(y1_int AS BIGINT) AS y1_int, CAST(cell_int AS BIGINT) AS cell_int
-         |FROM (VALUES
-         |(0, 0, 0, -180, 90, 180), (1, 0, 64, -180, 90, 180),
-         |(0, 1, 128, -180, 90, 180), (1, 1, 255, -180, 90, 180)
-         |) t(cx, cy, v, x0_int, y1_int, cell_int)
-         |ORDER BY cy, cx""".stripMargin,
-
-    // KML/KMZ reader: VALUES mirror from an independent python zipfile +
-    // ElementTree decode of the Albania placemarks
-    "q_kml_read" ->
-      s"""SELECT CAST(idx AS BIGINT) AS idx, name,
-         |  CAST(lon_int AS BIGINT) AS lon_int, CAST(lat_int AS BIGINT) AS lat_int
-         |FROM (VALUES
-         |(0, 'KE-839', 20250000, 42050000),
-         |(1, 'RE-306', 20616700, 40500000),
-         |(2, 'GR-4', 20000000, 40883300),
-         |(3, 'PA-1', 20000000, 41033300),
-         |(4, 'VL-1127', 20483300, 42216700),
-         |(5, 'VA-2', 20050000, 39916700),
-         |(6, 'KO-10', 19666700, 40750000),
-         |(7, 'DIV-265', 19600000, 40950000),
-         |(8, 'DIV-11', 19616700, 40966700),
-         |(9, 'KUC-8', 19983300, 40816700),
-         |(10, 'FR-44', 19533300, 40633300),
-         |(11, 'BUL-4', 20216700, 41450000),
-         |(12, 'BUT-1', 20066700, 39700000),
-         |(13, 'DIV-33', 19600000, 40966700),
-         |(14, 'KM-1', 19700000, 40866700),
-         |(15, 'PR-1', 20150000, 40533300),
-         |(16, 'BUB-6', 19650000, 40766700),
-         |(17, 'MA-1', 19666700, 40716700),
-         |(18, 'KR-18', 19533300, 41116700),
-         |(19, 'KR-10', 19516700, 41150000),
-         |(20, 'CA-12', 19716700, 40583300),
-         |(21, 'AR-18', 19633300, 40800000),
-         |(22, 'AM-8', 19750000, 40400000),
-         |(23, 'VU-57', 20050000, 39900000),
-         |(24, 'SEM-1', 19433300, 40833300),
-         |(25, 'MO-31', 19733300, 40550000),
-         |(26, 'CA-17', 19733300, 40583300),
-         |(27, 'KOM-967', 19766700, 42083300),
-         |(28, 'SEL-4', 19666700, 40533300),
-         |(29, 'PE-30', 19800000, 40983300),
-         |(30, 'AM-8', 19750000, 40400000),
-         |(31, 'RU-M', 19766700, 41766700),
-         |(32, 'ZV-3', 19400000, 40533300),
-         |(33, 'PER-589', 20000000, 41716700),
-         |(34, 'GER-6', 19650000, 40433300),
-         |(35, 'GOR-1', 20000000, 40783300),
-         |(36, 'AMA-1', 19750000, 40350000),
-         |(37, 'AR-18', 19633300, 40800000),
-         |(38, 'BALL-27', 19800000, 40566700),
-         |(39, 'PO-3', 19400000, 40700000),
-         |(40, 'GAL-2', 20133300, 40950000),
-         |(41, 'ISH-1B', 19683300, 41500000),
-         |(42, 'VU-14', 20100000, 39883300),
-         |(43, 'BALL-50', 19550000, 41066700),
-         |(44, 'AM-8', 19750000, 40400000),
-         |(45, 'HY-1', 19700000, 40400000),
-         |(46, 'DEL-4', 20133300, 39933300),
-         |(47, 'VL-9', 19550000, 40450000),
-         |(48, 'LA-2', 19883300, 41333300),
-         |(49, 'ME-2', 20083300, 40350000),
-         |(50, 'TH-547', 20266700, 41333300),
-         |(51, 'PO-3', 19400000, 40700000),
-         |(52, 'GJE-2', 20516700, 42116700),
-         |(53, 'VL-9', 19550000, 40450000),
-         |(54, 'VE-1', 19750000, 42566700),
-         |(55, 'VL-9', 19550000, 40450000),
-         |(56, 'DEL-4', 20133300, 39933300),
-         |(57, 'TAR-1', 19466700, 42033300),
-         |(58, 'VA-2', 20050000, 39916700),
-         |(59, 'VU-30', 20066700, 39883300),
-         |(60, 'NO-1', 20200000, 40150000),
-         |(61, 'KAL-3', 20166700, 39816700),
-         |(62, 'ER-2', 20116700, 40133300)
-         |) t(idx, name, lon_int, lat_int)
-         |ORDER BY idx""".stripMargin,
-
-    // feature getters: closed forms over the same integer-valued rects
-    "q_each_geom" -> {
-      val PI = dl(math.Pi)
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 40 AS g FROM pts),
-         |r AS (SELECT g, CAST(g % 7 + 2 AS DOUBLE) AS w, CAST(g % 5 + 3 AS DOUBLE) AS h
-         |  FROM gs),
-         |m AS (SELECT g, w, h, w * h AS area, 2 * w + 2 * h AS p FROM r)
-         |SELECT g,
-         |  CAST(floor(area * 100.0) AS BIGINT) AS area_int,
-         |  CAST(floor(p * 100.0) AS BIGINT) AS perim_int,
-         |  CAST(floor(area * $PI * 4.0 / (p * p) * 1000000000.0) AS BIGINT) AS compact_int,
-         |  CAST(w AS BIGINT) AS bw, CAST(h AS BIGINT) AS bh,
-         |  h >= 3.5 AS contains_p
-         |FROM m ORDER BY g""".stripMargin
-    },
-
-    // DMS: integer milliarcsecond split -> exact string; parse re-derives
-    // the decimal degrees from the very string components
-    "q_each_dms" ->
-      s"""WITH $ptsSql,
-         |ll AS (SELECT id, x * 3.6 - 180.0 AS lon FROM pts),
-         |t AS (SELECT id, lon,
-         |  CAST(floor(abs(lon) * 3600000.0 + 0.5) AS BIGINT) AS r FROM ll),
-         |u AS (SELECT id, lon,
-         |  (r // 60000) // 60 AS d, (r // 60000) % 60 AS m,
-         |  printf('%.3f', CAST(r % 60000 AS DOUBLE) / 1000.0) AS secs FROM t),
-         |v AS (SELECT id, lon,
-         |  (CASE WHEN lon < 0 THEN '-' ELSE '' END) || CAST(d AS VARCHAR) || '°'
-         |    || CAST(m AS VARCHAR) || CHR(39) || secs AS dms,
-         |  CAST(d AS DOUBLE) + CAST(m AS DOUBLE) / 60
-         |    + CAST(secs AS DOUBLE) / 3600 AS mag FROM u)
-         |SELECT id, dms,
-         |  CAST(floor((CASE WHEN lon < 0 THEN -mag ELSE mag END) * 1000000.0) AS BIGINT)
-         |    AS back_int,
-         |  floor(lon * 100.0 + 0.5) / 100.0 AS lon_r2
-         |FROM v ORDER BY id""".stripMargin,
-
-    // world batch 2 — same constant-folded op order as the Scala kernels
-    "q_proj_world2" -> {
-      val D2R = dl(Crs.D2R)
-      val R = dl(Crs.A)
-      val cosTs = dl(math.cos(30.0 * Crs.D2R))
-      val cosPhi1 = dl(2.0 / math.Pi)
-      val lam = s"(lon * $D2R)" // lon0 = 0: (lonDeg - 0.0) stays lonDeg... see note
-      val phi = s"(lat * $D2R)"
-      // NOTE: Scala computes (lonDeg - lon0Deg) with lon0Deg = 0.0 — the
-      // subtraction by zero is exact, so the mirror may fold it away
-      val nePoly =
-        s"(${dl(0.8707)} - ${dl(0.131979)} * phi2 + phi4 * (${dl(-0.013791)} " +
-          s"+ phi4 * (${dl(0.003971)} * phi2 - ${dl(0.001529)} * phi4)))"
-      val neY =
-        s"(${dl(1.007226)} + phi2 * (${dl(0.015085)} + phi4 * (${dl(-0.044475)} " +
-          s"+ ${dl(0.028874)} * phi2 - ${dl(0.005916)} * phi4)))"
-      val sinca = "(CASE WHEN alpha = 0.0 THEN 1.0 ELSE sin(alpha) / alpha END)"
-      s"""WITH $ptsSql,
-         |ll AS (SELECT id, x * 3.6 - 180.0 AS lon, y * 1.7 - 85.0 AS lat FROM pts),
-         |t1 AS (SELECT id, lon, lat, (lon - 0.0) * $D2R AS lam, $phi AS phiv,
-         |  $phi * $phi AS phi2 FROM ll),
-         |t2 AS (SELECT *, phi2 * phi2 AS phi4,
-         |  acos(cos(phiv) * cos(lam / 2.0)) AS alpha FROM t1)
-         |SELECT id,
-         |  CAST(floor((lam * $cosTs * $R) * 100.0) AS BIGINT) AS eqc_x,
-         |  CAST(floor((phiv * $R) * 100.0) AS BIGINT) AS eqc_y,
-         |  CAST(floor((lam * $cosTs * $R) * 100.0) AS BIGINT) AS cea_x,
-         |  CAST(floor((sin(phiv) / $cosTs * $R) * 100.0) AS BIGINT) AS cea_y,
-         |  CAST(floor(($R * lam * $nePoly) * 100.0) AS BIGINT) AS ne_x,
-         |  CAST(floor(($R * phiv * $neY) * 100.0) AS BIGINT) AS ne_y,
-         |  CAST(floor(($R * 0.5 * (lam * $cosPhi1
-         |    + 2.0 * cos(phiv) * sin(lam / 2.0) / $sinca)) * 100.0) AS BIGINT) AS wt_x,
-         |  CAST(floor(($R * 0.5 * (phiv + sin(phiv) / $sinca)) * 100.0) AS BIGINT) AS wt_y
-         |FROM t2 ORDER BY id""".stripMargin
-    },
-
-    // azimuthal triple: per projection, the clip-angle filter and the
-    // spherical forward are mirrored with the same constant folding and
-    // left-associated op order as the Scala kernels
-    "q_proj_azimuthal" -> {
-      val D2R = dl(Crs.D2R)
-      def leg(name: String, lat0: Double, lon0: Double, angle: Double,
-              xExpr: String => String, yExpr: String => String): String = {
-        val sinP0 = dl(math.sin(lat0 * Crs.D2R))
-        val cosP0 = dl(math.cos(lat0 * Crs.D2R))
-        val thr = dl(math.cos(angle * Crs.D2R))
-        val lam = s"((lon - ${dl(lon0)}) * $D2R)"
-        val phi = s"(lat * $D2R)"
-        // shared trig sub-terms, spelled exactly like the Scala kernels
-        val core = s"($cosP0 * sin($phi) - $sinP0 * cos($phi) * cos($lam))"
-        val keep = s"$sinP0 * sin($phi) + $cosP0 * cos($phi) * cos($lam) >= $thr"
-        s"""SELECT id, '$name' AS proj,
-           |  CAST(floor((${xExpr(lam)}) * 1000.0) AS BIGINT) AS px_int,
-           |  CAST(floor((${yExpr(core)}) * 1000.0) AS BIGINT) AS py_int
-           |FROM ll WHERE $keep""".stripMargin
-      }
-      val R = dl(Crs.A)
-      def trig(lat0: Double, lon0: Double): (String, String, String, String) = {
-        val sinP0 = dl(math.sin(lat0 * Crs.D2R))
-        val cosP0 = dl(math.cos(lat0 * Crs.D2R))
-        (sinP0, cosP0, s"((lon - ${dl(lon0)}) * $D2R)", s"(lat * $D2R)")
-      }
-      def orthoLeg =
-        leg("ortho", 15.0, 30.0, 89.85,
-          lam => s"$R * cos(lat * $D2R) * sin($lam)",
-          core => s"$R * $core")
-      def gnomLeg = {
-        val (sinP0, cosP0, lam, phi) = trig(40.0, -100.0)
-        val cosC = s"($sinP0 * sin($phi) + $cosP0 * cos($phi) * cos($lam))"
-        leg("gnom", 40.0, -100.0, 60.0,
-          l => s"$R * cos(lat * $D2R) * sin($l) / $cosC",
-          core => s"$R * $core / $cosC")
-      }
-      def laeaLeg = {
-        val (sinP0, cosP0, lam, phi) = trig(-20.0, 60.0)
-        val k = s"sqrt(2.0 / (1.0 + $sinP0 * sin($phi) + $cosP0 * cos($phi) * cos($lam)))"
-        leg("laea", -20.0, 60.0, 179.0,
-          l => s"$R * $k * cos(lat * $D2R) * sin($l)",
-          core => s"$R * $k * $core")
-      }
-      s"""WITH $ptsSql,
-         |ll AS (SELECT id, x * 3.6 - 180.0 AS lon, y * 1.7 - 85.0 AS lat FROM pts)
-         |SELECT * FROM (
-         |$gnomLeg
-         |UNION ALL
-         |$laeaLeg
-         |UNION ALL
-         |$orthoLeg
-         |) ORDER BY proj, id""".stripMargin
-    },
-
-    // antimeridian path cut: crossings, part ids, vertex counts, and the
-    // exact linear-interpolated cut latitudes — pure arithmetic mirror
-    "q_proj_cut" ->
-      s"""WITH $ptsSql,
-         |v AS (SELECT id % 30 AS pid, id, x * 3.6 - 180.0 AS lon, y * 1.7 - 85.0 AS lat
-         |  FROM pts WHERE id >= 1 AND id <= 300),
-         |o AS (SELECT pid, id, lon, lat,
-         |  row_number() OVER (PARTITION BY pid ORDER BY id) AS seq FROM v),
-         |seg AS (SELECT a.pid, a.seq, a.lon AS lon1, a.lat AS lat1,
-         |    b.lon AS lon2, b.lat AS lat2,
-         |    CASE WHEN (a.lon - (-30.0) > 0 AND b.lon - (-30.0) < 0)
-         |      OR (a.lon - (-30.0) < 0 AND b.lon - (-30.0) > 0) THEN 1 ELSE 0 END AS crossing
-         |  FROM o a JOIN o b ON a.pid = b.pid AND b.seq = a.seq + 1),
-         |cr AS (SELECT pid, seq,
-         |    lat1 + ((-30.0) - lon1) / (lon2 - lon1) * (lat2 - lat1) AS clat,
-         |    row_number() OVER (PARTITION BY pid ORDER BY seq) AS cnum
-         |  FROM seg WHERE crossing = 1),
-         |pv AS (SELECT o.pid, o.seq, o.lat,
-         |    CAST(coalesce(SUM(s.crossing) OVER (PARTITION BY o.pid ORDER BY o.seq), 0)
-         |      AS BIGINT) AS part
-         |  FROM o LEFT JOIN seg s ON s.pid = o.pid AND s.seq = o.seq - 1),
-         |mx AS (SELECT pid, max(part) AS maxp FROM pv GROUP BY pid),
-         |parts AS (SELECT pid, part, count(*) AS norig,
-         |    min(CASE WHEN seq = (SELECT min(seq) FROM pv p2
-         |      WHERE p2.pid = pv.pid AND p2.part = pv.part) THEN lat END) AS lat_first
-         |  FROM pv GROUP BY pid, part)
-         |SELECT p.pid, p.part,
-         |  CAST(p.norig + (CASE WHEN p.part > 0 THEN 1 ELSE 0 END)
-         |    + (CASE WHEN p.part < m.maxp THEN 1 ELSE 0 END) AS BIGINT) AS n_vertices,
-         |  CAST(floor((CASE WHEN p.part = 0 THEN p.lat_first ELSE c.clat END)
-         |    * 1000000.0) AS BIGINT) AS lat0_int
-         |FROM parts p JOIN mx m USING (pid)
-         |LEFT JOIN cr c ON c.pid = p.pid AND c.cnum = p.part
-         |ORDER BY p.pid, p.part""".stripMargin,
-
-    "q_rotate" -> {
-      val D2R = dl(Crs.D2R); val PI = dl(math.Pi); val TWOPI = dl(2.0 * math.Pi)
-      val A = dl(25.0 * Crs.D2R)
-      val COSB = dl(math.cos(15.0 * Crs.D2R)); val SINB = dl(math.sin(15.0 * Crs.D2R))
-      val COSC = dl(math.cos(30.0 * Crs.D2R)); val SINC = dl(math.sin(30.0 * Crs.D2R))
-      val R2D = dl(Crs.R2D)
-      s"""WITH $ptsSql,
-         |ll AS (SELECT id, x * 3.6 - 180.0 AS lon, y * 1.7 - 85.0 AS lat FROM pts),
-         |r0 AS (SELECT id, lon * $D2R + $A AS lam0, lat * $D2R AS phi FROM ll),
-         |r1 AS (SELECT id, phi,
-         |  CASE WHEN lam0 > $PI THEN lam0 - $TWOPI
-         |       WHEN lam0 < -$PI THEN lam0 + $TWOPI ELSE lam0 END AS lam FROM r0),
-         |r2 AS (SELECT id, cos(lam) * cos(phi) AS x, sin(lam) * cos(phi) AS y,
-         |  sin(phi) AS z FROM r1),
-         |r3 AS (SELECT id, x, y, z, z * $COSB + x * $SINB AS k FROM r2)
-         |SELECT id,
-         |  CAST(floor(atan2(y * $COSC - k * $SINC, x * $COSB - z * $SINB) * $R2D
-         |    * 1000000.0) AS BIGINT) AS rlon_int,
-         |  CAST(floor(asin(k * $COSC + y * $SINC) * $R2D * 1000000.0) AS BIGINT) AS rlat_int
-         |FROM r3 ORDER BY id""".stripMargin
-    },
-
-    "q_poly_join_points" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |srcs(s_key, sx1, sy1, sx2, sy2) AS (VALUES
-         |  (100, 5, 5, 55, 55), (101, 45, 25, 95, 75), (102, 25, 45, 75, 95))
-         |SELECT cx * 100 + cy AS t_key, CAST(s_key AS BIGINT) AS s_key
-         |FROM cells CROSS JOIN srcs
-         |WHERE CAST(cx * 10 + 5 AS DOUBLE) >= sx1 AND CAST(cx * 10 + 5 AS DOUBLE) <= sx2
-         |  AND CAST(cy * 10 + 5 AS DOUBLE) >= sy1 AND CAST(cy * 10 + 5 AS DOUBLE) <= sy2
-         |ORDER BY t_key, s_key""".stripMargin,
-
-    "q_raster_blur" ->
-      s"""WITH $ptsSql,
-         |cnt AS (SELECT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |  CAST(floor(y / 10.0) AS BIGINT) AS cy, count(*) AS c
-         |  FROM pts GROUP BY 1, 2),
-         |g AS (SELECT gx.range AS cx, gy.range AS cy, COALESCE(cnt.c, 0) AS c
-         |  FROM range(10) gx CROSS JOIN range(10) gy
-         |  LEFT JOIN cnt ON cnt.cx = gx.range AND cnt.cy = gy.range)
-         |SELECT a.cx, a.cy, CAST(sum(bv.c) AS BIGINT) AS m
-         |FROM g a
-         |CROSS JOIN (VALUES (-1), (0), (1)) dxs(dx)
-         |CROSS JOIN (VALUES (-1), (0), (1)) dys(dy)
-         |JOIN g bv ON bv.cx = least(greatest(a.cx + dxs.dx, 0), 9)
-         |         AND bv.cy = least(greatest(a.cy + dys.dy, 0), 9)
-         |GROUP BY a.cx, a.cy
-         |ORDER BY a.cx, a.cy""".stripMargin,
-
-    "q_slice" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |srcs(s_key, sx1, sy1, sx2, sy2) AS (VALUES
-         |  (100, 5, 5, 55, 55), (101, 45, 25, 95, 75), (102, 25, 45, 75, 95)),
-         |ov AS (
-         |  SELECT cx * 100 + cy AS t_key, s_key,
-         |    greatest(least(cx * 10 + 10, sx2) - greatest(cx * 10, sx1), 0) *
-         |    greatest(least(cy * 10 + 10, sy2) - greatest(cy * 10, sy1), 0) AS a
-         |  FROM cells CROSS JOIN srcs)
-         |SELECT t_key, CAST(s_key AS BIGINT) AS s_key, CAST(1 AS BIGINT) AS n_rings,
-         |  CAST(floor(CAST(a AS DOUBLE) * 1000000.0) AS BIGINT) AS area_int
-         |FROM ov WHERE a > 0 ORDER BY t_key, s_key""".stripMargin,
-
-    "q_split_expr" ->
-      """SELECT p_brand AS layer, count(*) AS n, CAST(sum(p_partkey) AS BIGINT) AS key_sum
-        |FROM part GROUP BY p_brand ORDER BY layer""".stripMargin,
-
-    "q_info" ->
-      """SELECT * FROM (
-        |  SELECT 'p_partkey' AS col_name, 'bigint' AS dtype, count(p_partkey) AS n,
-        |    count(*) - count(p_partkey) AS n_null,
-        |    CAST(min(p_partkey) AS VARCHAR) AS min_s, CAST(max(p_partkey) AS VARCHAR) AS max_s
-        |  FROM part
-        |  UNION ALL
-        |  SELECT 'p_brand', 'string', count(p_brand), count(*) - count(p_brand),
-        |    CAST(min(p_brand) AS VARCHAR), CAST(max(p_brand) AS VARCHAR) FROM part
-        |  UNION ALL
-        |  SELECT 'p_type', 'string', count(p_type), count(*) - count(p_type),
-        |    CAST(min(p_type) AS VARCHAR), CAST(max(p_type) AS VARCHAR) FROM part)
-        |ORDER BY col_name""".stripMargin,
-
-    "q_classify_quantile" ->
-      """WITH asc0 AS (SELECT p_retailprice AS v,
-        |  row_number() OVER (ORDER BY p_retailprice) - 1 AS rnk,
-        |  count(*) OVER () AS n FROM part),
-        |brk AS (SELECT
-        |  max(CASE WHEN rnk = CAST(floor(1.0 * (CAST(n AS DOUBLE) / 5.0)) AS BIGINT) THEN v END) AS b1,
-        |  max(CASE WHEN rnk = CAST(floor(2.0 * (CAST(n AS DOUBLE) / 5.0)) AS BIGINT) THEN v END) AS b2,
-        |  max(CASE WHEN rnk = CAST(floor(3.0 * (CAST(n AS DOUBLE) / 5.0)) AS BIGINT) THEN v END) AS b3,
-        |  max(CASE WHEN rnk = CAST(floor(4.0 * (CAST(n AS DOUBLE) / 5.0)) AS BIGINT) THEN v END) AS b4
-        |  FROM asc0)
-        |SELECT p_partkey, CAST(
-        |  (CASE WHEN p_retailprice >= b1 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN p_retailprice >= b2 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN p_retailprice >= b3 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN p_retailprice >= b4 THEN 1 ELSE 0 END) AS BIGINT) AS cls
-        |FROM part CROSS JOIN brk ORDER BY p_partkey""".stripMargin,
-
-    "q_classify_hybrid" ->
-      """WITH asc0 AS (SELECT l_extendedprice AS v,
-        |  row_number() OVER (ORDER BY l_extendedprice) - 1 AS rnk,
-        |  count(*) OVER () AS n FROM lineitem),
-        |qb AS (SELECT
-        |  max(CASE WHEN rnk = CAST(floor(1.0 * (CAST(n AS DOUBLE) / 6.0)) AS BIGINT) THEN v END) AS q1,
-        |  max(CASE WHEN rnk = CAST(floor(5.0 * (CAST(n AS DOUBLE) / 6.0)) AS BIGINT) THEN v END) AS q5
-        |  FROM asc0),
-        |mm AS (SELECT min(v) AS mn, max(v) AS mx
-        |  FROM asc0 CROSS JOIN qb WHERE v >= q1 AND v < q5),
-        |brk AS (SELECT q1 AS b1,
-        |  mn + 1.0 * ((mx - mn) / 4.0) AS b2,
-        |  mn + 2.0 * ((mx - mn) / 4.0) AS b3,
-        |  mn + 3.0 * ((mx - mn) / 4.0) AS b4,
-        |  q5 AS b5 FROM qb CROSS JOIN mm)
-        |SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber, CAST(
-        |  (CASE WHEN l_extendedprice >= b1 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN l_extendedprice >= b2 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN l_extendedprice >= b3 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN l_extendedprice >= b4 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN l_extendedprice >= b5 THEN 1 ELSE 0 END) AS BIGINT) AS cls
-        |FROM lineitem CROSS JOIN brk
-        |ORDER BY l_orderkey, l_linenumber, cls""".stripMargin,
-
-    "q_colorize" ->
-      """WITH mm AS (SELECT min(p_retailprice) AS mn, max(p_retailprice) AS mx FROM part),
-        |brk AS (SELECT
-        |  mn + 1.0 * ((mx - mn) / 5.0) AS b1,
-        |  mn + 2.0 * ((mx - mn) / 5.0) AS b2,
-        |  mn + 3.0 * ((mx - mn) / 5.0) AS b3,
-        |  mn + 4.0 * ((mx - mn) / 5.0) AS b4 FROM mm),
-        |cls AS (SELECT p_partkey, p_brand,
-        |  (CASE WHEN p_retailprice >= b1 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN p_retailprice >= b2 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN p_retailprice >= b3 THEN 1 ELSE 0 END) +
-        |  (CASE WHEN p_retailprice >= b4 THEN 1 ELSE 0 END) AS c
-        |  FROM part CROSS JOIN brk)
-        |SELECT p_partkey,
-        |  CASE c WHEN 0 THEN '#fee' WHEN 1 THEN '#fcc' WHEN 2 THEN '#f99'
-        |         WHEN 3 THEN '#f66' ELSE '#f33' END AS seq_color,
-        |  CASE WHEN p_brand = 'Brand#13' THEN '#b13'
-        |       WHEN p_brand = 'Brand#23' THEN '#b23' ELSE '#oth' END AS cat_color
-        |FROM cls ORDER BY p_partkey""".stripMargin,
-
-    // forced 2-coloring of the 5x5 lattice: checkerboard parity
-    "q_classify_color" ->
-      """SELECT CAST(id AS BIGINT) AS id,
-        |  CAST(((id // 5) + (id % 5)) % 2 AS BIGINT) AS color_id
-        |FROM (SELECT unnest(range(0, 25)) AS id)
-        |ORDER BY id""".stripMargin,
-
-    // independent all-varchar re-read + expected conversions
-    "q_csv_types" ->
-      """SELECT County AS county, Voters_FIPS AS fips, Precinct AS precinct,
-        |  CAST(floor(TRY_CAST(Residence_Addresses_Latitude AS DOUBLE) * 1000000.0) AS BIGINT) AS lat_int,
-        |  CAST(floor(TRY_CAST(Residence_Addresses_Longitude AS DOUBLE) * 1000000.0) AS BIGINT) AS lon_int,
-        |  COALESCE(Residence_Addresses_LatLongAccuracy, '') AS acc
-        |FROM read_csv('/root/reference/test/data/text/empty_fields2.csv',
-        |  all_varchar=true, header=true)
-        |ORDER BY precinct""".stripMargin,
-
-    "q_csv_infer" ->
-      """SELECT STATE_ABBR AS abbr, STATE_NAME AS name,
-        |  CAST(trunc(TRY_CAST(STATE_FIPS AS DOUBLE)) AS BIGINT) AS fips,
-        |  CAST(trunc(TRY_CAST(POP2010 AS DOUBLE)) AS BIGINT) AS pop,
-        |  CAST(floor(TRY_CAST(POP10_SQMI AS DOUBLE) * 100.0) AS BIGINT) AS dens_int,
-        |  SUB_REGION AS region
-        |FROM read_csv('/root/reference/test/data/text/states.csv',
-        |  all_varchar=true, header=true)
-        |ORDER BY abbr""".stripMargin,
-
-    "q_clip_lines" ->
-      s"""WITH $ptsSql
-         |SELECT id,
-         |  CAST(round((least(x + 7.0, 70.0) - greatest(x, 20.0)) * 1000.0) AS BIGINT) AS len_int
-         |FROM pts
-         |WHERE y <> 20.0 AND y <> 60.0 AND x NOT IN (13.0, 20.0, 63.0, 70.0)
-         |  AND y > 20.0 AND y < 60.0
-         |  AND least(x + 7.0, 70.0) - greatest(x, 20.0) > 0.0
-         |ORDER BY id""".stripMargin,
-
-    "q_line_join" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |mid AS (SELECT id, (1.0 - 0.5) * x + 0.5 * (x + 5.0) AS mx,
-         |  (1.0 - 0.5) * y + 0.5 * (y + 3.0) AS my FROM pts),
-         |hits AS (
-         |  SELECT m.id, e.pk,
-         |    SUM(CASE WHEN ((e.ex1 > m.mx) <> (e.ex2 > m.mx))
-         |          AND e.ey1 + (m.mx - e.ex1) * (e.ey2 - e.ey1) / (e.ex2 - e.ex1) > m.my
-         |        THEN 1 ELSE 0 END) AS crossings
-         |  FROM mid m CROSS JOIN edges e
-         |  GROUP BY m.id, e.pk)
-         |SELECT id, CAST(pk AS BIGINT) AS poly_key FROM hits WHERE crossings % 2 = 1
-         |ORDER BY id, poly_key""".stripMargin,
-
-    "q_buffer_line" ->
-      s"""WITH $ptsSql
-         |SELECT id, CAST(floor((2.0 * (CAST(id % 3 + 1 AS DOUBLE) / 2.0) * CAST(id % 5 + 2 AS DOUBLE)
-         |  + 15.0 * (CAST(id % 3 + 1 AS DOUBLE) / 2.0) * (CAST(id % 3 + 1 AS DOUBLE) / 2.0) * sin(pi() / 15.0)) * 100.0)
-         |  AS BIGINT) AS area_int
-         |FROM pts ORDER BY id""".stripMargin,
-
-    "q_buffer_polygon" ->
-      s"""WITH $ptsSql
-         |SELECT id,
-         |  CAST(floor((36.0 + 24.0 * (CAST(id % 3 + 1 AS DOUBLE) / 2.0)
-         |    + 16.0 * (CAST(id % 3 + 1 AS DOUBLE) / 2.0) * (CAST(id % 3 + 1 AS DOUBLE) / 2.0) * sin(pi() / 16.0)) * 100.0)
-         |    AS BIGINT) AS dil_int,
-         |  CAST(round((6.0 - 2.0 * (CAST(id % 3 + 1 AS DOUBLE) / 2.0)) * (6.0 - 2.0 * (CAST(id % 3 + 1 AS DOUBLE) / 2.0))
-         |    * 100.0) AS BIGINT) AS ero_int
-         |FROM pts ORDER BY id""".stripMargin,
-
-    "q_innerlines" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |edges AS (
-         |  SELECT cx AS x1, cy AS y1, cx + 1 AS x2, cy AS y2 FROM cells
-         |  UNION ALL SELECT cx, cy + 1, cx + 1, cy + 1 FROM cells
-         |  UNION ALL SELECT cx, cy, cx, cy + 1 FROM cells
-         |  UNION ALL SELECT cx + 1, cy, cx + 1, cy + 1 FROM cells),
-         |ecnt AS (SELECT x1, y1, x2, y2, count(*) AS c FROM edges GROUP BY x1, y1, x2, y2)
-         |SELECT count(*) AS n_inner_edges FROM ecnt WHERE c = 2""".stripMargin,
-
-    "q_ring_area" ->
-      s"""WITH $oracleEdgesSql
-         |SELECT CAST(pk AS BIGINT) AS poly_key, CAST(ring AS BIGINT) AS ring,
-         |  CAST(floor(sum(ex1 * ey2 - ex2 * ey1) / 2.0 * 1000000.0) AS BIGINT) AS area_int
-         |FROM edges GROUP BY pk, ring ORDER BY ring""".stripMargin,
-
-    "q_split_grid" ->
-      s"""WITH $ptsSql
-         |SELECT CAST(floor(x / 20.0) AS BIGINT) AS grid_col,
-         |       CAST(floor(y / 20.0) AS BIGINT) AS grid_row, count(*) AS n
-         |FROM pts GROUP BY grid_col, grid_row ORDER BY grid_col, grid_row""".stripMargin,
-
-    "q_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |g AS (SELECT user_id, event_id, us,
-        |    CASE WHEN lag(us) OVER w IS NULL
-        |      OR us - lag(us) OVER w > 1800000000 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |s AS (SELECT user_id, us,
-        |    sum(is_new) OVER (PARTITION BY user_id ORDER BY us, event_id
-        |      ROWS UNBOUNDED PRECEDING) - 1 AS session
-        |  FROM g)
-        |SELECT user_id, CAST(session AS BIGINT) AS session, count(*) AS n_events,
-        |  min(us) AS start_us, max(us) AS end_us
-        |FROM s GROUP BY user_id, session
-        |ORDER BY user_id, session""".stripMargin,
-
-    "q_events_window" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        |  min(value) AS min_value, max(value) AS max_value
-        |FROM events GROUP BY hour, event_type ORDER BY hour, event_type""".stripMargin,
-
-    "q_dedup_exact" ->
-      """SELECT doc_id, n_chars FROM (
-        |  SELECT doc_id, n_chars,
-        |    row_number() OVER (PARTITION BY substr(text, 1, 30) ORDER BY doc_id) AS rn
-        |  FROM documents) WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "q_token_count" ->
-      """SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_quality" ->
-      """SELECT doc_id, CAST(floor((
-        |    least(CAST(length(text) AS DOUBLE) / 200.0, 1.0) * 0.4
-        |  + greatest(1.0 - (CAST(length(regexp_replace(text, '[a-zA-Z0-9\s]', '', 'g')) AS DOUBLE)
-        |      / greatest(CAST(length(text) AS DOUBLE), 1.0)) * 4.0, 0.0) * 0.3
-        |  + (CASE WHEN CAST(length(text) AS DOUBLE) / greatest(CAST(
-        |        CASE WHEN length(trim(text)) = 0 THEN 0
-        |             ELSE len(string_split_regex(trim(text), '\s+')) END AS DOUBLE), 1.0)
-        |      BETWEEN 3.0 AND 12.0 THEN 1.0 ELSE 0.3 END) * 0.3
-        |  ) * 1000000.0) AS BIGINT) AS q_int
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q_embed_dedup" ->
-      """WITH aug AS (
-        |  SELECT vec_id, embedding FROM embeddings
-        |  UNION ALL
-        |  SELECT vec_id + 1000000 AS vec_id,
-        |    list_transform(embedding, x -> CAST(x * CAST(2.0 AS FLOAT) AS FLOAT)) AS embedding
-        |  FROM embeddings WHERE vec_id % 4 = 0)
-        |SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        |FROM aug a JOIN aug b ON a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(CAST(a.embedding AS DOUBLE[]),
-        |        CAST(b.embedding AS DOUBLE[])) >= 0.95
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q_jaccard_pairs" ->
-      """WITH docs AS (
-        |  SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> x <> '') AS w
-        |  FROM documents WHERE doc_id < 300),
-        |sh AS (
-        |  SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
-        |    i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS s
-        |  FROM docs WHERE len(w) >= 3)
-        |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |  CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS inter,
-        |  CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS BIGINT) AS uni
-        |FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |WHERE len(list_intersect(a.s, b.s)) * 10 >=
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) * 3
-        |ORDER BY a_id, b_id""".stripMargin,
-
-    "q_ann_topk" ->
-      """WITH pairs AS (
-        |  SELECT a.vec_id AS id, b.vec_id AS neighbor_id,
-        |    list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])) AS score
-        |  FROM embeddings a CROSS JOIN embeddings b WHERE a.vec_id <> b.vec_id),
-        |ranked AS (
-        |  SELECT id, neighbor_id,
-        |    row_number() OVER (PARTITION BY id ORDER BY score DESC, neighbor_id) AS rnk
-        |  FROM pairs)
-        |SELECT id, CAST(rnk AS BIGINT) AS rnk, neighbor_id FROM ranked
-        |WHERE rnk <= 3 ORDER BY id, rnk""".stripMargin,
-
-    "q_clip_rect" -> clipRectSql,
-
-    "q_proj_world" -> projWorldSql,
-
-    // PIP against the reference's OWN GeoJSON twin of the NE shapefile —
-    // an independent data path for the same layer (full-precision twin;
-    // ShpTopoSpec separately asserts shp↔twin parity)
-    "q_ne_countries" ->
-      s"""WITH root AS (SELECT j FROM read_json_objects('/root/reference/test/data/ne/ne_110m_admin_0_scale_rank.json', format='unstructured') t(j)),
-         |f AS (SELECT unnest(range(0, CAST(json_array_length(json_extract(j, '$$.features')) AS BIGINT))) AS fid, j FROM root),
-         |g AS (SELECT fid, json_extract(j, '$$.features[' || fid || '].geometry') AS geom FROM f),
-         |gm AS (SELECT fid,
-         |    CASE WHEN json_extract_string(geom, '$$.type') = 'Polygon' THEN 1
-         |         ELSE CAST(json_array_length(json_extract(geom, '$$.coordinates')) AS BIGINT) END AS npoly,
-         |    json_extract_string(geom, '$$.type') AS gt, geom FROM g),
-         |polys AS (SELECT fid, gt, geom, unnest(range(0, npoly)) AS pj FROM gm),
-         |rings0 AS (SELECT fid,
-         |    CASE WHEN gt = 'Polygon' THEN json_extract(geom, '$$.coordinates')
-         |         ELSE json_extract(geom, '$$.coordinates[' || pj || ']') END AS poly FROM polys),
-         |rings AS (SELECT fid, unnest(range(0, CAST(json_array_length(poly) AS BIGINT))) AS rj, poly FROM rings0),
-         |ringarr AS (SELECT fid, json_extract(poly, '$$[' || rj || ']') AS ring FROM rings),
-         |eidx AS (SELECT fid, ring, unnest(range(0, CAST(json_array_length(ring) AS BIGINT) - 1)) AS i FROM ringarr),
-         |edges AS (SELECT fid,
-         |    CAST(json_extract(ring, '$$[' || i || '][0]') AS DOUBLE) AS ex1,
-         |    CAST(json_extract(ring, '$$[' || i || '][1]') AS DOUBLE) AS ey1,
-         |    CAST(json_extract(ring, '$$[' || (i + 1) || '][0]') AS DOUBLE) AS ex2,
-         |    CAST(json_extract(ring, '$$[' || (i + 1) || '][1]') AS DOUBLE) AS ey2
-         |  FROM eidx),
-         |$ptsSql,
-         |pll AS (SELECT id, x * 3.59 - 179.5 AS x, y * 1.69 - 84.5 AS y FROM pts),
-         |hits AS (SELECT p.id, e.fid,
-         |    SUM(CASE WHEN ((e.ex1 > p.x) <> (e.ex2 > p.x))
-         |          AND e.ey1 + (p.x - e.ex1) * (e.ey2 - e.ey1) / (e.ex2 - e.ex1) > p.y
-         |        THEN 1 ELSE 0 END) AS crossings
-         |  FROM pll p CROSS JOIN edges e GROUP BY p.id, e.fid)
-         |SELECT CAST(fid AS BIGINT) AS poly_key, count(*) AS n_points
-         |FROM hits WHERE crossings % 2 = 1 GROUP BY 1 ORDER BY poly_key""".stripMargin,
-
-    "q_simplify_dp" -> simplifyDpSql,
-
-    "q_proj_path" -> projPathSql,
-
-    "q_data_fill" -> dataFillSql,
-
-    // weighted variant: checkerboard nulls resolve in ONE weighted pooled
-    // round + one smoothing step (no null neighbors by parity), with exact
-    // integer edge weights — both phases mirrored closed-form
-    "q_data_fill_weighted" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy, min(id) AS min_id
-         |  FROM pts GROUP BY 1, 2),
-         |base AS (SELECT cx * 1000 + cy AS id,
-         |    CASE WHEN (cx + cy) % 2 = 0 THEN 'c' || CAST(min_id % 7 AS VARCHAR)
-         |         ELSE NULL END AS value,
-         |    cx, cy FROM cells),
-         |adj0 AS (SELECT a.id AS a, b.id AS b,
-         |    CAST(1 + (a.id * 31 + b.id * 17) % 23 AS DOUBLE) AS w
-         |  FROM base a JOIN base b
-         |  ON (abs(a.cx - b.cx) + abs(a.cy - b.cy)) = 1 AND a.id < b.id),
-         |adj AS (SELECT a, b, w FROM adj0 UNION ALL SELECT b AS a, a AS b, w FROM adj0),
-         |votes AS (SELECT u.id, fn.value AS nval, sum(w) AS vw
-         |  FROM base u JOIN adj ON adj.a = u.id
-         |  JOIN base fn ON fn.id = adj.b AND fn.value IS NOT NULL
-         |  WHERE u.value IS NULL GROUP BY u.id, fn.value),
-         |gkeys AS (SELECT id, array_to_string(list_sort(list(DISTINCT nval)), '~') AS gkey
-         |  FROM votes GROUP BY id),
-         |pooled AS (SELECT k.gkey, v.nval, sum(v.vw) AS gw
-         |  FROM votes v JOIN gkeys k USING (id) GROUP BY 1, 2),
-         |winners AS (SELECT gkey, nval FROM (
-         |    SELECT gkey, nval,
-         |      row_number() OVER (PARTITION BY gkey ORDER BY gw DESC, nval) AS rn
-         |    FROM pooled) WHERE rn = 1),
-         |f1 AS MATERIALIZED (SELECT b.id, b.value AS v0, coalesce(b.value, w2.nval) AS value
-         |  FROM base b LEFT JOIN (
-         |    SELECT k.id, w1.nval FROM gkeys k JOIN winners w1 USING (gkey)) w2 USING (id)),
-         |sv AS (SELECT f.id, fn.value AS nval, sum(adj.w) AS vw
-         |  FROM f1 f JOIN adj ON adj.a = f.id
-         |  JOIN f1 fn ON fn.id = adj.b AND fn.value IS NOT NULL
-         |  WHERE f.v0 IS NULL GROUP BY f.id, fn.value),
-         |sw AS (SELECT id, nval FROM (
-         |    SELECT id, nval,
-         |      row_number() OVER (PARTITION BY id ORDER BY vw DESC, nval) AS rn,
-         |      count(*) OVER (PARTITION BY id) AS nv
-         |    FROM sv) WHERE rn = 1 AND nv >= 2)
-         |SELECT f1.id, coalesce(sw.nval, f1.value) AS value
-         |FROM f1 LEFT JOIN sw USING (id) ORDER BY id""".stripMargin,
-
-    // bbox + pct offsets + expand-only aspect fill-out, same op order
-    "q_rectangles" ->
-      s"""WITH v0 AS (SELECT ring, CAST(x AS DOUBLE) AS x, CAST(y AS DOUBLE) AS y
-         |  FROM (VALUES ${Synthetic.ringVertsSqlValues(Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0))}) t(pk, ring, i, x, y)),
-         |bb AS (SELECT ring, min(x) AS x0, min(y) AS y0, max(x) AS x1, max(y) AS y1
-         |  FROM v0 GROUP BY ring),
-         |off AS (SELECT ring,
-         |    x0 - 0.1 * (x1 - x0) AS bx0, y0 - 0.05 * (y1 - y0) AS by0,
-         |    x1 + 0.1 * (x1 - x0) AS bx1, y1 + 0.05 * (y1 - y0) AS by1
-         |  FROM bb),
-         |ar AS (SELECT ring, bx0, by0, bx1, by1,
-         |    (bx1 - bx0) / (by1 - by0) AS r FROM off),
-         |fit AS (SELECT ring,
-         |    CASE WHEN r < 1.5 THEN (bx0 + bx1) / 2.0 - (by1 - by0) * 1.5 / 2.0 ELSE bx0 END AS bx0,
-         |    CASE WHEN r > 1.5 THEN (by0 + by1) / 2.0 - (bx1 - bx0) / 1.5 / 2.0 ELSE by0 END AS by0,
-         |    CASE WHEN r < 1.5 THEN (bx0 + bx1) / 2.0 + (by1 - by0) * 1.5 / 2.0 ELSE bx1 END AS bx1,
-         |    CASE WHEN r > 1.5 THEN (by0 + by1) / 2.0 + (bx1 - bx0) / 1.5 / 2.0 ELSE by1 END AS by1
-         |  FROM ar)
-         |SELECT CAST(ring AS BIGINT) AS ring_id,
-         |  CAST(floor(bx0 * 1000000.0) AS BIGINT) AS x0_int,
-         |  CAST(floor(by0 * 1000000.0) AS BIGINT) AS y0_int,
-         |  CAST(floor(bx1 * 1000000.0) AS BIGINT) AS x1_int,
-         |  CAST(floor(by1 * 1000000.0) AS BIGINT) AS y1_int
-         |FROM fit ORDER BY ring_id""".stripMargin,
-
-    // graticule lattice + exact-endpoint interpolation, mirrored verbatim
-    "q_graticule" ->
-      """WITH mer AS (SELECT -180.0 + 10.0 * (CAST(k AS DOUBLE) + 1.0) AS value
-        |  FROM (SELECT unnest(range(0, 36)) AS k)),
-        |mp AS (SELECT 'meridian' AS gtype, value,
-        |    unnest(CASE WHEN CAST(value AS BIGINT) % 90 = 0 THEN [0, 1, 2] ELSE [0] END) AS part
-        |  FROM mer),
-        |par AS (SELECT 'parallel' AS gtype, -90.0 + 10.0 * CAST(k AS DOUBLE) AS value, 0 AS part
-        |  FROM (SELECT unnest(range(0, 19)) AS k)),
-        |segs AS (
-        |  SELECT gtype, value, part,
-        |    CASE WHEN gtype = 'parallel' THEN -180.0
-        |         WHEN part = 0 THEN -80.0 WHEN part = 1 THEN -90.0 ELSE 80.0 END AS lo,
-        |    CASE WHEN gtype = 'parallel' THEN 180.0
-        |         WHEN part = 0 THEN 80.0 WHEN part = 1 THEN -80.0 ELSE 90.0 END AS hi
-        |  FROM (SELECT * FROM mp UNION ALL SELECT * FROM par)),
-        |sized AS (SELECT *, CAST(round(abs(hi - lo) / 0.5) AS INTEGER) - 1 AS n FROM segs),
-        |stepped AS (SELECT *, (hi - lo) / (CAST(n AS DOUBLE) + 1.0) AS step FROM sized),
-        |verts AS (SELECT gtype, value, part, n, lo, hi, step,
-        |    unnest(range(0, CAST(n AS BIGINT) + 2)) AS j FROM stepped),
-        |vv AS (SELECT gtype, value, part, j,
-        |    CASE WHEN j = 0 THEN lo WHEN j = n + 1 THEN hi
-        |         ELSE lo + step * CAST(j AS DOUBLE) END AS v
-        |  FROM verts)
-        |SELECT gtype, CAST(value AS BIGINT) AS value, CAST(part AS BIGINT) AS part,
-        |  CAST(j AS BIGINT) AS vi,
-        |  CAST(floor((CASE WHEN gtype = 'meridian' THEN value ELSE v END) * 1000000.0) AS BIGINT) AS x_int,
-        |  CAST(floor((CASE WHEN gtype = 'meridian' THEN v ELSE value END) * 1000000.0) AS BIGINT) AS y_int
-        |FROM vv ORDER BY gtype, value, part, vi""".stripMargin,
-
-    // TileRun lineage mirrored end to end: Morton coarse-group cascade +
-    // per-image ray-cast match counts against the 64-shape layer VALUES
-    "q_tilerun" ->
-      s"""WITH $imgXYSql,
-         |$imageEdgesSql,
-         |xyc AS (SELECT image_id, x AS cx, y AS cy FROM xy),
-         |${cellEncodeSql("xyc", 3)},
-         |hits AS (SELECT p.image_id, e.pk,
-         |    SUM(CASE WHEN ((e.ex1 > p.cx) <> (e.ex2 > p.cx))
-         |          AND e.ey1 + (p.cx - e.ex1) * (e.ey2 - e.ey1) / (e.ex2 - e.ex1) > p.cy
-         |        THEN 1 ELSE 0 END) AS crossings
-         |  FROM enc p CROSS JOIN iedges e GROUP BY p.image_id, e.pk),
-         |matches AS (SELECT image_id, count(*) AS n FROM hits
-         |  WHERE crossings % 2 = 1 GROUP BY image_id)
-         |SELECT e.cell_id AS grp, count(*) AS input_rows,
-         |  CAST(SUM(coalesce(m.n, 0)) AS BIGINT) AS output_rows
-         |FROM enc e LEFT JOIN matches m USING (image_id)
-         |GROUP BY 1 ORDER BY grp""".stripMargin,
-
-    "q_minhash_pairs" -> minhashSql,
-
-    "q_simhash_pairs" -> simhashSql,
-
-    "q_grid_rhombus" -> gridMirrorSql(rhombus = true),
-
-    "q_grid_triangle" -> gridMirrorSql(rhombus = false),
-
-    "q_grid_hex" -> hexMirrorSql(flatTop = false),
-
-    "q_dots" -> dotsSql,
-
-    "q_albersusa" -> albersUsaSql,
-
-    // closed-form surviving vertices: needle cut, gentle kept, loop protected
-    "q_filter_detail" ->
-      s"""WITH $ptsSql,
-         |gs AS (SELECT DISTINCT id % 8 AS g FROM pts)
-         |SELECT g, CAST(k AS BIGINT) AS k,
-         |  CAST(CASE WHEN k IN (5, 6) THEN 820 + (g % 2) * 10 ELSE x10 END AS BIGINT) AS x10,
-         |  CAST(y10 AS BIGINT) AS y10
-         |FROM gs CROSS JOIN (VALUES
-         |  (0, 0, 0), (1, 300, 0), (2, 305, 0), (3, 800, 0), (4, 800, 10),
-         |  (5, 0, 10), (6, 0, 0), (7, 1300, 0), (8, 1270, 20), (9, 1304, 60),
-         |  (10, 1340, 20), (11, 1308, 0), (12, 2000, 0)) t(k, x10, y10)
-         |ORDER BY g, k""".stripMargin,
-
-    "q_wkt_read" ->
-      """SELECT file, item, sval, CAST(num_int AS BIGINT) AS num_int
-        |FROM (VALUES
-        |  ('dbf/ldid/chinese.prj', 'kind', 'GEOGCS', 0),
-        |  ('dbf/ldid/chinese.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('dbf/ldid/chinese.prj', 'rf', '', 298257223),
-        |  ('features/centroids/a.prj', 'kind', 'GEOGCS', 0),
-        |  ('features/centroids/a.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('features/centroids/a.prj', 'rf', '', 298257223),
-        |  ('features/centroids/b.prj', 'kind', 'GEOGCS', 0),
-        |  ('features/centroids/b.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('features/centroids/b.prj', 'rf', '', 298257223),
-        |  ('features/polygons/ex1.prj', 'kind', 'GEOGCS', 0),
-        |  ('features/polygons/ex1.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('features/polygons/ex1.prj', 'rf', '', 298257223),
-        |  ('geopackage/Oregon_customCRS.prj', 'kind', 'PROJCS', 0),
-        |  ('geopackage/Oregon_customCRS.prj', 'param:central_meridian', '', -120540000),
-        |  ('geopackage/Oregon_customCRS.prj', 'param:standard_parallel_1', '', 42710000),
-        |  ('geopackage/Oregon_customCRS.prj', 'param:standard_parallel_2', '', 45570000),
-        |  ('geopackage/Oregon_customCRS.prj', 'spheroid', 'WGS 84', 6378137000000),
-        |  ('geopackage/Oregon_customCRS.prj', 'rf', '', 298257223),
-        |  ('geopackage/world_land_robin.prj', 'kind', 'PROJCS', 0),
-        |  ('geopackage/world_land_robin.prj', 'spheroid', 'WGS 84', 6378137000000),
-        |  ('geopackage/world_land_robin.prj', 'rf', '', 298257223),
-        |  ('issues/166/a_utm.prj', 'kind', 'PROJCS', 0),
-        |  ('issues/166/a_utm.prj', 'param:false_easting', '', 500000000000),
-        |  ('issues/166/a_utm.prj', 'param:false_northing', '', 0),
-        |  ('issues/166/a_utm.prj', 'param:central_meridian', '', -75000000),
-        |  ('issues/166/a_utm.prj', 'param:scale_factor', '', 999600),
-        |  ('issues/166/a_utm.prj', 'param:latitude_of_origin', '', 0),
-        |  ('issues/166/a_utm.prj', 'spheroid', 'GRS_1980', 6378137000000),
-        |  ('issues/166/a_utm.prj', 'rf', '', 298257222),
-        |  ('issues/166/b_utm.prj', 'kind', 'PROJCS', 0),
-        |  ('issues/166/b_utm.prj', 'param:false_easting', '', 500000000000),
-        |  ('issues/166/b_utm.prj', 'param:false_northing', '', 0),
-        |  ('issues/166/b_utm.prj', 'param:central_meridian', '', -75000000),
-        |  ('issues/166/b_utm.prj', 'param:scale_factor', '', 999600),
-        |  ('issues/166/b_utm.prj', 'param:latitude_of_origin', '', 0),
-        |  ('issues/166/b_utm.prj', 'spheroid', 'GRS_1980', 6378137000000),
-        |  ('issues/166/b_utm.prj', 'rf', '', 298257222),
-        |  ('issues/166/d_geo.prj', 'kind', 'GEOGCS', 0),
-        |  ('issues/166/d_geo.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('issues/166/d_geo.prj', 'rf', '', 298257223),
-        |  ('issues/166/e_merc.prj', 'kind', 'PROJCS', 0),
-        |  ('issues/166/e_merc.prj', 'param:central_meridian', '', 0),
-        |  ('issues/166/e_merc.prj', 'param:false_easting', '', 0),
-        |  ('issues/166/e_merc.prj', 'param:false_northing', '', 0),
-        |  ('issues/166/e_merc.prj', 'param:standard_parallel_1', '', 0),
-        |  ('issues/166/e_merc.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('issues/166/e_merc.prj', 'rf', '', 298257223),
-        |  ('issues/193/gauss_kruger.prj', 'kind', 'PROJCS', 0),
-        |  ('issues/193/gauss_kruger.prj', 'param:false_easting', '', 500000000000),
-        |  ('issues/193/gauss_kruger.prj', 'param:false_northing', '', 0),
-        |  ('issues/193/gauss_kruger.prj', 'param:central_meridian', '', 114000000),
-        |  ('issues/193/gauss_kruger.prj', 'param:scale_factor', '', 1000000),
-        |  ('issues/193/gauss_kruger.prj', 'param:latitude_of_origin', '', 0),
-        |  ('issues/193/gauss_kruger.prj', 'spheroid', 'Krasovsky_1940', 6378245000000),
-        |  ('issues/193/gauss_kruger.prj', 'rf', '', 298300000),
-        |  ('issues/193/three_points.prj', 'kind', 'PROJCS', 0),
-        |  ('issues/193/three_points.prj', 'param:central_meridian', '', 0),
-        |  ('issues/193/three_points.prj', 'param:false_easting', '', 0),
-        |  ('issues/193/three_points.prj', 'param:false_northing', '', 0),
-        |  ('issues/193/three_points.prj', 'param:standard_parallel_1', '', 0),
-        |  ('issues/193/three_points.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('issues/193/three_points.prj', 'rf', '', 298257223),
-        |  ('issues/518_519_shp_reading/data_corruption_error.prj', 'kind', 'PROJCS', 0),
-        |  ('issues/518_519_shp_reading/data_corruption_error.prj', 'param:latitude_of_origin', '', 0),
-        |  ('issues/518_519_shp_reading/data_corruption_error.prj', 'param:central_meridian', '', 15000000),
-        |  ('issues/518_519_shp_reading/data_corruption_error.prj', 'param:scale_factor', '', 999600),
-        |  ('issues/518_519_shp_reading/data_corruption_error.prj', 'param:false_easting', '', 500000000000),
-        |  ('issues/518_519_shp_reading/data_corruption_error.prj', 'param:false_northing', '', 0),
-        |  ('issues/518_519_shp_reading/data_corruption_error.prj', 'spheroid', 'GRS_1980', 6378137000000),
-        |  ('issues/518_519_shp_reading/data_corruption_error.prj', 'rf', '', 298257222),
-        |  ('issues/518_519_shp_reading/max_callstack_error.prj', 'kind', 'PROJCS', 0),
-        |  ('issues/518_519_shp_reading/max_callstack_error.prj', 'param:false_easting', '', 1500000000000),
-        |  ('issues/518_519_shp_reading/max_callstack_error.prj', 'param:false_northing', '', 0),
-        |  ('issues/518_519_shp_reading/max_callstack_error.prj', 'param:central_meridian', '', 15808277),
-        |  ('issues/518_519_shp_reading/max_callstack_error.prj', 'param:scale_factor', '', 1000000),
-        |  ('issues/518_519_shp_reading/max_callstack_error.prj', 'param:latitude_of_origin', '', 0),
-        |  ('issues/518_519_shp_reading/max_callstack_error.prj', 'spheroid', 'Bessel_1841', 6377397155000),
-        |  ('issues/518_519_shp_reading/max_callstack_error.prj', 'rf', '', 299152812),
-        |  ('issues/invalid_coords/invalid_coordinates.prj', 'kind', 'GEOGCS', 0),
-        |  ('issues/invalid_coords/invalid_coordinates.prj', 'spheroid', 'WGS 84 [EPSG ID 7030]', 6378137000000),
-        |  ('issues/invalid_coords/invalid_coordinates.prj', 'rf', '', 298257223),
-        |  ('ne/ne_110m_admin_0_boundary_lines_land.prj', 'kind', 'GEOGCS', 0),
-        |  ('ne/ne_110m_admin_0_boundary_lines_land.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('ne/ne_110m_admin_0_boundary_lines_land.prj', 'rf', '', 298257223),
-        |  ('ne/ne_110m_admin_0_pacific_groupings.prj', 'kind', 'GEOGCS', 0),
-        |  ('ne/ne_110m_admin_0_pacific_groupings.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('ne/ne_110m_admin_0_pacific_groupings.prj', 'rf', '', 298257223),
-        |  ('ne/ne_110m_admin_0_scale_rank.prj', 'kind', 'GEOGCS', 0),
-        |  ('ne/ne_110m_admin_0_scale_rank.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('ne/ne_110m_admin_0_scale_rank.prj', 'rf', '', 298257223),
-        |  ('ne/ne_110m_admin_1_states_provinces_lines.prj', 'kind', 'GEOGCS', 0),
-        |  ('ne/ne_110m_admin_1_states_provinces_lines.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('ne/ne_110m_admin_1_states_provinces_lines.prj', 'rf', '', 298257223),
-        |  ('ne/ne_110m_admin_1_states_provinces_shp.prj', 'kind', 'GEOGCS', 0),
-        |  ('ne/ne_110m_admin_1_states_provinces_shp.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('ne/ne_110m_admin_1_states_provinces_shp.prj', 'rf', '', 298257223),
-        |  ('shapefile/geo_lines.prj', 'kind', 'GEOGCS', 0),
-        |  ('shapefile/geo_lines.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('shapefile/geo_lines.prj', 'rf', '', 298257223),
-        |  ('shapefile/latin1-property.prj', 'kind', 'GEOGCS', 0),
-        |  ('shapefile/latin1-property.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('shapefile/latin1-property.prj', 'rf', '', 298257223),
-        |  ('shapefile/nad27/popctr_state1970.prj', 'kind', 'GEOGCS', 0),
-        |  ('shapefile/nad27/popctr_state1970.prj', 'spheroid', 'Clarke 1866', 6378206400000),
-        |  ('shapefile/nad27/popctr_state1970.prj', 'rf', '', 294978698),
-        |  ('shapefile/six_counties.prj', 'kind', 'GEOGCS', 0),
-        |  ('shapefile/six_counties.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('shapefile/six_counties.prj', 'rf', '', 298257223),
-        |  ('shapefile/three_points.prj', 'kind', 'GEOGCS', 0),
-        |  ('shapefile/three_points.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('shapefile/three_points.prj', 'rf', '', 298257223),
-        |  ('shapefile/two_states.prj', 'kind', 'GEOGCS', 0),
-        |  ('shapefile/two_states.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('shapefile/two_states.prj', 'rf', '', 298257223),
-        |  ('shapefile/two_states_mercator.prj', 'kind', 'PROJCS', 0),
-        |  ('shapefile/two_states_mercator.prj', 'param:central_meridian', '', 0),
-        |  ('shapefile/two_states_mercator.prj', 'param:false_easting', '', 0),
-        |  ('shapefile/two_states_mercator.prj', 'param:false_northing', '', 0),
-        |  ('shapefile/two_states_mercator.prj', 'param:standard_parallel_1', '', 0),
-        |  ('shapefile/two_states_mercator.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('shapefile/two_states_mercator.prj', 'rf', '', 298257223),
-        |  ('shapefile/utf8-property.prj', 'kind', 'GEOGCS', 0),
-        |  ('shapefile/utf8-property.prj', 'spheroid', 'WGS_1984', 6378137000000),
-        |  ('shapefile/utf8-property.prj', 'rf', '', 298257223)
-        |) t(file, item, sval, num_int)
-        |ORDER BY file, item, num_int""".stripMargin,
-
-
-    // balanced halving: the leaf-size multiset of the count-median subdivide
-    // is a pure function of n and the predicate — recursive CTE mirror
-    "q_subdivide" ->
-      """WITH RECURSIVE t(sz, lf) AS (
-        |  SELECT CAST(count(*) AS BIGINT), count(*) <= 100 FROM customer
-        |  UNION ALL
-        |  SELECT CASE WHEN u.side = 0 THEN (t.sz + 1) // 2
-        |              ELSE t.sz - (t.sz + 1) // 2 END,
-        |         (CASE WHEN u.side = 0 THEN (t.sz + 1) // 2
-        |               ELSE t.sz - (t.sz + 1) // 2 END) <= 100
-        |  FROM t, (VALUES (0), (1)) u(side) WHERE NOT t.lf
-        |)
-        |SELECT sz AS leaf_size, count(*) AS n_leaves FROM t WHERE lf
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // phash decode + ray-cast PIP against the 64-shape image layer, mirrored
-    // end to end (same cascade as q_img_cell, same PIP kernel as q_pip_join)
-    "q_img_pip" ->
-      s"""WITH $imgXYSql,
-         |$imageEdgesSql,
-         |hits AS (SELECT p.image_id, e.pk,
-         |    SUM(CASE WHEN ((e.ex1 > p.x) <> (e.ex2 > p.x))
-         |          AND e.ey1 + (p.x - e.ex1) * (e.ey2 - e.ey1) / (e.ex2 - e.ex1) > p.y
-         |        THEN 1 ELSE 0 END) AS crossings
-         |  FROM xy p CROSS JOIN iedges e GROUP BY p.image_id, e.pk)
-         |SELECT CAST(pk AS BIGINT) AS poly_key, count(*) AS n_images
-         |FROM hits WHERE crossings % 2 = 1 GROUP BY 1 ORDER BY poly_key""".stripMargin,
-
-    // the headline tile pipeline mirrored end to end: phash decode, 4x4 tile
-    // centers (identical FP op order), Morton re-encode at res 9, first-match
-    // PIP per tile center (min pk | -1), count per (cell, poly)
-    "q_img_tiles" ->
-      s"""WITH $imgXYSql,
-         |$imageEdgesSql,
-         |tiles AS (SELECT image_id, t.t,
-         |    (x - ${dl(Tiling.FootprintSide / 2)}) + (CAST(t.t % 4 AS DOUBLE) + 0.5) * ${dl(Tiling.FootprintSide / 4)} AS cx,
-         |    (y - ${dl(Tiling.FootprintSide / 2)}) + (CAST(CAST(trunc(CAST(t.t AS DOUBLE) / 4.0) AS INTEGER) AS DOUBLE) + 0.5) * ${dl(Tiling.FootprintSide / 4)} AS cy
-         |  FROM xy CROSS JOIN range(0, 16) t(t)),
-         |${cellEncodeSql("tiles", 9)},
-         |thits AS (SELECT p.image_id, p.t, p.cell_id, e.pk,
-         |    SUM(CASE WHEN ((e.ex1 > p.cx) <> (e.ex2 > p.cx))
-         |          AND e.ey1 + (p.cx - e.ex1) * (e.ey2 - e.ey1) / (e.ex2 - e.ex1) > p.cy
-         |        THEN 1 ELSE 0 END) AS crossings
-         |  FROM enc p CROSS JOIN iedges e GROUP BY p.image_id, p.t, p.cell_id, e.pk),
-         |tkey AS (SELECT image_id, t, cell_id,
-         |    coalesce(min(CASE WHEN crossings % 2 = 1 THEN pk END), -1) AS poly_key
-         |  FROM thits GROUP BY image_id, t, cell_id)
-         |SELECT cell_id, CAST(poly_key AS BIGINT) AS poly_key, count(*) AS n_tiles
-         |FROM tkey GROUP BY 1, 2 ORDER BY cell_id, poly_key""".stripMargin,
-
-    // full LSH mirror of Ann.lshTopK: hyperplane signatures recomputed from
-    // the same ±1 grid (list_sum is sequential -> dot products bit-match the
-    // Scala fold), Hamming-1 multi-probe bucket join, exact cosine rank.
-    // Output carries ranks only, so list_cosine_similarity ulps are inert
-    // (same argument as the passing q_ann_topk oracle).
-    "q_ann_lsh" ->
-      s"""WITH grid AS (SELECT p, sgn
-         |  FROM (VALUES ${Ann.planesSqlValues(10, 64)}) t(p, sgn)),
-         |sigs AS (SELECT e.vec_id AS id,
-         |    CAST(SUM(CASE WHEN list_sum(list_transform(range(1, 65),
-         |      i -> CAST(e.embedding[i] AS DOUBLE) * g.sgn[i])) >= 0
-         |      THEN 1 << g.p ELSE 0 END) AS BIGINT) AS sig
-         |  FROM embeddings e CROSS JOIN grid g GROUP BY e.vec_id),
-         |probes AS (SELECT id,
-         |    CASE WHEN i.i = 0 THEN sig
-         |    ELSE xor(sig, CAST(1 AS BIGINT) << CAST(i.i - 1 AS INTEGER)) END AS bucket
-         |  FROM sigs CROSS JOIN range(0, 11) i(i)),
-         |cand AS (SELECT DISTINCT p.id, b.id AS neighbor_id
-         |  FROM probes p JOIN sigs b ON p.bucket = b.sig AND p.id <> b.id),
-         |scored AS (SELECT c.id, c.neighbor_id,
-         |    list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-         |      CAST(eb.embedding AS DOUBLE[])) AS score
-         |  FROM cand c
-         |  JOIN embeddings ea ON ea.vec_id = c.id
-         |  JOIN embeddings eb ON eb.vec_id = c.neighbor_id),
-         |ranked AS (SELECT id, neighbor_id,
-         |    row_number() OVER (PARTITION BY id ORDER BY score DESC, neighbor_id) AS rnk
-         |  FROM scored)
-         |SELECT id, CAST(rnk AS BIGINT) AS rnk, neighbor_id FROM ranked
-         |WHERE rnk <= 3 ORDER BY id, rnk""".stripMargin,
-
-    // full IVF mirror of Ann.ivfTopK: Spark-exact XXH64(long, seed 42) hash
-    // ordering for the 16 seed vectors (32-bit-limb wrap-multiplies +
-    // rotations in HUGEINT), 3 unrolled Lloyd iterations with float-rounded
-    // centroid means (CAST ... AS FLOAT == Scala .toFloat), argmax-cosine
-    // assignment with lower-list tie-break, nprobe=4 multi-probe, exact
-    // cosine rank. Output carries ranks only, so sum-order ulps in the
-    // centroid means are inert (argmax margins are generic).
-    "q_ann_ivf" -> annIvfSql,
-
-    // vertex-count mirrors of PathOps.smooth/densify over the same fixture
-    // layer emitted as literal edges: closed-ring Chaikin doubles interior
-    // vertices (n -> 2(n-1)+1 per pass, two passes -> 4(n-1)+1); densify
-    // inserts ceil(d)-1 vertices per edge longer than the interval (sqrt is
-    // correctly rounded IEEE on both engines — d is bit-identical)
-    "q_smooth" ->
-      s"""WITH edges AS (SELECT ring,
-         |  CAST(ex1 AS DOUBLE) AS x1, CAST(ey1 AS DOUBLE) AS y1,
-         |  CAST(ex2 AS DOUBLE) AS x2, CAST(ey2 AS DOUBLE) AS y2
-         |  FROM (VALUES ${Synthetic.edgesSqlValues(Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0))})
-         |  t(pk, ring, ex1, ey1, ex2, ey2)),
-         |d AS (SELECT ring, sqrt((x1 - x2)*(x1 - x2) + (y1 - y2)*(y1 - y2)) AS dist FROM edges),
-         |agg AS (SELECT ring, count(*) AS ne,
-         |  SUM(CASE WHEN dist > 1.0 THEN CAST(ceil(dist / 1.0) AS BIGINT) - 1 ELSE 0 END) AS ins
-         |  FROM d GROUP BY ring)
-         |SELECT CAST(ring AS BIGINT) AS ring_id, CAST(ne + 1 AS BIGINT) AS n_vertices,
-         |  CAST(4 * ne + 1 AS BIGINT) AS n_smoothed,
-         |  CAST(ne + 1 + ins AS BIGINT) AS n_densified
-         |FROM agg ORDER BY ring_id""".stripMargin,
-
-    // full 256-step circle∩cell quadrature mirror of Grids.pointToGrid
-    // (same arithmetic order per term; floor(×1000) guards the sum-order ulps)
-    "q_point_to_grid" ->
-      s"""WITH $ptsSql,
-         |cand AS (
-         |  SELECT p.id, p.x, p.y,
-         |    (CAST(floor((p.x - 0.0) / 5.0) AS BIGINT) + dx.v) * 100000
-         |      + (CAST(floor((p.y - 0.0) / 5.0) AS BIGINT) + dy.v) AS cell
-         |  FROM pts p CROSS JOIN (VALUES (-1),(0),(1)) dx(v) CROSS JOIN (VALUES (-1),(0),(1)) dy(v)),
-         |dec AS (SELECT id, x, y, cell,
-         |  CAST(trunc(CAST(cell AS DOUBLE) / 100000.0) AS BIGINT) AS cx,
-         |  cell - CAST(trunc(CAST(cell AS DOUBLE) / 100000.0) AS BIGINT) * 100000 AS cy FROM cand),
-         |geo AS (SELECT id, x, y, cell,
-         |  0.0 + CAST(cx AS DOUBLE) * 5.0 AS xmin, 0.0 + CAST(cy AS DOUBLE) * 5.0 AS ymin FROM dec),
-         |lim AS (SELECT *, greatest(xmin, x - 3.0) AS lo, least(xmin + 5.0, x + 3.0) AS hi FROM geo),
-         |quad AS (SELECT *, (hi - lo) / 256.0 AS dxs FROM lim WHERE lo < hi),
-         |xs AS (SELECT quad.*, lo + (CAST(i.i AS DOUBLE) + 0.5) * dxs AS xq
-         |       FROM quad CROSS JOIN range(0, 256) i(i)),
-         |hs AS (SELECT *, sqrt(greatest(0.0, 3.0*3.0 - (xq - x)*(xq - x))) AS h FROM xs),
-         |yy AS (SELECT *, greatest(ymin, y - h) AS y1, least(ymin + 5.0, y + h) AS y2 FROM hs),
-         |w AS (SELECT id, cell, SUM(CASE WHEN y2 > y1 THEN (y2 - y1) * dxs ELSE 0.0 END) / (5.0*5.0) AS wv
-         |      FROM yy GROUP BY id, cell)
-         |SELECT cell, count(*) AS n_points, CAST(floor(SUM(wv) * 1000.0) AS BIGINT) AS weight_int
-         |FROM w WHERE wv > 0.05 GROUP BY cell ORDER BY cell""".stripMargin,
-
-    // stopword-hit argmax mirror of TextAnalysis.langIdUdf: count stopword
-    // hits per language, winner = lexicographically-smallest argmax (de < en
-    // < es < fr), all-zero -> 'und'. Pure integer logic — hash-exact.
-    "q_lang_id" ->
-      """WITH w AS (SELECT doc_id,
-        |  list_filter(string_split_regex(lower(coalesce(text, '')), '\W+'), x -> x <> '') AS words
-        |  FROM documents),
-        |s AS (SELECT doc_id,
-        |  len(list_filter(words, x -> list_contains(['the','and','of','to','in','is','that','for','with','was','it','a'], x))) AS s_en,
-        |  len(list_filter(words, x -> list_contains(['der','die','und','das','ist','von','mit','ein','nicht','den','zu'], x))) AS s_de,
-        |  len(list_filter(words, x -> list_contains(['le','la','et','les','des','est','un','une','du','que','dans','pour'], x))) AS s_fr,
-        |  len(list_filter(words, x -> list_contains(['el','la','de','que','y','los','en','un','una','es','del','por'], x))) AS s_es
-        |  FROM w),
-        |m AS (SELECT doc_id, greatest(s_en, s_de, s_fr, s_es) AS mx, s_en, s_de, s_fr, s_es FROM s)
-        |SELECT doc_id, CASE WHEN mx = 0 THEN 'und'
-        |  WHEN s_de = mx THEN 'de' WHEN s_en = mx THEN 'en'
-        |  WHEN s_es = mx THEN 'es' WHEN s_fr = mx THEN 'fr' END AS lang_pred
-        |FROM m ORDER BY doc_id""".stripMargin,
-
-    // FNV-1a 64-bit rolling fingerprint mirror of TextAnalysis.fingerprintUdf:
-    // wrap-around multiply emulated in HUGEINT (multiplier ~2^40, product
-    // < 2^104 fits 128-bit), list_reduce over UTF-16 char codes.
-    "q_fingerprint" ->
-      """WITH n AS (SELECT doc_id, text,
-        |  trim(regexp_replace(lower(coalesce(text, '')), '\s+', ' ', 'g')) AS norm FROM documents),
-        |c AS (SELECT doc_id, text,
-        |  CASE WHEN norm = '' THEN [CAST(1469598103934665603 AS UBIGINT)]
-        |  ELSE list_prepend(CAST(1469598103934665603 AS UBIGINT),
-        |    list_transform(string_split(norm, ''), ch -> CAST(unicode(ch) AS UBIGINT))) END AS l
-        |  FROM n),
-        |f AS (SELECT doc_id, text, list_reduce(l, (acc, x) ->
-        |  CAST(CAST(xor(acc, x) AS HUGEINT) * 1099511628211 % 18446744073709551616 AS UBIGINT)) AS u
-        |  FROM c)
-        |SELECT doc_id, CASE WHEN text IS NULL THEN CAST(0 AS BIGINT)
-        |  WHEN u >= 9223372036854775808 THEN CAST(CAST(u AS HUGEINT) - 18446744073709551616 AS BIGINT)
-        |  ELSE CAST(u AS BIGINT) END AS fp
-        |FROM f ORDER BY doc_id""".stripMargin,
-
-    // -lines: classify each undirected square-grid edge as outer / field
-    // boundary ('g') / inner — exact integer coordinates and keys
-    "q_lines" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |cc AS (SELECT cx, cy, cx * 1000 + cy AS key, (cx + cy) % 3 AS g FROM cells),
-         |edges AS (
-         |  SELECT cx AS x1, cy AS y1, cx + 1 AS x2, cy AS y2, key, g FROM cc
-         |  UNION ALL SELECT cx, cy + 1, cx + 1, cy + 1, key, g FROM cc
-         |  UNION ALL SELECT cx, cy, cx, cy + 1, key, g FROM cc
-         |  UNION ALL SELECT cx + 1, cy, cx + 1, cy + 1, key, g FROM cc),
-         |ec AS (SELECT x1, y1, x2, y2, count(*) AS c,
-         |    min(key) AS key_a,
-         |    CASE WHEN count(*) > 1 THEN max(key) END AS key_b,
-         |    min_by(g, key) AS ga, max_by(g, key) AS gb
-         |  FROM edges GROUP BY x1, y1, x2, y2)
-         |SELECT x1, y1, x2, y2,
-         |  CASE WHEN c = 1 THEN 'outer' WHEN ga <> gb THEN 'g' ELSE 'inner' END AS type,
-         |  CAST(CASE WHEN c = 1 THEN 0 WHEN ga <> gb THEN 1 ELSE 2 END AS BIGINT) AS rank,
-         |  key_a, key_b
-         |FROM ec ORDER BY x1, y1, x2, y2""".stripMargin,
-
-    // -lines chain assembly: min-label propagation unrolled to 4 rounds
-    // (groups have <= 4 edges in the square-cell fixture, diameter <= 3;
-    // extra rounds are no-ops, so the unroll is exact). Chain-size
-    // histograms are labeling-invariant — the Spark side labels via
-    // pointer-jumping CC over hashed edge ids, the mirror via lexicographic
-    // edge codes; sizes must agree exactly.
-    "q_lines_chains" -> {
-      val rounds = (1 to 4).map { k =>
-        s"""l$k AS MATERIALIZED (SELECT l.eid, l.type, l.rank, l.key_a, l.key_b,
-           |  least(l.lbl, coalesce(min(n.lbl), l.lbl)) AS lbl
-           |  FROM l${k - 1} l
-           |  LEFT JOIN adj a ON a.u = l.eid
-           |  LEFT JOIN l${k - 1} n ON n.eid = a.v
-           |  GROUP BY l.eid, l.type, l.rank, l.key_a, l.key_b, l.lbl)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |cc AS (SELECT cx, cy, cx * 1000 + cy AS key, (cx + cy) % 3 AS g FROM cells),
-         |edges AS (
-         |  SELECT cx AS x1, cy AS y1, cx + 1 AS x2, cy AS y2, key, g FROM cc
-         |  UNION ALL SELECT cx, cy + 1, cx + 1, cy + 1, key, g FROM cc
-         |  UNION ALL SELECT cx, cy, cx, cy + 1, key, g FROM cc
-         |  UNION ALL SELECT cx + 1, cy, cx + 1, cy + 1, key, g FROM cc),
-         |ec AS (SELECT x1, y1, x2, y2, count(*) AS c,
-         |    min(key) AS key_a,
-         |    CASE WHEN count(*) > 1 THEN max(key) END AS key_b,
-         |    min_by(g, key) AS ga, max_by(g, key) AS gb
-         |  FROM edges GROUP BY x1, y1, x2, y2),
-         |cl AS (SELECT
-         |    CASE WHEN c = 1 THEN 'outer' WHEN ga <> gb THEN 'g' ELSE 'inner' END AS type,
-         |    CAST(CASE WHEN c = 1 THEN 0 WHEN ga <> gb THEN 1 ELSE 2 END AS BIGINT) AS rank,
-         |    key_a, key_b,
-         |    ((x1 * 200 + y1) * 200 + x2) * 200 + y2 AS eid,
-         |    x1, y1, x2, y2
-         |  FROM ec),
-         |ends AS (SELECT type, rank, key_a, key_b, eid, x1 AS vx, y1 AS vy FROM cl
-         |  UNION ALL SELECT type, rank, key_a, key_b, eid, x2, y2 FROM cl),
-         |adj0 AS (SELECT min(eid) AS u, max(eid) AS v
-         |  FROM ends GROUP BY type, key_a, key_b, vx, vy HAVING count(*) = 2),
-         |adj AS (SELECT u, v FROM adj0 UNION SELECT v AS u, u AS v FROM adj0),
-         |l0 AS MATERIALIZED (SELECT eid, type, rank, key_a, key_b, eid AS lbl FROM cl),
-         |$rounds,
-         |ch AS (SELECT type, rank, key_a, key_b, lbl, count(*) AS n_edges
-         |  FROM l4 GROUP BY type, rank, key_a, key_b, lbl)
-         |SELECT type, rank, key_a, key_b, n_edges, count(*) AS n_chains
-         |FROM ch GROUP BY type, rank, key_a, key_b, n_edges
-         |ORDER BY type, rank, key_a, key_b, n_edges""".stripMargin
-    },
-
-    // -lines over points: ordered LineString assembly, vertex by vertex
-    "q_points_lines" ->
-      s"""WITH $ptsSql
-         |SELECT id % 5 AS "group",
-         |  row_number() OVER (PARTITION BY id % 5 ORDER BY id) - 1 AS seq, x, y
-         |FROM pts ORDER BY "group", seq""".stripMargin,
-
-    // -check-geometry: the distributed cell-partitioned intersection report
-    // vs the O(n^2) pair scan — identical IEEE orientation arithmetic
-    // (structured as staged CTEs with CASE flags — the single-WHERE version
-    // trips an internal DuckDB vectorizer assertion, "requires a flat vector")
-    "q_check_geom" ->
-      s"""WITH $ptsSql,
-         |segs AS MATERIALIZED (SELECT id AS sid, x AS x1, y AS y1,
-         |  x + (${derivedXSql("(id * 31 + 17)")} / 10.0 - 5.0) AS x2,
-         |  y + (${derivedYSql("(id * 57 + 3)")} / 10.0 - 5.0) AS y2 FROM pts),
-         |j AS (SELECT a.sid AS a_id, b.sid AS b_id,
-         |  a.x1 AS ax1, a.y1 AS ay1, a.x2 AS ax2, a.y2 AS ay2,
-         |  b.x1 AS bx1, b.y1 AS by1, b.x2 AS bx2, b.y2 AS by2
-         |  FROM segs a JOIN segs b ON a.sid < b.sid),
-         |f AS (SELECT a_id, b_id,
-         |  ((ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)) AS o1,
-         |  ((ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)) AS o2,
-         |  ((bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)) AS o3,
-         |  ((bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)) AS o4,
-         |  CASE WHEN (ax1 = bx1 AND ay1 = by1) OR (ax1 = bx2 AND ay1 = by2)
-         |    OR (ax2 = bx1 AND ay2 = by1) OR (ax2 = bx2 AND ay2 = by2)
-         |    THEN 1 ELSE 0 END AS shared,
-         |  CASE WHEN least(ax1, ax2) <= greatest(bx1, bx2)
-         |    AND least(bx1, bx2) <= greatest(ax1, ax2)
-         |    AND least(ay1, ay2) <= greatest(by1, by2)
-         |    AND least(by1, by2) <= greatest(ay1, ay2) THEN 1 ELSE 0 END AS bb
-         |  FROM j)
-         |SELECT a_id, b_id FROM f
-         |WHERE shared = 0 AND bb = 1 AND o1 * o2 <= 0 AND o3 * o4 <= 0
-         |ORDER BY a_id, b_id""".stripMargin,
-
-    // Vincenty inverse geodesic, lambda iteration unrolled to 8 fixed rounds
-    // (operator converges to 1e-13 in <=5 on these +-5 degree pairs; the
-    // meter/1e-4-degree floors absorb the tail). All constants are exact
-    // double literals; every expression mirrors the Scala op order.
-    "q_geodesic" -> {
-      val fC = dl(graft.geom.Crs.F)
-      val aC = dl(graft.geom.Crs.A)
-      val bC = dl(graft.geom.Crs.B)
-      val rounds = (1 to 8).map { k =>
-        s"""g$k AS MATERIALIZED (SELECT id, L, sinU1, cosU1, sinU2, cosU2,
-           |  sin(lambda) AS sinL, cos(lambda) AS cosL,
-           |  cosU2 * sinL AS t1,
-           |  cosU1 * sinU2 - sinU1 * cosU2 * cosL AS t2,
-           |  sqrt(t1 * t1 + t2 * t2) AS sinSigma,
-           |  sinU1 * sinU2 + cosU1 * cosU2 * cosL AS cosSigma,
-           |  atan2(sinSigma, cosSigma) AS sigma,
-           |  cosU1 * cosU2 * sinL / sinSigma AS sinAlpha,
-           |  1.0 - sinAlpha * sinAlpha AS cos2Alpha,
-           |  CASE WHEN cos2Alpha = 0.0 THEN 0.0
-           |    ELSE cosSigma - 2.0 * sinU1 * sinU2 / cos2Alpha END AS cos2SigmaM,
-           |  $fC / 16.0 * cos2Alpha * (4.0 + $fC * (4.0 - 3.0 * cos2Alpha)) AS cf,
-           |  L + (1.0 - cf) * $fC * sinAlpha * (sigma + cf * sinSigma *
-           |    (cos2SigmaM + cf * cosSigma *
-           |      (-1.0 + 2.0 * cos2SigmaM * cos2SigmaM))) AS lambda
-           |  FROM g${k - 1})""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $ptsSql,
-         |pp AS (SELECT id,
-         |  (y - 50.0) * 1.2 AS lat1, (x - 50.0) * 3.2 AS lon1,
-         |  (y - 50.0) * 1.2 + (${derivedYSql("(id * 57 + 3)")} / 10.0 - 5.0) AS lat2,
-         |  (x - 50.0) * 3.2 + (${derivedXSql("(id * 31 + 17)")} / 10.0 - 5.0) AS lon2
-         |  FROM pts WHERE id <= 30),
-         |base AS (SELECT id,
-         |  (lon2 - lon1) * (pi() / 180.0) AS L,
-         |  (1.0 - $fC) * tan(lat1 * (pi() / 180.0)) AS tanU1,
-         |  1.0 / sqrt(1.0 + tanU1 * tanU1) AS cosU1,
-         |  tanU1 * cosU1 AS sinU1,
-         |  (1.0 - $fC) * tan(lat2 * (pi() / 180.0)) AS tanU2,
-         |  1.0 / sqrt(1.0 + tanU2 * tanU2) AS cosU2,
-         |  tanU2 * cosU2 AS sinU2
-         |  FROM pp),
-         |g0 AS MATERIALIZED (SELECT id, L, sinU1, cosU1, sinU2, cosU2, L AS lambda FROM base),
-         |$rounds,
-         |fin AS (SELECT id,
-         |  cos2Alpha * ($aC * $aC - $bC * $bC) / ($bC * $bC) AS u2,
-         |  1.0 + u2 / 16384.0 * (4096.0 + u2 * (-768.0 + u2 * (320.0 - 175.0 * u2))) AS bigA,
-         |  u2 / 1024.0 * (256.0 + u2 * (-128.0 + u2 * (74.0 - 47.0 * u2))) AS bigB,
-         |  bigB * sinSigma * (cos2SigmaM + bigB / 4.0 *
-         |    (cosSigma * (-1.0 + 2.0 * cos2SigmaM * cos2SigmaM) -
-         |      bigB / 6.0 * cos2SigmaM * (-3.0 + 4.0 * sinSigma * sinSigma) *
-         |        (-3.0 + 4.0 * cos2SigmaM * cos2SigmaM))) AS dSigma,
-         |  $bC * bigA * (sigma - dSigma) AS s,
-         |  atan2(cosU2 * sin(lambda),
-         |    cosU1 * sinU2 - sinU1 * cosU2 * cos(lambda)) * (180.0 / pi()) AS azi
-         |  FROM g8)
-         |SELECT id, CAST(floor(s) AS BIGINT) AS dist_m,
-         |  CAST(floor(azi * 10000.0) AS BIGINT) AS azi_int
-         |FROM fin ORDER BY id""".stripMargin
-    },
-
-    // Vincenty direct, sigma iteration unrolled to 6 fixed rounds (the
-    // operator converges to 1e-14 in <=4 on these <=5000 km shots; the
-    // 1e-7-degree floor absorbs the tail)
-    "q_geodesic_direct" ->
-      s"""WITH $ptsSql,
-         |pp AS (SELECT id,
-         |  (y - 50.0) * 1.2 AS lat1, (x - 50.0) * 3.2 AS lon1,
-         |  CAST((id * 97) % 360 AS DOUBLE) AS azi,
-         |  CAST(((id * 131) % 5000) * 1000 + 500 AS DOUBLE) AS s
-         |  FROM pts WHERE id >= 1 AND id <= 30),
-         |${vincentyChainSql(Seq("id"))}
-         |SELECT id,
-         |  CAST(floor((lon1 + l * (180.0 / pi())) * 10000000.0) AS BIGINT) AS lon2_int,
-         |  CAST(floor(phi2 * (180.0 / pi()) * 10000000.0) AS BIGINT) AS lat2_int,
-         |  CAST(floor(azi2 * (180.0 / pi()) * 10000.0) AS BIGINT) AS azi2_int
-         |FROM fin ORDER BY id""".stripMargin,
-
-    // geodesic point-buffer ring = one Vincenty direct shot per bearing
-    // (ref mapshaper-geodesic.mjs:92-99): same 6-round chain, keyed (id, k)
-    "q_buffer_geodesic" ->
-      s"""WITH $ptsSql,
-         |pp0 AS (SELECT id,
-         |  (y - 50.0) * 1.2 AS lat1, (x - 50.0) * 3.2 AS lon1,
-         |  CAST(id % 7 AS DOUBLE) * 25000.0 + 5000.0 AS s
-         |  FROM pts WHERE id >= 1 AND id <= 30),
-         |ks AS (SELECT k FROM generate_series(0, 7) t(k)),
-         |pp AS (SELECT id, k, lat1, lon1,
-         |  360.0 * CAST(k AS DOUBLE) / 8.0 AS azi, s FROM pp0, ks),
-         |${vincentyChainSql(Seq("id", "k"))}
-         |SELECT id, CAST(k AS BIGINT) AS k,
-         |  CAST(floor((lon1 + l * (180.0 / pi())) * 10000000.0) AS BIGINT) AS lon_int,
-         |  CAST(floor(phi2 * (180.0 / pi()) * 10000000.0) AS BIGINT) AS lat_int
-         |FROM fin ORDER BY id, k""".stripMargin,
-
-    // -shape: rectangle side densification (exact halves) + 37-vertex circle
-    // (sin/cos floor-guarded at 1e6)
-    "q_shape" ->
-      """WITH rectv AS (
-        |  SELECT i AS seq, 0.0 AS x, CAST(i AS DOUBLE) * 0.5 AS y FROM generate_series(0, 5) t(i)
-        |  UNION ALL SELECT 6 + i, CAST(i AS DOUBLE) * 0.5, 3.0 FROM generate_series(0, 13) t(i)
-        |  UNION ALL SELECT 20 + i, 7.0, 3.0 - CAST(i AS DOUBLE) * 0.5 FROM generate_series(0, 5) t(i)
-        |  UNION ALL SELECT 26 + i, 7.0 - CAST(i AS DOUBLE) * 0.5, 0.0 FROM generate_series(0, 13) t(i)
-        |  UNION ALL SELECT 40, 0.0, 0.0),
-        |circv AS (
-        |  SELECT i AS seq,
-        |    50.0 + sin(CAST(i % 37 AS DOUBLE) / 37.0 * 360.0 / 180.0 * pi()) * 10.0 AS x,
-        |    50.0 + cos(CAST(i % 37 AS DOUBLE) / 37.0 * 360.0 / 180.0 * pi()) * 10.0 AS y
-        |  FROM generate_series(0, 37) t(i)),
-        |allv AS (SELECT 'rect' AS kind, seq, x, y FROM rectv
-        |  UNION ALL SELECT 'circle', seq, x, y FROM circv)
-        |SELECT kind, CAST(seq AS BIGINT) AS seq,
-        |  CAST(floor(x * 1000000.0) AS BIGINT) AS x_int,
-        |  CAST(floor(y * 1000000.0) AS BIGINT) AS y_int
-        |FROM allv ORDER BY kind, seq""".stripMargin,
-
-    // -frame: bbox + percentage offsets + pixel offsets + derived height,
-    // with every fractional literal emitted as an exact double
-    "q_frame" ->
-      s"""WITH $ptsSql,
-         |b0 AS (SELECT min(x) AS x0, min(y) AS y0, max(x) AS x1, max(y) AS y1 FROM pts),
-         |b1 AS (SELECT
-         |    (x1 - x0) / (1 - ${dl(0.05)} - ${dl(0.1)}) AS w2,
-         |    (y1 - y0) / (1 - ${dl(0.1)} - ${dl(0.05)}) AS h2, * FROM b0),
-         |b2 AS (SELECT
-         |    x0 - ${dl(0.05)} * w2 AS x0, y0 - ${dl(0.05)} * h2 AS y0,
-         |    x1 + ${dl(0.1)} * w2 AS x1, y1 + ${dl(0.1)} * h2 AS y1 FROM b1),
-         |b3 AS (SELECT (x1 - x0) / (800.0 - 10.0 - 20.0) AS scale, * FROM b2),
-         |b4 AS (SELECT
-         |    x0 - scale * 10.0 AS x0, y0 - scale * 10.0 AS y0,
-         |    x1 + scale * 20.0 AS x1, y1 + scale * 20.0 AS y1 FROM b3),
-         |b5 AS (SELECT *, (x1 - x0) / (y1 - y0) AS aspect FROM b4),
-         |b6 AS (SELECT *, round(800.0 / aspect * 10.0) / 10.0 AS hpx FROM b5)
-         |SELECT
-         |  CAST(floor(x0 * 1000000.0) AS BIGINT) AS x0_int,
-         |  CAST(floor(y0 * 1000000.0) AS BIGINT) AS y0_int,
-         |  CAST(floor(x1 * 1000000.0) AS BIGINT) AS x1_int,
-         |  CAST(floor(y1 * 1000000.0) AS BIGINT) AS y1_int,
-         |  CAST(8000 AS BIGINT) AS w_px10,
-         |  CAST(round(hpx * 10.0) AS BIGINT) AS h_px10
-         |FROM b6""".stripMargin,
-
-    // -scalebar: the auto-label ladder + length/placement arithmetic; ladder
-    // values are exact-literal VALUES, selection and rounding run in SQL
-    "q_scalebar" -> {
-      val ladder = Scalebar.autoOptions.zipWithIndex.map { case (numStr, i) =>
-        s"(${i + 1}, '$numStr', ${dl(Scalebar.parseNumber(numStr))})"
-      }.mkString(", ")
-      s"""WITH $ptsSql,
-         |m AS (SELECT id, CAST((id * 73) % 400 + 5 AS DOUBLE) AS mpp FROM pts WHERE id <= 30),
-         |opts AS (SELECT * FROM (VALUES $ladder) t(ord, numstr, val)),
-         |pick AS (SELECT m.id, m.mpp, min(o.ord) AS ord
-         |  FROM m JOIN opts o ON o.val * ${dl(1.60934)} > m.mpp * 70.0 / 1000.0
-         |  GROUP BY m.id, m.mpp),
-         |sel AS (SELECT p.id, p.mpp, o.numstr, o.val FROM pick p JOIN opts o ON o.ord = p.ord)
-         |SELECT id,
-         |  numstr || ' ' || CASE WHEN val > 1 THEN 'MILES' ELSE 'MILE' END AS label,
-         |  CAST(round(val * ${dl(1.60934)} / mpp * 1000.0) AS BIGINT) AS len_px,
-         |  CAST(800 - round(val * ${dl(1.60934)} / mpp * 1000.0) - 12 AS BIGINT) AS dx
-         |FROM sel ORDER BY id""".stripMargin
-    },
-
-    // -symbols: square template (sin/cos at odd-eighth angles) scaled and
-    // shifted per point, floor-guarded
-    "q_symbols" ->
-      s"""WITH $ptsSql,
-         |p AS (SELECT id, x, y, CAST(id % 7 + 1 AS DOUBLE) AS scale FROM pts),
-         |v AS (SELECT i FROM generate_series(0, 4) t(i))
-         |SELECT p.id, CAST(v.i AS BIGINT) AS seq,
-         |  CAST(floor((sin((CAST(v.i % 4 AS DOUBLE) + 0.5) / 4.0 * 360.0 / 180.0 * pi()) * scale + x)
-         |    * 1000000.0) AS BIGINT) AS x_int,
-         |  CAST(floor((cos((CAST(v.i % 4 AS DOUBLE) + 0.5) / 4.0 * 360.0 / 180.0 * pi()) * scale + y)
-         |    * 1000000.0) AS BIGINT) AS y_int
-         |FROM p CROSS JOIN v ORDER BY id, seq""".stripMargin,
-
-    // -points endpoints=: min/max-id vertex per group line
-    "q_points_endpoints" ->
-      s"""WITH $ptsSql
-         |SELECT id % 7 AS "group", 'start' AS which,
-         |  min_by(x, id) AS x, min_by(y, id) AS y FROM pts GROUP BY id % 7
-         |UNION ALL
-         |SELECT id % 7, 'end', max_by(x, id), max_by(y, id) FROM pts GROUP BY id % 7
-         |ORDER BY "group", which""".stripMargin,
-
-    // -points wkt= round trip (integer-valued coordinates -> exact)
-    "q_points_wkt" ->
-      s"""WITH $ptsSql
-         |SELECT id, CAST((id * 31) % 1000 AS BIGINT) AS px,
-         |  CAST((id * 77) % 1000 AS BIGINT) AS py
-         |FROM pts ORDER BY id""".stripMargin,
-
-    // -alpha-shapes boundary edges: brute-force Delaunay (empty strict
-    // circumcircle over all triples) + the kernel's exact circumcenter/
-    // radius arithmetic + edge-multiplicity-1 boundary rule
-    "q_alpha_edges" ->
-      s"""WITH $ptsSql,
-         |p24 AS (SELECT id, x, y FROM pts WHERE id >= 1 AND id <= 24),
-         |tri AS (SELECT a.id AS ia, b.id AS ib, c.id AS ic,
-         |    a.x AS ax, a.y AS ay, b.x AS bx, b.y AS by, c.x AS cx, c.y AS cy,
-         |    2.0 * (a.x * (b.y - c.y) + b.x * (c.y - a.y) + c.x * (a.y - b.y)) AS d
-         |  FROM p24 a JOIN p24 b ON a.id < b.id JOIN p24 c ON b.id < c.id),
-         |ccs AS (SELECT ia, ib, ic, ax, ay,
-         |    ax * ax + ay * ay AS a2, bx * bx + by * by AS b2, cx * cx + cy * cy AS c2,
-         |    (a2 * (by - cy) + b2 * (cy - ay) + c2 * (ay - by)) / d AS ux,
-         |    (a2 * (cx - bx) + b2 * (ax - cx) + c2 * (bx - ax)) / d AS uy
-         |  FROM tri WHERE d <> 0),
-         |del AS (SELECT ia, ib, ic, ux, uy, ax, ay FROM ccs
-         |  WHERE NOT EXISTS (SELECT 1 FROM p24 p
-         |    WHERE p.id <> ccs.ia AND p.id <> ccs.ib AND p.id <> ccs.ic
-         |      AND (p.x - ux) * (p.x - ux) + (p.y - uy) * (p.y - uy)
-         |        < (ax - ux) * (ax - ux) + (ay - uy) * (ay - uy))),
-         |kept AS (SELECT ia, ib, ic FROM del
-         |  WHERE sqrt((ux - ax) * (ux - ax) + (uy - ay) * (uy - ay)) <= 12.0),
-         |ed AS (SELECT least(ia, ib) AS u, greatest(ia, ib) AS v FROM kept
-         |  UNION ALL SELECT least(ib, ic), greatest(ib, ic) FROM kept
-         |  UNION ALL SELECT least(ia, ic), greatest(ia, ic) FROM kept)
-         |SELECT u AS a_id, v AS b_id FROM ed
-         |GROUP BY u, v HAVING count(*) = 1 ORDER BY a_id, b_id""".stripMargin,
-
-    // -alpha-shapes end to end: brute-force Delaunay (strict empty
-    // circumcircle over all triples) + the kernel's circumcenter/radius
-    // arithmetic + boundary parity + recursive-CTE component labeling of the
-    // boundary graph; on this fixture every boundary vertex has degree 2, so
-    // components == assembled rings, component edge count == ring vertex
-    // count, and the (minx, miny, n) ring sort matches assembleSorted
-    "q_alpha_shape" ->
-      s"""WITH RECURSIVE $ptsSql,
-         |p AS (SELECT id, x, y FROM pts WHERE id >= 1 AND id <= 120),
-         |tri AS (SELECT a.id AS ia, b.id AS ib, c.id AS ic,
-         |    a.x AS ax, a.y AS ay, b.x AS bx, b.y AS by, c.x AS cx, c.y AS cy,
-         |    2.0 * (a.x * (b.y - c.y) + b.x * (c.y - a.y) + c.x * (a.y - b.y)) AS d
-         |  FROM p a JOIN p b ON a.id < b.id JOIN p c ON b.id < c.id),
-         |ccs AS (SELECT ia, ib, ic, ax, ay,
-         |    ax * ax + ay * ay AS a2, bx * bx + by * by AS b2, cx * cx + cy * cy AS c2,
-         |    (a2 * (by - cy) + b2 * (cy - ay) + c2 * (ay - by)) / d AS ux,
-         |    (a2 * (cx - bx) + b2 * (ax - cx) + c2 * (bx - ax)) / d AS uy
-         |  FROM tri WHERE d <> 0),
-         |del AS (SELECT ia, ib, ic, ux, uy, ax, ay FROM ccs
-         |  WHERE NOT EXISTS (SELECT 1 FROM p
-         |    WHERE p.id <> ccs.ia AND p.id <> ccs.ib AND p.id <> ccs.ic
-         |      AND (p.x - ux) * (p.x - ux) + (p.y - uy) * (p.y - uy)
-         |        < (ax - ux) * (ax - ux) + (ay - uy) * (ay - uy))),
-         |kept AS (SELECT ia, ib, ic FROM del
-         |  WHERE sqrt((ux - ax) * (ux - ax) + (uy - ay) * (uy - ay)) <= 8.0),
-         |ed AS (SELECT least(ia, ib) AS u, greatest(ia, ib) AS v FROM kept
-         |  UNION ALL SELECT least(ib, ic), greatest(ib, ic) FROM kept
-         |  UNION ALL SELECT least(ia, ic), greatest(ia, ic) FROM kept),
-         |bnd AS (SELECT u, v FROM ed GROUP BY u, v HAVING count(*) = 1),
-         |und AS (SELECT u, v FROM bnd UNION ALL SELECT v AS u, u AS v FROM bnd),
-         |verts AS (SELECT DISTINCT u FROM und),
-         |reach AS (SELECT u AS s, u AS t FROM verts
-         |  UNION
-         |  SELECT r.s, e.v AS t FROM reach r JOIN und e ON r.t = e.u),
-         |roots AS (SELECT s, min(t) AS root FROM reach GROUP BY s),
-         |comp AS (SELECT r.root, count(*) AS nv, min(p.x) AS minx, min(p.y) AS miny
-         |  FROM roots r JOIN p ON r.s = p.id GROUP BY r.root)
-         |SELECT CAST(row_number() OVER (ORDER BY minx, miny, nv) - 1 AS BIGINT) AS ring_id,
-         |  CAST(nv AS BIGINT) AS n_vertices,
-         |  CAST(floor(minx * 1000.0) AS BIGINT) AS minx_int,
-         |  CAST(floor(miny * 1000.0) AS BIGINT) AS miny_int
-         |FROM comp ORDER BY ring_id""".stripMargin,
-
-    // -cluster greedy agglomeration unrolled: each round merges the closest
-    // alive pair (ties -> lexicographic scan order, mirroring the kernel's
-    // strict-< scan), weighted-centroid arithmetic in identical op order;
-    // final label = dense rank of the surviving root index
-    "q_cluster_greedy" -> {
-      val rounds = (1 to 14).map { k =>
-        s"""m$k AS MATERIALIZED (SELECT a.cid AS bi, b.cid AS bj,
-           |  b.cx AS bcx, b.cy AS bcy, b.sz AS bsz
-           |  FROM s${k - 1} a JOIN s${k - 1} b ON a.cid < b.cid AND a.alive AND b.alive
-           |  ORDER BY (a.cx - b.cx) * (a.cx - b.cx) + (a.cy - b.cy) * (a.cy - b.cy),
-           |    a.cid, b.cid
-           |  LIMIT 1),
-           |s$k AS MATERIALIZED (SELECT s.cid,
-           |  CASE WHEN s.cid = m.bi THEN (s.cx * s.sz + m.bcx * m.bsz) / (s.sz + m.bsz)
-           |    ELSE s.cx END AS cx,
-           |  CASE WHEN s.cid = m.bi THEN (s.cy * s.sz + m.bcy * m.bsz) / (s.sz + m.bsz)
-           |    ELSE s.cy END AS cy,
-           |  CASE WHEN s.cid = m.bi THEN s.sz + m.bsz ELSE s.sz END AS sz,
-           |  s.alive AND s.cid <> m.bj AS alive
-           |  FROM s${k - 1} s, m$k m),
-           |a$k AS MATERIALIZED (SELECT a.id,
-           |  CASE WHEN a.root = m.bj THEN m.bi ELSE a.root END AS root
-           |  FROM a${k - 1} a, m$k m)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $ptsSql,
-         |items AS (SELECT id, x, y, row_number() OVER (ORDER BY id) - 1 AS cid
-         |  FROM pts WHERE id >= 1 AND id <= 20),
-         |s0 AS MATERIALIZED (SELECT cid, x AS cx, y AS cy,
-         |  CAST(1.0 AS DOUBLE) AS sz, TRUE AS alive FROM items),
-         |a0 AS MATERIALIZED (SELECT id, cid AS root FROM items),
-         |$rounds
-         |SELECT id, CAST(dense_rank() OVER (ORDER BY root) - 1 AS BIGINT) AS cluster
-         |FROM a14 ORDER BY id""".stripMargin
-    },
-
-    // lattice indices: interval re-derived from the data max; rint's
-    // half-even tie handled by the parity CASE (f odd -> f+1)
-    "q_snap" ->
-      s"""WITH $ptsSql,
-         |mx AS (SELECT max(greatest(abs(x), abs(y))) AS m FROM pts),
-         |iv AS (SELECT power(2.0, ceil(ln(m) / ln(2.0))) / power(2.0, 51.0) AS ival
-         |  FROM mx),
-         |r AS (SELECT id, x / ival AS rx, y / ival AS ry FROM pts, iv)
-         |SELECT id,
-         |  CAST(CASE WHEN rx - floor(rx) > 0.5 THEN floor(rx) + 1
-         |            WHEN rx - floor(rx) < 0.5 THEN floor(rx)
-         |            ELSE floor(rx) + abs(CAST(floor(rx) AS BIGINT)) % 2 END AS BIGINT) AS kx,
-         |  CAST(CASE WHEN ry - floor(ry) > 0.5 THEN floor(ry) + 1
-         |            WHEN ry - floor(ry) < 0.5 THEN floor(ry)
-         |            ELSE floor(ry) + abs(CAST(floor(ry) AS BIGINT)) % 2 END AS BIGINT) AS ky
-         |FROM r ORDER BY id""".stripMargin,
-
-    // 8 shape centroids (exact edge-sum mirror, un-floored) agglomerated to
-    // 3 clusters: 5 unrolled merge rounds. Merge-order ties are generic
-    // (distinct centroid distances); output carries ids only.
-    "q_cluster" -> {
-      val rounds = (1 to 5).map { k =>
-        s"""m$k AS MATERIALIZED (SELECT a.cid AS bi, b.cid AS bj,
-           |  b.cx AS bcx, b.cy AS bcy, b.sz AS bsz
-           |  FROM s${k - 1} a JOIN s${k - 1} b ON a.cid < b.cid AND a.alive AND b.alive
-           |  ORDER BY (a.cx - b.cx) * (a.cx - b.cx) + (a.cy - b.cy) * (a.cy - b.cy),
-           |    a.cid, b.cid
-           |  LIMIT 1),
-           |s$k AS MATERIALIZED (SELECT s.cid,
-           |  CASE WHEN s.cid = m.bi THEN (s.cx * s.sz + m.bcx * m.bsz) / (s.sz + m.bsz)
-           |    ELSE s.cx END AS cx,
-           |  CASE WHEN s.cid = m.bi THEN (s.cy * s.sz + m.bcy * m.bsz) / (s.sz + m.bsz)
-           |    ELSE s.cy END AS cy,
-           |  CASE WHEN s.cid = m.bi THEN s.sz + m.bsz ELSE s.sz END AS sz,
-           |  s.alive AND s.cid <> m.bj AS alive
-           |  FROM s${k - 1} s, m$k m),
-           |a$k AS MATERIALIZED (SELECT a.pk,
-           |  CASE WHEN a.root = m.bj THEN m.bi ELSE a.root END AS root
-           |  FROM a${k - 1} a, m$k m)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $oracleEdgesSql,
-         |cent AS (SELECT pk,
-         |  sum((ex1 + ex2) * (ex1 * ey2 - ex2 * ey1))
-         |    / (3.0 * sum(ex1 * ey2 - ex2 * ey1)) AS cx,
-         |  sum((ey1 + ey2) * (ex1 * ey2 - ex2 * ey1))
-         |    / (3.0 * sum(ex1 * ey2 - ex2 * ey1)) AS cy
-         |  FROM edges GROUP BY pk),
-         |items AS (SELECT pk, cx, cy, row_number() OVER (ORDER BY pk) - 1 AS cid FROM cent),
-         |s0 AS MATERIALIZED (SELECT cid, cx, cy, CAST(1.0 AS DOUBLE) AS sz, TRUE AS alive
-         |  FROM items),
-         |a0 AS MATERIALIZED (SELECT pk, cid AS root FROM items),
-         |$rounds
-         |SELECT CAST(pk AS BIGINT) AS poly_key,
-         |  CAST(dense_rank() OVER (ORDER BY root) - 1 AS BIGINT) AS cluster_id
-         |FROM a5 ORDER BY poly_key""".stripMargin
-    },
-
-    // group_by variant: identical merge unroll with the reference's
-    // same-group guard on the candidate pair join (a.g = b.g). UNROLL
-    // INVARIANT: every m$k must be non-empty (an empty candidate CTE would
-    // cross-join s$k to zero rows) — holds because 2 groups x 10 items
-    // admit up to 18 same-group merges and the unroll stops at 14.
-    "q_cluster_grouped" -> {
-      val rounds = (1 to 14).map { k =>
-        s"""m$k AS MATERIALIZED (SELECT a.cid AS bi, b.cid AS bj,
-           |  b.cx AS bcx, b.cy AS bcy, b.sz AS bsz
-           |  FROM s${k - 1} a JOIN s${k - 1} b
-           |  ON a.cid < b.cid AND a.alive AND b.alive AND a.g = b.g
-           |  ORDER BY (a.cx - b.cx) * (a.cx - b.cx) + (a.cy - b.cy) * (a.cy - b.cy),
-           |    a.cid, b.cid
-           |  LIMIT 1),
-           |s$k AS MATERIALIZED (SELECT s.cid, s.g,
-           |  CASE WHEN s.cid = m.bi THEN (s.cx * s.sz + m.bcx * m.bsz) / (s.sz + m.bsz)
-           |    ELSE s.cx END AS cx,
-           |  CASE WHEN s.cid = m.bi THEN (s.cy * s.sz + m.bcy * m.bsz) / (s.sz + m.bsz)
-           |    ELSE s.cy END AS cy,
-           |  CASE WHEN s.cid = m.bi THEN s.sz + m.bsz ELSE s.sz END AS sz,
-           |  s.alive AND s.cid <> m.bj AS alive
-           |  FROM s${k - 1} s, m$k m),
-           |a$k AS MATERIALIZED (SELECT a.id,
-           |  CASE WHEN a.root = m.bj THEN m.bi ELSE a.root END AS root
-           |  FROM a${k - 1} a, m$k m)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $ptsSql,
-         |items AS (SELECT id, x, y, id % 2 AS g, row_number() OVER (ORDER BY id) - 1 AS cid
-         |  FROM pts WHERE id >= 1 AND id <= 20),
-         |s0 AS MATERIALIZED (SELECT cid, g, x AS cx, y AS cy,
-         |  CAST(1.0 AS DOUBLE) AS sz, TRUE AS alive FROM items),
-         |a0 AS MATERIALIZED (SELECT id, cid AS root FROM items),
-         |$rounds
-         |SELECT id, CAST(dense_rank() OVER (ORDER BY root) - 1 AS BIGINT) AS cluster
-         |FROM a14 ORDER BY id""".stripMargin
-    },
-
-    // -simplify (Visvalingam): the heap loop == "remove argmin effective
-    // area; recorded threshold = prefix max of removal areas" — unrolled to
-    // the exact 20 removals of the 22-vertex fixture. Triangle areas,
-    // prefix max, sqrt and the 0.65 linearization are bit-identical IEEE.
-    "q_simplify_vis" -> {
-      val c65 = dl(0.65)
-      val rounds = (1 to 20).map { k =>
-        s"""a$k AS (SELECT idx, x, y,
-           |  lag(x) OVER (ORDER BY idx) AS px, lag(y) OVER (ORDER BY idx) AS py,
-           |  lead(x) OVER (ORDER BY idx) AS nx, lead(y) OVER (ORDER BY idx) AS ny
-           |  FROM s${k - 1} WHERE alive),
-           |m$k AS MATERIALIZED (SELECT idx AS rem,
-           |  abs(((py - ny) * (x - nx) + (y - ny) * (nx - px)) / 2.0) AS v
-           |  FROM a$k WHERE px IS NOT NULL AND nx IS NOT NULL
-           |  ORDER BY v, idx LIMIT 1),
-           |s$k AS MATERIALIZED (SELECT s.idx, s.x, s.y,
-           |  s.alive AND s.idx <> m.rem AS alive
-           |  FROM s${k - 1} s, m$k m)""".stripMargin
-      }.mkString(",\n")
-      val rec = (1 to 20).map(k => s"SELECT $k AS k, rem, v FROM m$k")
-        .mkString("\nUNION ALL ")
-      s"""WITH $ptsSql,
-         |s0 AS MATERIALIZED (SELECT id AS idx, x, y, TRUE AS alive
-         |  FROM pts WHERE id >= 1 AND id <= 22),
-         |$rounds,
-         |rec AS ($rec),
-         |thr AS (SELECT rem AS vi, max(v) OVER (ORDER BY k) AS t FROM rec)
-         |SELECT CAST(vi AS BIGINT) AS vi,
-         |  CAST(floor(sqrt(t) * $c65 * 1000000000.0) AS BIGINT) AS thr_int
-         |FROM thr ORDER BY vi""".stripMargin
-    },
-
-    // -simplify end to end: weighted-Visvalingam removal loop unrolled (14
-    // rounds, partitioned per path; metric = (1 - 0.7*cos)*area in identical
-    // IEEE op order; tie rule (v, idx) = the MinHeap's lexicographic order),
-    // prefix-max monotonic clamp, sqrt*0.65 scaling, EXACT global rank-select
-    // cutoff (k = floor((1-pct)*n)), and the >= retention filter
-    "q_simplify" ->
-      s"""WITH $simplifyThrSql
-         |SELECT g, CAST(16 AS BIGINT) AS n_before,
-         |  CAST(2 + sum(CASE WHEN z >= iv THEN 1 ELSE 0 END) AS BIGINT) AS n_after,
-         |  CAST(floor(iv * 1000000000.0) AS BIGINT) AS interval_int
-         |FROM thrs, iv GROUP BY g, iv ORDER BY g""".stripMargin,
-
-    // -simplify variable=: per-ring interval = global interval * clamp(w);
-    // same threshold machinery, weight w(g) = (g%5)/4 spans {0,.25,.5,.75,1}
-    "q_simplify_variable" ->
-      s"""WITH $simplifyThrSql,
-         |wt AS (SELECT DISTINCT g, CAST(g % 5 AS DOUBLE) / 4.0 AS w FROM thrs),
-         |kept AS (SELECT t.g,
-         |    sum(CASE WHEN t.z >= i.iv * w.w THEN 1 ELSE 0 END) AS n_int,
-         |    min(CASE WHEN t.z >= i.iv * w.w THEN t.vi ELSE 15 END) AS vi2
-         |  FROM thrs t JOIN wt w ON w.g = t.g, iv i GROUP BY t.g, w.w, i.iv)
-         |SELECT k.g, CAST(16 AS BIGINT) AS n_before,
-         |  CAST(2 + k.n_int AS BIGINT) AS n_after,
-         |  CAST(floor(s.x * 1000000.0) AS BIGINT) AS x2_int,
-         |  CAST(floor(s.y * 1000000.0) AS BIGINT) AS y2_int
-         |FROM kept k JOIN s0 s ON s.g = k.g AND s.idx = k.vi2
-         |ORDER BY k.g""".stripMargin,
-
-
-    // -densify: per-segment j/k insertion, exact mirror
-    "q_densify" ->
-      s"""WITH $ptsSql,
-         |pp AS (SELECT id % 3 AS g, id, x, y FROM pts WHERE id >= 1 AND id <= 30),
-         |v AS (SELECT g, row_number() OVER (PARTITION BY g ORDER BY id) - 1 AS seq, x, y FROM pp),
-         |mx AS (SELECT g, max(seq) AS lastseq FROM v GROUP BY g),
-         |seg AS (SELECT a.g, a.seq, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2,
-         |    sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)) AS d
-         |  FROM v a JOIN v b ON a.g = b.g AND b.seq = a.seq + 1),
-         |ks AS (SELECT s.*, CAST(ceil(s.d / 2.5) AS BIGINT) AS k FROM seg s),
-         |js AS (SELECT j FROM generate_series(0, 200) t(j)),
-         |em AS (
-         |  SELECT g, seq, 0 AS j, x1 AS x, y1 AS y FROM ks
-         |  UNION ALL
-         |  SELECT s.g, s.seq, j.j,
-         |    s.x1 + (s.x2 - s.x1) * (CAST(j.j AS DOUBLE) / s.k) AS x,
-         |    s.y1 + (s.y2 - s.y1) * (CAST(j.j AS DOUBLE) / s.k) AS y
-         |  FROM ks s JOIN js j ON s.d > 2.5 AND j.j >= 1 AND j.j < s.k
-         |  UNION ALL
-         |  SELECT v.g, m.lastseq, 0, v.x, v.y FROM v JOIN mx m
-         |    ON v.g = m.g AND v.seq = m.lastseq)
-         |SELECT g, CAST(row_number() OVER (PARTITION BY g ORDER BY seq, j) - 1 AS BIGINT) AS vi,
-         |  x, y
-         |FROM em ORDER BY g, vi""".stripMargin,
-
-    // -dashlines: the analytic dash schedule (half-gap start 0.625, dash
-    // 2.5, gap 1.25 — exact doubles) against the kernel's walk; lengths
-    // round-guarded at 1e4, snap-to-endpoint rule mirrored
-    "q_dashlines" ->
-      s"""WITH $ptsSql,
-         |pp AS (SELECT id % 4 AS g, id, x, y FROM pts WHERE id >= 1 AND id <= 40),
-         |v AS (SELECT g, row_number() OVER (PARTITION BY g ORDER BY id) - 1 AS seq, x, y FROM pp),
-         |seg AS (SELECT a.g, a.seq,
-         |    sqrt((b.x - a.x) * (b.x - a.x) + (b.y - a.y) * (b.y - a.y)) AS d
-         |  FROM v a JOIN v b ON a.g = b.g AND b.seq = a.seq + 1),
-         |lens AS (SELECT g, list(d ORDER BY seq) AS ds FROM seg GROUP BY g),
-         |tot AS (SELECT g, list_sum(ds) AS total, ds FROM lens),
-         |accs AS (SELECT s.g, s.seq, s.d,
-         |    CASE WHEN s.seq = 0 THEN 0.0 ELSE list_sum(t.ds[1:s.seq]) END AS acc
-         |  FROM seg s JOIN tot t ON s.g = t.g),
-         |last AS (SELECT g, max(seq) AS lastseq FROM seg GROUP BY g),
-         |lastseg AS (SELECT a.g, a.acc AS lls FROM accs a
-         |  JOIN last l ON a.g = l.g AND a.seq = l.lastseq),
-         |ks AS (SELECT k FROM generate_series(0, 400) t(k)),
-         |dashes AS (SELECT t.g, k.k,
-         |    0.625 + 3.75 * CAST(k.k AS DOUBLE) AS a,
-         |    0.625 + 3.75 * CAST(k.k AS DOUBLE) + 2.5 AS b,
-         |    t.total, ls.lls,
-         |    CASE WHEN k.k = 0 THEN 0.0
-         |      ELSE 0.625 + 3.75 * CAST(k.k - 1 AS DOUBLE) + 2.5 END AS prevb
-         |  FROM tot t JOIN lastseg ls ON t.g = ls.g, ks k
-         |  WHERE 0.625 + 3.75 * CAST(k.k AS DOUBLE) < t.total),
-         |live AS (SELECT * FROM dashes WHERE NOT (a > lls AND
-         |    (a - greatest(prevb, lls)) / (total - greatest(prevb, lls)) > 0.999)),
-         |eff AS (SELECT g, k, a, total,
-         |    CASE WHEN b >= total THEN total
-         |      WHEN b > lls AND (b - greatest(a, lls)) / (total - greatest(a, lls)) > 0.999
-         |        THEN total
-         |      ELSE b END AS beff
-         |  FROM live),
-         |cnt AS (SELECT e.g, e.k, e.a, e.beff,
-         |    (SELECT count(*) FROM accs v2
-         |      WHERE v2.g = e.g AND v2.seq >= 1 AND v2.acc > e.a AND v2.acc < e.beff) AS interior
-         |  FROM eff e)
-         |SELECT g, CAST(row_number() OVER (PARTITION BY g ORDER BY k) - 1 AS BIGINT) AS part,
-         |  CAST(2 + interior AS BIGINT) AS n_vertices,
-         |  CAST(round((beff - a) * 10000.0) AS BIGINT) AS len_q
-         |FROM cnt ORDER BY g, part""".stripMargin,
-
-    // -points interpolated: emission bounds b_i = acc_i + d_i + eps are
-    // sequential-fold exact (list_sum), next_j = j*2.5 is binary-exact, so
-    // every emitted vertex mirrors bit for bit
-    "q_interpolate" ->
-      s"""WITH $ptsSql,
-         |pp AS (SELECT id % 4 AS g, id, x, y FROM pts WHERE id >= 1 AND id <= 40),
-         |v AS (SELECT g, row_number() OVER (PARTITION BY g ORDER BY id) - 1 AS seq, x, y FROM pp),
-         |seg AS (SELECT a.g, a.seq, a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2,
-         |    sqrt((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)) AS d
-         |  FROM v a JOIN v b ON a.g = b.g AND b.seq = a.seq + 1),
-         |lens AS (SELECT g, list(d ORDER BY seq) AS ds FROM seg GROUP BY g),
-         |tot AS (SELECT g, list_sum(ds) AS total,
-         |    1e-12 * greatest(1.0, list_sum(ds)) AS eps, ds FROM lens),
-         |accs AS (SELECT s.g, s.seq, s.x1, s.y1, s.x2, s.y2, s.d, t.total, t.eps,
-         |    CASE WHEN s.seq = 0 THEN 0.0 ELSE list_sum(t.ds[1:s.seq]) END AS acc
-         |  FROM seg s JOIN tot t ON s.g = t.g),
-         |js AS (SELECT j FROM generate_series(1, 1000) t(j)),
-         |em AS (SELECT a.g, j.j,
-         |    a.x1 + (a.x2 - a.x1) * ((CAST(j.j AS DOUBLE) * 2.5 - a.acc) / a.d) AS x,
-         |    a.y1 + (a.y2 - a.y1) * ((CAST(j.j AS DOUBLE) * 2.5 - a.acc) / a.d) AS y
-         |  FROM accs a JOIN js j
-         |    ON CAST(j.j AS DOUBLE) * 2.5 > a.acc + a.eps
-         |    AND CAST(j.j AS DOUBLE) * 2.5 <= a.acc + a.d + a.eps
-         |    AND CAST(j.j AS DOUBLE) * 2.5 < a.total - a.eps),
-         |heads AS (SELECT g, 0 AS j, x, y FROM v WHERE seq = 0),
-         |allv AS (SELECT * FROM heads UNION ALL SELECT * FROM em)
-         |SELECT g, CAST(row_number() OVER (PARTITION BY g ORDER BY j) - 1 AS BIGINT) AS vi,
-         |  x, y
-         |FROM allv ORDER BY g, vi""".stripMargin,
-
-    // -points inner (anchor): 4 unrolled grid-refinement rounds; inside =
-    // upward-ray parity (equivalent to the kernel's even-odd combineRings in
-    // general position), distance = clamped point-segment distance in the
-    // kernel's exact op order; ties keep the earlier (gy, gx) like the scan
-    "q_anchor" -> {
-      val distExpr =
-        """(SELECT min(sqrt(
-          |   (c.px - (e.ex1 + (e.ex2 - e.ex1) *
-          |     greatest(0.0, least(1.0,
-          |       ((c.px - e.ex1) * (e.ex2 - e.ex1) + (c.py - e.ey1) * (e.ey2 - e.ey1))
-          |       / ((e.ex2 - e.ex1) * (e.ex2 - e.ex1) + (e.ey2 - e.ey1) * (e.ey2 - e.ey1)))))) *
-          |   (c.px - (e.ex1 + (e.ex2 - e.ex1) *
-          |     greatest(0.0, least(1.0,
-          |       ((c.px - e.ex1) * (e.ex2 - e.ex1) + (c.py - e.ey1) * (e.ey2 - e.ey1))
-          |       / ((e.ex2 - e.ex1) * (e.ex2 - e.ex1) + (e.ey2 - e.ey1) * (e.ey2 - e.ey1)))))) +
-          |   (c.py - (e.ey1 + (e.ey2 - e.ey1) *
-          |     greatest(0.0, least(1.0,
-          |       ((c.px - e.ex1) * (e.ex2 - e.ex1) + (c.py - e.ey1) * (e.ey2 - e.ey1))
-          |       / ((e.ex2 - e.ex1) * (e.ex2 - e.ex1) + (e.ey2 - e.ey1) * (e.ey2 - e.ey1)))))) *
-          |   (c.py - (e.ey1 + (e.ey2 - e.ey1) *
-          |     greatest(0.0, least(1.0,
-          |       ((c.px - e.ex1) * (e.ex2 - e.ex1) + (c.py - e.ey1) * (e.ey2 - e.ey1))
-          |       / ((e.ex2 - e.ex1) * (e.ex2 - e.ex1) + (e.ey2 - e.ey1) * (e.ey2 - e.ey1))))))))
-          | FROM edges e WHERE e.pk = c.pk)""".stripMargin.replace("\n", " ").replaceAll("\\|", "")
-      val insideExpr =
-        """((SELECT count(*) FROM edges e WHERE e.pk = c.pk
-          |  AND ((e.ex1 > c.px) <> (e.ex2 > c.px))
-          |  AND e.ey1 + (c.px - e.ex1) * (e.ey2 - e.ey1) / (e.ex2 - e.ex1) > c.py) % 2 = 1)"""
-          .stripMargin.replace("\n", " ").replaceAll("\\|", "")
-      val rounds = (1 to 4).map { k =>
-        s"""c$k AS (SELECT s.pk, s.x0, s.y0, s.x1, s.y1, s.bx, s.by, s.bd,
-           |    gy.i AS gy, gx.i AS gx,
-           |    s.x0 + (s.x1 - s.x0) * CAST(gx.i AS DOUBLE) / 8.0 AS px,
-           |    s.y0 + (s.y1 - s.y0) * CAST(gy.i AS DOUBLE) / 8.0 AS py
-           |  FROM s${k - 1} s, g9 gx, g9 gy),
-           |d$k AS MATERIALIZED (SELECT c.*, $distExpr AS dist
-           |  FROM c$k c WHERE $insideExpr),
-           |w$k AS MATERIALIZED (SELECT pk, px, py, dist FROM (
-           |    SELECT pk, px, py, dist,
-           |      row_number() OVER (PARTITION BY pk ORDER BY dist DESC, gy, gx) AS rn
-           |    FROM d$k WHERE dist > bd) t WHERE rn = 1),
-           |s$k AS MATERIALIZED (SELECT s.pk,
-           |    coalesce(w.px, s.bx) - (s.x1 - s.x0) / 8.0 AS x0,
-           |    coalesce(w.py, s.by) - (s.y1 - s.y0) / 8.0 AS y0,
-           |    coalesce(w.px, s.bx) + (s.x1 - s.x0) / 8.0 AS x1,
-           |    coalesce(w.py, s.by) + (s.y1 - s.y0) / 8.0 AS y1,
-           |    coalesce(w.px, s.bx) AS bx, coalesce(w.py, s.by) AS by,
-           |    coalesce(w.dist, s.bd) AS bd
-           |  FROM s${k - 1} s LEFT JOIN w$k w USING (pk))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH $oracleEdgesSql,
-         |g9 AS (SELECT i FROM generate_series(0, 8) t(i)),
-         |bb AS (SELECT pk,
-         |    min(least(ex1, ex2)) AS x0, min(least(ey1, ey2)) AS y0,
-         |    max(greatest(ex1, ex2)) AS x1, max(greatest(ey1, ey2)) AS y1
-         |  FROM edges GROUP BY pk),
-         |ctr AS (SELECT pk, x0, y0, x1, y1,
-         |    (x0 + x1) / 2.0 AS px, (y0 + y1) / 2.0 AS py FROM bb),
-         |s0 AS MATERIALIZED (SELECT c.pk, c.x0, c.y0, c.x1, c.y1,
-         |    c.px AS bx, c.py AS by,
-         |    CASE WHEN $insideExpr THEN $distExpr ELSE -1.0 END AS bd
-         |  FROM ctr c),
-         |$rounds
-         |SELECT pk, CAST(floor(bx * 1000000000.0) AS BIGINT) AS x_int,
-         |  CAST(floor(by * 1000000000.0) AS BIGINT) AS y_int
-         |FROM s4 ORDER BY pk""".stripMargin
-    },
-
-    // -smooth kernel: two unrolled Chaikin passes — interior vertices emit
-    // v+w(prev-v) and v+w(next-v), endpoints stay; identical IEEE affine ops
-    "q_smooth_exact" -> {
-      def pass(inp: String, out: String): String =
-        s"""a$out AS (SELECT seq, x, y,
-           |  lag(x) OVER (ORDER BY seq) AS px, lag(y) OVER (ORDER BY seq) AS py,
-           |  lead(x) OVER (ORDER BY seq) AS nx, lead(y) OVER (ORDER BY seq) AS ny
-           |  FROM $inp),
-           |p$out AS (
-           |  SELECT 2 * seq AS k, x, y FROM a$out WHERE nx IS NULL
-           |  UNION ALL SELECT 2 * seq + 1, x, y FROM a$out WHERE px IS NULL
-           |  UNION ALL SELECT 2 * seq, x + 0.25 * (px - x), y + 0.25 * (py - y)
-           |    FROM a$out WHERE px IS NOT NULL AND nx IS NOT NULL
-           |  UNION ALL SELECT 2 * seq + 1, x + 0.25 * (nx - x), y + 0.25 * (ny - y)
-           |    FROM a$out WHERE px IS NOT NULL AND nx IS NOT NULL),
-           |$out AS MATERIALIZED (SELECT row_number() OVER (ORDER BY k) - 1 AS seq, x, y
-           |  FROM p$out)""".stripMargin
-      s"""WITH $ptsSql,
-         |s0 AS (SELECT row_number() OVER (ORDER BY id) - 1 AS seq, x, y
-         |  FROM pts WHERE id >= 1 AND id <= 20),
-         |${pass("s0", "s1")},
-         |${pass("s1", "s2")}
-         |SELECT CAST(seq AS BIGINT) AS vi, x, y FROM s2 ORDER BY vi""".stripMargin
-    },
-
-    // spherical geodesic buffer ring: the direct problem at 32 bearings,
-    // identical op order, 1e-7-degree floors
-    "q_geodesic_ring" ->
-      s"""WITH $ptsSql,
-         |pp AS (SELECT id, (x - 50.0) * 3.2 AS lon, (y - 50.0) * 1.2 AS lat,
-         |  CAST(((id * 37) % 900) * 1000 + 10000 AS DOUBLE) AS radius
-         |  FROM pts WHERE id >= 1 AND id <= 10),
-         |vs AS (SELECT vi FROM generate_series(0, 32) t(vi)),
-         |b AS (SELECT id, vi,
-         |  lat * (pi() / 180.0) AS phi, lon * (pi() / 180.0) AS lam,
-         |  radius / ${dl(6371008.8)} AS delta,
-         |  2.0 * pi() * CAST(vi % 32 AS DOUBLE) / 32.0 AS theta
-         |  FROM pp, vs),
-         |c AS (SELECT id, vi, phi, lam, theta,
-         |  sin(delta) AS sinD, cos(delta) AS cosD,
-         |  sin(phi) AS sinP, cos(phi) AS cosP
-         |  FROM b),
-         |d AS (SELECT id, vi, lam, theta, sinD, cosD, sinP, cosP,
-         |  sinP * cosD + cosP * sinD * cos(theta) AS sinLat2
-         |  FROM c),
-         |e AS (SELECT id, vi,
-         |  asin(greatest(-1.0, least(1.0, sinLat2))) AS lat2,
-         |  lam + atan2(sin(theta) * sinD * cosP, cosD - sinP * sinLat2) AS lon2
-         |  FROM d)
-         |SELECT id, CAST(vi AS BIGINT) AS vi,
-         |  CAST(floor(lon2 / (pi() / 180.0) * 10000000.0) AS BIGINT) AS lon_int,
-         |  CAST(floor(lat2 / (pi() / 180.0) * 10000000.0) AS BIGINT) AS lat_int
-         |FROM e ORDER BY id, vi""".stripMargin,
-
-    // spherical -simplify kernel: XYZ projection + 3D Visvalingam unrolled
-    // to the exact 18 removals; det arithmetic mirrors Geom.triangleArea3D
-    // term order, removal thresholds = prefix max, mm floors
-    "q_simplify_sph" -> {
-      val c65 = dl(0.65)
-      def det(a1: String, a2: String, b1: String, b2: String, c1: String, c2: String) =
-        s"($a1 * $b2 - $a1 * $c2 + $b1 * $c2 - $b1 * $a2 + $c1 * $a2 - $c1 * $b2)"
-      val dxy = det("px", "py", "x", "y", "nx", "ny")
-      val dxz = det("px", "pz", "x", "z", "nx", "nz")
-      val dyz = det("py", "pz", "y", "z", "ny", "nz")
-      val areaExpr =
-        s"0.5 * sqrt($dxy * $dxy + $dxz * $dxz + $dyz * $dyz)"
-      val rounds = (1 to 18).map { k =>
-        s"""a$k AS (SELECT idx, x, y, z,
-           |  lag(x) OVER (ORDER BY idx) AS px, lag(y) OVER (ORDER BY idx) AS py,
-           |  lag(z) OVER (ORDER BY idx) AS pz,
-           |  lead(x) OVER (ORDER BY idx) AS nx, lead(y) OVER (ORDER BY idx) AS ny,
-           |  lead(z) OVER (ORDER BY idx) AS nz
-           |  FROM s${k - 1} WHERE alive),
-           |m$k AS MATERIALIZED (SELECT idx AS rem, $areaExpr AS v
-           |  FROM a$k WHERE px IS NOT NULL AND nx IS NOT NULL
-           |  ORDER BY v, idx LIMIT 1),
-           |s$k AS MATERIALIZED (SELECT s.idx, s.x, s.y, s.z,
-           |  s.alive AND s.idx <> m.rem AS alive
-           |  FROM s${k - 1} s, m$k m)""".stripMargin
-      }.mkString(",\n")
-      val rec = (1 to 18).map(k => s"SELECT $k AS k, rem, v FROM m$k")
-        .mkString("\nUNION ALL ")
-      s"""WITH $ptsSql,
-         |ll AS (SELECT id AS idx, (x - 50.0) * 3.2 AS lon, (y - 50.0) * 1.2 AS lat
-         |  FROM pts WHERE id >= 1 AND id <= 20),
-         |s0 AS MATERIALIZED (SELECT idx,
-         |  cos(lon * pi() / 180.0) * cos(lat * pi() / 180.0) * 6378137.0 AS x,
-         |  sin(lon * pi() / 180.0) * cos(lat * pi() / 180.0) * 6378137.0 AS y,
-         |  sin(lat * pi() / 180.0) * 6378137.0 AS z,
-         |  TRUE AS alive FROM ll),
-         |$rounds,
-         |rec AS ($rec),
-         |thr AS (SELECT rem AS vi, max(v) OVER (ORDER BY k) AS t FROM rec)
-         |SELECT CAST(vi AS BIGINT) AS vi,
-         |  CAST(floor(sqrt(t) * $c65 * 1000.0) AS BIGINT) AS thr_mm
-         |FROM thr ORDER BY vi""".stripMargin
-    },
-
-    // -svg-style: where=-gated style columns (excluded rows -> NULL)
-    "q_svg_style" ->
-      s"""WITH $ptsSql
-         |SELECT id,
-         |  CASE WHEN x > 50.0 THEN 'red' END AS fill,
-         |  CASE WHEN x > 50.0 THEN CAST(floor(y / 10.0) AS BIGINT) END AS sw
-         |FROM pts ORDER BY id""".stripMargin,
-
-    // -filter-islands2: island = no shared full-side edge (only adjacent
-    // s=10 squares share); removed when area < 120 and no hole inside
-    "q_filter_islands2" ->
-      s"""WITH $ptsSql,
-         |cells AS (SELECT DISTINCT CAST(floor(x / 10.0) AS BIGINT) AS cx,
-         |    CAST(floor(y / 10.0) AS BIGINT) AS cy FROM pts),
-         |cc AS (SELECT cx, cy,
-         |    CASE WHEN cx % 2 = 0 THEN 10.0 ELSE 4.0 + CAST(cy % 2 AS DOUBLE) * 3.0 END AS s
-         |  FROM cells),
-         |island AS (SELECT cx, cy, s,
-         |    NOT (s = 10.0 AND EXISTS (SELECT 1 FROM cc b
-         |      WHERE b.cx = cc.cx AND abs(b.cy - cc.cy) = 1 AND b.s = 10.0)) AS isl
-         |  FROM cc),
-         |removed AS (SELECT cx * 1000 + cy AS rid FROM island
-         |  WHERE isl AND s * s < 120.0 AND NOT ((cx * 7 + cy) % 5 = 0)),
-         |allrings AS (SELECT cx * 1000 + cy AS rid FROM cc
-         |  UNION ALL SELECT cx * 1000 + cy + 500000 FROM cc WHERE (cx * 7 + cy) % 5 = 0)
-         |SELECT rid FROM allrings WHERE rid NOT IN (SELECT rid FROM removed)
-         |ORDER BY rid""".stripMargin,
-
-    // keep-first = smallest under the full-tuple ordering of the non-key
-    // source columns, replayed with a row_number window; the where= filter
-    // gates eligibility BEFORE the keep-first pick
-    "q_join_where" ->
-      """WITH src AS (SELECT o_custkey, o_orderkey, o_orderstatus, o_totalprice
-        |  FROM orders WHERE o_totalprice > 150000.0),
-        |f AS (SELECT *, row_number() OVER (PARTITION BY o_custkey
-        |    ORDER BY o_orderkey, o_orderstatus, o_totalprice) AS rn FROM src)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderstatus, o_totalprice
-        |FROM customer LEFT JOIN f ON c_custkey = f.o_custkey AND f.rn = 1
-        |ORDER BY c_custkey""".stripMargin,
-
-    // hand-transcribed from the reference registry: the 27 ids its own src
-    // registers (mapshaper-projections.mjs:14-60 aliases + projection-index
-    // + the dymaxion/butterfly/narukawa/lee register* calls)
-    "q_projections" ->
-      """SELECT proj_id FROM (VALUES
-        |  ('aea'),('aeqd'),('butterfly'),('butterfly2'),('cahill_keyes'),
-        |  ('calm'),('cea'),('dymaxion'),('dymaxion2'),('eqc'),('eqearth'),
-        |  ('gnom'),('laea'),('lcc'),('longlat'),('markley'),('merc'),
-        |  ('moll'),('natearth'),('narukawa2022'),('ortho'),('robin'),
-        |  ('sinu'),('stere'),('tmerc'),('utm'),('wintri')) t(proj_id)
-        |ORDER BY proj_id""".stripMargin,
-
-    "q_filter_slivers" ->
-      """WITH g AS (SELECT DISTINCT (c_custkey % 40) AS g FROM customer),
-        |f AS (SELECT g, CAST(i AS INT) AS i,
-        |    (g * 3 + i * 5) % 11 + 1 AS w, (g * 7 + i * 2) % 9 + 1 AS h
-        |  FROM g, (VALUES (0), (1), (2)) t(i))
-        |SELECT g, i FROM f WHERE CAST(w * h AS DOUBLE) >= 30.0
-        |ORDER BY g, i""".stripMargin,
-
-    "q_grid_hex_flat" -> hexMirrorSql(flatTop = true),
-
-    // one component per family (min sid = 3g); union area of three
-    // pairwise-overlapping 10x10 rects by inclusion-exclusion (integer
-    // arithmetic throughout — the mosaic's traced faces sum to the same)
-    "q_dissolve2_dist" ->
-      """WITH gg AS (SELECT DISTINCT (c_custkey % 50) AS g FROM customer),
-        |r AS (SELECT g, i,
-        |    CAST((g % 10) * 40 + (g * (3 + 2 * i)) % 9 AS DOUBLE) AS x,
-        |    CAST((g // 10) * 40 + (g * (5 + 3 * i)) % 9 AS DOUBLE) AS y
-        |  FROM gg, (VALUES (0), (1), (2)) t(i)),
-        |pw AS (SELECT a.g,
-        |    sum(greatest(0.0, least(a.x, b.x) + 10.0 - greatest(a.x, b.x)) *
-        |        greatest(0.0, least(a.y, b.y) + 10.0 - greatest(a.y, b.y))) AS psum
-        |  FROM r a JOIN r b ON a.g = b.g AND a.i < b.i GROUP BY a.g),
-        |t3 AS (SELECT g,
-        |    greatest(0.0, min(x) + 10.0 - max(x)) *
-        |    greatest(0.0, min(y) + 10.0 - max(y)) AS ov3
-        |  FROM r GROUP BY g)
-        |SELECT pw.g * 3 AS component, CAST(3 AS BIGINT) AS n_shapes_in,
-        |  CAST(1 AS BIGINT) AS n_rings_out,
-        |  CAST(round((300.0 - psum + ov3) * 100.0, 0) AS BIGINT) AS area_int
-        |FROM pw JOIN t3 ON pw.g = t3.g
-        |ORDER BY component""".stripMargin,
-
-    // every PNG pixel re-synthesized from the SplitMix64 generator (shared
-    // ahash chain), tile windows replayed with the same integer bounds
-    // (xa = tx*w/3, xb = max(xa+1, (tx+1)*w/3)); per-pixel luma of a gray
-    // pixel is the gray value itself ((g*299 + g*587 + g*114)/1000 = g)
-    "q_tile_stats" ->
-      s"""WITH ${ahashCtes(300)},
-         |tt AS (SELECT ti FROM generate_series(0, 2) t(ti)),
-         |tc AS (SELECT img.image_id, tx.ti AS tile_x, ty.ti AS tile_y,
-         |    (tx.ti * w) // 3 AS xa,
-         |    greatest((tx.ti * w) // 3 + 1, ((tx.ti + 1) * w) // 3) AS xb,
-         |    (ty.ti * h) // 3 AS ya,
-         |    greatest((ty.ti * h) // 3 + 1, ((ty.ti + 1) * h) // 3) AS yb
-         |  FROM img, tt tx, tt ty)
-         |SELECT c.image_id, CAST(c.tile_x AS INT) AS tile_x,
-         |  CAST(c.tile_y AS INT) AS tile_y,
-         |  CAST(sum(p.g) AS DOUBLE) / count(*) AS mean_luma
-         |FROM px p JOIN tc c ON p.image_id = c.image_id
-         |  AND p.x >= c.xa AND p.x < c.xb AND p.y >= c.ya AND p.y < c.yb
-         |GROUP BY c.image_id, c.tile_x, c.tile_y
-         |ORDER BY 1, 2, 3""".stripMargin,
-
-    "q_subdivide_count" -> subdivideMirrorSql,
-
-    "q_dots_even" -> dotsEvenSql,
-
-    // hand-transcribed ESRI WKT1 strings (the grammar of the reference's
-    // own .prj fixtures); @G = the shared WGS84 GEOGCS block
-    "q_wkt_write" ->
-      """WITH g AS (SELECT 'GEOGCS["GCS_WGS_1984",DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],PRIMEM["Greenwich",0.0],UNIT["Degree",0.0174532925199433]]' AS gs),
-        |v AS (SELECT * FROM (VALUES
-        |  ('longlat', '@G'),
-        |  ('tmerc', 'PROJCS["Transverse_Mercator",@G,PROJECTION["Transverse_Mercator"],PARAMETER["False_Easting",500000.0],PARAMETER["False_Northing",0.0],PARAMETER["Central_Meridian",114.0],PARAMETER["Scale_Factor",1.0],PARAMETER["Latitude_Of_Origin",0.0],UNIT["Meter",1.0]]'),
-        |  ('lcc', 'PROJCS["Lambert_Conformal_Conic",@G,PROJECTION["Lambert_Conformal_Conic_2SP"],PARAMETER["Standard_Parallel_1",33.0],PARAMETER["Standard_Parallel_2",45.0],PARAMETER["Latitude_Of_Origin",39.0],PARAMETER["Central_Meridian",-96.0],UNIT["Meter",1.0]]'),
-        |  ('aea', 'PROJCS["Albers",@G,PROJECTION["Albers"],PARAMETER["Standard_Parallel_1",29.5],PARAMETER["Standard_Parallel_2",45.5],PARAMETER["Latitude_Of_Origin",23.0],PARAMETER["Central_Meridian",-96.0],UNIT["Meter",1.0]]'),
-        |  ('merc', 'PROJCS["Mercator",@G,PROJECTION["Mercator"],PARAMETER["Central_Meridian",12.0],UNIT["Meter",1.0]]'),
-        |  ('robin', 'PROJCS["Robinson",@G,PROJECTION["Robinson"],PARAMETER["Central_Meridian",10.0],UNIT["Meter",1.0]]'),
-        |  ('sinu', 'PROJCS["Sinusoidal",@G,PROJECTION["Sinusoidal"],PARAMETER["Central_Meridian",-30.0],UNIT["Meter",1.0]]'),
-        |  ('moll', 'PROJCS["Mollweide",@G,PROJECTION["Mollweide"],PARAMETER["Central_Meridian",5.0],UNIT["Meter",1.0]]'),
-        |  ('wintri', 'PROJCS["Winkel_Tripel",@G,PROJECTION["Winkel_Tripel"],PARAMETER["Central_Meridian",0.0],UNIT["Meter",1.0]]'),
-        |  ('laea', 'PROJCS["Lambert_Azimuthal_Equal_Area",@G,PROJECTION["Lambert_Azimuthal_Equal_Area"],PARAMETER["Latitude_Of_Origin",45.0],PARAMETER["Central_Meridian",8.0],UNIT["Meter",1.0]]'),
-        |  ('ortho', 'PROJCS["Orthographic",@G,PROJECTION["Orthographic"],PARAMETER["Latitude_Of_Origin",40.0],PARAMETER["Central_Meridian",-100.0],UNIT["Meter",1.0]]'),
-        |  ('stere', 'PROJCS["Stereographic",@G,PROJECTION["Stereographic"],PARAMETER["Latitude_Of_Origin",60.0],PARAMETER["Central_Meridian",-45.0],UNIT["Meter",1.0]]'),
-        |  ('eqc', 'PROJCS["Equidistant_Cylindrical",@G,PROJECTION["Equidistant_Cylindrical"],PARAMETER["Standard_Parallel_1",30.0],PARAMETER["Central_Meridian",15.0],UNIT["Meter",1.0]]')
-        |) t(proj_id, w))
-        |SELECT proj_id, replace(w, '@G', gs) AS wkt FROM v, g
-        |ORDER BY proj_id""".stripMargin,
-
-    // the Matrix2D chain from raw literals: rotate-about(ox,oy) then
-    // scale-about then translate, each accumulator term in the engine's
-    // exact op order; mercator/sinusoidal forwards inline (same op order
-    // as Crs); floor x100 = cm-exact
-    "q_mixed" ->
-      s"""WITH $ptsSql,
-         |ll AS (SELECT id, x * 2.7 - 180.0 AS lon, y * 0.8 - 40.0 AS lat FROM pts),
-         |fr AS (SELECT id, lon, lat, CASE
-         |    WHEN lon >= -30.0 AND lon <= 30.0 AND lat >= -40.0 AND lat <= 40.0 THEN 0
-         |    WHEN lon >= 30.0 AND lon <= 90.0 AND lat >= -40.0 AND lat <= 40.0 THEN 1
-         |    WHEN lon >= -180.0 AND lon <= -30.0 AND lat >= -80.0 AND lat <= 80.0 THEN 2
-         |    ELSE -1 END AS frame FROM ll),
-         |k0 AS (SELECT
-         |    (30.0 * pi()) / 180.0 AS q,
-         |    ((60.0 - 0.0) * (pi() / 180.0)) * 6378137.0 AS ox1,
-         |    ln(tan(pi() / 4.0 + ((10.0 * (pi() / 180.0)) / 2.0))) * 6378137.0 AS oy1,
-         |    ((-90.0 - 0.0) * (pi() / 180.0)) * 6378137.0 AS ox2,
-         |    ln(tan(pi() / 4.0 + ((0.0 * (pi() / 180.0)) / 2.0))) * 6378137.0 AS oy2),
-         |k1 AS (SELECT *, cos(q) AS cq, sin(q) AS sq FROM k0),
-         |k2 AS (SELECT *,
-         |    cq * 0.5 AS a1, sq * 0.5 AS b1, (-sq) * 0.5 AS c1, cq * 0.5 AS d1,
-         |    (((ox1 - ox1 * cq) + oy1 * sq) - ox1 * (0.5 - 1.0))
-         |      + ((2000000.0 - ox1) + 1000.0) AS tx1,
-         |    (((oy1 - ox1 * sq) - oy1 * cq) - oy1 * (0.5 - 1.0))
-         |      + ((-1000000.0 - oy1) + (-500.0)) AS ty1,
-         |    (0.0 - ox2 * (2.0 - 1.0)) + ((-4000000.0 - ox2) + 0.0) AS tx2,
-         |    (0.0 - oy2 * (2.0 - 1.0)) + ((0.0 - oy2) + 0.0) AS ty2
-         |  FROM k1),
-         |pm AS (SELECT id, frame,
-         |    ((lon - 0.0) * (pi() / 180.0)) * cos(lat * (pi() / 180.0)) * 6378137.0 AS s_x,
-         |    (lat * (pi() / 180.0)) * 6378137.0 AS s_y,
-         |    ((lon - 0.0) * (pi() / 180.0)) * 6378137.0 AS m_x,
-         |    ln(tan(pi() / 4.0 + ((lat * (pi() / 180.0)) / 2.0))) * 6378137.0 AS m_y
-         |  FROM fr WHERE frame >= 0)
-         |SELECT id, CAST(frame AS BIGINT) AS frame,
-         |  CAST(floor((CASE frame
-         |    WHEN 0 THEN s_x * 1.0 + s_y * 0.0 + 0.0
-         |    WHEN 1 THEN m_x * a1 + m_y * c1 + tx1
-         |    ELSE m_x * 2.0 + m_y * 0.0 + tx2 END) * 100.0) AS BIGINT) AS x_int,
-         |  CAST(floor((CASE frame
-         |    WHEN 0 THEN s_x * 0.0 + s_y * 1.0 + 0.0
-         |    WHEN 1 THEN m_x * b1 + m_y * d1 + ty1
-         |    ELSE m_x * 0.0 + m_y * 2.0 + ty2 END) * 100.0) AS BIGINT) AS y_int
-         |FROM pm, k2 ORDER BY id""".stripMargin,
-
-    "q_seam_cut" -> seamCutSql,
-
-    // the salted path must reproduce the broadcast path's mirror bit-for-bit
-    "q_pip_salted" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT id, CAST(pk AS BIGINT) AS poly_key FROM hits WHERE crossings % 2 = 1
-         |ORDER BY id, poly_key""".stripMargin,
-
-    // every disk id re-derived from the Morton interleave arithmetic
-    "q_cell_disk" ->
-      s"""WITH $ptsSql,
-         |mzin AS (SELECT id,
-         |    CAST(floor(x / 5.625) AS BIGINT) + dx AS ix,
-         |    CAST(floor(y / 5.625) AS BIGINT) + dy AS iy
-         |  FROM pts,
-         |    (VALUES (-2), (-1), (0), (1), (2)) tx(dx),
-         |    (VALUES (-2), (-1), (0), (1), (2)) ty(dy)
-         |  WHERE id <= 120),
-         |${mortonCtes(6, Seq("id"))}
-         |SELECT id, cell AS ncell FROM mz ORDER BY id, ncell""".stripMargin,
-
-    // the bounded-input cluster contract end to end: res-12 cell pre-agg
-    // (Morton ids via the interleave CTE), weighted centroids (dyadic-exact
-    // in any order), then the 31-round weighted greedy merge sequence
-    // unrolled exactly as the kernel scans it (strict-<, first-pair ties)
-    "q_cluster_scale" -> {
-      val rounds = (1 to 31).map { k =>
-        s"""cm$k AS MATERIALIZED (SELECT a.cid AS bi, b.cid AS bj,
-           |  b.cx AS bcx, b.cy AS bcy, b.wt AS bwt
-           |  FROM cs${k - 1} a JOIN cs${k - 1} b ON a.cid < b.cid AND a.alive AND b.alive
-           |  ORDER BY (a.cx - b.cx) * (a.cx - b.cx) + (a.cy - b.cy) * (a.cy - b.cy),
-           |    a.cid, b.cid
-           |  LIMIT 1),
-           |cs$k AS MATERIALIZED (SELECT s.cid,
-           |  CASE WHEN s.cid = m.bi THEN (s.cx * s.wt + m.bcx * m.bwt) / (s.wt + m.bwt)
-           |    ELSE s.cx END AS cx,
-           |  CASE WHEN s.cid = m.bi THEN (s.cy * s.wt + m.bcy * m.bwt) / (s.wt + m.bwt)
-           |    ELSE s.cy END AS cy,
-           |  CASE WHEN s.cid = m.bi THEN s.wt + m.bwt ELSE s.wt END AS wt,
-           |  s.alive AND s.cid <> m.bj AS alive
-           |  FROM cs${k - 1} s, cm$k m),
-           |ca$k AS MATERIALIZED (SELECT a.cell,
-           |  CASE WHEN a.root = m.bj THEN m.bi ELSE a.root END AS root
-           |  FROM ca${k - 1} a, cm$k m)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH pp AS (SELECT c_custkey AS id,
-         |    CAST((c_custkey % 12) % 4 AS DOUBLE) * 30.0 + CAST(c_custkey % 7 AS DOUBLE) / 64.0 AS px,
-         |    CAST((c_custkey % 12) // 4 AS DOUBLE) * 20.0 + CAST(c_custkey % 5 AS DOUBLE) / 32.0 AS py
-         |  FROM customer WHERE c_custkey BETWEEN 1 AND 60),
-         |mzin AS (SELECT id, px, py,
-         |    CAST(floor(px / 0.087890625) AS BIGINT) AS ix,
-         |    CAST(floor(py / 0.087890625) AS BIGINT) AS iy FROM pp),
-         |${mortonCtes(12, Seq("id", "px", "py"))},
-         |sumr AS (SELECT cell, sum(px) AS sx, sum(py) AS sy,
-         |    CAST(count(*) AS DOUBLE) AS w FROM mz GROUP BY cell),
-         |items AS (SELECT cell, sx / w AS cx, sy / w AS cy, w AS wt,
-         |    row_number() OVER (ORDER BY cell) - 1 AS cid FROM sumr),
-         |cs0 AS MATERIALIZED (SELECT cid, cx, cy, wt, TRUE AS alive FROM items),
-         |ca0 AS MATERIALIZED (SELECT cell, cid AS root FROM items),
-         |$rounds,
-         |lbl AS (SELECT cell, CAST(dense_rank() OVER (ORDER BY root) - 1 AS BIGINT) AS cluster
-         |  FROM ca31)
-         |SELECT p.id, l.cluster FROM mz p JOIN lbl l ON p.cell = l.cell
-         |ORDER BY p.id""".stripMargin
-    },
-
-    // exactly-once streaming ingest ⇒ the batch PIP row set, no more, no less
-    "q_stream_pip" ->
-      s"""WITH $ptsSql,
-         |$oracleEdgesSql,
-         |$pipHitsSql
-         |SELECT id, CAST(pk AS BIGINT) AS poly_key FROM hits WHERE crossings % 2 = 1
-         |ORDER BY id, poly_key""".stripMargin
-  )
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.byName.map { case (name, q) => name -> q.build }
+
+  lazy val oracleSql: Map[String, String] =
+    Registry.byName.map { case (name, q) => name -> q.oracle() }
 }
