@@ -78,25 +78,11 @@ object CellIndex {
     x
   }
 
-  /** Min corner of the cell's bbox: (xmin, ymin); cell spans [min, min+cs). */
-  def cellOrigin(id: Long): (Double, Double) = {
-    val (ix, iy, res) = decode(id)
-    val cs = cellSize(res)
-    (ix * cs, iy * cs)
-  }
-
   /** Cell bbox as (xmin, ymin, xmax, ymax). */
   def cellBBox(id: Long): (Double, Double, Double, Double) = {
     val (ix, iy, res) = decode(id)
     val cs = cellSize(res)
     (ix * cs, iy * cs, (ix + 1) * cs, (iy + 1) * cs)
-  }
-
-  /** Cell center. */
-  def cellCenter(id: Long): (Double, Double) = {
-    val (ix, iy, res) = decode(id)
-    val cs = cellSize(res)
-    ((ix + 0.5) * cs, (iy + 0.5) * cs)
   }
 
   /**

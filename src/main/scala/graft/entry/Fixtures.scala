@@ -70,14 +70,6 @@ private[graft] object Fixtures {
   def oRect(x0: Double, y0: Double, w: Double, h: Double): Array[Double] =
     Array(x0, y0, x0 + w, y0, x0 + w, y0 + h, x0, y0 + h, x0, y0)
 
-  /** Shoelace area of a flat closed ring column (loop order = Geom kernel). */
-  lazy val ringAreaUdf = udf { (ring: Seq[Double]) =>
-    val n = ring.length / 2
-    val xs = Array.tabulate(n)(i => ring(i * 2))
-    val ys = Array.tabulate(n)(i => ring(i * 2 + 1))
-    graft.geom.Geom.signedRingArea(xs, ys, 0, n)
-  }
-
   val ptsSql: String =
     s"""pts AS (SELECT c_custkey AS id,
        |  ${derivedXSql("c_custkey")} AS x,
@@ -279,15 +271,13 @@ private[graft] object Fixtures {
    * points (built DISTRIBUTED — no collect); sources = three overlapping
    * axis-aligned rectangles. */
   def polyJoinTargetsDf(s: SparkSession, dir: String): DataFrame = {
-    val mkSquare = udf { (cx: Long, cy: Long) =>
-      val x = cx * 10.0; val y = cy * 10.0
-      Array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y)
-    }
+    val x = col("cx") * 10.0; val y = col("cy") * 10.0
     points(s, dir)
       .select(floor(col("x") / 10.0).cast("long").as("cx"),
         floor(col("y") / 10.0).cast("long").as("cy"))
       .distinct()
-      .select((col("cx") * 100 + col("cy")).as("key"), mkSquare(col("cx"), col("cy")).as("ring"))
+      .select((col("cx") * 100 + col("cy")).as("key"),
+        array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y).as("ring"))
   }
 
   val polyJoinSources: Seq[PolyJoin.Keyed] = Seq(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.entry.Fixtures._
 import graft.entry.Query.query
+import graft.functions.FeatureExprs.ringSignedArea
 import graft.operators._
 import graft.tables.Synthetic
 
@@ -374,7 +375,7 @@ private[graft] object GridQueries {
     query("q_grid_rhombus")((s, dir) =>
       Grids.rhombusGrid(s, 0.0, 0.0, 30.0, 20.0, 4.0)
         .select(col("q"), col("r"), col("k").cast("long").as("k"),
-          floor(ringAreaUdf(col("ring")) * 1000000.0).cast("long").as("area_int"),
+          floor(ringSignedArea(col("ring")) * 1000000.0).cast("long").as("area_int"),
           floor(element_at(col("ring"), 3) * 1000000.0).cast("long").as("v1x_int"),
           floor(element_at(col("ring"), 4) * 1000000.0).cast("long").as("v1y_int"))
         .orderBy("q", "r", "k"))(
@@ -383,7 +384,7 @@ private[graft] object GridQueries {
     query("q_grid_triangle")((s, dir) =>
       Grids.triangleGrid(s, 0.0, 0.0, 30.0, 20.0, 4.0)
         .select(col("q"), col("r"), col("k").cast("long").as("k"),
-          floor(ringAreaUdf(col("ring")) * 1000000.0).cast("long").as("area_int"),
+          floor(ringSignedArea(col("ring")) * 1000000.0).cast("long").as("area_int"),
           floor(element_at(col("ring"), 3) * 1000000.0).cast("long").as("v1x_int"),
           floor(element_at(col("ring"), 4) * 1000000.0).cast("long").as("v1y_int"))
         .orderBy("q", "r", "k"))(
@@ -420,7 +421,7 @@ private[graft] object GridQueries {
         .select(col("q"), col("r"),
           floor(col("cx") * 1000000.0).cast("long").as("cx_int"),
           floor(col("cy") * 1000000.0).cast("long").as("cy_int"),
-          floor(ringAreaUdf(col("ring")) * 1000000.0).cast("long").as("area_int"),
+          floor(ringSignedArea(col("ring")) * 1000000.0).cast("long").as("area_int"),
           floor(element_at(col("ring"), 3) * 1000000.0).cast("long").as("v1x_int"),
           floor(element_at(col("ring"), 4) * 1000000.0).cast("long").as("v1y_int"))
         .orderBy("q", "r"))(
@@ -570,7 +571,7 @@ private[graft] object GridQueries {
         .select(col("q"), col("r"),
           floor(col("cx") * 1000000.0).cast("long").as("cx_int"),
           floor(col("cy") * 1000000.0).cast("long").as("cy_int"),
-          floor(ringAreaUdf(col("ring")) * 1000000.0).cast("long").as("area_int"),
+          floor(ringSignedArea(col("ring")) * 1000000.0).cast("long").as("area_int"),
           floor(element_at(col("ring"), 3) * 1000000.0).cast("long").as("v1x_int"),
           floor(element_at(col("ring"), 4) * 1000000.0).cast("long").as("v1y_int"))
         .orderBy("q", "r"))(

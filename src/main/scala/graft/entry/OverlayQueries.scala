@@ -430,14 +430,12 @@ private[graft] object OverlayQueries {
     // closed form — the full mosaic kernel (snap/cut/trace/classify) is
     // DuckDB-verified on 50 distinct overlap configurations
     query("q_dissolve2_rect")((s, dir) => {
-      val mkRect = udf { (g: Long, i: Int) =>
-        val x0 = (g * (3 + 2 * i) % 13).toDouble
-        val y0 = (g * (5 + 3 * i) % 17).toDouble
-        Array(x0, y0, x0 + 10, y0, x0 + 10, y0 + 10, x0, y0 + 10, x0, y0)
-      }
+      val g = col("g"); val i = col("i")
+      val x0 = (g * (i * 2 + 3) % 13).cast("double")
+      val y0 = (g * (i * 3 + 5) % 17).cast("double")
       val groups = points(s, dir).select((col("id") % 50).as("g")).distinct()
         .withColumn("i", explode(array(lit(0), lit(1), lit(2))))
-        .select(col("g"), mkRect(col("g"), col("i")).as("ring"))
+        .select(g, array(x0, y0, x0 + 10, y0, x0 + 10, y0 + 10, x0, y0 + 10, x0, y0).as("ring"))
       OverlayOp.dissolve2(s, groups, "g", "ring")
         .select(col("group"), round(col("area") * 100.0, 0).cast("long").as("area_int"))
         .orderBy("group")
@@ -877,11 +875,10 @@ private[graft] object OverlayQueries {
     query("q_clip_lines")((s, dir) => {
       val rect: Overlay.Shape =
         Seq(Array(20.0, 20.0, 70.0, 20.0, 70.0, 60.0, 20.0, 60.0, 20.0, 20.0))
-      val mkLine = udf((x: Double, y: Double) => Array(x, y, x + 7.0, y))
       val lines = points(s, dir)
         .filter(col("y") =!= 20.0 && col("y") =!= 60.0 &&
           !col("x").isin(13.0, 20.0, 63.0, 70.0))
-        .select(col("id"), mkLine(col("x"), col("y")).as("line"))
+        .select(col("id"), array(col("x"), col("y"), col("x") + 7.0, col("y")).as("line"))
       // clipped lengths are mathematically k/1000-exact (3-decimal xs, integer
       // bounds): ROUND to the integer both engines are within 1e-9 of —
       // floor would flip on the aligned boundary
@@ -901,9 +898,8 @@ private[graft] object OverlayQueries {
 
     // polyline->polygon join (reference: per-part path midpoints, PIP-joined)
     query("q_line_join")((s, dir) => {
-      val mkLine = udf((x: Double, y: Double) => Array(x, y, x + 5.0, y + 3.0))
       val lines = points(s, dir)
-        .select(col("id"), mkLine(col("x"), col("y")).as("line"))
+        .select(col("id"), array(col("x"), col("y"), col("x") + 5.0, col("y") + 3.0).as("line"))
       LineOps.joinToPolygons(s, lines, "id", "line", Synthetic.oracleLayer)
         .select(col("id"), col("poly_key"))
         .orderBy("id", "poly_key")
@@ -1165,15 +1161,13 @@ private[graft] object OverlayQueries {
     // family is one component (min-id label) whose union area has an
     // inclusion-exclusion closed form
     query("q_dissolve2_dist")((s, dir) => {
-      val mkRect = udf { (g: Long, i: Int) =>
-        val x0 = ((g % 10) * 40 + (g * (3 + 2 * i)) % 9).toDouble
-        val y0 = ((g / 10) * 40 + (g * (5 + 3 * i)) % 9).toDouble
-        Array(x0, y0, x0 + 10, y0, x0 + 10, y0 + 10, x0, y0 + 10, x0, y0)
-      }
+      val g = col("g"); val i = col("i")
+      val x0 = ((g % 10) * 40 + (g * (i * 2 + 3)) % 9).cast("double")
+      val y0 = ((g / 10).cast("long") * 40 + (g * (i * 3 + 5)) % 9).cast("double")
       val shapes = points(s, dir).select((col("id") % 50).as("g")).distinct()
         .withColumn("i", explode(array(lit(0), lit(1), lit(2))))
-        .select((col("g") * 3 + col("i")).as("sid"),
-          mkRect(col("g"), col("i")).as("ring"))
+        .select((g * 3 + i).as("sid"),
+          array(x0, y0, x0 + 10, y0, x0 + 10, y0 + 10, x0, y0 + 10, x0, y0).as("ring"))
       OverlayOp.dissolve2Distributed(s, shapes, "sid", "ring", cellRes = 4)
         .select(col("component"), col("n_shapes_in"), col("n_rings_out"),
           round(col("area") * 100.0, 0).cast("long").as("area_int"))

@@ -21,18 +21,6 @@ package entry
  */
 private[graft] object Registry {
 
-  val families: Seq[Seq[Query]] = Seq(
-    RelationalQueries.all,
-    SpatialJoinQueries.all,
-    OverlayQueries.all,
-    GeometryQueries.all,
-    ProjectionQueries.all,
-    PolyhedralQueries.all,
-    GridQueries.all,
-    MediaQueries.all,
-    DocumentQueries.all,
-    ReaderQueries.all)
-
   /** Name → query; fails naming every name declared more than once. */
   def index(queries: Seq[Query]): Map[String, Query] = {
     val repeated = queries.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
@@ -41,5 +29,8 @@ private[graft] object Registry {
     queries.map(q => q.name -> q).toMap
   }
 
-  lazy val byName: Map[String, Query] = index(families.flatten)
+  lazy val byName: Map[String, Query] = index(
+    RelationalQueries.all ++ SpatialJoinQueries.all ++ OverlayQueries.all ++
+      GeometryQueries.all ++ ProjectionQueries.all ++ PolyhedralQueries.all ++
+      GridQueries.all ++ MediaQueries.all ++ DocumentQueries.all ++ ReaderQueries.all)
 }

@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
  * transform over the ring array — Catalyst-evaluated, no Scala UDF
  * serialization, and sequential folds that bit-match a left-to-right Scala
  * loop, which keeps them DuckDB-mirrorable). The string helpers
- * (format_dms / parse_dms / blend) are JVM kernels with exact integer
- * arithmetic, exposed as UDFs for per-row use.
+ * (format_dms / parse_dms / blend) and int_median are JVM kernels with
+ * exact integer arithmetic; format_dms and parse_dms are exposed as UDFs
+ * for per-row use.
  */
 object FeatureExprs {
 
@@ -149,6 +150,4 @@ object FeatureExprs {
 
   val formatDmsUdf = udf((c: Double) => formatDmsDefault(c))
   val parseDmsUdf = udf((s: String) => parseDmsDefault(s))
-  val blendUdf = udf((cs: Seq[String], ws: Seq[Double]) => blendHex(cs, ws))
-  val intMedianUdf = udf((c: Seq[Double], b: Seq[Double]) => intMedian(c, b))
 }

@@ -383,11 +383,4 @@ object Geom {
     }
     (xmin, ymin, xmax, ymax)
   }
-
-  @inline def bboxContains(xmin: Double, ymin: Double, xmax: Double, ymax: Double, x: Double, y: Double): Boolean =
-    x >= xmin && x <= xmax && y >= ymin && y <= ymax
-
-  @inline def bboxIntersects(a0: Double, a1: Double, a2: Double, a3: Double,
-                             b0: Double, b1: Double, b2: Double, b3: Double): Boolean =
-    a0 <= b2 && b0 <= a2 && a1 <= b3 && b1 <= a3
 }

@@ -51,9 +51,6 @@ object Polyhedral {
   private[geom] def clamp(v: Double, lo: Double, hi: Double): Double =
     math.max(lo, math.min(hi, v))
 
-  private def vectorToDegrees(p: Array[Double]): (Double, Double) =
-    (math.atan2(p(1), p(0)) * R2D, math.asin(clamp(p(2), -1, 1)) * R2D)
-
   private[geom] def vectorToDegreesArr(p: Array[Double]): Array[Double] =
     Array(math.atan2(p(1), p(0)) * R2D, math.asin(clamp(p(2), -1, 1)) * R2D)
 

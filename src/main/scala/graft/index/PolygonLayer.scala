@@ -104,12 +104,6 @@ final class PolygonLayer(
   def findShapes(x: Double, y: Double): Array[Int] =
     grid.findShapeIdxs(x, y)
 
-  /** First (lowest shape index) enclosing shape, or -1. */
-  def findFirstShape(x: Double, y: Double): Int = {
-    val s = findShapes(x, y)
-    if (s.isEmpty) -1 else s(0)
-  }
-
   // ------------------------------------------------------------ hot path ----
   // Per-row entry points of the broadcast spatial join (codegen expressions):
   // a grid cell lookup, exact segment tests only in boundary-crossed cells.

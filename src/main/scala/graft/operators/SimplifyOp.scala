@@ -37,29 +37,37 @@ object SimplifyOp {
                method: Simplify.Method = Simplify.WeightedVisvalingam,
                exactPct: Boolean = false): DataFrame = {
     val withThr = withThresholds(rings, ringCol, method).cache()
-    // global interval: (1-pct) quantile over interior (finite) thresholds
-    val interior = withThr
-      .select(explode(col("thresholds")).as("z"))
-      .filter(!col("z").isNaN && col("z") =!= Double.PositiveInfinity)
-    val interval =
-      if (pct >= 1.0) 0.0
-      else if (exactPct) exactRankSelect(spark, interior, pct)
-      else interior.stat.approxQuantile("z", Array(1.0 - pct), 1e-4).headOption.getOrElse(0.0)
-    val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double]) =>
-      val kept = Array.newBuilder[Double]
-      var i = 0
-      while (i < thr.length) {
-        if (thr(i) >= interval) { kept += flat(i * 2); kept += flat(i * 2 + 1) }
-        i += 1
-      }
-      kept.result()
-    }
+    val interval = globalInterval(spark, withThr, pct, exactPct)
+    val filterUdf = udf((flat: Seq[Double], thr: Seq[Double]) => keepAbove(flat, thr, interval))
     withThr
       .withColumn("simplified", filterUdf(col(ringCol), col("thresholds")))
       .withColumn("n_before", (size(col(ringCol)) / 2).cast("long"))
       .withColumn("n_after", (size(col("simplified")) / 2).cast("long"))
       .withColumn("interval", lit(interval))
       .drop("thresholds")
+  }
+
+  /** Global interval of a frame with a `thresholds` column: the (1-pct)
+   * quantile over interior (finite) thresholds; 0 when everything is kept. */
+  private def globalInterval(spark: SparkSession, withThr: DataFrame, pct: Double,
+                             exactPct: Boolean): Double = {
+    val interior = withThr
+      .select(explode(col("thresholds")).as("z"))
+      .filter(!col("z").isNaN && col("z") =!= Double.PositiveInfinity)
+    if (pct >= 1.0) 0.0
+    else if (exactPct) exactRankSelect(spark, interior, pct)
+    else interior.stat.approxQuantile("z", Array(1.0 - pct), 1e-4).headOption.getOrElse(0.0)
+  }
+
+  /** The vertices of a flat ring whose threshold is at least `interval`. */
+  private def keepAbove(flat: Seq[Double], thr: Seq[Double], interval: Double): Array[Double] = {
+    val kept = Array.newBuilder[Double]
+    var i = 0
+    while (i < thr.length) {
+      if (thr(i) >= interval) { kept += flat(i * 2); kept += flat(i * 2 + 1) }
+      i += 1
+    }
+    kept.result()
   }
 
   /**
@@ -90,18 +98,10 @@ object SimplifyOp {
                        weightCol: String, pct: Double,
                        method: Simplify.Method = Simplify.WeightedVisvalingam,
                        exactPct: Boolean = false): DataFrame = {
-    val base = simplify(spark, rings, ringCol, pct, method, exactPct)
-    val interval = base.select("interval").head().getDouble(0)
-    val withThr = withThresholds(rings, ringCol, method)
+    val withThr = withThresholds(rings, ringCol, method).cache()
+    val interval = globalInterval(spark, withThr, pct, exactPct)
     val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double], w: Double) =>
-      val iv = interval * math.max(0.0, math.min(1.0, w))
-      val kept = Array.newBuilder[Double]
-      var i = 0
-      while (i < thr.length) {
-        if (thr(i) >= iv) { kept += flat(i * 2); kept += flat(i * 2 + 1) }
-        i += 1
-      }
-      kept.result()
+      keepAbove(flat, thr, interval * math.max(0.0, math.min(1.0, w)))
     }
     withThr
       .withColumn("simplified", filterUdf(col(ringCol), col("thresholds"), col(weightCol)))
@@ -138,12 +138,7 @@ object SimplifyOp {
                         method: Simplify.Method = Simplify.WeightedVisvalingam,
                         keepShapes: Boolean = true): DataFrame = {
     val withThr = withSphericalThresholds(rings, ringCol, method).cache()
-    val interior = withThr
-      .select(explode(col("thresholds")).as("z"))
-      .filter(!col("z").isNaN && col("z") =!= Double.PositiveInfinity)
-    val interval =
-      if (pct >= 1.0) 0.0
-      else interior.stat.approxQuantile("z", Array(1.0 - pct), 1e-4).headOption.getOrElse(0.0)
+    val interval = globalInterval(spark, withThr, pct, exactPct = false)
     val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double]) =>
       val n = thr.length
       val keep = new Array[Boolean](n)
