@@ -18,9 +18,7 @@ import graft.tables.Synthetic
 private[graft] object ProjectionQueries {
 
   private val crsAea = Crs.Albers(29.5, 45.5, 23.0, -96.0)
-
   private val crsLcc = Crs.Lcc(33.0, 45.0, 39.0, -96.0)
-
   private val crsAeqd = Crs.Aeqd(40.0, -100.0)
 
   /** The q_proj_world SQL: the round-3 world projections (Robinson table
