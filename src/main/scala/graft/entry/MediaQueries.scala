@@ -12,8 +12,8 @@ import graft.operators._
 import graft.tables.{Images, Synthetic}
 
 /**
- * Media tables: image, audio and video rows with binary payloads (the north-
- * rule operators).
+ * Media tables: image, audio and video rows with binary payloads (the
+ * north-rule operators).
  */
 private[graft] object MediaQueries {
 

@@ -7,8 +7,8 @@ import graft.entry.Fixtures._
 import graft.entry.Query.query
 
 /**
- * Polyhedral and interrupted world projections: Dymaxion, Butterfly, Cahill-
- * Keyes, Narukawa and Lee, each mirrored step by step in SQL.
+ * Polyhedral and interrupted world projections: Dymaxion, Butterfly,
+ * Cahill-Keyes, Narukawa and Lee, each mirrored step by step in SQL.
  */
 private[graft] object PolyhedralQueries {
 
