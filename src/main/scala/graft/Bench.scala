@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions._
 import graft.index.LayerBroadcasts
-import graft.operators.{SpatialJoin, Tiling}
+import graft.operators.Tiling
 import graft.tables.{Images, Synthetic}
 
 /**

@@ -71,7 +71,6 @@ object RasterBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     val cases = Seq(
       Case("uint8 rgb 12MP->0.75MP", 4000, 3000, 3, 1000, 750, sixteenBit = false),

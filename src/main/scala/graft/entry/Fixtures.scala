@@ -1,7 +1,7 @@
 package graft
 package entry
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry.DataRoot
@@ -65,6 +65,11 @@ private[graft] object Fixtures {
         math.floor(mnx * scale).toLong, math.floor(mny * scale).toLong,
         math.floor(mxx * scale).toLong, math.floor(mxy * scale).toLong)
     }
+
+  /** Closed flat CCW square ring column with corner (x0, y0) — column
+   * arithmetic, so it needs no UDF. */
+  def squareRing(x0: Column, y0: Column, side: Any): Column =
+    array(x0, y0, x0 + side, y0, x0 + side, y0 + side, x0, y0 + side, x0, y0)
 
   /** Closed flat rectangle ring (CCW) — the mosaic-family oracle fixture. */
   def oRect(x0: Double, y0: Double, w: Double, h: Double): Array[Double] =
@@ -270,15 +275,13 @@ private[graft] object Fixtures {
   /** Polygon-join fixtures: targets = the distinct cell squares of the derived
    * points (built DISTRIBUTED — no collect); sources = three overlapping
    * axis-aligned rectangles. */
-  def polyJoinTargetsDf(s: SparkSession, dir: String): DataFrame = {
-    val x = col("cx") * 10.0; val y = col("cy") * 10.0
+  def polyJoinTargetsDf(s: SparkSession, dir: String): DataFrame =
     points(s, dir)
       .select(floor(col("x") / 10.0).cast("long").as("cx"),
         floor(col("y") / 10.0).cast("long").as("cy"))
       .distinct()
       .select((col("cx") * 100 + col("cy")).as("key"),
-        array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y).as("ring"))
-  }
+        squareRing(col("cx") * 10.0, col("cy") * 10.0, 10).as("ring"))
 
   val polyJoinSources: Seq[PolyJoin.Keyed] = Seq(
     (100L, Seq(Array(5.0, 5.0, 55.0, 5.0, 55.0, 55.0, 5.0, 55.0, 5.0, 5.0))),

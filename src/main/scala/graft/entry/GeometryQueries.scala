@@ -522,17 +522,9 @@ private[graft] object GeometryQueries {
     query("q_simplify_dp")((s, dir) => {
       import s.implicits._
       val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-      val rings = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (r.toLong, flat)
-      }.toDF("ring_id", "ring")
+      val rings = (0 until layer.numRings).map(r => (r.toLong, layer.ring(r))).toDF("ring_id", "ring")
       val keptUdf = udf { (flat: Seq[Double]) =>
-        val n = flat.length / 2
-        val xx = Array.tabulate(n)(i => flat(i * 2))
-        val yy = Array.tabulate(n)(i => flat(i * 2 + 1))
+        val (xx, yy) = graft.geom.Geom.unzipRing(flat.toArray)
         graft.geom.Simplify.douglasPeucker(xx, yy).count(_ >= 0.35).toLong
       }
       rings.select(col("ring_id"),
@@ -546,13 +538,7 @@ private[graft] object GeometryQueries {
     query("q_smooth")((s, dir) => {
       import s.implicits._
       val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-      val rings = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (r.toLong, flat)
-      }.toDF("ring_id", "ring")
+      val rings = (0 until layer.numRings).map(r => (r.toLong, layer.ring(r))).toDF("ring_id", "ring")
       val smoothUdf = udf((f: Seq[Double]) => graft.geom.PathOps.smooth(f.toArray, 0.25, 2).length / 2)
       val densifyUdf = udf((f: Seq[Double]) => graft.geom.PathOps.densify(f.toArray, 1.0).length / 2)
       rings.select(col("ring_id"),
@@ -1106,10 +1092,7 @@ private[graft] object GeometryQueries {
     // k = ceil(d/2.5) — identical IEEE everywhere, vertex-exact
     query("q_densify")((s, dir) => {
       val densifyUdf = udf { (xs: Seq[Double], ys: Seq[Double]) =>
-        val flat = new Array[Double](xs.length * 2)
-        var i = 0
-        while (i < xs.length) { flat(i * 2) = xs(i); flat(i * 2 + 1) = ys(i); i += 1 }
-        graft.geom.PathOps.densify(flat, 2.5).toSeq
+        graft.geom.PathOps.densify(graft.geom.Geom.zipRing(xs.toArray, ys.toArray), 2.5).toSeq
       }
       points(s, dir).where(col("id") >= 1 && col("id") <= 30)
         .withColumn("g", col("id") % 3)
@@ -1209,10 +1192,7 @@ private[graft] object GeometryQueries {
     // equals j*interval and the mirror is exact)
     query("q_interpolate")((s, dir) => {
       val interpUdf = udf { (xs: Seq[Double], ys: Seq[Double]) =>
-        val flat = new Array[Double](xs.length * 2)
-        var i = 0
-        while (i < xs.length) { flat(i * 2) = xs(i); flat(i * 2 + 1) = ys(i); i += 1 }
-        Points.interpolate(flat, 2.5).toSeq
+        Points.interpolate(graft.geom.Geom.zipRing(xs.toArray, ys.toArray), 2.5).toSeq
       }
       points(s, dir).where(col("id") >= 1 && col("id") <= 40)
         .withColumn("g", col("id") % 4)
@@ -1340,10 +1320,7 @@ private[graft] object GeometryQueries {
     // open 20-vertex derived path — exact affine arithmetic, vertex by vertex
     query("q_smooth_exact")((s, dir) => {
       val smoothUdf = udf { (xs: Seq[Double], ys: Seq[Double]) =>
-        val flat = new Array[Double](xs.length * 2)
-        var i = 0
-        while (i < xs.length) { flat(i * 2) = xs(i); flat(i * 2 + 1) = ys(i); i += 1 }
-        graft.geom.PathOps.smooth(flat, 0.25, 2).toSeq
+        graft.geom.PathOps.smooth(graft.geom.Geom.zipRing(xs.toArray, ys.toArray), 0.25, 2).toSeq
       }
       points(s, dir).where(col("id") >= 1 && col("id") <= 20)
         .groupBy(lit(1).as("g"))

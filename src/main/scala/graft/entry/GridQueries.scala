@@ -218,12 +218,7 @@ private[graft] object GridQueries {
       }
     }
     val w = bx1 - bx0; val h = by1 - by0
-    val shpArea = math.abs(rings.map { r =>
-      val m = r.length / 2
-      val xs = Array.tabulate(m)(i => r(i * 2))
-      val ys = Array.tabulate(m)(i => r(i * 2 + 1))
-      graft.geom.Geom.signedRingArea(xs, ys, 0, m)
-    }.sum)
+    val shpArea = math.abs(rings.map(graft.geom.Geom.ringArea).sum)
     val approxQueries = math.max(1L, math.round(n * (w * h) / shpArea))
     val kf = 0.5 * (ev - 1.0) + 1.0
     val approxCells = approxQueries * 0.9 * kf
@@ -453,13 +448,7 @@ private[graft] object GridQueries {
     query("q_rectangles")((s, dir) => {
       import s.implicits._
       val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-      val rings = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (r.toLong, flat)
-      }.toDF("ring_id", "ring")
+      val rings = (0 until layer.numRings).map(r => (r.toLong, layer.ring(r))).toDF("ring_id", "ring")
       Rectangles.of(rings, "ring", offsets = (0.1, 0.05, 0.1, 0.05),
           offsetsArePct = true, aspectRatio = 1.5)
         .select(col("ring_id"),

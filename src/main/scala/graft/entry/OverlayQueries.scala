@@ -128,7 +128,6 @@ private[graft] object OverlayQueries {
 
   val all: Seq[Query] = Seq(
     query("q_dissolve")((s, dir) => {
-      import s.implicits._
       val cells = points(s, dir)
         .select((col("id") % 4).as("g"),
           floor(col("x") / 10.0).cast("long").as("cx"),
@@ -136,9 +135,8 @@ private[graft] object OverlayQueries {
         .distinct()
       // unit-square ring from pure column arithmetic (r6: was a boxed UDF;
       // integer-valued casts are exact, values bit-identical)
-      val x = col("cx").cast("double"); val y = col("cy").cast("double")
       val rings = cells.withColumn("ring",
-        array(x, y, x + 1, y, x + 1, y + 1, x, y + 1, x, y))
+        squareRing(col("cx").cast("double"), col("cy").cast("double"), 1))
       Dissolve.dissolve(s, rings, "g", "ring")
         .select(col("group").as("g"), col("n_rings_in").as("n_cells"),
           col("n_boundary_edges"))
@@ -212,11 +210,7 @@ private[graft] object OverlayQueries {
       import s.implicits._
       val layer = Synthetic.oracleLayer
       val rows = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (layer.shapeKeys(layer.ringShape(r)), r.toLong, flat)
+        (layer.shapeKeys(layer.ringShape(r)), r.toLong, layer.ring(r))
       }.toDF("poly_key", "ring_id", "ring")
       val clipUdf = udf { (flat: Seq[Double]) =>
         val c = graft.geom.RectClip.clipRing(flat.toArray, 25.0, 25.0, 75.0, 75.0)
@@ -240,13 +234,9 @@ private[graft] object OverlayQueries {
         .select(floor(col("x") / 10.0).cast("long").as("cx"),
           floor(col("y") / 10.0).cast("long").as("cy"))
         .distinct()
-      val ringUdf = udf { (cx: Long, cy: Long) =>
-        val x = cx * 10.0; val y = cy * 10.0
-        Array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y)
-      }
       val clipRect = Seq(Array(15.0, 15.0, 65.0, 15.0, 65.0, 65.0, 15.0, 65.0, 15.0, 15.0))
       OverlayOp.clipRows(s,
-          squares.withColumn("ring", ringUdf(col("cx"), col("cy")))
+          squares.withColumn("ring", squareRing(col("cx") * 10.0, col("cy") * 10.0, 10))
             .withColumn("sq_id", col("cx") * 100 + col("cy")),
           "sq_id", "ring", clipRect)
         .select(col("sq_id"),
@@ -272,13 +262,9 @@ private[graft] object OverlayQueries {
         .select(floor(col("x") / 10.0).cast("long").as("cx"),
           floor(col("y") / 10.0).cast("long").as("cy"))
         .distinct()
-      val ringUdf = udf { (cx: Long, cy: Long) =>
-        val x = cx * 10.0; val y = cy * 10.0
-        Array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y)
-      }
       val clipRect = Seq(Array(15.0, 15.0, 65.0, 15.0, 65.0, 65.0, 15.0, 65.0, 15.0, 15.0))
       OverlayOp.clipRows(s,
-          squares.withColumn("ring", ringUdf(col("cx"), col("cy")))
+          squares.withColumn("ring", squareRing(col("cx") * 10.0, col("cy") * 10.0, 10))
             .withColumn("sq_id", col("cx") * 100 + col("cy")),
           "sq_id", "ring", clipRect, erase = true)
         .select(col("sq_id"),
@@ -304,14 +290,11 @@ private[graft] object OverlayQueries {
           floor(col("y") / 10.0).cast("long").as("cy"))
         .distinct()
         .withColumn("g", (col("cx") + col("cy")) % 2)
-      val ringUdf = udf { (cx: Long, cy: Long) =>
-        val x = cx * 10.0; val y = cy * 10.0
-        Array(x, y, x + 15, y, x + 15, y + 15, x, y + 15, x, y)
-      }
       // 15x15 squares on a 10-grid keep every edge on the 5-lattice, so the
       // per-group union area mirrors exactly as 25 x (covered 5x5 cells);
       // ring structure is oracle-covered by q_dissolve2_rect/q_dissolve2_rules
-      OverlayOp.dissolve2(s, squares.withColumn("ring", ringUdf(col("cx"), col("cy"))), "g", "ring")
+      OverlayOp.dissolve2(s,
+          squares.withColumn("ring", squareRing(col("cx") * 10.0, col("cy") * 10.0, 15)), "g", "ring")
         .select(col("group"), col("n_shapes_in"),
           floor(col("area") * 1000.0).cast("long").as("area_int"))
         .orderBy("group")
@@ -335,11 +318,7 @@ private[graft] object OverlayQueries {
     // regular-polygon area n*r^2*sin(2pi/n)/2
     query("q_buffer")((s, dir) => {
       val ringAreaUdf = udf { (x: Double, y: Double, r: Double) =>
-        val ring = Buffer.pointBufferRing(x, y, r, 32)
-        val n = ring.length / 2
-        val xs = Array.tabulate(n)(i => ring(i * 2))
-        val ys = Array.tabulate(n)(i => ring(i * 2 + 1))
-        graft.geom.Geom.signedRingArea(xs, ys, 0, n)
+        graft.geom.Geom.ringArea(Buffer.pointBufferRing(x, y, r, 32))
       }
       points(s, dir)
         .withColumn("r", (col("id") % 3 + 1).cast("double"))
@@ -467,7 +446,6 @@ private[graft] object OverlayQueries {
     // to min-id / max-id / max-area / min-area winners — per-shape kept
     // areas have inclusion-exclusion closed forms, mirrored exactly
     query("q_dissolve2_rules")((s, dir) => {
-      import s.implicits._
       val rules = Seq("min-id", "max-id", "max-area", "min-area")
       val kernel = udf { (g: Long) =>
         def rect(x0: Double, y0: Double, w: Double): Array[Double] =
@@ -637,7 +615,6 @@ private[graft] object OverlayQueries {
     // per-shape kept areas have inclusion-exclusion closed forms (areas
     // 100/64/144 make every rule pick a different overlap winner).
     query("q_clean")((s, dir) => {
-      import s.implicits._
       val rules = Seq("max-area", "max-id", "min-area", "min-id")
       val kernel = udf { (g: Long) =>
         val shapes: Seq[Overlay.Shape] = Seq(
@@ -1103,9 +1080,7 @@ private[graft] object OverlayQueries {
       val outers = cells.select(
         (col("cx") * 1000 + col("cy")).as("rid"),
         (col("cx") * 1000 + col("cy")).as("key"),
-        array(col("x0"), col("y0"), col("x0") + col("s"), col("y0"),
-          col("x0") + col("s"), col("y0") + col("s"), col("x0"), col("y0") + col("s"),
-          col("x0"), col("y0")).as("ring"))
+        squareRing(col("x0"), col("y0"), col("s")).as("ring"))
       val holes = cells.where((col("cx") * 7 + col("cy")) % 5 === 0).select(
         (col("cx") * 1000 + col("cy") + 500000).as("rid"),
         (col("cx") * 1000 + col("cy")).as("key"),

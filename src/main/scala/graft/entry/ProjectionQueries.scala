@@ -641,13 +641,7 @@ private[graft] object ProjectionQueries {
     query("q_proj_path")((s, dir) => {
       import s.implicits._
       val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
-      val rings = (0 until layer.numRings).map { r =>
-        val st = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        val flat = new Array[Double]((e - st) * 2)
-        var i = st
-        while (i < e) { flat((i - st) * 2) = layer.xx(i); flat((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-        (r.toLong, flat)
-      }.toDF("ring_id", "ring")
+      val rings = (0 until layer.numRings).map(r => (r.toLong, layer.ring(r))).toDF("ring_id", "ring")
       val proj = Crs.Sinusoidal()
       val cntUdf = udf { (flat: Seq[Double]) =>
         val ll = new Array[Double](flat.length)

@@ -3,7 +3,6 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.cell.CellIndex
 
 /**
  * Column-level function surface of the engine. Everything here composes

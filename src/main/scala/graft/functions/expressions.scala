@@ -60,9 +60,12 @@ case class CellCoordExpr(child: Expression, isX: Boolean)
 
 /** Base for expressions probing a broadcast polygon layer. The broadcast
  * handle is a codegen reference object; the layer instance is cached in a
- * mutable state var so `bc.value()` runs once per task, not per row. */
+ * mutable state var so `bc.value()` runs once per task, not per row. The
+ * handle's id differs from run to run, so plans print the children only. */
 trait PipExprBase extends Expression {
   def bc: Broadcast[PolygonLayer]
+
+  override protected def stringArgs: Iterator[Any] = children.iterator
 
   protected def layerVar(ctx: CodegenContext): String = {
     val bcRef = ctx.addReferenceObj("pipBroadcast", bc,
@@ -152,6 +155,7 @@ case class KnnProbe(first: Expression, second: Expression, third: Expression,
                     bc: Broadcast[PointTree], k: Int) extends TernaryExpression {
   override def dataType: DataType = KnnProbe.ResultType
   override def prettyName: String = "knn_probe"
+  override protected def stringArgs: Iterator[Any] = Iterator(first, second, third, k)
 
   override protected def nullSafeEval(id: Any, x: Any, y: Any): Any =
     bc.value.searcher(k).probe(id.asInstanceOf[Long], x.asInstanceOf[Double],

@@ -128,6 +128,8 @@ case class NearestCentroidExpr(child: Expression, cents: Array[Array[Float]])
   override def inputTypes: Seq[GraftBridge.AbsDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = IntegerType
   override def prettyName: String = "nearest_centroid"
+  // the centroid count, not the array's identity: plan text stays stable
+  override protected def stringArgs: Iterator[Any] = Iterator(child, cents.length)
 
   private val centData = HashKernels.asArrayData(cents)
 
@@ -149,6 +151,7 @@ case class CentroidProbesExpr(child: Expression, cents: Array[Array[Float]], npr
   override def inputTypes: Seq[GraftBridge.AbsDataType] = Seq(ArrayType(FloatType))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "centroid_probes"
+  override protected def stringArgs: Iterator[Any] = Iterator(child, cents.length, nprobe)
 
   private val centData = HashKernels.asArrayData(cents)
 

@@ -114,6 +114,48 @@ object Geom {
     isOn || isIn
   }
 
+  // ------------------------------------------------------ closed flat rings
+  // DataFrame columns and the overlay engine carry a ring as one closed flat
+  // array [x0, y0, x1, y1, …, x0, y0]; the kernels here take (xx, yy, start,
+  // n) slices. These are the only conversions between the two layouts.
+
+  /** (xs, ys) of a flat ring; a trailing odd element is ignored. */
+  def unzipRing(flat: Array[Double]): (Array[Double], Array[Double]) = {
+    val n = flat.length / 2
+    val xs = new Array[Double](n)
+    val ys = new Array[Double](n)
+    var i = 0
+    while (i < n) { xs(i) = flat(i * 2); ys(i) = flat(i * 2 + 1); i += 1 }
+    (xs, ys)
+  }
+
+  /** The flat ring of vertices (xs(i), ys(i)); inverse of [[unzipRing]]. */
+  def zipRing(xs: Array[Double], ys: Array[Double]): Array[Double] = {
+    val out = new Array[Double](xs.length * 2)
+    var i = 0
+    while (i < xs.length) { out(i * 2) = xs(i); out(i * 2 + 1) = ys(i); i += 1 }
+    out
+  }
+
+  /** A flat ring with its point order reversed. */
+  def reverseRing(flat: Array[Double]): Array[Double] = {
+    val n = flat.length / 2
+    val out = new Array[Double](flat.length)
+    var i = 0
+    while (i < n) {
+      out(i * 2) = flat((n - 1 - i) * 2)
+      out(i * 2 + 1) = flat((n - 1 - i) * 2 + 1)
+      i += 1
+    }
+    out
+  }
+
+  /** [[signedRingArea]] of a flat ring. */
+  def ringArea(flat: Array[Double]): Double = {
+    val (xs, ys) = unzipRing(flat)
+    signedRingArea(xs, ys, 0, xs.length)
+  }
+
   // ---------------------------------------------------------------- measures
 
   /** Signed area of a ring (shoelace /2); positive = counter-clockwise. */

@@ -42,19 +42,9 @@ object Overlay {
     def area: Double = faces.map(f => faceArea(f)).sum
   }
 
-  def faceArea(f: Face): Double = {
-    val n = f.outer.length / 2
-    val xs = Array.tabulate(n)(i => f.outer(i * 2))
-    val ys = Array.tabulate(n)(i => f.outer(i * 2 + 1))
-    var a = Geom.signedRingArea(xs, ys, 0, n)
-    f.holes.foreach { h =>
-      val m = h.length / 2
-      val hx = Array.tabulate(m)(i => h(i * 2))
-      val hy = Array.tabulate(m)(i => h(i * 2 + 1))
-      a += Geom.signedRingArea(hx, hy, 0, m) // CW → negative
-    }
-    a
-  }
+  /** Outer area plus the holes' (CW → negative) signed areas. */
+  def faceArea(f: Face): Double =
+    f.holes.foldLeft(Geom.ringArea(f.outer))(_ + Geom.ringArea(_))
 
   /**
    * Build the mosaic of 1+ layers. Each layer is a set of closed flat rings.
@@ -151,19 +141,11 @@ object Overlay {
         // close
         coords += coords(0); coords += coords(1)
         val flat = coords.toArray
-        val n = flat.length / 2
-        val xs = Array.tabulate(n)(i => flat(i * 2))
-        val ys = Array.tabulate(n)(i => flat(i * 2 + 1))
-        val a = Geom.signedRingArea(xs, ys, 0, n)
+        val a = Geom.ringArea(flat)
         if (a > 0) ccwRings += flat
         else if (a < 0) cwRings += flat
       }
       e += 1
-    }
-
-    if (sys.env.contains("GRAFT_OVERLAY_DEBUG")) {
-      ccwRings.foreach(r => println(s"[ov] ccw ${r.toSeq}"))
-      cwRings.foreach(r => println(s"[ov] cw  ${r.toSeq}"))
     }
 
     // 5. hole assignment: CW ring → smallest STRICTLY LARGER enclosing CCW
@@ -171,22 +153,13 @@ object Overlay {
     //    region (vertex tests are wrong: rings of adjacent faces share
     //    vertices). The arrangement's outer boundary is also CW but encloses
     //    area >= every face, so the strict area filter leaves it unassigned.
-    val ccwAreas = ccwRings.map { c =>
-      val n = c.length / 2
-      val xs = Array.tabulate(n)(i => c(i * 2))
-      val ys = Array.tabulate(n)(i => c(i * 2 + 1))
-      Geom.signedRingArea(xs, ys, 0, n)
-    }
+    val ccwAreas = ccwRings.map(Geom.ringArea)
+    val ccwSplit = ccwRings.map(Geom.unzipRing)
     val holeOf = mutable.HashMap.empty[Int, mutable.ArrayBuffer[Int]]
     cwRings.indices.foreach { hi =>
       val h = cwRings(hi)
-      val hArea = {
-        val m = h.length / 2
-        val hx = Array.tabulate(m)(i => h(i * 2))
-        val hy = Array.tabulate(m)(i => h(i * 2 + 1))
-        -Geom.signedRingArea(hx, hy, 0, m) // enclosed area (positive)
-      }
-      interiorPoint(reverseFlat(h), Nil, iv).foreach { case (px, py) =>
+      val hArea = -Geom.ringArea(h) // enclosed area (positive)
+      interiorPoint(Geom.reverseRing(h), Nil, iv).foreach { case (px, py) =>
         var best = -1
         var bestArea = Double.MaxValue
         ccwRings.indices.foreach { ci =>
@@ -194,11 +167,8 @@ object Overlay {
           // strict-with-margin: a CW ring's own CCW twin has the same area up
           // to 1 ulp of shoelace rounding and must never become its parent
           if (a > hArea + 1e-9 * (1.0 + hArea) && a < bestArea) {
-            val c = ccwRings(ci)
-            val n = c.length / 2
-            val xs = Array.tabulate(n)(i => c(i * 2))
-            val ys = Array.tabulate(n)(i => c(i * 2 + 1))
-            if (Geom.pointInRing(px, py, xs, ys, 0, n) == Geom.IN) {
+            val (xs, ys) = ccwSplit(ci)
+            if (Geom.pointInRing(px, py, xs, ys, 0, xs.length) == Geom.IN) {
               bestArea = a; best = ci
             }
           }
@@ -208,14 +178,12 @@ object Overlay {
     }
 
     // 6. interior point + classification per layer
+    val layerContains = snapped.map(evenOddContainment)
     val faces = ccwRings.indices.flatMap { ci =>
       val outer = ccwRings(ci)
       val holes = holeOf.getOrElse(ci, mutable.ArrayBuffer.empty).map(cwRings(_)).toSeq
-      val ip = interiorPoint(outer, holes, iv)
-      if (ip.isEmpty && sys.env.contains("GRAFT_OVERLAY_DEBUG"))
-        println(s"[ov] DROPPED face ci=$ci holes=${holes.size} outer=${outer.toSeq}")
-      ip.map { p =>
-        val membership = snapped.map(rings => evenOddContains(rings, p._1, p._2)).toArray
+      interiorPoint(outer, holes, iv).map { p =>
+        val membership = layerContains.map(_(p._1, p._2)).toArray
         Face(outer, holes, p, membership)
       }
     }
@@ -223,48 +191,26 @@ object Overlay {
   }
 
   /** Even-odd containment of a point vs a set of rings (boundary = in). */
-  def evenOddContains(rings: Seq[Array[Double]], x: Double, y: Double): Boolean = {
-    var isIn = false
-    var isOn = false
-    rings.foreach { r =>
-      val n = r.length / 2
-      val xs = Array.tabulate(n)(i => r(i * 2))
-      val ys = Array.tabulate(n)(i => r(i * 2 + 1))
-      Geom.pointInRing(x, y, xs, ys, 0, n) match {
-        case Geom.ON => isOn = true
-        case Geom.IN => isIn = !isIn
-        case _       =>
-      }
-    }
-    isOn || isIn
-  }
+  def evenOddContains(rings: Seq[Array[Double]], x: Double, y: Double): Boolean =
+    evenOddContainment(rings)(x, y)
 
-  /** Reverse a closed flat ring's point order. */
-  private def reverseFlat(ring: Array[Double]): Array[Double] = {
-    val n = ring.length / 2
-    val out = new Array[Double](ring.length)
-    var i = 0
-    while (i < n) {
-      out(i * 2) = ring((n - 1 - i) * 2)
-      out(i * 2 + 1) = ring((n - 1 - i) * 2 + 1)
-      i += 1
-    }
-    out
+  /** [[evenOddContains]] as a test of many points, the rings split once. */
+  def evenOddContainment(rings: Seq[Array[Double]]): (Double, Double) => Boolean = {
+    val split = rings.map(Geom.unzipRing)
+    (x, y) => Geom.combineRings(split.iterator.map { case (xs, ys) =>
+      Geom.pointInRing(x, y, xs, ys, 0, xs.length)
+    })
   }
 
   /** A point strictly inside `outer` and outside all `holes`: probe inward
    * offsets of edge midpoints at decreasing epsilons. */
   private def interiorPoint(outer: Array[Double], holes: Seq[Array[Double]], iv: Double): Option[(Double, Double)] = {
-    val n = outer.length / 2
-    val xs = Array.tabulate(n)(i => outer(i * 2))
-    val ys = Array.tabulate(n)(i => outer(i * 2 + 1))
-    val holeArrs = holes.map { h =>
-      val m = h.length / 2
-      (Array.tabulate(m)(i => h(i * 2)), Array.tabulate(m)(i => h(i * 2 + 1)), m)
-    }
+    val (xs, ys) = Geom.unzipRing(outer)
+    val n = xs.length
+    val holeArrs = holes.map(Geom.unzipRing)
     def ok(px: Double, py: Double): Boolean =
       Geom.pointInRing(px, py, xs, ys, 0, n) == Geom.IN &&
-        holeArrs.forall { case (hx, hy, m) => Geom.pointInRing(px, py, hx, hy, 0, m) == Geom.OUT }
+        holeArrs.forall { case (hx, hy) => Geom.pointInRing(px, py, hx, hy, 0, hx.length) == Geom.OUT }
     var i = 0
     while (i < n - 1) {
       val mx = (xs(i) + xs(i + 1)) / 2
@@ -554,15 +500,12 @@ object Overlay {
     // simpler: sum of signed areas after orienting each ring by containment
     // parity. For verification purposes, use mosaic-free approach: signed sum
     // where a ring inside an odd number of other rings counts negative.
-    val parsed = rings.map { r =>
-      val n = r.length / 2
-      (Array.tabulate(n)(i => r(i * 2)), Array.tabulate(n)(i => r(i * 2 + 1)), n)
-    }
-    parsed.zipWithIndex.map { case ((xs, ys, n), i) =>
-      val a = math.abs(Geom.signedRingArea(xs, ys, 0, n))
+    val parsed = rings.map(Geom.unzipRing)
+    parsed.zipWithIndex.map { case ((xs, ys), i) =>
+      val a = math.abs(Geom.signedRingArea(xs, ys, 0, xs.length))
       var depth = 0
-      parsed.zipWithIndex.foreach { case ((ox, oy, om), j) =>
-        if (i != j && Geom.pointInRing(xs(0), ys(0), ox, oy, 0, om) == Geom.IN) depth += 1
+      parsed.zipWithIndex.foreach { case ((ox, oy), j) =>
+        if (i != j && Geom.pointInRing(xs(0), ys(0), ox, oy, 0, ox.length) == Geom.IN) depth += 1
       }
       if (depth % 2 == 0) a else -a
     }.sum

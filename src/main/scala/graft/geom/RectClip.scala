@@ -67,14 +67,6 @@ object RectClip {
   }
 
   /** Area of a ring after clipping to a rectangle (0 if empty). */
-  def clippedArea(ring: Array[Double], xmin: Double, ymin: Double, xmax: Double, ymax: Double): Double = {
-    val c = clipRing(ring, xmin, ymin, xmax, ymax)
-    if (c.isEmpty) 0.0
-    else {
-      val n = c.length / 2
-      val xx = Array.tabulate(n)(i => c(i * 2))
-      val yy = Array.tabulate(n)(i => c(i * 2 + 1))
-      Geom.signedRingArea(xx, yy, 0, n)
-    }
-  }
+  def clippedArea(ring: Array[Double], xmin: Double, ymin: Double, xmax: Double, ymax: Double): Double =
+    Geom.ringArea(clipRing(ring, xmin, ymin, xmax, ymax))
 }

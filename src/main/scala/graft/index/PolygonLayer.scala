@@ -48,6 +48,10 @@ final class PolygonLayer(
     b
   }
 
+  /** Ring r as a closed flat ring; the inverse of [[PolygonLayer.fromShapes]]. */
+  def ring(r: Int): Array[Double] =
+    Geom.zipRing(xx.slice(ringStart(r), ringStart(r + 1)), yy.slice(ringStart(r), ringStart(r + 1)))
+
   /** Layer extent (minX, minY, maxX, maxY). */
   val extent: (Double, Double, Double, Double) = {
     var x0 = Double.MaxValue; var y0 = Double.MaxValue

@@ -1,8 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
 import graft.geom.Overlay
 
 /**
@@ -27,14 +24,6 @@ object Buffer {
     out(nSeg * 2) = out(0)
     out(nSeg * 2 + 1) = out(1)
     out
-  }
-
-  /** Point buffers as a ring column; merged buffers per group come from
-   * OverlayOp.dissolve2 downstream (the reference merges buffers the same
-   * way: buffer shapes → mosaic dissolve). */
-  def pointBuffers(points: DataFrame, xCol: String, yCol: String, radius: Double, nSeg: Int = 32): DataFrame = {
-    val ringUdf = udf((x: Double, y: Double) => pointBufferRing(x, y, radius, nSeg))
-    points.withColumn("buffer_ring", ringUdf(col(xCol), col(yCol)))
   }
 
   /** Raw per-segment capsule shapes (rect + endpoint circles) of a path —
@@ -206,12 +195,12 @@ object Buffer {
       }
       false
     }
+    val inPolygon = Overlay.evenOddContainment(polygon)
     pieces.toSeq.flatMap { case (x1, y1, x2, y2) =>
       val mx = (x1 + x2) / 2
       val my = (y1 + y2) / 2
       if (onLine(mx, my)) {
-        val inside = Overlay.evenOddContains(polygon, mx, my)
-        Some((Array(x1, y1, x2, y2), inside))
+        Some((Array(x1, y1, x2, y2), inPolygon(mx, my)))
       } else None
     }
   }

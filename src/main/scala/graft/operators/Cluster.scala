@@ -18,51 +18,8 @@ object Cluster {
 
   /** Agglomerate to `k` clusters; returns id -> clusterId (deterministic:
    * ties break on smallest member ids). */
-  def greedy(items: Seq[(Long, Double, Double)], k: Int, maxDist: Double = Double.MaxValue): Map[Long, Int] = {
-    val n = items.size
-    if (n == 0) return Map.empty
-    // cluster state: member ids, centroid, size
-    val members = mutable.ArrayBuffer(items.map(i => mutable.ArrayBuffer(i._1)): _*)
-    val cx = mutable.ArrayBuffer(items.map(_._2): _*)
-    val cy = mutable.ArrayBuffer(items.map(_._3): _*)
-    val alive = mutable.ArrayBuffer.fill(n)(true)
-    var nAlive = n
-
-    def dist2(i: Int, j: Int): Double = {
-      val dx = cx(i) - cx(j); val dy = cy(i) - cy(j)
-      dx * dx + dy * dy
-    }
-
-    while (nAlive > k) {
-      // find the closest alive pair (deterministic scan order)
-      var bi = -1; var bj = -1
-      var bd = Double.MaxValue
-      var i = 0
-      while (i < members.length) {
-        if (alive(i)) {
-          var j = i + 1
-          while (j < members.length) {
-            if (alive(j)) {
-              val d = dist2(i, j)
-              if (d < bd) { bd = d; bi = i; bj = j }
-            }
-            j += 1
-          }
-        }
-        i += 1
-      }
-      if (bi < 0 || bd > maxDist * maxDist) return assignment(members, alive)
-      // merge j into i (weighted centroid)
-      val si = members(bi).size.toDouble
-      val sj = members(bj).size.toDouble
-      cx(bi) = (cx(bi) * si + cx(bj) * sj) / (si + sj)
-      cy(bi) = (cy(bi) * si + cy(bj) * sj) / (si + sj)
-      members(bi) ++= members(bj)
-      alive(bj) = false
-      nAlive -= 1
-    }
-    assignment(members, alive)
-  }
+  def greedy(items: Seq[(Long, Double, Double)], k: Int, maxDist: Double = Double.MaxValue): Map[Long, Int] =
+    agglomerate(items.map(i => (i._1, i._2, i._3, 1.0)), new Array[Int](items.size), k, maxDist)
 
   /** `pct=` form of the target count (mapshaper-cluster.mjs:26-27):
    * `count = Math.round(size * pct)`, floored at 1. */
@@ -78,22 +35,39 @@ object Cluster {
    */
   def greedyGrouped(items: Seq[(Long, Double, Double, String)], k: Int,
                     maxDist: Double = Double.MaxValue): Map[Long, Int] = {
+    val groupIds = mutable.HashMap.empty[String, Int]
+    agglomerate(items.map(i => (i._1, i._2, i._3, 1.0)),
+      items.map(i => groupIds.getOrElseUpdate(i._4, groupIds.size)).toArray, k, maxDist)
+  }
+
+  /** Weighted greedy agglomeration (id, x, y, weight) — same semantics as
+   * [[greedy]] with unit weights replaced by the given masses. */
+  def greedyWeighted(items: Seq[(Long, Double, Double, Double)], k: Int): Map[Long, Int] =
+    agglomerate(items, new Array[Int](items.size), k, Double.MaxValue)
+
+  /** The one merge loop: repeatedly merge the closest alive pair of clusters
+   * in the same group into the lower index, at the weighted centroid, until
+   * `k` remain, no pair is left, or the closest pair is beyond `maxDist`.
+   * With unit weights a cluster's weight is its member count. */
+  private def agglomerate(items: Seq[(Long, Double, Double, Double)], group: Array[Int],
+                          k: Int, maxDist: Double): Map[Long, Int] = {
     val n = items.size
     if (n == 0) return Map.empty
     val members = mutable.ArrayBuffer(items.map(i => mutable.ArrayBuffer(i._1)): _*)
-    val cx = mutable.ArrayBuffer(items.map(_._2): _*)
-    val cy = mutable.ArrayBuffer(items.map(_._3): _*)
-    val grp = items.map(_._4).toArray
+    val cx = items.map(_._2).toArray
+    val cy = items.map(_._3).toArray
+    val wt = items.map(_._4).toArray
     val alive = mutable.ArrayBuffer.fill(n)(true)
     var nAlive = n
     while (nAlive > k) {
+      // find the closest alive pair (deterministic scan order)
       var bi = -1; var bj = -1; var bd = Double.MaxValue
       var i = 0
-      while (i < members.length) {
+      while (i < n) {
         if (alive(i)) {
           var j = i + 1
-          while (j < members.length) {
-            if (alive(j) && grp(i) == grp(j)) {
+          while (j < n) {
+            if (alive(j) && group(i) == group(j)) {
               val dx = cx(i) - cx(j); val dy = cy(i) - cy(j)
               val d = dx * dx + dy * dy
               if (d < bd) { bd = d; bi = i; bj = j }
@@ -104,46 +78,6 @@ object Cluster {
         i += 1
       }
       if (bi < 0 || bd > maxDist * maxDist) return assignment(members, alive)
-      val si = members(bi).size.toDouble
-      val sj = members(bj).size.toDouble
-      cx(bi) = (cx(bi) * si + cx(bj) * sj) / (si + sj)
-      cy(bi) = (cy(bi) * si + cy(bj) * sj) / (si + sj)
-      members(bi) ++= members(bj)
-      alive(bj) = false
-      nAlive -= 1
-    }
-    assignment(members, alive)
-  }
-
-  /** Weighted greedy agglomeration (id, x, y, weight) — same semantics as
-   * [[greedy]] with unit weights replaced by the given masses. */
-  def greedyWeighted(items: Seq[(Long, Double, Double, Double)], k: Int): Map[Long, Int] = {
-    val n = items.size
-    if (n == 0) return Map.empty
-    val members = mutable.ArrayBuffer(items.map(i => mutable.ArrayBuffer(i._1)): _*)
-    val cx = mutable.ArrayBuffer(items.map(_._2): _*)
-    val cy = mutable.ArrayBuffer(items.map(_._3): _*)
-    val wt = mutable.ArrayBuffer(items.map(_._4): _*)
-    val alive = mutable.ArrayBuffer.fill(n)(true)
-    var nAlive = n
-    while (nAlive > k) {
-      var bi = -1; var bj = -1; var bd = Double.MaxValue
-      var i = 0
-      while (i < members.length) {
-        if (alive(i)) {
-          var j = i + 1
-          while (j < members.length) {
-            if (alive(j)) {
-              val dx = cx(i) - cx(j); val dy = cy(i) - cy(j)
-              val d = dx * dx + dy * dy
-              if (d < bd) { bd = d; bi = i; bj = j }
-            }
-            j += 1
-          }
-        }
-        i += 1
-      }
-      if (bi < 0) return assignment(members, alive)
       cx(bi) = (cx(bi) * wt(bi) + cx(bj) * wt(bj)) / (wt(bi) + wt(bj))
       cy(bi) = (cy(bi) * wt(bi) + cy(bj) * wt(bj)) / (wt(bi) + wt(bj))
       wt(bi) += wt(bj)

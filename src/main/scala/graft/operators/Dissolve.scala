@@ -32,6 +32,9 @@ object Dissolve {
   class EdgeCancel extends Aggregator[Array[Double], mutable.HashMap[EdgeKey, Int], Array[Double]] {
     def zero: mutable.HashMap[EdgeKey, Int] = mutable.HashMap.empty
 
+    // plans print the aggregator; the default names its identity hash
+    override def toString: String = "EdgeCancel"
+
     def reduce(buf: mutable.HashMap[EdgeKey, Int], ring: Array[Double]): mutable.HashMap[EdgeKey, Int] = {
       var i = 0
       while (i + 3 < ring.length) {
@@ -79,7 +82,6 @@ object Dissolve {
    * Output: (group, n_rings_in, n_boundary_edges, rings: reassembled ring count).
    */
   def dissolve(spark: SparkSession, rings: DataFrame, groupCol: String, ringCol: String): DataFrame = {
-    import spark.implicits._
     val agg = udaf(new EdgeCancel())
     rings
       .groupBy(col(groupCol).as("group"))

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.functions.FeatureExprs
 
 /**
  * `-filter-islands2` — remove island rings that meet a min-area or
@@ -22,15 +24,10 @@ import org.apache.spark.sql.functions._
  */
 object FilterIslands2 {
 
-  private val areaUdf = udf { (flat: Seq[Double]) =>
-    val n = flat.length / 2
-    val xs = Array.tabulate(n)(i => flat(i * 2))
-    val ys = Array.tabulate(n)(i => flat(i * 2 + 1))
-    graft.geom.Geom.signedRingArea(xs, ys, 0, n)
-  }
-
   /** Even-odd PIP of (px,py) against a flat closed ring (per-candidate rows
-   * only — bounded by the number of island×hole pairs within one shape). */
+   * only — bounded by the number of island×hole pairs within one shape).
+   * A half-open crossing rule, not [[graft.geom.Geom.pointInRing]]: a point
+   * on the ring's boundary comes out in or out here, where that reports ON. */
   private val pipUdf = udf { (flat: Seq[Double], px: Double, py: Double) =>
     val n = flat.length / 2
     var inside = false
@@ -72,7 +69,7 @@ object FilterIslands2 {
       .groupBy(col(ridCol)).agg(max(col("c")).as("max_share"))
 
     val withMeta = rings
-      .withColumn("_area", areaUdf(col(ringCol)))
+      .withColumn("_area", FeatureExprs.ringSignedArea(col(ringCol)))
       .withColumn("_nv", (size(col(ringCol)) / 2 - 1).cast("long"))
       .join(ringShare, Seq(ridCol))
     val criterion =

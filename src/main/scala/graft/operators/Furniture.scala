@@ -183,17 +183,6 @@ object Symbols {
    * Returns polygons as (outer ring, optional hole ring with reversed
    * winding) in our flat model. */
   def ringCoords(radii: Seq[Double]): Seq[Seq[Array[Double]]] = {
-    def reverse(flat: Array[Double]): Array[Double] = {
-      val n = flat.length / 2
-      val out = new Array[Double](flat.length)
-      var i = 0
-      while (i < n) {
-        out(i * 2) = flat((n - 1 - i) * 2)
-        out(i * 2 + 1) = flat((n - 1 - i) * 2 + 1)
-        i += 1
-      }
-      out
-    }
     val solidCenter = radii.length % 2 == 1
     val out = Seq.newBuilder[Seq[Array[Double]]]
     var i = 0
@@ -203,7 +192,7 @@ object Symbols {
         val hole = ring
         i += 1
         ring = polygonCoords("circle", radii(i))
-        out += Seq(ring, reverse(hole))
+        out += Seq(ring, graft.geom.Geom.reverseRing(hole))
       } else {
         out += Seq(ring)
       }

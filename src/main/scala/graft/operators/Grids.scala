@@ -248,7 +248,6 @@ object Grids {
       out
     }
 
-    import spark.implicits._
     val mUdf = udf { (k: Long, part: Int) =>
       val x = -180.0 + interval * (k + 1)
       part match {
@@ -292,13 +291,14 @@ object Grids {
         i += 2
       }
     }
+    val inside = graft.geom.Overlay.evenOddContainment(rings)
     val out = new Array[Double](n * 2)
     var k = 0
     var guard = 0
     while (k < n && guard < n * 1000) {
       val px = x0 + rng.nextDouble() * (x1 - x0)
       val py = y0 + rng.nextDouble() * (y1 - y0)
-      if (graft.geom.Overlay.evenOddContains(rings, px, py)) {
+      if (inside(px, py)) {
         out(k * 2) = px
         out(k * 2 + 1) = py
         k += 1
@@ -336,12 +336,7 @@ object Grids {
     if (!(w > 0 && h > 0) || n <= 0) return Array.emptyDoubleArray
     // reference sizing: approxQueries ~ n * bboxArea / shapeArea; shape area
     // via the even-odd ring sum
-    val shpArea = math.abs(rings.map { r =>
-      val m = r.length / 2
-      val xs = Array.tabulate(m)(i => r(i * 2))
-      val ys = Array.tabulate(m)(i => r(i * 2 + 1))
-      graft.geom.Geom.signedRingArea(xs, ys, 0, m)
-    }.sum)
+    val shpArea = math.abs(rings.map(graft.geom.Geom.ringArea).sum)
     if (shpArea <= 0) return Array.emptyDoubleArray
     val approxQueries = math.max(1L, math.round(n * (w * h) / shpArea))
     val k = 0.5 * (ev - 1.0) + 1.0
@@ -390,7 +385,7 @@ object Grids {
       i -= 1
     }
 
-    val inside = (px: Double, py: Double) => graft.geom.Overlay.evenOddContains(rings, px, py)
+    val inside = graft.geom.Overlay.evenOddContainment(rings)
     val out = Array.newBuilder[Double]
     var placed = 0
     var fillCursor = 0

@@ -134,12 +134,6 @@ object Multimodal {
     Images.encode(dst, "png")
   }
 
-  /** Resize stage over a DataFrame (adds `thumb` binary column). */
-  def withThumbnails(images: DataFrame, outW: Int, outH: Int): DataFrame = {
-    val resizeUdf = udf((b: Array[Byte]) => resize(b, outW, outH))
-    images.withColumn("thumb", resizeUdf(col("bytes")))
-  }
-
   /** Decoded image as a luma [[Raster.Grid]] — the bridge from the binary
    * payload to the raster toolbox (blur / resample / crop / reproject /
    * GeoTIFF export); georef places the image at its phash location. */

@@ -73,12 +73,8 @@ object OverlayOp {
       .flatMap { case (tKey, ring, clipsRaw) =>
         val subject: Seq[Overlay.Shape] = Seq(Seq(ring))
         if (clipsRaw == null) {
-          if (doErase) {
-            val n = ring.length / 2
-            val xs = Array.tabulate(n)(i => ring(i * 2))
-            val ys = Array.tabulate(n)(i => ring(i * 2 + 1))
-            Some((tKey, 1L, math.abs(graft.geom.Geom.signedRingArea(xs, ys, 0, n))))
-          } else None
+          if (doErase) Some((tKey, 1L, math.abs(graft.geom.Geom.ringArea(ring))))
+          else None
         } else {
           val clipShapes: Seq[Overlay.Shape] = clipsRaw.map(r => Seq(r.toArray))
           val out = if (doErase) Overlay.erase(subject, clipShapes)

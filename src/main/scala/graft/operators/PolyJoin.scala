@@ -68,11 +68,15 @@ object PolyJoin {
       }.toSeq.sortBy(_._1)
   }
 
-  /** DataFrame wrapper (kernel runs per co-located component; here driver-side
-   * since join layers are broadcast-scale). */
-  def overlapDf(spark: SparkSession, targets: Seq[Keyed], sources: Seq[Keyed]): DataFrame = {
-    import spark.implicits._
-    overlapAreas(targets, sources).toDF("t_key", "s_key", "shared_area")
+  /** Candidate (t_key, s_key) pairs whose bbox covering cells intersect —
+   * ids only through the shuffle; shared by overlap join and `-slice`. */
+  def candidatePairs(spark: SparkSession, targets: DataFrame, sources: DataFrame,
+                     cellRes: Int): DataFrame = {
+    def withCells(df: DataFrame, keyOut: String): DataFrame =
+      df.select(col("key").cast("long").as(keyOut),
+        explode(graft.functions.SpatialExprs.ringCover(col("ring"), cellRes)).as("_cell"))
+    withCells(targets, "t_key").join(withCells(sources, "s_key"), Seq("_cell"))
+      .select("t_key", "s_key").distinct()
   }
 
   /**
@@ -87,17 +91,6 @@ object PolyJoin {
    * Input DFs: (key: Long, ring: Array[Double]) — single-ring shapes.
    * Output: (t_key, s_key, shared_area), only pairs with positive area.
    */
-  /** Candidate (t_key, s_key) pairs whose bbox covering cells intersect —
-   * ids only through the shuffle; shared by overlap join and `-slice`. */
-  def candidatePairs(spark: SparkSession, targets: DataFrame, sources: DataFrame,
-                     cellRes: Int): DataFrame = {
-    def withCells(df: DataFrame, keyOut: String): DataFrame =
-      df.select(col("key").cast("long").as(keyOut),
-        explode(graft.functions.SpatialExprs.ringCover(col("ring"), cellRes)).as("_cell"))
-    withCells(targets, "t_key").join(withCells(sources, "s_key"), Seq("_cell"))
-      .select("t_key", "s_key").distinct()
-  }
-
   def overlapDistributed(spark: SparkSession, targets: DataFrame, sources: DataFrame,
                          cellRes: Int = 6): DataFrame = {
     val cand = candidatePairs(spark, targets, sources, cellRes)
@@ -116,9 +109,8 @@ object PolyJoin {
    * lies inside, else the first inside point of a bbox grid scan (ordered by
    * distance from the bbox center). */
   def ringInnerPoint(r: Array[Double]): (Double, Double) = {
-    val n = r.length / 2
-    val xs = Array.tabulate(n)(i => r(i * 2))
-    val ys = Array.tabulate(n)(i => r(i * 2 + 1))
+    val (xs, ys) = graft.geom.Geom.unzipRing(r)
+    val n = xs.length
     var a2 = 0.0; var cx = 0.0; var cy = 0.0
     var i = 0
     while (i < n - 1) {

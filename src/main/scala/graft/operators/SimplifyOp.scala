@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.geom.Simplify
+import graft.functions.FeatureExprs
+import graft.geom.{Geom, Simplify}
 
 /**
  * Distributed path simplification — the reference's `-simplify`
@@ -20,9 +21,7 @@ object SimplifyOp {
   /** Per-vertex thresholds column added to a (id, ring: Array[Double]) frame. */
   def withThresholds(rings: DataFrame, ringCol: String, method: Simplify.Method): DataFrame = {
     val thrUdf = udf { (flat: Seq[Double]) =>
-      val n = flat.length / 2
-      val xx = Array.tabulate(n)(i => flat(i * 2))
-      val yy = Array.tabulate(n)(i => flat(i * 2 + 1))
+      val (xx, yy) = Geom.unzipRing(flat.toArray)
       Simplify.thresholds(xx, yy, method)
     }
     rings.withColumn("thresholds", thrUdf(col(ringCol)))
@@ -118,9 +117,7 @@ object SimplifyOp {
   def withSphericalThresholds(rings: DataFrame, ringCol: String,
                               method: Simplify.Method): DataFrame = {
     val thrUdf = udf { (flat: Seq[Double]) =>
-      val n = flat.length / 2
-      val lon = Array.tabulate(n)(i => flat(i * 2))
-      val lat = Array.tabulate(n)(i => flat(i * 2 + 1))
+      val (lon, lat) = Geom.unzipRing(flat.toArray)
       Simplify.protectWorldEdges(lon, lat,
         Simplify.sphericalThresholds(lon, lat, method))
     }
@@ -175,13 +172,6 @@ object SimplifyOp {
   }
 
   /** `-filter-islands` / `-filter-slivers`: drop rings below an area floor. */
-  def filterSlivers(rings: DataFrame, ringCol: String, minArea: Double): DataFrame = {
-    val areaUdf = udf { (flat: Seq[Double]) =>
-      val n = flat.length / 2
-      val xs = Array.tabulate(n)(i => flat(i * 2))
-      val ys = Array.tabulate(n)(i => flat(i * 2 + 1))
-      math.abs(graft.geom.Geom.signedRingArea(xs, ys, 0, n))
-    }
-    rings.filter(areaUdf(col(ringCol)) >= minArea)
-  }
+  def filterSlivers(rings: DataFrame, ringCol: String, minArea: Double): DataFrame =
+    rings.filter(abs(FeatureExprs.ringSignedArea(col(ringCol))) >= minArea)
 }

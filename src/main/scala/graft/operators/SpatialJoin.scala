@@ -4,7 +4,6 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.cell.CellIndex
 import graft.index.PolygonLayer
 
 /**

@@ -16,10 +16,6 @@ object TextAnalysis {
     when(length(trim(text)) === 0, lit(0))
       .otherwise(size(split(trim(text), "\\s+")))
 
-  /** BPE-ish subword count: alpha runs, digit runs, and single punct marks. */
-  def subwordCount(text: Column): Column =
-    size(filter(split(text, "(?<=[^a-zA-Z0-9])|(?=[^a-zA-Z0-9])"), s => length(trim(s)) > 0))
-
   /** Punctuation+symbol character count. */
   def punctCount(text: Column): Column =
     length(regexp_replace(text, "[a-zA-Z0-9\\s]", ""))

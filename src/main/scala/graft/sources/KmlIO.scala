@@ -6,6 +6,7 @@ import java.util.zip.ZipInputStream
 import javax.xml.parsers.DocumentBuilderFactory
 import org.w3c.dom.Element
 
+import graft.geom.Geom
 import graft.index.PolygonLayer
 
 /**
@@ -110,27 +111,16 @@ object KmlIO {
   def writePolygons(layer: PolygonLayer): Array[Byte] = {
     val pms = (0 until layer.numShapes).map { s =>
       val ringIdx = (0 until layer.numRings).filter(layer.ringShape(_) == s)
-      val flats = ringIdx.map { r =>
-        val st = layer.ringStart(r); val n = layer.ringStart(r + 1) - st
-        val flat = new Array[Double](n * 2)
-        var i = 0
-        while (i < n) {
-          flat(i * 2) = layer.xx(st + i); flat(i * 2 + 1) = layer.yy(st + i)
-          i += 1
-        }
-        flat
+      val flats = ringIdx.map(layer.ring)
+      val split = flats.map(Geom.unzipRing)
+      def pip(ringI: Int, px: Double, py: Double): Int = {
+        val (xs, ys) = split(ringI)
+        Geom.pointInRing(px, py, xs, ys, 0, xs.length)
       }
       val isHole = flats.indices.map { i =>
         var depth = 0
         flats.indices.foreach { j =>
-          if (i != j) {
-            val o = flats(j)
-            val n = o.length / 2
-            val xs = Array.tabulate(n)(k => o(k * 2))
-            val ys = Array.tabulate(n)(k => o(k * 2 + 1))
-            if (graft.geom.Geom.pointInRing(flats(i)(0), flats(i)(1), xs, ys, 0, n)
-                == graft.geom.Geom.IN) depth += 1
-          }
+          if (i != j && pip(j, flats(i)(0), flats(i)(1)) == Geom.IN) depth += 1
         }
         depth % 2 == 1
       }
@@ -139,15 +129,8 @@ object KmlIO {
       // the outer ring that contains its first vertex
       val outerIdx = flats.indices.filter(!isHole(_))
       val holeIdx = flats.indices.filter(isHole(_))
-      def containsPt(ringI: Int, px: Double, py: Double): Boolean = {
-        val o = flats(ringI)
-        val n = o.length / 2
-        val xs = Array.tabulate(n)(k => o(k * 2))
-        val ys = Array.tabulate(n)(k => o(k * 2 + 1))
-        graft.geom.Geom.pointInRing(px, py, xs, ys, 0, n) != graft.geom.Geom.OUT
-      }
       val holeOwner: Map[Int, Int] = holeIdx.flatMap(hi =>
-        outerIdx.find(oi => containsPt(oi, flats(hi)(0), flats(hi)(1))).map(hi -> _)).toMap
+        outerIdx.find(oi => pip(oi, flats(hi)(0), flats(hi)(1)) != Geom.OUT).map(hi -> _)).toMap
       val polys = outerIdx.map { oi =>
         val myHoles = holeIdx.filter(hi => holeOwner.get(hi).contains(oi))
         "<Polygon><outerBoundaryIs><LinearRing><coordinates>" +

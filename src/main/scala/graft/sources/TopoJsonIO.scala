@@ -155,13 +155,7 @@ object TopoJsonIO {
    */
   def toTopoJson(layer: PolygonLayer, quantization: Int = 0): String = {
     val (x0, y0, x1, y1) = layer.extent
-    val flats = (0 until layer.numRings).map { r =>
-      val st = layer.ringStart(r); val en = layer.ringStart(r + 1)
-      val f = new Array[Double]((en - st) * 2)
-      var i = st
-      while (i < en) { f((i - st) * 2) = layer.xx(i); f((i - st) * 2 + 1) = layer.yy(i); i += 1 }
-      f
-    }
+    val flats = (0 until layer.numRings).map(layer.ring)
     val (gx, gy) = exportGrid(flats, x1 - x0, y1 - y0, quantization = quantization)
     val kx = if (x1 > x0 && gx > 0) gx / (x1 - x0) else 1.0
     val ky = if (y1 > y0 && gy > 0) gy / (y1 - y0) else 1.0

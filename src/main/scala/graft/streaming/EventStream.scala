@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import org.apache.spark.sql.Row
 
 /**
  * Structured-Streaming ingestion surface. The reference is strictly batch
@@ -20,16 +18,6 @@ object EventStream {
   def source(spark: SparkSession, dir: String, schemaFrom: DataFrame): DataFrame =
     spark.readStream.schema(schemaFrom.schema).parquet(dir)
       .withColumn("ts", col("ts").cast("timestamp"))
-
-  /** Tumbling-window counts/stats per event type with a watermark. */
-  def windowedAgg(events: DataFrame, window_ : String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_), col("event_type"))
-      .agg(count(lit(1)).as("n"), min(col("value")).as("min_value"),
-        max(col("value")).as("max_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("min_value"), col("max_value"))
 
   /** Streaming exact dedup: `dropDuplicates` keyed on the id column with a
    * watermark bounding the dedup state — the streaming form of
@@ -114,16 +102,5 @@ object EventStream {
           }
       }
       .toDF("k", "start_us", "end_us", "n_events")
-  }
-
-  /** Drain everything currently available, then stop (backfill mode). */
-  def runAvailableNow(agg: DataFrame, queryName: String): Unit = {
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination(300000)
   }
 }

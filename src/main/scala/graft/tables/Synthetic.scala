@@ -1,5 +1,6 @@
 package graft.tables
 
+import graft.geom.Geom
 import graft.index.PolygonLayer
 
 /** SplitMix64 — tiny deterministic PRNG for synthetic data (public algorithm). */
@@ -50,19 +51,6 @@ object Synthetic {
     pts
   }
 
-  /** Reverse point order of a closed flat ring [x0,y0,...,x0,y0] (hole winding). */
-  def reverseRing(ring: Array[Double]): Array[Double] = {
-    val n = ring.length / 2
-    val out = new Array[Double](ring.length)
-    var i = 0
-    while (i < n) {
-      out(i * 2) = ring((n - 1 - i) * 2)
-      out(i * 2 + 1) = ring((n - 1 - i) * 2 + 1)
-      i += 1
-    }
-    out
-  }
-
   /**
    * Polygon layer of n blob shapes on a jittered grid covering [0,100)².
    * Shape keys are 0..n-1. Every `holeEvery`-th shape gets a centered hole
@@ -78,7 +66,7 @@ object Synthetic {
       val outer = blobRing(gx, gy, pitch * 0.52, 8 + rng.nextInt(5), rng)
       val rings =
         if (holeEvery > 0 && i % holeEvery == holeEvery - 1)
-          Seq(outer, reverseRing(blobRing(gx, gy, pitch * 0.18, 6, rng)))
+          Seq(outer, Geom.reverseRing(blobRing(gx, gy, pitch * 0.18, 6, rng)))
         else Seq(outer)
       (i.toLong, rings)
     }

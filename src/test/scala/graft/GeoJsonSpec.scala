@@ -47,7 +47,7 @@ class GeoJsonSpec extends AnyFunSuite {
 
   test("vertex order and winding survive export (holes stay reversed)") {
     val outerRing = Array(0.0, 0.0, 4.0, 0.0, 4.0, 4.0, 0.0, 4.0, 0.0, 0.0)
-    val hole = Synthetic.reverseRing(Array(1.0, 1.0, 2.0, 1.0, 2.0, 2.0, 1.0, 2.0, 1.0, 1.0))
+    val hole = Geom.reverseRing(Array(1.0, 1.0, 2.0, 1.0, 2.0, 2.0, 1.0, 2.0, 1.0, 1.0))
     val layer = graft.index.PolygonLayer.fromShapes(Seq((7L, Seq(outerRing, hole))))
     val back = GeoJsonIO.fromGeoJson(GeoJsonIO.toGeoJson(layer))
     assert(back.shapeKeys.toSeq == Seq(7L))

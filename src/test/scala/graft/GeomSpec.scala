@@ -164,4 +164,56 @@ class GeomSpec extends AnyFunSuite {
     val dLen = Geom.sphericalPathLength(Array(0.0, 1.0), Array(0.0, 0.0), 0, 2)
     assert(math.abs(dLen - 6371008.8 * math.Pi / 180.0) < 1e-3)
   }
+
+  // ------------------------------------------------------- closed flat rings
+
+  /** A closed flat ring of `n` >= `min` points, the last repeating the first
+   * (one point for n = 1), of any doubles — NaN and infinities included. */
+  private def closedRing(min: Int): org.scalacheck.Gen[Array[Double]] = {
+    import org.scalacheck.{Arbitrary, Gen}
+    for {
+      n <- Gen.choose(min, 12)
+      mid <- Gen.listOfN(2 * math.max(n - 2, 0), Arbitrary.arbitrary[Double])
+      x0 <- Arbitrary.arbitrary[Double]
+      y0 <- Arbitrary.arbitrary[Double]
+    } yield (if (n == 1) Seq(x0, y0) else (x0 +: y0 +: mid) ++ Seq(x0, y0)).toArray
+  }
+
+  private def holds(p: org.scalacheck.Prop): Unit = {
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(500), p)
+    assert(res.passed, res.status.toString)
+  }
+
+  private def bits(a: Array[Double], b: Array[Double]): Boolean = java.util.Arrays.equals(a, b)
+
+  test("zipRing inverts unzipRing and reverseRing is an involution (1- and 2-point rings too)") {
+    holds(org.scalacheck.Prop.forAll(closedRing(1)) { r =>
+      val (xs, ys) = Geom.unzipRing(r)
+      xs.length == r.length / 2 && bits(Geom.zipRing(xs, ys), r) &&
+        bits(Geom.reverseRing(Geom.reverseRing(r)), r)
+    })
+  }
+
+  test("ringArea is signedRingArea over hand-split arrays, bit for bit") {
+    holds(org.scalacheck.Prop.forAll(closedRing(1)) { r =>
+      val n = r.length / 2
+      val xs = Array.tabulate(n)(i => r(i * 2))
+      val ys = Array.tabulate(n)(i => r(i * 2 + 1))
+      java.lang.Double.doubleToLongBits(Geom.ringArea(r)) ==
+        java.lang.Double.doubleToLongBits(Geom.signedRingArea(xs, ys, 0, n))
+    })
+  }
+
+  test("PolygonLayer.ring returns the rings fromShapes was given") {
+    import org.scalacheck.Gen
+    val shapes = Gen.listOf(Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, closedRing(4))))
+    holds(org.scalacheck.Prop.forAll(shapes) { ss =>
+      val in = ss.zipWithIndex.map { case (rings, k) => (k.toLong, rings) }
+      val layer = graft.index.PolygonLayer.fromShapes(in)
+      val rings = ss.flatten
+      layer.numRings == rings.length &&
+        rings.indices.forall(r => bits(layer.ring(r), rings(r)))
+    })
+  }
 }

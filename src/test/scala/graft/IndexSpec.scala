@@ -161,7 +161,7 @@ class IndexSpec extends AnyFunSuite {
       1L -> Seq(rect(0, 0, 10, 10)),
       2L -> Seq(rect(10, 0, 20, 10)), // shares the x=10 edge with shape 1
       3L -> Seq(rect(5, 5, 15, 15)),  // overlaps both
-      4L -> Seq(rect(30, 0, 50, 20), Synthetic.reverseRing(rect(35, 5, 45, 15))), // hole
+      4L -> Seq(rect(30, 0, 50, 20), graft.geom.Geom.reverseRing(rect(35, 5, 45, 15))), // hole
       5L -> Seq(rect(40, 10, 60, 30)) // overlaps 4's hole region partially
     ))
   }
@@ -318,7 +318,7 @@ class IndexSpec extends AnyFunSuite {
 
   test("shapeArea: holes subtract (opposite winding)") {
     val outer = Array(0.0, 0.0, 10.0, 0.0, 10.0, 10.0, 0.0, 10.0, 0.0, 0.0)
-    val hole = Synthetic.reverseRing(Array(2.0, 2.0, 4.0, 2.0, 4.0, 4.0, 2.0, 4.0, 2.0, 2.0))
+    val hole = graft.geom.Geom.reverseRing(Array(2.0, 2.0, 4.0, 2.0, 4.0, 4.0, 2.0, 4.0, 2.0, 2.0))
     val layer = PolygonLayer.fromShapes(Seq((0L, Seq(outer, hole))))
     assert(math.abs(layer.shapeArea(0) - 96.0) < 1e-9)
   }

@@ -45,7 +45,7 @@ class MiscOpsSpec extends SparkSuite {
 
   test("dotFill: all dots inside the shape (with hole), deterministic") {
     val outer = rect(0, 0, 10, 10)
-    val hole = Synthetic.reverseRing(rect(4, 4, 6, 6))
+    val hole = graft.geom.Geom.reverseRing(rect(4, 4, 6, 6))
     val dots1 = Grids.dotFill(Seq(outer, hole), 200, seed = 7)
     val dots2 = Grids.dotFill(Seq(outer, hole), 200, seed = 7)
     assert(dots1.toSeq == dots2.toSeq)

@@ -289,4 +289,26 @@ class PlanSpec extends SparkSuite {
     assert(!plan.toLowerCase.contains("scalaudf") && !plan.contains("BatchEval"),
       "boxed UDF survives on the polygon side")
   }
+
+  test("plan text is the same for equal plans over distinct broadcasts and arrays") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.{CentroidProbesExpr, KnnProbe, NearestCentroidExpr, PipAllKeys,
+      PipBoxFirstKey, PipFirstKey}
+    val (x, y, id) = (Literal(1.0), Literal(2.0), Literal(3L))
+    val sc = spark.sparkContext
+    val tree = graft.index.PointTree.build(Array(1L, 2L), Array(0.0, 1.0), Array(0.0, 1.0))
+    val cents = () => Array(Array(1.0f, 0.0f), Array(0.0f, 1.0f))
+    val builders: Seq[() => Any] = Seq(
+      () => PipFirstKey(x, y, sc.broadcast(Synthetic.oracleLayer)),
+      () => PipBoxFirstKey(x, y, x, y, sc.broadcast(Synthetic.oracleLayer)),
+      () => PipAllKeys(x, y, sc.broadcast(Synthetic.oracleLayer)),
+      () => KnnProbe(id, x, y, sc.broadcast(tree), 3),
+      () => NearestCentroidExpr(x, cents()),
+      () => CentroidProbesExpr(x, cents(), 1),
+      () => new graft.operators.Dissolve.EdgeCancel())
+    builders.foreach { mk =>
+      val (a, b) = (mk().toString, mk().toString)
+      assert(a == b, s"$a vs $b")
+    }
+  }
 }
