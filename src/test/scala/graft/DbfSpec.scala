@@ -7,6 +7,8 @@ import graft.sources.{DbfReader, ShpReader}
 class DbfSpec extends AnyFunSuite {
 
   test("reads the Natural Earth DBF: fields, rows aligned with .shp records") {
+    ReferenceFixture.assumePresent(
+      "ne/ne_110m_admin_0_scale_rank.dbf", "ne/ne_110m_admin_0_scale_rank.shp")
     val t = DbfReader.read("/root/reference/test/data/ne/ne_110m_admin_0_scale_rank.dbf")
     val shp = ShpReader.readPolygons("/root/reference/test/data/ne/ne_110m_admin_0_scale_rank.shp")
     assert(t.rows.size == shp.numShapes, s"dbf=${t.rows.size} shp=${shp.numShapes}")
@@ -19,6 +21,8 @@ class DbfSpec extends AnyFunSuite {
   }
 
   test("dbf attributes join to shp geometry by record index") {
+    ReferenceFixture.assumePresent(
+      "ne/ne_110m_admin_0_scale_rank.dbf", "ne/ne_110m_admin_0_scale_rank.shp")
     val t = DbfReader.read("/root/reference/test/data/ne/ne_110m_admin_0_scale_rank.dbf")
     val shp = ShpReader.readPolygons("/root/reference/test/data/ne/ne_110m_admin_0_scale_rank.shp")
     // every shape key indexes a dbf row

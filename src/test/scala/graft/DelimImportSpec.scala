@@ -137,6 +137,7 @@ class DelimImportSpec extends SparkSuite {
   // --- file import end-to-end (delim-import-test.mjs:94-128, 526-540) ---
 
   test("empty_fields2.csv: string-fields protects FIPS, lat/lon numeric with nulls") {
+    ReferenceFixture.assumePresent("text/empty_fields2.csv")
     val df = DelimImport.read(spark,
       "/root/reference/test/data/text/empty_fields2.csv",
       Options(stringFields = Seq("Voters_FIPS")))
@@ -147,6 +148,8 @@ class DelimImportSpec extends SparkSuite {
   }
 
   test("BOM handling: utf8 / utf16be / utf16le fixtures parse identically") {
+    ReferenceFixture.assumePresent(
+      "text/utf8_bom.csv", "text/utf16_be_bom.csv", "text/utf16_le_bom.csv")
     // delim-import-test.mjs:50-70 — same election table in three encodings
     val dfs = Seq("utf8_bom.csv", "utf16_be_bom.csv", "utf16_le_bom.csv").map { f =>
       DelimImport.read(spark, s"/root/reference/test/data/text/$f")
@@ -161,6 +164,7 @@ class DelimImportSpec extends SparkSuite {
   }
 
   test("states.csv: 52 records, FIPS auto-detected numeric, tsv guess") {
+    ReferenceFixture.assumePresent("text/states.csv", "text/two_states.tsv")
     val df = DelimImport.read(spark, "/root/reference/test/data/text/states.csv")
     assert(df.count() == 52)
     val first = df.orderBy("STATE_NAME").head()

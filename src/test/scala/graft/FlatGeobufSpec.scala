@@ -8,6 +8,7 @@ import graft.sources.FlatGeobuf
 class FlatGeobufSpec extends AnyFunSuite {
 
   test("poly00.fgb: polygon layer with a 'poly' column, coords inside envelope") {
+    ReferenceFixture.assumePresent("flatgeobuf/poly00.fgb")
     val layer = FlatGeobuf.read("/root/reference/test/data/flatgeobuf/poly00.fgb")
     assert(layer.geometryType == FlatGeobuf.GPolygon)
     assert(layer.columns.map(_.name) == Seq("AREA", "EAS_ID", "PRFEDEA"))
@@ -31,6 +32,7 @@ class FlatGeobufSpec extends AnyFunSuite {
   }
 
   test("countries.fgb: many multipolygon features with id/name properties") {
+    ReferenceFixture.assumePresent("flatgeobuf/countries.fgb")
     val layer = FlatGeobuf.read("/root/reference/test/data/flatgeobuf/countries.fgb")
     assert(layer.features.length > 100)
     val names = layer.columns.map(_.name)
@@ -80,6 +82,7 @@ class FlatGeobufSpec extends AnyFunSuite {
   }
 
   test("empty.fgb parses with zero features") {
+    ReferenceFixture.assumePresent("flatgeobuf/empty.fgb")
     val layer = FlatGeobuf.read("/root/reference/test/data/flatgeobuf/empty.fgb")
     assert(layer.features.isEmpty)
   }

@@ -24,6 +24,7 @@ class GeoJsonSpec extends AnyFunSuite {
   }
 
   test("reads the reference dissolve2 fixture (GeometryCollection with holes)") {
+    ReferenceFixture.assumePresent("features/dissolve2/ex1.json")
     val layer = GeoJsonIO.fromGeoJson(readRef("features/dissolve2/ex1.json"))
     assert(layer.numShapes == 2)
     assert(layer.numRings == 4) // two polygons, each with a hole
@@ -35,6 +36,7 @@ class GeoJsonSpec extends AnyFunSuite {
   }
 
   test("reads the reference clip fixtures and PIP behaves per even-odd rule") {
+    ReferenceFixture.assumePresent("features/clip/ex1_outer.json")
     val outer = GeoJsonIO.fromGeoJson(readRef("features/clip/ex1_outer.json"))
     assert(outer.numShapes >= 1)
     val (x0, y0, x1, y1) = outer.extent

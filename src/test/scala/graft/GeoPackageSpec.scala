@@ -8,6 +8,7 @@ import graft.sources.GeoPackage
 class GeoPackageSpec extends AnyFunSuite {
 
   test("same_crs_points.gpkg: two point feature tables, expected rows") {
+    ReferenceFixture.assumePresent("geopackage/same_crs_points.gpkg")
     val db = GeoPackage.open("/root/reference/test/data/geopackage/same_crs_points.gpkg")
     val tables = GeoPackage.featureTables(db)
     assert(tables.toSet == Set("oregon_cities", "washington_cities"))
@@ -27,6 +28,7 @@ class GeoPackageSpec extends AnyFunSuite {
   }
 
   test("world_land_robin.gpkg: polygon features with multi-ring geometry") {
+    ReferenceFixture.assumePresent("geopackage/world_land_robin.gpkg")
     val db = GeoPackage.open("/root/reference/test/data/geopackage/world_land_robin.gpkg")
     val tables = GeoPackage.featureTables(db)
     assert(tables == Seq("world_land_robin"))
@@ -43,6 +45,7 @@ class GeoPackageSpec extends AnyFunSuite {
   }
 
   test("data_only_tables.gpkg: feature tables plus extra attribute tables") {
+    ReferenceFixture.assumePresent("geopackage/data_only_tables.gpkg")
     val db = GeoPackage.open("/root/reference/test/data/geopackage/data_only_tables.gpkg")
     assert(GeoPackage.featureTables(db).toSet ==
       Set("oregon_cities", "washington_cities"))

@@ -9,6 +9,7 @@ import graft.sources.KmlIO
 class KmlSpec extends AnyFunSuite {
 
   test("reads point placemarks from the reference Albania KMZ fixture") {
+    ReferenceFixture.assumePresent("kml/Albania.kmz")
     val kmz = Files.readAllBytes(Paths.get("/root/reference/test/data/kml/Albania.kmz"))
     val kml = KmlIO.kmlFromKmz(kmz)
     val pts = KmlIO.readPoints(kml)

@@ -96,6 +96,7 @@ class OverlaySpec extends AnyFunSuite {
   }
 
   test("reference dissolve2 fixture ex1: nested squares with holes") {
+    ReferenceFixture.assumePresent("features/dissolve2/ex1.json")
     // two polygons: 3x3 with 1x1 hole (area 8) inside a 5x5 with 0.64 hole
     val json = Files.readString(Paths.get("/root/reference/test/data/features/dissolve2/ex1.json"))
     val layer = GeoJsonIO.fromGeoJson(json)

@@ -9,6 +9,8 @@ import graft.tables.Synthetic
 class ShpTopoSpec extends AnyFunSuite {
 
   test("shapefile reader parses Natural Earth polygons matching the GeoJSON twin") {
+    ReferenceFixture.assumePresent(
+      "ne/ne_110m_admin_0_scale_rank.shp", "ne/ne_110m_admin_0_scale_rank.json")
     val shp = ShpReader.readPolygons("/root/reference/test/data/ne/ne_110m_admin_0_scale_rank.shp")
     val gj = GeoJsonIO.fromGeoJson(java.nio.file.Files.readString(
       java.nio.file.Paths.get("/root/reference/test/data/ne/ne_110m_admin_0_scale_rank.json")))
