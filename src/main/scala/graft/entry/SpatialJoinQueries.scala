@@ -84,20 +84,11 @@ private[graft] object SpatialJoinQueries {
     // broadcast path — saltThreshold=4 forces most cells through the salted
     // branch, so the driver gate covers the 100-TB join shape, not just the
     // broadcast fast path
-    query("q_pip_cell")((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.oracleLayer
-      val rings = (0 until layer.numRings).map { r =>
-        val s0 = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        (layer.shapeKeys(layer.ringShape(r)),
-          layer.xx.slice(s0, e).toSeq, layer.yy.slice(s0, e).toSeq)
-      }
-      val polyDf = rings.toDF("poly_key", "ring_x", "ring_y")
-      SpatialJoin.cellJoin(s, points(s, dir), "x", "y", polyDf, res = 5,
+    query("q_pip_cell")((s, dir) =>
+      SpatialJoin.cellJoin(s, points(s, dir), "x", "y", Synthetic.oracleLayer, res = 5,
           saltThreshold = 4)
         .select(col("id"), col("poly_key"))
-        .orderBy("id", "poly_key")
-    })(
+        .orderBy("id", "poly_key"))(
       // the cell-partitioned path must reproduce the broadcast path bit-for-bit
       s"""WITH $ptsSql,
          |$oracleEdgesSql,
@@ -430,20 +421,11 @@ private[graft] object SpatialJoinQueries {
     // scattered — the skew escape hatch itself must reproduce the broadcast
     // path's ray-cast mirror bit-for-bit (SkewSpec asserts plan shape; this
     // asserts the result through the driver gate)
-    query("q_pip_salted")((s, dir) => {
-      import s.implicits._
-      val layer = Synthetic.oracleLayer
-      val rings = (0 until layer.numRings).map { r =>
-        val s0 = layer.ringStart(r); val e = layer.ringStart(r + 1)
-        (layer.shapeKeys(layer.ringShape(r)),
-          layer.xx.slice(s0, e).toSeq, layer.yy.slice(s0, e).toSeq)
-      }
-      val polyDf = rings.toDF("poly_key", "ring_x", "ring_y")
-      SpatialJoin.cellJoin(s, points(s, dir), "x", "y", polyDf, res = 5,
+    query("q_pip_salted")((s, dir) =>
+      SpatialJoin.cellJoin(s, points(s, dir), "x", "y", Synthetic.oracleLayer, res = 5,
           saltThreshold = 0)
         .select(col("id"), col("poly_key"))
-        .orderBy("id", "poly_key")
-    })(
+        .orderBy("id", "poly_key"))(
       // the salted path must reproduce the broadcast path's mirror bit-for-bit
       s"""WITH $ptsSql,
          |$oracleEdgesSql,

@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression,
   TernaryExpression}
@@ -254,46 +253,26 @@ case class UtmForwardExpr(left: Expression, right: Expression) extends BinaryExp
     copy(left = l, right = r)
 }
 
-/** Ring state (0=OUT / 1=IN / 2=ON) of a point against one packed ring —
- * the cell-join PIP kernel. Codegen reads the ring's ArrayData in place:
- * no Seq boxing, no array copy per candidate pair. */
-case class PipRingStateExpr(children: Seq[Expression])
-    extends Expression {
-  require(children.length == 4, "pip_ring_state(x, y, ring_x, ring_y)")
+/** Ring state ([[graft.geom.Geom.OUT]] / `IN` / `ON`) of a point against
+ * one closed flat ring — the PIP kernel of the cell join and of
+ * `-filter-islands2`. Codegen reads the ring's ArrayData in place: no Seq
+ * boxing, no array copy per candidate pair. */
+case class PipRingStateExpr(first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression {
   override def dataType: DataType = IntegerType
-  override def nullable: Boolean = children.exists(_.nullable)
   override def prettyName: String = "pip_ring_state"
-  override def foldable: Boolean = false
 
-  override def eval(input: InternalRow): Any = {
-    val x = children(0).eval(input)
-    val y = children(1).eval(input)
-    val xs = children(2).eval(input)
-    val ys = children(3).eval(input)
-    if (x == null || y == null || xs == null || ys == null) null
-    else graft.geom.Geom.pointInRingData(
-      x.asInstanceOf[Double], y.asInstanceOf[Double],
-      xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData])
-  }
+  override protected def nullSafeEval(x: Any, y: Any, ring: Any): Any =
+    graft.geom.Geom.pointInRingData(x.asInstanceOf[Double], y.asInstanceOf[Double],
+      ring.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cs = children.map(_.genCode(ctx))
-    val nullCheck = cs.map(c => c.isNull.toString).mkString(" || ")
-    ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper(
-      new StringContext(
-        s"""
-           |${cs.map(_.code.toString).mkString("\n")}
-           |boolean ${ev.isNull} = $nullCheck;
-           |int ${ev.value} = -1;
-           |if (!${ev.isNull}) {
-           |  ${ev.value} = graft.geom.Geom$$.MODULE$$.pointInRingData(
-           |    ${cs(0).value}, ${cs(1).value}, ${cs(2).value}, ${cs(3).value});
-           |}
-           |""".stripMargin)).code())
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y, ring) =>
+      s"graft.geom.Geom$$.MODULE$$.pointInRingData($x, $y, $ring)")
 
   override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): Expression = copy(children = newChildren)
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
 }
 
 /** Morton-decode the image-table phash to a lon or lat coordinate. */
@@ -333,23 +312,6 @@ case class FlatRingCoverExpr(child: Expression, res: Int)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-/** Covering cells from SoA ring coordinates (xs, ys) — array<long>. */
-case class RingCoverXYExpr(left: Expression, right: Expression, res: Int)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ring_cover_xy"
-
-  override protected def nullSafeEval(xs: Any, ys: Any): Any =
-    FlatRingExprs.coverXY(xs.asInstanceOf[ArrayData], ys.asInstanceOf[ArrayData], res)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (xs, ys) =>
-      s"graft.functions.FlatRingExprs.coverXY($xs, $ys, $res)")
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-    copy(left = l, right = r)
-}
-
 /** Bounding box [x0, y0, x1, y1] of a flat interleaved ring — array<double>. */
 case class FlatRingBBoxExpr(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
@@ -384,20 +346,6 @@ object FlatRingExprs {
     UnsafeArrayData.fromPrimitiveArray(CellIndex.coveringCells(x0, y0, x1, y1, res))
   }
 
-  def coverXY(xs: ArrayData, ys: ArrayData, res: Int): ArrayData = {
-    val n = xs.numElements()
-    var x0 = Double.MaxValue; var y0 = Double.MaxValue
-    var x1 = Double.MinValue; var y1 = Double.MinValue
-    var i = 0
-    while (i < n) {
-      val x = xs.getDouble(i); val y = ys.getDouble(i)
-      if (x < x0) x0 = x; if (x > x1) x1 = x
-      if (y < y0) y0 = y; if (y > y1) y1 = y
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(CellIndex.coveringCells(x0, y0, x1, y1, res))
-  }
-
   def bbox(ring: ArrayData): ArrayData = {
     val n = ring.numElements()
     var x0 = Double.MaxValue; var y0 = Double.MaxValue
@@ -419,9 +367,6 @@ object SpatialExprs {
 
   def ringCover(ring: Column, res: Int): Column =
     GraftBridge.column(FlatRingCoverExpr(GraftBridge.expr(ring), res))
-
-  def ringCoverXY(xs: Column, ys: Column, res: Int): Column =
-    GraftBridge.column(RingCoverXYExpr(GraftBridge.expr(xs), GraftBridge.expr(ys), res))
 
   def ringBBox(ring: Column): Column =
     GraftBridge.column(FlatRingBBoxExpr(GraftBridge.expr(ring)))
@@ -459,9 +404,9 @@ object SpatialExprs {
   def utmForward(lon: Column, lat: Column): Column =
     GraftBridge.column(UtmForwardExpr(dbl(lon), dbl(lat)))
 
-  def pipRingState(x: Column, y: Column, ringX: Column, ringY: Column): Column =
-    GraftBridge.column(PipRingStateExpr(Seq(dbl(x), dbl(y),
-      GraftBridge.expr(ringX), GraftBridge.expr(ringY))))
+  def pipRingState(x: Column, y: Column, ring: Column): Column =
+    GraftBridge.column(PipRingStateExpr(dbl(x), dbl(y),
+      GraftBridge.expr(ring.cast("array<double>"))))
 
   def phashLon(p: Column): Column = GraftBridge.column(PhashCoord(GraftBridge.expr(p.cast("long")), isLon = true))
   def phashLat(p: Column): Column = GraftBridge.column(PhashCoord(GraftBridge.expr(p.cast("long")), isLon = false))

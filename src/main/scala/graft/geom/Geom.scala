@@ -77,21 +77,21 @@ object Geom {
     if (isOn) ON else if (isIn) IN else OUT
   }
 
-  /** [[pointInRing]] over Catalyst ArrayData — reads elements in place
-   * (no per-row array copy, no boxing); the codegen spatial-join kernel. */
+  /** [[pointInRing]] over a closed flat ring in Catalyst ArrayData — reads
+   * elements in place (no per-row array copy, no boxing); a trailing odd
+   * element is ignored. The kernel of the codegen `pip_ring_state`. */
   def pointInRingData(x: Double, y: Double,
-                      xx: org.apache.spark.sql.catalyst.util.ArrayData,
-                      yy: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
+                      ring: org.apache.spark.sql.catalyst.util.ArrayData): Int = {
     var isIn = false
     var isOn = false
     var i = 0
-    val end = math.min(xx.numElements(), yy.numElements()) - 1
-    while (i < end) {
-      val r = rayIntersection(x, y, xx.getDouble(i), yy.getDouble(i),
-        xx.getDouble(i + 1), yy.getDouble(i + 1))
+    val n = ring.numElements()
+    while (i + 3 < n) {
+      val r = rayIntersection(x, y, ring.getDouble(i), ring.getDouble(i + 1),
+        ring.getDouble(i + 2), ring.getDouble(i + 3))
       if (r == 1) isIn = !isIn
       else if (r == ON) isOn = true
-      i += 1
+      i += 2
     }
     if (isOn) ON else if (isIn) IN else OUT
   }

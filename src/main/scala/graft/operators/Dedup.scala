@@ -35,9 +35,15 @@ object Dedup {
    * that silently turns into a 3-4x recompute if either consumer's projection
    * drifts. The checkpointed frame is (id, bucket)-shaped (~16 bytes/row),
    * so eager local materialization is cheap at any corpus scale.
+   *
+   * The checkpoint RDD's call site names this method, not a source line, so
+   * plan text does not change when lines above the call move.
    */
-  private[operators] def materializeOnce(df: DataFrame): DataFrame =
-    df.localCheckpoint(true)
+  private[operators] def materializeOnce(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    sc.setCallSite("localCheckpoint at Dedup.materializeOnce")
+    try df.localCheckpoint(true) finally sc.clearCallSite()
+  }
 
   /**
    * Degenerate-bucket guard for LSH band joins: any bucket with more than

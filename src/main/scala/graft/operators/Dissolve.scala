@@ -44,10 +44,10 @@ object Dissolve {
       buf
     }
 
+    /** Buffers hold parity only, so an edge present in both cancels. */
     def merge(a: mutable.HashMap[EdgeKey, Int], b: mutable.HashMap[EdgeKey, Int]): mutable.HashMap[EdgeKey, Int] = {
       b.foreach { case (k, v) =>
-        val nv = a.getOrElse(k, 0) + v
-        if (nv == 0) a.remove(k) else a.update(k, nv)
+        if ((a.getOrElse(k, 0) + v) % 2 == 0) a.remove(k) else a.update(k, 1)
       }
       a
     }

@@ -3,7 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.functions.FeatureExprs
+import graft.functions.{FeatureExprs, SpatialExprs}
+import graft.geom.Geom
 
 /**
  * `-filter-islands2` — remove island rings that meet a min-area or
@@ -20,27 +21,12 @@ import graft.functions.FeatureExprs
  * Distributed shape: edge ownership counts are one shuffle keyed by the
  * canonical edge coordinates (ring arrays never shuffle — only coords +
  * ring id); the hole-containment test joins candidate islands to the same
- * shape's negative-area rings on the shape key.
+ * shape's negative-area rings on the shape key and tests each hole's first
+ * vertex with the codegen ring PIP (`pip_ring_state`): a vertex on the
+ * island's boundary counts as inside, the reference's `testPointInRings`
+ * rule.
  */
 object FilterIslands2 {
-
-  /** Even-odd PIP of (px,py) against a flat closed ring (per-candidate rows
-   * only — bounded by the number of island×hole pairs within one shape).
-   * A half-open crossing rule, not [[graft.geom.Geom.pointInRing]]: a point
-   * on the ring's boundary comes out in or out here, where that reports ON. */
-  private val pipUdf = udf { (flat: Seq[Double], px: Double, py: Double) =>
-    val n = flat.length / 2
-    var inside = false
-    var i = 0
-    while (i < n - 1) {
-      val x1 = flat(i * 2); val y1 = flat(i * 2 + 1)
-      val x2 = flat(i * 2 + 2); val y2 = flat(i * 2 + 3)
-      if ((x1 > px) != (x2 > px) &&
-          y1 + (px - x1) * (y2 - y1) / (x2 - x1) > py) inside = !inside
-      i += 1
-    }
-    inside
-  }
 
   /**
    * Drop removable islands from a layer of rings. `rings` needs a unique
@@ -79,15 +65,17 @@ object FilterIslands2 {
       .select(col(ridCol).as("_cand_rid"), col(keyCol).as("_cand_key"),
         col(ringCol).as("_cand_ring"))
 
-    // a candidate survives if a hole ring of the same shape sits inside it
+    // a candidate survives if a hole ring of the same shape sits inside it:
+    // the hole's first vertex is IN or ON the candidate ring (the engine's
+    // one PIP rule — boundary counts as enclosed, as in Geom.combineRings)
     val holes = withMeta.where(col("_area") < 0)
       .select(col(keyCol).as("_hole_key"),
         col(ringCol).getItem(0).as("_hx"), col(ringCol).getItem(1).as("_hy"))
     val withHoles = candidates
       .join(holes, col("_cand_key") === col("_hole_key"), "left")
       .groupBy("_cand_rid")
-      .agg(max(when(col("_hx").isNotNull &&
-        pipUdf(col("_cand_ring"), col("_hx"), col("_hy")), 1).otherwise(0)).as("has_hole"))
+      .agg(max(when(SpatialExprs.pipRingState(col("_hx"), col("_hy"), col("_cand_ring"))
+        =!= Geom.OUT, 1).otherwise(0)).as("has_hole"))
     val removable = withHoles.where(col("has_hole") === 0)
       .select(col("_cand_rid").as(ridCol))
 

@@ -1,9 +1,13 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.cell.CellIndex
+import graft.geom.Geom
 import graft.index.PolygonLayer
 
 /**
@@ -13,8 +17,9 @@ import graft.index.PolygonLayer
  * candidate lookup + even-odd multi-ring PIP with boundary counted as in,
  * `src/paths/mapshaper-path-index.mjs:9-237`).
  *
- * Two physical strategies, chosen by layer size (mirrors Catalyst's
- * broadcast-vs-shuffle join choice):
+ * Two physical strategies; the caller picks one (the facade's
+ * `Graft.pointPolygonJoin` always broadcasts). Both take the same
+ * [[PolygonLayer]]:
  *
  *  1. [[broadcastJoin]] — the polygon layer's SoA arrays are broadcast
  *     once (through [[graft.index.LayerBroadcasts]]); each executor builds
@@ -22,12 +27,13 @@ import graft.index.PolygonLayer
  *     and each point row probes it locally. Zero shuffle of the (huge) point table; `bytes` and other wide
  *     columns are never touched (Parquet column pruning applies upstream).
  *
- *  2. [[cellJoin]] — for polygon layers too big to broadcast: polygons are
- *     exploded to covering cells, points keyed by the same cells, and the
- *     equi-join on cellId co-locates candidates; the exact PIP runs per pair.
- *     Hot cells (skew) are split by salting: the polygon side is replicated
- *     per salt, the point side salted randomly-but-deterministically by id —
- *     explicit skew handling per the north rule, with AQE as backstop.
+ *  2. [[cellJoin]] — the shuffle path for polygon layers too big to
+ *     broadcast: rings are exploded to covering cells, points keyed by the
+ *     same cells, and the equi-join on cellId co-locates candidates; the
+ *     exact PIP runs per pair. Hot cells (skew) are split by salting: the
+ *     ring rows are replicated per salt, each point takes a deterministic
+ *     salt hashed from its coordinates — explicit skew handling, with AQE as
+ *     backstop.
  *
  * Multi-match semantics: a point on a shared boundary joins BOTH polygons
  * (parity + boundary rule), matching the reference's join row sets.
@@ -74,53 +80,51 @@ object SpatialJoin {
   }
 
   /**
-   * Cell-partitioned PIP join for huge polygon layers: explode polygons to
-   * covering cells at `res`, equi-join on cellId, exact PIP per candidate.
+   * Cell-partitioned PIP join: rings keyed by their covering cells at `res`,
+   * points by their cell, equi-join on the cell, exact PIP per candidate.
    *
-   * `saltThreshold`: cells with more candidate polygons than this are salted
-   * `saltFactor` ways (polygon side replicated, point side deterministically
-   * scattered) so a single hot cell cannot bottleneck one task.
+   * The driver writes one row per ring of `layer` (shape key, closed flat
+   * ring, covering cells of its box) and counts rings per cell in the same
+   * pass. Cells with more than `saltThreshold` rings are hot and salted
+   * `saltFactor` ways: the ring rows are replicated once per salt, each point
+   * takes the salt `pmod(xxhash64(x, y), saltFactor)`, so a single hot cell
+   * cannot bottleneck one task. Salts only pick a bucket; every salt of a hot
+   * cell holds the ring, so results do not depend on them.
    */
   def cellJoin(
       spark: SparkSession,
       points: DataFrame,
       xCol: String,
       yCol: String,
-      polygons: DataFrame, // (poly_key: Long, ring_x: Array[Double], ring_y: Array[Double]) one ring per row
+      layer: PolygonLayer,
       res: Int,
       outCol: String = "poly_key",
       saltThreshold: Int = 64,
       saltFactor: Int = 8): DataFrame = {
     import spark.implicits._
 
-    // polygon side: ring -> covering cells (codegen, no boxing)
-    val polyCells = polygons
-      .withColumn("_cell",
-        explode(graft.functions.SpatialExprs.ringCoverXY(col("ring_x"), col("ring_y"), res)))
-
-    // explicit skew handling: find hot cells, salt them
-    val hot = polyCells.groupBy("_cell").count()
-      .filter(col("count") > saltThreshold)
-      .select("_cell").as[Long].collect().toSet
-    val hotBc = spark.sparkContext.broadcast(hot)
-    val saltsUdf = udf { (cell: Long) =>
-      if (hotBc.value.contains(cell)) (0 until saltFactor).toArray else Array(0)
+    val ringsPerCell = mutable.HashMap.empty[Long, Int]
+    val rows = (0 until layer.numRings).map { r =>
+      val b = r * 4
+      val cells = CellIndex.coveringCells(layer.ringBoxes(b), layer.ringBoxes(b + 1),
+        layer.ringBoxes(b + 2), layer.ringBoxes(b + 3), res)
+      cells.foreach(c => ringsPerCell(c) = ringsPerCell.getOrElse(c, 0) + 1)
+      (layer.shapeKeys(layer.ringShape(r)), layer.ring(r), cells)
     }
-    val pointSaltUdf = udf { (cell: Long, x: Double, y: Double) =>
-      if (hotBc.value.contains(cell))
-        (java.lang.Double.doubleToLongBits(x) * 31 + java.lang.Double.doubleToLongBits(y)).toInt
-          .abs % saltFactor
-      else 0
-    }
+    val hot = ringsPerCell.collect { case (c, n) if n > saltThreshold => c }.toSeq
+    val isHot = col("_cell").isin(hot: _*)
 
-    val polySalted = polyCells.withColumn("_salt", explode(saltsUdf(col("_cell"))))
+    val polySalted = rows.toDF("poly_key", "_ring", "_cells")
+      .withColumn("_cell", explode(col("_cells")))
+      .withColumn("_salt",
+        explode(when(isHot, sequence(lit(0), lit(saltFactor - 1))).otherwise(array(lit(0)))))
+      .drop("_cells")
     val ptCells = points
       .withColumn("_cell", graft.functions.SpatialExprs.cellIdCol(col(xCol), col(yCol), res))
-      .withColumn("_salt", pointSaltUdf(col("_cell"), col(xCol), col(yCol)))
+      .withColumn("_salt",
+        when(isHot, pmod(xxhash64(col(xCol), col(yCol)), lit(saltFactor)).cast("int"))
+          .otherwise(lit(0)))
 
-    // per-candidate ring state: 0 = out, 1 = in, 2 = on-boundary — a codegen
-    // expression reading the packed ring arrays in place (a UDF here boxes
-    // two Seq[Double] per candidate pair, the #1 allocation source at scale)
     // even-odd across a shape's rings (parity of IN counts; ON wins) — same
     // semantics as the broadcast path's PolygonLayer.findKeys: a point inside
     // a hole ring has even parity and must NOT match, a boundary point always
@@ -130,11 +134,11 @@ object SpatialJoin {
     val ptCols = points.columns.toSeq
     ptCells
       .join(polySalted, Seq("_cell", "_salt"))
-      .withColumn("_state", graft.functions.SpatialExprs.pipRingState(
-        col(xCol), col(yCol), col("ring_x"), col("ring_y")))
+      .withColumn("_state",
+        graft.functions.SpatialExprs.pipRingState(col(xCol), col(yCol), col("_ring")))
       .groupBy((ptCols.map(col) :+ col("poly_key")): _*)
-      .agg(max(when(col("_state") === graft.geom.Geom.ON, 1).otherwise(0)).as("_on"),
-        sum(when(col("_state") === graft.geom.Geom.IN, 1).otherwise(0)).as("_ins"))
+      .agg(max(when(col("_state") === Geom.ON, 1).otherwise(0)).as("_on"),
+        sum(when(col("_state") === Geom.IN, 1).otherwise(0)).as("_ins"))
       .filter(col("_on") === 1 || col("_ins") % 2 === 1)
       .withColumnRenamed("poly_key", outCol)
       .drop("_on", "_ins")

@@ -154,7 +154,11 @@ class LinesFurnitureSpec extends SparkSuite {
       (4L, 12L, rect(30.5, 0.5, 31.5, 1.5).reverse), // hole (reversed -> negative)
       // small ring sharing an edge with a neighbor (kept: not an island)
       (5L, 13L, rect(40, 0, 41, 1)),
-      (6L, 14L, rect(41, 0, 42, 1)))
+      (6L, 14L, rect(41, 0, 42, 1)),
+      // small island whose hole's first vertex (52, 1) lies ON its right
+      // edge (kept: boundary counts as enclosed, as in Geom.combineRings)
+      (7L, 15L, rect(50, 0, 52, 2)),
+      (8L, 15L, Array(52.0, 1.0, 51.0, 0.5, 51.0, 1.5, 52.0, 1.0)))
       .toDF("rid", "key", "ring")
     // hole ring must be negative-area: reverse of flat array is not a valid
     // ring reversal, build it properly
@@ -163,7 +167,7 @@ class LinesFurnitureSpec extends SparkSuite {
         .otherwise(col("ring")))
     val out = FilterIslands2(fixed, "rid", "key", "ring", minArea = 5.0)
       .select("rid").as[Long].collect().toSet
-    assert(out == Set(1L, 3L, 4L, 5L, 6L))
+    assert(out == Set(1L, 3L, 4L, 5L, 6L, 7L, 8L))
   }
 
   test("-filter-islands2 min-vertices criterion") {

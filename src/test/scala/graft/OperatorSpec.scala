@@ -26,22 +26,19 @@ class OperatorSpec extends SparkSuite {
   }
 
   test("cellJoin equals broadcastJoin on single-ring polygons") {
-    // single-ring (no holes) layer: cellJoin operates ring-per-row
-    val layer = Synthetic.polygonLayer(9, seed = 13L, holeEvery = 0)
-    val rings = (0 until layer.numRings).map { r =>
-      val s = layer.ringStart(r); val e = layer.ringStart(r + 1)
-      (layer.shapeKeys(layer.ringShape(r)),
-        layer.xx.slice(s, e).toSeq, layer.yy.slice(s, e).toSeq)
-    }
-    val polyDf = rings.toDF("poly_key", "ring_x", "ring_y")
+    // and on the default holed layer: the per-shape even-odd fold must
+    // reproduce the broadcast path's hole semantics too
     val rng = new SplitMix64(88)
     val pts = (0 until 400).map(i => (i.toLong, rng.nextDouble() * 100, rng.nextDouble() * 100))
     val df = pts.toDF("id", "x", "y")
-    val viaCells = SpatialJoin.cellJoin(spark, df, "x", "y", polyDf, res = 5)
-      .select("id", "poly_key").as[(Long, Long)].collect().toSet
-    val viaBroadcast = SpatialJoin.broadcastJoin(spark, df, "x", "y", layer)
-      .select("id", "poly_key").as[(Long, Long)].collect().toSet
-    assert(viaCells == viaBroadcast)
+    Seq(Synthetic.polygonLayer(9, seed = 13L, holeEvery = 0), Synthetic.polygonLayer(9, seed = 13L))
+      .foreach { layer =>
+        val viaCells = SpatialJoin.cellJoin(spark, df, "x", "y", layer, res = 5)
+          .select("id", "poly_key").as[(Long, Long)].collect().toSet
+        val viaBroadcast = SpatialJoin.broadcastJoin(spark, df, "x", "y", layer)
+          .select("id", "poly_key").as[(Long, Long)].collect().toSet
+        assert(viaCells == viaBroadcast && viaCells.nonEmpty)
+      }
   }
 
   // -------------------------------------------------------------------- kNN
@@ -171,6 +168,16 @@ class OperatorSpec extends SparkSuite {
       .select("n_rings_in", "n_boundary_edges", "n_rings_out")
       .as[(Long, Long, Int)].collect().head
     assert(out == ((8L, 16L, 2))) // 12 outer + 4 hole edges, outer ring + hole ring
+  }
+
+  test("EdgeCancel.merge drops an edge that both buffers hold") {
+    val agg = new Dissolve.EdgeCancel()
+    val a = agg.reduce(agg.zero, Array(0.0, 0.0, 1.0, 0.0, 1.0, 1.0, 0.0, 1.0, 0.0, 0.0))
+    val b = agg.reduce(agg.zero, Array(1.0, 0.0, 2.0, 0.0, 2.0, 1.0, 1.0, 1.0, 1.0, 0.0))
+    val merged = agg.merge(a, b)
+    // the shared side x = 1 cancels; the 6 outer sides stay, each once
+    assert(!merged.contains((1.0, 0.0, 1.0, 1.0)), merged)
+    assert(merged.size == 6 && merged.values.forall(_ == 1), merged)
   }
 
   // ------------------------------------------------------------------ dedup

@@ -311,4 +311,29 @@ class PlanSpec extends SparkSuite {
       assert(a == b, s"$a vs $b")
     }
   }
+
+  test("cell-join and -filter-islands2 queries run no ScalaUDF") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Aqe extends AdaptiveSparkPlanHelper
+    Seq("q_pip_cell", "q_pip_salted", "q_filter_islands2").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, Sf)
+      assert(df.collect().nonEmpty, q)
+      val plan = df.queryExecution.executedPlan // final adaptive plan after the action
+      val withUdf = Aqe.collect(plan) {
+        case p if p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p.nodeName
+      }
+      assert(withUdf.isEmpty, s"$q: ScalaUDF in $withUdf\n$plan")
+    }
+  }
+
+  test("plan text names no source line: the LSH checkpoint scans print a fixed call site") {
+    import org.apache.spark.sql.execution.FormattedMode
+    Seq("q_minhash_pairs", "q_ann_lsh").foreach { q =>
+      val text = SparkEntry.queries(q)(spark, Sf).queryExecution.explainString(FormattedMode)
+      assert(text.contains("localCheckpoint at "), s"$q: no checkpoint scan\n$text")
+      val lines = """\.scala:\d+""".r.findAllIn(text).toSeq
+      assert(lines.isEmpty, s"$q names source lines $lines")
+    }
+  }
 }

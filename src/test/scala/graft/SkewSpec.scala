@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.index.PolygonLayer
 import graft.operators.SpatialJoin
 import graft.tables.{SplitMix64, Synthetic}
 
@@ -16,12 +17,6 @@ class SkewSpec extends SparkSuite {
 
   test("cellJoin with forced salting matches unsalted results on skewed points") {
     val layer = Synthetic.polygonLayer(9, seed = 13L, holeEvery = 0)
-    val rings = (0 until layer.numRings).map { r =>
-      val s0 = layer.ringStart(r); val e = layer.ringStart(r + 1)
-      (layer.shapeKeys(layer.ringShape(r)),
-        layer.xx.slice(s0, e).toSeq, layer.yy.slice(s0, e).toSeq)
-    }
-    val polyDf = rings.toDF("poly_key", "ring_x", "ring_y")
 
     // heavy skew: 80% of points in one tiny hot spot
     val rng = new SplitMix64(3)
@@ -32,10 +27,10 @@ class SkewSpec extends SparkSuite {
     val df = pts.toDF("id", "x", "y")
 
     // saltThreshold=0 forces EVERY cell through the salted path
-    val salted = SpatialJoin.cellJoin(spark, df, "x", "y", polyDf, res = 5,
+    val salted = SpatialJoin.cellJoin(spark, df, "x", "y", layer, res = 5,
         saltThreshold = 0, saltFactor = 4)
       .select("id", "poly_key").as[(Long, Long)].collect().toSet
-    val unsalted = SpatialJoin.cellJoin(spark, df, "x", "y", polyDf, res = 5,
+    val unsalted = SpatialJoin.cellJoin(spark, df, "x", "y", layer, res = 5,
         saltThreshold = Int.MaxValue)
       .select("id", "poly_key").as[(Long, Long)].collect().toSet
     assert(salted == unsalted && salted.nonEmpty)
@@ -48,19 +43,30 @@ class SkewSpec extends SparkSuite {
 
   test("cellJoin applies even-odd hole semantics (parity with broadcast path)") {
     // square with a centered hole; points: inside-solid, inside-hole, outside
-    val outer = (Seq(0.0, 0.0, 10.0, 0.0, 10.0, 10.0, 0.0, 10.0, 0.0, 0.0), 7L)
-    val hole = (Seq(4.0, 4.0, 6.0, 4.0, 6.0, 6.0, 4.0, 6.0, 4.0, 4.0), 7L)
-    val polyDf = Seq(
-      (outer._2, outer._1.grouped(2).map(_.head).toSeq, outer._1.grouped(2).map(_.last).toSeq),
-      (hole._2, hole._1.grouped(2).map(_.head).toSeq, hole._1.grouped(2).map(_.last).toSeq))
-      .toDF("poly_key", "ring_x", "ring_y")
+    val layer = PolygonLayer.fromShapes(Seq(7L -> Seq(
+      Array(0.0, 0.0, 10.0, 0.0, 10.0, 10.0, 0.0, 10.0, 0.0, 0.0),
+      Array(4.0, 4.0, 6.0, 4.0, 6.0, 6.0, 4.0, 6.0, 4.0, 4.0))))
     val pts = Seq((1L, 2.0, 2.0), (2L, 5.0, 5.0), (3L, 20.0, 20.0),
       (4L, 4.0, 5.0) /* on hole boundary = boundary of the shape -> in */)
       .toDF("id", "x", "y")
-    val got = SpatialJoin.cellJoin(spark, pts, "x", "y", polyDf, res = 4)
+    val got = SpatialJoin.cellJoin(spark, pts, "x", "y", layer, res = 4)
       .select("id", "poly_key").as[(Long, Long)].collect().toSet
     // point 2 sits in the hole: even parity, NOT a match
     assert(got == Set((1L, 7L), (4L, 7L)))
+  }
+
+  test("cellJoin joins a hot-cell point whose coordinate hash has the sign bit set") {
+    // the low 32 bits of y are 0x80000000: a salt taken as `abs % f` of that
+    // int is negative for f = 3 and then matches no ring row
+    val y = 50.00001525878906
+    assert(java.lang.Double.doubleToLongBits(y).toInt == Int.MinValue)
+    val layer = PolygonLayer.fromShapes(Seq(
+      9L -> Seq(Array(40.0, 40.0, 60.0, 40.0, 60.0, 60.0, 40.0, 60.0, 40.0, 40.0))))
+    val pts = Seq((1L, 50.0, y)).toDF("id", "x", "y")
+    val got = SpatialJoin.cellJoin(spark, pts, "x", "y", layer, res = 5,
+        saltThreshold = 0, saltFactor = 3)
+      .select("id", "poly_key").as[(Long, Long)].collect().toSet
+    assert(got == Set((1L, 9L)))
   }
 
   // ------------------------------------------------- LSH degenerate buckets
