@@ -237,8 +237,8 @@ final class GridPipIndex(layer: PolygonLayer) {
     false
   }
 
-  @transient private lazy val keysScratch: ThreadLocal[Array[Long]] =
-    ThreadLocal.withInitial(() => new Array[Long](64))
+  @transient private lazy val shapeScratch: ThreadLocal[Array[Int]] =
+    ThreadLocal.withInitial(() => new Array[Int](64))
   private val emptyKeys = Array.emptyLongArray
   private val emptyShapes = Array.emptyIntArray
 
@@ -249,31 +249,54 @@ final class GridPipIndex(layer: PolygonLayer) {
     if (x != x || y != y) return emptyKeys
     if (x < ex0 || x > ex1 || y < ey0 || y > ey1) return emptyKeys
     val c = rowOf(y) * gw + colOf(x)
-    var ci = cellCrossStart(c); val ce = cellCrossStart(c + 1)
-    var bi = cellBaseStart(c); val be = cellBaseStart(c + 1)
-    if (ci == ce) {
+    if (cellCrossStart(c) == cellCrossStart(c + 1)) {
       // fast path: no boundary crosses this cell — precomputed keys only
+      var bi = cellBaseStart(c); val be = cellBaseStart(c + 1)
       if (bi == be) return emptyKeys
       val out = new Array[Long](be - bi)
       var k = 0
       while (bi < be) { out(k) = shapeKeys(cellBaseShapes(bi)); k += 1; bi += 1 }
       return out
     }
-    var keys = keysScratch.get()
-    var nk = 0
-    @inline def emit(key: Long): Unit = {
-      if (nk == keys.length) {
-        keys = java.util.Arrays.copyOf(keys, keys.length * 2)
-        keysScratch.set(keys)
+    val n = shapesInCell(c, x, y)
+    if (n == 0) return emptyKeys
+    val shapes = shapeScratch.get()
+    val out = new Array[Long](n)
+    var k = 0
+    while (k < n) { out(k) = shapeKeys(shapes(k)); k += 1 }
+    out
+  }
+
+  /** Indexes of all enclosing shapes, ascending. */
+  def findShapeIdxs(x: Double, y: Double): Array[Int] = {
+    if (x != x || y != y) return emptyShapes
+    if (x < ex0 || x > ex1 || y < ey0 || y > ey1) return emptyShapes
+    val n = shapesInCell(rowOf(y) * gw + colOf(x), x, y)
+    if (n == 0) emptyShapes else java.util.Arrays.copyOf(shapeScratch.get(), n)
+  }
+
+  /** All enclosing shapes of an in-extent point attributed to cell c: writes
+   * their indexes, ascending, to the start of `shapeScratch` and returns how
+   * many. Merges the cell's constant-parity shapes with exact tests of the
+   * rings crossing it. */
+  private def shapesInCell(c: Int, x: Double, y: Double): Int = {
+    var out = shapeScratch.get()
+    var n = 0
+    @inline def emit(shape: Int): Unit = {
+      if (n == out.length) {
+        out = java.util.Arrays.copyOf(out, out.length * 2)
+        shapeScratch.set(out)
       }
-      keys(nk) = key
-      nk += 1
+      out(n) = shape
+      n += 1
     }
+    var ci = cellCrossStart(c); val ce = cellCrossStart(c + 1)
+    var bi = cellBaseStart(c); val be = cellBaseStart(c + 1)
     while (ci < ce || bi < be) {
       val crossShape = if (ci < ce) ringShape(cellCrossRings(ci)) else Int.MaxValue
       val baseShape = if (bi < be) cellBaseShapes(bi) else Int.MaxValue
       if (baseShape < crossShape) {
-        emit(shapeKeys(baseShape))
+        emit(baseShape)
         bi += 1
       } else {
         var isIn = baseShape == crossShape
@@ -285,10 +308,10 @@ final class GridPipIndex(layer: PolygonLayer) {
           else if (st == Geom.IN) isIn = !isIn
           ci += 1
         }
-        if (isOn || isIn) emit(shapeKeys(crossShape))
+        if (isOn || isIn) emit(crossShape)
       }
     }
-    if (nk == 0) emptyKeys else java.util.Arrays.copyOf(keys, nk)
+    n
   }
 
   /** Key of the first (lowest shape index) enclosing shape, or -1. */
@@ -363,40 +386,5 @@ final class GridPipIndex(layer: PolygonLayer) {
       ci += 1
     }
     firstShapeInCell(c, bx0, by0)
-  }
-
-  /** Indexes of all enclosing shapes, ascending. */
-  def findShapeIdxs(x: Double, y: Double): Array[Int] = {
-    if (x != x || y != y) return emptyShapes
-    if (x < ex0 || x > ex1 || y < ey0 || y > ey1) return emptyShapes
-    val keys = findKeysAsShapes(x, y)
-    keys
-  }
-
-  private def findKeysAsShapes(x: Double, y: Double): Array[Int] = {
-    val c = rowOf(y) * gw + colOf(x)
-    var ci = cellCrossStart(c); val ce = cellCrossStart(c + 1)
-    var bi = cellBaseStart(c); val be = cellBaseStart(c + 1)
-    val out = Array.newBuilder[Int]
-    while (ci < ce || bi < be) {
-      val crossShape = if (ci < ce) ringShape(cellCrossRings(ci)) else Int.MaxValue
-      val baseShape = if (bi < be) cellBaseShapes(bi) else Int.MaxValue
-      if (baseShape < crossShape) {
-        out += baseShape
-        bi += 1
-      } else {
-        var isIn = baseShape == crossShape
-        if (isIn) bi += 1
-        var isOn = false
-        while (ci < ce && ringShape(cellCrossRings(ci)) == crossShape) {
-          val st = layer.pointInRing(x, y, cellCrossRings(ci))
-          if (st == Geom.ON) isOn = true
-          else if (st == Geom.IN) isIn = !isIn
-          ci += 1
-        }
-        if (isOn || isIn) out += crossShape
-      }
-    }
-    out.result()
   }
 }

@@ -104,7 +104,7 @@ object Ann {
   def ivfTopK(spark: SparkSession, df: DataFrame, idCol: String, vecCol: String,
               k: Int, nlist: Int = 16, nprobe: Int = 4, iters: Int = 3): DataFrame = {
     import spark.implicits._
-    val v = vectors(df, idCol, vecCol).cache()
+    val v = Materialize(vectors(df, idCol, vecCol), eager = false)
 
     // deterministic init, skew-hardened: seed with the nlist vectors whose
     // id HASHES are smallest (TakeOrderedAndProject — distributed top-k, no
@@ -142,7 +142,8 @@ object Ann {
       it += 1
     }
 
-    val lists = v.withColumn("_l", HashExprs.nearestCentroid(col("vec"), centroids)).cache()
+    val lists = Materialize(
+      v.withColumn("_l", HashExprs.nearestCentroid(col("vec"), centroids)), eager = false)
     val queries = lists
       .withColumn("_probe", explode(HashExprs.centroidProbes(col("vec"), centroids, nprobe)))
       .select(col("id"), col("vec"), col("_probe").as("_l"))
@@ -174,11 +175,12 @@ object Ann {
     // signature / probe / cosine kernels are codegen expressions (r6; see
     // graft.functions.HashKernels — ArrayData read in place, no Seq boxing)
     import graft.functions.HashExprs
-    // (id, sig) materialized once (see Dedup.materializeOnce): probes AND base
-    // each re-read it behind capBuckets — without the checkpoint the sig
-    // kernel runs up to 4x, guarded only by fragile exchange reuse
-    val idSigs = Dedup.materializeOnce(
-      v.withColumn("_sig", HashExprs.planeSig(col("vec"), planes)).select("id", "_sig"))
+    // (id, sig) materialized once: probes AND base each re-read it behind
+    // capBuckets — without the checkpoint the sig kernel runs up to 4x,
+    // guarded only by fragile exchange reuse
+    val idSigs = Materialize(
+      v.withColumn("_sig", HashExprs.planeSig(col("vec"), planes)).select("id", "_sig"),
+      eager = true)
     // degenerate-bucket cap on both sides (see Dedup.capBuckets): one
     // megabucket of identical signatures would make the probe join quadratic
     val probes = Dedup.capBuckets(

@@ -96,10 +96,12 @@ object Classify {
                      numBreaks: Int): Seq[Double] = {
     import spark.implicits._
     val parts = math.max(2, spark.sparkContext.defaultParallelism)
-    val vals = df.select(col(valueCol).cast("double").as("v")).filter(col("v").isNotNull)
-      .repartitionByRange(parts, col("v"))
-      .withColumn("_pid", spark_partition_id())
-      .localCheckpoint(true) // ranked + counted below without recomputing
+    // ranked + counted below without recomputing
+    val vals = Materialize(
+      df.select(col(valueCol).cast("double").as("v")).filter(col("v").isNotNull)
+        .repartitionByRange(parts, col("v"))
+        .withColumn("_pid", spark_partition_id()),
+      eager = true)
     val counts = vals.groupBy("_pid").count()
       .as[(Int, Long)].collect().sortBy(_._1)
     val n = counts.map(_._2).sum
@@ -112,13 +114,11 @@ object Classify {
     // ranks computed per range-partition IN PARALLEL; global rank = prefix + local
     val w = Window.partitionBy(col("_pid")).orderBy(col("v"))
     val prefixUdf = udf((pid: Int) => prefixBc.value.getOrElse(pid, 0L))
-    val out = vals
+    vals
       .withColumn("rnk", row_number().over(w) - 1 + prefixUdf(col("_pid")))
       .filter(col("rnk").isin(targets: _*))
       .orderBy("rnk")
       .select("v").as[Double].collect().toSeq
-    vals.unpersist()
-    out
   }
 
   /** Hybrid breaks: quantile outer, equal-interval inner over

@@ -8,11 +8,9 @@ import org.apache.spark.sql.functions._
  * jumping (path halving), so convergence takes O(log diameter) Spark rounds
  * instead of O(diameter) — a 1000-node chain labels in ~10 rounds.
  *
- * Each round localCheckpoints: iterative plans otherwise grow a join-chain
- * logical tree that sends Catalyst analysis superlinear after ~8 rounds
- * (caching truncates execution, NOT analysis). Only (id, comp) longs ever
- * shuffle. Used by the distributed dissolve2 mosaic and `-lines` chain
- * assembly.
+ * Each round is checkpointed through [[Materialize]], which resets the plan
+ * the next round builds on. Only (id, comp) longs ever shuffle. Used by the
+ * distributed dissolve2 mosaic and `-lines` chain assembly.
  */
 object ConnectedComponents {
 
@@ -24,10 +22,9 @@ object ConnectedComponents {
    */
   def label(spark: SparkSession, nodes: DataFrame, edges: DataFrame,
             maxIters: Int = 30): DataFrame = {
-    val sym = edges.select(col("u"), col("v"))
-      .union(edges.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint(true)
-    var labels = nodes.select(col("id"), col("id").as("comp")).localCheckpoint(true)
+    val sym = Materialize(edges.select(col("u"), col("v"))
+      .union(edges.select(col("v").as("u"), col("u").as("v"))), eager = true)
+    var labels = Materialize(nodes.select(col("id"), col("id").as("comp")), eager = true)
     var changedCount = 1L
     var iter = 0
     while (changedCount > 0 && iter < maxIters) {
@@ -36,15 +33,13 @@ object ConnectedComponents {
       val hooked = labels.join(neighborMin, labels("id") === col("id2"), "left")
         .select(col("id"), least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
       // pointer jumping: comp <- label(comp)
-      val next = hooked.as("x")
+      val next = Materialize(hooked.as("x")
         .join(hooked.select(col("id").as("cid"), col("comp").as("ccomp")).as("y"),
           col("x.comp") === col("cid"), "left")
         .select(col("x.id").as("id"),
-          least(col("x.comp"), coalesce(col("ccomp"), col("x.comp"))).as("comp"))
-        .localCheckpoint(true)
+          least(col("x.comp"), coalesce(col("ccomp"), col("x.comp"))).as("comp")), eager = true)
       changedCount = next.as("n").join(labels.as("o"), col("n.id") === col("o.id"))
         .filter(col("n.comp") =!= col("o.comp")).count()
-      labels.unpersist()
       labels = next
       iter += 1
     }

@@ -27,39 +27,48 @@ object DataFill {
   def fill(spark: SparkSession, features: DataFrame, adjacency: DataFrame,
            idCol: String = "id", valueCol: String = "value",
            maxRounds: Int = 20): DataFrame = {
-    // localCheckpoint (not cache): caching truncates execution but NOT
-    // Catalyst analysis — 20 rounds of join-on-join otherwise grow a logical
-    // tree that makes analysis superlinear (same lesson as the CC loop in
-    // OverlayOp.dissolve2Distributed)
-    val adj = adjacency.select(col("a"), col("b"))
+    val adj = Materialize(adjacency.select(col("a"), col("b"))
       .union(adjacency.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .localCheckpoint(true)
-    var cur = features.select(col(idCol).as("id"), col(valueCol).as("value"))
-      .localCheckpoint(true)
+      .distinct(), eager = true)
+    val start = Materialize(
+      features.select(col(idCol).as("id"), col(valueCol).as("value")), eager = true)
+    contagion(start, adj, maxRounds) { votes =>
+      val filledNeighbors = votes.groupBy(col("id"), col("nval")).agg(count(lit(1)).as("c"))
+      val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("nval"))
+      filledNeighbors
+        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+        .select(col("id").as("fid"), col("nval"))
+    }
+  }
+
+  /**
+   * The contagion rounds of [[fill]] and [[fillWeighted]]: each round, every
+   * null `value` of `start` (id, value) takes the value that `winner` picks
+   * from `votes` — one row per (null id, adjacency row of `adj` leading to a
+   * filled neighbour), with the neighbour's value as `nval`. `winner`
+   * returns (fid, nval). Stops when nothing is null, after `maxRounds`, or
+   * when a round fills nothing (the rest is disconnected). The loop runs on
+   * the driver, one materializing job per round.
+   */
+  private def contagion(start: DataFrame, adj: DataFrame, maxRounds: Int)
+                       (winner: DataFrame => DataFrame): DataFrame = {
+    var cur = start
     var round = 0
     var remaining = cur.filter(col("value").isNull).count()
     while (remaining > 0 && round < maxRounds) {
-      val filledNeighbors = cur.filter(col("value").isNull).select(col("id"))
+      val votes = cur.filter(col("value").isNull).select(col("id"))
         .join(adj, col("id") === adj("a"))
         .join(cur.filter(col("value").isNotNull)
           .select(col("id").as("nid"), col("value").as("nval")), col("b") === col("nid"))
-        .groupBy(col("id"), col("nval")).agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("nval"))
-      val chosen = filledNeighbors
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-        .select(col("id").as("fid"), col("nval"))
-      val next = cur.join(chosen, cur("id") === chosen("fid"), "left")
-        .select(cur("id"), coalesce(cur("value"), col("nval")).as("value"))
-        .localCheckpoint(true) // one materializing job per round (plan reset)
+      val chosen = winner(votes)
+      val next = Materialize(cur.join(chosen, cur("id") === chosen("fid"), "left")
+        .select(cur("id"), coalesce(cur("value"), col("nval")).as("value")), eager = true)
       val nextRemaining = next.filter(col("value").isNull).count()
       if (nextRemaining == remaining) round = maxRounds // no progress: disconnected
       remaining = nextRemaining
-      cur.unpersist()
       cur = next
       round += 1
     }
-    adj.unpersist()
     cur
   }
 
@@ -82,8 +91,8 @@ object DataFill {
    *
    * Shuffle story: each round is equi-joins + aggregations on (id, value,
    * weight) tuples; geometry stays out of every exchange. The loop runs on
-   * the driver, O(graph diameter) rounds, plan reset per round via
-   * localCheckpoint (same pattern as [[fill]]).
+   * the driver, O(graph diameter) rounds, plan reset per round (same
+   * contagion loop as [[fill]]).
    *
    * Deterministic deviations from the reference (which is traversal-order
    * dependent): weight ties break on smallest value; the smoothing pass is
@@ -95,51 +104,30 @@ object DataFill {
                    weightCol: Option[String] = None,
                    contiguous: Boolean = false,
                    maxRounds: Int = 20): DataFrame = {
-    val adj = adjacency.select(col("a"), col("b"), col("w"))
+    val adj = Materialize(adjacency.select(col("a"), col("b"), col("w"))
       .union(adjacency.select(col("b").as("a"), col("a").as("b"), col("w")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct(), eager = true)
 
     // phase 1 (and the refill after island removal): weighted group contagion
-    def fillEmpty(start: DataFrame): DataFrame = {
-      var cur = start
-      var round = 0
-      var remaining = cur.filter(col("value").isNull).count()
-      while (remaining > 0 && round < maxRounds) {
-        val votes = cur.filter(col("value").isNull).select(col("id"))
-          .join(adj, col("id") === adj("a"))
-          .join(cur.filter(col("value").isNotNull)
-            .select(col("id").as("nid"), col("value").as("nval")), col("b") === col("nid"))
-          .groupBy(col("id"), col("nval")).agg(sum(col("w")).as("vw"))
-        // the reference pools weights across all empty units that see the
-        // same sorted set of donor values, then assigns the group winner to
-        // every member (mapshaper-data-fill.mjs:57-77)
-        val keys = votes.groupBy(col("id"))
-          .agg(concat_ws("~", sort_array(collect_set(col("nval")))).as("gkey"))
-        val pooled = votes.join(keys, Seq("id"))
-          .groupBy(col("gkey"), col("nval")).agg(sum(col("vw")).as("gw"))
-        val w = Window.partitionBy(col("gkey")).orderBy(col("gw").desc, col("nval"))
-        val winners = pooled.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1).select(col("gkey"), col("nval"))
-        val chosen = keys.join(winners, Seq("gkey"))
-          .select(col("id").as("fid"), col("nval"))
-        val next = cur.join(chosen, cur("id") === chosen("fid"), "left")
-          .select(cur("id"), coalesce(cur("value"), col("nval")).as("value"))
-          .localCheckpoint(true)
-        val nextRemaining = next.filter(col("value").isNull).count()
-        if (nextRemaining == remaining) round = maxRounds // disconnected: stop
-        remaining = nextRemaining
-        cur.unpersist()
-        cur = next
-        round += 1
-      }
-      cur
+    def fillEmpty(start: DataFrame): DataFrame = contagion(start, adj, maxRounds) { v =>
+      val votes = v.groupBy(col("id"), col("nval")).agg(sum(col("w")).as("vw"))
+      // the reference pools weights across all empty units that see the
+      // same sorted set of donor values, then assigns the group winner to
+      // every member (mapshaper-data-fill.mjs:57-77)
+      val keys = votes.groupBy(col("id"))
+        .agg(concat_ws("~", sort_array(collect_set(col("nval")))).as("gkey"))
+      val pooled = votes.join(keys, Seq("id"))
+        .groupBy(col("gkey"), col("nval")).agg(sum(col("vw")).as("gw"))
+      val w = Window.partitionBy(col("gkey")).orderBy(col("gw").desc, col("nval"))
+      val winners = pooled.withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") === 1).select(col("gkey"), col("nval"))
+      keys.join(winners, Seq("gkey")).select(col("id").as("fid"), col("nval"))
     }
 
-    val base = features.select(col(idCol).as("id"), col(valueCol).as("value"))
-      .localCheckpoint(true)
-    val wasEmpty = base.filter(col("value").isNull).select(col("id").as("eid"))
-      .localCheckpoint(true)
+    val base = Materialize(
+      features.select(col(idCol).as("id"), col(valueCol).as("value")), eager = true)
+    val wasEmpty = Materialize(
+      base.filter(col("value").isNull).select(col("id").as("eid")), eager = true)
     var cur = fillEmpty(base)
 
     // phase 2: perimeter smoothing — an originally-empty unit with >= 2
@@ -167,13 +155,10 @@ object DataFill {
         .select(col("eid"), col("nval").as("sval"))
     }
     def applySmooth(decided: DataFrame): Unit = {
-      val next = cur.join(decided, cur("id") === decided("eid"), "left")
-        .select(cur("id"), coalesce(col("sval"), cur("value")).as("value"))
-        .localCheckpoint(true)
-      cur.unpersist()
-      cur = next
+      cur = Materialize(cur.join(decided, cur("id") === decided("eid"), "left")
+        .select(cur("id"), coalesce(col("sval"), cur("value")).as("value")), eager = true)
     }
-    var pending = wasEmpty.localCheckpoint(true)
+    var pending = Materialize(wasEmpty, eager = true)
     var sRound = 0
     var nPending = pending.count()
     while (nPending > 0 && sRound < maxRounds) {
@@ -182,11 +167,9 @@ object DataFill {
         .join(pending.select(col("eid").as("qid")).as("q"),
           col("b") === col("qid") && col("qid") < col("p.eid"))
         .select(col("p.eid")).distinct()
-      val ready = pending.join(blocked, Seq("eid"), "left_anti").localCheckpoint(true)
+      val ready = Materialize(pending.join(blocked, Seq("eid"), "left_anti"), eager = true)
       applySmooth(smoothVotes(ready))
-      val nextPending = pending.join(ready, Seq("eid"), "left_anti").localCheckpoint(true)
-      pending.unpersist()
-      pending = nextPending
+      pending = Materialize(pending.join(ready, Seq("eid"), "left_anti"), eager = true)
       nPending = pending.count()
       sRound += 1
     }
@@ -213,16 +196,14 @@ object DataFill {
       val kw = Window.partitionBy(col("gval")).orderBy(col("gw").desc, col("comp"))
       val keep = groupW.withColumn("_rn", row_number().over(kw))
         .filter(col("_rn") === 1).select(col("gval"), col("comp").as("kcomp"))
-      val cleared = cur
+      val cleared = Materialize(cur
         .join(comps.select(col("id").as("cid"), col("comp")), cur("id") === col("cid"), "left")
         .join(keep, cur("value") === keep("gval"), "left")
         .select(cur("id"),
           when(col("comp").isNotNull && col("comp") =!= col("kcomp"), lit(null))
-            .otherwise(cur("value")).as("value"))
-        .localCheckpoint(true)
+            .otherwise(cur("value")).as("value")), eager = true)
       cur = fillEmpty(cleared)
     }
-    adj.unpersist()
     cur
   }
 }

@@ -27,25 +27,6 @@ object Dedup {
   private val capSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /**
-   * Materialize a tiny id-only LSH projection ONCE before it fans out to
-   * multiple consumers (capBuckets' count agg + probe join, then both sides
-   * of the candidate self-join). Without this the expensive signature chain
-   * (per-shingle hashing over the whole corpus) is only computed once if
-   * Catalyst happens to reuse the exchange — a plan-shape-dependent guarantee
-   * that silently turns into a 3-4x recompute if either consumer's projection
-   * drifts. The checkpointed frame is (id, bucket)-shaped (~16 bytes/row),
-   * so eager local materialization is cheap at any corpus scale.
-   *
-   * The checkpoint RDD's call site names this method, not a source line, so
-   * plan text does not change when lines above the call move.
-   */
-  private[operators] def materializeOnce(df: DataFrame): DataFrame = {
-    val sc = df.sparkSession.sparkContext
-    sc.setCallSite("localCheckpoint at Dedup.materializeOnce")
-    try df.localCheckpoint(true) finally sc.clearCallSite()
-  }
-
-  /**
    * Degenerate-bucket guard for LSH band joins: any bucket with more than
    * `maxBucket` members is dropped before the bucket equi-join. Without the
    * cap, one pathological bucket (every empty caption hashing to one band
@@ -175,10 +156,15 @@ object Dedup {
     // corpus; texts are hash-joined back per candidate pair instead.
     // Signature + banding is ONE codegen expression (r6: was two chained
     // ScalaUDFs that materialized the 64-long signature array per row).
-    val banded = capBuckets(materializeOnce(docs
+    // The (id, bucket) projection is materialized once before it fans out
+    // to capBuckets' count and probe and both sides of the self-join:
+    // otherwise the per-shingle hashing runs once only if Catalyst happens
+    // to reuse the exchange, and 3-4 times when a consumer's projection
+    // drifts. At ~16 bytes a row the eager checkpoint is cheap at any scale.
+    val banded = capBuckets(Materialize(docs
       .withColumn("_bucket", explode(
         graft.functions.HashExprs.minhashBands(col("text"), shingleN, numHashes, bands)))
-      .select(col("id"), col("_bucket"))), "_bucket", maxBucket)
+      .select(col("id"), col("_bucket")), eager = true), "_bucket", maxBucket)
 
     val cand = banded.as("a").join(banded.as("b"),
         col("a._bucket") === col("b._bucket") && col("a.id") < col("b.id"))
@@ -244,9 +230,9 @@ object Dedup {
     val bandCols = (0 until 4).map(b =>
       shiftleft(lit(b.toLong), 16).bitwiseOR(
         shiftrightunsigned(col("sh"), 16 * b).bitwiseAND(lit(0xffffL))))
-    val banded = capBuckets(materializeOnce(df
+    val banded = capBuckets(Materialize(df
       .select(col(idCol).cast("long").as("id"), sh.as("sh"))
-      .withColumn("_bucket", explode(array(bandCols: _*)))), "_bucket", maxBucket)
+      .withColumn("_bucket", explode(array(bandCols: _*))), eager = true), "_bucket", maxBucket)
     banded.as("a").join(banded.as("b"),
         col("a._bucket") === col("b._bucket") && col("a.id") < col("b.id"))
       .select(col("a.id").as("a_id"), col("b.id").as("b_id"),
@@ -274,8 +260,9 @@ object Dedup {
     val vecs = df.select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
     // (id, sig) materialized once: consumed by the probe explode AND the base
     // side, each behind its own capBuckets double-read
-    val sigs = materializeOnce(
-      vecs.withColumn("_sig", HashExprs.planeSig(col("v"), planes)).select("id", "_sig"))
+    val sigs = Materialize(
+      vecs.withColumn("_sig", HashExprs.planeSig(col("v"), planes)).select("id", "_sig"),
+      eager = true)
     // both sides capped: pairs per bucket are then bounded by maxBucket²
     val probes = capBuckets(
       sigs.withColumn("_bucket", explode(HashExprs.sigProbes(col("_sig"), planes)))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.index.PolygonLayer
+import graft.index.{LayerBroadcasts, PolygonLayer}
 
 /**
  * The reference's `-fuzzy-join` end-to-end
@@ -59,15 +59,14 @@ object FuzzyJoin {
       pts0.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
     } else pts0
 
-    val bc = spark.sparkContext.broadcast(layer)
-    val matched = pts
+    val bc = LayerBroadcasts.of(spark, layer)
+    // reused by votes, tie-break, and dropouts
+    val matched = Materialize(pts
       .withColumn("key", graft.functions.SpatialExprs.pipFirstKey(col("x"), col("y"), bc))
-      .filter(col("key") >= 0)
-      .localCheckpoint(true) // reused by votes, tie-break, and dropouts
+      .filter(col("key") >= 0), eager = true)
 
-    val counts = matched.groupBy(col("key"), col("value"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val counts = Materialize(matched.groupBy(col("key"), col("value"))
+      .agg(count(lit(1)).as("c")), eager = true)
 
     val perKey = Window.partitionBy(col("key"))
     val maxed = counts.withColumn("maxc", max(col("c")).over(perKey))

@@ -100,9 +100,6 @@ object Knn {
     var pendingCount = nPoints // tracked arithmetically: no isEmpty/count jobs
     var results: DataFrame = null
     var lastRanked: DataFrame = null // best-known results of still-pending points
-    // checkpointed round outputs still referenced by lazy downstream frames;
-    // released only after the final result is itself materialized
-    val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var r = 1
     var round = 0
     while (round < MaxRounds && pendingCount > 0) {
@@ -155,20 +152,16 @@ object Knn {
       // checkpoint job per round).
       val bound = (ringR * cs) * (ringR * cs)
       val w2 = Window.partitionBy("a_id")
-      // localCheckpoint truncates BOTH execution lineage and the logical
-      // plan (without it the per-round union/anti-join chain sends Catalyst
-      // analysis superlinear — same lesson as OverlayOp's CC loop); LAZY so
-      // the doneCount action below materializes it — one job per round, not
-      // two (checkpoint pass + count pass).
-      val ranked = cand
+      // checkpointed LAZILY so the doneCount action below materializes it —
+      // one job per round, not two (checkpoint pass + count pass)
+      val ranked = Materialize(cand
         .withColumn("rank", row_number().over(w))
         .withColumn("_n", count(lit(1)).over(w2))
         .withColumn("_kth", max(when(col("rank") === k, col("dist2"))).over(w2))
         .filter(col("rank") <= k)
         .withColumn("_final", col("_n") >= k && col("_kth") <= lit(bound))
         .select(col("a_id").as("id"), col("rank"), col("b_id").as("neighbor_id"),
-          col("dist2"), col("_final"))
-        .localCheckpoint(false)
+          col("dist2"), col("_final")), eager = false)
 
       val done = ranked.filter(col("_final")).drop("_final")
       // one job decides the round AND materializes the checkpoint; a final
@@ -176,7 +169,6 @@ object Knn {
       val doneCount = done.count() / k
       results = if (results == null) done else results.unionByName(done)
       lastRanked = ranked.filter(!col("_final")).drop("_final")
-      live += ranked
       pendingCount -= doneCount
       round += 1
       if (pendingCount > 0 && round < MaxRounds) {
@@ -185,16 +177,9 @@ object Knn {
           // next iteration cuts over to the single brute-force job, which
           // consumes this frame exactly once — materializing it first would
           // spend a whole job on a handful of rows. Lineage stays shallow
-          // (one anti-join over the round's checkpoint), and the previous
-          // pending's blocks must outlive the final materialization, so no
-          // early unpersist (the function-end cleanup releases everything).
-          if (pending ne pts) live += pending // release after final materialization
+          // (one anti-join over the round's checkpoint).
           pending = nextLazy
-        } else {
-          val nextPending = nextLazy.localCheckpoint(true)
-          if (pending ne pts) pending.unpersist() // dead once nextPending is materialized
-          pending = nextPending
-        }
+        } else pending = Materialize(nextLazy, eager = true)
       }
       r *= 2
       }
@@ -204,14 +189,12 @@ object Knn {
     // searched instead of dropping them
     if (lastRanked != null && pendingCount > 0)
       results = if (results == null) lastRanked else results.unionByName(lastRanked)
-    // materialize the final result, then release every intermediate block
+    // materialize the final result, then release the cached points
     val out =
       if (results == null) pts.limit(0)
         .select(col("id"), lit(1).as("rank"), col("id").as("neighbor_id"),
           lit(0.0).as("dist2"))
-      else results.localCheckpoint(true)
-    live.foreach(_.unpersist())
-    if (pending ne pts) pending.unpersist()
+      else Materialize(results, eager = true)
     pts.unpersist()
     out
   }

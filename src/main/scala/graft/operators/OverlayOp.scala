@@ -130,8 +130,9 @@ object OverlayOp {
                            ringCol: String, cellRes: Int = 6,
                            maxIters: Int = 30): DataFrame = {
     import spark.implicits._
-    val ds = shapes.select(col(idCol).cast("long").as("id"), col(ringCol).as("ring"))
-      .as[(Long, Array[Double])].cache()
+    val ds = Materialize(
+      shapes.select(col(idCol).cast("long").as("id"), col(ringCol).as("ring")), eager = false)
+      .as[(Long, Array[Double])]
 
     // 1. covering cells + bbox of each shape (codegen expressions, no boxing)
     val withCells = ds.toDF("id", "ring")
@@ -140,13 +141,13 @@ object OverlayOp {
         explode(graft.functions.SpatialExprs.ringCover(col("ring"), cellRes)))
       .select("id", "bbox", "cell")
 
-    val pairs = withCells.as("a").join(withCells.as("b"),
+    val pairs = Materialize(withCells.as("a").join(withCells.as("b"),
         col("a.cell") === col("b.cell") && col("a.id") < col("b.id"))
       .filter(
         col("a.bbox")(0) <= col("b.bbox")(2) && col("b.bbox")(0) <= col("a.bbox")(2) &&
         col("a.bbox")(1) <= col("b.bbox")(3) && col("b.bbox")(1) <= col("a.bbox")(3))
       .select(col("a.id").as("u"), col("b.id").as("v"))
-      .distinct().cache()
+      .distinct(), eager = false)
 
     // 2. min-label propagation with pointer jumping (shared helper —
     // O(log diameter) rounds, only (id, comp) longs shuffle)

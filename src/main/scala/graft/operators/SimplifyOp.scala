@@ -35,7 +35,7 @@ object SimplifyOp {
   def simplify(spark: SparkSession, rings: DataFrame, ringCol: String, pct: Double,
                method: Simplify.Method = Simplify.WeightedVisvalingam,
                exactPct: Boolean = false): DataFrame = {
-    val withThr = withThresholds(rings, ringCol, method).cache()
+    val withThr = Materialize(withThresholds(rings, ringCol, method), eager = false)
     val interval = globalInterval(spark, withThr, pct, exactPct)
     val filterUdf = udf((flat: Seq[Double], thr: Seq[Double]) => keepAbove(flat, thr, interval))
     withThr
@@ -97,7 +97,7 @@ object SimplifyOp {
                        weightCol: String, pct: Double,
                        method: Simplify.Method = Simplify.WeightedVisvalingam,
                        exactPct: Boolean = false): DataFrame = {
-    val withThr = withThresholds(rings, ringCol, method).cache()
+    val withThr = Materialize(withThresholds(rings, ringCol, method), eager = false)
     val interval = globalInterval(spark, withThr, pct, exactPct)
     val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double], w: Double) =>
       keepAbove(flat, thr, interval * math.max(0.0, math.min(1.0, w)))
@@ -134,7 +134,7 @@ object SimplifyOp {
   def simplifySpherical(spark: SparkSession, rings: DataFrame, ringCol: String, pct: Double,
                         method: Simplify.Method = Simplify.WeightedVisvalingam,
                         keepShapes: Boolean = true): DataFrame = {
-    val withThr = withSphericalThresholds(rings, ringCol, method).cache()
+    val withThr = Materialize(withSphericalThresholds(rings, ringCol, method), eager = false)
     val interval = globalInterval(spark, withThr, pct, exactPct = false)
     val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double]) =>
       val n = thr.length

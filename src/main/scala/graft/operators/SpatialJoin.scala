@@ -120,6 +120,7 @@ object SpatialJoin {
         explode(when(isHot, sequence(lit(0), lit(saltFactor - 1))).otherwise(array(lit(0)))))
       .drop("_cells")
     val ptCells = points
+      .withColumn("_pid", monotonically_increasing_id())
       .withColumn("_cell", graft.functions.SpatialExprs.cellIdCol(col(xCol), col(yCol), res))
       .withColumn("_salt",
         when(isHot, pmod(xxhash64(col(xCol), col(yCol)), lit(saltFactor)).cast("int"))
@@ -128,19 +129,20 @@ object SpatialJoin {
     // even-odd across a shape's rings (parity of IN counts; ON wins) — same
     // semantics as the broadcast path's PolygonLayer.findKeys: a point inside
     // a hole ring has even parity and must NOT match, a boundary point always
-    // matches. Grouping key = all point columns + the shape key (a point row
-    // meets each shape's rings in exactly one (cell, salt) bucket, so the
-    // group is complete).
-    val ptCols = points.columns.toSeq
+    // matches. Grouping key = the point row's own id `_pid` (equal point rows
+    // stay apart) + its columns + the shape key (a point row meets each
+    // shape's rings in exactly one (cell, salt) bucket, so the group is
+    // complete).
+    val ptCols = col("_pid") +: points.columns.toSeq.map(col)
     ptCells
       .join(polySalted, Seq("_cell", "_salt"))
       .withColumn("_state",
         graft.functions.SpatialExprs.pipRingState(col(xCol), col(yCol), col("_ring")))
-      .groupBy((ptCols.map(col) :+ col("poly_key")): _*)
+      .groupBy((ptCols :+ col("poly_key")): _*)
       .agg(max(when(col("_state") === Geom.ON, 1).otherwise(0)).as("_on"),
         sum(when(col("_state") === Geom.IN, 1).otherwise(0)).as("_ins"))
       .filter(col("_on") === 1 || col("_ins") % 2 === 1)
       .withColumnRenamed("poly_key", outCol)
-      .drop("_on", "_ins")
+      .drop("_pid", "_on", "_ins")
   }
 }

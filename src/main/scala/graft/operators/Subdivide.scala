@@ -34,18 +34,17 @@ object Subdivide {
    *
    * Scale shape: one distributed aggregation (per-leaf stats, bounded rows
    * collected) plus one window shuffle per DEPTH level — depth is
-   * O(log n / leaf), and each round's lineage is truncated with
-   * localCheckpoint. The midpoint [[byCount]] stays the cheaper path when
-   * median balance is not required.
+   * O(log n / leaf), and each round's lineage is truncated with a
+   * checkpoint ([[Materialize]]). The midpoint [[byCount]] stays the
+   * cheaper path when median balance is not required.
    */
   def byExpression(spark: SparkSession, points: DataFrame, xCol: String, yCol: String,
                    predicate: LeafStats => Boolean, maxDepth: Int = 32): DataFrame = {
     import spark.implicits._
-    var pts = points
+    var pts = Materialize(points
       .withColumn("_x", col(xCol).cast("double"))
       .withColumn("_y", col(yCol).cast("double"))
-      .withColumn("leaf_id", lit(1L))
-      .localCheckpoint()
+      .withColumn("leaf_id", lit(1L)), eager = true)
     var depth = 0
     var continue = true
     while (continue && depth < maxDepth) {
@@ -71,12 +70,11 @@ object Subdivide {
           }
         }
         val w = Window.partitionBy("leaf_id").orderBy("_ctr", "_x", "_y")
-        pts = pts
+        pts = Materialize(pts
           .withColumn("_ctr", ctrUdf(col("leaf_id"), col("_x"), col("_y")))
           .withColumn("_rk", row_number().over(w))
           .withColumn("leaf_id", childUdf(col("leaf_id"), col("_rk")))
-          .drop("_ctr", "_rk")
-          .localCheckpoint()
+          .drop("_ctr", "_rk"), eager = true)
         depth += 1
       }
     }
@@ -91,8 +89,9 @@ object Subdivide {
   def byCount(spark: SparkSession, points: DataFrame, xCol: String, yCol: String,
               maxPerLeaf: Long, maxDepth: Int = 24): (DataFrame, Seq[Leaf]) = {
     import spark.implicits._
-    val pts = points.select(col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-      .cache()
+    val pts = Materialize(
+      points.select(col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y")),
+      eager = false)
     val ext = pts.agg(min("x"), min("y"), max("x"), max("y")).head()
     var leaves = Map(1L -> ((ext.getDouble(0), ext.getDouble(1),
       ext.getDouble(2) + 1e-9, ext.getDouble(3) + 1e-9)))
@@ -101,24 +100,7 @@ object Subdivide {
     // leaf id scheme: root=1; children of k = 2k and 2k+1 (binary split)
     while (changed && depth < maxDepth) {
       val cur = leaves
-      val bc = spark.sparkContext.broadcast(cur)
-      val leafUdf = udf { (x: Double, y: Double) =>
-        var id = 1L
-        var continue = true
-        while (continue) {
-          val m = bc.value
-          m.get(id * 2).orElse(m.get(id * 2 + 1)) match {
-            case None => continue = false
-            case Some(_) =>
-              val (x0, y0, x1, y1) = m(id)
-              val splitX = (x1 - x0) >= (y1 - y0)
-              val lo = if (splitX) x < (x0 + x1) / 2 else y < (y0 + y1) / 2
-              id = if (lo) id * 2 else id * 2 + 1
-          }
-        }
-        id
-      }
-      val counts = pts.withColumn("leaf", leafUdf(col("x"), col("y")))
+      val counts = pts.withColumn("leaf", leafOf(spark, cur)(col("x"), col("y")))
         .groupBy("leaf").count().as[(Long, Long)].collect().toMap
       val over = cur.keys.filter { id =>
         !cur.contains(id * 2) && counts.getOrElse(id, 0L) > maxPerLeaf
@@ -139,29 +121,31 @@ object Subdivide {
       depth += 1
     }
     val finalMap = leaves
-    val bc = spark.sparkContext.broadcast(finalMap)
-    val leafUdf = udf { (x: Double, y: Double) =>
-      var id = 1L
-      var continue = true
-      while (continue) {
-        val m = bc.value
-        if (!m.contains(id * 2) && !m.contains(id * 2 + 1)) continue = false
-        else {
-          val (x0, y0, x1, y1) = m(id)
-          val splitX = (x1 - x0) >= (y1 - y0)
-          val lo = if (splitX) x < (x0 + x1) / 2 else y < (y0 + y1) / 2
-          id = if (lo) id * 2 else id * 2 + 1
-        }
-      }
-      id
-    }
     val assigned = points.withColumn("leaf_id",
-      leafUdf(col(xCol).cast("double"), col(yCol).cast("double")))
+      leafOf(spark, finalMap)(col(xCol).cast("double"), col(yCol).cast("double")))
     val leafCounts = assigned.groupBy("leaf_id").count().as[(Long, Long)].collect().toMap
     val leafSeq = finalMap.toSeq
       .filter { case (id, _) => !finalMap.contains(id * 2) && !finalMap.contains(id * 2 + 1) }
       .map { case (id, (x0, y0, x1, y1)) => Leaf(id, x0, y0, x1, y1, leafCounts.getOrElse(id, 0L)) }
       .sortBy(_.id)
     (assigned, leafSeq)
+  }
+
+  /** The leaf of `leaves` (id -> box, ids 2k and 2k+1 splitting k at the
+   * midpoint of its longer side) that holds (x, y): a descent from the root
+   * until the box has no children. */
+  private def leafOf(spark: SparkSession, leaves: Map[Long, (Double, Double, Double, Double)]) = {
+    val bc = spark.sparkContext.broadcast(leaves)
+    udf { (x: Double, y: Double) =>
+      val m = bc.value
+      var id = 1L
+      while (m.contains(id * 2) || m.contains(id * 2 + 1)) {
+        val (x0, y0, x1, y1) = m(id)
+        val splitX = (x1 - x0) >= (y1 - y0)
+        val lo = if (splitX) x < (x0 + x1) / 2 else y < (y0 + y1) / 2
+        id = if (lo) id * 2 else id * 2 + 1
+      }
+      id
+    }
   }
 }

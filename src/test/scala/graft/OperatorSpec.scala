@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.index.PolygonLayer
 import graft.operators._
 import graft.tables.{Images, SplitMix64, Synthetic}
 
@@ -39,6 +40,16 @@ class OperatorSpec extends SparkSuite {
           .select("id", "poly_key").as[(Long, Long)].collect().toSet
         assert(viaCells == viaBroadcast && viaCells.nonEmpty)
       }
+    // equal point rows are separate matches: (5, 5) twice must not merge
+    // into one row with an even IN count
+    val square = PolygonLayer.fromShapes(Seq(
+      7L -> Seq(Array(0.0, 0.0, 10.0, 0.0, 10.0, 10.0, 0.0, 10.0, 0.0, 0.0))))
+    val dups = Seq((5.0, 5.0), (5.0, 5.0), (6.0, 6.0)).toDF("x", "y")
+    def rows(joined: DataFrame): Seq[(Double, Double, Long)] =
+      joined.select("x", "y", "poly_key").as[(Double, Double, Long)].collect().toSeq.sorted
+    val viaCells = rows(SpatialJoin.cellJoin(spark, dups, "x", "y", square, res = 4))
+    assert(viaCells == rows(SpatialJoin.broadcastJoin(spark, dups, "x", "y", square)))
+    assert(viaCells == Seq((5.0, 5.0, 7L), (5.0, 5.0, 7L), (6.0, 6.0, 7L)))
   }
 
   // -------------------------------------------------------------------- kNN
@@ -471,6 +482,39 @@ class OperatorSpec extends SparkSuite {
         matches(false) || matches(true)
       }
       assert(flip, s"augmented pixels diverge for ${r.getString(0)}")
+    }
+  }
+
+  // -------------------------------------------------------------- lifecycle
+
+  test("operators that reuse an intermediate leave no CacheManager entry") {
+    // each reuses an intermediate that its lazy result still reads: a cache
+    // entry for it could never be released and would outlive the call
+    val cacheManager =
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    spark.catalog.clearCache()
+    val rng = new SplitMix64(31)
+    val rings = (0 until 8).map { i =>
+      (i.toLong, if (i < 4) 0.0 else 1.0, Synthetic.blobRing(50, 50, 20, 64, rng))
+    }.toDF("id", "w", "ring")
+    def sq(x: Double, y: Double): Array[Double] =
+      Array(x, y, x + 10, y, x + 10, y + 10, x, y + 10, x, y)
+    val shapes = Seq((1L, sq(0, 0)), (2L, sq(8, 0)), (3L, sq(50, 50))).toDF("id", "ring")
+    val pts = (0 until 300).map(i => (i.toLong, rng.nextDouble() * 100, rng.nextDouble() * 100))
+      .toDF("id", "x", "y")
+    val vecs = (0 until 60).map(i => (i.toLong, Seq.fill(8)(rng.nextDouble().toFloat)))
+      .toDF("id", "vec")
+    Seq[(String, () => DataFrame)](
+      "simplify" -> (() => SimplifyOp.simplify(spark, rings, "ring", pct = 0.3)),
+      "simplifyVariable" ->
+        (() => SimplifyOp.simplifyVariable(spark, rings, "ring", "w", pct = 0.3)),
+      "simplifySpherical" -> (() => SimplifyOp.simplifySpherical(spark, rings, "ring", pct = 0.3)),
+      "dissolve2Distributed" -> (() => OverlayOp.dissolve2Distributed(spark, shapes, "id", "ring")),
+      "byCount" -> (() => Subdivide.byCount(spark, pts, "x", "y", maxPerLeaf = 50)._1),
+      "ivfTopK" -> (() => Ann.ivfTopK(spark, vecs, "id", "vec", 3, nlist = 4, nprobe = 2))
+    ).foreach { case (op, run) =>
+      assert(run().collect().nonEmpty, op)
+      assert(cacheManager.isEmpty, s"$op left a CacheManager entry")
     }
   }
 }

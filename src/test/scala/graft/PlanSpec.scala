@@ -329,9 +329,20 @@ class PlanSpec extends SparkSuite {
 
   test("plan text names no source line: the LSH checkpoint scans print a fixed call site") {
     import org.apache.spark.sql.execution.FormattedMode
-    Seq("q_minhash_pairs", "q_ann_lsh").foreach { q =>
+    // every checkpoint scan names the operator that made it (Materialize)
+    Seq(
+      "q_minhash_pairs" -> Seq("Dedup.minhashPairs"),
+      "q_ann_lsh" -> Seq("Ann.lshTopK"),
+      "q_data_fill" -> Seq("DataFill.contagion"),
+      "q_data_fill_weighted" -> Seq("DataFill.applySmooth"),
+      "q_fuzzy_join_full" -> Seq("DataFill.fillWeighted", "FuzzyJoin.join"),
+      "q_dissolve2_dist" -> Seq("ConnectedComponents.label", "OverlayOp.dissolve2Distributed"),
+      "q_lines_chains" -> Seq("ConnectedComponents.label"),
+      "q_subdivide" -> Seq("Subdivide.byExpression")
+    ).foreach { case (q, sites) =>
       val text = SparkEntry.queries(q)(spark, Sf).queryExecution.explainString(FormattedMode)
-      assert(text.contains("localCheckpoint at "), s"$q: no checkpoint scan\n$text")
+      sites.foreach(site =>
+        assert(text.contains(s"localCheckpoint at $site"), s"$q: no $site checkpoint scan\n$text"))
       val lines = """\.scala:\d+""".r.findAllIn(text).toSeq
       assert(lines.isEmpty, s"$q names source lines $lines")
     }
