@@ -82,7 +82,9 @@ object Graft {
   def knn(spark: SparkSession, points: DataFrame, id: String, x: String, y: String, k: Int): DataFrame =
     Knn.knnJoin(spark, points, id, x, y, k)
 
-  /** Radius join: all pairs (a_id < b_id) within `radius`. */
+  /** Radius join: all pairs (a_id < b_id) within `radius`, as
+   * (a_id, b_id, dist2). Rows with a null id are dropped first, and two
+   * points that share an id never pair (see [[graft.operators.Knn]]). */
   def radiusJoin(spark: SparkSession, points: DataFrame, id: String, x: String, y: String,
                  radius: Double): DataFrame =
     Knn.distanceJoin(spark, points, id, x, y, radius)

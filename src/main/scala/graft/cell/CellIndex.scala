@@ -35,6 +35,24 @@ object CellIndex {
     encode(cellCoord(x, cs), cellCoord(y, cs), res)
   }
 
+  /**
+   * The one cell holding every point of the box [x0, x1] x [y0, y1], or -1
+   * when the box spans more than one cell (a cell id is never negative: the
+   * resolution field leaves the sign bit clear). `cellCoord` is monotone in
+   * its value (division by a positive size, floor and the saturating
+   * `toLong` all preserve order), so equal coordinates at both ends of an
+   * axis hold for every value between them. The coordinates are compared,
+   * not the encoded ids: `encode` keeps 29 bits per axis, so distinct cells
+   * past 2^28 can share an id while a point between them need not. A NaN
+   * maps to coordinate 0, as in [[cellId]].
+   */
+  def boxCellId(x0: Double, y0: Double, x1: Double, y1: Double, res: Int): Long = {
+    val cs = cellSize(res)
+    val ix = cellCoord(x0, cs)
+    val iy = cellCoord(y0, cs)
+    if (ix == cellCoord(x1, cs) && iy == cellCoord(y1, cs)) encode(ix, iy, res) else -1L
+  }
+
   /** Encode integer cell coords + resolution. */
   def encode(ix: Long, iy: Long, res: Int): Long = {
     val bx = ix + Bias

@@ -37,6 +37,32 @@ case class CellIdExpr(left: Expression, right: Expression, res: Int)
     copy(left = l, right = r)
 }
 
+/** Morton cell id shared by every point of the box [x0, x1] x [y0, y1] at a
+ * fixed resolution ([[CellIndex.boxCellId]]); null when the box spans more
+ * than one cell, so callers fall back to [[CellIdExpr]] per point. */
+case class CellBoxIdExpr(first: Expression, second: Expression, third: Expression,
+                         fourth: Expression, res: Int)
+    extends QuaternaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def prettyName: String = "cell_box_id"
+
+  override protected def nullSafeEval(x0: Any, y0: Any, x1: Any, y1: Any): Any = {
+    val id = CellIndex.boxCellId(x0.asInstanceOf[Double], y0.asInstanceOf[Double],
+      x1.asInstanceOf[Double], y1.asInstanceOf[Double], res)
+    if (id < 0) null else id
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x0, y0, x1, y1) =>
+      s"""${ev.value} = graft.cell.CellIndex.boxCellId($x0, $y0, $x1, $y1, $res);
+         |${ev.isNull} = ${ev.value} < 0;""".stripMargin)
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression, u: Expression): Expression =
+    copy(first = f, second = s, third = t, fourth = u)
+}
+
 /** Integer cell coordinate (x or y) decoded from a Morton cell id — the
  * codegen inverse of [[CellIdExpr]] (replaces the boxed decode UDF that
  * allocated a tuple + array per row on q_cell_assign's path). */
@@ -373,6 +399,9 @@ object SpatialExprs {
 
   def cellIdCol(x: Column, y: Column, res: Int): Column =
     GraftBridge.column(CellIdExpr(dbl(x), dbl(y), res))
+
+  def cellBoxId(x0: Column, y0: Column, x1: Column, y1: Column, res: Int): Column =
+    GraftBridge.column(CellBoxIdExpr(dbl(x0), dbl(y0), dbl(x1), dbl(y1), res))
 
   def pipFirstKey(x: Column, y: Column, bc: Broadcast[PolygonLayer]): Column =
     GraftBridge.column(PipFirstKey(dbl(x), dbl(y), bc))

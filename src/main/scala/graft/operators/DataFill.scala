@@ -158,7 +158,7 @@ object DataFill {
       cur = Materialize(cur.join(decided, cur("id") === decided("eid"), "left")
         .select(cur("id"), coalesce(col("sval"), cur("value")).as("value")), eager = true)
     }
-    var pending = Materialize(wasEmpty, eager = true)
+    var pending = wasEmpty
     var sRound = 0
     var nPending = pending.count()
     while (nPending > 0 && sRound < maxRounds) {

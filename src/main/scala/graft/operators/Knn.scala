@@ -216,8 +216,13 @@ object Knn {
   }
 
   /**
-   * Radius join: all pairs (a, b), a.id < b.id, within `radius`. Cell size is
-   * chosen >= radius so the 3x3 disk is a complete candidate set.
+   * Radius join: all pairs of points within `radius` (squared distance
+   * `dist2 <= radius^2`) as (a_id, b_id, dist2) with a_id < b_id. Rows with a
+   * null id (after the cast to long) are dropped first; a point with a null
+   * x or y has no cell and pairs with nothing. Two points that share
+   * an id never pair, whichever cells they fall in: the pair is oriented by
+   * least/greatest id and kept only when a_id < b_id. Cell size is chosen
+   * >= radius so the 3x3 disk is a complete candidate set.
    */
   def distanceJoin(spark: SparkSession, points: DataFrame, idCol: String, xCol: String, yCol: String,
                    radius: Double): DataFrame = {
@@ -226,6 +231,7 @@ object Knn {
     while (CellIndex.cellSize(res + 1) >= radius && res < 30) res += 1
     val pts = points.select(col(idCol).cast("long").as("id"),
       col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
+      .filter(col("id").isNotNull)
       .withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), res))
     // forward-neighbor expansion (cell + E/NE/N/NW) instead of the full 3x3
     // disk (r6, guide §2.3 — shuffle/join fewer rows): every unordered pair
@@ -249,5 +255,6 @@ object Knn {
       .filter(col("dist2") <= lit(radius * radius))
       .select(least(col("a_id"), col("b_id")).as("a_id"),
         greatest(col("a_id"), col("b_id")).as("b_id"), col("dist2"))
+      .filter(col("a_id") < col("b_id"))
   }
 }

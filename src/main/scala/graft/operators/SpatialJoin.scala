@@ -2,8 +2,7 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.cell.CellIndex
@@ -44,6 +43,13 @@ object SpatialJoin {
    * Broadcast PIP join: returns `points` with an exploded `poly_key` column
    * (inner semantics — unmatched points dropped; use [[withMatches]] for the
    * left variant).
+   *
+   * The explode reads the `pip_all_keys` expression itself, not a column
+   * holding its array: over an attribute, Catalyst's
+   * `InferFiltersFromGenerate` adds `size(a) > 0 AND isnotnull(a)` below the
+   * generate, and filter pushdown then inlines the alias, so each point would
+   * probe the index up to three times. Over an expression no filter is
+   * inferred and each point probes once.
    */
   def broadcastJoin(
       spark: SparkSession,
@@ -51,11 +57,9 @@ object SpatialJoin {
       xCol: String,
       yCol: String,
       layer: PolygonLayer,
-      outCol: String = "poly_key"): DataFrame = {
-    val matched = withMatches(spark, points, xCol, yCol, layer, "_matches")
-    matched
-      .select(points.columns.toIndexedSeq.map(col) :+ explode(col("_matches")).as(outCol): _*)
-  }
+      outCol: String = "poly_key"): DataFrame =
+    points.select(points.columns.toIndexedSeq.map(col) :+
+      explode(allKeys(spark, xCol, yCol, layer)).as(outCol): _*)
 
   /** Left variant: adds an array column of matching polygon keys (empty = unmatched). */
   def withMatches(
@@ -64,11 +68,13 @@ object SpatialJoin {
       xCol: String,
       yCol: String,
       layer: PolygonLayer,
-      outCol: String): DataFrame = {
-    val bc: Broadcast[PolygonLayer] = graft.index.LayerBroadcasts.of(spark, layer)
-    points.withColumn(outCol,
-      graft.functions.SpatialExprs.pipAllKeys(col(xCol), col(yCol), bc))
-  }
+      outCol: String): DataFrame =
+    points.withColumn(outCol, allKeys(spark, xCol, yCol, layer))
+
+  private def allKeys(spark: SparkSession, xCol: String, yCol: String,
+                      layer: PolygonLayer): Column =
+    graft.functions.SpatialExprs.pipAllKeys(col(xCol), col(yCol),
+      graft.index.LayerBroadcasts.of(spark, layer))
 
   /** Clip (keep inside) / erase (keep outside) of points vs a polygon layer —
    * the reference's point clipping (`src/clipping/mapshaper-point-clipping.mjs`). */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.SpatialExprs
@@ -28,65 +28,78 @@ object Tiling {
   final val FootprintSide = 0.05
 
   /**
-   * Tile assignment rows: (image_id, tile_x, tile_y, cx, cy, cell_id[, poly_key]).
+   * Tile assignment rows: (image_id, tile_x, tile_y, cx, cy, cell_id, poly_key).
    * `res` is the vector-cell resolution; `layer`, if given, adds a PIP join of
-   * the tile center against the broadcast polygon layer.
+   * the tile center against the broadcast polygon layer (without one,
+   * `poly_key` is -1).
    */
   def tileAssign(spark: SparkSession, images: DataFrame, tileGrid: Int, res: Int,
                  layer: Option[PolygonLayer] = None): DataFrame = {
-    val located = images
-      .select(col("image_id"), col("w"), col("h"), col("phash"))
-      .withColumn("_cx", graft.functions.GraftFunctions.phashLon(col("phash")))
-      .withColumn("_cy", graft.functions.GraftFunctions.phashLat(col("phash")))
+    val located = images.select(col("image_id"),
+      graft.functions.GraftFunctions.phashLon(col("phash")).as("_cx"),
+      graft.functions.GraftFunctions.phashLat(col("phash")).as("_cy"))
     tileAssignAt(spark, located, "_cx", "_cy", tileGrid, res, layer)
   }
 
   /**
    * Tile assignment over precomputed footprint-center columns.
-   * Codegen-friendly: the tile fan-out is explode(sequence(...)) + pure
-   * column arithmetic; only cellId (bit interleave) and PIP (broadcast index
-   * probe) are scalar JVM calls. No per-row tuple/array allocation — keeps
-   * the hot path allocation-light so it scales with cores, not GC.
+   * Codegen-friendly: each step is one `select` of column arithmetic and
+   * codegen expressions (cell id bit math, broadcast index probes); no
+   * per-row tuple or array allocation, so the hot path scales with cores,
+   * not GC.
    *
-   * Batched PIP: before the fan-out, one `pip_box_first_key` probe per image
-   * asks the layer's grid whether a single polygon key holds over the box
-   * spanned by the first and last tile centres (built with the same column
-   * arithmetic as `cx`/`cy`, so every centre lies in the box). When the grid
-   * proves it (box in one grid cell, no ring boundary within eps), that key
-   * serves all tiles of the image; otherwise the probe is null and each tile
-   * falls back to its own `pip_first_key(cx, cy)`. Either way `poly_key` is
-   * exactly the per-tile answer; a null x/y still yields tileGrid² rows with
-   * a null `poly_key`.
+   * Per-image work is done once, before the tile fan-out:
+   *  - The fan-out explodes a literal table of (tile_x, tile_y, off_x,
+   *    off_y), built on the driver with `off = (t + 0.5) * (side / tileGrid)`;
+   *    a tile centre is `cx = _x0 + off_x`, the same operations in the same
+   *    order as the per-tile formula, so bit for bit the same double.
+   *  - One `cell_box_id` per image over the box spanned by the first and
+   *    last tile centres (corners `_x0 + off(0)` and `_x0 + off(tileGrid -
+   *    1)`, the very values of those centres). Rounded addition of a
+   *    nondecreasing offset and `CellIndex.cellCoord` are both monotone, so
+   *    when both corners have the same integer cell coordinate on each axis
+   *    every centre in between has it too, and that cell id serves all tiles
+   *    of the image; otherwise it is null and each tile takes its own
+   *    `cell_id(cx, cy)`.
+   *  - With a layer, one `pip_box_first_key` probe per image over the same
+   *    box asks the layer's grid whether a single polygon key holds over it.
+   *    When the grid proves it (box in one grid cell, no ring boundary
+   *    within eps), that key serves all tiles; otherwise the probe is null
+   *    and each tile falls back to its own `pip_first_key(cx, cy)`.
+   *
+   * Either way `cell_id` and `poly_key` are exactly the per-tile answers; a
+   * null x/y still yields tileGrid² rows with a null `cell_id` and
+   * `poly_key`.
    */
   def tileAssignAt(spark: SparkSession, images: DataFrame, xCol: String, yCol: String,
                    tileGrid: Int, res: Int, layer: Option[PolygonLayer]): DataFrame = {
     val side = FootprintSide
-    def centre(lo: Column, t: Column): Column = lo + (t + 0.5) * (side / tileGrid)
+    val off = (0 until tileGrid).map(t => (t + 0.5) * (side / tileGrid))
+    val tiles = array((0 until tileGrid * tileGrid).map { t =>
+      val (tx, ty) = (t % tileGrid, t / tileGrid)
+      struct(lit(tx).as("tile_x"), lit(ty).as("tile_y"),
+        lit(off(tx)).as("off_x"), lit(off(ty)).as("off_y"))
+    }: _*)
     val bc = layer.map(graft.index.LayerBroadcasts.of(spark, _))
-    val located = images
-      .withColumn("_x0", col(xCol) - side / 2)
-      .withColumn("_y0", col(yCol) - side / 2)
-    val boxed = bc match {
-      case Some(b) =>
-        val (lo, hi) = (lit(0), lit(tileGrid - 1))
-        located.withColumn("_box_key", SpatialExprs.pipBoxFirstKey(
-          centre(col("_x0"), lo), centre(col("_y0"), lo),
-          centre(col("_x0"), hi), centre(col("_y0"), hi), b))
-      case None => located
-    }
-    val base = boxed
-      .withColumn("_t", explode(sequence(lit(0), lit(tileGrid * tileGrid - 1))))
-      .withColumn("tile_x", (col("_t") % tileGrid).cast("int"))
-      .withColumn("tile_y", (col("_t") / tileGrid).cast("int"))
-      .withColumn("cx", centre(col("_x0"), col("tile_x")))
-      .withColumn("cy", centre(col("_y0"), col("tile_y")))
-      .withColumn("cell_id", SpatialExprs.cellIdCol(col("cx"), col("cy"), res))
-    val polyKey = bc match {
-      case Some(b) => coalesce(col("_box_key"), SpatialExprs.pipFirstKey(col("cx"), col("cy"), b))
-      case None => lit(-1L)
-    }
-    base.withColumn("poly_key", polyKey)
-      .select("image_id", "tile_x", "tile_y", "cx", "cy", "cell_id", "poly_key")
+    val (x0, y0) = (col("_x0"), col("_y0"))
+    val (lo, hi) = (off.head, off.last)
+    // without a layer every tile's key is -1, known per image
+    val boxKey = bc.fold(lit(-1L))(SpatialExprs.pipBoxFirstKey(x0 + lo, y0 + lo, x0 + hi, y0 + hi, _))
+    val boxed = images
+      .select(col("image_id"), (col(xCol) - side / 2).as("_x0"), (col(yCol) - side / 2).as("_y0"))
+      .select(col("image_id"), x0, y0,
+        SpatialExprs.cellBoxId(x0 + lo, y0 + lo, x0 + hi, y0 + hi, res).as("_box_cell"),
+        boxKey.as("_box_key"))
+    val centred = boxed
+      .select(col("image_id"), x0, y0, col("_box_cell"), col("_box_key"), inline(tiles))
+      .select(col("image_id"), col("tile_x"), col("tile_y"),
+        (x0 + col("off_x")).as("cx"), (y0 + col("off_y")).as("cy"),
+        col("_box_cell"), col("_box_key"))
+    val (cx, cy) = (col("cx"), col("cy"))
+    val polyKey = bc.fold(col("_box_key"))(b => coalesce(col("_box_key"), SpatialExprs.pipFirstKey(cx, cy, b)))
+    centred.select(col("image_id"), col("tile_x"), col("tile_y"), cx, cy,
+      coalesce(col("_box_cell"), SpatialExprs.cellIdCol(cx, cy, res)).as("cell_id"),
+      polyKey.as("poly_key"))
   }
 
   /** Vector split-on-grid: tag each point row with its grid row/col at cellSize. */

@@ -57,6 +57,34 @@ class IndexSpec extends AnyFunSuite {
     }
   }
 
+  test("boxCellId: where a footprint's cell is proven, it is every tile centre's cellId") {
+    val rng = new SplitMix64(19)
+    val (side, g, res) = (0.05, 4, 9)
+    val cs = CellIndex.cellSize(res)
+    val off = (0 until g).map(t => (t + 0.5) * (side / g))
+    // random footprints, footprints around cell edges (negative and past
+    // 2^28 cells too) and non-finite ones
+    val edges = Seq(0L, 3L, -1L, -57L, (1L << 28) - 1, 1L << 28, 1L << 29).map(_ * cs)
+    val near = edges.flatMap(e => (0 until 40).map(_ => e + (rng.nextDouble() - 0.5) * 2 * side))
+    val coords = (0 until 400).map(_ => (rng.nextDouble() - 0.5) * 400) ++ near ++
+      Seq(Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN)
+    var (proven, open) = (0, 0)
+    for (x0 <- coords; y0 <- coords.take(60) ++ near.take(20)) {
+      val id = CellIndex.boxCellId(x0 + off.head, y0 + off.head, x0 + off.last, y0 + off.last, res)
+      if (id < 0) open += 1
+      else {
+        proven += 1
+        for (ox <- off; oy <- off)
+          assert(CellIndex.cellId(x0 + ox, y0 + oy, res) == id, s"($x0 + $ox, $y0 + $oy)")
+      }
+    }
+    assert(proven > 0 && open > 0, s"proven $proven, open $open")
+    // the ends are compared as coordinates: 2^29 cells apart, equal encoded ids
+    val (a, b) = (0.3, (1L << 29) * cs + 0.3)
+    assert(CellIndex.cellId(a, 0.3, res) == CellIndex.cellId(b, 0.3, res))
+    assert(CellIndex.boxCellId(a, 0.3, b, 0.3, res) == -1L)
+  }
+
   test("coveringCells covers a bbox") {
     val cells = CellIndex.coveringCells(1.0, 1.0, 7.0, 4.0, 7) // cs = 2.8125
     val cs = CellIndex.cellSize(7)

@@ -155,6 +155,17 @@ class OperatorSpec extends SparkSuite {
     assert(got == want)
   }
 
+  test("distanceJoin: null ids are dropped and a shared id never pairs with itself") {
+    // id 4 twice, in neighbouring res-8 cells (1.3 and 1.45 either side of
+    // 1.40625); a null id one cell over from id 1
+    val df = Seq((Some(1L), 1.0, 0.0), (None, 1.5, 0.0), (Some(4L), 1.3, 0.0), (Some(4L), 1.45, 0.0))
+      .toDF("id", "x", "y")
+    val got = Knn.distanceJoin(spark, df, "id", "x", "y", 1.0)
+      .select("a_id", "b_id", "dist2").as[(Long, Long, Double)].collect().sortBy(_._3).toSeq
+    assert(got.map(r => (r._1, r._2)) == Seq((1L, 4L), (1L, 4L)), got)
+    assert(got.map(_._3) == Seq((1.0 - 1.3) * (1.0 - 1.3), (1.0 - 1.45) * (1.0 - 1.45)), got)
+  }
+
   // --------------------------------------------------------------- dissolve
 
   test("dissolve cancels shared edges: 2x2 block -> 8 boundary edges, 1 ring") {
@@ -410,7 +421,28 @@ class OperatorSpec extends SparkSuite {
           (layer.xx(i) + side * 0.3, layer.yy(i) - side * 0.2))
       }
       val random = (0 until 300).map(_ => (rng.nextDouble() * 100, rng.nextDouble() * 100))
-      val pts = (onBoundary ++ random).map { case (x, y) => (Option(x), Option(y)) } ++
+      // footprints whose first and last tile centres straddle a res-9 cell
+      // edge (a multiple of 0.703125) in x, in y and in both, footprints with
+      // a tile centre exactly on an edge, negative coordinates and
+      // coordinates past 2^28 cells, where encoded ids wrap
+      val cs = graft.cell.CellIndex.cellSize(9)
+      val edges = Seq(3L, 140L, -1L, -57L, (1L << 28) + 5, 1L << 29).map(_ * cs)
+      val straddle = edges.flatMap(e => Seq((e, 50.3), (50.3, e), (e, e), (e + 0.01, e - 0.015)))
+      // the footprint centre that puts tile centre t exactly on e, if one exists
+      def centredOn(e: Double, t: Int): Option[Double] = {
+        val off = (t + 0.5) * (side / 4)
+        val guess = e - off + side / 2
+        (0 to 16).flatMap(k => Seq(guess + k * math.ulp(guess), guess - k * math.ulp(guess)))
+          .find(x => (x - side / 2) + off == e)
+      }
+      val onEdge = edges.flatMap(e => Seq(
+        centredOn(e, 0).map(x => (x, 50.3)), centredOn(e, 3).map(y => (50.3, y)),
+        for (x <- centredOn(e, 1); y <- centredOn(e, 2)) yield (x, y))).flatten
+      assert(onEdge.size >= edges.size)
+      val (inf, nan) = (Double.PositiveInfinity, Double.NaN)
+      val extreme = Seq((inf, 5.0), (-inf, 5.0), (5.0, inf), (-inf, inf), (nan, nan), (5.0, nan))
+      val pts = (onBoundary ++ random ++ straddle ++ onEdge ++ extreme)
+        .map { case (x, y) => (Option(x), Option(y)) } ++
         Seq((None, Some(5.0)), (Some(5.0), None), (None, None), (Some(Double.NaN), Some(5.0)))
       val imgs = pts.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
         .toDF("image_id", "x", "y").repartition(3)

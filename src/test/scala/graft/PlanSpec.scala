@@ -117,6 +117,56 @@ class PlanSpec extends SparkSuite {
     assert(both, s"pip_box_first_key and pip_first_key must run in one WholeStageCodegen stage:\n$plan")
   }
 
+  test("broadcast PIP join probes each point once: no filter inferred from the explode") {
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import graft.functions.{PipAllKeys, PipExprBase}
+    import graft.functions.GraftFunctions.{cellId, phashLat, phashLon}
+    val layer = Synthetic.oracleLayer
+    // TileRun's shape: locate, keep the groups to do, join
+    val located = spark.read.parquet(imagesParquet)
+      .withColumn("x", phashLon(col("phash")))
+      .withColumn("y", phashLat(col("phash")))
+      .withColumn("g", cellId(col("x"), col("y"), 3))
+    val todo = located.select("g").distinct().limit(3).collect().map(_.getLong(0)).toSeq
+    Seq(
+      "broadcastJoin" -> SpatialJoin.broadcastJoin(spark, located, "x", "y", layer),
+      "q_pip_join" -> SparkEntry.queries("q_pip_join")(spark, Sf),
+      "TileRun chain" -> SpatialJoin.broadcastJoin(spark,
+        located.filter(col("g").isin(todo: _*)), "x", "y", layer)
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      val probes = plan.collect { case n => n.expressions.map(_.collect { case p: PipAllKeys => p }.size).sum }.sum
+      assert(probes == 1, s"$name: pip_all_keys evaluated $probes times\n$plan")
+      val pipFilters = plan.collect {
+        case f: Filter if f.condition.exists(_.isInstanceOf[PipExprBase]) => f.condition
+      }
+      assert(pipFilters.isEmpty, s"$name: filters on a PIP probe $pipFilters\n$plan")
+    }
+  }
+
+  test("tile assignment proves each footprint's cell before the fan-out; cell_id only as fallback") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, Coalesce, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    import graft.functions.{CellBoxIdExpr, CellIdExpr}
+    val tiles = Tiling.tileAssign(spark, spark.read.parquet(imagesParquet), tileGrid = 4, res = 9,
+      Some(Synthetic.oracleLayer))
+    val plan = tiles.queryExecution.optimizedPlan
+    val generates = plan.collect { case g: Generate => g }
+    assert(generates.size == 1, plan.toString)
+    def count(p: LogicalPlan)(f: Expression => Boolean): Int =
+      p.collect { case n => n.expressions.map(_.collect { case e if f(e) => e }.size).sum }.sum
+    val boxIds = count(plan)(_.isInstanceOf[CellBoxIdExpr])
+    assert(boxIds == 1 && count(generates.head.child)(_.isInstanceOf[CellBoxIdExpr]) == 1,
+      s"cell_box_id must be computed once, below the Generate\n$plan")
+    val cellIds = count(plan)(_.isInstanceOf[CellIdExpr])
+    val fallbacks = count(plan) {
+      case Coalesce(Seq(a: Attribute, _: CellIdExpr)) => a.name == "_box_cell"
+      case _ => false
+    }
+    assert(cellIds >= 1 && cellIds == fallbacks,
+      s"cell_id must appear only as coalesce(_box_cell, cell_id(..)): $cellIds vs $fallbacks\n$plan")
+  }
+
   test("CRS forward expressions run inside WholeStageCodegen, scan prunes") {
     val df = spark.read.parquet(s"$Sf/customer.parquet")
       .select(col("c_custkey"))
