@@ -404,8 +404,10 @@ object Bench {
       imgs.groupBy("cell", "poly_key").agg(count(lit(1))).count()
     }
 
-    // q_ann_lsh (not the O(n²) exact baseline) — the scale path is what the
-    // timing should reflect; the exact variant stays in the correctness gate
+    // q_ann_lsh (not the O(n²) exact baseline); the exact variant stays in
+    // the correctness gate. At sf0.1 its vectors, like q_minhash_pairs'
+    // documents, fit one broadcast, so both time the LSH joins' driver paths
+    // (see the Ann and Dedup headers), not their shuffle paths
     val benchQueries = Seq(
       "q_pip_join", "q_cell_assign", "q_knn", "q_dist_join", "q_dissolve",
       "q_calc_group", "q_attr_join", "q_join_duplication", "q_minhash_pairs",

@@ -1,9 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
+import graft.functions.{HashExprs, HashKernels}
 import graft.tables.SplitMix64
 
 /**
@@ -21,6 +27,36 @@ import graft.tables.SplitMix64
  * Nulls: all three drop rows with a null id or a null vector (after the cast
  * of the id to long) once, up front, as [[Knn.knnJoin]] does. Such a row is
  * neither a query nor anyone's neighbour.
+ *
+ * Path selection ([[lshTopK]]), as [[Knn.knnJoin]] chooses its own: when
+ * the vectors fit one broadcast (`spark.sql.autoBroadcastJoinThreshold`; -1
+ * disables it)
+ *  - driver: one job collects (id, signature, vector), the signature
+ *    computed on the executors; the driver indexes the probe and base
+ *    buckets ([[Dedup.driverCandidates]]), scores the candidates with the
+ *    codegen kernel [[graft.functions.HashKernels.cosine]] on the same
+ *    `ArrayData` the shuffle path reads (so a null element reads the same
+ *    on both) and returns the ranked rows as a local relation. The gate is
+ *    Spark's size estimate of the collected projection (no job); it
+ *    undercounts arrays, so the exact checks are what bound the driver
+ *    path: the rows' bytes, counted as they are collected (the collect
+ *    stops once they pass the threshold), then the candidate-pair bound at
+ *    16 bytes a pair. The shuffle path runs when one fails;
+ *  - shuffle, otherwise: the (id, signature) rows are materialized once,
+ *    capped and joined on the bucket id, then ranked by a window.
+ *
+ * Exactness law of [[lshTopK]], the same on both paths:
+ *  - the cap ([[Dedup.capBuckets]]) counts probe entries and base entries
+ *    separately, one per (row, bucket), not per distinct id; a bucket with
+ *    more than `maxBucket` entries on a side is dropped from that side;
+ *  - a candidate is a distinct (id, neighbor_id), id != neighbor_id, that
+ *    shares a kept bucket; it is scored for every (row of id, row of
+ *    neighbor_id) combination, and an id held by several rows ranks all of
+ *    its rows' candidates together;
+ *  - rows rank by (score desc, neighbor_id) under Spark's double order, as
+ *    [[Knn.knnJoin]]'s broadcast path does: NaN is greatest and -0.0 equals
+ *    0.0. A query with fewer than k candidates gets all of them; k <= 0
+ *    gives no rows.
  */
 object Ann {
 
@@ -117,7 +153,6 @@ object Ann {
     // argmax / probe kernels are codegen expressions (r6; ArrayData read in
     // place, centroids as a codegen reference object — no broadcast, no
     // Seq[Float] boxing per row). Fold order identical to the UDF forms.
-    import graft.functions.HashExprs
 
     // Lloyd: assign -> mean (deterministic; ties in argmax break to lower list)
     var it = 0
@@ -158,9 +193,15 @@ object Ann {
       .select("id", "rank", "neighbor_id", "score")
   }
 
+  /** The element type the vector kernels read (they cast other numeric
+   * arrays to it, as [[graft.functions.PlaneSigExpr]] declares). */
+  private[operators] val FloatVector = ArrayType(FloatType)
+
   /**
    * LSH-bucketed approximate top-k: candidates share a hyperplane bucket with
    * the query (multi-probe: bucket itself + all Hamming-1 neighbors).
+   * Output: (id, rank, neighbor_id, score). Solved on the driver when the
+   * vectors fit one broadcast (see the header).
    *
    * Shuffle shape (the part that matters at 10^12 rows): the (planes+1)-way
    * probe explode and the bucket self-join carry (id, bucket) pairs ONLY —
@@ -174,32 +215,69 @@ object Ann {
     val v = vectors(df, idCol, vecCol)
     // signature / probe / cosine kernels are codegen expressions (r6; see
     // graft.functions.HashKernels — ArrayData read in place, no Seq boxing)
-    import graft.functions.HashExprs
-    // (id, sig) materialized once: probes AND base each re-read it behind
-    // capBuckets — without the checkpoint the sig kernel runs up to 4x,
-    // guarded only by fragile exchange reuse
-    val idSigs = Materialize(
-      v.withColumn("_sig", HashExprs.planeSig(col("vec"), planes)).select("id", "_sig"),
-      eager = true)
-    // degenerate-bucket cap on both sides (see Dedup.capBuckets): one
-    // megabucket of identical signatures would make the probe join quadratic
-    val probes = Dedup.capBuckets(
-      idSigs.withColumn("_bucket", explode(HashExprs.sigProbes(col("_sig"), planes)))
-        .select(col("id"), col("_bucket")), "_bucket", maxBucket)
-    val base = Dedup.capBuckets(
-      idSigs.select(col("id").as("neighbor_id"), col("_sig").as("_bucket")),
-      "_bucket", maxBucket)
-    val cand = probes.join(base, Seq("_bucket"))
-      .filter(col("id") =!= col("neighbor_id"))
-      .dropDuplicates("id", "neighbor_id")
-    val scored = cand
-      .join(v, Seq("id"))
-      .join(v.select(col("id").as("neighbor_id"), col("vec").as("nvec")), Seq("neighbor_id"))
-      .select(col("id"), col("neighbor_id"),
-        HashExprs.cosine(col("vec"), col("nvec")).as("score"))
-    val w = Window.partitionBy("id").orderBy(col("score").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("id", "rank", "neighbor_id", "score")
+    val sig = HashExprs.planeSig(col("vec"), planes)
+    val small = collectIfFits(v.select(col("id"), sig, col("vec").cast(FloatVector))).flatMap { rows =>
+      val ids = Dedup.idsOf(rows)
+      val sigs = rows.map(_.getLong(1))
+      Dedup.driverCandidates(spark, sigs.map(HashKernels.sigProbes(_, planes).toLongArray()),
+          sigs.map(Array(_)), maxBucket)((i, j) => ids(i) != ids(j)).map { c =>
+        // every row of the query id against every row of the neighbour id,
+        // ranked per query id as the window ranks them; the pairs of one
+        // query id are adjacent
+        val out = mutable.ArrayBuffer.empty[Row]
+        val (nids, scores) = (mutable.ArrayBuffer.empty[java.lang.Long], mutable.ArrayBuilder.make[Double])
+        def rank(query: java.lang.Long): Unit = {
+          val s = scores.result()
+          val order = Array.tabulate[Integer](s.length)(Integer.valueOf)
+          java.util.Arrays.sort(order, (x: Integer, y: Integer) => {
+            val c = SQLOrderingUtil.compareDoubles(s(y), s(x))
+            if (c != 0) c else java.lang.Long.compare(nids(x), nids(y))
+          })
+          for (r <- 0 until math.min(k, s.length)) out += Row(query, r + 1, nids(order(r)), s(order(r)))
+          nids.clear()
+          scores.clear()
+        }
+        var query = -1
+        for ((aRows, bRows) <- c.idPairs(ids)) {
+          if (aRows(0) != query && query >= 0) rank(ids(query))
+          query = aRows(0)
+          for (i <- aRows; j <- bRows) {
+            nids += ids(j)
+            scores += HashKernels.cosine(rows(i).getArray(2), rows(j).getArray(2))
+          }
+        }
+        if (query >= 0) rank(ids(query))
+        val id = v.schema("id")
+        c.report(spark.createDataFrame(out.asJava, StructType(Seq(id,
+          StructField("rank", IntegerType, nullable = false), id.copy(name = "neighbor_id"),
+          StructField("score", DoubleType, v.schema("vec").nullable)))))
+      }
+    }
+    small.getOrElse {
+      // (id, sig) materialized once: probes AND base each re-read it behind
+      // capBuckets — without the checkpoint the sig kernel runs up to 4x,
+      // guarded only by fragile exchange reuse
+      val idSigs = Materialize(v.withColumn("_sig", sig).select("id", "_sig"), eager = true)
+      // degenerate-bucket cap on both sides (see Dedup.capBuckets): one
+      // megabucket of identical signatures would make the probe join quadratic
+      val probes = Dedup.capBuckets(
+        idSigs.withColumn("_bucket", explode(HashExprs.sigProbes(col("_sig"), planes)))
+          .select(col("id"), col("_bucket")), "_bucket", maxBucket)
+      val base = Dedup.capBuckets(
+        idSigs.select(col("id").as("neighbor_id"), col("_sig").as("_bucket")),
+        "_bucket", maxBucket)
+      val cand = probes.join(base, Seq("_bucket"))
+        .filter(col("id") =!= col("neighbor_id"))
+        .dropDuplicates("id", "neighbor_id")
+      val scored = cand
+        .join(v, Seq("id"))
+        .join(v.select(col("id").as("neighbor_id"), col("vec").as("nvec")), Seq("neighbor_id"))
+        .select(col("id"), col("neighbor_id"),
+          HashExprs.cosine(col("vec"), col("nvec")).as("score"))
+      val w = Window.partitionBy("id").orderBy(col("score").desc, col("neighbor_id"))
+      scored.withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select("id", "rank", "neighbor_id", "score")
+    }
   }
 }

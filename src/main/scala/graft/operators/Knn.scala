@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,8 @@ import graft.index.PointTree
  *
  * Path selection (kNN), from the point count n alone: when
  * n * 24 bytes <= `spark.sql.autoBroadcastJoinThreshold` (Spark's own
- * broadcast setting; -1 disables it, the 10 MB default admits ~437 k points)
+ * broadcast setting; -1 disables it, the 10 MB default admits ~437 k points;
+ * the same rule, `fitsOneBroadcast`, picks the LSH joins' driver paths)
  *  - broadcast: the Spark driver collects (id, x, y), builds a
  *    [[PointTree]] and broadcasts it; one map pass probes every point with
  *    the codegen `knn_probe` expression and `posexplode`s its ranked array —
@@ -67,7 +68,7 @@ object Knn {
       .filter(col("id").isNotNull && col("x").isNotNull && col("y").isNotNull)
     val stats = base.agg(count(lit(1)), min(col("x")), max(col("x")),
       min(col("y")), max(col("y"))).head()
-    if (stats.getLong(0) * PointTree.BytesPerPoint <= GraftBridge.autoBroadcastThreshold(spark))
+    if (fitsOneBroadcast(spark, stats.getLong(0) * PointTree.BytesPerPoint))
       broadcastKnn(spark, base, k)
     else shuffleKnn(base, stats, k, bruteForceBudget)
   }
@@ -92,8 +93,12 @@ object Knn {
       val csTarget = math.sqrt(w * h / nPoints.toDouble * 2.0 * (k + 1).toDouble)
       math.min(26, math.max(0, math.floor(math.log(360.0 / csTarget) / math.log(2.0)).toInt))
     }
-    val pts = base.withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), useRes))
-      .cache()
+    // read by every round and by the tail: checkpointed lazily, so the first
+    // round's count (or the tail's final checkpoint) materializes it; its
+    // scans name the call site `Knn.shuffleKnn`
+    val pts = Materialize(
+      base.withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), useRes)),
+      eager = false)
 
     val cs = CellIndex.cellSize(useRes)
     var pending = pts
@@ -189,14 +194,9 @@ object Knn {
     // searched instead of dropping them
     if (lastRanked != null && pendingCount > 0)
       results = if (results == null) lastRanked else results.unionByName(lastRanked)
-    // materialize the final result, then release the cached points
-    val out =
-      if (results == null) pts.limit(0)
-        .select(col("id"), lit(1).as("rank"), col("id").as("neighbor_id"),
-          lit(0.0).as("dist2"))
-      else Materialize(results, eager = true)
-    pts.unpersist()
-    out
+    if (results == null) pts.limit(0)
+      .select(col("id"), lit(1).as("rank"), col("id").as("neighbor_id"), lit(0.0).as("dist2"))
+    else Materialize(results, eager = true)
   }
 
   /** The broadcast path: one map pass over `base` probing a broadcast

@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.index.PolygonLayer
 import graft.operators._
@@ -69,13 +72,6 @@ class OperatorSpec extends SparkSuite {
     Knn.knnJoin(spark, df, "id", "x", "y", k, bruteForceBudget = bruteForceBudget)
       .as[(Long, Int, Long, Double)].collect().toSeq
       .groupBy(_._1).map { case (id, rs) => id -> rs.sortBy(_._2).map(r => (r._2, r._3, r._4)) }
-
-  private def withBroadcastThreshold[T](v: String)(f: => T): T = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
 
   /** The three kNN paths: the broadcast KD-tree (default settings), the
    * brute-force cross join (broadcast off) and ring rounds (broadcast off,
@@ -373,6 +369,254 @@ class OperatorSpec extends SparkSuite {
     annNullCase((df, k) => Ann.lshTopK(spark, df, "id", "vec", k, planes = 6))
   }
 
+  // ------------------------------------------ LSH band joins: driver vs shuffle
+
+  /** Whether `df` reads a checkpoint: every shuffle path of the band joins
+   * materializes its band rows; no driver path does. */
+  private def readsCheckpoint(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+
+  /** A row as text, each double by its bits. */
+  private def rowBits(r: Row): String = r.toSeq.map {
+    case d: Double => f"0x${java.lang.Double.doubleToLongBits(d)}%016x"
+    case v => String.valueOf(v)
+  }.mkString("(", ", ", ")")
+
+  /** `op` on the driver path (the default threshold) and on the shuffle path
+   * (-1): the same schema and the same multiset of rows, doubles bit for
+   * bit. Returns the rows. */
+  private def samePaths(what: String)(op: => DataFrame): Seq[String] = {
+    val driver = op
+    assert(!readsCheckpoint(driver), s"$what: not on the driver path")
+    val want = withBroadcastThreshold("-1") {
+      val shuffle = op
+      assert(readsCheckpoint(shuffle), s"$what: not on the shuffle path")
+      assert(driver.schema == shuffle.schema, s"$what: ${driver.schema} vs ${shuffle.schema}")
+      shuffle.collect().map(rowBits).toSeq.sorted
+    }
+    val got = driver.collect().map(rowBits).toSeq.sorted
+    assert(got == want,
+      s"$what: driver has ${got.diff(want).take(4)}, shuffle has ${want.diff(got).take(4)}")
+    got
+  }
+
+  /** (id, vec) rows under an explicit schema: ids and elements may be null. */
+  private def vecFrame(idType: DataType, rows: Seq[(Any, Seq[Any])]): DataFrame =
+    spark.createDataFrame(rows.map { case (id, v) => Row(id, v) }.asJava, StructType(Seq(
+      StructField("id", idType), StructField("vec", ArrayType(FloatType)))))
+
+  /** (id, t) rows under an explicit schema: ids and texts may be null. */
+  private def textFrame(idType: DataType, rows: Seq[(Any, String)]): DataFrame =
+    spark.createDataFrame(rows.map { case (id, t) => Row(id, t) }.asJava, StructType(Seq(
+      StructField("id", idType), StructField("t", StringType))))
+
+  /** Vector inputs of the differential tests, each with the cap it runs at. */
+  private lazy val vectorCases: Seq[(String, DataFrame, Int)] = {
+    val rng = new SplitMix64(61)
+    def rand(dims: Int): Seq[Any] = Seq.fill(dims)((rng.nextDouble() * 2 - 1).toFloat)
+    // SkewSpec's planted zero-vector megabucket
+    val srng = new SplitMix64(17)
+    val skew = (0 until 50).map(i => (i.toLong: Any, Seq.fill(8)(srng.nextDouble().toFloat - 0.5f): Seq[Any])) ++
+      (1000 until 2000).map(i => (i.toLong: Any, Seq.fill(8)(0.0f): Seq[Any]))
+    // buckets of exactly the cap (5 copies of a) and one over (6 of b); c
+    // signs one bit away from a, so a's bucket holds 5 base rows but 6 probe
+    // rows: the sides are capped separately
+    val a = rand(12).map(_.asInstanceOf[Float])
+    val b = rand(12)
+    val planes = 10
+    def sig(v: Seq[Any]) = Ann.signature(v.map(_.asInstanceOf[Float]).toArray, planes)
+    val c = Iterator.continually(a.map(x => x + (rng.nextDouble() * 2 - 1).toFloat * 0.3f))
+      .find(v => java.lang.Long.bitCount(sig(v) ^ sig(a)) == 1).get
+    // the cap counts rows, not ids: 6 rows of d under 5 ids are over it, and
+    // so are 6 rows of f, one with a null id (lshTopK drops that row first);
+    // 3 copies of e are 3 probe and 3 base rows, under the cap on each side
+    val (d, e, f) = (rand(12), rand(12), rand(12))
+    val capped = (1 to 5).map(i => (i.toLong: Any, a: Seq[Any])) ++
+      (11 to 16).map(i => (i.toLong: Any, b)) ++ Seq((21L: Any, c: Seq[Any])) ++
+      Seq(31L, 32L, 33L, 34L, 35L, 35L).map(i => (i: Any, d)) ++
+      Seq(51L, 52L, 53L).map(i => (i: Any, e)) ++
+      Seq(41L, 42L, 43L, 44L, 45L, null).map(i => (i: Any, f)) ++
+      (100 until 140).map(i => (i.toLong: Any, rand(12)))
+    // null ids, null vectors, a null element, ragged vectors, NaN and
+    // infinite components, an id held by three rows with different vectors
+    val odd: Seq[(Any, Seq[Any])] = (0 until 30).map(i => (i.toLong: Any, rand(6))) ++ Seq(
+      (null, rand(6)), (null, rand(6)), (40L, null), (41L, Seq(0.5f, null, -0.25f, 1f, 0f, 0.1f)),
+      (42L, rand(4)), (43L, rand(9)), (44L, Seq()), (45L, Seq(Float.NaN, 1f, 1f, 0f, 0f, 0f)),
+      (46L, Seq(Float.PositiveInfinity, 1f, 0f, 0f, 0f, 0f)),
+      (47L, Seq(Float.NegativeInfinity, 0f, 1f, 0f, 0f, 0f)), (48L, Seq.fill(6)(0f)),
+      (3L, rand(6)), (3L, rand(6)), (7L, null))
+    // equal vectors under ids in descending row order: every score ties,
+    // so the rank comes from the neighbour id alone
+    val g = rand(6)
+    val ties = (80L to 73L by -1L).map(i => (i: Any, g)) ++ (0 until 10).map(i => (i.toLong: Any, rand(6)))
+    // string ids: a null string casts to a null id
+    val strIds: Seq[(Any, Seq[Any])] = (0 until 25).map(i => (i.toString: Any, rand(5))) ++
+      Seq((null, rand(5)), ("7", rand(5)))
+    Seq(("zero-vector megabucket", vecFrame(LongType, skew), 60),
+      ("buckets at and over the cap", vecFrame(LongType, capped), 5),
+      ("nulls, odd vectors, repeated ids", vecFrame(LongType, odd), Dedup.DefaultMaxBucket),
+      ("tied scores", vecFrame(LongType, ties), Dedup.DefaultMaxBucket),
+      ("string ids", vecFrame(StringType, strIds), Dedup.DefaultMaxBucket),
+      ("no cap", vecFrame(LongType, odd), 0))
+  }
+
+  /** Text inputs of the differential tests, each with the cap it runs at. */
+  private lazy val textCases: Seq[(String, DataFrame, Int)] = {
+    val rng = new SplitMix64(67)
+    val words = Array("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta")
+    def text(n: Int): String = Seq.fill(n)(words(rng.nextInt(words.length))).mkString(" ")
+    // SkewSpec's planted empty-caption megabucket
+    val fox = "the quick brown fox jumps over the lazy dog and runs far away into the woods"
+    val skew = Seq((1L: Any, fox), (2L: Any, fox.replace("runs", "walks"))) ++
+      (1000 until 3000).map(i => (i.toLong: Any, ""))
+    // every band of 5 equal texts at the cap, of 6 equal texts over it
+    val capped = (1 to 5).map(i => (i.toLong: Any, "one two three four five six")) ++
+      (11 to 16).map(i => (i.toLong: Any, "red green blue cyan magenta")) ++
+      Seq(31L, 32L, 33L, 34L, 35L, 35L).map(i => (i: Any, "north south east west")) ++
+      Seq(41L, 42L, 43L, 44L, 45L, null).map(i => (i: Any, "up down left right")) ++
+      Seq((21L: Any, "one two three four five six seven")) ++
+      (100 until 140).map(i => (i.toLong: Any, text(3 + rng.nextInt(6))))
+    // null ids and texts, texts shorter than the shingle, repeated ids with
+    // different texts
+    val odd: Seq[(Any, String)] = (0 until 60).map(i => (i.toLong: Any, text(2 + rng.nextInt(7)))) ++
+      Seq((null, text(5)), (null, text(5)), (70L, null), (71L, "hi"), (72L, "a b"), (73L, ""),
+        (74L, "  !! "), (5L, text(4)), (5L, null), (9L, text(6)))
+    val strIds: Seq[(Any, String)] = (0 until 40).map(i => (i.toString: Any, text(3 + rng.nextInt(4)))) ++
+      Seq((null, text(4)), ("8", text(4)), ("50", "beta eta zeta"), ("51", "beta eta zeta"),
+        (null, "beta eta zeta"))
+    Seq(("empty-caption megabucket", textFrame(LongType, skew), 50),
+      ("buckets at and over the cap", textFrame(LongType, capped), 5),
+      ("nulls, short texts, repeated ids", textFrame(LongType, odd), Dedup.DefaultMaxBucket),
+      ("string ids", textFrame(StringType, strIds), Dedup.DefaultMaxBucket),
+      ("no cap", textFrame(LongType, odd), 0))
+  }
+
+  test("lshTopK: driver and shuffle paths give the same rows") {
+    for ((name, df, cap) <- vectorCases; k <- Seq(0, 2, 60)) {
+      val rows = samePaths(s"$name, k = $k")(Ann.lshTopK(spark, df, "id", "vec", k,
+        planes = 10, maxBucket = cap))
+      assert(rows.nonEmpty == (k > 0), s"$name, k = $k")
+    }
+  }
+
+  test("embeddingPairs: driver and shuffle paths give the same rows") {
+    for ((name, df, cap) <- vectorCases; threshold <- Seq(-1.0, 0.9))
+      samePaths(s"$name, threshold $threshold")(Dedup.embeddingPairs(spark, df, "id", "vec",
+        threshold, planes = 10, maxBucket = cap))
+  }
+
+  test("minhashPairs: driver and shuffle paths give the same rows") {
+    for ((name, df, cap) <- textCases; threshold <- Seq(0.0, 0.4))
+      assert(samePaths(s"$name, threshold $threshold")(Dedup.minhashPairs(spark, df, "id", "t",
+        threshold = threshold, maxBucket = cap)).nonEmpty, name)
+  }
+
+  test("simhashPairs: driver and shuffle paths give the same rows") {
+    for ((name, df, cap) <- textCases; maxHamming <- Seq(3, 64))
+      samePaths(s"$name, maxHamming $maxHamming")(Dedup.simhashPairs(spark, df, "id", "t",
+        maxHamming = maxHamming, maxBucket = cap))
+  }
+
+  test("both paths report their capped rows under the lsh_bucket_cap observations") {
+    /** dropped_rows of each cap observation, in the order the caps were made */
+    def dropped(df: DataFrame): Seq[Any] = {
+      df.collect()
+      df.queryExecution.observedMetrics.toSeq.filter(_._1.startsWith("lsh_bucket_cap_"))
+        .sortBy(_._1.stripPrefix("lsh_bucket_cap_").toInt).map(_._2.getAs[Any]("dropped_rows"))
+    }
+    // the shuffle path is built under -1 but runs with broadcast joins: a
+    // sort-merge join stops reading the capped side once the other side is
+    // exhausted, so its rows past the last matching bucket are never counted.
+    // When its answer is empty, adaptive execution replaces the plan by an
+    // empty relation and no observation is reported at all.
+    def same(what: String, cap: Int)(op: => DataFrame): Unit = {
+      val want = dropped(withBroadcastThreshold("-1")(op))
+      val got = dropped(op)
+      assert(got.nonEmpty == (cap > 0) && (want.isEmpty || got == want), s"$what: $got vs $want")
+    }
+    for ((name, df, cap) <- vectorCases) {
+      same(s"lshTopK, $name", cap)(Ann.lshTopK(spark, df, "id", "vec", 2, planes = 10, maxBucket = cap))
+      same(s"embeddingPairs, $name", cap)(Dedup.embeddingPairs(spark, df, "id", "vec", 0.9,
+        planes = 10, maxBucket = cap))
+    }
+    for ((name, df, cap) <- textCases) {
+      same(s"minhashPairs, $name", cap)(Dedup.minhashPairs(spark, df, "id", "t", maxBucket = cap))
+      same(s"simhashPairs, $name", cap)(Dedup.simhashPairs(spark, df, "id", "t", maxBucket = cap))
+    }
+    // the planted megabuckets report their drops: 1 000 zero vectors, and 16
+    // bands of 2 000 empty captions
+    val skewVecs = vectorCases.head._2
+    assert(dropped(Ann.lshTopK(spark, skewVecs, "id", "vec", 2, planes = 10, maxBucket = 60))
+      .forall(_.asInstanceOf[Long] >= 1000L))
+    assert(dropped(Dedup.minhashPairs(spark, textCases.head._2, "id", "t", maxBucket = 50)) ==
+      Seq(32000L))
+  }
+
+  test("simhashPairs keeps every distinct simhash pair of an id with several texts") {
+    val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods"
+    val rows = Seq((1L, base), (1L, base + " tonight"), (2L, base), (2L, base.replace("fox", "cat")),
+      (3L, "spark catalyst rules and typed datasets are not like foxes at all"), (3L, null))
+    val df = rows.toDF("id", "t")
+    def bands(sh: Long) = (0 until 4).map(b => (b.toLong << 16) | ((sh >>> (16 * b)) & 0xffffL)).toSet
+    val maxHamming = 20
+    // by definition: each row pair with a_id < b_id that shares a band, once
+    // per distinct (a_sh, b_sh)
+    val hashed = rows.collect { case (id, t) if t != null => (id, Dedup.simhash(t, 3)) }
+    val want = (for {
+      (a, ash) <- hashed; (b, bsh) <- hashed
+      if a < b && bands(ash).intersect(bands(bsh)).nonEmpty
+    } yield (a, b, ash, bsh)).distinct
+      .map { case (a, b, ash, bsh) => (a, b, java.lang.Long.bitCount(ash ^ bsh)) }
+      .filter(_._3 <= maxHamming).sorted
+    assert(want.count(r => r._1 == 1L && r._2 == 2L) >= 2, s"fixture has one (1, 2) row: $want")
+    def got = Dedup.simhashPairs(spark, df, "id", "t", maxHamming = maxHamming)
+      .as[(Long, Long, Int)].collect().toSeq.sorted
+    assert(withBroadcastThreshold("-1")(got) == want, "shuffle path")
+    assert(got == want, "driver path")
+  }
+
+  test("band joins take the shuffle path when the exact sizes do not fit one broadcast") {
+    // long texts: Spark's estimate (a fixed width per string) is far below
+    // the collected bytes
+    val rng = new SplitMix64(71)
+    val words = Array("alpha", "beta", "gamma", "delta", "eps", "zeta")
+    val docs = (0 until 60).map(i =>
+      (i.toLong, Seq.fill(160)(words(rng.nextInt(words.length))).mkString(" "))).toDF("id", "t")
+    val threshold = 20000L
+    assert(docs.queryExecution.optimizedPlan.stats.sizeInBytes * 4 < threshold)
+    assert(docs.as[(Long, String)].collect().map(_._2.length.toLong).sum > 2 * threshold)
+    def minhash = Dedup.minhashPairs(spark, docs, "id", "t", threshold = 0.2)
+    val want = samePaths("long texts")(minhash)
+    withBroadcastThreshold(threshold.toString) {
+      val df = minhash
+      assert(readsCheckpoint(df), "rows over the threshold were solved on the driver")
+      assert(df.collect().map(rowBits).toSeq.sorted == want)
+    }
+    // 100 equal vectors: 100 x 100 candidate pairs (160 KB at 16 bytes) from
+    // ~10 KB of rows
+    val vecs = (0 until 100).map(i => (i.toLong, Seq(1f, 2f, 3f, 4f))).toDF("id", "vec")
+    def topK = Ann.lshTopK(spark, vecs, "id", "vec", 3, maxBucket = 200)
+    val wantTopK = samePaths("equal vectors")(topK)
+    withBroadcastThreshold("60000") {
+      val df = topK
+      assert(readsCheckpoint(df), "a candidate bound over the threshold was solved on the driver")
+      assert(df.collect().map(rowBits).toSeq.sorted == wantTopK)
+    }
+  }
+
+  test("the driver paths' collect stops reading once the rows pass the bound") {
+    val read = spark.sparkContext.longAccumulator("rows_read")
+    val counted = udf { (s: String) => read.add(1); s }
+    // 2 000 rows of 120 bytes in 4 partitions; 20 000 bytes hold ~166 rows
+    val df = spark.range(0, 2000, 1, 4)
+      .select(counted(lpad(col("id").cast("string"), 100, "x")).as("t"))
+    assert(org.apache.spark.sql.GraftBridge.collectUnsafeWithin(df, 20000L).isEmpty)
+    assert(read.value <= 4 * 170, s"read ${read.value} of 2000 rows past a 20 000-byte bound")
+    val all = org.apache.spark.sql.GraftBridge.collectUnsafeWithin(df, 1L << 30).get
+    assert(all.map(_.getUTF8String(0).toString).toSeq.sorted ==
+      (0 until 2000).map(i => i.toString.reverse.padTo(100, 'x').reverse).sorted)
+  }
+
   // ------------------------------------------------------------- multimodal
 
   test("image decode round-trip: png exact, jpeg PSNR >= 40dB") {
@@ -536,6 +780,8 @@ class OperatorSpec extends SparkSuite {
       .toDF("id", "x", "y")
     val vecs = (0 until 60).map(i => (i.toLong, Seq.fill(8)(rng.nextDouble().toFloat)))
       .toDF("id", "vec")
+    val docs = (0 until 40).map(i => (i.toLong, Seq.fill(6)(s"w${rng.nextInt(5)}").mkString(" ")))
+      .toDF("id", "t")
     Seq[(String, () => DataFrame)](
       "simplify" -> (() => SimplifyOp.simplify(spark, rings, "ring", pct = 0.3)),
       "simplifyVariable" ->
@@ -543,7 +789,15 @@ class OperatorSpec extends SparkSuite {
       "simplifySpherical" -> (() => SimplifyOp.simplifySpherical(spark, rings, "ring", pct = 0.3)),
       "dissolve2Distributed" -> (() => OverlayOp.dissolve2Distributed(spark, shapes, "id", "ring")),
       "byCount" -> (() => Subdivide.byCount(spark, pts, "x", "y", maxPerLeaf = 50)._1),
-      "ivfTopK" -> (() => Ann.ivfTopK(spark, vecs, "id", "vec", 3, nlist = 4, nprobe = 2))
+      "ivfTopK" -> (() => Ann.ivfTopK(spark, vecs, "id", "vec", 3, nlist = 4, nprobe = 2)),
+      "knnJoin, shuffle path" -> (() => withBroadcastThreshold("-1")(
+        Knn.knnJoin(spark, pts, "id", "x", "y", 3, bruteForceBudget = 0L))),
+      "lshTopK" -> (() => Ann.lshTopK(spark, vecs, "id", "vec", 3, planes = 4)),
+      "lshTopK, shuffle path" -> (() => withBroadcastThreshold("-1")(
+        Ann.lshTopK(spark, vecs, "id", "vec", 3, planes = 4))),
+      "minhashPairs" -> (() => Dedup.minhashPairs(spark, docs, "id", "t", threshold = 0.1)),
+      "minhashPairs, shuffle path" -> (() => withBroadcastThreshold("-1")(
+        Dedup.minhashPairs(spark, docs, "id", "t", threshold = 0.1)))
     ).foreach { case (op, run) =>
       assert(run().collect().nonEmpty, op)
       assert(cacheManager.isEmpty, s"$op left a CacheManager entry")

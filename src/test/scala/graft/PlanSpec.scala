@@ -219,52 +219,64 @@ class PlanSpec extends SparkSuite {
     }
 
   test("lshTopK probe shuffle is id-only: no exchange carries vectors with buckets") {
-    import spark.implicits._
-    val rng = new graft.tables.SplitMix64(3)
-    val vecs = (0 until 200).map(i =>
-      (i.toLong, Array.fill(16)(rng.nextDouble().toFloat).toSeq)).toDF("vec_id", "embedding")
-    val df = graft.operators.Ann.lshTopK(spark, vecs, "vec_id", "embedding", k = 3)
-    val bad = exchangeOutputs(df).filter(out =>
-      out.exists(_.contains("_bucket")) && out.exists(n => n == "vec" || n == "nvec" || n == "embedding"))
-    assert(bad.isEmpty, s"vector bytes rode a bucket shuffle: $bad")
+    // the shuffle path; under the threshold the driver path answers
+    withBroadcastThreshold("-1") {
+      import spark.implicits._
+      val rng = new graft.tables.SplitMix64(3)
+      val vecs = (0 until 200).map(i =>
+        (i.toLong, Array.fill(16)(rng.nextDouble().toFloat).toSeq)).toDF("vec_id", "embedding")
+      val df = graft.operators.Ann.lshTopK(spark, vecs, "vec_id", "embedding", k = 3)
+      val bad = exchangeOutputs(df).filter(out =>
+        out.exists(_.contains("_bucket")) && out.exists(n => n == "vec" || n == "nvec" || n == "embedding"))
+      assert(bad.isEmpty, s"vector bytes rode a bucket shuffle: $bad")
+    }
   }
 
   test("minhash band shuffle is id-only: no exchange carries text with buckets") {
-    import spark.implicits._
-    val docs = (0 until 100).map(i => (i.toLong, s"some words here $i repeated tokens " * 5))
-      .toDF("doc_id", "text")
-    val df = graft.operators.Dedup.minhashPairs(spark, docs, "doc_id", "text", threshold = 0.3)
-    val bad = exchangeOutputs(df).filter(out =>
-      out.exists(_.contains("_bucket")) && out.exists(_.contains("text")))
-    assert(bad.isEmpty, s"document text rode a band shuffle: $bad")
+    // the shuffle path; under the threshold the driver path answers
+    withBroadcastThreshold("-1") {
+      import spark.implicits._
+      val docs = (0 until 100).map(i => (i.toLong, s"some words here $i repeated tokens " * 5))
+        .toDF("doc_id", "text")
+      val df = graft.operators.Dedup.minhashPairs(spark, docs, "doc_id", "text", threshold = 0.3)
+      val bad = exchangeOutputs(df).filter(out =>
+        out.exists(_.contains("_bucket")) && out.exists(_.contains("text")))
+      assert(bad.isEmpty, s"document text rode a band shuffle: $bad")
+    }
   }
 
   test("minhash signature chain is materialized once (no UDF recompute fan-out)") {
-    import spark.implicits._
-    val docs = (0 until 100).map(i => (i.toLong, s"body words $i tok " * 6))
-      .toDF("doc_id", "text")
-    val df = graft.operators.Dedup.minhashPairs(spark, docs, "doc_id", "text", threshold = 0.3)
-    val plan = df.queryExecution.executedPlan.toString
-    // the banded (id, bucket) projection is a checkpointed RDD scan, so the
-    // sig/band UDF chain is OUT of the final plan entirely — only the jaccard
-    // verifier UDF remains
-    assert(plan.contains("ExistingRDD"), "banded projection should be a checkpoint scan")
-    // r6: signature/banding AND the jaccard verifier are codegen expressions
-    // — no boxed ScalaUDF anywhere on the minhash path
-    val udfCount = "(?i)scalaudf".r.findAllIn(plan).size
-    assert(udfCount == 0, s"expected no ScalaUDF, got $udfCount:\n${plan.take(1500)}")
+    // the shuffle path; under the threshold the driver path answers
+    withBroadcastThreshold("-1") {
+      import spark.implicits._
+      val docs = (0 until 100).map(i => (i.toLong, s"body words $i tok " * 6))
+        .toDF("doc_id", "text")
+      val df = graft.operators.Dedup.minhashPairs(spark, docs, "doc_id", "text", threshold = 0.3)
+      val plan = df.queryExecution.executedPlan.toString
+      // the banded (id, bucket) projection is a checkpointed RDD scan, so the
+      // sig/band UDF chain is OUT of the final plan entirely — only the jaccard
+      // verifier UDF remains
+      assert(plan.contains("ExistingRDD"), "banded projection should be a checkpoint scan")
+      // r6: signature/banding AND the jaccard verifier are codegen expressions
+      // — no boxed ScalaUDF anywhere on the minhash path
+      val udfCount = "(?i)scalaudf".r.findAllIn(plan).size
+      assert(udfCount == 0, s"expected no ScalaUDF, got $udfCount:\n${plan.take(1500)}")
+    }
   }
 
   test("lshTopK signature projection is materialized once, no ScalaUDF") {
-    import spark.implicits._
-    val rng = new graft.tables.SplitMix64(5)
-    val vecs = (0 until 150).map(i =>
-      (i.toLong, Array.fill(16)(rng.nextDouble().toFloat).toSeq)).toDF("vec_id", "embedding")
-    val df = graft.operators.Ann.lshTopK(spark, vecs, "vec_id", "embedding", k = 3)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD"), "sig projection should be a checkpoint scan")
-    // r6: signature/probe/cosine kernels are codegen expressions
-    assert("(?i)scalaudf".r.findAllIn(plan).isEmpty, "expected no ScalaUDF on the LSH path")
+    // the shuffle path; under the threshold the driver path answers
+    withBroadcastThreshold("-1") {
+      import spark.implicits._
+      val rng = new graft.tables.SplitMix64(5)
+      val vecs = (0 until 150).map(i =>
+        (i.toLong, Array.fill(16)(rng.nextDouble().toFloat).toSeq)).toDF("vec_id", "embedding")
+      val df = graft.operators.Ann.lshTopK(spark, vecs, "vec_id", "embedding", k = 3)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("ExistingRDD"), "sig projection should be a checkpoint scan")
+      // r6: signature/probe/cosine kernels are codegen expressions
+      assert("(?i)scalaudf".r.findAllIn(plan).isEmpty, "expected no ScalaUDF on the LSH path")
+    }
   }
 
   test("ivfTopK final plan has no ScalaUDF (codegen argmax/probe/cosine)") {
@@ -379,7 +391,8 @@ class PlanSpec extends SparkSuite {
 
   test("plan text names no source line: the LSH checkpoint scans print a fixed call site") {
     import org.apache.spark.sql.execution.FormattedMode
-    // every checkpoint scan names the operator that made it (Materialize)
+    // every checkpoint scan names the operator that made it (Materialize);
+    // the LSH joins checkpoint on their shuffle path only
     Seq(
       "q_minhash_pairs" -> Seq("Dedup.minhashPairs"),
       "q_ann_lsh" -> Seq("Ann.lshTopK"),
@@ -390,11 +403,38 @@ class PlanSpec extends SparkSuite {
       "q_lines_chains" -> Seq("ConnectedComponents.label"),
       "q_subdivide" -> Seq("Subdivide.byExpression")
     ).foreach { case (q, sites) =>
-      val text = SparkEntry.queries(q)(spark, Sf).queryExecution.explainString(FormattedMode)
+      def build = SparkEntry.queries(q)(spark, Sf)
+      val df = if (q == "q_minhash_pairs" || q == "q_ann_lsh") withBroadcastThreshold("-1")(build)
+        else build
+      val text = df.queryExecution.explainString(FormattedMode)
       sites.foreach(site =>
         assert(text.contains(s"localCheckpoint at $site"), s"$q: no $site checkpoint scan\n$text"))
       val lines = """\.scala:\d+""".r.findAllIn(text).toSeq
       assert(lines.isEmpty, s"$q names source lines $lines")
+    }
+  }
+
+  test("q_ann_lsh and q_minhash_pairs at sf0.01 are solved on the driver") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    val sf = new java.io.File(new java.io.File(Sf).getParentFile, "sf0.01").getPath
+    Seq("q_ann_lsh", "q_minhash_pairs").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, sf)
+      assert(df.collect().nonEmpty, q)
+      val plan = df.queryExecution.executedPlan // final adaptive plan after the action
+      val checkpoints = Aqe.collect(plan) { case s: RDDScanExec => s.nodeName }
+      assert(checkpoints.isEmpty, s"$q: checkpoint scan in\n$plan")
+      val bucketShuffles = Aqe.collect(plan) {
+        case e: ShuffleExchangeExec if e.output.exists(_.name.contains("_bucket")) => e.nodeName
+      }
+      assert(bucketShuffles.isEmpty, s"$q: a shuffle carries buckets\n$plan")
+      val withUdf = Aqe.collect(plan) {
+        case p if p.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF])) => p.nodeName
+      }
+      assert(withUdf.isEmpty, s"$q: ScalaUDF in $withUdf\n$plan")
     }
   }
 }

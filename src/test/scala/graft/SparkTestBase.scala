@@ -21,4 +21,13 @@ object SparkTestBase {
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.spark
   final val Sf = "/root/testdata/sf0.001"
+
+  /** Runs `f` with `spark.sql.autoBroadcastJoinThreshold` set to `v` ("-1"
+   * turns off every broadcast and driver path), then restores it. */
+  protected def withBroadcastThreshold[T](v: String)(f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
