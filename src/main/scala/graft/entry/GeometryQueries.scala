@@ -33,8 +33,9 @@ private[graft] object GeometryQueries {
    * a recursive CTE splits each (lo, hi) span at its max-perpendicular
    * vertex (argmax via ORDER BY d DESC, i — first-max like the Scala scan),
    * thresholds clamped by the enclosing span. The perpendicular-distance
-   * arithmetic matches Simplify.perpDistance op for op, so thresholds are
-   * bit-identical and the count needs no floor guard. */
+   * arithmetic matches the planar `segDistance` of Simplify.thresholds op
+   * for op, so thresholds are bit-identical and the count needs no floor
+   * guard. */
   private lazy val simplifyDpSql: String = {
     val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
     val perp =
@@ -523,13 +524,10 @@ private[graft] object GeometryQueries {
       import s.implicits._
       val layer = Synthetic.polygonLayer(32, seed = 11L, holeEvery = 0)
       val rings = (0 until layer.numRings).map(r => (r.toLong, layer.ring(r))).toDF("ring_id", "ring")
-      val keptUdf = udf { (flat: Seq[Double]) =>
-        val (xx, yy) = graft.geom.Geom.unzipRing(flat.toArray)
-        graft.geom.Simplify.douglasPeucker(xx, yy).count(_ >= 0.35).toLong
-      }
-      rings.select(col("ring_id"),
+      SimplifyOp.withThresholds(rings, "ring", graft.geom.Simplify.DouglasPeucker)
+        .select(col("ring_id"),
           (size(col("ring")) / 2).cast("long").as("n_before"),
-          keptUdf(col("ring")).as("n_after"))
+          size(filter(col("thresholds"), _ >= 0.35)).cast("long").as("n_after"))
         .orderBy("ring_id")
     })(
       simplifyDpSql),
@@ -1041,17 +1039,13 @@ private[graft] object GeometryQueries {
     // "remove argmin effective area, record prefix-max" which the SQL
     // mirror unrolls; areas/sqrt are exact IEEE on both sides
     query("q_simplify_vis")((s, dir) => {
-      val thrUdf = udf { (xs: Seq[Double], ys: Seq[Double]) =>
-        graft.geom.Simplify.thresholds(xs.toArray, ys.toArray,
-          graft.geom.Simplify.Visvalingam).toSeq
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 22)
+      val path = points(s, dir).where(col("id") >= 1 && col("id") <= 22)
         .groupBy(lit(1).as("g"))
         .agg(array_sort(collect_list(struct(col("id"), col("x"), col("y")))).as("pts"))
-        .select(
-          transform(col("pts"), p => p.getField("x")).as("xs"),
-          transform(col("pts"), p => p.getField("y")).as("ys"))
-        .select(posexplode(thrUdf(col("xs"), col("ys"))))
+        .select(flatten(transform(col("pts"),
+          p => array(p.getField("x"), p.getField("y")))).as("ring"))
+      SimplifyOp.withThresholds(path, "ring", graft.geom.Simplify.Visvalingam)
+        .select(posexplode(col("thresholds")))
         .where(col("pos") >= 1 && col("pos") <= 20) // interior vertices
         .select((col("pos") + 1).cast("long").as("vi"),
           floor(col("col") * 1000000000.0).cast("long").as("thr_int"))

@@ -917,19 +917,16 @@ private[graft] object ProjectionQueries {
     // 3D Visvalingam thresholds in meters (the reference's default for
     // unprojected data), mm floor guard
     query("q_simplify_sph")((s, dir) => {
-      val thrUdf = udf { (lons: Seq[Double], lats: Seq[Double]) =>
-        graft.geom.Simplify.sphericalThresholds(lons.toArray, lats.toArray,
-          graft.geom.Simplify.Visvalingam).toSeq
-      }
-      points(s, dir).where(col("id") >= 1 && col("id") <= 20)
+      val path = points(s, dir).where(col("id") >= 1 && col("id") <= 20)
         .groupBy(lit(1).as("g"))
         .agg(array_sort(collect_list(struct(col("id"),
           ((col("x") - 50.0) * 3.2).as("lon"),
           ((col("y") - 50.0) * 1.2).as("lat")))).as("pts"))
-        .select(
-          transform(col("pts"), p => p.getField("lon")).as("lons"),
-          transform(col("pts"), p => p.getField("lat")).as("lats"))
-        .select(posexplode(thrUdf(col("lons"), col("lats"))))
+        .select(flatten(transform(col("pts"),
+          p => array(p.getField("lon"), p.getField("lat")))).as("ring"))
+      // lon within ±160, lat within ±60: world-edge protection locks nothing
+      SimplifyOp.withSphericalThresholds(path, "ring", graft.geom.Simplify.Visvalingam)
+        .select(posexplode(col("thresholds")))
         .where(col("pos") >= 1 && col("pos") <= 18)
         .select((col("pos") + 1).cast("long").as("vi"),
           floor(col("col") * 1000.0).cast("long").as("thr_mm"))

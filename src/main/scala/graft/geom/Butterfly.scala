@@ -27,19 +27,7 @@ object Butterfly {
     Map("butterfly" -> 157.5, "butterfly2" -> -20.0, "cahill_keyes" -> -20.0)
 
   // ------------------------------------------------------------- vectors
-  // shared vector algebra lives in [[Polyhedral]]; local aliases only
-
-  private def d2v(p: Array[Double]): Array[Double] =
-    Polyhedral.degreesToVector(p(0), p(1))
-
-  private def v2d(p: Array[Double]): Array[Double] = Polyhedral.vectorToDegreesArr(p)
-
-  private def norm(p: Array[Double]): Array[Double] = Polyhedral.normalize(p)
-
-  private def crossV(a: Array[Double], b: Array[Double]): Array[Double] =
-    Polyhedral.cross(a, b)
-
-  private def dotV(a: Array[Double], b: Array[Double]): Double = Polyhedral.dot(a, b)
+  // shared vector algebra lives in [[Polyhedral]]
 
   private def addScaled(a: Array[Double], ka: Double, b: Array[Double], kb: Double) =
     Array(a(0) * ka + b(0) * kb, a(1) * ka + b(1) * kb, a(2) * ka + b(2) * kb)
@@ -67,12 +55,12 @@ object Butterfly {
                                        baseParents: Array[Int]): TruncatedFaces = {
     val oct = octahedron
     val hexes: Array[Array[Array[Double]]] = oct.map { face =>
-      val vectors = face.map(d2v)
+      val vectors = face.map(p => degreesToVector(p(0), p(1)))
       val hexagon = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
       var a = vectors.last
       vectors.foreach { b =>
-        hexagon += v2d(norm(addScaled(a, edgeWeight, b, vertexWeight)))
-        hexagon += v2d(norm(addScaled(b, edgeWeight, a, vertexWeight)))
+        hexagon += vectorToDegreesArr(normalize(addScaled(a, edgeWeight, b, vertexWeight)))
+        hexagon += vectorToDegreesArr(normalize(addScaled(b, edgeWeight, a, vertexWeight)))
         a = b
       }
       hexagon.toArray
@@ -82,7 +70,7 @@ object Butterfly {
     val faces = scala.collection.mutable.ArrayBuffer(hexes.toSeq: _*)
     faces.foreach { face =>
       face.indices.foreach { i =>
-        val v = d2v(face(i))
+        val v = degreesToVector(face(i)(0), face(i)(1))
         val key = f"${v(0)}%.12f,${v(1)}%.12f,${v(2)}%.12f"
         index.get(key) match {
           case Some(p) => face(i) = p
@@ -92,7 +80,9 @@ object Butterfly {
     }
     val cornerNormals = hexes.map { hexagon =>
       Array.tabulate(3) { i =>
-        crossV(d2v(hexagon((i * 2 + 2) % 6)), d2v(hexagon((i * 2 + 1) % 6)))
+        val a = hexagon((i * 2 + 2) % 6)
+        val b = hexagon((i * 2 + 1) % 6)
+        cross(degreesToVector(a(0), a(1)), degreesToVector(b(0), b(1)))
       }
     }
     val parents = scala.collection.mutable.ArrayBuffer(baseParents.toSeq: _*)
@@ -119,9 +109,9 @@ object Butterfly {
       else if (lam < math.Pi / 2) { if (phi < 0) 3 else 1 }
       else { if (phi < 0) 7 else 5 }
     val normals = cornerNormals(face)
-    if (dotV(normals(0), p) < 0) 8 + 3 * face
-    else if (dotV(normals(1), p) < 0) 8 + 3 * face + 1
-    else if (dotV(normals(2), p) < 0) 8 + 3 * face + 2
+    if (dot(normals(0), p) < 0) 8 + 3 * face
+    else if (dot(normals(1), p) < 0) 8 + 3 * face + 1
+    else if (dot(normals(2), p) < 0) 8 + 3 * face + 2
     else face
   }
 

@@ -334,16 +334,16 @@ object Crs {
   final case class NarukawaProj(lon0Deg: Double = 0.0) extends Proj {
     def forward(lonDeg: Double, latDeg: Double): (Double, Double) = {
       val (x, y) = Narukawa.forward(
-        Narukawa.normalizeRadians((lonDeg - lon0Deg) * D2R), latDeg * D2R)
+        Polyhedral.normalizeRadians((lonDeg - lon0Deg) * D2R), latDeg * D2R)
       (x * A, y * A)
     }
     def inverse(x: Double, y: Double): (Double, Double) = {
       val (lam, phi) = Narukawa.inverse(x / A, y / A)
-      (Narukawa.normalizeRadians(lam + lon0Deg * D2R) * R2D, phi * R2D)
+      (Polyhedral.normalizeRadians(lam + lon0Deg * D2R) * R2D, phi * R2D)
     }
     /** Seam-cut region = the layout-piece id (facet/sector/oob/fold/wrap). */
     def regionAt(lonDeg: Double, latDeg: Double): Int =
-      Narukawa.regionKey(Narukawa.normalizeRadians((lonDeg - lon0Deg) * D2R),
+      Narukawa.regionKey(Polyhedral.normalizeRadians((lonDeg - lon0Deg) * D2R),
         latDeg * D2R)
   }
 

@@ -1,5 +1,7 @@
 package graft.geom
 
+import Polyhedral.{clamp, cross, dot, normalizeRadians, radiansToVector}
+
 /**
  * Narukawa's 2022 AuthaGraph approximation — the reference's
  * `narukawa2022` (`/root/reference/src/crs/mapshaper-narukawa2022.mjs`;
@@ -47,21 +49,7 @@ object Narukawa {
     Facet(3, -3, 0, -AsinOneThird, -2 * math.Pi / 3, math.Pi, math.Pi / 6))
 
   // ------------------------------------------------------------ orientation
-  // shared vector algebra lives in [[Polyhedral]]; local aliases only
-
-  @inline private def dot(a: Array[Double], b: Array[Double]): Double =
-    Polyhedral.dot(a, b)
-
-  private def cross(a: Array[Double], b: Array[Double]): Array[Double] =
-    Polyhedral.cross(a, b)
-
-  private def radiansToVector(lam: Double, phi: Double): Array[Double] =
-    Polyhedral.radiansToVector(lam, phi)
-
-  private def clamp(v: Double, lo: Double, hi: Double): Double =
-    Polyhedral.clamp(v, lo, hi)
-
-  def normalizeRadians(lam0: Double): Double = Polyhedral.normalizeRadians(lam0)
+  // shared vector algebra lives in [[Polyhedral]]
 
   /** Basis aligning the published solid with the canonical facet frame. */
   private val (orientX, orientY, orientZ) = {

@@ -14,8 +14,11 @@ package graft.geom
  *  - weighted metric `(1 - 0.7*cos) * area` favoring ~120° angles
  *    (visvalingam.mjs:96-127).
  *
- * This is a per-arc kernel: on Spark, each arc is one row `(arcId, xx, yy)` and
- * the kernel runs inside a map — embarrassingly parallel, no shuffle.
+ * Planar and spherical paths share one core: one method dispatch, one
+ * Visvalingam loop, one Douglas-Peucker recursion and one vertex filter,
+ * reading the path through `Vertices`. This is a per-path kernel: on Spark,
+ * each path is one row `(id, ring)` and the kernel runs inside a map —
+ * embarrassingly parallel, no shuffle.
  */
 object Simplify {
 
@@ -26,13 +29,81 @@ object Simplify {
   case object DouglasPeucker extends Method
 
   /**
-   * Compute per-vertex removal thresholds for one arc. Endpoints = +Inf.
+   * Planar per-vertex removal thresholds for one path. Endpoints = +Inf.
    * Returned array has the same length as the input.
    */
-  def thresholds(xx: Array[Double], yy: Array[Double], method: Method): Array[Double] = method match {
-    case Visvalingam         => scaled(visvalingam(xx, yy, standardMetric))
-    case WeightedVisvalingam => scaled(visvalingam(xx, yy, weightedMetric(0.7)))
-    case DouglasPeucker      => douglasPeucker(xx, yy)
+  def thresholds(xx: Array[Double], yy: Array[Double], method: Method): Array[Double] =
+    thresholdsOf(xx.length, method, new Vertices {
+      def area(a: Int, b: Int, c: Int): Double =
+        Geom.triangleArea(xx(a), yy(a), xx(b), yy(b), xx(c), yy(c))
+      def cosine(a: Int, b: Int, c: Int): Double =
+        Geom.cosine(xx(a), yy(a), xx(b), yy(b), xx(c), yy(c))
+      def segDistance(p: Int, a: Int, b: Int): Double = {
+        val dx = xx(b) - xx(a)
+        val dy = yy(b) - yy(a)
+        val len2 = dx * dx + dy * dy
+        if (len2 == 0) Geom.distance(xx(p), yy(p), xx(a), yy(a))
+        else math.abs((xx(p) - xx(a)) * dy - (yy(p) - yy(a)) * dx) / math.sqrt(len2)
+      }
+    })
+
+  /**
+   * Spherical thresholds for an unprojected lon/lat path — the reference's
+   * default for geographic data (`mapshaper-simplify.mjs:91-120`): vertices
+   * go to XYZ on the WGS84-radius sphere and the SAME kernels run with 3D
+   * metrics, so thresholds are in meters and behave correctly at poles and
+   * near the antimeridian (where planar lon/lat geometry is distorted).
+   * Douglas-Peucker measures the distance to the chord line in 3D.
+   */
+  def sphericalThresholds(lon: Array[Double], lat: Array[Double], method: Method): Array[Double] = {
+    val n = lon.length
+    val xx = new Array[Double](n)
+    val yy = new Array[Double](n)
+    val zz = new Array[Double](n)
+    val xyz = new Array[Double](3)
+    var i = 0
+    while (i < n) {
+      Geom.lngLatToXYZ(lon(i), lat(i), xyz)
+      xx(i) = xyz(0); yy(i) = xyz(1); zz(i) = xyz(2)
+      i += 1
+    }
+    thresholdsOf(n, method, new Vertices {
+      def area(a: Int, b: Int, c: Int): Double =
+        Geom.triangleArea3D(xx(a), yy(a), zz(a), xx(b), yy(b), zz(b), xx(c), yy(c), zz(c))
+      def cosine(a: Int, b: Int, c: Int): Double =
+        Geom.cosine3D(xx(a), yy(a), zz(a), xx(b), yy(b), zz(b), xx(c), yy(c), zz(c))
+      def segDistance(p: Int, a: Int, b: Int): Double = {
+        val ux = xx(b) - xx(a); val uy = yy(b) - yy(a); val uz = zz(b) - zz(a)
+        val vx = xx(p) - xx(a); val vy = yy(p) - yy(a); val vz = zz(p) - zz(a)
+        val len2 = ux * ux + uy * uy + uz * uz
+        if (len2 == 0) Geom.distance3D(xx(p), yy(p), zz(p), xx(a), yy(a), zz(a))
+        else {
+          val cx = uy * vz - uz * vy
+          val cy = uz * vx - ux * vz
+          val cz = ux * vy - uy * vx
+          math.sqrt((cx * cx + cy * cy + cz * cz) / len2)
+        }
+      }
+    })
+  }
+
+  /** A path's geometry as the kernels read it, by vertex index: planar
+   * (x, y) or XYZ on the sphere. */
+  private trait Vertices {
+    /** Area of the triangle (a, b, c). */
+    def area(a: Int, b: Int, c: Int): Double
+    /** Cosine of the angle at b, clamped to [-1, 1]. */
+    def cosine(a: Int, b: Int, c: Int): Double
+    /** Distance from p to the line through a and b. */
+    def segDistance(p: Int, a: Int, b: Int): Double
+  }
+
+  /** The one method dispatch, for planar and spherical paths alike. */
+  private def thresholdsOf(n: Int, method: Method, v: Vertices): Array[Double] = method match {
+    case Visvalingam         => scaled(visvalingamIdx(n, v.area))
+    case WeightedVisvalingam =>
+      scaled(visvalingamIdx(n, (b, c, d) => weighted(0.7, v.area(b, c, d), v.cosine(b, c, d))))
+    case DouglasPeucker      => douglasPeuckerIdx(n, v)
   }
 
   type Metric = (Double, Double, Double, Double, Double, Double) => Double
@@ -40,11 +111,11 @@ object Simplify {
   val standardMetric: Metric = Geom.triangleArea
 
   def weightedMetric(k: Double): Metric =
-    (ax, ay, bx, by, cx, cy) => {
-      val area = Geom.triangleArea(ax, ay, bx, by, cx, cy)
-      val cos = Geom.cosine(ax, ay, bx, by, cx, cy)
-      (1.0 - cos * k) * area
-    }
+    (ax, ay, bx, by, cx, cy) =>
+      weighted(k, Geom.triangleArea(ax, ay, bx, by, cx, cy), Geom.cosine(ax, ay, bx, by, cx, cy))
+
+  /** The weighted metric: `area` scaled to favor angles near 120°. */
+  @inline private def weighted(k: Double, area: Double, cos: Double): Double = (1.0 - cos * k) * area
 
   /** Convert area thresholds to linear equivalents (interior vertices only). */
   private def scaled(kk: Array[Double]): Array[Double] = {
@@ -56,13 +127,14 @@ object Simplify {
     kk
   }
 
-  /** Core Visvalingam pass (mirrors `calcVisvalingam`). */
+  /** Raw (unscaled) planar Visvalingam thresholds under `metric` (mirrors
+   * `calcVisvalingam`). */
   def visvalingam(xx: Array[Double], yy: Array[Double], metric: Metric): Array[Double] =
     visvalingamIdx(xx.length,
       (b, c, d) => metric(xx(b), yy(b), xx(c), yy(c), xx(d), yy(d)))
 
-  /** Shared min-heap Visvalingam loop over vertex INDICES — the 2D and 3D
-   * (spherical) variants differ only in the metric closure. */
+  /** The min-heap Visvalingam loop over vertex INDICES — planar and
+   * spherical paths differ only in the metric. */
   private def visvalingamIdx(n: Int, metricAt: (Int, Int, Int) => Double): Array[Double] = {
     val kk = new Array[Double](n)
     if (n == 0) return kk
@@ -99,45 +171,12 @@ object Simplify {
     kk
   }
 
-  // ------------------------------------------------ spherical (3D) variant
-
-  type Metric3 = (Double, Double, Double, Double, Double, Double,
-    Double, Double, Double) => Double
-
-  val standardMetric3D: Metric3 = Geom.triangleArea3D
-
-  def weightedMetric3D(k: Double): Metric3 =
-    (ax, ay, az, bx, by, bz, cx, cy, cz) => {
-      val area = Geom.triangleArea3D(ax, ay, az, bx, by, bz, cx, cy, cz)
-      val cos = Geom.cosine3D(ax, ay, az, bx, by, bz, cx, cy, cz)
-      (1.0 - cos * k) * area
-    }
-
-  def visvalingam3D(xx: Array[Double], yy: Array[Double], zz: Array[Double],
-                    metric: Metric3): Array[Double] =
-    visvalingamIdx(xx.length, (b, c, d) =>
-      metric(xx(b), yy(b), zz(b), xx(c), yy(c), zz(c), xx(d), yy(d), zz(d)))
-
-  /** DP thresholds in 3D: point-to-chord distance on the sphere's chord. */
-  def douglasPeucker3D(xx: Array[Double], yy: Array[Double], zz: Array[Double]): Array[Double] = {
-    val n = xx.length
+  /** Douglas-Peucker thresholds: max distance to the chord at split vertices. */
+  private def douglasPeuckerIdx(n: Int, v: Vertices): Array[Double] = {
     val kk = new Array[Double](n)
     if (n < 3) { var i = 0; while (i < n) { kk(i) = Double.PositiveInfinity; i += 1 }; return kk }
     kk(0) = Double.PositiveInfinity
     kk(n - 1) = Double.PositiveInfinity
-
-    def perp3(p: Int, a: Int, b: Int): Double = {
-      val ux = xx(b) - xx(a); val uy = yy(b) - yy(a); val uz = zz(b) - zz(a)
-      val vx = xx(p) - xx(a); val vy = yy(p) - yy(a); val vz = zz(p) - zz(a)
-      val len2 = ux * ux + uy * uy + uz * uz
-      if (len2 == 0) Geom.distance3D(xx(p), yy(p), zz(p), xx(a), yy(a), zz(a))
-      else {
-        val cx = uy * vz - uz * vy
-        val cy = uz * vx - ux * vz
-        val cz = ux * vy - uy * vx
-        math.sqrt((cx * cx + cy * cy + cz * cz) / len2)
-      }
-    }
 
     def seg(lo: Int, hi: Int, enclosing: Double): Unit = {
       if (hi - lo < 2) return
@@ -145,10 +184,11 @@ object Simplify {
       var maxI = -1
       var i = lo + 1
       while (i < hi) {
-        val d = perp3(i, lo, hi)
+        val d = v.segDistance(i, lo, hi)
         if (d > maxD) { maxD = d; maxI = i }
         i += 1
       }
+      // cap at enclosing threshold to keep thresholds monotone along recursion
       val t = math.min(maxD, enclosing)
       kk(maxI) = t
       seg(lo, maxI, t)
@@ -156,32 +196,6 @@ object Simplify {
     }
     seg(0, n - 1, Double.PositiveInfinity)
     kk
-  }
-
-  /**
-   * Spherical thresholds for an unprojected lon/lat path — the reference's
-   * default for geographic data (`mapshaper-simplify.mjs:91-120`): vertices
-   * go to XYZ on the WGS84-radius sphere and the SAME kernels run with 3D
-   * metrics, so thresholds are in meters and behave correctly at poles and
-   * near the antimeridian (where planar lon/lat geometry is distorted).
-   */
-  def sphericalThresholds(lon: Array[Double], lat: Array[Double], method: Method): Array[Double] = {
-    val n = lon.length
-    val xx = new Array[Double](n)
-    val yy = new Array[Double](n)
-    val zz = new Array[Double](n)
-    val p = new Array[Double](3)
-    var i = 0
-    while (i < n) {
-      Geom.lngLatToXYZ(lon(i), lat(i), p)
-      xx(i) = p(0); yy(i) = p(1); zz(i) = p(2)
-      i += 1
-    }
-    method match {
-      case Visvalingam         => scaled(visvalingam3D(xx, yy, zz, standardMetric3D))
-      case WeightedVisvalingam => scaled(visvalingam3D(xx, yy, zz, weightedMetric3D(0.7)))
-      case DouglasPeucker      => douglasPeucker3D(xx, yy, zz)
-    }
   }
 
   /**
@@ -214,63 +228,49 @@ object Simplify {
     kk
   }
 
-  /** Douglas-Peucker thresholds: max perpendicular distance at split vertices. */
-  def douglasPeucker(xx: Array[Double], yy: Array[Double]): Array[Double] = {
-    val n = xx.length
-    val kk = new Array[Double](n)
-    if (n < 3) { var i = 0; while (i < n) { kk(i) = Double.PositiveInfinity; i += 1 }; return kk }
-    kk(0) = Double.PositiveInfinity
-    kk(n - 1) = Double.PositiveInfinity
-
-    def seg(lo: Int, hi: Int, enclosing: Double): Unit = {
-      if (hi - lo < 2) return
-      var maxD = -1.0
-      var maxI = -1
-      var i = lo + 1
-      while (i < hi) {
-        val d = perpDistance(xx(i), yy(i), xx(lo), yy(lo), xx(hi), yy(hi))
-        if (d > maxD) { maxD = d; maxI = i }
-        i += 1
-      }
-      // cap at enclosing threshold to keep thresholds monotone along recursion
-      val t = math.min(maxD, enclosing)
-      kk(maxI) = t
-      seg(lo, maxI, t)
-      seg(maxI, hi, t)
-    }
-    seg(0, n - 1, Double.PositiveInfinity)
-    kk
-  }
-
-  private def perpDistance(px: Double, py: Double, ax: Double, ay: Double, bx: Double, by: Double): Double = {
-    val dx = bx - ax
-    val dy = by - ay
-    val len2 = dx * dx + dy * dy
-    if (len2 == 0) Geom.distance(px, py, ax, ay)
-    else math.abs((px - ax) * dy - (py - ay) * dx) / math.sqrt(len2)
-  }
-
-  /** Keep vertices whose threshold ≥ interval; endpoints always kept. */
-  def filter(xx: Array[Double], yy: Array[Double], kk: Array[Double], interval: Double): (Array[Double], Array[Double]) = {
-    val bx = Array.newBuilder[Double]
-    val by = Array.newBuilder[Double]
+  /**
+   * The vertices of a flat path (`x0, y0, x1, y1, ...`) whose threshold in
+   * `kk` is at least `interval`; endpoints (+Inf) always survive a finite
+   * interval. With `keepShapes` (the reference's keep-shapes repair), a
+   * closed ring of at least 4 vertices that would keep fewer than 4 keeps
+   * its highest-threshold interior vertices instead (ties -> lower index);
+   * open paths are never restored.
+   */
+  def filter(flat: Array[Double], kk: Array[Double], interval: Double,
+             keepShapes: Boolean): Array[Double] = {
+    val n = kk.length
+    val keep = new Array[Boolean](n)
+    var kept = 0
     var i = 0
-    while (i < xx.length) {
-      if (kk(i) >= interval) { bx += xx(i); by += yy(i) }
+    while (i < n) {
+      if (kk(i) >= interval) { keep(i) = true; kept += 1 }
       i += 1
     }
-    (bx.result(), by.result())
+    if (keepShapes && kept < 4 && n >= 4 &&
+        flat(0) == flat(flat.length - 2) && flat(1) == flat(flat.length - 1)) {
+      val order = (1 until n - 1).sortBy(j => (-kk(j), j))
+      var k = 0
+      while (kept < 4 && k < order.length) {
+        if (!keep(order(k))) { keep(order(k)) = true; kept += 1 }
+        k += 1
+      }
+    }
+    val out = new Array[Double](kept * 2)
+    var o = 0
+    i = 0
+    while (i < n) {
+      if (keep(i)) { out(o) = flat(i * 2); out(o + 1) = flat(i * 2 + 1); o += 2 }
+      i += 1
+    }
+    out
   }
 
-  /**
-   * Array-backed binary min-heap over external values, with position tracking
-   * for O(log n) `update` (mirrors `mapshaper-heap.mjs`).
-   */
-  /** Index-addressable binary min-heap. Ties on value break by smaller item
-   * id, so the removal ORDER (and with it the clamped threshold sequence) is
-   * fully deterministic — lattice-derived coordinates produce exact area
-   * ties, and an arbitrary heap order would make simplification output
-   * depend on heap internals. */
+  /** Index-addressable binary min-heap over external values, with position
+   * tracking for O(log n) `update` (mirrors `mapshaper-heap.mjs`). Ties on
+   * value break by smaller item id, so the removal ORDER (and with it the
+   * clamped threshold sequence) is fully deterministic — lattice-derived
+   * coordinates produce exact area ties, and an arbitrary heap order would
+   * make simplification output depend on heap internals. */
   final class MinHeap(values: Array[Double]) {
     private val n = values.length
     private val heap = new Array[Int](n)   // heap slot -> item id
@@ -314,14 +314,12 @@ object Simplify {
       val id = heap(i)
       while (i > 0) {
         val p = (i - 1) / 2
-        if (!lt(id, heap(p))) return swapDone(i, id)
+        if (!lt(id, heap(p))) return moveTo(id, i)
         moveTo(heap(p), i)
         i = p
       }
       moveTo(id, i)
     }
-
-    @inline private def swapDone(i: Int, id: Int): Unit = moveTo(id, i)
 
     private def down(i0: Int): Unit = {
       var i = i0

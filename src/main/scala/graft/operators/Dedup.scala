@@ -267,16 +267,12 @@ object Dedup {
     * partial aggregation for the min-id winners. The removal list (loser
     * ids — one per *duplicate* row, 8 bytes each, orders of magnitude
     * smaller than the corpus) is broadcast into a left-anti join, so the
-    * surviving rows are filtered in place without moving. At a duplicate
-    * cardinality too large to broadcast, pass `broadcastLosers = false` to
-    * fall back to a shuffled anti-join keyed by the id — the corpus then
-    * moves once, keyed and sorted by an 8-byte id, still never by the text.
+    * surviving rows are filtered in place without moving.
     *
     * 128 bits + length makes a false merge (two different texts dropped as
     * duplicates) a ~2^-128 event — negligible at 10^12 documents.
     */
-  def exact(df: DataFrame, idCol: String, textCol: String,
-            broadcastLosers: Boolean = true): DataFrame = {
+  def exact(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // length(NULL) is NULL and the 3-key join is not null-safe — coalesce to
     // a sentinel so NULL-text rows form one dedup group (the window form's
     // partitionBy semantics)
@@ -289,7 +285,7 @@ object Dedup {
     val losers = proj.join(winners, Seq("_h1", "_h2", "_len"))
       .filter(col("_eid") =!= col("_keep"))
       .select("_eid")
-    val removal = if (broadcastLosers) broadcast(losers) else losers
+    val removal = broadcast(losers)
     df.join(removal, col(idCol) === removal("_eid"), "left_anti")
   }
 

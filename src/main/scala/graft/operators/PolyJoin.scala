@@ -82,8 +82,10 @@ object PolyJoin {
   /**
    * FULLY DISTRIBUTED polygon→polygon overlap: both layers keyed by covering
    * cells of their shape bboxes, candidate (target, source) pairs from the
-   * cell equi-join (bbox-filtered, deduped on ids only — rings rejoined per
-   * surviving pair), then area(t ∩ s) per pair via the pairwise clip kernel.
+   * cell equi-join (every pair sharing a cell, with no bbox test; deduped on
+   * ids only — rings rejoined per candidate pair), then area(t ∩ s) per pair
+   * via the pairwise clip kernel; a pair that does not overlap has area 0
+   * and is dropped.
    * Pairwise intersection areas equal the mosaic's shared tile sums, so this
    * matches [[overlapAreas]] exactly while scaling horizontally: no driver
    * kernel, no global mosaic.

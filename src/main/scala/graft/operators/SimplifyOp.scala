@@ -19,10 +19,25 @@ import graft.geom.{Geom, Simplify}
 object SimplifyOp {
 
   /** Per-vertex thresholds column added to a (id, ring: Array[Double]) frame. */
-  def withThresholds(rings: DataFrame, ringCol: String, method: Simplify.Method): DataFrame = {
+  def withThresholds(rings: DataFrame, ringCol: String, method: Simplify.Method): DataFrame =
+    thresholdsColumn(rings, ringCol)(Simplify.thresholds(_, _, method))
+
+  /** Spherical per-vertex thresholds (meters) for lon/lat rings, with
+   * world-edge protection — the reference's DEFAULT for unprojected data
+   * (`mapshaper-simplify.mjs:91-120`): vertices go to XYZ on the WGS84
+   * sphere and the same kernels run with 3D metrics, so near-pole and
+   * antimeridian geometry simplifies by true ground distance. */
+  def withSphericalThresholds(rings: DataFrame, ringCol: String,
+                              method: Simplify.Method): DataFrame =
+    thresholdsColumn(rings, ringCol) { (lon, lat) =>
+      Simplify.protectWorldEdges(lon, lat, Simplify.sphericalThresholds(lon, lat, method))
+    }
+
+  private def thresholdsColumn(rings: DataFrame, ringCol: String)(
+      kernel: (Array[Double], Array[Double]) => Array[Double]): DataFrame = {
     val thrUdf = udf { (flat: Seq[Double]) =>
       val (xx, yy) = Geom.unzipRing(flat.toArray)
-      Simplify.thresholds(xx, yy, method)
+      kernel(xx, yy)
     }
     rings.withColumn("thresholds", thrUdf(col(ringCol)))
   }
@@ -30,19 +45,66 @@ object SimplifyOp {
   /**
    * Simplify all rings to retain ~`pct` of interior vertices globally (the
    * non-destructive LOD model: thresholds computed once, filtered at read).
-   * Output: input columns + n_before, n_after, interval.
+   * Output: input columns + simplified, n_before, n_after, interval.
    */
   def simplify(spark: SparkSession, rings: DataFrame, ringCol: String, pct: Double,
                method: Simplify.Method = Simplify.WeightedVisvalingam,
-               exactPct: Boolean = false): DataFrame = {
-    val withThr = Materialize(withThresholds(rings, ringCol, method), eager = false)
+               exactPct: Boolean = false): DataFrame =
+    pipeline(spark, withThresholds(rings, ringCol, method), ringCol, pct, exactPct,
+      weightCol = None, keepShapes = false)
+
+  /**
+   * Variable simplification: per-ring intensity from a weight column in [0,1]
+   * (the reference's `-simplify variable=`,
+   * `src/simplify/mapshaper-variable-simplify.mjs`): each ring filters at
+   * `interval * weight` — weight 0 keeps everything, 1 applies the full
+   * global interval. Output: input columns + simplified, n_before, n_after.
+   */
+  def simplifyVariable(spark: SparkSession, rings: DataFrame, ringCol: String,
+                       weightCol: String, pct: Double,
+                       method: Simplify.Method = Simplify.WeightedVisvalingam,
+                       exactPct: Boolean = false): DataFrame =
+    pipeline(spark, withThresholds(rings, ringCol, method), ringCol, pct, exactPct,
+      weightCol = Some(weightCol), keepShapes = false)
+
+  /**
+   * Spherical `-simplify` with `keep-shapes` ring protection: retain ~`pct`
+   * of interior vertices globally (interval is a distributed quantile over
+   * interior thresholds, in meters); with keepShapes, a closed ring that
+   * would collapse below 4 vertices keeps its top-threshold interior
+   * vertices instead of vanishing (the reference's keep-shapes repair).
+   * Output: input columns + simplified, n_before, n_after, interval.
+   */
+  def simplifySpherical(spark: SparkSession, rings: DataFrame, ringCol: String, pct: Double,
+                        method: Simplify.Method = Simplify.WeightedVisvalingam,
+                        keepShapes: Boolean = true): DataFrame =
+    pipeline(spark, withSphericalThresholds(rings, ringCol, method), ringCol, pct,
+      exactPct = false, weightCol = None, keepShapes = keepShapes)
+
+  /**
+   * The one `-simplify` pipeline over a frame with a `thresholds` column:
+   * materialize it, take the global interval, keep each ring's vertices
+   * whose threshold is at least `interval * clamp(w)`. Without a weight
+   * column `w` is 1.0 (exact: the cutoff is the interval itself) and the
+   * one global interval is reported as a column.
+   */
+  private def pipeline(spark: SparkSession, thresholded: DataFrame, ringCol: String,
+                       pct: Double, exactPct: Boolean, weightCol: Option[String],
+                       keepShapes: Boolean): DataFrame = {
+    val withThr = Materialize(thresholded, eager = false)
     val interval = globalInterval(spark, withThr, pct, exactPct)
-    val filterUdf = udf((flat: Seq[Double], thr: Seq[Double]) => keepAbove(flat, thr, interval))
-    withThr
-      .withColumn("simplified", filterUdf(col(ringCol), col("thresholds")))
+    // `w` stays a Double argument clamped here: a null weight gives a null
+    // ring, a NaN weight keeps no vertex
+    val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double], w: Double) =>
+      Simplify.filter(flat.toArray, thr.toArray, interval * math.max(0.0, math.min(1.0, w)),
+        keepShapes)
+    }
+    val out = withThr
+      .withColumn("simplified",
+        filterUdf(col(ringCol), col("thresholds"), weightCol.fold(lit(1.0))(col)))
       .withColumn("n_before", (size(col(ringCol)) / 2).cast("long"))
       .withColumn("n_after", (size(col("simplified")) / 2).cast("long"))
-      .withColumn("interval", lit(interval))
+    (if (weightCol.isEmpty) out.withColumn("interval", lit(interval)) else out)
       .drop("thresholds")
   }
 
@@ -56,17 +118,6 @@ object SimplifyOp {
     if (pct >= 1.0) 0.0
     else if (exactPct) exactRankSelect(spark, interior, pct)
     else interior.stat.approxQuantile("z", Array(1.0 - pct), 1e-4).headOption.getOrElse(0.0)
-  }
-
-  /** The vertices of a flat ring whose threshold is at least `interval`. */
-  private def keepAbove(flat: Seq[Double], thr: Seq[Double], interval: Double): Array[Double] = {
-    val kept = Array.newBuilder[Double]
-    var i = 0
-    while (i < thr.length) {
-      if (thr(i) >= interval) { kept += flat(i * 2); kept += flat(i * 2 + 1) }
-      i += 1
-    }
-    kept.result()
   }
 
   /**
@@ -84,91 +135,6 @@ object SimplifyOp {
     val k = math.min(n - 1, math.floor((1.0 - pct) * n).toLong)
     values.orderBy("z").select("z").as[Double].rdd
       .zipWithIndex().filter(_._2 == k).map(_._1).first()
-  }
-
-  /**
-   * Variable simplification: per-ring intensity from a weight column in [0,1]
-   * (the reference's `-simplify variable=`,
-   * `src/simplify/mapshaper-variable-simplify.mjs`): each ring filters at
-   * `interval * weight` — weight 0 keeps everything, 1 applies the full
-   * global interval.
-   */
-  def simplifyVariable(spark: SparkSession, rings: DataFrame, ringCol: String,
-                       weightCol: String, pct: Double,
-                       method: Simplify.Method = Simplify.WeightedVisvalingam,
-                       exactPct: Boolean = false): DataFrame = {
-    val withThr = Materialize(withThresholds(rings, ringCol, method), eager = false)
-    val interval = globalInterval(spark, withThr, pct, exactPct)
-    val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double], w: Double) =>
-      keepAbove(flat, thr, interval * math.max(0.0, math.min(1.0, w)))
-    }
-    withThr
-      .withColumn("simplified", filterUdf(col(ringCol), col("thresholds"), col(weightCol)))
-      .withColumn("n_before", (size(col(ringCol)) / 2).cast("long"))
-      .withColumn("n_after", (size(col("simplified")) / 2).cast("long"))
-      .drop("thresholds")
-  }
-
-  /** Spherical per-vertex thresholds (meters) for lon/lat rings, with
-   * world-edge protection — the reference's DEFAULT for unprojected data
-   * (`mapshaper-simplify.mjs:91-120`): vertices go to XYZ on the WGS84
-   * sphere and the same kernels run with 3D metrics, so near-pole and
-   * antimeridian geometry simplifies by true ground distance. */
-  def withSphericalThresholds(rings: DataFrame, ringCol: String,
-                              method: Simplify.Method): DataFrame = {
-    val thrUdf = udf { (flat: Seq[Double]) =>
-      val (lon, lat) = Geom.unzipRing(flat.toArray)
-      Simplify.protectWorldEdges(lon, lat,
-        Simplify.sphericalThresholds(lon, lat, method))
-    }
-    rings.withColumn("thresholds", thrUdf(col(ringCol)))
-  }
-
-  /**
-   * Spherical `-simplify` with `keep-shapes` ring protection: retain ~`pct`
-   * of interior vertices globally (interval is a distributed quantile over
-   * interior thresholds, in meters); with keepShapes, a closed ring that
-   * would collapse below 4 vertices keeps its top-threshold interior
-   * vertices instead of vanishing (the reference's keep-shapes repair).
-   */
-  def simplifySpherical(spark: SparkSession, rings: DataFrame, ringCol: String, pct: Double,
-                        method: Simplify.Method = Simplify.WeightedVisvalingam,
-                        keepShapes: Boolean = true): DataFrame = {
-    val withThr = Materialize(withSphericalThresholds(rings, ringCol, method), eager = false)
-    val interval = globalInterval(spark, withThr, pct, exactPct = false)
-    val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double]) =>
-      val n = thr.length
-      val keep = new Array[Boolean](n)
-      var kept = 0
-      var i = 0
-      while (i < n) {
-        if (thr(i) >= interval) { keep(i) = true; kept += 1 }
-        i += 1
-      }
-      val closed = n >= 2 && flat(0) == flat(flat.length - 2) && flat(1) == flat(flat.length - 1)
-      if (keepShapes && closed && kept < 4 && n >= 4) {
-        // restore the highest-threshold interior vertices (ties -> lower idx)
-        val order = (1 until n - 1).sortBy(j => (-thr(j), j))
-        var k = 0
-        while (kept < 4 && k < order.length) {
-          if (!keep(order(k))) { keep(order(k)) = true; kept += 1 }
-          k += 1
-        }
-      }
-      val out = Array.newBuilder[Double]
-      i = 0
-      while (i < n) {
-        if (keep(i)) { out += flat(i * 2); out += flat(i * 2 + 1) }
-        i += 1
-      }
-      out.result()
-    }
-    withThr
-      .withColumn("simplified", filterUdf(col(ringCol), col("thresholds")))
-      .withColumn("n_before", (size(col(ringCol)) / 2).cast("long"))
-      .withColumn("n_after", (size(col("simplified")) / 2).cast("long"))
-      .withColumn("interval", lit(interval))
-      .drop("thresholds")
   }
 
   /** `-filter-islands` / `-filter-slivers`: drop rings below an area floor. */

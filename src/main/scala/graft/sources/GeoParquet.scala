@@ -17,7 +17,8 @@ import org.apache.spark.sql.functions._
  * ("WKB"), geometry_types, bbox.
  *
  * Geometry is encoded as standard WKB (little-endian) in a binary column —
- * [[wkbPoint]] / [[wkbPolygon]] build it as column expressions/UDFs.
+ * [[wkbPoint]] builds it as a column expression, [[wkbPolygonBytes]] as the
+ * bytes of one ring.
  */
 object GeoParquet {
 

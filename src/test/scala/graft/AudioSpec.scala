@@ -57,10 +57,7 @@ class AudioSpec extends SparkSuite {
     val readSchema = plan.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
     assert(readSchema.contains("audio_id") && readSchema.contains("bytes"))
     assert(!readSchema.contains("caption"), readSchema)
-    val exch = feats.queryExecution.executedPlan.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-        e.output.map(_.name)
-    }
+    val exch = exchangeOutputs(feats)
     assert(exch.forall(!_.contains("bytes")), exch.toString)
   }
 }

@@ -120,7 +120,7 @@ class GeomSpec extends AnyFunSuite {
     assert(kk(0).isPosInfinity && kk(n - 1).isPosInfinity)
     // filtering at any interval keeps endpoints and yields decreasing counts
     val counts = Seq(0.0, 0.5, 1.0, 2.0, 1e9).map { iv =>
-      val (fx, _) = Simplify.filter(xx, yy, kk, iv)
+      val (fx, _) = Geom.unzipRing(Simplify.filter(Geom.zipRing(xx, yy), kk, iv, keepShapes = false))
       assert(fx.head == xx.head && fx.last == xx.last)
       fx.length
     }

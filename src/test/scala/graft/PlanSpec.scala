@@ -211,13 +211,6 @@ class PlanSpec extends SparkSuite {
     assert(!plan.contains("Exchange"), s"broadcast PIP join must be shuffle-free:\n${plan.take(1500)}")
   }
 
-  /** Every shuffle's output attribute names in the executed plan. */
-  private def exchangeOutputs(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
-    df.queryExecution.executedPlan.collect {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-        e.output.map(_.name).toSeq
-    }
-
   test("lshTopK probe shuffle is id-only: no exchange carries vectors with buckets") {
     // the shuffle path; under the threshold the driver path answers
     withBroadcastThreshold("-1") {
@@ -298,22 +291,27 @@ class PlanSpec extends SparkSuite {
     val bad = exchangeOutputs(df).filter(_.exists(_.contains("text")))
     assert(bad.isEmpty, s"corpus text rode a dedup shuffle: $bad")
     // and the removal list is broadcast (corpus side never shuffles at all
-    // beyond the (id, h1, h2, len) projection)
+    // beyond the (id, h1, h2, len) projection and the partial `min(_eid)`
+    // buffer of the keeper aggregate)
     val exch = exchangeOutputs(df)
     assert(exch.forall(out => out.forall(n =>
-      n.startsWith("_e") || n.startsWith("_h") || n.startsWith("_len") || n.startsWith("_keep"))),
+      n.startsWith("_e") || n.startsWith("_h") || n.startsWith("_len") || n.startsWith("_keep") ||
+        n == "min")),
       s"unexpected exchange columns: $exch")
   }
 
   test("embeddingPairs probe shuffle is id-only") {
-    import spark.implicits._
-    val rng = new graft.tables.SplitMix64(9)
-    val vecs = (0 until 200).map(i =>
-      (i.toLong, Array.fill(16)(rng.nextDouble().toFloat).toSeq)).toDF("vec_id", "embedding")
-    val df = graft.operators.Dedup.embeddingPairs(spark, vecs, "vec_id", "embedding", 0.9)
-    val bad = exchangeOutputs(df).filter(out =>
-      out.exists(_.contains("_bucket")) && out.exists(n => n == "v" || n == "embedding"))
-    assert(bad.isEmpty, s"vector bytes rode a bucket shuffle: $bad")
+    // the shuffle path; under the threshold the driver path answers
+    withBroadcastThreshold("-1") {
+      import spark.implicits._
+      val rng = new graft.tables.SplitMix64(9)
+      val vecs = (0 until 200).map(i =>
+        (i.toLong, Array.fill(16)(rng.nextDouble().toFloat).toSeq)).toDF("vec_id", "embedding")
+      val df = graft.operators.Dedup.embeddingPairs(spark, vecs, "vec_id", "embedding", 0.9)
+      val bad = exchangeOutputs(df).filter(out =>
+        out.exists(_.contains("_bucket")) && out.exists(n => n == "v" || n == "embedding"))
+      assert(bad.isEmpty, s"vector bytes rode a bucket shuffle: $bad")
+    }
   }
 
   test("-lines edge classification is UDF-free; only edge coords + small attrs shuffle") {

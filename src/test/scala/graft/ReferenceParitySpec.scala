@@ -83,7 +83,8 @@ class ReferenceParitySpec extends AnyFunSuite {
     val xx = Array(0.0, 0.0, 0.1, 0.0, 0.0)
     val yy = Array(0.0, 1.0, 1.1, 1.2, 2.0)
     val kk = graft.geom.Simplify.thresholds(xx, yy, graft.geom.Simplify.WeightedVisvalingam)
-    val (sx, sy) = graft.geom.Simplify.filter(xx, yy, kk, Double.PositiveInfinity)
+    val (sx, sy) = Geom.unzipRing(
+      graft.geom.Simplify.filter(Geom.zipRing(xx, yy), kk, Double.PositiveInfinity, keepShapes = false))
     assert(sx.toSeq == Seq(0.0, 0.0) && sy.toSeq == Seq(0.0, 2.0),
       s"${sx.toSeq} / ${sy.toSeq}")
   }
@@ -94,7 +95,8 @@ class ReferenceParitySpec extends AnyFunSuite {
     val xx = Array(0.0, 0.0, 1.0)
     val yy = Array(0.0, 1.0, 1.0)
     val kk = graft.geom.Simplify.thresholds(xx, yy, graft.geom.Simplify.WeightedVisvalingam)
-    val (sx, sy) = graft.geom.Simplify.filter(xx, yy, kk, Double.PositiveInfinity)
+    val (sx, sy) = Geom.unzipRing(
+      graft.geom.Simplify.filter(Geom.zipRing(xx, yy), kk, Double.PositiveInfinity, keepShapes = false))
     assert(sx.toSeq == Seq(0.0, 1.0) && sy.toSeq == Seq(0.0, 1.0))
   }
 
@@ -103,12 +105,9 @@ class ReferenceParitySpec extends AnyFunSuite {
   // -> [[0,0],[0,2],[2,2],[2,0],[0,0]]
   test("simplify interval=0.5 then dissolve2 yields the reference square") {
     val flat = ring((0, 0), (0, 1), (0.1, 1.1), (0, 1.2), (0, 2), (2, 2), (2, 0), (0, 0))
-    val n = flat.length / 2
-    val xx = Array.tabulate(n)(i => flat(i * 2))
-    val yy = Array.tabulate(n)(i => flat(i * 2 + 1))
+    val (xx, yy) = Geom.unzipRing(flat)
     val kk = graft.geom.Simplify.thresholds(xx, yy, graft.geom.Simplify.WeightedVisvalingam)
-    val (sx, sy) = graft.geom.Simplify.filter(xx, yy, kk, 0.5)
-    val simplified = Array.tabulate(sx.length * 2)(i => if (i % 2 == 0) sx(i / 2) else sy(i / 2))
+    val simplified = graft.geom.Simplify.filter(flat, kk, 0.5, keepShapes = false)
     val out = Overlay.dissolve2(Seq(Seq(simplified)))
     assertRingsMatch(out, Seq(ring((0, 0), (0, 2), (2, 2), (2, 0), (0, 0))))
   }

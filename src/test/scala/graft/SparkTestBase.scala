@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test JVM. */
@@ -30,4 +32,20 @@ abstract class SparkSuite extends AnyFunSuite {
     spark.conf.set(key, v)
     try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  /** Every shuffle's output attribute names in `df`'s physical plan. Under
+   * adaptive execution the plan root is an `AdaptiveSparkPlanExec` leaf, so
+   * the walk goes through `AdaptiveSparkPlanHelper`. A plan without any
+   * shuffle fails here: a "no exchange carries X" check must not pass on an
+   * empty list. */
+  protected def exchangeOutputs(df: DataFrame): Seq[Seq[String]] = {
+    val plan = df.queryExecution.executedPlan
+    val outs = SparkSuite.Aqe.collect(plan) { case e: ShuffleExchangeExec => e.output.map(_.name) }
+    assert(outs.nonEmpty, s"the plan has no shuffle exchange to check:\n$plan")
+    outs
+  }
+}
+
+object SparkSuite {
+  private object Aqe extends AdaptiveSparkPlanHelper
 }
