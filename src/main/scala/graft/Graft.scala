@@ -76,15 +76,18 @@ object Graft {
   /** kNN: for each point, its k nearest other points as
    * (id, rank, neighbor_id, dist2), ranked by (dist2, neighbor_id). Rows with
    * a null id, x or y are dropped first. Answered from a broadcast KD-tree in
-   * one map pass when n * 24 bytes <= `spark.sql.autoBroadcastJoinThreshold`,
-   * else by cell-ring rounds and a brute-force tail; both give the same rows
-   * (see [[graft.operators.Knn]]). */
+   * one map pass when n * 24 bytes <= `spark.sql.autoBroadcastJoinThreshold`
+   * for n points, else by cell-ring rounds and a brute-force tail; both give
+   * the same rows (see [[graft.operators.Knn]]). */
   def knn(spark: SparkSession, points: DataFrame, id: String, x: String, y: String, k: Int): DataFrame =
     Knn.knnJoin(spark, points, id, x, y, k)
 
   /** Radius join: all pairs (a_id < b_id) within `radius`, as
    * (a_id, b_id, dist2). Rows with a null id are dropped first, and two
-   * points that share an id never pair (see [[graft.operators.Knn]]). */
+   * points that share an id never pair. Answered from a broadcast KD-tree in
+   * one map pass under the same size rule as [[knn]] when Spark's size
+   * estimate of the points is within it too, else by a join on neighbouring
+   * cells; both give the same rows (see [[graft.operators.Knn]]). */
   def radiusJoin(spark: SparkSession, points: DataFrame, id: String, x: String, y: String,
                  radius: Double): DataFrame =
     Knn.distanceJoin(spark, points, id, x, y, radius)

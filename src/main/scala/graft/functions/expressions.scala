@@ -199,9 +199,41 @@ case class KnnProbe(first: Expression, second: Expression, third: Expression,
 }
 
 object KnnProbe {
+  /** The fields are never null but declared nullable, as the shuffle paths
+   * declare their columns, so both paths of a join have one schema. */
   val ResultType: DataType = ArrayType(StructType(Seq(
-    StructField("neighbor_id", LongType, nullable = false),
-    StructField("dist2", DoubleType, nullable = false))), containsNull = false)
+    StructField("neighbor_id", LongType),
+    StructField("dist2", DoubleType))), containsNull = false)
+}
+
+/** The points of a broadcast [[PointTree]] within squared distance `r2` of
+ * (x, y) whose id is greater than `id`, as (neighbor_id, dist2) — see
+ * [[graft.index.RadiusSearcher]] for the law. The task's searcher lives in a
+ * mutable state var, as [[KnnProbe]]'s does. */
+case class RadiusProbe(first: Expression, second: Expression, third: Expression,
+                       bc: Broadcast[PointTree], r2: Double) extends TernaryExpression {
+  override def dataType: DataType = KnnProbe.ResultType
+  override def prettyName: String = "radius_probe"
+  override protected def stringArgs: Iterator[Any] = Iterator(first, second, third, r2)
+
+  override protected def nullSafeEval(id: Any, x: Any, y: Any): Any =
+    bc.value.radiusSearcher(r2).probe(id.asInstanceOf[Long], x.asInstanceOf[Double],
+      y.asInstanceOf[Double])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bcRef = ctx.addReferenceObj("radiusBroadcast", bc, classOf[Broadcast[PointTree]].getName)
+    // r2 by its bits: exact for every double, NaN and infinities included
+    val r2Bits = java.lang.Double.doubleToRawLongBits(r2)
+    val sv = ctx.addMutableState("graft.index.RadiusSearcher", "radiusSearcher",
+      v => s"$v = ((graft.index.PointTree)$bcRef.value())" +
+        s".radiusSearcher(java.lang.Double.longBitsToDouble(${r2Bits}L));",
+      forceInline = true)
+    defineCodeGen(ctx, ev, (id, x, y) => s"$sv.probe($id, $x, $y)")
+  }
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): Expression =
+    copy(first = f, second = s, third = t)
 }
 
 /** All cell ids with Chebyshev distance <= k of the input cell (the "disk") —
@@ -415,6 +447,9 @@ object SpatialExprs {
 
   def knnProbe(id: Column, x: Column, y: Column, bc: Broadcast[PointTree], k: Int): Column =
     GraftBridge.column(KnnProbe(GraftBridge.expr(id.cast("long")), dbl(x), dbl(y), bc, k))
+
+  def radiusProbe(id: Column, x: Column, y: Column, bc: Broadcast[PointTree], r2: Double): Column =
+    GraftBridge.column(RadiusProbe(GraftBridge.expr(id.cast("long")), dbl(x), dbl(y), bc, r2))
 
   def cellX(cell: Column): Column =
     GraftBridge.column(CellCoordExpr(GraftBridge.expr(cell.cast("long")), isX = true))

@@ -18,7 +18,8 @@ import org.apache.spark.unsafe.Platform
  *
  * An id held by several points is kept in a small side index
  * (`dupKeys` -> `dupPoints`), so a probe for that id searches from each of
- * its points into one ranking. See [[KnnSearcher]] for the search law.
+ * its points into one ranking. See [[KnnSearcher]] and [[RadiusSearcher]]
+ * for the search laws.
  */
 final class PointTree private (
     private[index] val ids: Array[Long],
@@ -42,6 +43,9 @@ final class PointTree private (
 
   /** Search state for one task; not thread-safe. */
   def searcher(k: Int): KnnSearcher = new KnnSearcher(this, k)
+
+  /** Radius (kdbush `within`) search state for one task; not thread-safe. */
+  def radiusSearcher(r2: Double): RadiusSearcher = new RadiusSearcher(this, r2)
 }
 
 object PointTree {
@@ -114,6 +118,29 @@ object PointTree {
     val id = ids(i); ids(i) = ids(j); ids(j) = id
     val x = coords(2 * i); coords(2 * i) = coords(2 * j); coords(2 * j) = x
     val y = coords(2 * i + 1); coords(2 * i + 1) = coords(2 * j + 1); coords(2 * j + 1) = y
+  }
+
+  /** The first `len` (id, dist2) pairs as an UnsafeArrayData of two-field
+   * UnsafeRows, the `array<struct<neighbor_id: long, dist2: double>>` both
+   * probes return. */
+  private[index] def pack(ids: Array[Long], d2: Array[Double], len: Int): ArrayData = {
+    val header = UnsafeArrayData.calculateHeaderPortionInBytes(len)
+    val rowBytes = 24 // null bitset word + neighbor_id + dist2
+    val bytes = header + 8 * len + rowBytes * len
+    val buf = new Array[Byte](bytes)
+    val base = Platform.BYTE_ARRAY_OFFSET.toLong
+    Platform.putLong(buf, base, len.toLong)
+    var i = 0
+    while (i < len) {
+      val off = header + 8 * len + rowBytes * i
+      Platform.putLong(buf, base + header + 8L * i, (off.toLong << 32) | rowBytes)
+      Platform.putLong(buf, base + off + 8, ids(i))
+      Platform.putDouble(buf, base + off + 16, d2(i))
+      i += 1
+    }
+    val out = new UnsafeArrayData()
+    out.pointTo(buf, base, bytes)
+    out
   }
 }
 
@@ -242,8 +269,7 @@ final class KnnSearcher(tree: PointTree, k: Int) {
     hd(c) = d; hi(c) = b
   }
 
-  /** Heap-sorts the found neighbours ascending and packs them as an
-   * UnsafeArrayData of two-field UnsafeRows. */
+  /** Heap-sorts the found neighbours ascending and packs them. */
   private def result(): ArrayData = {
     var n = len
     while (n > 1) {
@@ -252,22 +278,82 @@ final class KnnSearcher(tree: PointTree, k: Int) {
       n -= 1
       siftDown(d, b, n)
     }
-    val header = UnsafeArrayData.calculateHeaderPortionInBytes(len)
-    val rowBytes = 24 // null bitset word + neighbor_id + dist2
-    val bytes = header + 8 * len + rowBytes * len
-    val buf = new Array[Byte](bytes)
-    val base = Platform.BYTE_ARRAY_OFFSET.toLong
-    Platform.putLong(buf, base, len.toLong)
-    var i = 0
-    while (i < len) {
-      val off = header + 8 * len + rowBytes * i
-      Platform.putLong(buf, base + header + 8L * i, (off.toLong << 32) | rowBytes)
-      Platform.putLong(buf, base + off + 8, hi(i))
-      Platform.putDouble(buf, base + off + 16, hd(i))
-      i += 1
+    PointTree.pack(hi, hd, len)
+  }
+}
+
+/**
+ * Radius search over a [[PointTree]] (kdbush's `within`), equal to the
+ * filter `dist2 <= r2` over the cross join:
+ *  - dist2 = (qx-bx)*(qx-bx) + (qy-by)*(qy-by), in that order, the value the
+ *    shuffle path computes, bit for bit (the square of a difference is the
+ *    same whichever point is subtracted);
+ *  - `dist2 <= r2` compares as Spark orders doubles: NaN is greatest, so a
+ *    NaN dist2 matches only a NaN `r2`, which every dist2 matches;
+ *  - a subtree is skipped only when the query lies strictly beyond its
+ *    split s and fl((q - s)^2) > r2. Floating-point subtraction, squaring
+ *    and addition are monotone, so every point of that subtree then has a
+ *    dist2 strictly greater than r2 (or NaN, where r2 is not), and a pair
+ *    at exactly the radius is never lost.
+ * [[probe]] keeps the points whose id is greater than the query's, so each
+ * pair of distinct ids comes out once, from its smaller id, and two points
+ * that share an id never pair. The found-pair buffers grow as needed and
+ * are reused across rows.
+ */
+final class RadiusSearcher(tree: PointTree, r2: Double) {
+  private val ids = tree.ids
+  private val coords = tree.coords
+  private var hi = new Array[Long](16)
+  private var hd = new Array[Double](16)
+  private var len = 0
+  private var qid = 0L
+  private var qx = 0.0
+  private var qy = 0.0
+
+  /** (neighbor_id, dist2) of every point within `r2` of (x, y) whose id is
+   * greater than `id`, as an `array<struct<neighbor_id, dist2>>`. */
+  def probe(id: Long, x: Double, y: Double): ArrayData = {
+    len = 0
+    qid = id
+    qx = x
+    qy = y
+    node(0, tree.treeSize - 1, 0)
+    scan(tree.treeSize, tree.size - 1)
+    PointTree.pack(hi, hd, len)
+  }
+
+  private def node(l: Int, r: Int, axis: Int): Unit =
+    if (r - l <= PointTree.NodeSize) scan(l, r)
+    else {
+      val m = (l + r) >>> 1
+      offer(m)
+      val s = coords(2 * m + axis)
+      val q = if (axis == 0) qx else qy
+      // [l, m-1] lies at or below s on this axis, [m+1, r] at or above it
+      if (!(q > s && (q - s) * (q - s) > r2)) node(l, m - 1, 1 - axis)
+      if (!(q < s && (s - q) * (s - q) > r2)) node(m + 1, r, 1 - axis)
     }
-    val out = new UnsafeArrayData()
-    out.pointTo(buf, base, bytes)
-    out
+
+  private def scan(l: Int, r: Int): Unit = {
+    var p = l
+    while (p <= r) { offer(p); p += 1 }
+  }
+
+  private def offer(p: Int): Unit = {
+    val b = ids(p)
+    if (b > qid) {
+      val bx = coords(2 * p)
+      val by = coords(2 * p + 1)
+      val d = (qx - bx) * (qx - bx) + (qy - by) * (qy - by)
+      if (SQLOrderingUtil.compareDoubles(d, r2) <= 0) {
+        if (len == hi.length) {
+          hi = java.util.Arrays.copyOf(hi, 2 * len)
+          hd = java.util.Arrays.copyOf(hd, 2 * len)
+        }
+        hi(len) = b
+        hd(len) = d
+        len += 1
+      }
+    }
   }
 }

@@ -78,11 +78,15 @@ object Dedup {
    * (`lsh_bucket_cap_N` / `dropped_rows`) so callers get a signal, not a
    * silent truncation. The bucket-count join keys on the same column as the
    * downstream self-join, so the added exchange is reused, and only
-   * (bucket, count) pairs move.
+   * (bucket, count) pairs move. On this path the count is a lower bound:
+   * the observation sees only the rows the downstream join reads (a
+   * sort-merge join stops reading one side once the other is exhausted),
+   * and it is not reported at all when adaptive execution replaces an
+   * empty answer by an empty relation.
    *
-   * The driver paths ([[driverCandidates]]) apply the same cap, counted the
-   * same way, and report their dropped rows under the same observation, one
-   * per `capBuckets` call the shuffle path makes.
+   * The driver paths ([[driverCandidates]]) apply the same cap and report
+   * every row it drops under the same observation, one per `capBuckets`
+   * call the shuffle path makes.
    */
   def capBuckets(banded: DataFrame, bucketCol: String,
                  maxBucket: Int = DefaultMaxBucket): DataFrame = {

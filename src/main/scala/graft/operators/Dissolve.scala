@@ -2,9 +2,12 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.sql.{Encoder, Encoders}
 
 /**
@@ -14,11 +17,27 @@ import org.apache.spark.sql.{Encoder, Encoders}
  * geometry per group = the edges whose (undirected) occurrence count is odd
  * after concatenating all member rings; opposite shared arcs cancel pairwise.
  *
- * The aggregation is a typed `Aggregator[edge-list, multiset, boundary]` —
- * map-side partial aggregation applies (each partition cancels locally before
- * the shuffle), so only uncancelled boundary edges cross the wire: for dense
- * groups that's a tiny fraction of the input, which is what makes this hold at
- * 100 TB. Ring reassembly from boundary edges is a per-group kernel.
+ * One kernel, two plans, chosen by the size rule of every driver path
+ * ([[collectIfFits]]: the (group, ring) rows fit
+ * `spark.sql.autoBroadcastJoinThreshold`; -1 disables it):
+ *  - driver: one job collects the rows; the driver cancels each group's
+ *    edges with [[EdgeCancel]]'s `reduce`/`finish`, reassembles the rings
+ *    ([[RingAssembly.assemble]]) and returns a local relation with the
+ *    shuffle plan's schema. Groups are keyed as `groupBy` keys them: null is
+ *    one group, and -0.0 / NaN keys are normalized first;
+ *  - shuffle, otherwise: [[EdgeCancel]] as a typed `Aggregator[edge-list,
+ *    multiset, boundary]`. Map-side partial aggregation applies (each
+ *    partition cancels locally before the shuffle), so only uncancelled
+ *    boundary edges cross the wire: for dense groups that's a tiny fraction
+ *    of the input, which is what makes this hold at 100 TB. Ring
+ *    reassembly from boundary edges is a per-group kernel.
+ *
+ * Spark's size estimate counts a ring array as one 8-byte value, so it
+ * rules the collect out only for inputs far over the threshold. Any other
+ * input over it pays the collect job, stopped once the rows pass the
+ * threshold, and then the shuffle plan computes the input again.
+ *
+ * A null ring counts in `n_rings_in` and adds no edge, on both paths.
  */
 object Dissolve {
 
@@ -35,9 +54,10 @@ object Dissolve {
     // plans print the aggregator; the default names its identity hash
     override def toString: String = "EdgeCancel"
 
+    /** Adds the ring's edges; a null ring adds none. */
     def reduce(buf: mutable.HashMap[EdgeKey, Int], ring: Array[Double]): mutable.HashMap[EdgeKey, Int] = {
       var i = 0
-      while (i + 3 < ring.length) {
+      while (ring != null && i + 3 < ring.length) {
         addEdge(buf, ring(i), ring(i + 1), ring(i + 2), ring(i + 3))
         i += 2
       }
@@ -79,16 +99,40 @@ object Dissolve {
   /**
    * Dissolve rings grouped by a key column.
    * Input DF: (groupCol, ring: Array[Double] — closed flat coords).
-   * Output: (group, n_rings_in, n_boundary_edges, rings: reassembled ring count).
+   * Output: (group, n_rings_in, n_boundary_edges, n_rings_out: reassembled
+   * ring count). Solved on the driver when the rows fit one broadcast (see
+   * the header).
    */
   def dissolve(spark: SparkSession, rings: DataFrame, groupCol: String, ringCol: String): DataFrame = {
     val agg = udaf(new EdgeCancel())
-    rings
+    val shuffled = rings
       .groupBy(col(groupCol).as("group"))
       .agg(count(lit(1)).as("n_rings_in"), agg(col(ringCol)).as("_boundary"))
       .withColumn("n_boundary_edges", (size(col("_boundary")) / 4).cast("long"))
       .withColumn("n_rings_out", RingAssembly.ringCountUdf(col("_boundary")))
       .drop("_boundary")
+    val keyed = rings.select(col(groupCol).as("group"), col(ringCol).cast(ArrayType(DoubleType)))
+    collectIfFits(keyed).fold(shuffled)(rows => GraftBridge.localRelation(spark, shuffled.schema,
+      driverDissolve(rows, keyed.schema("group").dataType)))
+  }
+
+  /** The driver path over collected (group, ring) rows: one output row per
+   * group, in order of first appearance. */
+  private def driverDissolve(rows: Array[UnsafeRow], groupType: DataType): Seq[InternalRow] = {
+    val key = GraftBridge.groupingKey(groupType)
+    val edges = new EdgeCancel()
+    final class Group(var rings: Long, val buf: mutable.HashMap[EdgeKey, Int])
+    val groups = mutable.LinkedHashMap.empty[UnsafeRow, Group]
+    for (r <- rows) {
+      val g = groups.getOrElseUpdate(key(r).copy(), new Group(0L, edges.zero))
+      g.rings += 1
+      if (!r.isNullAt(1)) edges.reduce(g.buf, r.getArray(1).toDoubleArray)
+    }
+    groups.iterator.map { case (k, g) =>
+      val boundary = edges.finish(g.buf)
+      InternalRow(k.get(0, groupType), g.rings, (boundary.length / 4).toLong,
+        RingAssembly.ringCount(boundary))
+    }.toSeq
   }
 }
 
@@ -158,8 +202,8 @@ object RingAssembly {
     rings.toArray
   }
 
-  val ringCountUdf = udf { (flat: Seq[Double]) =>
-    val edges = flat.grouped(4).map(_.toArray).toArray
-    assemble(edges).length
-  }
+  /** Rings reassembled from boundary edges flattened to [x1,y1,x2,y2]* quads. */
+  def ringCount(flat: Array[Double]): Int = assemble(flat.grouped(4).toArray).length
+
+  val ringCountUdf = udf((flat: Seq[Double]) => ringCount(flat.toArray))
 }

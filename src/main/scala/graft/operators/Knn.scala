@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,24 +12,37 @@ import graft.index.PointTree
 /**
  * k-nearest-neighbour and radius (max-distance) joins. The reference answers
  * point queries from an in-memory KD-tree (kdbush, mapshaper's
- * `src/points/mapshaper-point-index.mjs:11-47`); kNN takes that form
+ * `src/points/mapshaper-point-index.mjs:11-47`); both joins take that form
  * whenever the points fit one broadcast, and a shuffle form otherwise.
  *
- * Path selection (kNN), from the point count n alone: when
- * n * 24 bytes <= `spark.sql.autoBroadcastJoinThreshold` (Spark's own
- * broadcast setting; -1 disables it, the 10 MB default admits ~437 k points;
- * the same rule, `fitsOneBroadcast`, picks the LSH joins' driver paths)
- *  - broadcast: the Spark driver collects (id, x, y), builds a
- *    [[PointTree]] and broadcasts it; one map pass probes every point with
- *    the codegen `knn_probe` expression and `posexplode`s its ranked array —
- *    no cross join, window, exchange or checkpoint loop, and no density
- *    assumption;
- *  - shuffle, otherwise: cell-ring expansion rounds (neighbour rings per
+ * Path selection, from the point count n: the broadcast path when
+ * n * 24 bytes (the tree's long id and two doubles a point) <=
+ * `spark.sql.autoBroadcastJoinThreshold` (Spark's own broadcast setting; -1
+ * disables it, the 10 MB default admits ~437 k points). The points are
+ * collected as (id, x, y) rows of 32 bytes ([[collectWithin]], the bounded
+ * collect of every driver path, under a bound of n * 32 bytes for the same
+ * n), so one job both counts and collects them when Spark's size estimate
+ * is within that bound. When the estimate is above it (an RDD-backed frame
+ * has none, a join's output is estimated as the product of its sides), kNN
+ * counts the points in its stats job, which its shuffle path needs anyway,
+ * and collects them after when they fit; the radius join has no stats job
+ * and takes its shuffle path. Points over the bound whose estimate is
+ * within it (a parquet estimate is its file size, ~0.6 of the collected
+ * bytes) pay the collect job, stopped once the rows pass the bound, before
+ * the shuffle path reads them again.
+ *  - broadcast: the Spark driver builds a [[PointTree]] from the collected
+ *    rows and broadcasts it; one map pass probes every point with a codegen
+ *    expression and explodes its array — `knn_probe` (ranked neighbours)
+ *    or `radius_probe` (pairs within the radius) — with no cross join,
+ *    window, exchange or checkpoint loop, and no density assumption;
+ *  - shuffle, otherwise: for kNN, a job for the point count and bbox, then
+ *    cell-ring expansion rounds (neighbour rings per
  *    `src/grids/mapshaper-square-grid.mjs:127-136`), then a brute-force
  *    cross join + window for the tail once pending x n <= `bruteForceBudget`
- *    (0 keeps the ring rounds to the end).
+ *    (0 keeps the ring rounds to the end); for the radius join, an
+ *    equi-join on forward-neighbour cells.
  *
- * Exactness law, the same on every path: a point's neighbours are the k
+ * Exactness law of kNN, the same on every path: a point's neighbours are the k
  * other rows (a_id != b_id) first in (dist2, neighbour id) ascending, with
  * dist2 = (ax-bx)*(ax-bx) + (ay-by)*(ay-by) computed in that order, so the
  * value is bit-identical across paths; a point with fewer than k other
@@ -49,28 +64,64 @@ import graft.index.PointTree
  *    than the law's;
  *  - brute-force tail: the cross form is the definition itself.
  *
+ * The radius join's law, the same on both paths: the pairs with
+ * dist2 <= radius^2 under Spark's double order, with the same dist2
+ * arithmetic; the tree search prunes only subtrees whose every point is
+ * strictly farther (see [[graft.index.RadiusSearcher]]), so a pair at
+ * exactly the radius is kept.
+ *
  * Nulls: rows with a null id, x or y (after the casts to long / double) are
  * dropped once, before the path is chosen, so no path sees them: they get
  * no neighbours and are no one's neighbour.
  */
 object Knn {
 
+  /** (id, x, y) of `points` as long / double / double, without the rows
+   * whose id, x or y is null. */
+  private def located(points: DataFrame, idCol: String, xCol: String, yCol: String): DataFrame =
+    points.select(col(idCol).cast("long").as("id"),
+      col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
+      .filter(col("id").isNotNull && col("x").isNotNull && col("y").isNotNull)
+
+  /** Bytes of one collected (id, x, y) row: an `UnsafeRow`'s null-bit word
+   * and three 8-byte fields. */
+  private val RowBytes = 32L
+
+  /** Collected bytes of the most points whose tree
+   * ([[PointTree.BytesPerPoint]] a point) fits
+   * `spark.sql.autoBroadcastJoinThreshold`; -1 when the threshold is -1. */
+  private def pointBound(spark: SparkSession): Long = {
+    val threshold = GraftBridge.autoBroadcastThreshold(spark)
+    if (threshold < 0) -1L
+    else math.min(threshold / PointTree.BytesPerPoint, Long.MaxValue / RowBytes) * RowBytes
+  }
+
+  /** A [[PointTree]] of collected (id, x, y) rows, broadcast. */
+  private def broadcastTree(spark: SparkSession, rows: Array[UnsafeRow]): Broadcast[PointTree] =
+    spark.sparkContext.broadcast(PointTree.build(rows.map(_.getLong(0)), rows.map(_.getDouble(1)),
+      rows.map(_.getDouble(2))))
+
   /**
    * For each row of `points` (id, x, y), the k nearest OTHER rows.
    * Output: (id, rank, neighbor_id, dist2). Rows with a null id, x or y are
    * dropped first. `bruteForceBudget` tunes the shuffle path only (taken
-   * when n * 24 bytes exceeds `spark.sql.autoBroadcastJoinThreshold`).
+   * when the points do not fit one broadcast; see the header).
    */
   def knnJoin(spark: SparkSession, points: DataFrame, idCol: String, xCol: String, yCol: String,
               k: Int, bruteForceBudget: Long = 50000000L): DataFrame = {
-    val base = points.select(col(idCol).cast("long").as("id"),
-      col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-      .filter(col("id").isNotNull && col("x").isNotNull && col("y").isNotNull)
-    val stats = base.agg(count(lit(1)), min(col("x")), max(col("x")),
-      min(col("y")), max(col("y"))).head()
-    if (fitsOneBroadcast(spark, stats.getLong(0) * PointTree.BytesPerPoint))
-      broadcastKnn(spark, base, k)
-    else shuffleKnn(base, stats, k, bruteForceBudget)
+    val base = located(points, idCol, xCol, yCol)
+    val bound = pointBound(spark)
+    collectWithin(base, bound) match {
+      case Some(rows) => broadcastKnn(spark, base, rows, k)
+      case None =>
+        // the shuffle path's stats; their count decides when Spark's estimate
+        // was above the bound (after a stopped collect, the count is too)
+        val stats = base.agg(count(lit(1)), min(col("x")), max(col("x")),
+          min(col("y")), max(col("y"))).head()
+        val counted = if (bound >= 0 && stats.getLong(0) <= bound / RowBytes)
+          GraftBridge.collectUnsafeWithin(base, bound) else None
+        counted.fold(shuffleKnn(base, stats, k, bruteForceBudget))(broadcastKnn(spark, base, _, k))
+    }
   }
 
   /** Ring-expansion rounds of the shuffle path before its stragglers take
@@ -200,14 +251,13 @@ object Knn {
   }
 
   /** The broadcast path: one map pass over `base` probing a broadcast
-   * [[PointTree]]. An id held by several points is probed once (from each of
-   * its points), as the window ranks those rows' candidates together. */
-  private def broadcastKnn(spark: SparkSession, base: DataFrame, k: Int): DataFrame = {
-    val rows = base.collect()
-    val tree = PointTree.build(rows.map(_.getLong(0)), rows.map(_.getDouble(1)),
-      rows.map(_.getDouble(2)))
-    val bc = spark.sparkContext.broadcast(tree)
-    val probes = if (tree.hasDuplicateIds) base.dropDuplicates("id") else base
+   * [[PointTree]] of its collected `rows`. An id held by several points is
+   * probed once (from each of its points), as the window ranks those rows'
+   * candidates together. */
+  private def broadcastKnn(spark: SparkSession, base: DataFrame, rows: Array[UnsafeRow],
+                           k: Int): DataFrame = {
+    val bc = broadcastTree(spark, rows)
+    val probes = if (bc.value.hasDuplicateIds) base.dropDuplicates("id") else base
     probes
       .select(col("id"), posexplode(
         graft.functions.SpatialExprs.knnProbe(col("id"), col("x"), col("y"), bc, k)))
@@ -219,20 +269,32 @@ object Knn {
    * Radius join: all pairs of points within `radius` (squared distance
    * `dist2 <= radius^2`) as (a_id, b_id, dist2) with a_id < b_id. Rows with a
    * null id (after the cast to long) are dropped first; a point with a null
-   * x or y has no cell and pairs with nothing. Two points that share
-   * an id never pair, whichever cells they fall in: the pair is oriented by
-   * least/greatest id and kept only when a_id < b_id. Cell size is chosen
-   * >= radius so the 3x3 disk is a complete candidate set.
+   * x or y pairs with nothing. Two points that share an id never pair. A
+   * pair of ids held by several points comes out once per pair of points.
+   * Broadcast path: each point probes the tree for the points with a
+   * greater id (see [[graft.index.RadiusSearcher]]). Shuffle path: cell size
+   * is chosen >= |radius| so the 3x3 disk is a complete candidate set, and the
+   * pair is oriented by least/greatest id and kept only when a_id < b_id.
    */
   def distanceJoin(spark: SparkSession, points: DataFrame, idCol: String, xCol: String, yCol: String,
                    radius: Double): DataFrame = {
-    // smallest res whose cellSize >= radius
+    val base = located(points, idCol, xCol, yCol)
+    collectWithin(base, pointBound(spark)) match {
+      case Some(rows) =>
+        base.select(col("id").as("a_id"), explode(graft.functions.SpatialExprs.radiusProbe(
+            col("id"), col("x"), col("y"), broadcastTree(spark, rows), radius * radius)))
+          .select(col("a_id"), col("col.neighbor_id").as("b_id"), col("col.dist2").as("dist2"))
+      case None => shuffleDistanceJoin(base, radius)
+    }
+  }
+
+  /** The shuffle path of [[distanceJoin]]: an equi-join on cells. */
+  private def shuffleDistanceJoin(base: DataFrame, radius: Double): DataFrame = {
+    // smallest res whose cellSize >= |radius| (a negative radius keeps the
+    // pairs within its square, as the broadcast path does)
     var res = 0
-    while (CellIndex.cellSize(res + 1) >= radius && res < 30) res += 1
-    val pts = points.select(col(idCol).cast("long").as("id"),
-      col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-      .filter(col("id").isNotNull)
-      .withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), res))
+    while (CellIndex.cellSize(res + 1) >= math.abs(radius) && res < 30) res += 1
+    val pts = base.withColumn("cell", graft.functions.SpatialExprs.cellIdCol(col("x"), col("y"), res))
     // forward-neighbor expansion (cell + E/NE/N/NW) instead of the full 3x3
     // disk (r6, guide §2.3 — shuffle/join fewer rows): every unordered pair
     // of adjacent cells appears in exactly ONE side's forward set, so each

@@ -35,9 +35,13 @@ object SimplifyOp {
 
   private def thresholdsColumn(rings: DataFrame, ringCol: String)(
       kernel: (Array[Double], Array[Double]) => Array[Double]): DataFrame = {
+    // a null ring has null thresholds
     val thrUdf = udf { (flat: Seq[Double]) =>
-      val (xx, yy) = Geom.unzipRing(flat.toArray)
-      kernel(xx, yy)
+      if (flat == null) null
+      else {
+        val (xx, yy) = Geom.unzipRing(flat.toArray)
+        kernel(xx, yy)
+      }
     }
     rings.withColumn("thresholds", thrUdf(col(ringCol)))
   }
@@ -94,9 +98,10 @@ object SimplifyOp {
     val withThr = Materialize(thresholded, eager = false)
     val interval = globalInterval(spark, withThr, pct, exactPct)
     // `w` stays a Double argument clamped here: a null weight gives a null
-    // ring, a NaN weight keeps no vertex
+    // ring, a NaN weight keeps no vertex; a null ring stays null
     val filterUdf = udf { (flat: Seq[Double], thr: Seq[Double], w: Double) =>
-      Simplify.filter(flat.toArray, thr.toArray, interval * math.max(0.0, math.min(1.0, w)),
+      if (flat == null) null
+      else Simplify.filter(flat.toArray, thr.toArray, interval * math.max(0.0, math.min(1.0, w)),
         keepShapes)
     }
     val out = withThr

@@ -4,8 +4,14 @@ import scala.collection.mutable.ArrayBuffer
 import scala.concurrent.{Await, ExecutionContext, Future, Promise}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  InterpretedUnsafeProjection, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /**
  * Bridge into Spark's package-private Column <-> catalyst Expression
@@ -67,6 +73,22 @@ object GraftBridge {
       }
     }
   }
+
+  /** A local relation of `rows` (internal values) under `schema`: a driver
+   * path's answer, with no conversion to external `Row`s. */
+  def localRelation(s: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+
+  /** Field 0 of a row, of type `dt`, as a one-field `UnsafeRow` that equals
+   * another exactly when `groupBy` puts the two values in one group (the
+   * optimizer's -0.0 / NaN normalization applied). The projection reuses
+   * its output row. It is interpreted: a generated class would take a slot
+   * of Spark's codegen cache (100 by default, shared by every query of the
+   * JVM) for a key the driver computes once per collected row. */
+  def groupingKey(dt: DataType): UnsafeProjection =
+    InterpretedUnsafeProjection.createProjection(
+      Seq(NormalizeFloatingNumbers.normalize(BoundReference(0, dt, nullable = true))))
 
   /** Public alias for the sql-private AbstractDataType, so graft expressions
    * can declare `inputTypes` (ImplicitCastInputTypes) outside this package. */

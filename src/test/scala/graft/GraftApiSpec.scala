@@ -52,6 +52,20 @@ class GraftApiSpec extends SparkSuite {
     assert(svg.contains("<path"))
   }
 
+  test("point joins through the facade: knn and radiusJoin, on both paths") {
+    val pts = Seq((1L, 0.0, 0.0), (2L, 1.0, 0.0), (3L, 0.0, 2.0), (4L, 5.0, 5.0)).toDF("id", "x", "y")
+    // under the default threshold (KD-tree) and with driver paths off (shuffle)
+    for (threshold <- Seq("10485760", "-1")) withBroadcastThreshold(threshold) {
+      val knn = Graft.knn(spark, pts, "id", "x", "y", 1)
+        .as[(Long, Int, Long, Double)].collect().sortBy(_._1).toSeq
+      assert(knn == Seq((1L, 1, 2L, 1.0), (2L, 1, 1L, 1.0), (3L, 1, 1L, 4.0), (4L, 1, 3L, 34.0)),
+        s"threshold $threshold: $knn")
+      val pairs = Graft.radiusJoin(spark, pts, "id", "x", "y", 2.0)
+        .as[(Long, Long, Double)].collect().sorted.toSeq
+      assert(pairs == Seq((1L, 2L, 1.0), (1L, 3L, 4.0)), s"threshold $threshold: $pairs")
+    }
+  }
+
   test("round-3 surface through the facade: proj strings, spherical simplify, grids, svg round-trip") {
     // -proj robinson via the string front-end + densified reprojection
     val robin = Graft.projection("robinson")

@@ -153,6 +153,30 @@ class MiscOpsSpec extends SparkSuite {
     }
   }
 
+  test("simplify passes a null ring through: null thresholds, null simplified") {
+    import graft.geom.Simplify
+    val rings = Seq((1L, Some(rect(0, 0, 10, 10).toSeq), 1.0), (2L, None, 1.0))
+      .toDF("id", "ring", "w")
+    val thr = SimplifyOp.withThresholds(rings, "ring", Simplify.WeightedVisvalingam)
+      .select("id", "thresholds").collect().sortBy(_.getLong(0))
+    assert(!thr(0).isNullAt(1) && thr(1).isNullAt(1), thr.toSeq)
+    Seq(
+      "simplify" -> SimplifyOp.simplify(spark, rings, "ring", pct = 0.5),
+      "simplifyVariable" -> SimplifyOp.simplifyVariable(spark, rings, "ring", "w", pct = 0.5),
+      "simplifySpherical" -> SimplifyOp.simplifySpherical(spark, rings, "ring", pct = 0.5)
+    ).foreach { case (op, df) =>
+      val out = df.collect().sortBy(_.getAs[Long]("id"))
+      assert(out.map(_.getAs[Long]("id")).toSeq == Seq(1L, 2L), op)
+      assert(out(0).getSeq[Double](out(0).fieldIndex("simplified")).nonEmpty, op)
+      val nullRing = out(1)
+      assert(Seq("ring", "simplified", "n_before", "n_after").forall(c =>
+        nullRing.isNullAt(nullRing.fieldIndex(c))), s"$op: $nullRing")
+      assert(nullRing.getAs[Double]("w") == 1.0, s"$op: $nullRing")
+      if (df.columns.contains("interval"))
+        assert(nullRing.getAs[Double]("interval") == out(0).getAs[Double]("interval"), op)
+    }
+  }
+
   test("filterSlivers drops small rings only") {
     val rings = Seq(
       (1L, rect(0, 0, 10, 10)),   // area 100

@@ -384,13 +384,15 @@ class OperatorSpec extends SparkSuite {
 
   /** `op` on the driver path (the default threshold) and on the shuffle path
    * (-1): the same schema and the same multiset of rows, doubles bit for
-   * bit. Returns the rows. */
-  private def samePaths(what: String)(op: => DataFrame): Seq[String] = {
+   * bit. `small` tells the driver path's frame from the shuffle path's (by
+   * default: no checkpoint read). Returns the rows. */
+  private def samePaths(what: String, small: DataFrame => Boolean = !readsCheckpoint(_))(
+      op: => DataFrame): Seq[String] = {
     val driver = op
-    assert(!readsCheckpoint(driver), s"$what: not on the driver path")
+    assert(small(driver), s"$what: not on the driver path")
     val want = withBroadcastThreshold("-1") {
       val shuffle = op
-      assert(readsCheckpoint(shuffle), s"$what: not on the shuffle path")
+      assert(!small(shuffle), s"$what: not on the shuffle path")
       assert(driver.schema == shuffle.schema, s"$what: ${driver.schema} vs ${shuffle.schema}")
       shuffle.collect().map(rowBits).toSeq.sorted
     }
@@ -615,6 +617,127 @@ class OperatorSpec extends SparkSuite {
     val all = org.apache.spark.sql.GraftBridge.collectUnsafeWithin(df, 1L << 30).get
     assert(all.map(_.getUTF8String(0).toString).toSeq.sorted ==
       (0 until 2000).map(i => i.toString.reverse.padTo(100, 'x').reverse).sorted)
+  }
+
+  // ---------------------------------- point joins and dissolve: driver vs shuffle
+
+  /** Whether `df`'s plan holds an expression of class `c`. */
+  private def uses(df: DataFrame, c: Class[_]): Boolean =
+    df.queryExecution.analyzed.exists(_.expressions.exists(_.exists(c.isInstance)))
+
+  /** (id, x, y) rows under an explicit schema: any value may be null. */
+  private def pointFrame(rows: Seq[(Any, Any, Any)]): DataFrame =
+    spark.createDataFrame(rows.map { case (id, x, y) => Row(id, x, y) }.asJava, StructType(Seq(
+      StructField("id", LongType), StructField("x", DoubleType), StructField("y", DoubleType))))
+
+  /** Point inputs of the point-join differential tests. */
+  private lazy val pointCases: Seq[(String, Seq[(Any, Any, Any)])] = {
+    val rng = new SplitMix64(91)
+    val uniform = (0 until 300).map(i => (i.toLong: Any, rng.nextDouble() * 40: Any, rng.nextDouble() * 40: Any))
+    // most points in one small box, a few far outliers
+    val clustered = (0 until 300).map { i =>
+      if (i % 15 == 0) (i.toLong: Any, rng.nextDouble() * 170: Any, rng.nextDouble() * 85: Any)
+      else (i.toLong: Any, 10 + rng.nextDouble() * 3: Any, 10 + rng.nextDouble() * 3: Any)
+    }
+    // lattices whose neighbours sit at exactly the radius (2.0: dist2 4.0
+    // exactly; 0.1: i * 0.1 steps round either side of the radius), more
+    // points than one tree leaf, so splits fall on lattice lines; shuffled
+    // ids, so a pair's smaller id lies on either side of a split
+    val ids = new scala.util.Random(5).shuffle((0 until 400).toList)
+    val lattice2 = ids.zipWithIndex.map { case (id, i) =>
+      (id.toLong: Any, (i % 20) * 2.0: Any, (i / 20) * 2.0: Any) }
+    val lattice01 = (0 until 144).map(i => (i.toLong: Any, (i % 12) * 0.1: Any, (i / 12) * 0.1: Any))
+    // null ids and coordinates, NaN and infinite coordinates, a 3-4-5 pair
+    // at exactly radius 5
+    val odd: Seq[(Any, Any, Any)] = (0 until 80).map(i =>
+      (i.toLong: Any, rng.nextDouble() * 12: Any, rng.nextDouble() * 12: Any)) ++ Seq(
+      (100L, 0.0, 0.0), (101L, 3.0, 4.0), (null, 1.0, 1.0), (102L, null, 2.0), (103L, 2.0, null),
+      (104L, Double.NaN, 1.0), (105L, 1.0, Double.NaN), (106L, Double.NaN, Double.NaN),
+      (107L, Double.PositiveInfinity, 1.0), (108L, Double.NegativeInfinity, 5.0),
+      (109L, -0.0, 0.0))
+    // an id held by several points, near and far from each other
+    val repeated = (0 until 120).map(i => ((i % 40).toLong: Any, rng.nextDouble() * 15: Any,
+      rng.nextDouble() * 15: Any)) ++ Seq((200L, 1.0, 1.0), (200L, 1.0, 1.0), (201L, 1.0, 1.0))
+    Seq("uniform" -> uniform, "clustered" -> clustered, "lattice at radius 2" -> lattice2,
+      "lattice at radius 0.1" -> lattice01, "nulls, NaN, infinities" -> odd,
+      "repeated ids" -> repeated)
+  }
+
+  test("knnJoin: broadcast and shuffle paths give the same rows") {
+    for ((name, rows) <- pointCases; k <- Seq(1, 4)) {
+      val got = samePaths(s"$name, k = $k", uses(_, classOf[graft.functions.KnnProbe]))(
+        Knn.knnJoin(spark, pointFrame(rows), "id", "x", "y", k))
+      assert(got.nonEmpty, name)
+    }
+  }
+
+  test("knnJoin: the point count picks the path, whatever Spark's size estimate") {
+    val rows = pointCases.head._2 // 300 points
+    val schema = pointFrame(Nil).schema
+    // no estimate (Long.MaxValue) and a join's product of both sides
+    val rdd = spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map { case (id, x, y) => Row(id, x, y) }, 3), schema)
+    val joined = pointFrame(rows).join(pointFrame(rows).select(col("id").as("j")),
+      col("id") === col("j")).drop("j")
+    def estimate(df: DataFrame) = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val probe = uses(_: DataFrame, classOf[graft.functions.KnnProbe])
+    for ((name, df) <- Seq("RDD-backed" -> rdd, "join-derived" -> joined)) {
+      assert(estimate(df) > 10L * 1024 * 1024, s"$name: estimate ${estimate(df)}")
+      samePaths(name, probe)(Knn.knnJoin(spark, df, "id", "x", "y", 3))
+      // n * 24 bytes against the threshold: 300 points fit 7 200, not 7 199
+      withBroadcastThreshold("7200")(assert(probe(Knn.knnJoin(spark, df, "id", "x", "y", 3)), name))
+      withBroadcastThreshold("7199")(assert(!probe(Knn.knnJoin(spark, df, "id", "x", "y", 3)), name))
+    }
+    // the same bound when the estimate fits
+    withBroadcastThreshold("7200")(assert(probe(Knn.knnJoin(spark, pointFrame(rows), "id", "x", "y", 3))))
+    withBroadcastThreshold("7199")(assert(!probe(Knn.knnJoin(spark, pointFrame(rows), "id", "x", "y", 3))))
+  }
+
+  test("distanceJoin: broadcast and shuffle paths give the same rows, pairs at the radius kept") {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+    // a negative radius keeps the pairs within its square on both paths
+    val got = (for ((name, rows) <- pointCases; radius <- Seq(0.1, 2.0, 5.0, -2.0)) yield {
+      val got = samePaths(s"$name, radius $radius", uses(_, classOf[graft.functions.RadiusProbe]))(
+        Knn.distanceJoin(spark, pointFrame(rows), "id", "x", "y", radius))
+      // by definition: every pair of points with a_id < b_id and
+      // dist2 <= radius^2 under Spark's double order
+      val pts = rows.collect { case (id: Long, x: Double, y: Double) => (id, x, y) }
+      val want = (for {
+        (a, ax, ay) <- pts; (b, bx, by) <- pts if a < b
+        d = (ax - bx) * (ax - bx) + (ay - by) * (ay - by)
+        if SQLOrderingUtil.compareDoubles(d, radius * radius) <= 0
+      } yield rowBits(Row(a, b, d))).sorted
+      assert(got == want, s"$name, radius $radius: ${got.diff(want).take(3)} vs ${want.diff(got).take(3)}")
+      (name, radius) -> got
+    }).toMap
+    assert(got(("nulls, NaN, infinities", 5.0)).contains(rowBits(Row(100L, 101L, 25.0))),
+      "the 3-4-5 pair at exactly the radius")
+    assert(got(("lattice at radius 2", 2.0)).size == 2 * 19 * 20,
+      "every lattice neighbour pair at exactly the radius")
+  }
+
+  test("dissolve: driver and shuffle paths give the same rows; a null ring adds no edge") {
+    def sq(x: Double, y: Double): Seq[Double] = Seq(x, y, x + 1, y, x + 1, y + 1, x, y + 1, x, y)
+    def frame(groupType: DataType, rows: Seq[(Any, Seq[Double])]): DataFrame =
+      spark.createDataFrame(rows.map { case (g, r) => Row(g, r) }.asJava, StructType(Seq(
+        StructField("g", groupType), StructField("ring", ArrayType(DoubleType)))))
+    val block = Seq((0, 0), (1, 0), (0, 1), (1, 1)).map { case (x, y) => ("block": Any, sq(x, y)) }
+    val donut = (for (x <- 0 to 2; y <- 0 to 2 if !(x == 1 && y == 1))
+      yield ("donut": Any, sq(x + 10, y)))
+    val several = block ++ donut ++ Seq(("block", null), ("lone", sq(5, 5)), (null, sq(7, 7)),
+      (null, sq(8, 7)), ("empty", null), ("block", sq(0, 2)))
+    val rows = samePaths("several groups", !_.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]))(
+      Dissolve.dissolve(spark, frame(StringType, several), "g", "ring"))
+    assert(rows == Seq("(block, 6, 10, 1)", "(donut, 8, 16, 2)", "(empty, 1, 0, 0)",
+      "(lone, 1, 4, 1)", "(null, 2, 6, 1)"), rows)
+    // floating-point keys group as groupBy groups them: -0.0 with 0.0, NaN
+    // with NaN
+    val floats = Seq((0.0, sq(0, 0)), (-0.0, sq(1, 0)), (Double.NaN, sq(0, 0)),
+      (Double.NaN, sq(0, 1)), (1.5, null))
+    assert(samePaths("double keys", !_.queryExecution.analyzed.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Aggregate]))(
+      Dissolve.dissolve(spark, frame(DoubleType, floats), "g", "ring")).size == 3)
   }
 
   // ------------------------------------------------------------- multimodal

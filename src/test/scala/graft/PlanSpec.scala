@@ -85,6 +85,74 @@ class PlanSpec extends SparkSuite {
     assert(inCodegen, s"knn_probe must run inside WholeStageCodegen:\n$plan")
   }
 
+  test("q_dist_join under the threshold: radius probe in codegen, no join, exchange or UDF") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Aqe extends AdaptiveSparkPlanHelper
+    // sf0.01: sf0.001 has no pair within the radius
+    val sf = new java.io.File(new java.io.File(Sf).getParentFile, "sf0.01").getPath
+    def joins(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      assert(df.collect().nonEmpty)
+      Aqe.collect(df.queryExecution.executedPlan) { case j: BaseJoinExec => j.nodeName }
+    }
+    assert(withBroadcastThreshold("-1")(joins(SparkEntry.queries("q_dist_join")(spark, sf))).nonEmpty,
+      "the shuffle path joins cells")
+    val df = SparkEntry.queries("q_dist_join")(spark, sf)
+    assert(joins(df).isEmpty, df.queryExecution.executedPlan.toString)
+    val plan = df.queryExecution.executedPlan // final adaptive plan after the action
+    // the one exchange left is the query's own orderBy
+    val exchanges = Aqe.collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges.forall(_.isInstanceOf[RangePartitioning]), plan.toString)
+    assert(!Aqe.collect(plan) { case p => p }.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[ScalaUDF]))), plan.toString)
+    def isProbe(p: SparkPlan): Boolean =
+      p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.RadiusProbe]))
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case _: InputAdapter => Nil
+      case _ => p.children.flatMap(stage)
+    })
+    val inCodegen = Aqe.collect(plan) { case w: WholeStageCodegenExec => w }
+      .exists(w => stage(w.child).exists(isProbe))
+    assert(inCodegen, s"radius_probe must run inside WholeStageCodegen:\n$plan")
+  }
+
+  test("q_knn's DataFrame build runs one job: the bounded collect, no stats job") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    // the session's first read of the table infers its schema in a job of
+    // its own; the fixtures keep the frame, so a second build reads no footer
+    SparkEntry.queries("q_knn")(spark, Sf)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries("q_knn")(spark, Sf)
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"${jobs.get} jobs to build q_knn")
+  }
+
+  test("q_dissolve under the threshold: edges cancelled on the driver, no ObjectHashAggregate") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Aqe extends AdaptiveSparkPlanHelper
+    def nodes(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      assert(df.collect().nonEmpty)
+      Aqe.collect(df.queryExecution.executedPlan) { case p => p.nodeName }
+    }
+    assert(withBroadcastThreshold("-1")(nodes(SparkEntry.queries("q_dissolve")(spark, Sf)))
+      .contains("ObjectHashAggregate"), "the shuffle path aggregates edges")
+    val names = nodes(SparkEntry.queries("q_dissolve")(spark, Sf))
+    assert(!names.contains("ObjectHashAggregate"), names.mkString(", "))
+  }
+
   test("tile assignment plan never references the binary payload") {
     val imgs = spark.read.parquet(imagesParquet)
     val tiles = Tiling.tileAssign(spark, imgs, tileGrid = 2, res = 9, Some(Synthetic.oracleLayer))
@@ -353,7 +421,7 @@ class PlanSpec extends SparkSuite {
   test("plan text is the same for equal plans over distinct broadcasts and arrays") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import graft.functions.{CentroidProbesExpr, KnnProbe, NearestCentroidExpr, PipAllKeys,
-      PipBoxFirstKey, PipFirstKey}
+      PipBoxFirstKey, PipFirstKey, RadiusProbe}
     val (x, y, id) = (Literal(1.0), Literal(2.0), Literal(3L))
     val sc = spark.sparkContext
     val tree = graft.index.PointTree.build(Array(1L, 2L), Array(0.0, 1.0), Array(0.0, 1.0))
@@ -363,6 +431,7 @@ class PlanSpec extends SparkSuite {
       () => PipBoxFirstKey(x, y, x, y, sc.broadcast(Synthetic.oracleLayer)),
       () => PipAllKeys(x, y, sc.broadcast(Synthetic.oracleLayer)),
       () => KnnProbe(id, x, y, sc.broadcast(tree), 3),
+      () => RadiusProbe(id, x, y, sc.broadcast(tree), 4.0),
       () => NearestCentroidExpr(x, cents()),
       () => CentroidProbesExpr(x, cents(), 1),
       () => new graft.operators.Dissolve.EdgeCancel())
